@@ -31,15 +31,14 @@ import graft.warehouse.Snapshots
   *   UPDATE <target> SET c1 = e1 [, c2 = e2 ...] [WHERE <predicate>]
   * }}}
   *
-  * UPDATE and MERGE take quoted paths AND owned catalog identifiers
-  * (`snap.t` — the catalog declares `spark.sql.catalog.snap.root`): the
-  * DSv2 catalog has no row-level-operation seat, so delegating those
-  * identifiers to Spark would fail where the quoted-path form works.
-  * DELETE keeps delegating identifier targets to Spark's own DSv2
-  * DELETE (the catalog's SupportsDelete serves it through the same
-  * copy-on-write commit). All DML refuses loudly when no snapshot table
-  * exists at the target — a typo'd path must never no-op as success or
-  * have MERGE quietly create a table there.
+  * UPDATE, MERGE and DELETE are parsed here only for QUOTED PATHS (a
+  * path has no catalog seat for Spark to resolve). Catalog identifiers
+  * (`snap.t`) delegate to Spark's own DML: the catalog implements
+  * SupportsRowLevelOperations (sources/SnapshotRowLevel.scala) and
+  * SupportsDelete, so stock `UPDATE`/`MERGE INTO`/`DELETE` plan as
+  * copy-on-write commits there. All DML refuses loudly when no snapshot
+  * table exists at the target — a typo'd path must never no-op as
+  * success or have MERGE quietly create a table there.
   *
   * `<target>` is either a quoted filesystem path (`'/warehouse/t'`) or a
   * catalog-qualified identifier (`snap.events`) resolved through the same
@@ -184,18 +183,15 @@ object MaintenanceSql {
   // versioned). Quoted paths only, like the other DELETE forms.
   private val DeleteAllRe =
     ("""(?is)^\s*DELETE\s+FROM\s+('[^']+')\s*;?\s*$""").r
-  // MERGE, key-based upsert form (the protocol's merge): the target is a
-  // quoted path OR an owned catalog identifier (`snap.t` whose catalog
-  // declares a `.root` conf — the ours() gate below); unowned
-  // identifiers keep delegating to whichever catalog owns them. The
-  // source is a view/table name or a parenthesized subquery; the only
+  // MERGE, key-based upsert form (the protocol's merge). The regex
+  // accepts any target, but only QUOTED PATHS are served here: catalog
+  // identifiers delegate to Spark, whose row-level DML the catalog
+  // serves (SupportsRowLevelOperations — see parse below). The source
+  // is a view/table name or a parenthesized subquery; the only
   // supported clause pair is the canonical upsert (UPDATE SET * /
   // INSERT *), which may be omitted entirely.
-  // UPDATE takes the same targets (quoted path or owned identifier —
-  // Spark's own UPDATE on our catalog would refuse for lack of
-  // SupportsRowLevelOperations, so the parser face closes the
-  // asymmetry); SET list split paren-aware at run time so expressions
-  // may call functions
+  // UPDATE is served for quoted paths likewise; its SET list splits
+  // paren-aware at run time so expressions may call functions
   // WHERE is optional (SQL UPDATE without one touches every row): the
   // split happens at the FIRST ` WHERE ` after SET — a WHERE inside a
   // SET-side string literal mis-splits into fragments that fail

@@ -89,8 +89,7 @@ private[sources] class SnapshotRowLevelOperation(spark: SparkSession,
   private[sources] val colmap = Snapshots.colmapAt(spark, table, head)
   private val partition = Snapshots.partitionsAt(spark, table, head)
   private[sources] val partitionRaw: Option[String] =
-    if (partition.isEmpty) None
-    else Some(partition.map { case (c, k) => s"$c:$k" }.mkString(";"))
+    graft.warehouse.Manifest.partitionHeader(partition)
 
   override def command(): RowLevelOperation.Command = cmd
 

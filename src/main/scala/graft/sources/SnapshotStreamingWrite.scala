@@ -69,11 +69,8 @@ class SnapshotStreamingWrite(spark: SparkSession, table: String,
   }
   // the raw header at build time: the commit refuses prefixed entries
   // when the declared transform changed in between (stale dir values)
-  private val partitionRaw: Option[String] = {
-    val declared = Snapshots.partitionsAt(spark, table, buildHead)
-    if (declared.isEmpty) None
-    else Some(declared.map { case (c, k) => s"$c:$k" }.mkString(";"))
-  }
+  private val partitionRaw: Option[String] = graft.warehouse.Manifest
+    .partitionHeader(Snapshots.partitionsAt(spark, table, buildHead))
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {

@@ -22,9 +22,13 @@ import org.apache.hadoop.fs.permission.FsPermission
   *   - `setPermission` via `java.nio.file.Files.setPosixFilePermissions`
   *     (falls back to the shell path only if the store is not POSIX);
   *   - `getFileStatus`/`listStatus` build plain `FileStatus`es straight
-  *     from `java.io.File` metadata (length, mtime, isDirectory) with
-  *     default permissions — never the lazy `ls`-forking
-  *     `DeprecatedRawLocalFileStatus`.
+  *     from one `stat` per entry (length, mtime, isDirectory) — never the
+  *     lazy `ls`-forking `DeprecatedRawLocalFileStatus`. Permissions,
+  *     owner and group are SYNTHETIC on this scheme: every status
+  *     carries Hadoop's defaults, whatever the file's real mode;
+  *   - `listStatus` skips an entry deleted between the directory read
+  *     and its stat (a concurrent vacuum or staging cleanup) instead of
+  *     reporting a phantom zero-length file.
   *
   * Semantics otherwise identical to `LocalFileSystem` (checksums, atomic
   * rename, delete). Installed via
@@ -59,29 +63,33 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
         super.setPermission(p, permission) // non-POSIX store: shell path
     }
 
-  private def statusOf(f: java.io.File, p: Path): FileStatus =
-    new FileStatus(f.length, f.isDirectory, 1, getDefaultBlockSize(p),
-      f.lastModified, 0L, null /* default perms — never fork `ls` */,
-      null, null, makeQualified(p))
+  /** One `stat` of `f` as a FileStatus; None when `f` does not exist. */
+  private def statusOf(f: java.io.File, p: Path): Option[FileStatus] =
+    try {
+      val a = java.nio.file.Files.readAttributes(f.toPath,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      Some(new FileStatus(a.size, a.isDirectory, 1, getDefaultBlockSize(p),
+        a.lastModifiedTime.toMillis, 0L,
+        null /* default perms — never fork `ls` */, null, null,
+        makeQualified(p)))
+    } catch { case _: java.nio.file.NoSuchFileException => None }
 
-  override def getFileStatus(p: Path): FileStatus = {
-    val f = pathToFile(p)
-    if (!f.exists) throw new FileNotFoundException(
-      s"File $p does not exist")
-    statusOf(f, p)
-  }
+  /** Names of the entries of `dir` — the directory read that
+    * [[listStatus]] stats entry by entry.
+    */
+  protected def entries(dir: java.io.File): Array[String] =
+    Option(dir.list()).getOrElse(
+      throw new java.io.IOException(s"could not list directory $dir"))
+
+  override def getFileStatus(p: Path): FileStatus =
+    statusOf(pathToFile(p), p).getOrElse(
+      throw new FileNotFoundException(s"File $p does not exist"))
 
   override def listStatus(p: Path): Array[FileStatus] = {
-    val dir = pathToFile(p)
-    if (!dir.exists) throw new FileNotFoundException(
-      s"File $p does not exist")
-    if (dir.isFile) Array(statusOf(dir, p))
-    else {
-      val names = Option(dir.list()).getOrElse(
-        throw new java.io.IOException(s"could not list directory $p"))
-      names.sorted.map { n =>
-        statusOf(new java.io.File(dir, n), new Path(p, n))
-      }
+    val dir = getFileStatus(p)
+    if (!dir.isDirectory) Array(dir)
+    else entries(pathToFile(p)).sorted.flatMap { n =>
+      statusOf(new java.io.File(pathToFile(p), n), new Path(p, n))
     }
   }
 }

@@ -39,6 +39,10 @@ import org.apache.spark.sql.types
   *     manifest self-contained (watermark lookup = one head read, immune
   *     to manifest vacuuming).
   *
+  * The manifest text format (every header, the delta encoding and
+  * checkpoint resolution) lives in [[Manifest]]; every commit publishes
+  * through the one commit loop, [[transact]].
+  *
   * On top of the core commit protocol the object provides MERGE,
   * copy-on-write DELETE, OPTIMIZE, vacuum retention, per-file-stats
   * pruned reads ([[readPruned]]), and incremental consumption
@@ -80,14 +84,7 @@ object Snapshots {
     buf.toSeq
   }
 
-  private def manifestDir(table: String) = new Path(table, "_manifests")
   private def dataDir(table: String) = new Path(table, "data")
-
-  private def versionOf(name: String): Long =
-    name.stripPrefix("v").stripSuffix(".manifest").toLong
-
-  private def manifestPath(table: String, v: Long) =
-    new Path(manifestDir(table), f"v$v%08d.manifest")
 
   /** True when `version`'s manifest is still retained (v0 always is —
     * the empty table needs no manifest). A change-feed window whose
@@ -96,95 +93,59 @@ object Snapshots {
     */
   def hasVersion(spark: SparkSession, table: String, version: Long): Boolean =
     version == 0 || {
-      val p = manifestPath(table, version)
+      val p = Manifest.path(table, version)
       fs(spark, p).exists(p)
     }
 
-  /** Highest committed version, 0 if the table is empty. */
-  def currentVersion(spark: SparkSession, table: String): Long = {
-    val dir = manifestDir(table)
+  /** Retained manifest versions, ascending (empty for the empty table). */
+  private def retainedVersions(spark: SparkSession,
+      table: String): Seq[Long] = {
+    val dir = Manifest.dir(table)
     val f = fs(spark, dir)
-    if (!f.exists(dir)) 0L
-    else f.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".manifest")).map(versionOf)
-      .maxOption.getOrElse(0L)
+    if (!f.exists(dir)) Nil
+    else f.listStatus(dir).toSeq
+      .flatMap(s => Manifest.versionOf(s.getPath.getName)).sorted
   }
 
-  /** CANONICAL manifest lines of a version — `#`-prefixed header lines
-    * followed by the version's COMPLETE data-file list. Empty for v0.
-    *
-    * The physical manifest may be DELTA-ENCODED (`#base:<v-1>` +
-    * `#add:`/`#remove:` lines instead of the file list — see
-    * [[claimManifest]], which keeps steady-state commit bytes O(delta)
-    * instead of O(table files)): this resolver walks the base chain,
-    * applying each step's adds/removes, and returns the same canonical
-    * full form either way — every downstream view (filesOf/schemaOf/...)
-    * is delta-blind. Chain walks stop at a FULL manifest or a CHECKPOINT
-    * file (written every [[CheckpointInterval]] commits and backfilled
-    * by vacuum), so resolution is O(interval) manifest reads worst-case;
-    * resolved versions are immutable and cached, so repeat reads —
-    * commit retry loops, history(), feeds — cost zero extra IO.
+  /** Highest committed version, 0 if the table is empty. */
+  def currentVersion(spark: SparkSession, table: String): Long =
+    retainedVersions(spark, table).lastOption.getOrElse(0L)
+
+  /** The CANONICAL manifest of a version — headers plus the COMPLETE file
+    * list, whatever the physical encoding ([[Manifest.resolve]] walks
+    * delta chains to the nearest full manifest or checkpoint). Empty for
+    * v0. Claimed manifests are immutable, so each version is parsed once
+    * per JVM: commit retries, history walks and feed reads hit the cache.
     */
-  private def manifestLines(spark: SparkSession, table: String,
-      version: Long): Seq[String] = {
-    if (version == 0) return Nil
+  private def manifestAt(spark: SparkSession, table: String,
+      version: Long): Manifest = {
+    if (version == 0) return Manifest()
     val key = (new Path(table).toString, version)
     resolvedManifests.get(key) match {
-      case Some(l) => return l
+      case Some(m) => return m
       case None =>
     }
-    def readAll(p: Path): List[String] = {
-      val in = fs(spark, p).open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    }
-    val raw = readAll(manifestPath(table, version))
-    val lines = raw.find(_.startsWith(BaseHeader)) match {
-      case None => raw // full manifest — already canonical
-      case Some(bh) =>
-        val cp = checkpointPath(table, version)
-        if (fs(spark, cp).exists(cp)) readAll(cp)
-        else {
-          val base = bh.stripPrefix(BaseHeader).toLong
-          val baseLines = manifestLines(spark, table, base)
-          val baseFiles = filesOf(baseLines)
-          val adds = raw.filter(_.startsWith(AddHeader))
-            .map(_.stripPrefix(AddHeader))
-          val removes = raw.filter(_.startsWith(RemoveHeader))
-            .map(_.stripPrefix(RemoveHeader)).toSet
-          val kept = baseFiles.filterNot(removes) ++ adds
-          // the size ledger is delta-encoded like the file list (#fsz
-          // for adds only — O(table) size lines per delta would defeat
-          // the O(batch) commit-bytes contract): canonical form carries
-          // base sizes for surviving files plus the delta's own
-          val sizes = fileSizesOf(baseLines) ++ fileSizesOf(raw)
-          val fsz = kept.flatMap(n =>
-            sizes.get(n).map(l => s"$FszHeader$l:$n"))
-          // every delta carries ALL other non-file headers in full
-          // (they are small and bounded) — only the file list and its
-          // size ledger are delta-encoded
-          raw.filter(l => l.startsWith("#") && !l.startsWith(BaseHeader) &&
-            !l.startsWith(AddHeader) && !l.startsWith(RemoveHeader) &&
-            !l.startsWith(FszHeader)) ++ fsz ++ kept
-        }
-    }
+    val m = Manifest.resolve(fs(spark, Manifest.dir(table)), table, version,
+      manifestAt(spark, table, _))
     // seed the probe-free read path: resolved sizes are as authoritative
     // as claim-time ones (the ledger travels with the manifest, so a
     // table written by ANOTHER process reads probe-free too)
     val dd = dataDir(table)
-    fileSizesOf(lines).foreach { case (n, l) =>
+    m.sizes.foreach { case (n, l) =>
       ManifestFileIndex.recordSize(new Path(dd, n), l)
     }
     if (resolvedManifests.size > 4096) resolvedManifests.clear()
-    resolvedManifests.put(key, lines)
-    lines
+    resolvedManifests.put(key, m)
+    m
   }
 
-  // claimed manifests are immutable, so resolved lines cache safely
-  // across commit retries, history walks, and feed reads (bounded;
-  // cleared wholesale past the cap — correctness never depends on it)
+  private def headOf(spark: SparkSession, table: String): Manifest =
+    manifestAt(spark, table, currentVersion(spark, table))
+
+  // bounded; cleared wholesale past the cap — correctness never depends
+  // on it
   private val resolvedManifests =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Seq[String]]
+    scala.collection.concurrent.TrieMap.empty[(String, Long), Manifest]
 
   /** Drop EVERY cached manifest resolution of `table` — the table-level
     * destructor's companion (SnapshotCatalog.dropTable): "immutable once
@@ -201,115 +162,42 @@ object Snapshots {
       .foreach(resolvedManifests.remove)
   }
 
-  // pure views over one set of manifest lines — commit loops read the
-  // head manifest ONCE per attempt and derive all three (each fs.open is
-  // a round trip on an object store; 3× read amplification per commit
-  // attempt is pure waste)
-  private def filesOf(lines: Seq[String]): Seq[String] =
-    lines.filterNot(_.startsWith("#"))
-  private def schemaOf(lines: Seq[String]): Option[types.StructType] =
-    lines.find(_.startsWith(SchemaHeader))
-      .map(h => types.DataType.fromJson(h.stripPrefix(SchemaHeader))
-        .asInstanceOf[types.StructType])
-  private def marksOf(lines: Seq[String]): Map[String, Long] =
-    lines.filter(_.startsWith(StreamHeader)).map { h =>
-      val rest = h.stripPrefix(StreamHeader)
-      val cut = rest.indexOf(':')
-      rest.substring(cut + 1) -> rest.substring(0, cut).toLong
-    }.toMap
-  private def checksOf(lines: Seq[String]): Map[String, String] =
-    lines.filter(_.startsWith(CheckHeader)).map { h =>
-      val rest = h.stripPrefix(CheckHeader)
-      val cut = rest.indexOf(':')
-      rest.substring(0, cut) -> rest.substring(cut + 1)
-    }.toMap
-  private def tombstonesOf(lines: Seq[String]): Seq[String] =
-    lines.filter(_.startsWith(TombstoneHeader))
-      .map(_.stripPrefix(TombstoneHeader))
-  private def tombstoneColOf(lines: Seq[String]): Option[String] =
-    lines.find(_.startsWith(TombstoneColHeader))
-      .map(_.stripPrefix(TombstoneColHeader))
-  private def tsOf(lines: Seq[String]): Option[Long] =
-    lines.find(_.startsWith(TsHeader))
-      .map(_.stripPrefix(TsHeader).toLong)
-  private def droppedOf(lines: Seq[String]): Seq[String] =
-    lines.filter(_.startsWith(DroppedHeader))
-      .map(_.stripPrefix(DroppedHeader))
-
-  // ------------------------------------------------------------------
-  // Column mapping (RENAME COLUMN — logical name serves, physical stays)
-  // ------------------------------------------------------------------
-
   /** logical → PHYSICAL column names of a version (`#colmap:` headers,
     * written by [[commitRenameColumn]]): the physical name is what landed
     * files hold forever (renames are metadata-only — Delta's
     * column-mapping idea restricted to names), the logical name is what
     * every API serves. Empty for never-renamed tables, so the whole
-    * mapping machinery is a no-op on the common path.
-    */
-  private def colmapOf(lines: Seq[String]): Map[String, String] =
-    lines.filter(_.startsWith(ColmapHeader)).map { h =>
-      val rest = h.stripPrefix(ColmapHeader)
-      val cut = rest.indexOf(':')
-      rest.substring(0, cut) -> rest.substring(cut + 1)
-    }.toMap
-
-  /** Colmap of a version — the public face ([[colmapOf]]) for the DSv2
-    * catalog, which must read files under PHYSICAL names and serve the
-    * LOGICAL schema.
+    * mapping machinery is a no-op on the common path. The DSv2 catalog
+    * reads files under the PHYSICAL names and serves the LOGICAL schema.
     */
   def colmapAt(spark: SparkSession, table: String,
       version: Long): Map[String, String] =
-    colmapOf(manifestLines(spark, table, version))
+    manifestAt(spark, table, version).colmap
 
   // ------------------------------------------------------------------
   // Declared partition transforms (directory-level file skipping)
   // ------------------------------------------------------------------
 
-  /** The version's declared partition transform (`#partition:` header):
-    * (column, kind) with kind ∈ identity | date | month | bucket<N>
-    * (murmur3 pmod N hash clustering — the storage-partitioned-join
-    * layout). Data files of
-    * partitioned commits land under `data/__gp=<transform(col)>/...`
-    * and their manifest entries carry the dir prefix — the DIRECTORY is
-    * a pruning hint and a retention unit; the column itself stays IN
-    * every file (unlike Hive layout), so no read path ever needs to
-    * re-derive values from paths: pre-transform flat files, partitioned
-    * files, and foreign refs all read identically. Carried forward by
-    * every commit, like the colmap.
+  /** The version's declared partition transforms (`#partition:` header),
+    * outermost dir level first: (column, kind) with kind ∈ identity |
+    * date | month | bucket<N> (murmur3 pmod N hash clustering — the
+    * storage-partitioned-join layout). Data files of partitioned commits
+    * land under `data/__gp=<k1(c1)>/__gp2=<k2(c2)>/...` and their
+    * manifest entries carry the dir prefix — the DIRECTORY is a pruning
+    * hint and a retention unit; the column itself stays IN every file
+    * (unlike Hive layout), so no read path ever needs to re-derive
+    * values from paths: pre-transform flat files, partitioned files, and
+    * foreign refs all read identically. Carried forward by every commit,
+    * like the colmap.
     */
-  /** ALL declared partition transforms of a manifest, outermost dir
-    * level first. The header is `#partition:c1:k1[;c2:k2...]` — one pair
-    * per nesting level (`__gp=`, `__gp2=`, ...), ';'-joined so a
-    * single-transform header reads exactly as it always has.
-    */
-  private def partitionsOf(lines: Seq[String]): Seq[(String, String)] =
-    lines.find(_.startsWith(PartitionHeader)).toSeq.flatMap { h =>
-      h.stripPrefix(PartitionHeader).split(";", -1).toSeq.map { pair =>
-        val cut = pair.lastIndexOf(':')
-        (pair.substring(0, cut), pair.substring(cut + 1))
-      }
-    }
+  def partitionsAt(spark: SparkSession, table: String,
+      version: Long): Seq[(String, String)] =
+    manifestAt(spark, table, version).partitions
 
-  /** The PRIMARY (outermost) transform — the single-transform view most
-    * call sites need; composite-aware code uses [[partitionsOf]].
-    */
-  private def partitionOf(lines: Seq[String]): Option[(String, String)] =
-    partitionsOf(lines).headOption
-
-  private def partRawOf(lines: Seq[String]): Option[String] =
-    lines.find(_.startsWith(PartitionHeader))
-      .map(_.stripPrefix(PartitionHeader))
-
-  /** [[partitionOf]] of a version — the primary transform. */
+  /** The primary (outermost) transform of a version. */
   def partitionAt(spark: SparkSession, table: String,
       version: Long): Option[(String, String)] =
     partitionsAt(spark, table, version).headOption
-
-  /** [[partitionsOf]] of a version — the DSv2 catalog's pruning face. */
-  def partitionsAt(spark: SparkSession, table: String,
-      version: Long): Seq[(String, String)] =
-    partitionsOf(manifestLines(spark, table, version))
 
   private val PartitionKinds = Set("identity", "date", "month")
 
@@ -333,14 +221,15 @@ object Snapshots {
     */
   private[graft] val NullPartition = "__HIVE_DEFAULT_PARTITION__"
 
-  /** [[partValueOf]] for the DSv2 catalog's key-grouped reporting face
+  /** [[partValueAt]] of the primary level, for the DSv2 catalog's
+    * key-grouped reporting face
     * (sources/SnapshotCatalog.scala): the UNESCAPED `__gp=` dir value of
     * a manifest entry, None for flat/pre-transform/foreign entries
     * (whose partition value is unknown — a scan holding any such entry
     * must not report a partitioning).
     */
   private[graft] def partitionDirValue(entry: String): Option[String] =
-    partValueOf(entry)
+    partValueAt(entry, 0)
 
   /** Date/month transforms need a column whose ordering IS the
     * truncation's. A string column orders lexicographically, not by
@@ -413,10 +302,6 @@ object Snapshots {
         .unescapePathName(c.substring(prefix.length)))
   }
 
-  /** [[partValueAt]] of the primary level. */
-  private def partValueOf(entry: String): Option[String] =
-    partValueAt(entry, 0)
-
   /** Declare the table's partition transform as a METADATA-ONLY commit
     * (op `setPartition`): from the NEXT commit on, staged files land
     * under `data/__gp=<kind(col)>/` and their manifest entries carry
@@ -433,8 +318,8 @@ object Snapshots {
     * must be identity/date/month-transformable.
     */
   def commitSetPartition(spark: SparkSession, table: String, column: String,
-      kind: String, maxRetries: Int = 10): Long =
-    commitSetPartitions(spark, table, Seq((column, kind)), maxRetries)
+      kind: String): Long =
+    commitSetPartitions(spark, table, Seq((column, kind)))
 
   /** [[commitSetPartition]] for COMPOSITE transforms: up to three
     * nesting levels, outermost first — rows land under
@@ -445,8 +330,34 @@ object Snapshots {
     * change-refusal while prefixed entries are referenced.
     */
   def commitSetPartitions(spark: SparkSession, table: String,
-      transforms: Seq[(String, String)], maxRetries: Int = 10): Long = {
-    require(transforms.nonEmpty && transforms.size <= 3,
+      transforms: Seq[(String, String)]): Long = {
+    require(transforms.nonEmpty, "1..3 partition transforms, got 0")
+    requireTransforms(transforms)
+    transact(spark, table, "setPartition") { m =>
+      require(m.version > 0, s"no snapshot table at $table to partition")
+      val prior = m.schema
+        .getOrElse(read(spark, table, Some(m.version)).schema)
+      transforms.foreach { case (c, k) => requirePartitionable(prior, c, k) }
+      def show(ps: Seq[(String, String)]) =
+        ps.map { case (c, k) => s"$k($c)" }.mkString("/")
+      if (m.partitions == transforms) Skip(m.version)
+      else {
+        require(m.partitions.isEmpty || !m.files.exists(_.contains(PartPrefix)),
+          s"$table already has prefixed entries under " +
+            s"${show(m.partitions)} — their dir values would be " +
+            s"misinterpreted under ${show(transforms)}; change is refused " +
+            "while prefixed entries are referenced")
+        claim(m.copy(partitions = transforms))
+      }
+    }
+  }
+
+  /** Shape rules shared by every transform declaration: at most three
+    * distinct columns whose names fit the `:`/`;`-delimited header, and
+    * known kinds.
+    */
+  private def requireTransforms(transforms: Seq[(String, String)]): Unit = {
+    require(transforms.size <= 3,
       s"1..3 partition transforms, got ${transforms.size}")
     require(transforms.map(_._1).distinct.size == transforms.size,
       "partition columns must be distinct")
@@ -458,35 +369,6 @@ object Snapshots {
         s"partition column '$c' must be colon/semicolon/newline-free " +
           "(the transform header is ':'/';' delimited)")
     }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      require(head > 0, s"no snapshot table at $table to partition")
-      val lines = manifestLines(spark, table, head)
-      val prior = schemaOf(lines)
-        .getOrElse(read(spark, table, Some(head)).schema)
-      transforms.foreach { case (c, k) => requirePartitionable(prior, c, k) }
-      partitionsOf(lines) match {
-        case declared if declared == transforms => return head // no-op
-        case declared if declared.nonEmpty =>
-          require(!filesOf(lines).exists(_.contains(PartPrefix)),
-            s"$table already has prefixed entries under " +
-              s"${declared.map { case (c, k) => s"$k($c)" }.mkString("/")}" +
-              " — their dir values would be misinterpreted under " +
-              s"${transforms.map { case (c, k) => s"$k($c)" }.mkString("/")}" +
-              "; change is refused while prefixed entries are referenced")
-        case _ => ()
-      }
-      if (claimManifest(spark, table, head + 1,
-          contentOf(schemaOf(lines), marksOf(lines), filesOf(lines),
-            "setPartition", checksOf(lines), tombstonesOf(lines),
-            tombstoneColOf(lines), droppedOf(lines), colmapOf(lines),
-            Some(transforms.map { case (c, k) => s"$c:$k" }.mkString(";")))))
-        return head + 1
-      attempt += 1
-    }
-    throw new IllegalStateException(
-      s"setPartition on $table failed after $maxRetries attempts")
   }
 
   /** Create v1 of a NEW snapshot table as ONE atomic claim carrying the
@@ -499,27 +381,12 @@ object Snapshots {
   def commitCreate(spark: SparkSession, table: String,
       schema: types.StructType,
       partition: Seq[(String, String)] = Nil): Long = {
-    require(partition.size <= 3, "at most three partition transforms")
-    require(partition.map(_._1).distinct.size == partition.size,
-      "partition columns must be distinct")
-    partition.foreach { case (c, k) =>
-      require(validPartitionKind(k),
-        s"partition kind $k not in " +
-          s"${PartitionKinds.mkString("/")}/bucket<N>")
-      require(!c.contains(":") && !c.contains(";") && !c.contains("\n"),
-        s"partition column '$c' must be colon/semicolon/newline-free")
-      requirePartitionable(schema, c, k)
+    requireTransforms(partition)
+    partition.foreach { case (c, k) => requirePartitionable(schema, c, k) }
+    transact(spark, table, "createTable") { m =>
+      require(m.version == 0, s"table already exists at $table")
+      claim(Manifest(schema = Some(schema), partitions = partition))
     }
-    require(currentVersion(spark, table) == 0,
-      s"table already exists at $table")
-    val claimed = claimManifest(spark, table, 1L,
-      contentOf(Some(schema), Map.empty, Nil, "createTable",
-        partition = if (partition.isEmpty) None
-          else Some(partition.map { case (c, k) => s"$c:$k" }
-            .mkString(";"))))
-    require(claimed,
-      s"create of $table lost the claim race — the table now exists")
-    1L
   }
 
   /** Drop every WHOLE PARTITION older than `cutoff` as ONE metadata
@@ -534,47 +401,33 @@ object Snapshots {
     * nothing is old enough.
     */
   def commitExpirePartitions(spark: SparkSession, table: String,
-      cutoff: Any, maxRetries: Int = 10): (Long, Int) = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      require(head > 0, s"no snapshot table at $table")
-      val lines = manifestLines(spark, table, head)
-      val declared = partitionsOf(lines)
-      require(declared.nonEmpty, s"$table declares no partition " +
+      cutoff: Any): (Long, Int) =
+    transact(spark, table, "expirePartitions") { m =>
+      require(m.version > 0, s"no snapshot table at $table")
+      require(m.partitions.nonEmpty, s"$table declares no partition " +
         "transform — nothing to expire")
       // "older than" needs an AGE order: date/month truncations have
       // one (ISO string order); identity values don't ('10' < '9'
       // lexicographically — expiry would drop the wrong partitions).
       // Composite layouts expire on their FIRST date/month level.
-      val ((pc, kind), level) = declared.zipWithIndex
+      val ((pc, kind), level) = m.partitions.zipWithIndex
         .find(p => p._1._2 == "date" || p._1._2 == "month").getOrElse(
           throw new IllegalArgumentException(
-            s"EXPIRE PARTITIONS on ${declared.map { case (c, k) =>
+            s"EXPIRE PARTITIONS on ${m.partitions.map { case (c, k) =>
               s"$k($c)" }.mkString("/")}: identity values carry no " +
               "age order — only date/month transforms expire"))
       val cut = partProbeValue(kind, cutoff).getOrElse(
         throw new IllegalArgumentException(
           s"cutoff $cutoff does not render under $kind($pc)"))
-      val files = filesOf(lines)
       // the null partition can't prove its age — never expire it
-      val (doomed, kept) = files.partition(e =>
+      val (doomed, kept) = m.files.partition(e =>
         partValueAt(e, level).exists(v => v != NullPartition && v < cut))
-      if (doomed.isEmpty) return (head, 0)
       // a pending tombstone key may live in a doomed partition — the
       // tombstones CARRY (anti-join of a gone row is a no-op, never a
       // resurrection)
-      if (claimManifest(spark, table, head + 1,
-          contentOf(schemaOf(lines), marksOf(lines), kept,
-            "expirePartitions", checksOf(lines), tombstonesOf(lines),
-            tombstoneColOf(lines), droppedOf(lines), colmapOf(lines),
-            partRawOf(lines))))
-        return (head + 1, doomed.size)
-      attempt += 1
+      if (doomed.isEmpty) Skip((m.version, 0))
+      else Claim(m.copy(files = kept), Nil, v => (v, doomed.size))
     }
-    throw new IllegalStateException(
-      s"expirePartitions on $table failed after $maxRetries attempts")
-  }
 
   /** Data-relative retention for PARTITIONED snapshot tables — the
     * maintenance policy's expiry leg rebased onto the declared
@@ -588,10 +441,8 @@ object Snapshots {
   def expireRetainedDays(spark: SparkSession, table: String,
       retainDays: Int): Option[(Long, Int)] = {
     require(retainDays > 0, "retainDays must be positive")
-    val head = currentVersion(spark, table)
-    if (head == 0) return None
-    val lines = manifestLines(spark, table, head)
-    partitionsOf(lines).zipWithIndex
+    val m = headOf(spark, table)
+    m.partitions.zipWithIndex
       .find(p => p._1._2 == "date" || p._1._2 == "month")
       .flatMap { case ((_, kind), level) =>
         // only values in the transform's ISO shape carry an age: the
@@ -599,7 +450,7 @@ object Snapshots {
         // and would wedge the parse below on one null row
         val shape =
           if (kind == "month") """\d{4}-\d{2}""" else """\d{4}-\d{2}-\d{2}"""
-        val newest = filesOf(lines).flatMap(partValueAt(_, level))
+        val newest = m.files.flatMap(partValueAt(_, level))
           .filter(_.matches(shape)).maxOption
         newest.flatMap { nv =>
           val newestDay = java.time.LocalDate.parse(
@@ -622,12 +473,11 @@ object Snapshots {
     import spark.implicits._
     val v = version.getOrElse(currentVersion(spark, table))
     require(v > 0, s"no snapshot table at $table")
-    val lines = manifestLines(spark, table, v)
+    val m = manifestAt(spark, table, v)
     val dd = dataDir(table)
     val f = fs(spark, dd)
-    val ledger = fileSizesOf(lines) // probe-free for size-manifested tables
-    filesOf(lines).map { n =>
-      val bytes = ledger.getOrElse(n,
+    m.files.map { n =>
+      val bytes = m.sizes.getOrElse(n, // probe-free for size-manifested tables
         try f.getFileStatus(new Path(dd, n)).getLen
         catch { case _: Exception => 0L })
       // composite layouts census one row per LEAF partition — all
@@ -793,58 +643,18 @@ object Snapshots {
     else df.withColumnsRenamed(
       colmap.filter { case (l, p) => l != p && df.columns.contains(l) })
 
-  /** Data files of a version (empty for v0). Header lines (`#...`) are
-    * protocol metadata, never file names.
-    */
+  /** Data files of a version (empty for v0). */
   def filesAt(spark: SparkSession, table: String, version: Long): Seq[String] =
-    filesOf(manifestLines(spark, table, version))
+    manifestAt(spark, table, version).files
 
   /** Spec hook: the version's `#fsz:` size ledger (entry → bytes). */
   private[graft] def fileSizesAt(spark: SparkSession, table: String,
       version: Long): Map[String, Long] =
-    fileSizesOf(manifestLines(spark, table, version))
+    manifestAt(spark, table, version).sizes
 
   // ------------------------------------------------------------------
   // Schema evolution (manifest-recorded)
   // ------------------------------------------------------------------
-
-  private val SchemaHeader = "#schema:"
-  private val StreamHeader = "#stream:"
-  private val OpHeader = "#op:"
-  private val TsHeader = "#ts:"
-  private val CheckHeader = "#check:"
-  private val TombstoneHeader = "#tombstone:"
-  private val TombstoneColHeader = "#tombstonecol:"
-  private val DroppedHeader = "#dropped:"
-  private val ColmapHeader = "#colmap:"
-  private val PartitionHeader = "#partition:"
-  // delta-encoding headers (see claimManifest / manifestLines)
-  private val BaseHeader = "#base:"
-  private val AddHeader = "#add:"
-  private val RemoveHeader = "#remove:"
-  // per-file byte length, `#fsz:<len>:<entry>` — recorded at claim time
-  // (Iceberg-manifest-entry style) so readers build FileStatuses with
-  // ZERO per-file getFileStatus probes (ManifestFiles.statusesOf). Like
-  // the file list itself, delta manifests carry #fsz for ADDS only;
-  // resolution re-derives the rest from the base chain.
-  private val FszHeader = "#fsz:"
-
-  /** entry → byte length recorded in the lines' `#fsz:` ledger. */
-  private def fileSizesOf(lines: Seq[String]): Map[String, Long] =
-    lines.iterator.filter(_.startsWith(FszHeader)).map { h =>
-      val rest = h.stripPrefix(FszHeader)
-      val cut = rest.indexOf(':')
-      rest.substring(cut + 1) -> rest.substring(0, cut).toLong
-    }.toMap
-
-  /** A full checkpoint rides alongside every Nth claimed manifest (and
-    * vacuum backfills one at the new retention floor), bounding delta-
-    * chain resolution to O(N) manifest reads.
-    */
-  private val CheckpointInterval = 16L
-
-  private def checkpointPath(table: String, v: Long) =
-    new Path(manifestDir(table), f"v$v%08d.checkpoint")
 
   /** Declared schema of a version, recorded at commit time in the
     * manifest (`#schema:` header). This is what makes schema evolution
@@ -856,7 +666,7 @@ object Snapshots {
     */
   def schemaAt(spark: SparkSession, table: String,
       version: Long): Option[types.StructType] =
-    schemaOf(manifestLines(spark, table, version))
+    manifestAt(spark, table, version).schema
 
   /** True when reading parquet files written as `from` under a declared
     * schema of `to` is a SAFE UPCAST the reader performs natively
@@ -929,9 +739,8 @@ object Snapshots {
     */
   def columnDefaults(spark: SparkSession, table: String,
       version: Option[Long] = None): Map[String, String] = {
-    val lines = manifestLines(spark, table,
-      version.getOrElse(currentVersion(spark, table)))
-    schemaOf(lines).map(_.fields.toSeq
+    manifestAt(spark, table, version.getOrElse(currentVersion(spark, table)))
+      .schema.map(_.fields.toSeq
       .filter(_.metadata.contains(CurrentDefaultKey))
       .map(f => f.name -> f.metadata.getString(CurrentDefaultKey)).toMap)
       .getOrElse(Map.empty)
@@ -987,48 +796,6 @@ object Snapshots {
       else col(fld.name).cast(fld.dataType).as(fld.name)
     }: _*)
   }
-
-  /** Manifest body: schema header (when the table tracks one), the
-    * stream-watermark headers (one per stream, sorted for determinism),
-    * then the data-file names. Stream marks are CARRIED FORWARD by every
-    * commit (see [[lastCommittedBatch]]): each manifest is self-contained,
-    * so the watermark lookup is one head-manifest read and survives any
-    * vacuum of older manifests.
-    */
-  private def contentOf(schema: Option[types.StructType],
-      marks: Map[String, Long], files: Seq[String],
-      op: String, checks: Map[String, String] = Map.empty,
-      tombstones: Seq[String] = Nil,
-      tombstoneCol: Option[String] = None,
-      dropped: Seq[String] = Nil,
-      colmap: Map[String, String] = Map.empty,
-      partition: Option[String] = None): String =
-    // the commit instant rides IN the manifest (`#ts:`): file mtimes are
-    // not durable across a table copy, an object-store migration, or
-    // writer clock skew — the header is what history() and TIMESTAMP AS
-    // OF resolve against (mtime stays the fallback for legacy manifests)
-    (Seq(OpHeader + op, TsHeader + System.currentTimeMillis()) ++
-      schema.map(s => SchemaHeader + s.json).toSeq ++
-      marks.toSeq.sortBy(_._1)
-        .map { case (sid, bid) => s"$StreamHeader$bid:$sid" } ++
-      checks.toSeq.sortBy(_._1)
-        .map { case (n, ex) => s"$CheckHeader$n:$ex" } ++
-      (if (tombstones.isEmpty) Nil
-       else tombstoneCol.map(TombstoneColHeader + _).toSeq ++
-         tombstones.sorted.map(TombstoneHeader + _)) ++
-      // DROP COLUMN ledger: names whose data still physically exists in
-      // carried files — re-adding one would RESURRECT pre-drop values
-      // through parquet's name-based resolution, so the names stay
-      // refused until a full rewrite physically purges them (the only
-      // commit that clears this list)
-      dropped.sorted.map(DroppedHeader + _) ++
-      // column-mapping entries (logical:physical) — carried by every
-      // commit whose files may still hold the physical name, like the
-      // dropped ledger; full rewrites/overwrites normalize and clear
-      colmap.toSeq.sortBy(_._1)
-        .map { case (l, p) => s"$ColmapHeader$l:$p" } ++
-      partition.map(PartitionHeader + _).toSeq ++
-      files).mkString("\n")
 
   /** Read `names` under the version's declared schema when one exists —
     * the READ half of the column-mapping boundary: files resolve under
@@ -1096,8 +863,8 @@ object Snapshots {
     */
   def checkConstraints(spark: SparkSession, table: String,
       version: Option[Long] = None): Map[String, String] =
-    checksOf(manifestLines(spark, table,
-      version.getOrElse(currentVersion(spark, table))))
+    manifestAt(spark, table,
+      version.getOrElse(currentVersion(spark, table))).checks
 
   /** Fail the commit when any batch row VIOLATES any declared CHECK
     * (SQL semantics: NULL passes, only FALSE violates). ONE aggregation
@@ -1139,6 +906,20 @@ object Snapshots {
         bad.mkString("; "))
   }
 
+  /** A METADATA-ONLY change of the head's declared schema (and whatever
+    * else `f` rewrites): same files, new manifest. Legacy tables without
+    * a `#schema:` header derive the prior schema from a footer read once
+    * — every commit after this records the header.
+    */
+  private def alterSchema(spark: SparkSession, table: String, op: String)(
+      f: (Manifest, types.StructType) => Manifest): Long =
+    transact(spark, table, op) { m =>
+      require(m.version > 0, s"no snapshot table at $table")
+      val prior = m.schema
+        .getOrElse(read(spark, table, Some(m.version)).schema)
+      claim(f(m, prior))
+    }
+
   /** ADD COLUMNS as a METADATA-ONLY commit (op `addColumn`): the new
     * manifest carries the same files under a declared schema extended
     * with the new (forced-nullable) fields — zero data moves at any
@@ -1149,7 +930,7 @@ object Snapshots {
     * included — CREATE TABLE commits v1).
     */
   def commitAddColumns(spark: SparkSession, table: String,
-      fields0: Seq[types.StructField], maxRetries: Int = 10,
+      fields0: Seq[types.StructField],
       defaults: Map[String, String] = Map.empty): Long = {
     require(fields0.nonEmpty, "ADD COLUMNS needs at least one column")
     defaults.keys.foreach(c => require(fields0.exists(_.name == c),
@@ -1170,38 +951,21 @@ object Snapshots {
               case None => f
             }
           }), "ALTER TABLE ADD COLUMNS").fields.toSeq
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      require(head > 0, s"no snapshot table at $table to add columns to")
-      val lines = manifestLines(spark, table, head)
-      // legacy tables without a #schema header derive the prior from a
-      // footer read once — every commit after this records the header
-      val prior = schemaOf(lines)
-        .getOrElse(read(spark, table, Some(head)).schema)
+    alterSchema(spark, table, "addColumn") { (m, prior) =>
       fields.foreach(f => require(!prior.fieldNames.contains(f.name),
         s"column ${f.name} already exists on $table"))
       // a DROPPED name is not reusable while carried files still hold
       // its pre-drop values (name-based parquet resolution would
       // resurrect them); OPTIMIZE's full rewrite clears the ledger
-      fields.foreach(f => require(!droppedOf(lines).contains(f.name),
+      fields.foreach(f => require(!m.dropped.contains(f.name),
         s"column ${f.name} was DROPPED from $table and its data still " +
           "exists in carried files — OPTIMIZE (full rewrite) before " +
           "reusing the name"))
       // forced nullable: landed rows HAVE no value for the new column,
       // so a non-null declaration would lie to every reader
-      val schema = types.StructType(prior.fields ++
-        fields.map(_.copy(nullable = true)))
-      if (claimManifest(spark, table, head + 1,
-          contentOf(Some(schema), marksOf(lines), filesOf(lines),
-            "addColumn", checksOf(lines), tombstonesOf(lines),
-            tombstoneColOf(lines), droppedOf(lines), colmapOf(lines),
-            partRawOf(lines))))
-        return head + 1
-      attempt += 1
+      m.copy(schema = Some(types.StructType(prior.fields ++
+        fields.map(_.copy(nullable = true)))))
     }
-    throw new IllegalStateException(
-      s"addColumns on $table failed after $maxRetries attempts")
   }
 
   /** WIDEN a column's declared type as a METADATA-ONLY commit (op
@@ -1213,14 +977,8 @@ object Snapshots {
     * next commit on). Any non-widening change refuses.
     */
   def commitWidenColumn(spark: SparkSession, table: String, column: String,
-      to: types.DataType, maxRetries: Int = 10): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      require(head > 0, s"no snapshot table at $table to widen")
-      val lines = manifestLines(spark, table, head)
-      val prior = schemaOf(lines)
-        .getOrElse(read(spark, table, Some(head)).schema)
+      to: types.DataType): Long =
+    alterSchema(spark, table, "widenColumn") { (m, prior) =>
       val field = prior.fields.find(_.name == column).getOrElse(
         throw new IllegalArgumentException(
           s"no column $column on $table"))
@@ -1228,18 +986,27 @@ object Snapshots {
         s"ALTER COLUMN $column ${field.dataType.simpleString} -> " +
           s"${to.simpleString} is not a safe widening (int->long, " +
           "float->double, decimal precision growth)")
-      val schema = types.StructType(prior.fields.map(f =>
-        if (f.name == column) f.copy(dataType = to) else f))
-      if (claimManifest(spark, table, head + 1,
-          contentOf(Some(schema), marksOf(lines), filesOf(lines),
-            "widenColumn", checksOf(lines), tombstonesOf(lines),
-            tombstoneColOf(lines), droppedOf(lines), colmapOf(lines),
-            partRawOf(lines))))
-        return head + 1
-      attempt += 1
+      m.copy(schema = Some(types.StructType(prior.fields.map(f =>
+        if (f.name == column) f.copy(dataType = to) else f))))
     }
-    throw new IllegalStateException(
-      s"widenColumn on $table failed after $maxRetries attempts")
+
+  /** Refuse a column DDL on `column` while pending lazy-delete
+    * tombstones key on it (their sidecar holds the name) or a CHECK
+    * constraint mentions it (expression strings do not rewrite).
+    */
+  private def requireUnreferenced(m: Manifest, table: String,
+      column: String, afterDrop: String): Unit = {
+    require(!(m.tombstones.nonEmpty && m.tombstoneCol.contains(column)),
+      s"column $column keys ${m.tombstones.size} pending " +
+        s"lazy-delete tombstone file(s) on $table — OPTIMIZE to " +
+        "materialize them first")
+    val mention = ("(?i)\\b" +
+      java.util.regex.Pattern.quote(column) + "\\b").r
+    m.checks.foreach { case (n, ex) =>
+      require(mention.findFirstIn(ex).isEmpty,
+        s"constraint $n CHECK ($ex) mentions column $column — " +
+          s"DROP CONSTRAINT first$afterDrop")
+    }
   }
 
   /** DROP a column as a METADATA-ONLY commit (op `dropColumn`): the new
@@ -1260,51 +1027,26 @@ object Snapshots {
     * (the read-side anti-join would lose its key), or a column a CHECK
     * constraint mentions (DROP CONSTRAINT first).
     */
-  def commitDropColumn(spark: SparkSession, table: String, column: String,
-      maxRetries: Int = 10): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      require(head > 0, s"no snapshot table at $table to drop a column from")
-      val lines = manifestLines(spark, table, head)
-      val prior = schemaOf(lines)
-        .getOrElse(read(spark, table, Some(head)).schema)
+  def commitDropColumn(spark: SparkSession, table: String,
+      column: String): Long =
+    alterSchema(spark, table, "dropColumn") { (m, prior) =>
       require(prior.fieldNames.contains(column),
         s"no column $column on $table")
       require(prior.fields.length > 1,
         s"cannot drop the last column of $table")
-      require(!partitionsOf(lines).exists(_._1 == column),
+      require(!m.partitions.exists(_._1 == column),
         s"column $column is $table's declared partition column")
-      require(!(tombstonesOf(lines).nonEmpty &&
-          tombstoneColOf(lines).contains(column)),
-        s"column $column keys ${tombstonesOf(lines).size} pending " +
-          s"lazy-delete tombstone file(s) on $table — OPTIMIZE to " +
-          "materialize them first")
-      val mention = ("(?i)\\b" +
-        java.util.regex.Pattern.quote(column) + "\\b").r
-      checksOf(lines).foreach { case (n, ex) =>
-        require(mention.findFirstIn(ex).isEmpty,
-          s"constraint $n CHECK ($ex) mentions column $column — " +
-            "DROP CONSTRAINT first")
-      }
-      val schema = types.StructType(prior.fields.filterNot(_.name == column))
+      requireUnreferenced(m, table, column, "")
       // the ledger holds the PHYSICAL name — that is what lingers in
       // carried files and what a later add must not collide with; a
       // renamed column's original logical name was ledgered by the
       // rename itself
-      val colmap = colmapOf(lines)
-      if (claimManifest(spark, table, head + 1,
-          contentOf(Some(schema), marksOf(lines), filesOf(lines),
-            "dropColumn", checksOf(lines), tombstonesOf(lines),
-            tombstoneColOf(lines),
-            (droppedOf(lines) :+ physName(colmap, column)).distinct,
-            colmap - column, partRawOf(lines))))
-        return head + 1
-      attempt += 1
+      m.copy(
+        schema = Some(types.StructType(
+          prior.fields.filterNot(_.name == column))),
+        dropped = (m.dropped :+ physName(m.colmap, column)).distinct,
+        colmap = m.colmap - column)
     }
-    throw new IllegalStateException(
-      s"dropColumn on $table failed after $maxRetries attempts")
-  }
 
   /** Declare (or replace) a column's DEFAULT as a METADATA-ONLY
     * commit (op `setDefault`): future writes missing the column
@@ -1316,38 +1058,20 @@ object Snapshots {
     * it is validated here, the only cheap place.
     */
   def commitSetColumnDefault(spark: SparkSession, table: String,
-      column: String, defaultSql: String, maxRetries: Int = 10): Long = {
+      column: String, defaultSql: String): Long = {
     require(!defaultSql.contains("\n"), "DEFAULT must be one line")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      require(head > 0, s"no snapshot table at $table")
-      val lines = manifestLines(spark, table, head)
-      val prior = schemaOf(lines)
-        .getOrElse(read(spark, table, Some(head)).schema)
+    alterSchema(spark, table, "setDefault") { (m, prior) =>
       val field = prior.fields.find(_.name == column).getOrElse(
         throw new IllegalArgumentException(s"no column $column on $table"))
+      def withDefault(f: types.StructField) = f.copy(metadata =
+        new types.MetadataBuilder().withMetadata(f.metadata)
+          .putString(CurrentDefaultKey, defaultSql).build())
       // validate: must analyze as a constant of the column's type
       org.apache.spark.sql.catalyst.util.ResolveDefaultColumns.analyze(
-        field.copy(metadata = new types.MetadataBuilder()
-          .withMetadata(field.metadata)
-          .putString(CurrentDefaultKey, defaultSql).build()),
-        "ALTER TABLE ALTER COLUMN", CurrentDefaultKey)
-      val schema = types.StructType(prior.fields.map(f =>
-        if (f.name == column) f.copy(metadata =
-          new types.MetadataBuilder().withMetadata(f.metadata)
-            .putString(CurrentDefaultKey, defaultSql).build())
-        else f))
-      if (claimManifest(spark, table, head + 1,
-          contentOf(Some(schema), marksOf(lines), filesOf(lines),
-            "setDefault", checksOf(lines), tombstonesOf(lines),
-            tombstoneColOf(lines), droppedOf(lines), colmapOf(lines),
-            partRawOf(lines))))
-        return head + 1
-      attempt += 1
+        withDefault(field), "ALTER TABLE ALTER COLUMN", CurrentDefaultKey)
+      m.copy(schema = Some(types.StructType(prior.fields.map(f =>
+        if (f.name == column) withDefault(f) else f))))
     }
-    throw new IllegalStateException(
-      s"setDefault on $table failed after $maxRetries attempts")
   }
 
   /** Remove a column's CURRENT_DEFAULT (op `dropDefault`, metadata-only):
@@ -1356,35 +1080,19 @@ object Snapshots {
     * landed-rows contract is immutable (Iceberg's initial-default).
     */
   def commitDropColumnDefault(spark: SparkSession, table: String,
-      column: String, maxRetries: Int = 10): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      require(head > 0, s"no snapshot table at $table")
-      val lines = manifestLines(spark, table, head)
-      val prior = schemaOf(lines)
-        .getOrElse(read(spark, table, Some(head)).schema)
+      column: String): Long =
+    alterSchema(spark, table, "dropDefault") { (m, prior) =>
       val field = prior.fields.find(_.name == column).getOrElse(
         throw new IllegalArgumentException(s"no column $column on $table"))
       require(field.metadata.contains(CurrentDefaultKey),
         s"column $column of $table has no DEFAULT to drop")
-      val schema = types.StructType(prior.fields.map(f =>
+      m.copy(schema = Some(types.StructType(prior.fields.map(f =>
         if (f.name == column) {
           val mb = new types.MetadataBuilder().withMetadata(f.metadata)
           mb.remove(CurrentDefaultKey)
           f.copy(metadata = mb.build())
-        } else f))
-      if (claimManifest(spark, table, head + 1,
-          contentOf(Some(schema), marksOf(lines), filesOf(lines),
-            "dropDefault", checksOf(lines), tombstonesOf(lines),
-            tombstoneColOf(lines), droppedOf(lines), colmapOf(lines),
-            partRawOf(lines))))
-        return head + 1
-      attempt += 1
+        } else f))))
     }
-    throw new IllegalStateException(
-      s"dropDefault on $table failed after $maxRetries attempts")
-  }
 
   /** RENAME a column as a METADATA-ONLY commit (op `renameColumn`) —
     * the column-mapping idea (Delta's column mapping restricted to
@@ -1406,66 +1114,40 @@ object Snapshots {
     * first, re-declare under the new name).
     */
   def commitRenameColumn(spark: SparkSession, table: String, from: String,
-      to: String, maxRetries: Int = 10): Long = {
+      to: String): Long = {
     require(from != to, s"RENAME COLUMN $from TO $to: names are equal")
     require(!to.contains(":") && !to.contains("\n") && to.nonEmpty,
       s"column name '$to' must be non-empty and colon/newline-free")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      require(head > 0, s"no snapshot table at $table to rename a column on")
-      val lines = manifestLines(spark, table, head)
-      val prior = schemaOf(lines)
-        .getOrElse(read(spark, table, Some(head)).schema)
+    alterSchema(spark, table, "renameColumn") { (m, prior) =>
       require(prior.fieldNames.contains(from), s"no column $from on $table")
       require(!prior.fieldNames.contains(to),
         s"column $to already exists on $table")
-      val colmap = colmapOf(lines)
-      val physical = physName(colmap, from)
+      val physical = physName(m.colmap, from)
       // renaming BACK to the physical name is always safe (the "dropped"
       // entry is this very column's own live data) and un-ledgers it;
       // renaming onto any OTHER ledgered name would resurrect dead data
       val renameBack = physical == to
-      require(renameBack || !droppedOf(lines).contains(to),
+      require(renameBack || !m.dropped.contains(to),
         s"column $to was DROPPED from $table and its data still exists " +
           "in carried files — renaming onto it would resurrect them; " +
           "OPTIMIZE (full rewrite) first")
-      require(!(tombstonesOf(lines).nonEmpty &&
-          tombstoneColOf(lines).contains(from)),
-        s"column $from keys ${tombstonesOf(lines).size} pending " +
-          s"lazy-delete tombstone file(s) on $table — OPTIMIZE to " +
-          "materialize them first")
-      require(!partitionsOf(lines).exists(_._1 == from),
+      require(!m.partitions.exists(_._1 == from),
         s"column $from is $table's declared partition column — the " +
           "transform header does not rewrite")
-      val mention = ("(?i)\\b" +
-        java.util.regex.Pattern.quote(from) + "\\b").r
-      checksOf(lines).foreach { case (n, ex) =>
-        require(mention.findFirstIn(ex).isEmpty,
-          s"constraint $n CHECK ($ex) mentions column $from — " +
-            "DROP CONSTRAINT first and re-declare under the new name")
-      }
-      val schema = types.StructType(prior.fields.map(f =>
-        if (f.name == from) f.copy(name = to) else f))
+      requireUnreferenced(m, table, from, " and re-declare under the new name")
       // ledger ONLY names whose physical data lingers: the first rename
       // of a column ledgers it (physical == from); renaming an
       // already-mapped column retires a purely-logical name (its
       // physical never existed — nothing to refuse); renaming BACK
       // un-ledgers the physical name (it is live again)
-      val ledger = (if (physical == from) (droppedOf(lines) :+ from).distinct
-        else droppedOf(lines)).filterNot(n => renameBack && n == to)
-      val newColmap =
-        if (renameBack) colmap - from
-        else (colmap - from) + (to -> physical)
-      if (claimManifest(spark, table, head + 1,
-          contentOf(Some(schema), marksOf(lines), filesOf(lines),
-            "renameColumn", checksOf(lines), tombstonesOf(lines),
-            tombstoneColOf(lines), ledger, newColmap, partRawOf(lines))))
-        return head + 1
-      attempt += 1
+      m.copy(
+        schema = Some(types.StructType(prior.fields.map(f =>
+          if (f.name == from) f.copy(name = to) else f))),
+        dropped = (if (physical == from) (m.dropped :+ from).distinct
+          else m.dropped).filterNot(n => renameBack && n == to),
+        colmap = if (renameBack) m.colmap - from
+          else (m.colmap - from) + (to -> physical))
     }
-    throw new IllegalStateException(
-      s"renameColumn on $table failed after $maxRetries attempts")
   }
 
   /** Refuse a batch that re-introduces a DROPPED column name: its
@@ -1474,15 +1156,12 @@ object Snapshots {
     * [[commitDropColumn]]).
     */
   private def refuseDroppedColumns(batch: DataFrame, table: String,
-      lines: Seq[String]): Unit = {
-    val dropped = droppedOf(lines).toSet
-    if (dropped.nonEmpty) {
-      val hit = batch.schema.fieldNames.filter(dropped)
-      require(hit.isEmpty,
-        s"column(s) ${hit.mkString(", ")} were DROPPED from $table and " +
-          "their pre-drop data still exists in carried files — OPTIMIZE " +
-          "(full rewrite) before reusing the name(s)")
-    }
+      m: Manifest): Unit = {
+    val hit = batch.schema.fieldNames.filter(m.dropped.toSet)
+    require(hit.isEmpty,
+      s"column(s) ${hit.mkString(", ")} were DROPPED from $table and " +
+        "their pre-drop data still exists in carried files — OPTIMIZE " +
+        "(full rewrite) before reusing the name(s)")
   }
 
   /** Declare a CHECK constraint as a new commit (op `addConstraint`,
@@ -1493,51 +1172,25 @@ object Snapshots {
     * be colon- and newline-free (it keys a manifest header line).
     */
   def addCheckConstraint(spark: SparkSession, table: String, name: String,
-      sqlExpr: String, validate: Boolean = true,
-      maxRetries: Int = 10): Long = {
+      sqlExpr: String, validate: Boolean = true): Long = {
     require(!name.contains(":") && !name.contains("\n") && name.nonEmpty,
       s"constraint name '$name' must be non-empty and colon/newline-free")
     require(!sqlExpr.contains("\n"), "constraint expression must be one line")
     if (validate && currentVersion(spark, table) > 0)
       enforceChecks(read(spark, table), Map(name -> sqlExpr), table)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      val lines = manifestLines(spark, table, head)
-      // tombstones CARRY: a metadata commit that dropped the headers
-      // would resurrect every lazily-deleted row
-      if (claimManifest(spark, table, head + 1,
-          contentOf(schemaOf(lines), marksOf(lines), filesOf(lines),
-            "addConstraint", checksOf(lines) + (name -> sqlExpr),
-            tombstonesOf(lines), tombstoneColOf(lines), droppedOf(lines),
-            colmapOf(lines), partRawOf(lines))))
-        return head + 1
-      attempt += 1
+    transact(spark, table, "addConstraint") { m =>
+      claim(m.copy(checks = m.checks + (name -> sqlExpr)))
     }
-    throw new IllegalStateException(
-      s"addCheckConstraint $name on $table failed after $maxRetries attempts")
   }
 
   /** Drop a declared constraint (op `dropConstraint`, metadata-only). */
-  def dropCheckConstraint(spark: SparkSession, table: String, name: String,
-      maxRetries: Int = 10): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      val lines = manifestLines(spark, table, head)
-      require(checksOf(lines).contains(name),
+  def dropCheckConstraint(spark: SparkSession, table: String,
+      name: String): Long =
+    transact(spark, table, "dropConstraint") { m =>
+      require(m.checks.contains(name),
         s"no CHECK constraint named $name on $table")
-      if (claimManifest(spark, table, head + 1,
-          contentOf(schemaOf(lines), marksOf(lines), filesOf(lines),
-            "dropConstraint", checksOf(lines) - name,
-            tombstonesOf(lines), tombstoneColOf(lines), droppedOf(lines),
-            colmapOf(lines), partRawOf(lines))))
-        return head + 1
-      attempt += 1
+      claim(m.copy(checks = m.checks - name))
     }
-    throw new IllegalStateException(
-      s"dropCheckConstraint $name on $table failed after $maxRetries attempts")
-  }
 
   // ------------------------------------------------------------------
   // Merge-on-read lazy deletes (key tombstones)
@@ -1548,9 +1201,9 @@ object Snapshots {
     */
   def pendingTombstones(spark: SparkSession, table: String,
       version: Option[Long] = None): (Option[String], Seq[String]) = {
-    val lines = manifestLines(spark, table,
+    val m = manifestAt(spark, table,
       version.getOrElse(currentVersion(spark, table)))
-    (tombstoneColOf(lines), tombstonesOf(lines))
+    (m.tombstoneCol, m.tombstones)
   }
 
   /** Tombstone sidecars live OUTSIDE `data/` (like `_manifests`): data
@@ -1563,14 +1216,12 @@ object Snapshots {
     * batches, never the table) — None when the version has none.
     */
   private def tombstoneKeys(spark: SparkSession, table: String,
-      lines: Seq[String]): Option[(String, DataFrame)] = {
-    val ts = tombstonesOf(lines)
-    tombstoneColOf(lines).filter(_ => ts.nonEmpty).map { kc =>
-      kc -> spark.read
-        .parquet(ts.map(n => new Path(tombstoneDir(table), n).toString): _*)
+      m: Manifest): Option[(String, DataFrame)] =
+    m.tombstoneCol.filter(_ => m.tombstones.nonEmpty).map { kc =>
+      kc -> spark.read.parquet(m.tombstones.map(n =>
+          new Path(tombstoneDir(table), n).toString): _*)
         .select(kc).distinct()
     }
-  }
 
   /** Anti-filter `df` by the version's tombstones (merge-on-read): the
     * tombstone side is bounded and broadcast, NULL-key rows always
@@ -1578,8 +1229,8 @@ object Snapshots {
     * costs nothing.
     */
   private def applyTombstones(spark: SparkSession, table: String,
-      lines: Seq[String], df: DataFrame): DataFrame =
-    tombstoneKeys(spark, table, lines) match {
+      m: Manifest, df: DataFrame): DataFrame =
+    tombstoneKeys(spark, table, m) match {
       case None => df
       case Some((kc, keys)) =>
         df.join(org.apache.spark.sql.functions.broadcast(keys),
@@ -1628,10 +1279,10 @@ object Snapshots {
   }
 
   def commitDeleteLazy(spark: SparkSession, table: String, keys: Seq[Long],
-      keyCol: String, maxRetries: Int = 10): (Long, Int) = {
+      keyCol: String): (Long, Int) = {
     import spark.implicits._
     if (keys.isEmpty) return (currentVersion(spark, table), 0)
-    commitDeleteLazyKeys(spark, table, keys.distinct.toDF(keyCol), maxRetries)
+    commitDeleteLazyKeys(spark, table, keys.distinct.toDF(keyCol))
   }
 
   /** One-column-DataFrame variant of [[commitDeleteLazy]] — any key type
@@ -1644,7 +1295,7 @@ object Snapshots {
     * distinct keys tombstoned).
     */
   def commitDeleteLazyKeys(spark: SparkSession, table: String,
-      keys: DataFrame, maxRetries: Int = 10): (Long, Int) = {
+      keys: DataFrame): (Long, Int) = {
     require(keys.columns.length == 1,
       s"tombstone keys must be a one-column frame, got " +
         keys.columns.mkString("(", ", ", ")"))
@@ -1653,24 +1304,15 @@ object Snapshots {
     val n = distinctKeys.count()
     if (n == 0) return (currentVersion(spark, table), 0)
     val newFiles = stageTombstoneSidecar(spark, table, distinctKeys)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      require(head > 0, s"no table at $table to delete from")
-      val lines = manifestLines(spark, table, head)
-      tombstoneColOf(lines).foreach(existing => require(existing == keyCol,
+    transact(spark, table, "deleteLazy",
+        newFiles.map(new Path(tombstoneDir(table), _))) { m =>
+      require(m.version > 0, s"no table at $table to delete from")
+      m.tombstoneCol.foreach(existing => require(existing == keyCol,
         s"pending tombstones of $table are keyed on $existing, not $keyCol" +
           " — materialize (OPTIMIZE) before switching key columns"))
-      if (claimManifest(spark, table, head + 1,
-          contentOf(schemaOf(lines), marksOf(lines), filesOf(lines),
-            "deleteLazy", checksOf(lines),
-            tombstonesOf(lines) ++ newFiles, Some(keyCol),
-            droppedOf(lines), colmapOf(lines), partRawOf(lines))))
-        return (head + 1, n.toInt)
-      attempt += 1
+      Claim(m.copy(tombstones = m.tombstones ++ newFiles,
+        tombstoneCol = Some(keyCol)), Nil, v => (v, n.toInt))
     }
-    throw new IllegalStateException(
-      s"lazy delete on $table failed after $maxRetries attempts")
   }
 
   /** Refuse a batch that re-uses a pending tombstoned key (see
@@ -1678,8 +1320,8 @@ object Snapshots {
     * One bounded broadcast semi-join; free when no tombstones exist.
     */
   private def refuseTombstonedKeys(spark: SparkSession, table: String,
-      lines: Seq[String], batch: DataFrame): Unit =
-    tombstoneKeys(spark, table, lines).foreach { case (kc, keys) =>
+      m: Manifest, batch: DataFrame): Unit =
+    tombstoneKeys(spark, table, m).foreach { case (kc, keys) =>
       if (batch.columns.contains(kc)) {
         val clash = batch
           .join(org.apache.spark.sql.functions.broadcast(keys), Seq(kc),
@@ -1697,17 +1339,17 @@ object Snapshots {
     * data files are never rewritten, only re-referenced.
     * Returns the committed version.
     */
-  def commitAppend(spark: SparkSession, batch: DataFrame, table: String,
-      maxRetries: Int = 10): Long =
-    commit(spark, batch, table, replace = false, maxRetries)
+  def commitAppend(spark: SparkSession, batch: DataFrame,
+      table: String): Long =
+    commit(spark, batch, table, replace = false)
 
   /** Replace the table's contents with `batch` (snapshot-level CTAS /
     * truncate-reload): the new manifest references only the new files.
     * Prior versions stay readable until vacuumed.
     */
-  def commitOverwrite(spark: SparkSession, batch: DataFrame, table: String,
-      maxRetries: Int = 10): Long =
-    commit(spark, batch, table, replace = true, maxRetries)
+  def commitOverwrite(spark: SparkSession, batch: DataFrame,
+      table: String): Long =
+    commit(spark, batch, table, replace = true)
 
   /** Write `batch`'s files into the table's data dir under unique names
     * (no manifest references them yet — invisible to readers). The
@@ -1777,206 +1419,243 @@ object Snapshots {
     newFiles
   }
 
-  /** Atomically PUBLISH manifest `version` with CANONICAL `content`
-    * (headers + complete file list). The manifest is fully written to a
-    * temp name first, then claimed atomically — readers can never
-    * observe a half-written manifest, and of two racing writers exactly
-    * one claims vN+1:
+  // ------------------------------------------------------------------
+  // The commit protocol
+  // ------------------------------------------------------------------
+
+  /** What one commit attempt decided against the head it was handed. */
+  private sealed trait Step[+A]
+
+  /** Publish `next` as head + 1. `staged` are files this attempt wrote
+    * (reclaimed if the claim is lost — the next attempt recomputes);
+    * `result` maps the committed version to the caller's answer.
+    */
+  private final case class Claim[A](next: Manifest, staged: Seq[Path],
+      result: Long => A) extends Step[A]
+
+  /** Commit nothing and answer `result` (a no-op, or a twin already won). */
+  private final case class Skip[A](result: A) extends Step[A]
+
+  private def claim(next: Manifest, staged: Seq[Path] = Nil): Step[Long] =
+    Claim(next, staged, identity)
+
+  private val MaxAttempts = 10
+
+  /** THE commit loop — the one place a snapshot version is published.
+    * Each attempt reads the head manifest and hands it to `attempt`,
+    * which validates against it (a refusal throws) and returns the next
+    * manifest; the claim is an atomic create-if-absent of head + 1, so
+    * of two racing writers exactly one wins and the loser re-reads the
+    * moved head and tries again — optimistic concurrency, Delta's
+    * `OptimisticTransaction` / Iceberg's `TableOperations.commit(base,
+    * metadata)`. Every claim is stamped with `op` and the claim instant.
+    *
+    * `staged` are files written ONCE before the loop (an append's data,
+    * a lazy delete's sidecar) and re-referenced by every attempt; they
+    * are reclaimed whenever the loop exits without committing them — a
+    * refusal, a Skip, or exhausted attempts — so no exit strands
+    * unreferenced files for vacuum to find.
+    */
+  private def transact[A](spark: SparkSession, table: String, op: String,
+      staged: Seq[Path] = Nil)(attempt: Manifest => Step[A]): A = {
+    def reclaim(ps: Seq[Path]): Unit =
+      ps.foreach(p => fs(spark, p).delete(p, false))
+    var tries = 0
+    while (tries < MaxAttempts) {
+      val head = headOf(spark, table)
+      val step = try attempt(head) catch {
+        case e: Throwable => reclaim(staged); throw e
+      }
+      step match {
+        case Skip(result) => reclaim(staged); return result
+        case Claim(next, mine, result) =>
+          val v = head.version + 1
+          if (claimManifest(spark, table, v, next.copy(op = op,
+              ts = Some(System.currentTimeMillis()), version = v)))
+            return result(v)
+          reclaim(mine) // computed against a stale head
+      }
+      tries += 1
+    }
+    reclaim(staged)
+    throw new IllegalStateException(
+      s"$op on $table failed after $MaxAttempts attempts")
+  }
+
+  /** Atomically PUBLISH `next` as `version`. The manifest is fully
+    * written to a temp name first, then claimed atomically — readers can
+    * never observe a half-written manifest, and of two racing writers
+    * exactly one claims vN+1:
     *   - file://  → hard link (atomic create-if-absent WITH content;
     *                a plain create(overwrite=false) on LocalFileSystem
     *                is check-then-create and loses commits under race)
     *   - hdfs://  → rename (atomic, fails when the target exists)
     * Returns false when another writer already owns `version`.
     *
-    * PHYSICAL encoding is chosen here, invisibly to every commit path:
-    * when the file-list delta vs the parent version (`#add:`/`#remove:`
-    * under a `#base:` header) is smaller than the full list, the delta
-    * is what hits disk — a streaming table accreting 1M files pays
-    * O(batch) manifest bytes per commit, not a 50 MB rewrite of the
-    * whole list ([[manifestLines]] resolves either form to the same
-    * canonical lines). Overwrites/OPTIMIZE naturally fall back to full
-    * form (their delta IS the table). Every `CheckpointInterval`-th
-    * claim also drops a full checkpoint file next to the manifest
-    * (best-effort, idempotent content — a crash before it lands just
-    * means resolution walks a longer chain until the next one).
+    * The claim records the per-file size ledger (`#fsz:`): staged files
+    * were recorded by [[stageData]], carried files by the parent's
+    * resolution, so steady state probes nothing; unknown sizes (a
+    * ledger-less parent) are probed through
+    * [[ManifestFileIndex.statusesOf]]. Best-effort per file — an
+    * unknowable size (a foreign ref the probe can't reach) just keeps
+    * that file on the reader's probing fallback. The PHYSICAL encoding
+    * ([[Manifest.encode]] — a delta over the parent when smaller) is
+    * invisible to every commit path, and every CheckpointInterval-th
+    * claim drops a full checkpoint beside the manifest (best-effort,
+    * idempotent content).
     */
   private def claimManifest(spark: SparkSession, table: String,
-      version: Long, content: String): Boolean = {
-    val f = fs(spark, manifestDir(table))
-    f.mkdirs(manifestDir(table))
-    // enrich the claim with the per-file size ledger (#fsz): staged
-    // files were recorded by stageData, carried files by the parent's
-    // resolution — steady state costs ZERO filesystem probes here, and
-    // every read of this version then builds its FileStatuses without
-    // per-file getFileStatus round-trips (ManifestFiles.statusesOf).
-    // Best-effort per file: an unknowable size (foreign ref the probe
-    // can't reach) just means that file keeps the probing fallback.
-    val (canonical, canonicalLines) = {
-      val lines0 = content.split("\n", -1).toSeq
-        .filterNot(_.startsWith(FszHeader)) // normalize re-published lines
-      val files = filesOf(lines0)
-      val dd = dataDir(table)
-      val fsz = files.flatMap { n =>
-        val p = new Path(dd, n)
-        ManifestFileIndex.knownSize(p).orElse {
-          try {
-            val st = p.getFileSystem(
-              spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-            ManifestFileIndex.recordSize(p, st.getLen)
-            Some(st.getLen)
-          } catch { case scala.util.control.NonFatal(_) => None }
-        }.map(l => s"$FszHeader$l:$n")
-      }
-      val all = lines0.filter(_.startsWith("#")) ++ fsz ++ files
-      (all.mkString("\n"), all)
-    }
-    val physical = {
-      val files = filesOf(canonicalLines)
-      val baseFiles =
-        if (version <= 1) Nil
-        else filesOf(manifestLines(spark, table, version - 1))
-      val baseSet = baseFiles.toSet
-      val fileSet = files.toSet
-      val adds = files.filterNot(baseSet)
-      val removes = baseFiles.filterNot(fileSet)
-      if (version <= 1 || adds.size + removes.size + 1 >= files.size)
-        canonical
-      else {
-        val sizes = fileSizesOf(canonicalLines)
-        (canonicalLines.filter(l =>
-          l.startsWith("#") && !l.startsWith(FszHeader)) ++
-          Seq(BaseHeader + (version - 1)) ++
-          adds.flatMap(n => sizes.get(n).map(l => s"$FszHeader$l:$n")) ++
-          adds.map(AddHeader + _) ++ removes.map(RemoveHeader + _))
-          .mkString("\n")
-      }
-    }
-    def writeAtomic(target: Path, body: String): Boolean = {
-      val tmp = new Path(manifestDir(table),
-        s".tmp-${java.util.UUID.randomUUID}")
-      val out = f.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      val ok =
-        if ("file" == f.getScheme) {
-          try {
-            java.nio.file.Files.createLink(
-              java.nio.file.Paths.get(target.toUri.getPath),
-              java.nio.file.Paths.get(tmp.toUri.getPath))
-            true
-          } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-        } else !f.exists(target) && f.rename(tmp, target)
-      f.delete(tmp, false)
-      ok
-    }
-    val claimed = writeAtomic(manifestPath(table, version), physical)
+      version: Long, next: Manifest): Boolean = {
+    val dir = Manifest.dir(table)
+    val f = fs(spark, dir)
+    f.mkdirs(dir)
+    val dd = dataDir(table)
+    def known(n: String) = ManifestFileIndex.knownSize(new Path(dd, n))
+    val unknown = next.files.filter(known(_).isEmpty)
+    if (unknown.nonEmpty)
+      try ManifestFileIndex.statusesOf(
+        spark.sparkContext.hadoopConfiguration, dd, unknown)
+      catch { case scala.util.control.NonFatal(_) => () }
+    val sized = next.copy(sizes =
+      next.files.flatMap(n => known(n).map(n -> _)).toMap).canonical
+    val physical = Manifest.encode(sized, version,
+      manifestAt(spark, table, version - 1))
+    val claimed = writeAtomic(f, dir, Manifest.path(table, version),
+      physical.render)
     if (claimed) {
-      // the canonical lines are known exactly — seed the resolver cache
-      resolvedManifests.put((new Path(table).toString, version),
-        canonicalLines)
-      if (version % CheckpointInterval == 0)
-        writeAtomic(checkpointPath(table, version), canonical)
+      resolvedManifests.put((new Path(table).toString, version), sized)
+      if (version % Manifest.CheckpointInterval == 0)
+        writeAtomic(f, dir, Manifest.checkpointPath(table, version),
+          sized.render)
     }
     claimed
   }
 
-  private def commit(spark: SparkSession, batch0: DataFrame, table: String,
-      replace: Boolean, maxRetries: Int): Long = {
-    // fail-fast schema + constraint + tombstone checks BEFORE staging (a
-    // refusal would otherwise strand orphaned data files until a vacuum)
-    var validated = manifestLines(spark, table, currentVersion(spark, table))
-    // a batch omitting a defaulted column lands the DEFAULT, not NULL
-    // (and the CHECK enforcement below sees the defaulted values)
-    val batch = if (replace) batch0
-      else fillWriteDefaults(batch0, schemaOf(validated))
+  /** Create `target` with `body` iff it does not exist yet (see
+    * [[claimManifest]] for the per-scheme atomicity).
+    */
+  private def writeAtomic(f: org.apache.hadoop.fs.FileSystem, dir: Path,
+      target: Path, body: String): Boolean = {
+    val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID}")
+    val out = f.create(tmp, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+    val ok =
+      if ("file" == f.getScheme) {
+        try {
+          java.nio.file.Files.createLink(
+            java.nio.file.Paths.get(target.toUri.getPath),
+            java.nio.file.Paths.get(tmp.toUri.getPath))
+          true
+        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      } else !f.exists(target) && f.rename(tmp, target)
+    f.delete(tmp, false)
+    ok
+  }
+
+  /** Refuse a claim of files staged under a column mapping or partition
+    * transform the head no longer declares: their physical names (or,
+    * when `prefixed`, their dir values) would be misread. `colmap` None
+    * skips the mapping check (an overwrite's files normalize names).
+    */
+  private def requireLayout(m: Manifest, table: String, what: String,
+      colmap: Option[Map[String, String]], partition: Option[String],
+      prefixed: Boolean): Unit = {
+    if (colmap.exists(_ != m.colmap))
+      throw new IllegalStateException(
+        s"$what to $table raced a concurrent RENAME COLUMN — the staged " +
+          "files carry stale physical names; re-run")
+    if (prefixed && m.partitionHeader != partition)
+      throw new IllegalStateException(
+        s"$what to $table raced a concurrent partition-transform change " +
+          "— the staged entries carry stale dir prefixes; re-run")
+  }
+
+  /** A batch validated against the head and staged ONCE, for the commits
+    * whose data never depends on the head (append, overwrite, stream
+    * append, COPY INTO): only the manifest is recomputed per attempt.
+    */
+  private final class StagedBatch(spark: SparkSession, table: String,
+      what: String, batch: DataFrame, replace: Boolean,
+      stagedAt: Manifest, val files: Seq[String]) {
+
+    private var validated = stagedAt
+
+    def paths: Seq[Path] = files.map(new Path(dataDir(table), _))
+
+    /** Re-validate against `m`, the head this attempt claims over, and
+      * return the schema to declare. The pre-staging checks ran against
+      * an older head, but the claim CARRIES the new head's tombstones
+      * and constraints: a lazy delete or ADD CONSTRAINT landing while we
+      * staged must re-validate here, or the append could resurrect a
+      * freshly-tombstoned key (the read-side anti-join would silently
+      * swallow the new rows) or land a violating batch under a manifest
+      * that claims the constraint holds. The schema re-evolution is a
+      * re-validation too: a widen landing mid-stage can make the batch's
+      * types illegal. Overwrite RESETS the schema, so the head schema
+      * neither conforms its checks nor evolves it.
+      */
+    def revalidate(m: Manifest): types.StructType = {
+      if (!replace && (m.tombstones != validated.tombstones ||
+          m.tombstoneCol != validated.tombstoneCol))
+        refuseTombstonedKeys(spark, table, m, batch)
+      if (m.checks != validated.checks)
+        enforceChecks(batch, m.checks, table,
+          if (replace) None else m.schema)
+      // an append re-introducing a DROPPED column name would expose
+      // pre-drop values from carried files; overwrite replaces every
+      // file, so the name becomes legitimately reusable
+      if (!replace) refuseDroppedColumns(batch, table, m)
+      requireLayout(m, table, what,
+        if (replace) None else Some(stagedAt.colmap),
+        stagedAt.partitionHeader, prefixed = true)
+      validated = m
+      evolveSchema(if (replace) None else m.schema, batch.schema)
+    }
+  }
+
+  /** Validate `batch0` against the head — fail fast, BEFORE staging (a
+    * refusal would otherwise strand orphaned data files until a vacuum)
+    * — and stage it. Appends land write DEFAULTs for omitted columns
+    * and stage under the head's PHYSICAL names (column mapping); an
+    * overwrite replaces every file, so its names normalize to the
+    * batch's own and the claim carries no colmap. The partition
+    * transform is LAYOUT POLICY and routes either way.
+    */
+  private def stageBatch(spark: SparkSession, table: String, what: String,
+      batch0: DataFrame, replace: Boolean = false): StagedBatch = {
+    val head = headOf(spark, table)
+    val batch = if (replace) batch0 else fillWriteDefaults(batch0, head.schema)
     if (!replace) {
-      evolveSchema(schemaOf(validated), batch.schema)
-      refuseTombstonedKeys(spark, table, validated, batch)
-      refuseDroppedColumns(batch, table, validated)
+      evolveSchema(head.schema, batch.schema)
+      refuseTombstonedKeys(spark, table, head, batch)
+      refuseDroppedColumns(batch, table, head)
     }
     // overwrite RESETS the declared schema, so the head schema must not
     // conform the batch here: a legitimate column-type-changing overwrite
     // of a CHECK-constrained table would otherwise refuse on the very
     // type-change the overwrite exists to perform
-    enforceChecks(batch, checksOf(validated), table,
-      if (replace) None else schemaOf(validated))
-    // append/overwrite: data files never depend on the head, so stage
-    // once and only the manifest content is recomputed per attempt.
-    // Appends stage under the head's PHYSICAL names (column mapping);
-    // an overwrite REPLACES every file, so its physical names normalize
-    // to the batch's own logical ones and the claim carries no colmap.
-    val stagedColmap = if (replace) Map.empty[String, String]
-      else colmapOf(validated)
-    // the partition transform is LAYOUT POLICY and survives overwrite
-    val stagedPart = partRawOf(validated)
-    val newFiles = stageData(spark, batch, table, stagedColmap,
-      partitionsOf(validated))
+    enforceChecks(batch, head.checks, table,
+      if (replace) None else head.schema)
+    val files = stageData(spark, batch, table,
+      if (replace) Map.empty else head.colmap, head.partitions)
     raceHookForTests()
-    val f = fs(spark, dataDir(table))
-    def dropStaged(): Unit =
-      newFiles.foreach(n => f.delete(new Path(dataDir(table), n), false))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      val lines = manifestLines(spark, table, head)
-      // close the validation race: the pre-staging checks ran against an
-      // older head, but this claim CARRIES the new head's tombstones and
-      // constraints — a lazy delete or ADD CONSTRAINT landing while we
-      // staged must re-validate here, or the append could resurrect a
-      // freshly-tombstoned key (the read-side anti-join would silently
-      // swallow the new rows) or land a violating batch under a manifest
-      // that claims the constraint holds. A refusal reclaims the staged
-      // files (they are unreferenced — no manifest names them).
-      // the schema re-evolution below is ALSO a guarded re-validation: a
-      // widen/evolution landing while we staged can make this batch's
-      // types illegal against the new head — the refusal must reclaim
-      // the staged files like the tombstone/constraint refusals do
-      val schema =
-        try {
-          if (!replace && (tombstonesOf(lines) != tombstonesOf(validated) ||
-              tombstoneColOf(lines) != tombstoneColOf(validated)))
-            refuseTombstonedKeys(spark, table, lines, batch)
-          if (checksOf(lines) != checksOf(validated))
-            enforceChecks(batch, checksOf(lines), table,
-              if (replace) None else schemaOf(lines))
-          // an append re-introducing a DROPPED column name would expose
-          // pre-drop values from carried files; overwrite replaces every
-          // file, so the name becomes legitimately reusable
-          if (!replace) refuseDroppedColumns(batch, table, lines)
-          // a RENAME landing while we staged means the staged files hold
-          // stale physical names — refuse loudly and reclaim (rare race;
-          // the caller re-runs against the renamed head)
-          if (!replace && colmapOf(lines) != stagedColmap)
-            throw new IllegalStateException(
-              s"append to $table raced a concurrent RENAME COLUMN — " +
-                "the staged files carry stale physical names; re-run")
-          // a transform change mid-stage would leave entries whose
-          // prefixes LIE under the new transform — refuse and reclaim
-          if (partRawOf(lines) != stagedPart)
-            throw new IllegalStateException(
-              s"commit to $table raced a concurrent partition-transform " +
-                "change — staged entries carry stale prefixes; re-run")
-          // overwrite resets the schema to the batch's; append
-          // union-evolves; stream watermarks survive either way
-          evolveSchema(if (replace) None else schemaOf(lines), batch.schema)
-        } catch { case e: Throwable => dropStaged(); throw e }
-      validated = lines
-      val base = if (replace) Nil else filesOf(lines)
-      // overwrite REPLACES the data state, pending tombstones included;
-      // append carries them (the refusal above keeps reads correct) —
-      // same split for the dropped-name ledger (no pre-drop file survives
-      // an overwrite)
-      if (claimManifest(spark, table, head + 1,
-          contentOf(Some(schema), marksOf(lines), base ++ newFiles,
-            if (replace) "overwrite" else "append", checksOf(lines),
-            if (replace) Nil else tombstonesOf(lines),
-            tombstoneColOf(lines),
-            if (replace) Nil else droppedOf(lines),
-            if (replace) Map.empty else colmapOf(lines),
-            partRawOf(lines)))) return head + 1
-      attempt += 1 // lost the race; re-read the new head and retry
+    new StagedBatch(spark, table, what, batch, replace, head, files)
+  }
+
+  private def commit(spark: SparkSession, batch0: DataFrame, table: String,
+      replace: Boolean): Long = {
+    val op = if (replace) "overwrite" else "append"
+    val staged = stageBatch(spark, table, op, batch0, replace)
+    transact(spark, table, op, staged.paths) { m =>
+      val schema = Some(staged.revalidate(m))
+      // overwrite REPLACES the data state: pending tombstones, the
+      // dropped-name ledger and the colmap go with the old files; an
+      // append carries them (the re-validation keeps reads correct)
+      claim(
+        if (replace) m.copy(schema = schema, files = staged.files,
+          tombstones = Nil, dropped = Nil, colmap = Map.empty)
+        else m.copy(schema = schema, files = m.files ++ staged.files))
     }
-    throw new IllegalStateException(
-      s"commit to $table failed after $maxRetries attempts")
   }
 
   /** Spec hooks: (candidate files actually probed/read, total candidate
@@ -2019,8 +1698,7 @@ object Snapshots {
     if (candidates.isEmpty) return candidates
     val dd = dataDir(table).toString
     // the stats manifest keys PHYSICAL column names (it reads footers)
-    val kc = physName(colmapOf(manifestLines(spark, table,
-      currentVersion(spark, table))), kc0)
+    val kc = physName(headOf(spark, table).colmap, kc0)
     if (!graft.operators.Layout.statsManifestCols(spark, dd)
         .exists(_.contains(kc))) return candidates
     val prunable = keyFrame.schema.head.dataType match {
@@ -2051,19 +1729,18 @@ object Snapshots {
       kc0: String, vals0: Seq[Any], candidates0: Seq[String]): Seq[String] = {
     if (candidates0.isEmpty) return candidates0
     val dd = dataDir(table).toString
-    val headLines = manifestLines(spark, table,
-      currentVersion(spark, table))
+    val head = headOf(spark, table)
     // DIRECTORY leg: a key-list probe on a partition column keeps only
     // partitions that can hold at least one key (one unrenderable key
     // keeps everything — sound); composite layouts probe the LEVEL the
     // key column governs
-    val candidates = partitionsOf(headLines).zipWithIndex
+    val candidates = head.partitions.zipWithIndex
       .find(_._1._1 == kc0) match {
       case Some(((_, kind), level)) =>
         val nn = vals0.filter(_ != null)
         // bucket rendering is type-strict (hashInt vs hashLong): a key
         // class mismatching the declared column type keeps everything
-        val dt = schemaOf(headLines)
+        val dt = head.schema
           .flatMap(_.fields.find(_.name == kc0)).map(_.dataType)
         if (bucketModulus(kind).isDefined &&
             !nn.forall(bucketProbeTypeOk(dt, _))) candidates0
@@ -2078,7 +1755,7 @@ object Snapshots {
       case _ => candidates0
     }
     if (candidates.isEmpty) return candidates
-    val kc = physName(colmapOf(headLines), kc0)
+    val kc = physName(head.colmap, kc0)
     if (!graft.operators.Layout.statsManifestCols(spark, dd)
         .exists(_.contains(kc))) return candidates
     val vals = vals0.filter(_ != null).distinct
@@ -2226,19 +1903,18 @@ object Snapshots {
       candidates: Seq[String]): Seq[String] = {
     if (candidates.isEmpty) return candidates
     val s = schema.getOrElse(return candidates)
-    val headLines = manifestLines(spark, table,
-      currentVersion(spark, table))
+    val head = headOf(spark, table)
     val bounds0 = predicateBounds(spark, predicate, s)
     // DIRECTORY leg first: the declared partition transform prunes on
     // the predicate's own bounds with zero sidecar reads (the bounds'
     // typed encodings — ISO strings for dates — are exactly the dir
     // rendering)
-    var cand = pruneEntriesByPartition(partitionsOf(headLines), bounds0,
+    var cand = pruneEntriesByPartition(head.partitions, bounds0,
       candidates, Some(s))
     val dd = dataDir(table).toString
     val statsCols = graft.operators.Layout.statsManifestCols(spark, dd)
       .getOrElse(return cand).toSet
-    val colmap = colmapOf(headLines)
+    val colmap = head.colmap
     val boxes = bounds0
       .map { case (c, lo, hi) => (physName(colmap, c), lo, hi) }
       .filter(b => statsCols.contains(b._1))
@@ -2295,16 +1971,6 @@ object Snapshots {
       graft.operators.Layout.canonUri(u), new Path(u).getName)).toSet
   }
 
-  /** The staged outcome of one file-granular copy-on-write pass (see
-    * [[cowApply]]): the staged rewrite+insert files, the untouched files
-    * carried by name, the tombstone state the claim should record, and
-    * which of those sidecars THIS pass staged (reclaimed on a lost
-    * claim; carried-forward sidecars are never touched).
-    */
-  private final case class CowResult(newFiles: Seq[String],
-      carried: Seq[String], tombstones: Seq[String],
-      tombstoneCol: Option[String], stagedTombstones: Seq[String])
-
   /** File-granular copy-on-write apply — the shared engine of
     * [[commitMerge]] and [[syncReplica]]'s feed transport: stage only
     * the files that PHYSICALLY hold a key the change set touches,
@@ -2332,12 +1998,17 @@ object Snapshots {
     *
     * `changes` must already be conformed to `schema` (plus the optional
     * delete-flag column); `keys` must be unique within `changes`.
+    * Returns the next manifest (declaring `schema`) and the files this
+    * pass staged — rewrites, inserts and any re-keyed tombstone sidecar —
+    * for the commit loop to reclaim on a lost claim (carried-forward
+    * sidecars are never touched).
     */
   private def cowApply(spark: SparkSession, table: String,
-      lines: Seq[String], schema: types.StructType, changes0: DataFrame,
-      keys: Seq[String], deleteCol: Option[String]): CowResult = {
+      m: Manifest, schema: types.StructType, changes0: DataFrame,
+      keys: Seq[String], deleteCol: Option[String]): (Manifest, Seq[Path]) = {
     import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
-    val files = filesOf(lines)
+    val files = m.files
+    def dataPaths(ns: Seq[String]) = ns.map(new Path(dataDir(table), _))
     // ONE materialization of the (bounded-by-contract) change set: the
     // pass consumes it several times — key collect/probe, the merge, the
     // tombstone re-assert legs — and in feed mode the lazy plan is a
@@ -2350,11 +2021,12 @@ object Snapshots {
       case None => changes
       case Some(dc) => changes.filter(!col(dc)).drop(dc)
     }
-    val colmap = colmapOf(lines)
-    if (files.isEmpty)
-      return CowResult(
-        stageData(spark, upserts, table, colmap, partitionsOf(lines)),
-        Nil, Nil, None, Nil)
+    val colmap = m.colmap
+    if (files.isEmpty) {
+      val staged = stageData(spark, upserts, table, colmap, m.partitions)
+      return (m.copy(schema = Some(schema), files = staged, tombstones = Nil),
+        dataPaths(staged))
+    }
     // single-column keys (the common case) probe via a literal IN-list
     // when the touch-set is bounded: the predicate pushes into the
     // parquet scan (row-group min/max skipping applies) and no second
@@ -2368,7 +2040,7 @@ object Snapshots {
       else None
     lazy val touched = changes.select(keys.map(col): _*).distinct()
     // pending-tombstone keys the change set re-asserts (bounded × bounded)
-    val tk = tombstoneKeys(spark, table, lines)
+    val tk = tombstoneKeys(spark, table, m)
     val reasserted = tk.map { case (kc, tkeys) =>
       kc -> tkeys.join(broadcast(
           changes.select(col(kc)).filter(col(kc).isNotNull).distinct()),
@@ -2389,14 +2061,13 @@ object Snapshots {
     def probeOf(cand: Seq[String], frame: DataFrame,
         on: Seq[String]): Option[DataFrame] =
       if (cand.isEmpty) None
-      else Some(readWithSchema(spark, table, cand, schemaOf(lines), colmap)
+      else Some(readWithSchema(spark, table, cand, m.schema, colmap)
         .join(broadcast(frame), on, "left_semi")
         .select(input_file_name().as("file")))
     val probeT = fastVals match {
       case Some(vals) =>
         if (candT.isEmpty || vals.isEmpty) None
-        else Some(readWithSchema(spark, table, candT, schemaOf(lines),
-            colmap)
+        else Some(readWithSchema(spark, table, candT, m.schema, colmap)
           .filter(col(keys.head).isInCollection(vals))
           .select(input_file_name().as("file")))
       case None => probeOf(candT, touched, keys)
@@ -2417,9 +2088,9 @@ object Snapshots {
     val merged =
       if (affected.isEmpty) upserts
       else {
-        val affState = conform(applyTombstones(spark, table, lines,
+        val affState = conform(applyTombstones(spark, table, m,
           readWithSchema(spark, table, files.filter(affected),
-            schemaOf(lines), colmap)), schema)
+            m.schema, colmap)), schema)
         deleteCol match {
           case None =>
             graft.operators.Merge.upsert(affState, changes, keys)
@@ -2427,12 +2098,11 @@ object Snapshots {
             graft.operators.Merge.applyChanges(affState, changes, keys, dc)
         }
       }
-    val newFiles = stageData(spark, merged, table, colmap,
-      partitionsOf(lines))
+    val newFiles = stageData(spark, merged, table, colmap, m.partitions)
     val (tombs, tombCol, stagedTombs) = (tk, reasserted) match {
       case (None, _) => (Nil, None, Nil)
       case (Some(_), None) => // untouched pending state carries verbatim
-        (tombstonesOf(lines), tombstoneColOf(lines), Nil)
+        (m.tombstones, m.tombstoneCol, Nil)
       case (Some((kc, tkeys)), Some(_)) =>
         // drop the re-asserted keys; keys whose rows just materialized
         // in the rewrite MAY stay listed (their anti-join is a no-op)
@@ -2445,7 +2115,9 @@ object Snapshots {
           (staged, Some(kc), staged)
         }
     }
-    CowResult(newFiles, carried, tombs, tombCol, stagedTombs)
+    (m.copy(schema = Some(schema), files = carried ++ newFiles,
+        tombstones = tombs, tombstoneCol = tombCol),
+      dataPaths(newFiles) ++ stagedTombs.map(new Path(tombstoneDir(table), _)))
   }
 
   /** MERGE with an update branch, under snapshot isolation — COPY-ON-
@@ -2467,46 +2139,29 @@ object Snapshots {
     * instead of losing one. Returns the committed version.
     */
   def commitMerge(spark: SparkSession, batch: DataFrame, table: String,
-      keys: Seq[String], maxRetries: Int = 10): Long = {
-    val f = fs(spark, dataDir(table))
+      keys: Seq[String]): Long = {
     // every post-merge row is either an untouched (already-valid) target
     // row or a batch row taken wholesale — enforcing on the batch covers
     // the new state without scanning the table
-    val headLines0 = manifestLines(spark, table, currentVersion(spark, table))
-    enforceChecks(batch, checksOf(headLines0), table, schemaOf(headLines0))
-    var validatedChecks = checksOf(headLines0)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      val lines = manifestLines(spark, table, head)
-      // TOCTOU guard (see commit): constraints landing mid-merge apply
-      if (checksOf(lines) != validatedChecks) {
-        enforceChecks(batch, checksOf(lines), table, schemaOf(lines))
-        validatedChecks = checksOf(lines)
+    val head0 = headOf(spark, table)
+    enforceChecks(batch, head0.checks, table, head0.schema)
+    var validatedChecks = head0.checks
+    transact(spark, table, "merge") { m =>
+      // TOCTOU guard (see StagedBatch.revalidate): constraints landing
+      // mid-merge apply
+      if (m.checks != validatedChecks) {
+        enforceChecks(batch, m.checks, table, m.schema)
+        validatedChecks = m.checks
       }
       // evolve first, then conform BOTH sides: a merge may introduce a
       // new column (target rows null-pad) or omit one (batch null-pads)
       // — but never a DROPPED name while pre-drop files are carried
-      refuseDroppedColumns(batch, table, lines)
-      val schema = evolveSchema(schemaOf(lines), batch.schema)
-      val cow = cowApply(spark, table, lines, schema,
+      refuseDroppedColumns(batch, table, m)
+      val schema = evolveSchema(m.schema, batch.schema)
+      val (next, staged) = cowApply(spark, table, m, schema,
         conform(batch, schema), keys, deleteCol = None)
-      if (claimManifest(spark, table, head + 1,
-          contentOf(Some(schema), marksOf(lines),
-            cow.carried ++ cow.newFiles, "merge", checksOf(lines),
-            cow.tombstones, cow.tombstoneCol, droppedOf(lines),
-            colmapOf(lines), partRawOf(lines))))
-        return head + 1
-      // lost the race: this merge was computed against a stale head —
-      // its files are unreachable (no manifest references them); drop
-      // them and recompute against the new head
-      cow.newFiles.foreach(n => f.delete(new Path(dataDir(table), n), false))
-      cow.stagedTombstones.foreach(n =>
-        f.delete(new Path(tombstoneDir(table), n), false))
-      attempt += 1
+      claim(next, staged)
     }
-    throw new IllegalStateException(
-      s"merge commit to $table failed after $maxRetries attempts")
   }
 
   /** Snapshot-isolated targeted DELETE — copy-on-write at FILE
@@ -2528,13 +2183,12 @@ object Snapshots {
     * contains any of the keys (no-op: no rewrite, no new version).
     */
   def commitDelete(spark: SparkSession, table: String, keys: Seq[Any],
-      keyCol: String, maxRetries: Int = 10): (Long, Long) = {
+      keyCol: String): (Long, Long) = {
     import org.apache.spark.sql.functions.col
     if (keys.isEmpty) return (currentVersion(spark, table), 0L)
     val distinctKeys = keys.distinct
     deleteWhereImpl(spark, table, col(keyCol).isInCollection(distinctKeys),
-      maxRetries,
-      (cand, _) => pruneByKeyVals(spark, table, keyCol, distinctKeys, cand))
+      m => pruneByKeyVals(spark, table, keyCol, distinctKeys, m.files))
   }
 
   /** Predicate DELETE — `DELETE FROM t WHERE <predicate>` for the
@@ -2549,10 +2203,9 @@ object Snapshots {
     * matching row.
     */
   def commitDeleteWhere(spark: SparkSession, table: String,
-      predicate: Column, maxRetries: Int = 10): (Long, Long) =
-    deleteWhereImpl(spark, table, predicate, maxRetries,
-      (cand, schema) =>
-        pruneByPredicateStats(spark, table, predicate, schema, cand))
+      predicate: Column): (Long, Long) =
+    deleteWhereImpl(spark, table, predicate,
+      m => pruneByPredicateStats(spark, table, predicate, m.schema, m.files))
 
   /** Predicate UPDATE — `UPDATE t SET c = expr, ... WHERE pred` as a
     * file-granular copy-on-write commit: ONE probe (predicate pushed
@@ -2567,20 +2220,13 @@ object Snapshots {
     * rows updated); (head, 0) when nothing matches.
     */
   def commitUpdateWhere(spark: SparkSession, table: String,
-      predicate: Column, sets: Seq[(String, Column)],
-      maxRetries: Int = 10): (Long, Long) = {
+      predicate: Column, sets: Seq[(String, Column)]): (Long, Long) = {
     import org.apache.spark.sql.functions._
     require(sets.nonEmpty, "UPDATE needs at least one SET assignment")
-    val f = fs(spark, dataDir(table))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      if (head == 0) return (head, 0L)
-      val lines = manifestLines(spark, table, head)
-      val files = filesOf(lines)
-      val schema = schemaOf(lines)
+    val setMap = sets.toMap
+    rewriteWhere(spark, table, "update", predicate, { m =>
       sets.foreach { case (c, _) =>
-        require(schema.forall(_.fieldNames.contains(c)),
+        require(m.schema.forall(_.fieldNames.contains(c)),
           s"UPDATE SET column $c does not exist in $table — UPDATE " +
             "never evolves schema (append or MERGE a new column)")
       }
@@ -2588,28 +2234,9 @@ object Snapshots {
       // predicate's conjunctive bounds, like the key-list paths — a
       // range UPDATE on a z-ordered stats column opens the
       // curve-adjacent files, not the table
-      val cand = pruneByPredicateStats(spark, table, predicate, schema,
-        files)
-      lastWherePruned = Some((cand.size, files.size))
-      val affected =
-        if (cand.isEmpty) Set.empty[String]
-        else probedEntries(spark, table, files,
-          readWithSchema(spark, table, cand, schema, colmapOf(lines))
-            .filter(predicate)
-            .select(input_file_name().as("file")).distinct()
-            .collect().map(_.getString(0)))
-      if (affected.isEmpty) return (head, 0L)
-      // ONE materialization of the affected slice: the updated-count,
-      // the CHECK aggregation and the staged write below all consume it
-      // — a lazy plan would re-read the affected files per consumer
-      // (the cowApply recipe; bounded by affected files, never the
-      // table, but 3× read amplification is pure waste)
-      val aff = applyTombstones(spark, table, lines,
-        readWithSchema(spark, table, files.filter(affected), schema,
-          colmapOf(lines)))
-        .localCheckpoint(true)
+      pruneByPredicateStats(spark, table, predicate, m.schema, m.files)
+    }) { (m, aff) =>
       val updated = aff.filter(predicate).count()
-      val setMap = sets.toMap
       // when(pred, new).otherwise(old): FALSE and NULL predicates both
       // keep the old value — exactly SQL UPDATE's row selection
       val rewritten = aff.select(aff.columns.toIndexedSeq.map { c =>
@@ -2623,81 +2250,70 @@ object Snapshots {
       }: _*)
       // updated rows are the only new data — they must still satisfy
       // every declared CHECK before a manifest claims them
-      enforceChecks(rewritten, checksOf(lines), table, schema)
-      val newFiles = stageData(spark, rewritten, table, colmapOf(lines),
-        partitionsOf(lines))
-      if (claimManifest(spark, table, head + 1,
-          contentOf(schema, marksOf(lines),
-            files.filterNot(affected) ++ newFiles, "update",
-            checksOf(lines), tombstonesOf(lines), tombstoneColOf(lines),
-            droppedOf(lines), colmapOf(lines), partRawOf(lines))))
-        return (head + 1, updated)
-      newFiles.foreach(n => f.delete(new Path(dataDir(table), n), false))
-      attempt += 1
+      enforceChecks(rewritten, m.checks, table, m.schema)
+      (rewritten, updated)
     }
-    throw new IllegalStateException(
-      s"update commit to $table failed after $maxRetries attempts")
   }
 
   private def deleteWhereImpl(spark: SparkSession, table: String,
-      predicate: Column, maxRetries: Int,
-      prune: (Seq[String], Option[types.StructType]) => Seq[String])
-      : (Long, Long) = {
-    import org.apache.spark.sql.functions._
-    val f = fs(spark, dataDir(table))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      if (head == 0) return (head, 0L)
-      val lines = manifestLines(spark, table, head)
-      val files = filesOf(lines)
-      // reads run under the DECLARED schema: after an evolution, a
-      // rewritten pre-evolution file must re-land with the new columns
-      // (as NULLs), not silently narrow the table to its oldest file
-      val schema = schemaOf(lines)
-      // key-list deletes stats-prune the probe candidates driver-side
-      // (pruneByKeyVals); predicate deletes prune on the predicate's own
-      // conjunctive bounds (pruneByPredicateStats) — scan-level pushdown
-      // still applies to whatever survives
-      val cand = prune(files, schema)
-      lastWherePruned = Some((cand.size, files.size))
-      val affected =
-        if (cand.isEmpty) Set.empty[String]
-        else probedEntries(spark, table, files,
-          readWithSchema(spark, table, cand, schema, colmapOf(lines))
-            .filter(predicate)
-            .select(input_file_name().as("file")).distinct()
-            .collect().map(_.getString(0)))
-      if (affected.isEmpty) return (head, 0L)
-      // rewrite from the APPLIED view: already-tombstoned rows in the
-      // affected files neither count as freshly deleted nor re-land
-      // (partial materialization); untouched files keep relying on the
-      // carried tombstone headers. ONE materialization — the deleted
-      // count and the staged keep-rewrite both consume the slice
-      val aff = applyTombstones(spark, table, lines,
-        readWithSchema(spark, table, files.filter(affected), schema,
-          colmapOf(lines)))
-        .localCheckpoint(true)
-      val deleted = aff.filter(predicate).count()
+      predicate: Column, candidates: Manifest => Seq[String]): (Long, Long) =
+    rewriteWhere(spark, table, "delete", predicate, candidates) { (_, aff) =>
+      import org.apache.spark.sql.functions.{coalesce, lit}
       // NULL-safe keep: NOT(NULL) is NULL and would silently drop rows
       // whose predicate is undecided — SQL DELETE keeps them
-      val kept = aff.filter(!coalesce(predicate, lit(false)))
-      val newFiles = stageData(spark, kept, table, colmapOf(lines),
-        partitionsOf(lines))
-      val manifest = contentOf(schema, marksOf(lines),
-        files.filterNot(affected) ++ newFiles, "delete", checksOf(lines),
-        tombstonesOf(lines), tombstoneColOf(lines), droppedOf(lines),
-        colmapOf(lines), partRawOf(lines))
-      if (claimManifest(spark, table, head + 1, manifest))
-        return (head + 1, deleted)
-      // lost the race: computed against a stale head — drop the orphans
-      // (no manifest references them) and recompute
-      newFiles.foreach(n => f.delete(new Path(dataDir(table), n), false))
-      attempt += 1
+      (aff.filter(!coalesce(predicate, lit(false))),
+        aff.filter(predicate).count())
     }
-    throw new IllegalStateException(
-      s"delete commit to $table failed after $maxRetries attempts")
-  }
+
+  /** Predicate copy-on-write at FILE granularity, shared by DELETE and
+    * UPDATE: ONE probe of the head's `candidates` (pre-pruned
+    * driver-side — key lists via [[pruneByKeyVals]], predicates via
+    * [[pruneByPredicateStats]]; it may also refuse) with the predicate
+    * pushed into the parquet scan finds the files physically holding a
+    * matching row. Only those rewrite: `rewrite` maps their slice to
+    * (rows to re-land, rows changed). Every other file carries by name.
+    * Like [[commitMerge]], the result depends on the head it was
+    * computed against, so a lost claim reclaims the rewrite and
+    * recomputes — concurrent writers serialize instead of losing rows.
+    * (head, 0) when no file holds a matching row.
+    *
+    * The slice is read under the DECLARED schema (a rewritten
+    * pre-evolution file re-lands with the new columns as NULLs, never
+    * narrowing the table) and from the APPLIED view: already-tombstoned
+    * rows neither count nor re-land (partial materialization), while
+    * untouched files keep relying on the carried tombstone headers. It
+    * is materialized ONCE — the count and the staged rewrite both
+    * consume it.
+    */
+  private def rewriteWhere(spark: SparkSession, table: String, op: String,
+      predicate: Column, candidates: Manifest => Seq[String])(
+      rewrite: (Manifest, DataFrame) => (DataFrame, Long)): (Long, Long) =
+    transact(spark, table, op) { m =>
+      import org.apache.spark.sql.functions.input_file_name
+      if (m.version == 0) Skip((0L, 0L))
+      else {
+        val cand = candidates(m)
+        lastWherePruned = Some((cand.size, m.files.size))
+        val affected =
+          if (cand.isEmpty) Set.empty[String]
+          else probedEntries(spark, table, m.files,
+            readWithSchema(spark, table, cand, m.schema, m.colmap)
+              .filter(predicate)
+              .select(input_file_name().as("file")).distinct()
+              .collect().map(_.getString(0)))
+        if (affected.isEmpty) Skip((m.version, 0L))
+        else {
+          val aff = applyTombstones(spark, table, m,
+            readWithSchema(spark, table, m.files.filter(affected), m.schema,
+              m.colmap))
+            .localCheckpoint(true)
+          val (out, changed) = rewrite(m, aff)
+          val staged = stageData(spark, out, table, m.colmap, m.partitions)
+          Claim(m.copy(files = m.files.filterNot(affected) ++ staged),
+            staged.map(new Path(dataDir(table), _)), v => (v, changed))
+        }
+      }
+    }
 
   /** OPTIMIZE under the commit protocol: rewrite the head's accreted
     * small files into ~`targetFiles`, committed as a NEW version by the
@@ -2718,65 +2334,51 @@ object Snapshots {
     * the maintenance policy's periodic OPTIMIZE restores it.
     */
   def compactData(spark: SparkSession, table: String, targetFiles: Int = 8,
-      minFiles: Int = 16, maxRetries: Int = 10,
-      zorderBy: Seq[String] = Nil,
+      minFiles: Int = 16, zorderBy: Seq[String] = Nil,
       targetFileBytes: Long = 128L << 20): Option[Long] = {
     require(targetFiles >= 0, "targetFiles must be >= 0 (0 = size-derived)")
     val f = fs(spark, dataDir(table))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      val lines =
-        if (head == 0) Nil else manifestLines(spark, table, head)
+    transact(spark, table, "optimize") { m =>
       // pending tombstones always compact (materializing merge-on-read
       // deletes is the point, whatever the file count); otherwise the
       // minFiles floor refuses pure write amplification
-      if (head == 0 ||
-        (filesOf(lines).size < minFiles && tombstonesOf(lines).isEmpty))
-        return None
-      // targetFiles == 0 → SIZE-DERIVED: aim for ~targetFileBytes per
-      // output file from the live byte census of the version's file list
-      // (driver-side listStatus, O(files) metadata). A constant target
-      // is pathological in both directions at 100 TB — 8 means one
-      // full rewrite into enormous files, a large constant shreds a
-      // small table — so the unparameterized SQL face compacts to a
-      // byte budget instead.
-      val nOut =
-        if (targetFiles > 0) targetFiles
-        else {
-          val ledger = fileSizesOf(lines) // probe-free when manifested
-          val bytes = filesOf(lines).map(n => ledger.getOrElse(n,
-            f.getFileStatus(new Path(dataDir(table), n)).getLen)).sum
-          math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-        }
-      // the rewrite is the APPLIED state and the claim carries no
-      // tombstone headers — OPTIMIZE is the materialization point
-      val current = applyTombstones(spark, table, lines,
-        readWithSchema(spark, table, filesOf(lines), schemaOf(lines),
-          colmapOf(lines)))
-      val rewritten =
-        if (zorderBy.nonEmpty)
-          graft.operators.Layout.zorderFrameN(current, zorderBy, nOut)
-        else current.repartition(nOut)
-      // the full rewrite NORMALIZES physical names (stage the logical
-      // frame verbatim) — the colmap clears with the ledger below; the
-      // partition transform is layout policy and the restage honors it
-      val newFiles = stageData(spark, rewritten, table, Map.empty,
-        partitionsOf(lines))
-      // the full rewrite is the materialization point: no tombstones,
-      // and the dropped-name ledger CLEARS (every surviving file was
-      // re-staged under the declared schema — pre-drop values are gone)
-      if (claimManifest(spark, table, head + 1,
-          contentOf(schemaOf(lines), marksOf(lines), newFiles, "optimize",
-            checksOf(lines), partition = partRawOf(lines))))
-        return Some(head + 1)
-      // lost the race (an append/merge landed first): this rewrite no
-      // longer represents the head — drop the orphans and recompute
-      newFiles.foreach(n => f.delete(new Path(dataDir(table), n), false))
-      attempt += 1
+      if (m.version == 0 || (m.files.size < minFiles && m.tombstones.isEmpty))
+        Skip(None)
+      else {
+        // targetFiles == 0 → SIZE-DERIVED: aim for ~targetFileBytes per
+        // output file from the live byte census of the version's file
+        // list (probe-free when manifested). A constant target is
+        // pathological in both directions at 100 TB — 8 means one full
+        // rewrite into enormous files, a large constant shreds a small
+        // table — so the unparameterized SQL face compacts to a byte
+        // budget instead.
+        val nOut =
+          if (targetFiles > 0) targetFiles
+          else {
+            val bytes = m.files.map(n => m.sizes.getOrElse(n,
+              f.getFileStatus(new Path(dataDir(table), n)).getLen)).sum
+            math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+          }
+        // the rewrite is the APPLIED state — OPTIMIZE is the
+        // materialization point
+        val current = applyTombstones(spark, table, m,
+          readWithSchema(spark, table, m.files, m.schema, m.colmap))
+        val rewritten =
+          if (zorderBy.nonEmpty)
+            graft.operators.Layout.zorderFrameN(current, zorderBy, nOut)
+          else current.repartition(nOut)
+        // the full rewrite NORMALIZES physical names (stage the logical
+        // frame verbatim) and re-stages under the partition transform
+        // (layout policy); every surviving file is re-staged under the
+        // declared schema, so tombstones, the dropped-name ledger and
+        // the colmap all clear
+        val staged = stageData(spark, rewritten, table, Map.empty,
+          m.partitions)
+        Claim(m.copy(files = staged, tombstones = Nil, dropped = Nil,
+          colmap = Map.empty), staged.map(new Path(dataDir(table), _)),
+          v => Some(v))
+      }
     }
-    throw new IllegalStateException(
-      s"compaction commit to $table failed after $maxRetries attempts")
   }
 
   /** Bin-packed PARTIAL compaction — the steady-state OPTIMIZE a 100 TB
@@ -2798,55 +2400,53 @@ object Snapshots {
     */
   def compactSmallFiles(spark: SparkSession, table: String,
       smallBytes: Long = 32L << 20, targetFileBytes: Long = 128L << 20,
-      minSmall: Int = 8, maxRetries: Int = 10): Option[Long] = {
+      minSmall: Int = 8): Option[Long] = {
     require(smallBytes > 0 && targetFileBytes > 0)
     val f = fs(spark, dataDir(table))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      if (head == 0) return None
-      val lines = manifestLines(spark, table, head)
-      val files = filesOf(lines)
+    transact(spark, table, "optimize") { m =>
       // recursive census keyed by data-dir-RELATIVE path: partitioned
       // entries (`__gp=.../f.parquet`) size like flat ones; sidecar
       // dirs (underscore) and foreign refs (absent) stay out
-      val ddQ = f.makeQualified(dataDir(table)).toString + "/"
-      val sizes = walkFiles(f, dataDir(table)).flatMap { st =>
-        val rel = f.makeQualified(st.getPath).toString.stripPrefix(ddQ)
-        if (st.isFile && !rel.split('/').exists(c =>
-            (c.startsWith("_") && !c.startsWith(PartPrefix)) ||
-              c.startsWith(".")))
-          Some(rel -> st.getLen)
-        else None
-      }.toMap
-      val small = files.filter(n => sizes.get(n).exists(_ < smallBytes))
-      if (small.isEmpty || small.size < minSmall) return None
-      val carried = files.filterNot(small.toSet)
-      val smallTotal = small.map(sizes).sum
-      val nOut = math.max(1,
-        math.ceil(smallTotal.toDouble / targetFileBytes).toInt)
-      // the packed slice is read APPLIED (its tombstoned rows leave
-      // physically); carried files keep relying on the carried headers
-      val packed = applyTombstones(spark, table, lines,
-        readWithSchema(spark, table, small, schemaOf(lines),
-          colmapOf(lines)))
-        .repartition(nOut)
-      val newFiles = stageData(spark, packed, table, colmapOf(lines),
-        partitionsOf(lines))
-      // PARTIAL pack: carried files may still hold pre-drop values, so
-      // the dropped-name ledger carries (unlike the full rewrite above)
-      if (claimManifest(spark, table, head + 1,
-          contentOf(schemaOf(lines), marksOf(lines), carried ++ newFiles,
-            "optimize", checksOf(lines),
-            tombstonesOf(lines), tombstoneColOf(lines), droppedOf(lines),
-            colmapOf(lines), partRawOf(lines))))
-        return Some(head + 1)
-      // lost the race — drop the orphans and recompute against the head
-      newFiles.foreach(n => f.delete(new Path(dataDir(table), n), false))
-      attempt += 1
+      val sizes =
+        if (m.version == 0) Map.empty[String, Long]
+        else dataFileCensus(f, dataDir(table)).map { case (_, rel, st) =>
+          rel -> st.getLen }.toMap
+      val small = m.files.filter(n => sizes.get(n).exists(_ < smallBytes))
+      if (small.isEmpty || small.size < minSmall) Skip(None)
+      else {
+        val nOut = math.max(1,
+          math.ceil(small.map(sizes).sum.toDouble / targetFileBytes).toInt)
+        // the packed slice is read APPLIED (its tombstoned rows leave
+        // physically); carried files keep relying on the carried headers
+        val packed = applyTombstones(spark, table, m,
+          readWithSchema(spark, table, small, m.schema, m.colmap))
+          .repartition(nOut)
+        val staged = stageData(spark, packed, table, m.colmap, m.partitions)
+        // PARTIAL pack: carried files may still hold pre-drop values, so
+        // the dropped-name ledger carries (unlike the full rewrite above)
+        Claim(m.copy(files = m.files.filterNot(small.toSet) ++ staged),
+          staged.map(new Path(dataDir(table), _)), v => Some(v))
+      }
     }
-    throw new IllegalStateException(
-      s"small-file compaction of $table failed after $maxRetries attempts")
+  }
+
+  /** Every file under the data dir as (path, data-dir-relative entry,
+    * status) — the RECURSIVE census that compaction sizes and vacuum
+    * reconciles against: partitioned entries (`__gp=.../f.parquet`)
+    * count like flat ones; sidecar trees (underscore or dot components)
+    * are never included.
+    */
+  private def dataFileCensus(f: org.apache.hadoop.fs.FileSystem, dd: Path)
+      : Seq[(Path, String, org.apache.hadoop.fs.FileStatus)] = {
+    val ddQ = f.makeQualified(dd).toString + "/"
+    walkFiles(f, dd).flatMap { st =>
+      val rel = f.makeQualified(st.getPath).toString.stripPrefix(ddQ)
+      if (st.isFile && !rel.split('/').exists(c =>
+          (c.startsWith("_") && !c.startsWith(PartPrefix)) ||
+            c.startsWith(".")))
+        Some((st.getPath, rel, st))
+      else None
+    }
   }
 
   /** Read the table at `version` (default: latest). A resolved reader is
@@ -2854,12 +2454,11 @@ object Snapshots {
     */
   def read(spark: SparkSession, table: String,
       version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion(spark, table))
-    val lines = manifestLines(spark, table, v)
-    val files = filesOf(lines)
-    if (files.isEmpty) spark.emptyDataFrame
-    else applyTombstones(spark, table, lines,
-      readWithSchema(spark, table, files, schemaOf(lines), colmapOf(lines)))
+    val m = manifestAt(spark, table,
+      version.getOrElse(currentVersion(spark, table)))
+    if (m.files.isEmpty) spark.emptyDataFrame
+    else applyTombstones(spark, table, m,
+      readWithSchema(spark, table, m.files, m.schema, m.colmap))
   }
 
   /** The table's commit log as a DataFrame — the audit surface a
@@ -2876,34 +2475,35 @@ object Snapshots {
     */
   def history(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
-    val dir = manifestDir(table)
-    val f = fs(spark, dir)
-    val empty = Seq.empty[(Long, java.sql.Timestamp, String, Int,
-      Option[Int], Option[Int])]
-    if (!f.exists(dir))
-      return empty.toDF("version", "committed_at", "op", "num_files",
-        "added_files", "removed_files")
-    val byVersion = f.listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".manifest"))
-      .map(s => versionOf(s.getPath.getName) -> s.getModificationTime)
-      .sortBy(_._1)
     var prior: Option[Set[String]] = None // unknown until a version reads
-    val rows = byVersion.map { case (v, mtime) =>
-      val lines = manifestLines(spark, table, v)
-      val files = filesOf(lines).toSet
-      val op = lines.find(_.startsWith(OpHeader))
-        .map(_.stripPrefix(OpHeader)).getOrElse("unknown")
+    val rows = retainedManifests(spark, table).map { case (m, mtime) =>
+      val files = m.files.toSet
       // contiguity: vacuum retains a suffix, so only the OLDEST retained
       // version can lack its predecessor (unless it is v1)
-      val base = if (v == 1) Some(Set.empty[String]) else prior
-      val row = (v, new java.sql.Timestamp(tsOf(lines).getOrElse(mtime)),
-        op, files.size,
+      val base = if (m.version == 1) Some(Set.empty[String]) else prior
+      val row = (m.version, new java.sql.Timestamp(m.ts.getOrElse(mtime)),
+        if (m.op.isEmpty) "unknown" else m.op, files.size,
         base.map(b => files.diff(b).size), base.map(b => b.diff(files).size))
       prior = Some(files)
       row
-    }.reverse.toSeq
+    }.reverse
     rows.toDF("version", "committed_at", "op", "num_files",
       "added_files", "removed_files")
+  }
+
+  /** Every retained manifest, ascending, with its file's mtime (the
+    * commit-instant fallback for legacy manifests without `#ts:`).
+    */
+  private def retainedManifests(spark: SparkSession,
+      table: String): Seq[(Manifest, Long)] = {
+    val dir = Manifest.dir(table)
+    val f = fs(spark, dir)
+    if (!f.exists(dir)) Nil
+    else f.listStatus(dir).toSeq
+      .flatMap(s => Manifest.versionOf(s.getPath.getName)
+        .map(v => (v, s.getModificationTime)))
+      .sortBy(_._1)
+      .map { case (v, mtime) => (manifestAt(spark, table, v), mtime) }
   }
 
   /** (version, commit instant epochMs) of every RETAINED manifest,
@@ -2911,18 +2511,10 @@ object Snapshots {
     * file's mtime for legacy manifests. What `TIMESTAMP AS OF` resolves
     * against; O(retained versions) manifest reads, bounded by vacuum.
     */
-  def commitInstants(spark: SparkSession, table: String): Seq[(Long, Long)] = {
-    val dir = manifestDir(table)
-    val f = fs(spark, dir)
-    if (!f.exists(dir)) return Nil
-    f.listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".manifest"))
-      .map { s =>
-        val v = versionOf(s.getPath.getName)
-        v -> tsOf(manifestLines(spark, table, v))
-          .getOrElse(s.getModificationTime)
-      }.sortBy(_._1).toSeq
-  }
+  def commitInstants(spark: SparkSession, table: String): Seq[(Long, Long)] =
+    retainedManifests(spark, table).map { case (m, mtime) =>
+      m.version -> m.ts.getOrElse(mtime)
+    }
 
   /** The newest retained version committed at or before `cutoffMs` —
     * what `TIMESTAMP AS OF` / `snapshot_at(t, ts)` resolve. BINARY
@@ -2938,17 +2530,16 @@ object Snapshots {
     */
   def versionAtInstant(spark: SparkSession, table: String,
       cutoffMs: Long): Option[Long] = {
-    val dir = manifestDir(table)
+    val dir = Manifest.dir(table)
     val f = fs(spark, dir)
     if (!f.exists(dir)) return None
-    val statuses = f.listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".manifest"))
-    if (statuses.isEmpty) return None
-    val mtimes = statuses
-      .map(s => versionOf(s.getPath.getName) -> s.getModificationTime).toMap
+    val mtimes = f.listStatus(dir).toSeq.flatMap(s =>
+      Manifest.versionOf(s.getPath.getName)
+        .map(_ -> s.getModificationTime)).toMap
+    if (mtimes.isEmpty) return None
     val versions = mtimes.keys.toIndexedSeq.sorted
     def instant(v: Long): Long =
-      tsOf(manifestLines(spark, table, v)).getOrElse(mtimes(v))
+      manifestAt(spark, table, v).ts.getOrElse(mtimes(v))
     // largest index whose instant <= cutoff
     var lo = 0
     var hi = versions.size - 1
@@ -2990,8 +2581,8 @@ object Snapshots {
     */
   def sameTombstones(spark: SparkSession, table: String, fromV: Long,
       toV: Long): Boolean =
-    tombstonesOf(manifestLines(spark, table, fromV)) ==
-      tombstonesOf(manifestLines(spark, table, toV))
+    manifestAt(spark, table, fromV).tombstones ==
+      manifestAt(spark, table, toV).tombstones
 
   private def readDataFiles(spark: SparkSession, table: String,
       names: Seq[String], schema: Option[types.StructType],
@@ -3015,8 +2606,7 @@ object Snapshots {
     require(removed.isEmpty,
       s"step v$fromV->v$toV rewrote ${removed.size} file(s) — not " +
         "append-only; use rowDiff(keys) for a row-exact change feed")
-    require(tombstonesOf(manifestLines(spark, table, fromV)) ==
-        tombstonesOf(manifestLines(spark, table, toV)),
+    require(sameTombstones(spark, table, fromV, toV),
       s"step v$fromV->v$toV changed the table's lazy-delete tombstones — " +
         "not append-only; use rowDiff(keys) for a row-exact change feed")
     // the TO-version's declared schema: an evolution step's feed carries
@@ -3054,8 +2644,8 @@ object Snapshots {
     import org.apache.spark.sql.functions._
     require(fromV <= toV, s"fromV $fromV > toV $toV")
     require(keys.nonEmpty, "rowDiff needs at least one key column")
-    val fromLines = manifestLines(spark, table, fromV)
-    val toLines = manifestLines(spark, table, toV)
+    val from = manifestAt(spark, table, fromV)
+    val to = manifestAt(spark, table, toV)
     // BOTH sides read under the to-version's declared schema: files from
     // before an added column serve it as NULL, so a backfill rewrite
     // classifies as `update` instead of failing the column resolution.
@@ -3064,29 +2654,28 @@ object Snapshots {
     // row dead at toV must not feed a post-image — e.g. a window that
     // only MATERIALIZES pending tombstones (OPTIMIZE) nets to an empty
     // feed instead of re-reporting the deletes.
-    val toSchema = schemaOf(toLines)
-    val toColmap = colmapOf(toLines)
+    val toSchema = to.schema
+    val toColmap = to.colmap
     val pre = readDataFiles(spark, table,
       removedFiles(spark, table, fromV, toV), toSchema, toColmap)
-      .map(applyTombstones(spark, table, fromLines, _))
+      .map(applyTombstones(spark, table, from, _))
     val post = readDataFiles(spark, table,
       addedFiles(spark, table, fromV, toV), toSchema, toColmap)
-      .map(applyTombstones(spark, table, toLines, _))
+      .map(applyTombstones(spark, table, to, _))
     // lazy deletes COMMITTED in the window touch no files, so the file
     // legs can't see them: rows of CARRIED files matching the window's
     // NEW tombstone keys are emitted as `delete` pre-images. Restricted
     // to carried files — removed-file rows are already classified above.
-    val tombLeg: Option[DataFrame] = tombstoneKeys(spark, table, toLines)
+    val tombLeg: Option[DataFrame] = tombstoneKeys(spark, table, to)
       .flatMap { case (kc, toKeys) =>
-        val carried = filesAt(spark, table, fromV)
-          .toSet.intersect(filesAt(spark, table, toV).toSet).toSeq
+        val carried = from.files.toSet.intersect(to.files.toSet).toSeq
         if (carried.isEmpty) None
         else {
           // same key column at both ends → subtract the old set; a
           // differing column means fromV's tombstones were materialized
           // in-window (their rows left via file rewrites) — all of toV's
           // keys are new
-          val newKeys = tombstoneKeys(spark, table, fromLines) match {
+          val newKeys = tombstoneKeys(spark, table, from) match {
             case Some((fkc, fromKeys)) if fkc == kc =>
               toKeys.exceptAll(fromKeys)
             case _ => toKeys
@@ -3187,13 +2776,13 @@ object Snapshots {
     val f = fs(spark, dataDir(table))
     val head = currentVersion(spark, table)
     require(head > 0, s"no snapshot table at $table to stat")
-    val headLines = manifestLines(spark, table, head)
-    val files = filesOf(headLines)
+    val m = manifestAt(spark, table, head)
+    val files = m.files
       .map(n => f.makeQualified(new Path(dataDir(table), n)).toString)
     require(files.nonEmpty, s"$table@v$head has no data files to stat")
     // the sidecar reads footers, so it tracks PHYSICAL column names;
     // callers speak logical — map before touching the manifest
-    val physCols = statsCols.map(physName(colmapOf(headLines), _))
+    val physCols = statsCols.map(physName(m.colmap, _))
     graft.operators.Layout.statsManifestCols(spark, dd) match {
       case None =>
         graft.operators.Layout.writeStatsManifest(spark, dd, physCols,
@@ -3226,11 +2815,11 @@ object Snapshots {
       version: Option[Long] = None): DataFrame = {
     val v = version.getOrElse(currentVersion(spark, table))
     val f = fs(spark, dataDir(table))
-    val lines = manifestLines(spark, table, v)
+    val m = manifestAt(spark, table, v)
     // fully-qualified canonical URIs: the stats manifest keys files by
     // input_file_name() (scheme-qualified), so the version's file list
     // must compare in the same form
-    val files = filesOf(lines)
+    val files = m.files
       .map(n => f.makeQualified(new Path(dataDir(table), n)).toString)
     if (files.isEmpty) return spark.emptyDataFrame
     // every read path honors the version's DECLARED schema — the
@@ -3238,9 +2827,9 @@ object Snapshots {
     // resolve its columns from whichever file's footer Spark samples —
     // and the version's pending tombstones (merge-on-read deletes filter
     // the pruned read exactly like the plain one)
-    val schema = schemaOf(lines)
-    val colmap = colmapOf(lines)
-    def rd(paths: Seq[String]) = applyTombstones(spark, table, lines,
+    val schema = m.schema
+    val colmap = m.colmap
+    def rd(paths: Seq[String]) = applyTombstones(spark, table, m,
       readWithSchema(spark, table, paths, schema, colmap))
     val dd = dataDir(table).toString
     if (graft.operators.Layout.statsManifestCols(spark, dd).isEmpty) {
@@ -3306,12 +2895,12 @@ object Snapshots {
     val head = currentVersion(spark, table)
     require(head > 0, s"no snapshot table at $table to index")
     val f = fs(spark, dataDir(table))
-    val lines = manifestLines(spark, table, head)
-    val files = filesOf(lines)
+    val m = manifestAt(spark, table, head)
+    val files = m.files
       .map(n => f.makeQualified(new Path(dataDir(table), n)).toString)
     require(files.nonEmpty, s"$table@v$head has no data files to index")
     // the sidecar reads footers: it keys the PHYSICAL column name
-    val pc = physName(colmapOf(lines), column)
+    val pc = physName(m.colmap, column)
     val bd = bloomDir(table, pc)
     val existing =
       if (f.exists(bd))
@@ -3344,12 +2933,11 @@ object Snapshots {
     val numBits = math.max(64L, math.ceil(
       -expectedItemsPerFile.toDouble * math.log(fpp) /
         (math.log(2) * math.log(2))).toLong)
-    val rd = schemaOf(lines) match {
+    val rd = m.schema match {
       case Some(s) => readFileList(spark, table,
         missing.toIndexedSeq,
         physSchema(
-          types.StructType(s.fields.filter(_.name == column)),
-          colmapOf(lines)))
+          types.StructType(s.fields.filter(_.name == column)), m.colmap))
       case None => spark.read.parquet(missing.toIndexedSeq: _*)
         .select(col(pc))
     }
@@ -3390,13 +2978,13 @@ object Snapshots {
       keys: Seq[Any], version: Option[Long] = None): DataFrame = {
     val v = version.getOrElse(currentVersion(spark, table))
     val f = fs(spark, dataDir(table))
-    val lines = manifestLines(spark, table, v)
-    val files = filesOf(lines)
+    val m = manifestAt(spark, table, v)
+    val files = m.files
       .map(n => f.makeQualified(new Path(dataDir(table), n)).toString)
     if (files.isEmpty) return spark.emptyDataFrame
-    val schema = schemaOf(lines)
-    val colmap = colmapOf(lines)
-    def rd(paths: Seq[String]) = applyTombstones(spark, table, lines,
+    val schema = m.schema
+    val colmap = m.colmap
+    def rd(paths: Seq[String]) = applyTombstones(spark, table, m,
       readWithSchema(spark, table, paths, schema, colmap))
     val pc = physName(colmap, column)
     val bd = bloomDir(table, pc)
@@ -3634,34 +3222,21 @@ object Snapshots {
   // Exactly-once streaming commits
   // ------------------------------------------------------------------
 
-  /** Stream watermarks recorded in a version's manifest:
-    * streamId → highest committed batch id. Every commit carries the
-    * head's marks forward (plus its own, for stream commits), so the
-    * HEAD manifest always holds every stream's latest watermark.
-    */
-  private def streamMarksAt(spark: SparkSession, table: String,
-      version: Long): Map[String, Long] =
-    marksOf(manifestLines(spark, table, version))
-
   /** Highest batch id this stream has committed — ONE head-manifest read
-    * (marks are carried forward by every commit), so the lookup is O(1)
-    * and immune to manifest vacuuming. Falls back to a downward scan of
-    * the still-retained manifests for tables whose history predates the
-    * carry-forward (legacy marks live only in the claiming commit's
-    * manifest). None when the stream never committed within retention.
+    * (every commit carries the head's stream marks forward, so the HEAD
+    * manifest holds every stream's latest watermark and the lookup is
+    * O(1) and immune to manifest vacuuming). Falls back to a downward
+    * scan of the still-retained manifests for tables whose history
+    * predates the carry-forward (legacy marks live only in the claiming
+    * commit's manifest). None when the stream never committed within
+    * retention.
     */
   def lastCommittedBatch(spark: SparkSession, table: String,
       streamId: String): Option[Long] = {
-    val head = currentVersion(spark, table)
-    if (head == 0) return None
-    streamMarksAt(spark, table, head).get(streamId).orElse {
-      val dir = manifestDir(table)
-      fs(spark, dir).listStatus(dir).map(_.getPath.getName)
-        .filter(_.endsWith(".manifest")).map(versionOf)
-        .filter(_ < head).sorted(Ordering[Long].reverse).iterator
-        .map(v => streamMarksAt(spark, table, v).get(streamId))
-        .collectFirst { case Some(bid) => bid }
-    }
+    val versions = retainedVersions(spark, table)
+    versions.reverseIterator
+      .map(v => manifestAt(spark, table, v).marks.get(streamId))
+      .collectFirst { case Some(bid) => bid }
   }
 
   /** EXACTLY-ONCE streaming append: the foreachBatch sink body for a
@@ -3677,78 +3252,43 @@ object Snapshots {
     * contract). Returns (head version, whether THIS call committed).
     */
   def commitStreamAppend(spark: SparkSession, batch0: DataFrame,
-      table: String, streamId: String, batchId: Long,
-      maxRetries: Int = 10): (Long, Boolean) = {
+      table: String, streamId: String, batchId: Long): (Long, Boolean) = {
     require(!streamId.contains("\n"), "streamId must be single-line")
     if (lastCommittedBatch(spark, table, streamId).exists(_ >= batchId))
       return (currentVersion(spark, table), false)
-    // fail-fast schema + constraint + tombstone checks before staging
-    // (see commit)
-    var validated = manifestLines(spark, table, currentVersion(spark, table))
-    val batch = fillWriteDefaults(batch0, schemaOf(validated))
-    evolveSchema(schemaOf(validated), batch.schema)
-    refuseTombstonedKeys(spark, table, validated, batch)
-    refuseDroppedColumns(batch, table, validated)
-    enforceChecks(batch, checksOf(validated), table, schemaOf(validated))
-    val stagedColmap = colmapOf(validated)
-    val stagedPart = partRawOf(validated)
-    val newFiles = stageData(spark, batch, table, stagedColmap,
-      partitionsOf(validated))
-    raceHookForTests()
-    val f = fs(spark, dataDir(table))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      val lines = manifestLines(spark, table, head)
-      // TOCTOU guard (see commit): re-validate against tombstones,
-      // constraints, or a schema evolution that landed after the
-      // pre-staging checks ran — any refusal reclaims the staged files
-      val evolved =
-        try {
-          if (tombstonesOf(lines) != tombstonesOf(validated) ||
-              tombstoneColOf(lines) != tombstoneColOf(validated))
-            refuseTombstonedKeys(spark, table, lines, batch)
-          if (checksOf(lines) != checksOf(validated))
-            enforceChecks(batch, checksOf(lines), table, schemaOf(lines))
-          refuseDroppedColumns(batch, table, lines)
-          if (colmapOf(lines) != stagedColmap)
-            throw new IllegalStateException(
-              s"stream append to $table raced a concurrent RENAME " +
-                "COLUMN — the staged files carry stale physical names")
-          if (partRawOf(lines) != stagedPart)
-            throw new IllegalStateException(
-              s"stream append to $table raced a partition-transform " +
-                "change — staged entries carry stale prefixes")
-          evolveSchema(schemaOf(lines), batch.schema)
-        } catch { case e: Throwable =>
-          newFiles.foreach(n => f.delete(new Path(dataDir(table), n), false))
-          throw e
-        }
-      validated = lines
-      val marks = marksOf(lines)
-      // head-mark fast path; the lastCommittedBatch fallback covers
-      // legacy tables whose mark predates the carry-forward
-      if (marks.get(streamId)
-          .orElse(lastCommittedBatch(spark, table, streamId))
-          .exists(_ >= batchId)) {
-        // a twin of this very batch won the race while we staged: our
-        // rows are already in the table once — never land them twice
-        newFiles.foreach(n => f.delete(new Path(dataDir(table), n), false))
-        return (head, false)
-      }
-      val content = contentOf(
-        Some(evolved),
-        marks + (streamId -> batchId), filesOf(lines) ++ newFiles,
-        "streamAppend", checksOf(lines),
-        tombstonesOf(lines), tombstoneColOf(lines), droppedOf(lines),
-        colmapOf(lines), partRawOf(lines))
-      if (claimManifest(spark, table, head + 1, content))
-        return (head + 1, true)
-      attempt += 1 // lost to an unrelated writer: re-read head and retry
+    val staged = stageBatch(spark, table, "stream append", batch0)
+    transact(spark, table, "streamAppend", staged.paths) { m =>
+      val schema = staged.revalidate(m)
+      // a twin of this very batch won the race while we staged: our rows
+      // are already in the table once — never land them twice
+      if (committedBatch(spark, table, m, streamId).exists(_ >= batchId))
+        Skip((m.version, false))
+      else Claim(m.copy(schema = Some(schema),
+        marks = m.marks + (streamId -> batchId),
+        files = m.files ++ staged.files), Nil, v => (v, true))
     }
-    throw new IllegalStateException(
-      s"stream commit $streamId/$batchId to $table failed after " +
-        s"$maxRetries attempts")
+  }
+
+  /** The stream's watermark at head `m` — the head-mark fast path, with
+    * [[lastCommittedBatch]] covering legacy tables whose mark predates
+    * the carry-forward.
+    */
+  private def committedBatch(spark: SparkSession, table: String,
+      m: Manifest, streamId: String): Option[Long] =
+    m.marks.get(streamId).orElse(lastCommittedBatch(spark, table, streamId))
+
+  /** Staged parquet files read back as a LOGICAL batch: the writers
+    * staged PHYSICAL names under `stagedColmap`.
+    */
+  private def readStaged(spark: SparkSession, table: String,
+      staged: Seq[String], stagedColmap: Map[String, String]): DataFrame = {
+    val read0 = spark.read.parquet(
+      staged.map(n => new Path(dataDir(table), n).toString): _*)
+    val physToLogical = stagedColmap.map(_.swap)
+    if (physToLogical.isEmpty) read0
+    else read0.withColumnsRenamed(physToLogical.filter {
+      case (p, l) => p != l && read0.columns.contains(p)
+    })
   }
 
   /** The claim half of the NATIVE streaming sink
@@ -3779,29 +3319,16 @@ object Snapshots {
   def commitStagedStreamAppend(spark: SparkSession, table: String,
       staged: Seq[String], stagedColmap: Map[String, String],
       streamId: String, batchId: Long,
-      stagedPartition: Option[String] = None,
-      maxRetries: Int = 10): (Long, Boolean) = {
+      stagedPartition: Option[String] = None): (Long, Boolean) = {
     require(!streamId.contains("\n"), "streamId must be single-line")
     if (staged.isEmpty) return (currentVersion(spark, table), false)
-    val f = fs(spark, dataDir(table))
-    def dropStaged(): Unit =
-      staged.foreach(n => f.delete(new Path(dataDir(table), n), false))
-    if (lastCommittedBatch(spark, table, streamId).exists(_ >= batchId)) {
-      dropStaged(); return (currentVersion(spark, table), false)
-    }
-    val paths = staged.map(n => new Path(dataDir(table), n).toString)
-    // the staged files hold PHYSICAL names; validation (and schema
-    // evolution) speak logical — read back through the writers' colmap
-    val physToLogical = stagedColmap.map(_.swap)
-    val read0 = spark.read.parquet(paths: _*)
-    val batch =
-      if (physToLogical.isEmpty) read0
-      else read0.withColumnsRenamed(physToLogical.filter {
-        case (p, l) => p != l && read0.columns.contains(p)
-      })
-    def validate(lines: Seq[String]): types.StructType =
-      try {
-        schemaOf(lines).foreach { s =>
+    lazy val batch = readStaged(spark, table, staged, stagedColmap)
+    transact(spark, table, "streamAppend",
+        staged.map(new Path(dataDir(table), _))) { m =>
+      if (committedBatch(spark, table, m, streamId).exists(_ >= batchId))
+        Skip((m.version, false)) // a twin won while we validated
+      else {
+        m.schema.foreach { s =>
           val missing = s.fields
             .filter(fl => fl.metadata.contains(CurrentDefaultKey) &&
               !batch.columns.contains(fl.name)).map(_.name)
@@ -3812,43 +3339,16 @@ object Snapshots {
               "select them explicitly (or sink via foreachBatch + " +
               "commitStreamAppend)")
         }
-        refuseTombstonedKeys(spark, table, lines, batch)
-        refuseDroppedColumns(batch, table, lines)
-        enforceChecks(batch, checksOf(lines), table, schemaOf(lines))
-        if (colmapOf(lines) != stagedColmap)
-          throw new IllegalStateException(
-            s"stream append to $table raced a concurrent RENAME COLUMN " +
-              "— the staged files carry stale physical names")
-        if (staged.exists(_.contains(PartPrefix)) &&
-            partRawOf(lines) != stagedPartition)
-          throw new IllegalStateException(
-            s"stream append to $table raced a partition-transform " +
-              "change — the staged entries carry stale dir prefixes")
-        evolveSchema(schemaOf(lines), batch.schema)
-      } catch { case e: Throwable => dropStaged(); throw e }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      val lines = manifestLines(spark, table, head)
-      val evolved = validate(lines)
-      val marks = marksOf(lines)
-      if (marks.get(streamId)
-          .orElse(lastCommittedBatch(spark, table, streamId))
-          .exists(_ >= batchId)) {
-        dropStaged(); return (head, false) // a twin won while we validated
+        refuseTombstonedKeys(spark, table, m, batch)
+        refuseDroppedColumns(batch, table, m)
+        enforceChecks(batch, m.checks, table, m.schema)
+        requireLayout(m, table, "stream append", Some(stagedColmap),
+          stagedPartition, staged.exists(_.contains(PartPrefix)))
+        Claim(m.copy(schema = Some(evolveSchema(m.schema, batch.schema)),
+          marks = m.marks + (streamId -> batchId),
+          files = m.files ++ staged), Nil, v => (v, true))
       }
-      if (claimManifest(spark, table, head + 1, contentOf(
-          Some(evolved), marks + (streamId -> batchId),
-          filesOf(lines) ++ staged, "streamAppend", checksOf(lines),
-          tombstonesOf(lines), tombstoneColOf(lines), droppedOf(lines),
-          colmapOf(lines), partRawOf(lines))))
-        return (head + 1, true)
-      attempt += 1
     }
-    dropStaged()
-    throw new IllegalStateException(
-      s"stream commit $streamId/$batchId to $table failed after " +
-        s"$maxRetries attempts")
   }
 
   /** GROUP-REPLACE commit — the protocol seat for STOCK Spark row-level
@@ -3874,70 +3374,36 @@ object Snapshots {
   def commitReplaceEntries(spark: SparkSession, table: String,
       replaced: Seq[String], staged: Seq[String],
       stagedColmap: Map[String, String],
-      stagedPartition: Option[String] = None,
-      maxRetries: Int = 10): Long = {
-    val f = fs(spark, dataDir(table))
-    def dropStaged(): Unit =
-      staged.foreach(n => f.delete(new Path(dataDir(table), n), false))
+      stagedPartition: Option[String] = None): Long = {
     if (replaced.isEmpty && staged.isEmpty)
       return currentVersion(spark, table) // nothing scanned, nothing written
     val replacedSet = replaced.toSet
-    def validate(lines: Seq[String]): Option[types.StructType] =
-      try {
-        if (colmapOf(lines) != stagedColmap)
-          throw new IllegalStateException(
-            s"row-level write to $table raced a concurrent RENAME " +
-              "COLUMN — the staged files carry stale physical names")
-        if (staged.exists(_.contains(PartPrefix)) &&
-            partRawOf(lines) != stagedPartition)
-          throw new IllegalStateException(
-            s"row-level write to $table raced a partition-transform " +
-              "change — the staged entries carry stale dir prefixes")
-        if (tombstonesOf(lines).nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"row-level write to $table raced a lazy DELETE — pending " +
-              "tombstones landed after the operation's scan")
-        if (staged.isEmpty) schemaOf(lines) // all scanned rows deleted
-        else {
-          val paths = staged.map(n => new Path(dataDir(table), n).toString)
-          val physToLogical = stagedColmap.map(_.swap)
-          val read0 = spark.read.parquet(paths: _*)
-          val batch =
-            if (physToLogical.isEmpty) read0
-            else read0.withColumnsRenamed(physToLogical.filter {
-              case (p, l) => p != l && read0.columns.contains(p)
-            })
-          refuseDroppedColumns(batch, table, lines)
-          enforceChecks(batch, checksOf(lines), table, schemaOf(lines))
-          Some(evolveSchema(schemaOf(lines), batch.schema))
-        }
-      } catch { case e: Throwable => dropStaged(); throw e }
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      val lines = manifestLines(spark, table, head)
-      val files = filesOf(lines)
-      val gone = replaced.filterNot(files.toSet)
-      if (gone.nonEmpty) {
-        dropStaged()
+    lazy val batch = readStaged(spark, table, staged, stagedColmap)
+    transact(spark, table, "replaceData",
+        staged.map(new Path(dataDir(table), _))) { m =>
+      val gone = replaced.filterNot(m.files.toSet)
+      if (gone.nonEmpty)
         throw new java.util.ConcurrentModificationException(
           s"row-level write to $table conflicts with a concurrent " +
             s"commit: ${gone.size} of the ${replaced.size} scanned " +
             "file(s) are no longer referenced at the head — re-run the " +
             "statement against the new snapshot")
-      }
-      val evolved = validate(lines)
-      if (claimManifest(spark, table, head + 1, contentOf(
-          evolved, marksOf(lines),
-          files.filterNot(replacedSet) ++ staged, "replaceData",
-          checksOf(lines), tombstonesOf(lines), tombstoneColOf(lines),
-          droppedOf(lines), colmapOf(lines), partRawOf(lines))))
-        return head + 1
-      attempt += 1
+      requireLayout(m, table, "row-level write", Some(stagedColmap),
+        stagedPartition, staged.exists(_.contains(PartPrefix)))
+      if (m.tombstones.nonEmpty)
+        throw new java.util.ConcurrentModificationException(
+          s"row-level write to $table raced a lazy DELETE — pending " +
+            "tombstones landed after the operation's scan")
+      val schema =
+        if (staged.isEmpty) m.schema // all scanned rows deleted
+        else {
+          refuseDroppedColumns(batch, table, m)
+          enforceChecks(batch, m.checks, table, m.schema)
+          Some(evolveSchema(m.schema, batch.schema))
+        }
+      claim(m.copy(schema = schema,
+        files = m.files.filterNot(replacedSet) ++ staged))
     }
-    dropStaged()
-    throw new IllegalStateException(
-      s"row-level replace on $table failed after $maxRetries attempts")
   }
 
   /** RESTORE: roll the table back to `toVersion`'s state as a NEW commit
@@ -3954,37 +3420,23 @@ object Snapshots {
     * stream data is a new stream id's job. Throws when `toVersion` was
     * vacuumed away. Returns the new head version.
     */
-  def commitRestore(spark: SparkSession, table: String, toVersion: Long,
-      maxRetries: Int = 10): Long = {
+  def commitRestore(spark: SparkSession, table: String,
+      toVersion: Long): Long = {
     require(toVersion >= 1, s"cannot restore to v$toVersion")
     require(hasVersion(spark, table, toVersion),
       s"version $toVersion of $table is not retained (vacuumed)")
-    val target = manifestLines(spark, table, toVersion)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      if (head == toVersion) return head // already that state
-      val headLines = manifestLines(spark, table, head)
+    val target = manifestAt(spark, table, toVersion)
+    transact(spark, table, "restore") { m =>
       // marks AND constraints carry from the pre-restore head: the undo
       // rewinds DATA, not ingestion state or declared policy (restored
       // rows predating a constraint are an operator decision — commits
-      // after the restore enforce as usual)
-      // the target's tombstones are DATA state — restored with its files
-      // (a rollback past a lazy delete resurrects; a rollback INTO a
-      // pending-tombstone state keeps those rows logically deleted)
-      // the dropped-name ledger is DATA state like tombstones: restored
-      // with the target's files (a pre-drop target legitimately has the
-      // column back; a post-drop target keeps its names refused)
-      if (claimManifest(spark, table, head + 1,
-          contentOf(schemaOf(target), marksOf(headLines), filesOf(target),
-            "restore", checksOf(headLines),
-            tombstonesOf(target), tombstoneColOf(target),
-            droppedOf(target), colmapOf(target), partRawOf(target))))
-        return head + 1
-      attempt += 1
+      // after the restore enforce as usual). The target's tombstones and
+      // dropped-name ledger are DATA state, restored with its files (a
+      // rollback past a lazy delete resurrects; a pre-drop target
+      // legitimately has the column back)
+      if (m.version == toVersion) Skip(m.version) // already that state
+      else claim(target.copy(marks = m.marks, checks = m.checks))
     }
-    throw new IllegalStateException(
-      s"restore of $table to v$toVersion failed after $maxRetries attempts")
   }
 
   /** SHALLOW CLONE: create `dst` as a ZERO-COPY snapshot of `src` at
@@ -4028,32 +3480,29 @@ object Snapshots {
       s"clone target $dst already exists (head v${currentVersion(spark, dst)})")
     require(new Path(src).toString != new Path(dst).toString,
       s"clone target equals source: $src")
-    val lines = manifestLines(spark, src, srcV)
+    val source = manifestAt(spark, src, srcV)
     val f = fs(spark, dataDir(src))
-    val refs = filesOf(lines).map { n =>
+    val refs = source.files.map { n =>
       // foreign = qualified URI or absolute path; a PARTITIONED relative
       // entry (`__gp=.../f.parquet`) is local and must qualify like a
       // bare name (two-arg Path resolves the subdir)
       if (n.contains(":/") || n.startsWith("/")) n
       else f.makeQualified(new Path(dataDir(src), n)).toString
     }
-    val tombs = tombstonesOf(lines)
-    if (tombs.nonEmpty) {
+    if (source.tombstones.nonEmpty) {
       val td = tombstoneDir(dst)
       val fd = fs(spark, td)
       fd.mkdirs(td)
-      tombs.foreach { n =>
+      source.tombstones.foreach { n =>
         org.apache.hadoop.fs.FileUtil.copy(f, new Path(tombstoneDir(src), n),
           fd, new Path(td, n), false, true,
           spark.sparkContext.hadoopConfiguration)
       }
     }
-    require(claimManifest(spark, dst, 1L,
-      contentOf(schemaOf(lines), marksOf(lines), refs, "clone",
-        checksOf(lines), tombs, tombstoneColOf(lines), droppedOf(lines),
-        colmapOf(lines), partRawOf(lines))),
-      s"clone target $dst already has a v1 manifest")
-    1L
+    transact(spark, dst, "clone") { m =>
+      require(m.version == 0, s"clone target $dst already has a v1 manifest")
+      claim(source.copy(files = refs))
+    }
   }
 
   /** IN-PLACE conversion of an existing parquet directory into a
@@ -4089,10 +3538,11 @@ object Snapshots {
       .filter(_.endsWith(".parquet")).sorted.toSeq
     require(files.nonEmpty, s"CONVERT TO SNAPSHOT: no .parquet files in $dir")
     val schema = spark.read.parquet(dir).schema
-    require(claimManifest(spark, dir, 1L,
-      contentOf(Some(schema), Map.empty, files, "convert")),
-      s"$dir claimed a v1 manifest concurrently")
-    (1L, files.size)
+    transact(spark, dir, "convert") { m =>
+      require(m.version == 0, s"$dir claimed a v1 manifest concurrently")
+      Claim(Manifest(schema = Some(schema), files = files), Nil,
+        v => (v, files.size))
+    }
   }
 
   /** Idempotent bulk file loading — `COPY INTO` (the Delta/Snowflake
@@ -4116,8 +3566,7 @@ object Snapshots {
     * unchanged head when nothing was new.
     */
   def commitCopyInto(spark: SparkSession, table: String, srcDir: String,
-      format: String = "parquet", force: Boolean = false,
-      maxRetries: Int = 10): (Long, Int, Long) = {
+      format: String = "parquet", force: Boolean = false): (Long, Int, Long) = {
     val fmt = format.toLowerCase(java.util.Locale.ROOT)
     require(fmt == "parquet" || fmt == "csv",
       s"COPY INTO supports FILEFORMAT parquet|csv, got $format")
@@ -4131,98 +3580,52 @@ object Snapshots {
     def markOf(uri: String) = s"copy:$uri"
     def pending(marks: Map[String, Long]): Seq[String] =
       if (force) listed else listed.filterNot(u => marks.contains(markOf(u)))
-    val head0 = currentVersion(spark, table)
-    val lines0 = if (head0 == 0) Nil else manifestLines(spark, table, head0)
-    val todo0 = pending(marksOf(lines0))
-    if (todo0.isEmpty) return (head0, 0, 0L)
-    def readSrc(uris: Seq[String]): DataFrame = {
-      val base = fmt match {
-        case "parquet" => spark.read.parquet(uris: _*)
-        case _ => spark.read.option("header", "true")
-          .option("inferSchema", "true").csv(uris: _*)
-      }
-      // up-cast shared columns whose LANDED type is narrower than the
-      // declared one (CSV inference reads 20 as int into a long column;
-      // a narrow parquet drop is the same case) — the batch lands in the
-      // declared type, and every OTHER mismatch still refuses in the
-      // commit loop's evolveSchema (COPY INTO is an append, not a
-      // schema-change side door). New columns pass through and evolve.
-      schemaOf(lines0) match {
-        case Some(s) =>
-          base.select(base.columns.toIndexedSeq.map { c =>
-            s.fields.find(_.name == c) match {
-              case Some(fld) if base.schema(c).dataType != fld.dataType &&
-                  widens(base.schema(c).dataType, fld.dataType) =>
-                org.apache.spark.sql.functions.col(c)
-                  .cast(fld.dataType).as(c)
-              case _ => org.apache.spark.sql.functions.col(c)
-            }
-          }: _*)
-        case _ => base
-      }
+    val head0 = headOf(spark, table)
+    val todo0 = pending(head0.marks)
+    if (todo0.isEmpty) return (head0.version, 0, 0L)
+    val base = fmt match {
+      case "parquet" => spark.read.parquet(todo0: _*)
+      case _ => spark.read.option("header", "true")
+        .option("inferSchema", "true").csv(todo0: _*)
     }
-    var validated = lines0
-    val batch = fillWriteDefaults(readSrc(todo0), schemaOf(validated))
-    evolveSchema(schemaOf(validated), batch.schema)
-    refuseTombstonedKeys(spark, table, validated, batch)
-    refuseDroppedColumns(batch, table, validated)
-    enforceChecks(batch, checksOf(validated), table, schemaOf(validated))
-    val rows = batch.count()
-    val stagedColmap = colmapOf(validated)
-    val stagedPart = partRawOf(validated)
-    val newFiles = stageData(spark, batch, table, stagedColmap,
-      partitionsOf(validated))
-    raceHookForTests()
-    val f = fs(spark, dataDir(table))
-    def dropStaged(): Unit =
-      newFiles.foreach(n => f.delete(new Path(dataDir(table), n), false))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, table)
-      val lines = manifestLines(spark, table, head)
-      val marks = marksOf(lines)
+    // up-cast shared columns whose LANDED type is narrower than the
+    // declared one (CSV inference reads 20 as int into a long column; a
+    // narrow parquet drop is the same case) — the batch lands in the
+    // declared type, and every OTHER mismatch still refuses in the
+    // commit loop's evolveSchema (COPY INTO is an append, not a
+    // schema-change side door). New columns pass through and evolve.
+    val src = head0.schema match {
+      case Some(s) =>
+        base.select(base.columns.toIndexedSeq.map { c =>
+          s.fields.find(_.name == c) match {
+            case Some(fld) if base.schema(c).dataType != fld.dataType &&
+                widens(base.schema(c).dataType, fld.dataType) =>
+              org.apache.spark.sql.functions.col(c).cast(fld.dataType).as(c)
+            case _ => org.apache.spark.sql.functions.col(c)
+          }
+        }: _*)
+      case _ => base
+    }
+    val staged = stageBatch(spark, table, "COPY INTO", src)
+    val rows = src.count()
+    transact(spark, table, "copyInto", staged.paths) { m =>
       // a racing COPY INTO of the same landing dir won while we staged:
       // if it loaded ANY of our files, re-landing this batch would
       // double-load those — drop the staged files and let the caller
       // re-run (the next run loads only what is still unmarked)
-      if (!force && pending(marks) != todo0) {
-        dropStaged()
-        require(pending(marks).isEmpty,
+      if (!force && pending(m.marks) != todo0) {
+        require(pending(m.marks).isEmpty,
           s"COPY INTO $table raced a concurrent load of $srcDir — " +
             "re-run to load the remaining files")
-        return (head, 0, 0L)
+        Skip((m.version, 0, 0L))
+      } else {
+        val schema = staged.revalidate(m)
+        val loadMarks = todo0.map(u => markOf(u) ->
+          sf.getFileStatus(new Path(u)).getLen).toMap
+        Claim(m.copy(schema = Some(schema), marks = m.marks ++ loadMarks,
+          files = m.files ++ staged.files), Nil, v => (v, todo0.size, rows))
       }
-      val evolved =
-        try {
-          if (tombstonesOf(lines) != tombstonesOf(validated) ||
-              tombstoneColOf(lines) != tombstoneColOf(validated))
-            refuseTombstonedKeys(spark, table, lines, batch)
-          if (checksOf(lines) != checksOf(validated))
-            enforceChecks(batch, checksOf(lines), table, schemaOf(lines))
-          refuseDroppedColumns(batch, table, lines)
-          if (colmapOf(lines) != stagedColmap)
-            throw new IllegalStateException(
-              s"COPY INTO $table raced a concurrent RENAME COLUMN — " +
-                "the staged files carry stale physical names; re-run")
-          if (partRawOf(lines) != stagedPart)
-            throw new IllegalStateException(
-              s"COPY INTO $table raced a partition-transform change — " +
-                "staged entries carry stale prefixes; re-run")
-          evolveSchema(schemaOf(lines), batch.schema)
-        } catch { case e: Throwable => dropStaged(); throw e }
-      validated = lines
-      val loadMarks = todo0.map(u => markOf(u) ->
-        sf.getFileStatus(new Path(u)).getLen).toMap
-      if (claimManifest(spark, table, head + 1,
-          contentOf(Some(evolved), marks ++ loadMarks,
-            filesOf(lines) ++ newFiles, "copyInto", checksOf(lines),
-            tombstonesOf(lines), tombstoneColOf(lines), droppedOf(lines),
-            colmapOf(lines), partRawOf(lines))))
-        return (head + 1, todo0.size, rows)
-      attempt += 1 // lost to an unrelated writer: re-read head and retry
     }
-    throw new IllegalStateException(
-      s"COPY INTO $table from $srcDir failed after $maxRetries attempts")
   }
 
   /** EXACTLY-ONCE replica maintenance: catch snapshot table `dst` up to
@@ -4258,7 +3661,7 @@ object Snapshots {
     * (fromVersion, syncedThroughVersion, mode).
     */
   def syncReplica(spark: SparkSession, src: String, dst: String,
-      keys: Seq[String], maxRetries: Int = 10): (Long, Long, String) = {
+      keys: Seq[String]): (Long, Long, String) = {
     import org.apache.spark.sql.functions._
     val sid = s"replica:${new Path(src).toString}"
     val srcHead = currentVersion(spark, src)
@@ -4266,66 +3669,48 @@ object Snapshots {
     if (srcHead <= from) return (from, srcHead, "noop")
     val precise = hasVersion(spark, src, from)
     if (precise && removedFiles(spark, src, from, srcHead).isEmpty &&
-        tombstonesOf(manifestLines(spark, src, from)) ==
-          tombstonesOf(manifestLines(spark, src, srcHead))) {
+        sameTombstones(spark, src, from, srcHead)) {
       commitStreamAppend(spark, incrementalRead(spark, src, from, srcHead),
-        dst, sid, srcHead, maxRetries)
+        dst, sid, srcHead)
       return (from, srcHead, "append")
     }
     val mode = if (precise) "feed" else "rebuild"
-    val f = fs(spark, dataDir(dst))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val head = currentVersion(spark, dst)
-      val lines = manifestLines(spark, dst, head)
-      val marks = marksOf(lines)
-      if (marks.get(sid).orElse(lastCommittedBatch(spark, dst, sid))
-          .exists(_ >= srcHead)) return (from, srcHead, "noop")
-      val srcSchema = read(spark, src, Some(srcHead)).schema
-      if (!precise || head == 0 || filesOf(lines).isEmpty) {
-        // rebuild: one full re-mirror of the source head (the replica
-        // lagged past retention, or is empty) — O(src) by definition
-        val state = read(spark, src, Some(srcHead))
-        val newFiles = stageData(spark, state, dst, Map.empty,
-          partitionsOf(lines))
-        if (claimManifest(spark, dst, head + 1,
-            contentOf(Some(state.schema), marks + (sid -> srcHead),
-              newFiles, "replicaSync", checksOf(lines),
-              partition = partRawOf(lines))))
-          return (from, srcHead, mode)
-        // lost the race: computed against a stale replica head — drop
-        // the orphans and recompute (single-writer replicas never hit
-        // this)
-        newFiles.foreach(n => f.delete(new Path(dataDir(dst), n), false))
-      } else {
-        // replica state evolves to the union of its own schema and the
-        // source's (an evolution step's feed carries the new columns);
-        // the feed applies as a file-granular CDC merge against the
-        // replica's OWN files — staged bytes ∝ churn, not replica size
-        val schema = evolveSchema(schemaOf(lines), srcSchema)
-        val changes = rowDiff(spark, src, from, srcHead, keys)
-          .filter(col("change_type") =!= "update_preimage")
-          .withColumn("_deleted", col("change_type") === "delete")
-          .drop("change_type")
-        val cow = cowApply(spark, dst, lines, schema,
-          conform(changes, types.StructType(schema.fields :+
-            types.StructField("_deleted", types.BooleanType, false))),
-          keys, deleteCol = Some("_deleted"))
-        if (claimManifest(spark, dst, head + 1,
-            contentOf(Some(schema), marks + (sid -> srcHead),
-              cow.carried ++ cow.newFiles, "replicaSync", checksOf(lines),
-              cow.tombstones, cow.tombstoneCol, droppedOf(lines),
-              colmapOf(lines), partRawOf(lines))))
-          return (from, srcHead, mode)
-        cow.newFiles.foreach(n =>
-          f.delete(new Path(dataDir(dst), n), false))
-        cow.stagedTombstones.foreach(n =>
-          f.delete(new Path(tombstoneDir(dst), n), false))
+    transact(spark, dst, "replicaSync") { m =>
+      if (committedBatch(spark, dst, m, sid).exists(_ >= srcHead))
+        Skip((from, srcHead, "noop"))
+      else {
+        val marks = m.marks + (sid -> srcHead)
+        val srcSchema = read(spark, src, Some(srcHead)).schema
+        val (next, staged) =
+          if (!precise || m.version == 0 || m.files.isEmpty) {
+            // rebuild: one full re-mirror of the source head (the
+            // replica lagged past retention, or is empty) — O(src) by
+            // definition; the new files carry no tombstones, ledger or
+            // colmap
+            val state = read(spark, src, Some(srcHead))
+            val files = stageData(spark, state, dst, Map.empty, m.partitions)
+            (m.copy(schema = Some(state.schema), files = files,
+              tombstones = Nil, dropped = Nil, colmap = Map.empty),
+              files.map(new Path(dataDir(dst), _)))
+          } else {
+            // replica state evolves to the union of its own schema and
+            // the source's (an evolution step's feed carries the new
+            // columns); the feed applies as a file-granular CDC merge
+            // against the replica's OWN files — staged bytes ∝ churn,
+            // not replica size
+            val schema = evolveSchema(m.schema, srcSchema)
+            val changes = rowDiff(spark, src, from, srcHead, keys)
+              .filter(col("change_type") =!= "update_preimage")
+              .withColumn("_deleted", col("change_type") === "delete")
+              .drop("change_type")
+            cowApply(spark, dst, m, schema,
+              conform(changes, types.StructType(schema.fields :+
+                types.StructField("_deleted", types.BooleanType, false))),
+              keys, deleteCol = Some("_deleted"))
+          }
+        Claim(next.copy(marks = marks), staged, _ => (from, srcHead, mode))
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"replica sync $src -> $dst failed after $maxRetries attempts")
   }
 
   /** Delete data files referenced by NO manifest ≤ the current head and
@@ -4357,34 +3742,24 @@ object Snapshots {
       keepVersions: Int, minAgeMs: Long, dryRun: Boolean): Seq[String] = {
     val head = currentVersion(spark, table)
     val keepFrom = math.max(1L, head - keepVersions + 1)
-    val referenced = (keepFrom to head)
-      .flatMap(v => filesAt(spark, table, v)).toSet
+    val kept = (keepFrom to head).map(manifestAt(spark, table, _))
+    val referenced = kept.flatMap(_.files).toSet
     val dd = dataDir(table)
     val f = fs(spark, dd)
     if (!f.exists(dd)) return Nil
     val now = System.currentTimeMillis()
-    // RECURSIVE census keyed by data-dir-relative path: partitioned
-    // entries (`__gp=.../f.parquet`) reconcile exactly like flat ones;
-    // sidecar trees (underscore/dot components) are never touched
-    val ddQ = f.makeQualified(dd).toString + "/"
-    val deleted = walkFiles(f, dd).flatMap { st =>
-        val rel = f.makeQualified(st.getPath).toString.stripPrefix(ddQ)
-        if (st.isFile && !rel.split('/').exists(c =>
-            (c.startsWith("_") && !c.startsWith(PartPrefix)) ||
-              c.startsWith(".")) &&
-          now - st.getModificationTime >= minAgeMs)
-          Some((st.getPath, rel))
-        else None
-      }.filterNot { case (_, rel) => referenced.contains(rel) }
-      .map { case (p, rel) => if (!dryRun) f.delete(p, false); rel }
+    val deleted = dataFileCensus(f, dd)
+      .filter { case (_, rel, st) =>
+        now - st.getModificationTime >= minAgeMs && !referenced.contains(rel)
+      }
+      .map { case (p, rel, _) => if (!dryRun) f.delete(p, false); rel }
     // tombstone sidecars age out exactly like data files: unreferenced by
     // any retained manifest (materialized, or their version expired)
     val td = tombstoneDir(table)
     val tombsDeleted =
       if (!f.exists(td)) Nil
       else {
-        val referencedTombs = (keepFrom to head)
-          .flatMap(v => tombstonesOf(manifestLines(spark, table, v))).toSet
+        val referencedTombs = kept.flatMap(_.tombstones).toSet
         f.listStatus(td).filter(_.isFile)
           .filter(s => now - s.getModificationTime >= minAgeMs)
           .map(_.getPath).filterNot(p => referencedTombs.contains(p.getName))
@@ -4394,31 +3769,19 @@ object Snapshots {
     // the new retention floor must stay resolvable after its delta-chain
     // bases vanish: when keepFrom's physical manifest is delta-encoded
     // and no checkpoint exists yet, write one (idempotent content — the
-    // resolved canonical lines) BEFORE deleting anything below it
+    // resolved canonical manifest) BEFORE deleting anything below it
     if (keepFrom > 1 && head >= keepFrom) {
-      val cp = checkpointPath(table, keepFrom)
-      val mf = fs(spark, cp)
-      if (!mf.exists(cp)) {
-        val canonical = manifestLines(spark, table, keepFrom)
-        val raw = {
-          val in = mf.open(manifestPath(table, keepFrom))
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        }
-        if (raw.exists(_.startsWith(BaseHeader))) {
-          val tmp = new Path(manifestDir(table),
-            s".tmp-${java.util.UUID.randomUUID}")
-          val out = mf.create(tmp, true)
-          try out.write(canonical.mkString("\n").getBytes("UTF-8"))
-          finally out.close()
-          if (!mf.rename(tmp, cp)) mf.delete(tmp, false)
-        }
-      }
+      val mdir = Manifest.dir(table)
+      val mf = fs(spark, mdir)
+      if (!mf.exists(Manifest.checkpointPath(table, keepFrom)) &&
+          Manifest.isDelta(mf, table, keepFrom))
+        writeAtomic(mf, mdir, Manifest.checkpointPath(table, keepFrom),
+          kept.head.render)
     }
     val tableKey = new Path(table).toString
     (1L until keepFrom).foreach { v =>
-      f.delete(manifestPath(table, v), false)
-      f.delete(checkpointPath(table, v), false)
+      f.delete(Manifest.path(table, v), false)
+      f.delete(Manifest.checkpointPath(table, v), false)
       // expired versions must READ as expired: drop their cached
       // resolutions, or filesAt/time-travel would serve vacuumed state
       resolvedManifests.remove((tableKey, v))

@@ -139,6 +139,13 @@ class ManifestGoldenSpec extends AnyFunSuite {
     assert(golden("flat").map(_._1).contains("v00000016.checkpoint"))
   }
 
+  test("every golden manifest and checkpoint round-trips byte for byte") {
+    ManifestGoldens.Tables.flatMap(golden).foreach { case (n, text) =>
+      assert(graft.warehouse.Manifest.parse(text).render == text,
+        s"$n does not round-trip")
+    }
+  }
+
   test("replaying the script writes the golden manifests (up to #ts and file UUIDs)") {
     val root = Files.createTempDirectory("graft_goldens_replay")
     ManifestGoldens.script(spark, root.toString)
