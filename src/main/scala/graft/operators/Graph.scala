@@ -107,7 +107,9 @@ object Graph {
     */
   def coOccurrenceEdges(df: DataFrame, groupCol: String, itemCol: String): DataFrame = {
     val it = col("it")
-    df.groupBy(col(groupCol).as("g"))
+    // a NULL group shares nothing: the self-join form equi-joined on the
+    // group, and NULL = NULL never matched
+    df.filter(col(groupCol).isNotNull).groupBy(col(groupCol).as("g"))
       .agg(sort_array(collect_list(col(itemCol))).as("it"))
       .select(explode(flatten(transform(it, (x, i) =>
         transform(filter(slice(it, i + lit(2), size(it)), y => y > x),

@@ -18,7 +18,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * CONTRACT (holds by construction for degree-oriented adjacency lists:
   * `sort_array(collect_list(v))` over distinct (u, v) edges): both inputs
   * ascending-sorted, no duplicates, no null elements. Under it the merge
-  * count equals `size(array_intersect(a, b))` exactly.
+  * count equals `size(array_intersect(a, b))` exactly. Arrays typed
+  * `containsNull = true` (every array read back from parquet) are
+  * accepted, and a null element in one fails the query: the merge reads
+  * raw `getLong`/`getInt`, where a null would silently count as 0.
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -29,26 +32,26 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   private def elemType: DataType =
     left.dataType.asInstanceOf[ArrayType].elementType
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    // containsNull=false is the statically-checkable slice of the sorted
-    // duplicate-free contract: eval/codegen read elements via raw
-    // getLong/getInt, so a null element would silently count as 0 —
-    // refuse at analysis instead (collect_list-built adjacency lists are
-    // containsNull=false by construction; anything else is a misuse)
+  /** Whether `e`'s elements may be null, so eval must check them. */
+  private def mayHoldNull(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].containsNull
+
+  override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(lt, false), ArrayType(rt, false))
+      case (ArrayType(lt, _), ArrayType(rt, _))
           if lt == rt && (lt == LongType || lt == IntegerType) =>
         TypeCheckResult.TypeCheckSuccess
       case _ => TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires two array<int>|array<bigint> arguments " +
-          s"of the same type with non-nullable elements, got " +
-          s"${left.dataType.sql} and ${right.dataType.sql}")
+          s"of the same type, got ${left.dataType.sql} and " +
+          s"${right.dataType.sql}")
     }
-  }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    if (mayHoldNull(left)) SortedIntersectCount.requireNoNull(x)
+    if (mayHoldNull(right)) SortedIntersectCount.requireNoNull(y)
     val (nx, ny) = (x.numElements(), y.numElements())
     var (i, j) = (0, 0)
     var c = 0L
@@ -73,7 +76,19 @@ case class SortedIntersectCount(left: Expression, right: Expression)
       val xv = ctx.freshName("xv")
       val yv = ctx.freshName("yv")
       val c = ctx.freshName("c")
+      def nullCheck(arr: String, e: Expression): String =
+        if (!mayHoldNull(e)) ""
+        else {
+          val k = ctx.freshName("k")
+          s"""for (int $k = 0; $k < $arr.numElements(); $k++) {
+             |  if ($arr.isNullAt($k)) {
+             |    throw new IllegalArgumentException("${SortedIntersectCount.NullElement}");
+             |  }
+             |}""".stripMargin
+        }
       s"""
+         |${nullCheck(a, left)}
+         |${nullCheck(b, right)}
          |int $nx = $a.numElements();
          |int $ny = $b.numElements();
          |int $i = 0; int $j = 0; long $c = 0L;
@@ -91,4 +106,18 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCount =
     copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCount {
+  val NullElement: String =
+    "sorted_intersect_count: null array element (the inputs must be " +
+      "sorted, duplicate-free and null-free)"
+
+  def requireNoNull(a: ArrayData): Unit = {
+    var i = 0
+    while (i < a.numElements()) {
+      if (a.isNullAt(i)) throw new IllegalArgumentException(NullElement)
+      i += 1
+    }
+  }
 }

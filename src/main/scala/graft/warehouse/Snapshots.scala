@@ -1,7 +1,7 @@
 package graft.warehouse
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types
 
 /** Minimal snapshot-isolation commit protocol over plain parquet — the
@@ -54,7 +54,8 @@ import org.apache.spark.sql.types
 object Snapshots {
 
   /** Test-only race-injection seam: runs between a commit's staging step
-    * and its claim loop, where a concurrent writer's commit can land.
+    * and its claim (an append's, or each DELETE/UPDATE attempt's), where
+    * a concurrent writer's commit can land.
     * Specs use it to interleave a lazy delete / ADD CONSTRAINT
     * deterministically and prove the claim loop re-validates against the
     * moved head. A no-op in production.
@@ -1971,14 +1972,59 @@ object Snapshots {
       graft.operators.Layout.canonUri(u), new Path(u).getName)).toSet
   }
 
+  /** Whether `df` is a deterministic plan over rows already on the
+    * driver (every leaf a `LocalRelation`, as in a batch built from
+    * local rows): re-running it gives the same rows and reads no file,
+    * and collecting it usually runs no Spark job.
+    */
+  private def isLocal(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.analyzed
+    plan.deterministic && plan.collectLeaves().forall(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+  }
+
+  /** The distinct rows of `df` in ONE Spark job with no shuffle: each
+    * task dedups its own partition and ships at most `cap` + 1 rows, the
+    * driver dedups the union; a local plan ([[isLocal]]) is collected
+    * directly, usually with no job. A `distinct()` would add an exchange (a
+    * second job under AQE) to dedup what is small enough to dedup on
+    * the driver: probed file names, a bounded key list. More than `cap`
+    * rows back means the true count is more than `cap` too.
+    */
+  private def distinctRows(df: DataFrame, cap: Int = Int.MaxValue): Seq[Row] =
+    if (isLocal(df)) df.collect().toSeq.distinct
+    else df.mapPartitions { it =>
+      val seen = scala.collection.mutable.LinkedHashSet.empty[Row]
+      while (it.hasNext && seen.size <= cap) seen += it.next()
+      seen.iterator
+    }(org.apache.spark.sql.Encoders.row(df.schema)).collect().toSeq.distinct
+
+  /** `c IN vals` as ONE set-lookup expression, the form the optimizer
+    * gives a long IN-list anyway and the parquet scan pushes down like
+    * one. `isInCollection` builds an n-child `In` that every analyzer
+    * rule walks: about 40 ms per frame at a thousand keys on a 4-core
+    * machine. `vals` must
+    * be external values of `dt`, the type `c` has where it is filtered.
+    */
+  private def inSet(c: String, dt: types.DataType, vals: Seq[Any]): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(dt)
+    ColumnBridge.column(org.apache.spark.sql.catalyst.expressions.InSet(
+      ColumnBridge.expression(org.apache.spark.sql.functions.col(c)),
+      vals.map(toCatalyst).toSet))
+  }
+
   /** File-granular copy-on-write apply — the shared engine of
     * [[commitMerge]] and [[syncReplica]]'s feed transport: stage only
     * the files that PHYSICALLY hold a key the change set touches,
     * carry every other file into the new manifest by name.
     *
-    *   1. probe: ONE scan of the version's files, semi-joined against
-    *      the (bounded, broadcast) touched keys, projecting
-    *      `input_file_name()` — the same recipe [[commitDelete]] uses.
+    *   1. probe: ONE scan of the version's files, filtered on the
+    *      touched keys (a key set for a single-column key, a broadcast
+    *      semi-join otherwise), projecting `input_file_name()`
+    *      and deduped per task ([[distinctRows]]) — the same recipe
+    *      [[commitDelete]] uses.
     *      Only the key columns are read (column pruning), and when the
     *      table carries a `_graft_stats` manifest covering the probe
     *      key, the scanned candidate set is itself stats-pruned
@@ -1987,7 +2033,11 @@ object Snapshots {
     *   2. rewrite: the affected slice, tombstone-filtered and conformed
     *      to the evolved schema, merged with the changes (upserts
     *      replace, `deleteCol`-flagged keys drop) — staged bytes are
-    *      O(churned files + batch), never O(table);
+    *      O(churned files + batch), never O(table). A single-column
+    *      key's set doubles as the anti-join, so a MERGE runs three
+    *      jobs (key collect, probe, staged write), and two when the
+    *      change set is a batch of local rows, whose keys collect with
+    *      no job;
     *   3. tombstones: pending tombstone headers CARRY forward, except
     *      keys the change set re-asserts — those files are forced into
     *      the affected set (their dead rows materialize in the rewrite)
@@ -2013,10 +2063,15 @@ object Snapshots {
     // pass consumes it several times — key collect/probe, the merge, the
     // tombstone re-assert legs — and in feed mode the lazy plan is a
     // whole rowDiff join that must not re-execute per consumer. The
-    // checkpoint also cuts lineage to an in-memory RDD, which the
-    // input_file_name() probes require (they refuse plans carrying a
-    // second file source).
-    val changes = changes0.localCheckpoint(true)
+    // checkpoint is LAZY: its first consumer (the key collect below, for
+    // single-column keys) materializes it inside its own job. It also
+    // cuts lineage to an in-memory RDD, which the input_file_name()
+    // probes require (they refuse plans carrying a second file source).
+    // A deterministic batch of local rows is already materialized,
+    // holds no file source, and gives up its keys with no job: it is
+    // used as is.
+    val changes =
+      if (isLocal(changes0)) changes0 else changes0.localCheckpoint(false)
     val upserts = deleteCol match {
       case None => changes
       case Some(dc) => changes.filter(!col(dc)).drop(dc)
@@ -2027,15 +2082,17 @@ object Snapshots {
       return (m.copy(schema = Some(schema), files = staged, tombstones = Nil),
         dataPaths(staged))
     }
-    // single-column keys (the common case) probe via a literal IN-list
-    // when the touch-set is bounded: the predicate pushes into the
-    // parquet scan (row-group min/max skipping applies) and no second
-    // frame ever joins the probe — fastVals is None past the cap or for
-    // composite keys, falling back to the broadcast semi-join.
+    // single-column keys (the common case) probe via a key set when the
+    // touch-set is bounded: the predicate pushes into the
+    // parquet scan (row-group min/max skipping applies), no second
+    // frame ever joins the probe, and the rewrite's anti-join is a
+    // filter on the same list — fastVals is None past the cap or for
+    // composite keys, falling back to the broadcast semi-join and
+    // Merge's anti-join.
     val fastVals: Option[Seq[Any]] =
       if (keys.size == 1)
-        Some(changes.select(col(keys.head)).na.drop().distinct()
-            .limit(MaxPruneKeys + 1).collect().map(_.get(0)).toSeq)
+        Some(distinctRows(changes.select(col(keys.head)).na.drop(),
+            MaxPruneKeys).map(_.get(0)))
           .filter(_.size <= MaxPruneKeys)
       else None
     lazy val touched = changes.select(keys.map(col): _*).distinct()
@@ -2064,12 +2121,21 @@ object Snapshots {
       else Some(readWithSchema(spark, table, cand, m.schema, colmap)
         .join(broadcast(frame), on, "left_semi")
         .select(input_file_name().as("file")))
+    val keyType = schema(keys.head).dataType
     val probeT = fastVals match {
       case Some(vals) =>
         if (candT.isEmpty || vals.isEmpty) None
-        else Some(readWithSchema(spark, table, candT, m.schema, colmap)
-          .filter(col(keys.head).isInCollection(vals))
-          .select(input_file_name().as("file")))
+        else {
+          // a set lookup needs the key's type in the files, as the head
+          // declares it, to be the change set's: a legacy head declares
+          // none, and a widening MERGE changes it
+          val sameType = m.schema.exists(_.fields.exists(f =>
+            f.name == keys.head && f.dataType == keyType))
+          Some(readWithSchema(spark, table, candT, m.schema, colmap)
+            .filter(if (sameType) inSet(keys.head, keyType, vals)
+              else col(keys.head).isInCollection(vals))
+            .select(input_file_name().as("file")))
+        }
       case None => probeOf(candT, touched, keys)
     }
     val (candR, probeR) = reasserted match {
@@ -2082,7 +2148,7 @@ object Snapshots {
     val affected = (probeT.toSeq ++ probeR.toSeq)
       .reduceOption(_ unionByName _)
       .map(p => probedEntries(spark, table, files,
-        p.distinct().collect().map(_.getString(0))))
+        distinctRows(p).map(_.getString(0))))
       .getOrElse(Set.empty[String])
     val carried = files.filterNot(affected)
     val merged =
@@ -2091,10 +2157,17 @@ object Snapshots {
         val affState = conform(applyTombstones(spark, table, m,
           readWithSchema(spark, table, files.filter(affected),
             m.schema, colmap)), schema)
-        deleteCol match {
-          case None =>
+        (fastVals, deleteCol) match {
+          // the touched keys are already on the driver: the anti-join
+          // is a filter, with no broadcast job. NULL keys never match
+          // (as in the equi-join), so NULL-key target rows survive.
+          case (Some(vals), _) =>
+            affState.filter(col(keys.head).isNull ||
+                !inSet(keys.head, keyType, vals))
+              .unionByName(upserts)
+          case (None, None) =>
             graft.operators.Merge.upsert(affState, changes, keys)
-          case Some(dc) =>
+          case (None, Some(dc)) =>
             graft.operators.Merge.applyChanges(affState, changes, keys, dc)
         }
       }
@@ -2236,7 +2309,6 @@ object Snapshots {
       // curve-adjacent files, not the table
       pruneByPredicateStats(spark, table, predicate, m.schema, m.files)
     }) { (m, aff) =>
-      val updated = aff.filter(predicate).count()
       // when(pred, new).otherwise(old): FALSE and NULL predicates both
       // keep the old value — exactly SQL UPDATE's row selection
       val rewritten = aff.select(aff.columns.toIndexedSeq.map { c =>
@@ -2251,7 +2323,7 @@ object Snapshots {
       // updated rows are the only new data — they must still satisfy
       // every declared CHECK before a manifest claims them
       enforceChecks(rewritten, m.checks, table, m.schema)
-      (rewritten, updated)
+      rewritten
     }
   }
 
@@ -2261,8 +2333,7 @@ object Snapshots {
       import org.apache.spark.sql.functions.{coalesce, lit}
       // NULL-safe keep: NOT(NULL) is NULL and would silently drop rows
       // whose predicate is undecided — SQL DELETE keeps them
-      (aff.filter(!coalesce(predicate, lit(false))),
-        aff.filter(predicate).count())
+      aff.filter(!coalesce(predicate, lit(false)))
     }
 
   /** Predicate copy-on-write at FILE granularity, shared by DELETE and
@@ -2270,26 +2341,29 @@ object Snapshots {
     * driver-side — key lists via [[pruneByKeyVals]], predicates via
     * [[pruneByPredicateStats]]; it may also refuse) with the predicate
     * pushed into the parquet scan finds the files physically holding a
-    * matching row. Only those rewrite: `rewrite` maps their slice to
-    * (rows to re-land, rows changed). Every other file carries by name.
-    * Like [[commitMerge]], the result depends on the head it was
-    * computed against, so a lost claim reclaims the rewrite and
-    * recomputes — concurrent writers serialize instead of losing rows.
-    * (head, 0) when no file holds a matching row.
+    * matching row. Only those rewrite: `rewrite` maps their slice to the
+    * rows to re-land. Every other file carries by name. Like
+    * [[commitMerge]], the result depends on the head it was computed
+    * against, so a lost claim reclaims the rewrite and recomputes —
+    * concurrent writers serialize instead of losing rows. (head, 0)
+    * when no file holds a matching row.
     *
     * The slice is read under the DECLARED schema (a rewritten
     * pre-evolution file re-lands with the new columns as NULLs, never
     * narrowing the table) and from the APPLIED view: already-tombstoned
     * rows neither count nor re-land (partial materialization), while
-    * untouched files keep relying on the carried tombstone headers. It
-    * is materialized ONCE — the count and the staged rewrite both
-    * consume it.
+    * untouched files keep relying on the carried tombstone headers. The
+    * rows changed (predicate TRUE) are counted by an `Observation` on
+    * the slice, so the count rides the first job that reads it — the
+    * staged write, or an UPDATE's CHECK pass over the same rows — and a
+    * DELETE or UPDATE runs two jobs: probe and staged write. Each
+    * attempt observes afresh, so a retry reports its own count.
     */
   private def rewriteWhere(spark: SparkSession, table: String, op: String,
       predicate: Column, candidates: Manifest => Seq[String])(
-      rewrite: (Manifest, DataFrame) => (DataFrame, Long)): (Long, Long) =
+      rewrite: (Manifest, DataFrame) => DataFrame): (Long, Long) =
     transact(spark, table, op) { m =>
-      import org.apache.spark.sql.functions.input_file_name
+      import org.apache.spark.sql.functions.{count_if, input_file_name}
       if (m.version == 0) Skip((0L, 0L))
       else {
         val cand = candidates(m)
@@ -2297,20 +2371,29 @@ object Snapshots {
         val affected =
           if (cand.isEmpty) Set.empty[String]
           else probedEntries(spark, table, m.files,
-            readWithSchema(spark, table, cand, m.schema, m.colmap)
+            distinctRows(readWithSchema(spark, table, cand, m.schema,
+                m.colmap)
               .filter(predicate)
-              .select(input_file_name().as("file")).distinct()
-              .collect().map(_.getString(0)))
+              .select(input_file_name().as("file"))).map(_.getString(0)))
         if (affected.isEmpty) Skip((m.version, 0L))
         else {
+          val changed = org.apache.spark.sql.Observation()
           val aff = applyTombstones(spark, table, m,
             readWithSchema(spark, table, m.files.filter(affected), m.schema,
               m.colmap))
-            .localCheckpoint(true)
-          val (out, changed) = rewrite(m, aff)
-          val staged = stageData(spark, out, table, m.colmap, m.partitions)
+            .observe(changed, count_if(predicate).as("n"))
+          val staged = stageData(spark, rewrite(m, aff), table, m.colmap,
+            m.partitions)
+          val n = changed.get.get("n") match {
+            case Some(c: Long) => c
+            // the optimizer proved the rewrite empty (a DELETE of every
+            // row: the keep filter folds to false) and pruned the
+            // observed slice with it
+            case _ => aff.filter(predicate).count()
+          }
+          raceHookForTests()
           Claim(m.copy(files = m.files.filterNot(affected) ++ staged),
-            staged.map(new Path(dataDir(table), _)), v => (v, changed))
+            staged.map(new Path(dataDir(table), _)), v => (v, n))
         }
       }
     }
@@ -2389,7 +2472,10 @@ object Snapshots {
     * small-file debt, never the table, so it can run after every
     * streaming burst where [[compactData]]'s full rewrite could not.
     * Byte census is one driver-side `listStatus` of the data dir
-    * (O(files) metadata, zero data reads for the decision).
+    * (O(files) metadata, zero data reads for the decision). Packing
+    * COALESCES the scan's partitions into at most that many outputs:
+    * no shuffle, so the pack is one Spark job, and each packed file
+    * keeps its input rows' order.
     *
     * Pending lazy-delete tombstones CARRY FORWARD: the rewritten slice
     * materializes its share (rows filtered out of the packed output),
@@ -2420,7 +2506,7 @@ object Snapshots {
         // physically); carried files keep relying on the carried headers
         val packed = applyTombstones(spark, table, m,
           readWithSchema(spark, table, small, m.schema, m.colmap))
-          .repartition(nOut)
+          .coalesce(nOut)
         val staged = stageData(spark, packed, table, m.colmap, m.partitions)
         // PARTIAL pack: carried files may still hold pre-drop values, so
         // the dropped-name ledger carries (unlike the full rewrite above)

@@ -1,0 +1,130 @@
+package graft
+
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, concat, lit}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.warehouse.Snapshots
+
+/** Pins how many Spark jobs each copy-on-write commit runs on a table
+  * with no stats sidecar and no tombstones. Job count is the main cost
+  * of a commit at small scale (ROADMAP's cost fit), so a change that
+  * adds a shuffle, an eager checkpoint or a recount to these paths
+  * fails here before it shows in the benchmark.
+  */
+class CommitJobsSpec extends AnyFunSuite {
+  import SparkTest._
+  import spark.implicits._
+
+  private val Sentinel = "graft.commitJobsSpec.sentinel"
+
+  /** `body`'s result and the Spark jobs it started. A one-task RDD job
+    * tagged by a local property runs before and after `body`; listener
+    * events arrive in order, so the jobs between the two sentinels are
+    * exactly `body`'s, whatever earlier work was still queued.
+    */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val starts = new LinkedBlockingQueue[java.lang.Boolean]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        starts.put(Option(js.properties).exists(_.getProperty(Sentinel) != null))
+    }
+    def sentinel(): Unit = {
+      sc.setLocalProperty(Sentinel, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(Sentinel, null)
+    }
+    /** Jobs started before the next sentinel. */
+    def untilSentinel(): Int = {
+      var n = 0
+      var done = false
+      while (!done) {
+        val s = starts.poll(30, TimeUnit.SECONDS)
+        assert(s != null, "the sentinel job's start event never arrived")
+        if (s) done = true else n += 1
+      }
+      n
+    }
+    sc.addSparkListener(l)
+    try {
+      sentinel()
+      untilSentinel()
+      val r = body
+      sentinel()
+      (r, untilSentinel())
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Six one-file appends of (id, v): ids 0..59, ten per file. */
+  private def table(): String = {
+    val t = java.nio.file.Files.createTempDirectory("graft_jobs").toString + "/t"
+    (0 until 6).foreach { f =>
+      Snapshots.commitAppend(spark,
+        (f * 10L until f * 10L + 10L).map(i => (i, s"v$i")).toDF("id", "v")
+          .coalesce(1), t)
+    }
+    t
+  }
+
+  private def rows(t: String): Map[Long, String] =
+    Snapshots.read(spark, t).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  test("commitAppend runs one job: the staged write") {
+    val t = table()
+    val (_, n) = jobsOf(Snapshots.commitAppend(spark,
+      Seq((100L, "a"), (101L, "b")).toDF("id", "v"), t))
+    assert(n == 1, s"append ran $n jobs")
+    assert(rows(t).size == 62)
+  }
+
+  test("commitMerge on a single-column key runs at most three jobs, two for local rows") {
+    val t = table()
+    // two keys in two existing files update, two are new
+    val local = Seq((3L, "u3"), (25L, "u25"), (200L, "n200"), (201L, "n201"))
+      .toDF("id", "v")
+    val (_, n) = jobsOf(Snapshots.commitMerge(spark, local, t, Seq("id")))
+    assert(n <= 2, s"merge of local rows ran $n jobs; want <= 2 (probe, write)")
+    val r = rows(t)
+    assert(r.size == 62 && r(3L) == "u3" && r(25L) == "u25" &&
+      r(200L) == "n200" && r(4L) == "v4")
+    // only the two files holding a batch key were rewritten
+    assert(Snapshots.filesAt(spark, t, 7L).toSet
+      .intersect(Snapshots.filesAt(spark, t, 6L).toSet).size == 4)
+    // a computed batch is checkpointed inside its key collect's job
+    val computed = spark.range(58L, 62L)
+      .select(col("id"), concat(lit("c"), col("id").cast("string")).as("v"))
+    val (_, n2) = jobsOf(Snapshots.commitMerge(spark, computed, t, Seq("id")))
+    assert(n2 <= 3, s"merge ran $n2 jobs; want <= 3 (key collect, probe, write)")
+    val r2 = rows(t)
+    assert(r2.size == 64 && r2(59L) == "c59" && r2(61L) == "c61" &&
+      r2(57L) == "v57")
+  }
+
+  test("commitDelete, commitDeleteWhere and commitUpdateWhere run at most two jobs") {
+    val t = table()
+    val ((_, d1), n1) = jobsOf(
+      Snapshots.commitDelete(spark, t, Seq(1L, 2L, 999L), "id"))
+    assert(d1 == 2L && n1 <= 2, s"delete removed $d1 rows in $n1 jobs")
+    val ((_, d2), n2) = jobsOf(
+      Snapshots.commitDeleteWhere(spark, t, col("id").between(40L, 44L)))
+    assert(d2 == 5L && n2 <= 2, s"delete-where removed $d2 rows in $n2 jobs")
+    val ((_, u), n3) = jobsOf(Snapshots.commitUpdateWhere(spark, t,
+      col("id") >= 55L, Seq("v" -> lit("hot"))))
+    assert(u == 5L && n3 <= 2, s"update changed $u rows in $n3 jobs")
+    val r = rows(t)
+    assert(r.size == 53 && !r.contains(1L) && !r.contains(42L) &&
+      r(55L) == "hot" && r(54L) == "v54")
+  }
+
+  test("compactSmallFiles runs one job: the packed write") {
+    val t = table()
+    val (v, n) = jobsOf(Snapshots.compactSmallFiles(spark, t, minSmall = 4))
+    assert(v.nonEmpty && n == 1, s"pack committed $v in $n jobs")
+    assert(Snapshots.filesAt(spark, t, v.get).size == 1)
+    assert(rows(t).size == 60)
+  }
+}

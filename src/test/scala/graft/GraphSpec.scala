@@ -89,6 +89,58 @@ class GraphSpec extends AnyFunSuite {
     assert(e == Map((1L, 2L) -> 2L, (1L, 3L) -> 1L, (2L, 3L) -> 1L))
   }
 
+  test("coOccurrenceEdges: a NULL group shares nothing, as in the equi-join form") {
+    val df = Seq[(Option[Long], Long)](
+      (None, 1L), (None, 2L), (None, 3L), // NULL group: no pairs
+      (Some(10L), 1L), (Some(10L), 2L)
+    ).toDF("g", "item")
+    val e = Graph.coOccurrenceEdges(df, "g", "item")
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(e == Map((1L, 2L) -> 1L))
+  }
+
+  test("sorted_intersect_count accepts nullable-element arrays and fails on a null element") {
+    import org.apache.spark.sql.graft.ColumnBridge
+    def sic(a: String, b: String) = ColumnBridge.column(
+      graft.plans.SortedIntersectCount(ColumnBridge.expression(col(a)),
+        ColumnBridge.expression(col(b))))
+    val dir = java.nio.file.Files.createTempDirectory("graft_sic").toString
+    Seq((Seq(1L, 3L, 5L, 7L), Seq(3L, 4L, 7L)), (Seq(2L), Seq.empty[Long]))
+      .toDF("a", "b").write.parquet(s"$dir/ok")
+    val ok = spark.read.parquet(s"$dir/ok")
+    assert(ok.schema("a").dataType ==
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.LongType, containsNull = true),
+      "parquet round-trip is expected to yield containsNull = true")
+    assert(ok.select(sic("a", "b")).collect().map(_.getLong(0)).toSeq ==
+      Seq(2L, 0L))
+    Seq((Seq(Some(1L), None), Seq(Some(1L)))).toDF("a", "b")
+      .write.parquet(s"$dir/bad")
+    val bad = spark.read.parquet(s"$dir/bad")
+    // generated code with and without whole-stage fusion; eval() below
+    Seq("true", "false").foreach { wholeStage =>
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        val e = intercept[Exception](bad.select(sic("a", "b")).collect())
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => Option(t.getMessage).exists(
+            _.contains("null array element"))), s"codegen=$wholeStage: $e")
+      } finally spark.conf.unset("spark.sql.codegen.wholeStage")
+    }
+    val row = org.apache.spark.sql.catalyst.InternalRow(
+      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
+        Array[Any](1L, null)),
+      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array(1L)))
+    val nullable = org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.LongType, containsNull = true)
+    val e2 = intercept[IllegalArgumentException](
+      graft.plans.SortedIntersectCount(
+        org.apache.spark.sql.catalyst.expressions.BoundReference(0, nullable, true),
+        org.apache.spark.sql.catalyst.expressions.BoundReference(1, nullable, true))
+        .eval(row))
+    assert(e2.getMessage.contains("null array element"))
+  }
+
   // -------------------------------------------------- registered queries
 
   test("g1_pagerank: one rank per nation, mass conserved, all above teleport floor") {
