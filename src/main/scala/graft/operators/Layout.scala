@@ -261,17 +261,14 @@ object Layout {
     }
 
   /** Stats columns a manifest at `path` declares (parsed from its
-    * `<col>__min` schema), None when the table has no manifest — how
-    * maintenance rebuilds a manifest without being told the columns.
+    * `<col>__min` schema, from the same cached read as [[statsRows]]),
+    * None when the table has no manifest — how maintenance rebuilds a
+    * manifest without being told the columns.
     */
   def statsManifestCols(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Seq[String]] = {
-    val p = new org.apache.hadoop.fs.Path(path, statsDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(spark.read.parquet(p.toString).schema.fieldNames.toSeq
+      path: String): Option[Seq[String]] =
+    statsRows(spark, path).map(_._1.fieldNames.toSeq
       .collect { case n if n.endsWith("__min") => n.stripSuffix("__min") })
-  }
 
   /** Per-FILE column min/max manifest — the table-format stats idea
     * (Delta add-file stats, Iceberg manifest ranges) without adopting
@@ -359,38 +356,37 @@ object Layout {
     }
 
   // (statsDir fingerprint → (schema, uri → stats row)): ONE collect of
-  // the manifest serves every planning consumer of a scan — limit
-  // truncation, topN prune, metadata aggregates and row-count stats
-  // each probe the same rows; re-collecting per probe would quadruple
-  // driver planning IO. Fingerprint = the sidecar files' (name, len,
-  // mtime), so any rewrite/append invalidates; bounded, cleared
-  // wholesale past the cap (correctness never depends on a hit).
+  // the manifest serves every planning consumer of a scan — file
+  // skipping, limit truncation, topN prune, metadata aggregates and
+  // row-count stats each probe the same rows; re-collecting per probe
+  // would multiply driver planning IO. Fingerprint = the sidecar files'
+  // (name, len, mtime), so any rewrite/append invalidates; bounded,
+  // cleared wholesale past the cap (correctness never depends on a hit).
   private val statsRowsCache = scala.collection.concurrent.TrieMap
     .empty[String, (String, org.apache.spark.sql.types.StructType,
       Map[String, org.apache.spark.sql.Row])]
 
-  /** The stats-manifest rows covering EXACTLY the given canonical file
-    * URIs — the metadata-only aggregate path's input: None when the
-    * manifest is missing or ANY file is uncovered (an answer from
-    * partial coverage would be silently wrong, never just slow).
-    * Returns (schema, row per file) with rows keyed like
-    * [[selectByStatsBounds]] (canonical `input_file_name()` URIs).
+  /** The whole stats sidecar at `path`: its schema and one row per
+    * covered file, keyed by canonical `input_file_name()` URI. One
+    * listing of the sidecar dir per call; the parquet read and collect
+    * (two Spark jobs) run only when the sidecar changed since the last
+    * call. None when there is no sidecar.
     */
-  private[graft] def statsRowsFor(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      canonFiles: Seq[String])
-      : Option[(org.apache.spark.sql.types.StructType,
-        Seq[org.apache.spark.sql.Row])] = {
+  private def statsRows(spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[(org.apache.spark.sql.types.StructType,
+        Map[String, org.apache.spark.sql.Row])] = {
     val p = new org.apache.hadoop.fs.Path(path, statsDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val fp = fs.listStatus(p).filter(_.isFile)
+    val listing =
+      try fs.listStatus(p)
+      catch { case _: java.io.FileNotFoundException => return None }
+    val fp = listing.filter(_.isFile)
       .map(st => s"${st.getPath.getName}:${st.getLen}:" +
         s"${st.getModificationTime}")
       .sorted.mkString(";")
     val key = p.toString
-    val (schema, byFile) = statsRowsCache.get(key) match {
-      case Some((cachedFp, s, m)) if cachedFp == fp => (s, m)
+    statsRowsCache.get(key) match {
+      case Some((cachedFp, s, m)) if cachedFp == fp => Some((s, m))
       case _ =>
         val manifest = spark.read.parquet(p.toString)
         val m = manifest.collect()
@@ -398,12 +394,26 @@ object Layout {
             r.getString(manifest.schema.fieldIndex("file"))) -> r).toMap
         if (statsRowsCache.size > 256) statsRowsCache.clear()
         statsRowsCache.put(key, (fp, manifest.schema, m))
-        (manifest.schema, m)
+        Some((manifest.schema, m))
     }
-    val rows = canonFiles.map(byFile.get)
-    if (rows.exists(_.isEmpty)) None
-    else Some((schema, rows.flatten))
   }
+
+  /** The stats-manifest rows covering EXACTLY the given canonical file
+    * URIs — the metadata-only aggregate path's input: None when the
+    * manifest is missing or ANY file is uncovered (an answer from
+    * partial coverage would be silently wrong, never just slow).
+    * Returns (schema, row per file) with rows keyed like
+    * [[statsRows]] (canonical `input_file_name()` URIs).
+    */
+  private[graft] def statsRowsFor(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      canonFiles: Seq[String])
+      : Option[(org.apache.spark.sql.types.StructType,
+        Seq[org.apache.spark.sql.Row])] =
+    statsRows(spark, path).flatMap { case (schema, byFile) =>
+      val rows = canonFiles.map(byFile.get)
+      if (rows.exists(_.isEmpty)) None else Some((schema, rows.flatten))
+    }
 
   /** Drop manifest entries whose data file no longer exists — the cheap
     * maintenance after a pure directory drop (partition expiry):
@@ -438,6 +448,43 @@ object Layout {
     */
   @volatile var lastStatsPruned: Option[(Int, Int)] = None
 
+  /** Subset of `candidates` (canonical file URIs) that the stats
+    * sidecar at `path` cannot rule out: the one stats selector, shared by every
+    * file-skipping caller ([[graft.warehouse.FileSkipping]] for snapshot
+    * tables, [[statsPrunedRead]] for flat ones). Each condition pairs a
+    * column with a keep test over that column's `(__min, __max)` sidecar
+    * columns; a file survives when every test holds. The sidecar is
+    * read once ([[statsRows]]), which also says which columns it
+    * tracks: conditions on other columns are ignored. NULL min/max
+    * (all-null values, or a manifest from before the numeric guard)
+    * mean "cannot prune", never "skip the file", and files the sidecar
+    * does not cover are always kept. The tests run over the covered
+    * rows as a local relation, so the selection itself runs no Spark
+    * job, and `conds` and `candidates` are built only when a sidecar
+    * exists. None when there is no sidecar.
+    */
+  private[graft] def selectByStats(spark: org.apache.spark.sql.SparkSession,
+      path: String, conds: => Seq[(String, (Column, Column) => Column)],
+      candidates: => Seq[String]): Option[Seq[String]] =
+    statsRows(spark, path).map { case (schema, byFile) =>
+      val live = candidates
+      val tracked =
+        conds.filter(c => schema.fieldNames.contains(s"${c._1}__min"))
+      val rows = live.flatMap(byFile.get)
+      if (tracked.isEmpty || rows.isEmpty) live
+      else {
+        val keep = tracked.map { case (c, test) =>
+          val (lo, hi) = (col(s"${c}__min"), col(s"${c}__max"))
+          test(lo, hi) || lo.isNull || hi.isNull
+        }.reduce(_ && _)
+        val selected = spark.createDataFrame(
+            java.util.Arrays.asList(rows: _*), schema)
+          .filter(keep).select("file").collect()
+          .map(r => canonUri(r.getString(0))).toSet
+        live.filter(f => selected(f) || !byFile.contains(f))
+      }
+    }
+
   /** Read `path` pruned by the stats manifest to files whose [min, max]
     * ranges intersect EVERY `(col, lo, hi)` box side (inclusive). Rows
     * outside the selected files cannot satisfy the box, so
@@ -449,101 +496,21 @@ object Layout {
     *     dropped — never a read of a dead path.
     * Falls back to the plain read when no manifest exists.
     */
-  /** Subset of `live` canonical file URIs a stats manifest at `path`
-    * cannot rule out for `ranges` — the driver-side file-skip shared by
-    * [[statsPrunedRead]] (flat tables) and
-    * [[graft.warehouse.Snapshots.readPruned]] (versioned tables, whose
-    * live set is a manifest's file list, not a directory listing).
-    * Files the stats manifest does not cover are always kept.
-    */
-  private[graft] def selectByStats(spark: org.apache.spark.sql.SparkSession,
-      path: String, ranges: Seq[(String, Any, Any)],
-      live: Seq[String]): Seq[String] = {
-    // a NULL min/max (all-null values in that file, or a manifest from
-    // before the numeric-column guard) must mean "cannot prune", never
-    // "skip the file"
-    val keep = ranges.map { case (c, lo, hi) =>
-      (col(s"${c}__max") >= lo && col(s"${c}__min") <= hi) ||
-        col(s"${c}__max").isNull || col(s"${c}__min").isNull }
-      .reduce(_ && _)
-    val manifest = spark.read.parquet(s"$path/$statsDir")
-    val known = manifest.select("file").collect()
-      .map(r => canonUri(r.getString(0))).toSet
-    val selected = manifest.filter(keep)
-      .select("file").collect().map(r => canonUri(r.getString(0))).toSet
-    live.filter(f => selected(f) || !known(f))
-  }
-
-  /** Subset of `live` canonical file URIs the stats manifest cannot rule
-    * out for an OPEN-ENDED range on `c` — the one-sided variant of
-    * [[selectByStats]] that predicate probes need (`ts < cutoff` has no
-    * lower bound; a closed-box API would have to invent one, and there
-    * is no greatest string). A missing side simply drops that conjunct;
-    * both sides missing keeps everything. NULL stats and unmanifested
-    * files always keep, like every other selector here.
-    */
-  private[graft] def selectByStatsBounds(
-      spark: org.apache.spark.sql.SparkSession, path: String, c: String,
-      lo: Option[Any], hi: Option[Any], live: Seq[String]): Seq[String] = {
-    val sides = lo.map(v => col(s"${c}__max") >= lit(v)).toSeq ++
-      hi.map(v => col(s"${c}__min") <= lit(v)).toSeq
-    if (sides.isEmpty) return live
-    val keep = sides.reduce(_ && _) ||
-      col(s"${c}__min").isNull || col(s"${c}__max").isNull
-    val manifest = spark.read.parquet(s"$path/$statsDir")
-    val known = manifest.select("file").collect()
-      .map(r => canonUri(r.getString(0))).toSet
-    val selected = manifest.filter(keep)
-      .select("file").collect().map(r => canonUri(r.getString(0))).toSet
-    live.filter(f => selected(f) || !known(f))
-  }
-
-  /** Subset of `live` canonical file URIs whose [min, max] range for `c`
-    * can contain AT LEAST ONE of `values` — the point-set variant of
-    * [[selectByStats]], for key-list probes (tombstone feeds, merge
-    * touch-sets) where the keys are sparse points rather than one box:
-    * on a z-ordered table a 50-key list prunes to a handful of files
-    * where the coarse [min(values), max(values)] envelope would keep
-    * most of them. The membership test runs as ONE array-literal
-    * `exists` per manifest row (never a 4096-term OR chain). NULL stats
-    * keep the file (cannot prune), as do files the manifest doesn't
-    * cover.
-    */
-  private[graft] def selectByStatsAnyOf(
-      spark: org.apache.spark.sql.SparkSession, path: String, c: String,
-      values: Seq[Any], live: Seq[String]): Seq[String] = {
-    val minC = col(s"${c}__min")
-    val maxC = col(s"${c}__max")
-    // typed to the manifest's encoding (numerics as double, everything
-    // else as string) so comparisons never hit a cast surprise
-    val arr =
-      if (values.forall(_.isInstanceOf[Number]))
-        lit(values.map(_.asInstanceOf[Number].doubleValue).toArray)
-      else lit(values.map(String.valueOf).toArray)
-    val keep = exists(arr, v => minC <= v && maxC >= v) ||
-      minC.isNull || maxC.isNull
-    val manifest = spark.read.parquet(s"$path/$statsDir")
-    val known = manifest.select("file").collect()
-      .map(r => canonUri(r.getString(0))).toSet
-    val selected = manifest.filter(keep)
-      .select("file").collect().map(r => canonUri(r.getString(0))).toSet
-    live.filter(f => selected(f) || !known(f))
-  }
-
   def statsPrunedRead(spark: org.apache.spark.sql.SparkSession, path: String,
       ranges: Seq[(String, Any, Any)]): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path, statsDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) { lastStatsPruned = None; return spark.read.parquet(path) }
-    val live = spark.read.parquet(path).inputFiles.map(canonUri).toSeq
-    val chosen = selectByStats(spark, path, ranges, live)
-    lastStatsPruned = Some((chosen.length, live.length))
-    if (chosen.isEmpty)
-      // preserve schema on an empty selection
-      spark.read.parquet(path).limit(0)
-    else
+    val all = spark.read.parquet(path)
+    val live = all.inputFiles.map(canonUri).toSeq
+    val box = ranges.map { case (c, lo, hi) =>
+      c -> ((mn: Column, mx: Column) => mx >= lit(lo) && mn <= lit(hi)) }
+    val chosen = selectByStats(spark, path, box, live)
+    lastStatsPruned = chosen.map(c => (c.length, live.length))
+    chosen match {
+      case None => all
+      case Some(Seq()) => all.limit(0) // preserve schema on an empty selection
       // basePath keeps Hive partition columns (p_date=...) in the
       // schema — leaf-file reads would silently drop them
-      spark.read.option("basePath", path).parquet(chosen.toIndexedSeq: _*)
+      case Some(c) =>
+        spark.read.option("basePath", path).parquet(c.toIndexedSeq: _*)
+    }
   }
 }

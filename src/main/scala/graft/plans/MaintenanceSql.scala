@@ -817,8 +817,8 @@ final case class DeleteSnapshotWhere(target: MaintenanceSql.SnapTarget,
   * rewritten slice). SET assignments and the predicate resolve through
   * the session's expression parser at run time; the SET list splits
   * paren- and quote-aware so expressions may call functions. Targets are
-  * quoted paths or owned catalog identifiers; unowned identifiers
-  * delegate to Spark's own UPDATE handling.
+  * quoted paths only: an UPDATE on a catalog identifier is Spark's own,
+  * served as row-level copy-on-write (sources/SnapshotRowLevel.scala).
   */
 final case class UpdateSnapshotWhere(target: MaintenanceSql.SnapTarget,
     sets: String, predicate: String) extends LeafRunnableCommand {
@@ -880,9 +880,10 @@ final case class UpdateSnapshotWhere(target: MaintenanceSql.SnapTarget,
   * source key rewrite). The source is a view/table name or a
   * parenthesized subquery resolved by the session at run time; the
   * clause pair is the canonical upsert and may be omitted (same
-  * semantics). Targets are quoted paths or owned catalog identifiers —
-  * unowned identifier MERGE delegates to whichever catalog owns it, and
-  * a target with no committed version refuses (MERGE never creates).
+  * semantics). Targets are quoted paths only — a MERGE on a catalog
+  * identifier is Spark's own, served as row-level copy-on-write
+  * (sources/SnapshotRowLevel.scala) — and a target with no committed
+  * version refuses (MERGE never creates).
   */
 final case class MergeSnapshot(target: MaintenanceSql.SnapTarget,
     source: String, keys: Seq[String]) extends LeafRunnableCommand {

@@ -57,8 +57,10 @@ import graft.warehouse.Snapshots
   * `DROP TABLE` removes the table tree, and `DELETE FROM snap.t WHERE
   * ...` resolves through Spark's own DSv2 delete into the protocol's
   * copy-on-write predicate delete. Time-travel reads
-  * (`VERSION/TIMESTAMP AS OF`) remain read-only — history is immutable;
-  * ALTER/RENAME still refuse (constraints have their own SQL face).
+  * (`VERSION/TIMESTAMP AS OF`) remain read-only — history is immutable.
+  * `ALTER TABLE` column changes (rename, add, drop, widen, defaults)
+  * commit through [[alterTable]]; every other ALTER, and RENAME TABLE,
+  * refuses (constraints have their own SQL face).
   */
 class SnapshotCatalog extends TableCatalog with FunctionCatalog {
 

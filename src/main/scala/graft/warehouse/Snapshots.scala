@@ -102,10 +102,10 @@ object Snapshots {
   private def retainedVersions(spark: SparkSession,
       table: String): Seq[Long] = {
     val dir = Manifest.dir(table)
-    val f = fs(spark, dir)
-    if (!f.exists(dir)) Nil
-    else f.listStatus(dir).toSeq
+    // one listing: a missing dir is the empty table
+    try fs(spark, dir).listStatus(dir).toSeq
       .flatMap(s => Manifest.versionOf(s.getPath.getName)).sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
   }
 
   /** Highest committed version, 0 if the table is empty. */
@@ -292,7 +292,8 @@ object Snapshots {
     * ALWAYS read — the stats staleness rule). Component-wise parse, so
     * a shallow clone's qualified foreign URIs resolve too.
     */
-  private def partValueAt(entry: String, level: Int): Option[String] = {
+  private[warehouse] def partValueAt(entry: String,
+      level: Int): Option[String] = {
     val prefix = partLevelPrefix(level)
     entry.split('/').dropRight(1).find(_.startsWith(prefix))
       // dir fragments land ESCAPED (the dynamic-partition writer turns
@@ -417,7 +418,8 @@ object Snapshots {
             s"EXPIRE PARTITIONS on ${m.partitions.map { case (c, k) =>
               s"$k($c)" }.mkString("/")}: identity values carry no " +
               "age order — only date/month transforms expire"))
-      val cut = partProbeValue(kind, cutoff).getOrElse(
+      val cut = FileSkipping.partProbeValue(kind, cutoff,
+        spark.sessionState.conf.sessionLocalTimeZone).getOrElse(
         throw new IllegalArgumentException(
           s"cutoff $cutoff does not render under $kind($pc)"))
       // the null partition can't prove its age — never expire it
@@ -494,132 +496,6 @@ object Snapshots {
       .map { case (pv, xs) => (pv, xs.size.toLong, xs.map(_._2).sum) }
       .sortBy(_._1)
       .toDF("partition", "num_files", "size_bytes")
-  }
-
-  /** Subset of `entries` the declared partition transform cannot rule
-    * out for conjunctive per-column bounds: only bounds on the
-    * partition COLUMN prune, un-prefixed entries always survive, and a
-    * probe value whose transform rendering is inexact prunes nothing.
-    * Date/month truncation is monotone, so `col >= lo` implies
-    * `trunc(col) >= trunc(lo)` — the dir-value comparison is sound in
-    * ISO string order.
-    */
-  /** An external probe value's class hashes IDENTICALLY to the bucket
-    * column's internal encoding — the guard that keeps bucket rendering
-    * type-strict: an Integer probe murmur3s through hashInt while a
-    * LongType column's dirs hashed hashLong, so the same NUMBER lands a
-    * different bucket and an unchecked prune would drop matching rows.
-    * No declared type (legacy header-less table) → never prune.
-    * DateType accepts Date/LocalDate (both render through the epoch-day
-    * hashInt the writer used).
-    */
-  private def bucketProbeTypeOk(dt: Option[types.DataType],
-      v: Any): Boolean = dt match {
-    case Some(types.IntegerType) => v.isInstanceOf[java.lang.Integer]
-    case Some(types.LongType) => v.isInstanceOf[java.lang.Long]
-    case Some(types.StringType) => v.isInstanceOf[String]
-    case Some(types.DateType) => v.isInstanceOf[java.sql.Date] ||
-      v.isInstanceOf[java.time.LocalDate]
-    case _ => false
-  }
-
-  private def pruneEntriesByPartition(
-      partitions: Seq[(String, String)],
-      bounds: Seq[(String, Option[Any], Option[Any])],
-      entries: Seq[String],
-      schema: Option[types.StructType] = None): Seq[String] =
-    // composite layouts INTERSECT the levels' verdicts: each level
-    // prunes independently on its own column's bounds, and an entry
-    // survives only if no level can rule it out
-    partitions.zipWithIndex.foldLeft(entries) {
-      case (live, ((pc, kind), level)) =>
-        val relevant = bounds.filter(_._1 == pc)
-        if (relevant.isEmpty || live.isEmpty) live
-        else live.filter { e =>
-          partValueAt(e, level) match {
-            case None => true // flat/foreign/pre-transform: always read
-            case Some(NullPartition) => true // null rendering has no order
-            case Some(v) =>
-              // bucket dirs carry NO range order (hash ids): only an
-              // exact equality bound (lo == hi) whose value class
-              // matches the column's declared type may prune — the
-              // probed value's bucket either is this dir or isn't
-              if (bucketModulus(kind).isDefined) {
-                val dt = schema.flatMap(_.fields.find(_.name == pc))
-                  .map(_.dataType)
-                relevant.forall {
-                  case (_, Some(l), Some(h))
-                      if l == h && bucketProbeTypeOk(dt, l) =>
-                    partProbeValue(kind, l).forall(b => v == b)
-                  case _ => true
-                }
-              }
-              else relevant.forall { case (_, lo, hi) =>
-                lo.flatMap(partProbeValue(kind, _)).forall(l => v >= l) &&
-                  hi.flatMap(partProbeValue(kind, _)).forall(h => v <= h)
-              }
-          }
-        }
-    }
-
-  /** The transform's rendering of a driver-side probe value, in the
-    * same form [[partitionExpr]] writes into dir names — None when the
-    * value's rendering is not exact (prune nothing, never wrongly).
-    */
-  private def partProbeValue(kind: String, v: Any): Option[String] = {
-    val dateStr: Option[String] = v match {
-      case d: java.sql.Date => Some(d.toString)
-      case t: java.sql.Timestamp =>
-        Some(t.toLocalDateTime.toLocalDate.toString)
-      // java8 / NTZ external forms (TIMESTAMP_NTZ filters arrive as
-      // LocalDateTime; the java8API conf serves LocalDate/Instant)
-      case ld: java.time.LocalDate => Some(ld.toString)
-      case ldt: java.time.LocalDateTime => Some(ldt.toLocalDate.toString)
-      case ins: java.time.Instant => // the engine's clock discipline
-        Some(ins.atZone(java.time.ZoneOffset.UTC).toLocalDate.toString)
-      case s: String if s.length >= 10 &&
-        s.matches("""\d{4}-\d{2}-\d{2}.*""") => Some(s.take(10))
-      case _ => None
-    }
-    kind match {
-      case "identity" => v match {
-        // strings only: a numeric rendering would compare
-        // lexicographically ("10" < "9") — prune nothing instead
-        case str: String => Some(str)
-        case _ => None
-      }
-      case "date" => dateStr
-      case "month" => dateStr.map(_.take(7))
-      case b if bucketModulus(b).isDefined =>
-        // EQUALITY-ONLY semantics: the rendering is the probed value's
-        // bucket id — meaningful for = / IN membership, never for
-        // ranges (pruneEntriesByPartition guards). The hash must
-        // reproduce the writer's `pmod(hash(col), N)` from the
-        // EXTERNAL value, so only the classes with one internal form
-        // render; a mismatch (e.g. Integer probe on a LongType column)
-        // cannot happen for pushed filters — Spark casts literals to
-        // the column type before translation.
-        bucketModulus(b).flatMap { n =>
-          import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
-          import org.apache.spark.sql.{types => T}
-          val h: Option[Int] = v match {
-            case i: java.lang.Integer => Some(Murmur3HashFunction
-              .hash(i.intValue(), T.IntegerType, 42L).toInt)
-            case l: java.lang.Long => Some(Murmur3HashFunction
-              .hash(l.longValue(), T.LongType, 42L).toInt)
-            case s: String => Some(Murmur3HashFunction.hash(
-              org.apache.spark.unsafe.types.UTF8String.fromString(s),
-              T.StringType, 42L).toInt)
-            case d: java.sql.Date => Some(Murmur3HashFunction.hash(
-              org.apache.spark.sql.catalyst.util.DateTimeUtils
-                .fromJavaDate(d), T.DateType, 42L).toInt)
-            case ld: java.time.LocalDate => Some(Murmur3HashFunction
-              .hash(ld.toEpochDay.toInt, T.DateType, 42L).toInt)
-            case _ => None
-          }
-          h.map(x => (((x % n) + n) % n).toString)
-        }
-    }
   }
 
   private def physName(colmap: Map[String, String], c: String): String =
@@ -1674,258 +1550,6 @@ object Snapshots {
     */
   @volatile private[graft] var lastWherePruned: Option[(Int, Int)] = None
 
-  /** Beyond this many distinct probe keys, point-set pruning falls back
-    * to one coarse [min, max] envelope (the driver should not hold an
-    * unbounded key list; the envelope is still sound, just looser).
-    */
-  private val MaxPruneKeys = 4096
-
-  /** Driver-side file skipping for KEY-LIST probes: the subset of
-    * `candidates` (bare data-file names of `table`) whose `_graft_stats`
-    * [min, max] range for `kc` can hold at least one key of the
-    * one-column `keyFrame` — how a tombstone feed or a merge probe over
-    * a z-ordered, stats-manifested table opens a handful of files
-    * instead of every carried file. Sound by construction: files the
-    * stats don't cover (or whose stats are NULL) are always kept, and
-    * with no manifest — or a key type the manifest's typed encoding
-    * can't compare exactly (dates/timestamps render differently driver-
-    * side) — the candidate list returns unchanged (prune nothing, never
-    * prune wrongly).
-    */
-  private def pruneByKeyStats(spark: SparkSession, table: String,
-      kc0: String, keyFrame: DataFrame,
-      candidates: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    if (candidates.isEmpty) return candidates
-    val dd = dataDir(table).toString
-    // the stats manifest keys PHYSICAL column names (it reads footers)
-    val kc = physName(headOf(spark, table).colmap, kc0)
-    if (!graft.operators.Layout.statsManifestCols(spark, dd)
-        .exists(_.contains(kc))) return candidates
-    val prunable = keyFrame.schema.head.dataType match {
-      case _: types.NumericType => true
-      case types.StringType => true
-      case _ => false
-    }
-    if (!prunable) return candidates
-    val kcol = col(keyFrame.columns.head)
-    val vals = keyFrame.na.drop().distinct()
-      .limit(MaxPruneKeys + 1).collect().map(_.get(0)).toSeq
-    if (vals.isEmpty) return candidates
-    if (vals.size > MaxPruneKeys) {
-      // the collected sample is TRUNCATED — the envelope must come from
-      // the full frame, never the sample, or pruning would be unsound
-      val (canon, byCanon) = canonCandidates(spark, table, candidates)
-      val mm = keyFrame.agg(min(kcol), max(kcol)).head()
-      graft.operators.Layout.selectByStats(spark, dd,
-        Seq((kc, mm.get(0), mm.get(1))), canon).map(byCanon)
-    } else pruneByKeyVals(spark, table, kc, vals, candidates)
-  }
-
-  /** Driver-side value-list variant of [[pruneByKeyStats]] (key lists
-    * already on the driver — the id-list erasure API). Same soundness
-    * rules; non-uniform or non-comparable value types prune nothing.
-    */
-  private def pruneByKeyVals(spark: SparkSession, table: String,
-      kc0: String, vals0: Seq[Any], candidates0: Seq[String]): Seq[String] = {
-    if (candidates0.isEmpty) return candidates0
-    val dd = dataDir(table).toString
-    val head = headOf(spark, table)
-    // DIRECTORY leg: a key-list probe on a partition column keeps only
-    // partitions that can hold at least one key (one unrenderable key
-    // keeps everything — sound); composite layouts probe the LEVEL the
-    // key column governs
-    val candidates = head.partitions.zipWithIndex
-      .find(_._1._1 == kc0) match {
-      case Some(((_, kind), level)) =>
-        val nn = vals0.filter(_ != null)
-        // bucket rendering is type-strict (hashInt vs hashLong): a key
-        // class mismatching the declared column type keeps everything
-        val dt = head.schema
-          .flatMap(_.fields.find(_.name == kc0)).map(_.dataType)
-        if (bucketModulus(kind).isDefined &&
-            !nn.forall(bucketProbeTypeOk(dt, _))) candidates0
-        else {
-          val rendered = nn.map(partProbeValue(kind, _))
-          if (rendered.nonEmpty && rendered.forall(_.isDefined)) {
-            val set = rendered.flatten.toSet
-            candidates0.filter(e => partValueAt(e, level).forall(v =>
-              v == NullPartition || set.contains(v)))
-          } else candidates0
-        }
-      case _ => candidates0
-    }
-    if (candidates.isEmpty) return candidates
-    val kc = physName(head.colmap, kc0)
-    if (!graft.operators.Layout.statsManifestCols(spark, dd)
-        .exists(_.contains(kc))) return candidates
-    val vals = vals0.filter(_ != null).distinct
-    if (vals.isEmpty) return candidates
-    val numeric = vals.forall(_.isInstanceOf[Number])
-    if (!numeric && !vals.forall(_.isInstanceOf[String])) return candidates
-    val (canon, byCanon) = canonCandidates(spark, table, candidates)
-    val chosen =
-      if (vals.size > MaxPruneKeys) {
-        val (lo, hi) =
-          if (numeric) {
-            val ds = vals.map(_.asInstanceOf[Number].doubleValue)
-            (ds.min: Any, ds.max: Any)
-          } else {
-            val ss = vals.map(_.asInstanceOf[String])
-            (ss.min: Any, ss.max: Any)
-          }
-        graft.operators.Layout.selectByStats(spark, dd,
-          Seq((kc, lo, hi)), canon)
-      } else graft.operators.Layout.selectByStatsAnyOf(
-        spark, dd, kc, vals, canon)
-    chosen.map(byCanon)
-  }
-
-  /** Conjunctive per-column bounds a predicate implies, in the stats
-    * manifest's TYPED ENCODING (numerics as double, string/date/
-    * timestamp as their cast-to-string form) — what lets a predicate
-    * DELETE/UPDATE probe skip files driver-side like the key-list paths
-    * do. Each element is (column, lower?, upper?), one per usable
-    * conjunct: =, <, <=, >, >=, IN and BETWEEN on a bare column vs
-    * literals. Sound by construction: ONLY top-level conjuncts
-    * contribute (an OR / NOT / complex term adds nothing — the other
-    * conjuncts still bound the matching rows), a column whose DECLARED
-    * type's encoding category differs from the literal's is skipped
-    * (a sloppy cross-type comparison must never mis-prune), and strict
-    * bounds relax to inclusive (looser, never wrong).
-    */
-  private def predicateBounds(spark: SparkSession, predicate: Column,
-      schema: types.StructType): Seq[(String, Option[Any], Option[Any])] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    def attrOf(e: Expression): Option[String] = e match {
-      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-          if a.nameParts.size == 1 => Some(a.nameParts.head)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    // literal → the manifest's encoded form, ONLY when the literal's
-    // type category matches the declared column's (numeric↔numeric,
-    // string↔string, date↔date, timestamp↔timestamp): the stats encode
-    // numerics as double and the rest as cast-to-string, so a matching
-    // category is exactly what makes the comparison meaningful
-    def enc(c: String, e: Expression): Option[Any] = e match {
-      case Literal(v, dt) if v != null =>
-        schema.fields.find(_.name == c).map(_.dataType).flatMap { ct =>
-          (ct, dt) match {
-            case (_: types.NumericType, _: types.NumericType) => v match {
-              case n: Number => Some(n.doubleValue)
-              case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-              case _ => None
-            }
-            case (types.StringType, types.StringType) => Some(v.toString)
-            case (types.DateType, types.DateType) =>
-              Some(java.time.LocalDate.ofEpochDay(
-                v.asInstanceOf[Int].toLong).toString)
-            case (types.TimestampType, types.TimestampType) =>
-              Option(Cast(Literal(v, dt), types.StringType, Some(tz)).eval())
-                .map(_.toString)
-            case _ => None
-          }
-        }
-      case _ => None
-    }
-    def inBounds(a: Expression,
-        vs: Seq[Expression]): Seq[(String, Option[Any], Option[Any])] =
-      (for {
-        c <- attrOf(a)
-        encoded = vs.flatMap(enc(c, _))
-        if encoded.size == vs.size // every member encodable, or skip
-      } yield {
-        if (encoded.forall(_.isInstanceOf[Double])) {
-          val dd = encoded.map(_.asInstanceOf[Double])
-          Seq((c, Some(dd.min: Any), Some(dd.max: Any)))
-        } else {
-          val ss = encoded.map(_.toString)
-          Seq((c, Some(ss.min: Any), Some(ss.max: Any)))
-        }
-      }).getOrElse(Nil)
-    // two spellings of the same comparisons reach here: SQL-parsed
-    // predicates (expr("...")) are the catalyst And/LessThan/... tree,
-    // while Column-DSL predicates (col("ts") < lit(x)) convert to
-    // UnresolvedFunction nodes named "<", "and", "in", ... — the DSv2
-    // DELETE face builds the latter, so both must prune
-    def walk(e: Expression): Seq[(String, Option[Any], Option[Any])] =
-      e match {
-        case And(l, r) => walk(l) ++ walk(r)
-        case EqualTo(a, v) => point(a, v) ++ point(v, a)
-        case EqualNullSafe(a, v) => point(a, v) ++ point(v, a)
-        case GreaterThan(a, v) => lower(a, v) ++ upper(v, a)
-        case GreaterThanOrEqual(a, v) => lower(a, v) ++ upper(v, a)
-        case LessThan(a, v) => upper(a, v) ++ lower(v, a)
-        case LessThanOrEqual(a, v) => upper(a, v) ++ lower(v, a)
-        case In(a, vs) if vs.nonEmpty => inBounds(a, vs)
-        case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-            if f.nameParts.size == 1 =>
-          (f.nameParts.head.toLowerCase(java.util.Locale.ROOT),
-            f.arguments) match {
-            case ("and", Seq(l, r)) => walk(l) ++ walk(r)
-            case ("=" | "==" | "<=>", Seq(a, v)) =>
-              point(a, v) ++ point(v, a)
-            case (">" | ">=", Seq(a, v)) => lower(a, v) ++ upper(v, a)
-            case ("<" | "<=", Seq(a, v)) => upper(a, v) ++ lower(v, a)
-            case ("in", a +: vs) if vs.nonEmpty => inBounds(a, vs)
-            case _ => Nil
-          }
-        case _ => Nil
-      }
-    def point(a: Expression,
-        v: Expression): Seq[(String, Option[Any], Option[Any])] =
-      (for { c <- attrOf(a); ev <- enc(c, v) }
-        yield Seq((c, Some(ev), Some(ev)))).getOrElse(Nil)
-    def lower(a: Expression,
-        v: Expression): Seq[(String, Option[Any], Option[Any])] =
-      (for { c <- attrOf(a); ev <- enc(c, v) }
-        yield Seq((c, Some(ev), None: Option[Any]))).getOrElse(Nil)
-    def upper(a: Expression,
-        v: Expression): Seq[(String, Option[Any], Option[Any])] =
-      (for { c <- attrOf(a); ev <- enc(c, v) }
-        yield Seq((c, None: Option[Any], Some(ev)))).getOrElse(Nil)
-    walk(org.apache.spark.sql.graft.ColumnBridge
-      .catalystExpression(predicate))
-  }
-
-  /** Driver-side file skipping for PREDICATE probes (`UPDATE ... WHERE`,
-    * `DELETE FROM ... WHERE`): every usable conjunct of the predicate
-    * ([[predicateBounds]]) on a stats-manifested column shrinks the
-    * candidate file list BEFORE the probe scan opens a single footer —
-    * a retention delete (`ts < cutoff`) on a z-ordered table probes the
-    * curve-adjacent files only, like the key-list paths already do.
-    * No manifest, no usable conjunct, or a schema-less version → the
-    * candidates return unchanged (prune nothing, never prune wrongly).
-    */
-  private def pruneByPredicateStats(spark: SparkSession, table: String,
-      predicate: Column, schema: Option[types.StructType],
-      candidates: Seq[String]): Seq[String] = {
-    if (candidates.isEmpty) return candidates
-    val s = schema.getOrElse(return candidates)
-    val head = headOf(spark, table)
-    val bounds0 = predicateBounds(spark, predicate, s)
-    // DIRECTORY leg first: the declared partition transform prunes on
-    // the predicate's own bounds with zero sidecar reads (the bounds'
-    // typed encodings — ISO strings for dates — are exactly the dir
-    // rendering)
-    var cand = pruneEntriesByPartition(head.partitions, bounds0,
-      candidates, Some(s))
-    val dd = dataDir(table).toString
-    val statsCols = graft.operators.Layout.statsManifestCols(spark, dd)
-      .getOrElse(return cand).toSet
-    val colmap = head.colmap
-    val boxes = bounds0
-      .map { case (c, lo, hi) => (physName(colmap, c), lo, hi) }
-      .filter(b => statsCols.contains(b._1))
-    if (boxes.isEmpty) return cand
-    val (canon, byCanon) = canonCandidates(spark, table, cand)
-    boxes.foldLeft(canon) { case (live, (c, lo, hi)) =>
-      graft.operators.Layout.selectByStatsBounds(spark, dd, c, lo, hi, live)
-    }.map(byCanon)
-  }
-
   /** Spec/assert hook: number of aggregate expressions the last catalog
     * scan answered ENTIRELY from the stats sidecar (zero data files
     * opened); None when the metadata-only path did not serve.
@@ -1940,21 +1564,9 @@ object Snapshots {
   private[graft] def statsAggRows(spark: SparkSession, table: String,
       entries: Seq[String])
       : Option[(types.StructType, Seq[org.apache.spark.sql.Row])] = {
-    val (canon, _) = canonCandidates(spark, table, entries)
+    val (canon, _) = FileSkipping.canonical(spark, dataDir(table), entries)
     graft.operators.Layout.statsRowsFor(spark, dataDir(table).toString,
       canon)
-  }
-
-  /** (qualified canonical URIs, URI -> bare name) of a candidate list —
-    * the stats manifest keys files by `input_file_name()` URI while
-    * manifests carry bare names.
-    */
-  private def canonCandidates(spark: SparkSession, table: String,
-      candidates: Seq[String]): (Seq[String], Map[String, String]) = {
-    val f = fs(spark, dataDir(table))
-    val canon = candidates.map(n => graft.operators.Layout.canonFile(
-      f.makeQualified(new Path(dataDir(table), n)).toString) -> n)
-    (canon.map(_._1), canon.toMap)
   }
 
   /** Map probed physical URIs (`input_file_name()` output) back to the
@@ -1967,7 +1579,7 @@ object Snapshots {
     */
   private def probedEntries(spark: SparkSession, table: String,
       candidates: Seq[String], probedUris: Iterable[String]): Set[String] = {
-    val canonMap = canonCandidates(spark, table, candidates)._2
+    val canonMap = FileSkipping.canonical(spark, dataDir(table), candidates)._2
     probedUris.map(u => canonMap.getOrElse(
       graft.operators.Layout.canonUri(u), new Path(u).getName)).toSet
   }
@@ -1991,7 +1603,8 @@ object Snapshots {
     * the driver: probed file names, a bounded key list. More than `cap`
     * rows back means the true count is more than `cap` too.
     */
-  private def distinctRows(df: DataFrame, cap: Int = Int.MaxValue): Seq[Row] =
+  private[warehouse] def distinctRows(df: DataFrame,
+      cap: Int = Int.MaxValue): Seq[Row] =
     if (isLocal(df)) df.collect().toSeq.distinct
     else df.mapPartitions { it =>
       val seen = scala.collection.mutable.LinkedHashSet.empty[Row]
@@ -2025,11 +1638,11 @@ object Snapshots {
     *      semi-join otherwise), projecting `input_file_name()`
     *      and deduped per task ([[distinctRows]]) — the same recipe
     *      [[commitDelete]] uses.
-    *      Only the key columns are read (column pruning), and when the
-    *      table carries a `_graft_stats` manifest covering the probe
-    *      key, the scanned candidate set is itself stats-pruned
-    *      driver-side first ([[pruneByKeyStats]]) — on a z-ordered
-    *      table the probe opens a handful of files, not the table;
+    *      Only the key columns are read (column pruning), and the
+    *      scanned candidate set is itself pruned driver-side first by
+    *      [[FileSkipping]] (partition dirs, stats and Bloom sidecars
+    *      on the probe key) — on a z-ordered, stats-manifested table
+    *      the probe opens a handful of files, not the table;
     *   2. rewrite: the affected slice, tombstone-filtered and conformed
     *      to the evolved schema, merged with the changes (upserts
     *      replace, `deleteCol`-flagged keys drop) — staged bytes are
@@ -2092,8 +1705,8 @@ object Snapshots {
     val fastVals: Option[Seq[Any]] =
       if (keys.size == 1)
         Some(distinctRows(changes.select(col(keys.head)).na.drop(),
-            MaxPruneKeys).map(_.get(0)))
-          .filter(_.size <= MaxPruneKeys)
+            FileSkipping.MaxPruneKeys).map(_.get(0)))
+          .filter(_.size <= FileSkipping.MaxPruneKeys)
       else None
     lazy val touched = changes.select(keys.map(col): _*).distinct()
     // pending-tombstone keys the change set re-asserts (bounded × bounded)
@@ -2103,17 +1716,20 @@ object Snapshots {
           changes.select(col(kc)).filter(col(kc).isNotNull).distinct()),
         Seq(kc), "left_semi").localCheckpoint(true)
     }.filter(_._2.limit(1).count() > 0)
-    // stats-pruned probe: when `_graft_stats` covers a probe key column,
-    // the candidate file set shrinks DRIVER-SIDE before the scan — on a
-    // z-ordered table a small touch-set probes a handful of files, so
-    // the probe itself costs O(candidate files), not O(table). Each leg
-    // prunes on ITS join column (the merge keys vs the tombstone
-    // column), never one leg's candidates standing in for the other's.
+    // pruned probe: the candidate file set shrinks DRIVER-SIDE before
+    // the scan — on a z-ordered table a small touch-set probes a
+    // handful of files, so the probe itself costs O(candidate files),
+    // not O(table). Each leg prunes on ITS join column (the merge keys
+    // vs the tombstone column), never one leg's candidates standing in
+    // for the other's.
+    def pruneByKeys(kc: String, frame: DataFrame) = FileSkipping.pruneByKeys(
+      spark, dataDir(table), files, m.schema, kc, frame, colmap,
+      m.partitions).kept
     val candT = fastVals match {
-      case Some(vals) => pruneByKeyVals(spark, table, keys.head, vals, files)
-      case None => pruneByKeyStats(spark, table, keys.head,
-        touched.select(col(keys.head)).filter(col(keys.head).isNotNull),
-        files)
+      case Some(vals) => FileSkipping.prune(spark, dataDir(table), files,
+        m.schema, Seq(org.apache.spark.sql.sources.In(keys.head, vals.toArray)),
+        colmap, m.partitions).kept
+      case None => pruneByKeys(keys.head, touched.select(col(keys.head)))
     }
     def probeOf(cand: Seq[String], frame: DataFrame,
         on: Seq[String]): Option[DataFrame] =
@@ -2140,7 +1756,7 @@ object Snapshots {
     }
     val (candR, probeR) = reasserted match {
       case Some((kc, r)) =>
-        val c = pruneByKeyStats(spark, table, kc, r, files)
+        val c = pruneByKeys(kc, r)
         (c, probeOf(c, r, Seq(kc)))
       case None => (Nil, None)
     }
@@ -2261,7 +1877,7 @@ object Snapshots {
     if (keys.isEmpty) return (currentVersion(spark, table), 0L)
     val distinctKeys = keys.distinct
     deleteWhereImpl(spark, table, col(keyCol).isInCollection(distinctKeys),
-      m => pruneByKeyVals(spark, table, keyCol, distinctKeys, m.files))
+      _ => Seq(org.apache.spark.sql.sources.In(keyCol, distinctKeys.toArray)))
   }
 
   /** Predicate DELETE — `DELETE FROM t WHERE <predicate>` for the
@@ -2278,7 +1894,7 @@ object Snapshots {
   def commitDeleteWhere(spark: SparkSession, table: String,
       predicate: Column): (Long, Long) =
     deleteWhereImpl(spark, table, predicate,
-      m => pruneByPredicateStats(spark, table, predicate, m.schema, m.files))
+      m => FileSkipping.predicateFilters(spark, predicate, m.schema))
 
   /** Predicate UPDATE — `UPDATE t SET c = expr, ... WHERE pred` as a
     * file-granular copy-on-write commit: ONE probe (predicate pushed
@@ -2303,11 +1919,7 @@ object Snapshots {
           s"UPDATE SET column $c does not exist in $table — UPDATE " +
             "never evolves schema (append or MERGE a new column)")
       }
-      // the probe's candidate set stats-prunes driver-side on the
-      // predicate's conjunctive bounds, like the key-list paths — a
-      // range UPDATE on a z-ordered stats column opens the
-      // curve-adjacent files, not the table
-      pruneByPredicateStats(spark, table, predicate, m.schema, m.files)
+      FileSkipping.predicateFilters(spark, predicate, m.schema)
     }) { (m, aff) =>
       // when(pred, new).otherwise(old): FALSE and NULL predicates both
       // keep the old value — exactly SQL UPDATE's row selection
@@ -2328,8 +1940,10 @@ object Snapshots {
   }
 
   private def deleteWhereImpl(spark: SparkSession, table: String,
-      predicate: Column, candidates: Manifest => Seq[String]): (Long, Long) =
-    rewriteWhere(spark, table, "delete", predicate, candidates) { (_, aff) =>
+      predicate: Column,
+      filters: Manifest => Seq[org.apache.spark.sql.sources.Filter])
+      : (Long, Long) =
+    rewriteWhere(spark, table, "delete", predicate, filters) { (_, aff) =>
       import org.apache.spark.sql.functions.{coalesce, lit}
       // NULL-safe keep: NOT(NULL) is NULL and would silently drop rows
       // whose predicate is undecided — SQL DELETE keeps them
@@ -2337,16 +1951,16 @@ object Snapshots {
     }
 
   /** Predicate copy-on-write at FILE granularity, shared by DELETE and
-    * UPDATE: ONE probe of the head's `candidates` (pre-pruned
-    * driver-side — key lists via [[pruneByKeyVals]], predicates via
-    * [[pruneByPredicateStats]]; it may also refuse) with the predicate
-    * pushed into the parquet scan finds the files physically holding a
-    * matching row. Only those rewrite: `rewrite` maps their slice to the
-    * rows to re-land. Every other file carries by name. Like
-    * [[commitMerge]], the result depends on the head it was computed
-    * against, so a lost claim reclaims the rewrite and recomputes —
-    * concurrent writers serialize instead of losing rows. (head, 0)
-    * when no file holds a matching row.
+    * UPDATE: ONE probe of the head's files, pre-pruned driver-side by
+    * [[FileSkipping]] on `filters` (an `In` for a key list, the
+    * translated predicate otherwise; computing them may also refuse),
+    * with the predicate pushed into the parquet scan, finds the files
+    * physically holding a matching row. Only those rewrite: `rewrite`
+    * maps their slice to the rows to re-land. Every other file carries
+    * by name. Like [[commitMerge]], the result depends on the head it
+    * was computed against, so a lost claim reclaims the rewrite and
+    * recomputes — concurrent writers serialize instead of losing rows.
+    * (head, 0) when no file holds a matching row.
     *
     * The slice is read under the DECLARED schema (a rewritten
     * pre-evolution file re-lands with the new columns as NULLs, never
@@ -2360,13 +1974,15 @@ object Snapshots {
     * attempt observes afresh, so a retry reports its own count.
     */
   private def rewriteWhere(spark: SparkSession, table: String, op: String,
-      predicate: Column, candidates: Manifest => Seq[String])(
+      predicate: Column,
+      filters: Manifest => Seq[org.apache.spark.sql.sources.Filter])(
       rewrite: (Manifest, DataFrame) => DataFrame): (Long, Long) =
     transact(spark, table, op) { m =>
       import org.apache.spark.sql.functions.{count_if, input_file_name}
       if (m.version == 0) Skip((0L, 0L))
       else {
-        val cand = candidates(m)
+        val cand = FileSkipping.prune(spark, dataDir(table), m.files,
+          m.schema, filters(m), m.colmap, m.partitions).kept
         lastWherePruned = Some((cand.size, m.files.size))
         val affected =
           if (cand.isEmpty) Set.empty[String]
@@ -2767,11 +2383,12 @@ object Snapshots {
             case _ => toKeys
           }
           // the feed of an O(keys) lazy-delete commit must not cost
-          // O(table): when `_graft_stats` covers the tombstone column,
-          // the carried set prunes driver-side to files whose [min,max]
-          // can hold a deleted key — on a z-ordered table the pre-images
-          // come from a handful of files, not every carried one
-          val cand = pruneByKeyStats(spark, table, kc, newKeys, carried)
+          // O(table): when an index covers the tombstone column, the
+          // carried set prunes driver-side to files that can hold a
+          // deleted key — on a z-ordered, stats-manifested table the
+          // pre-images come from a handful of files, not every carried one
+          val cand = FileSkipping.pruneByKeys(spark, dataDir(table), carried,
+            toSchema, kc, newKeys, toColmap, to.partitions).kept
           lastTombLegPruned = Some((cand.size, carried.size))
           if (cand.isEmpty) None
           else Some(readDataFiles(spark, table, cand, toSchema, toColmap).get
@@ -2884,58 +2501,53 @@ object Snapshots {
     }
   }
 
-  /** Read a version of the table with the file list pre-pruned by the
-    * stats manifest: only files whose [min, max] range intersects every
-    * `(col, lo, hi)` box side are opened — `readPruned(...).filter(box)`
-    * ≡ `read(...).filter(box)`, with the file skip decided driver-side
-    * from the (tiny) manifest before a single footer is touched. Pruning
-    * composes with snapshot semantics: the candidate set is the VERSION's
-    * file list (never a directory listing, so orphans and other
-    * versions' files can't leak in), files the stats don't cover yet are
-    * always read, and a pinned version stays prunable after later
-    * commits. Falls back to the plain versioned read when no manifest
-    * exists.
+  /** Read a version of the table with the file list pre-pruned for a
+    * box: each `(col, lo, hi)` is a `col >= lo AND col <= hi` pair for
+    * [[FileSkipping]], so only files whose stats [min, max] range (and
+    * partition dir) can intersect every side are opened —
+    * `readPruned(...).filter(box)` ≡ `read(...).filter(box)`, with the
+    * file skip decided driver-side before a single footer is touched.
+    * Pruning composes with snapshot semantics ([[readSkipping]]): files
+    * the stats don't cover yet are always read, and a pinned version
+    * stays prunable after later commits. With no index it is the plain
+    * versioned read.
     */
   def readPruned(spark: SparkSession, table: String,
       ranges: Seq[(String, Any, Any)],
       version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion(spark, table))
-    val f = fs(spark, dataDir(table))
-    val m = manifestAt(spark, table, v)
-    // fully-qualified canonical URIs: the stats manifest keys files by
-    // input_file_name() (scheme-qualified), so the version's file list
-    // must compare in the same form
-    val files = m.files
-      .map(n => f.makeQualified(new Path(dataDir(table), n)).toString)
-    if (files.isEmpty) return spark.emptyDataFrame
-    // every read path honors the version's DECLARED schema — the
-    // no-manifest fallback included, or a schema-evolved table would
-    // resolve its columns from whichever file's footer Spark samples —
-    // and the version's pending tombstones (merge-on-read deletes filter
-    // the pruned read exactly like the plain one)
-    val schema = m.schema
-    val colmap = m.colmap
-    def rd(paths: Seq[String]) = applyTombstones(spark, table, m,
-      readWithSchema(spark, table, paths, schema, colmap))
-    val dd = dataDir(table).toString
-    if (graft.operators.Layout.statsManifestCols(spark, dd).isEmpty) {
-      graft.operators.Layout.lastStatsPruned = None
-      return rd(files)
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
+    readSkipping(spark, table, version, ranges.flatMap { case (c, lo, hi) =>
+      Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi)) }) { (p, n) =>
+      graft.operators.Layout.lastStatsPruned =
+        if (p.statsRead) Some((p.kept.size, n)) else None
     }
-    val live = files.map(graft.operators.Layout.canonFile)
-    val chosen = graft.operators.Layout.selectByStats(spark, dd,
-      ranges.map { case (c, lo, hi) => (physName(colmap, c), lo, hi) }, live)
-    graft.operators.Layout.lastStatsPruned =
-      Some((chosen.length, live.length))
-    if (chosen.isEmpty) rd(files).limit(0) else rd(chosen)
+  }
+
+  /** A version read with its file list pruned by [[FileSkipping]] on
+    * `filters`: the candidate set is the VERSION's file list (never a
+    * directory listing, so orphans and other versions' files can't leak
+    * in), and every read honors the version's DECLARED schema and its
+    * pending tombstones, exactly like the plain read. `report` receives
+    * the prune and the version's file count (the spec hooks). An empty
+    * selection keeps the schema.
+    */
+  private def readSkipping(spark: SparkSession, table: String,
+      version: Option[Long], filters: Seq[org.apache.spark.sql.sources.Filter])(
+      report: (FileSkipping.Pruned, Int) => Unit): DataFrame = {
+    val v = version.getOrElse(currentVersion(spark, table))
+    val m = manifestAt(spark, table, v)
+    if (m.files.isEmpty) return spark.emptyDataFrame
+    def rd(names: Seq[String]) = applyTombstones(spark, table, m,
+      readWithSchema(spark, table, names, m.schema, m.colmap))
+    val p = FileSkipping.prune(spark, dataDir(table), m.files, m.schema,
+      filters, m.colmap, m.partitions)
+    report(p, m.files.size)
+    if (p.kept.isEmpty) rd(m.files).limit(0) else rd(p.kept)
   }
 
   // ------------------------------------------------------------------
   // Per-file Bloom file-skipping index (point lookups)
   // ------------------------------------------------------------------
-
-  private def bloomDir(table: String, column: String) =
-    new Path(dataDir(table), s"_graft_bloom_$column")
 
   /** Spec hook: (files read, files total) of the last Bloom-pruned
     * read; None when no index covered the read (full scan).
@@ -2987,7 +2599,7 @@ object Snapshots {
     require(files.nonEmpty, s"$table@v$head has no data files to index")
     // the sidecar reads footers: it keys the PHYSICAL column name
     val pc = physName(m.colmap, column)
-    val bd = bloomDir(table, pc)
+    val bd = FileSkipping.bloomDir(dataDir(table), pc)
     val existing =
       if (f.exists(bd))
         Some(spark.read.parquet(bd.toString).localCheckpoint(true))
@@ -3056,71 +2668,17 @@ object Snapshots {
     * positives only cost an extra file read). Composes with snapshot
     * semantics exactly like [[readPruned]]: the candidate set is the
     * VERSION's file list, the declared schema applies, pending
-    * tombstones filter, pinned versions stay prunable. Keys compare
-    * after a cast to the column's declared type (hash equality needs
-    * type equality), so pass keys whose string form round-trips.
+    * tombstones filter, pinned versions stay prunable. The keys are an
+    * `In` probe for [[FileSkipping]], so partition dirs and stats prune
+    * too; each key hashes as a literal cast to the column's declared
+    * type, exactly as the index build hashed the column.
     */
   def readPrunedByKeys(spark: SparkSession, table: String, column: String,
-      keys: Seq[Any], version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion(spark, table))
-    val f = fs(spark, dataDir(table))
-    val m = manifestAt(spark, table, v)
-    val files = m.files
-      .map(n => f.makeQualified(new Path(dataDir(table), n)).toString)
-    if (files.isEmpty) return spark.emptyDataFrame
-    val schema = m.schema
-    val colmap = m.colmap
-    def rd(paths: Seq[String]) = applyTombstones(spark, table, m,
-      readWithSchema(spark, table, paths, schema, colmap))
-    val pc = physName(colmap, column)
-    val bd = bloomDir(table, pc)
-    if (!f.exists(bd) || keys.isEmpty) {
-      lastBloomPruned = None
-      return rd(files)
+      keys: Seq[Any], version: Option[Long] = None): DataFrame =
+    readSkipping(spark, table, version,
+      Seq(org.apache.spark.sql.sources.In(column, keys.toArray))) { (p, n) =>
+      lastBloomPruned = if (p.bloomRead) Some((p.kept.size, n)) else None
     }
-    // hash the probe keys EXACTLY like the build: xxhash64 over the
-    // column's native type (one metadata-sized job)
-    val colType = schema.flatMap(_.fields.find(_.name == column))
-      .map(_.dataType)
-      .getOrElse(rd(files.take(1)).schema(column).dataType)
-    val canon = files.map(p => graft.operators.Layout.canonFile(p) -> p)
-    val keep = bloomSurvivors(spark, table, pc, colType, keys,
-      canon.map(_._1)).toSet
-    val chosen = canon.collect { case (c, orig) if keep(c) => orig }
-    lastBloomPruned = Some((chosen.size, files.size))
-    if (chosen.isEmpty) rd(files).limit(0) else rd(chosen)
-  }
-
-  /** Canonical-URI subset of `live` that MIGHT hold at least one of
-    * `keys` per the column's per-file Bloom sidecar. Files the sidecar
-    * does not cover always survive (same staleness contract as stats);
-    * no false negatives by the Bloom contract. `colType` is the
-    * column's DECLARED type — probe keys hash through
-    * `xxhash64(cast(key AS colType))`, exactly like the index build.
-    */
-  private def bloomSurvivors(spark: SparkSession, table: String,
-      column: String, colType: types.DataType, keys: Seq[Any],
-      live: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    import spark.implicits._
-    val bd = bloomDir(table, column)
-    if (!fs(spark, dataDir(table)).exists(bd) || keys.isEmpty) return live
-    val hashes = keys.map(_.toString).toDF("k")
-      .select(xxhash64(col("k").cast(colType))).collect().map(_.getLong(0))
-    val blooms = spark.read.parquet(bd.toString)
-      .select("file", "bloom").collect()
-      .map(r => graft.operators.Layout.canonUri(r.getString(0)) ->
-        r.getAs[Array[Byte]]("bloom")).toMap
-    live.filter { c =>
-      blooms.get(c) match {
-        case None => true // uncovered: always read (same as stats)
-        case Some(bytes) =>
-          val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(bytes))
-          hashes.exists(bf.mightContainLong)
-      }
-    }
-  }
 
   /** Spec hook: (files chosen, files total) of the last DSv2 catalog
     * scan that consulted the sidecar indexes during filter pushdown
@@ -3169,140 +2727,23 @@ object Snapshots {
       (stats ++ bloom).map(p => physToLogical.getOrElse(p, p))).distinct
   }
 
-  /** Inclusive upper bound for the `LIKE 'p%'` range: the prefix with
-    * its last bumpable char incremented and the tail dropped — every
-    * string starting with `p` sorts strictly below it. None (unbounded)
-    * when any char sits at or above the surrogate range, where a UTF-16
-    * unit bump is not the code-point successor.
-    */
-  private def prefixUpperBound(p: String): Option[String] = {
-    if (p.exists(_ >= 0xD800.toChar)) return None
-    val i = p.lastIndexWhere(_ < 0xD7FF.toChar)
-    if (i < 0) None
-    else Some(p.substring(0, i) + (p.charAt(i) + 1).toChar)
-  }
-
-  /** Driver-side file skipping from PUSHED-DOWN source filters — the
-    * same prune [[readPruned]] / [[readPrunedByKeys]] perform, but
-    * triggered by plain catalog SQL (`SELECT ... FROM snap.t WHERE k =
-    * 42`, sources/SnapshotCatalog.scala) with zero new syntax: the
-    * ScanBuilder hands the pushed conjuncts here before Spark's parquet
-    * scan is constructed. `names` are the scanned VERSION's manifest
-    * entries; returns the surviving subset, order preserved.
-    *
-    * Sound by construction — the selection can only FALSE-POSITIVE
-    * (open an extra file), never drop a matching row: range conjuncts
-    * (=, <, <=, >, >=) prune via the `_graft_stats` manifest with
-    * NULL-stats/uncovered files always kept, equality/IN probes on a
-    * Bloom-indexed column prune via the per-file sidecar (no false
-    * negatives by contract), `LIKE 'p%'` prunes as the
-    * range [p, bumped-prefix) on string stats, and every other shape —
-    * OR, NOT, other string ops, unindexed columns, types whose
-    * driver-side rendering differs from the stats encoding
-    * (timestamps) — keeps its files. Spark
-    * re-applies every pushed filter post-scan regardless.
+  /** Driver-side file skipping from PUSHED-DOWN source filters
+    * ([[FileSkipping.prune]], the path every read, probe and DML takes),
+    * for the DSv2 catalog scan (`SELECT ... FROM snap.t WHERE k = 42`,
+    * sources/SnapshotCatalog.scala): the ScanBuilder hands the pushed
+    * conjuncts here before Spark's parquet scan is constructed, and a
+    * runtime filter its join-key set. `names` are the scanned VERSION's
+    * manifest entries; returns the surviving subset, order preserved.
+    * Sound by construction (an extra file may open, a matching row is
+    * never dropped); Spark re-applies every pushed filter post-scan.
     */
   def pruneFilesByFilters(spark: SparkSession, table: String,
       names: Seq[String], schema: Option[types.StructType],
       filters: Seq[org.apache.spark.sql.sources.Filter],
       colmap: Map[String, String] = Map.empty,
-      partition: Seq[(String, String)] = Nil): Seq[String] = {
-    import org.apache.spark.sql.sources._
-    if (names.isEmpty || filters.isEmpty) return names
-    val dd = dataDir(table).toString
-    // sidecars key PHYSICAL names; filters speak logical
-    val statsCols0 = graft.operators.Layout.statsManifestCols(spark, dd)
-      .getOrElse(Nil).toSet
-    val bloomCols0 = bloomIndexedColumns(spark, table).toSet
-    def statsCols(c: String) = statsCols0(physName(colmap, c))
-    def bloomCols(c: String) = bloomCols0(physName(colmap, c))
-    if (statsCols0.isEmpty && bloomCols0.isEmpty && partition.isEmpty)
-      return names
-    val (canon, byCanon) = canonCandidates(spark, table, names)
-    // point-set probes compare only where the stats manifest's typed
-    // encoding is exact driver-side (numerics as double, strings and
-    // ISO dates as strings); timestamps render differently → no prune
-    def statsComparable(vs: Seq[Any]): Option[Seq[Any]] = {
-      val v = vs.filter(_ != null)
-      if (v.nonEmpty && v.forall(x => x.isInstanceOf[Number] ||
-          x.isInstanceOf[String] || x.isInstanceOf[java.sql.Date]))
-        Some(v)
-      else None
-    }
-    var live = canon
-    // DIRECTORY leg: the declared partition transform prunes canonical
-    // URIs too (the `__gp=` component survives qualification)
-    def partBounds(c: String, lo: Option[Any], hi: Option[Any]): Unit =
-      if (partition.exists(_._1 == c) && live.nonEmpty)
-        live = pruneEntriesByPartition(partition, Seq((c, lo, hi)), live,
-          schema)
-    def partAnyOf(c: String, vs: Seq[Any]): Unit =
-      partition.zipWithIndex
-        .find(p => p._1._1 == c && live.nonEmpty)
-        .foreach { case ((_, kind), level) =>
-          val nn = vs.filter(_ != null)
-          // bucket rendering is type-strict (hashInt vs hashLong) — a
-          // probe class mismatching the declared column type must keep
-          // everything, never hash into the wrong bucket
-          val dt = schema.flatMap(_.fields.find(_.name == c))
-            .map(_.dataType)
-          if (bucketModulus(kind).isEmpty ||
-              nn.forall(bucketProbeTypeOk(dt, _))) {
-            val rendered = nn.map(partProbeValue(kind, _))
-            // one unrenderable member means any entry might hold it
-            if (rendered.nonEmpty && rendered.forall(_.isDefined)) {
-              val set = rendered.flatten.toSet
-              live = live.filter(e => partValueAt(e, level).forall(v =>
-                v == NullPartition || set.contains(v)))
-            }
-          }
-        }
-    def statsBounds(c: String, lo: Option[Any], hi: Option[Any]): Unit = {
-      partBounds(c, lo, hi)
-      if (statsCols(c) && live.nonEmpty)
-        live = graft.operators.Layout.selectByStatsBounds(spark, dd,
-          physName(colmap, c), lo, hi, live)
-    }
-    def bloomProbe(c: String, vs: Seq[Any]): Unit =
-      if (bloomCols(c) && live.nonEmpty) {
-        val keys = vs.filter(_ != null)
-        val colType = schema.flatMap(_.fields.find(_.name == c))
-          .map(_.dataType)
-        if (keys.nonEmpty && colType.isDefined)
-          live = bloomSurvivors(spark, table, physName(colmap, c),
-            colType.get, keys, live)
-      }
-    def walk(f: Filter): Unit = f match {
-      case EqualTo(a, v) if v != null =>
-        statsBounds(a, Some(v), Some(v)); bloomProbe(a, Seq(v))
-      case EqualNullSafe(a, v) if v != null =>
-        statsBounds(a, Some(v), Some(v)); bloomProbe(a, Seq(v))
-      case In(a, vs) =>
-        partAnyOf(a, vs.toSeq)
-        if (statsCols(a) && live.nonEmpty)
-          statsComparable(vs.toSeq).foreach { v =>
-            live = graft.operators.Layout.selectByStatsAnyOf(spark, dd,
-              physName(colmap, a), v, live)
-          }
-        bloomProbe(a, vs.toSeq)
-      case GreaterThan(a, v) => statsBounds(a, Some(v), None)
-      case GreaterThanOrEqual(a, v) => statsBounds(a, Some(v), None)
-      case LessThan(a, v) => statsBounds(a, None, Some(v))
-      case LessThanOrEqual(a, v) => statsBounds(a, None, Some(v))
-      case StringStartsWith(a, p) if p.nonEmpty =>
-        // LIKE 'p%' is the range [p, nextPrefix(p)): every match is
-        // ≥ p and < the prefix with its last char bumped, so the stats
-        // sidecar's string min/max prune prefix probes file-level.
-        // Restricted to strings below the surrogate range — bumping a
-        // UTF-16 unit into (or past) a surrogate would not be the
-        // code-point successor UTF8String's byte order assumes.
-        statsBounds(a, Some(p), prefixUpperBound(p))
-      case And(l, r) => walk(l); walk(r)
-      case _ => () // OR / NOT / string ops / unknown: keep (sound)
-    }
-    filters.foreach(walk)
-    live.map(byCanon)
-  }
+      partition: Seq[(String, String)] = Nil): Seq[String] =
+    FileSkipping.prune(spark, dataDir(table), names, schema, filters, colmap,
+      partition).kept
 
   // ------------------------------------------------------------------
   // Exactly-once streaming commits

@@ -120,6 +120,45 @@ class CommitJobsSpec extends AnyFunSuite {
       r(55L) == "hot" && r(54L) == "v54")
   }
 
+  /** [[table]] with a third column `x` = 2 × id and `_graft_stats` on all
+    * three columns.
+    */
+  private def statsTable(): String = {
+    val t = java.nio.file.Files.createTempDirectory("graft_jobs").toString + "/t"
+    (0 until 6).foreach { f =>
+      Snapshots.commitAppend(spark,
+        (f * 10L until f * 10L + 10L).map(i => (i, s"v$i", 2.0 * i))
+          .toDF("id", "v", "x").coalesce(1), t)
+    }
+    Snapshots.extendStats(spark, t, Seq("id", "v", "x"))
+    t
+  }
+
+  test("a three-conjunct pruneFilesByFilters on a stats-manifested table runs at most two jobs") {
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual,
+      StringStartsWith}
+    val t = statsTable()
+    val files = Snapshots.filesAt(spark, t, 6L)
+    val (kept, n) = jobsOf(Snapshots.pruneFilesByFilters(spark, t, files,
+      Snapshots.schemaAt(spark, t, 6L), Seq(GreaterThanOrEqual("id", 15L),
+        LessThanOrEqual("x", 50.0), StringStartsWith("v", "v2"))))
+    assert(n <= 2, s"the prune ran $n jobs; want <= 2 (one sidecar read)")
+    // only the third file (ids 20..29) passes all three: the second's
+    // v values ("v10".."v19") sort below the prefix range
+    assert(kept == files.slice(2, 3), s"kept $kept of $files")
+  }
+
+  test("commitDeleteWhere and commitDelete on a stats-manifested table run at most four jobs") {
+    val t = statsTable()
+    val ((_, d1), n1) = jobsOf(Snapshots.commitDeleteWhere(spark, t,
+      col("id") >= 12L && col("x") <= 30.0))
+    assert(d1 == 4L && n1 <= 4, s"delete-where removed $d1 rows in $n1 jobs")
+    val ((_, d2), n2) = jobsOf(
+      Snapshots.commitDelete(spark, t, Seq(1L, 33L), "id"))
+    assert(d2 == 2L && n2 <= 4, s"delete removed $d2 rows in $n2 jobs")
+    assert(Snapshots.read(spark, t).count() == 54L)
+  }
+
   test("compactSmallFiles runs one job: the packed write") {
     val t = table()
     val (v, n) = jobsOf(Snapshots.compactSmallFiles(spark, t, minSmall = 4))
