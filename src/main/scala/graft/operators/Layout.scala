@@ -261,14 +261,20 @@ object Layout {
     }
 
   /** Stats columns a manifest at `path` declares (parsed from its
-    * `<col>__min` schema, from the same cached read as [[statsRows]]),
-    * None when the table has no manifest — how maintenance rebuilds a
-    * manifest without being told the columns.
+    * `<col>__min` schema), None when the table has no manifest — how
+    * maintenance rebuilds a manifest without being told the columns.
+    * The schema comes from [[sidecarRows]]'s cache when that is current,
+    * else from the sidecar's footer: maintenance usually rewrites the
+    * sidecar next, so its rows are not collected here.
     */
   def statsManifestCols(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Seq[String]] =
-    statsRows(spark, path).map(_._1.fieldNames.toSeq
+      path: String): Option[Seq[String]] = {
+    val p = new org.apache.hadoop.fs.Path(path, statsDir)
+    fingerprint(spark, p).map(fp => sidecarCache.get(p.toString)
+      .collect { case (`fp`, s, _) => s }
+      .getOrElse(spark.read.parquet(p.toString).schema).fieldNames.toSeq
       .collect { case n if n.endsWith("__min") => n.stripSuffix("__min") })
+  }
 
   /** Per-FILE column min/max manifest — the table-format stats idea
     * (Delta add-file stats, Iceberg manifest ranges) without adopting
@@ -355,48 +361,57 @@ object Layout {
         }
     }
 
-  // (statsDir fingerprint → (schema, uri → stats row)): ONE collect of
-  // the manifest serves every planning consumer of a scan — file
-  // skipping, limit truncation, topN prune, metadata aggregates and
+  // (sidecar dir → (fingerprint, schema, uri → row)): ONE collect of a
+  // file-skipping sidecar (`_graft_stats`, a `_graft_bloom_<col>`)
+  // serves every planning consumer of a scan and every commit attempt —
+  // file skipping, limit truncation, topN prune, metadata aggregates and
   // row-count stats each probe the same rows; re-collecting per probe
   // would multiply driver planning IO. Fingerprint = the sidecar files'
   // (name, len, mtime), so any rewrite/append invalidates; bounded,
   // cleared wholesale past the cap (correctness never depends on a hit).
-  private val statsRowsCache = scala.collection.concurrent.TrieMap
+  private val sidecarCache = scala.collection.concurrent.TrieMap
     .empty[String, (String, org.apache.spark.sql.types.StructType,
       Map[String, org.apache.spark.sql.Row])]
 
-  /** The whole stats sidecar at `path`: its schema and one row per
-    * covered file, keyed by canonical `input_file_name()` URI. One
-    * listing of the sidecar dir per call; the parquet read and collect
-    * (two Spark jobs) run only when the sidecar changed since the last
-    * call. None when there is no sidecar.
+  /** The fingerprint of sidecar dir `p` from one listing: its files'
+    * (name, length, mtime). None when there is no sidecar.
     */
-  private def statsRows(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[(org.apache.spark.sql.types.StructType,
-        Map[String, org.apache.spark.sql.Row])] = {
-    val p = new org.apache.hadoop.fs.Path(path, statsDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val listing =
-      try fs.listStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val fp = listing.filter(_.isFile)
+  private def fingerprint(spark: org.apache.spark.sql.SparkSession,
+      p: org.apache.hadoop.fs.Path): Option[String] =
+    try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).filter(_.isFile)
       .map(st => s"${st.getPath.getName}:${st.getLen}:" +
         s"${st.getModificationTime}")
-      .sorted.mkString(";")
-    val key = p.toString
-    statsRowsCache.get(key) match {
-      case Some((cachedFp, s, m)) if cachedFp == fp => Some((s, m))
-      case _ =>
-        val manifest = spark.read.parquet(p.toString)
-        val m = manifest.collect()
-          .map(r => canonUri(
-            r.getString(manifest.schema.fieldIndex("file"))) -> r).toMap
-        if (statsRowsCache.size > 256) statsRowsCache.clear()
-        statsRowsCache.put(key, (fp, manifest.schema, m))
-        Some((manifest.schema, m))
+      .sorted.mkString(";"))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The whole sidecar at dir `p`: its schema and one row per covered
+    * file, keyed by canonical `input_file_name()` URI (its `file`
+    * column). One listing of the dir per call; the parquet read and
+    * collect (two Spark jobs) run only when the sidecar changed since
+    * the last call. None when there is no sidecar.
+    */
+  private[graft] def sidecarRows(spark: org.apache.spark.sql.SparkSession,
+      p: org.apache.hadoop.fs.Path)
+      : Option[(org.apache.spark.sql.types.StructType,
+        Map[String, org.apache.spark.sql.Row])] =
+    fingerprint(spark, p).map { fp =>
+      sidecarCache.get(p.toString) match {
+        case Some((`fp`, s, m)) => (s, m)
+        case _ =>
+          val sidecar = spark.read.parquet(p.toString)
+          val m = sidecar.collect()
+            .map(r => canonUri(
+              r.getString(sidecar.schema.fieldIndex("file"))) -> r).toMap
+          if (sidecarCache.size > 256) sidecarCache.clear()
+          sidecarCache.put(p.toString, (fp, sidecar.schema, m))
+          (sidecar.schema, m)
+      }
     }
-  }
+
+  private def statsRows(spark: org.apache.spark.sql.SparkSession,
+      path: String) =
+    sidecarRows(spark, new org.apache.hadoop.fs.Path(path, statsDir))
 
   /** The stats-manifest rows covering EXACTLY the given canonical file
     * URIs — the metadata-only aggregate path's input: None when the

@@ -4,7 +4,8 @@ import scala.util.Try
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, types}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash,
+  XxHash64}
 import org.apache.spark.sql.sources._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,10 +20,12 @@ import graft.operators.Layout
   *     flat, foreign and NULL-partition entries always survive;
   *   - the `_graft_stats` sidecar: per-file min/max, read once per call
   *     by [[graft.operators.Layout.selectByStats]]; files it does not
-  *     cover, and NULL stats, always survive;
+  *     cover, and NULL stats, always survive, and timestamp conditions
+  *     never prune by it;
   *   - per-file Bloom sidecars (`_graft_bloom_<col>`): equality and IN
   *     probes on an indexed column, no false negatives by the Bloom
-  *     contract; uncovered files always survive.
+  *     contract; uncovered files, and files hashed under another type
+  *     than the column's declared one, always survive.
   *
   * Conditions arrive as V1 `sources.Filter`s, the algebra Spark's own
   * pushdown speaks: the catalog hands over its pushed conjuncts, a DML
@@ -96,32 +99,64 @@ private[graft] object FileSkipping
     val stats = Layout.selectByStats(spark, dataDir.toString, conds,
       live.map(canonOf))
     stats.map(_.toSet).foreach(k => live = live.filter(n => k(canonOf(n))))
-    // BLOOM leg: one existence probe per point-probed column
+    // BLOOM leg: one sidecar read per point-probed column, and each
+    // live file's filter deserialized once per call
     var bloomRead = false
     points.map(_._1).distinct.foreach { c =>
-      val bd = bloomDir(dataDir, phys(c))
-      typeOf(c).filter(_ => dataDir.getFileSystem(
-          spark.sparkContext.hadoopConfiguration).exists(bd)).foreach { dt =>
-        bloomRead = true
-        if (live.nonEmpty) {
-          val blooms = spark.read.parquet(bd.toString)
-            .select("file", "bloom").collect()
-            .map(r => Layout.canonUri(r.getString(0)) ->
-              r.getAs[Array[Byte]]("bloom")).toMap
+      bloomSidecar(spark, dataDir, schema, colmap, c).foreach {
+        case (dt, byFile) =>
+          bloomRead = true
+          val filters = live.flatMap(n => byFile.get(canonOf(n)).map(b =>
+            n -> org.apache.spark.util.sketch.BloomFilter.readFrom(
+              new java.io.ByteArrayInputStream(b)))).toMap
           points.filter(_._1 == c).foreach { case (_, vs) =>
             hashesOf(vs, dt, tz).foreach { hs =>
-              live = live.filter(n => blooms.get(canonOf(n)).forall { b =>
-                val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-                  new java.io.ByteArrayInputStream(b))
-                hs.exists(bf.mightContainLong)
-              })
+              live = live.filter(n =>
+                filters.get(n).forall(bf => hs.exists(bf.mightContainLong)))
             }
           }
-        }
       }
     }
     Pruned(live, stats.isDefined, bloomRead)
   }
+
+  /** Whether any index can prune on logical column `column`: the
+    * declared partition transform, the stats sidecar or a Bloom sidecar
+    * [[prune]] would probe.
+    */
+  private def coveredBy(spark: SparkSession, dataDir: Path,
+      schema: Option[types.StructType], colmap: Map[String, String],
+      partition: Seq[(String, String)], column: String): Boolean =
+    partition.exists(_._1 == column) ||
+      Layout.statsManifestCols(spark, dataDir.toString)
+        .exists(_.contains(colmap.getOrElse(column, column))) ||
+      bloomSidecar(spark, dataDir, schema, colmap, column).isDefined
+
+  /** The Bloom sidecar a probe on logical column `c` uses: the column's
+    * declared type and each covered file's serialized filter, keyed by
+    * canonical URI, read through [[Layout.sidecarRows]]'s cache. Only
+    * rows whose recorded build `type` is the declared type count: a
+    * file hashed before an ALTER widened the column (int to bigint,
+    * float to double, a decimal's precision) holds other hashes for the
+    * same values, and a probe of it could drop a file holding the key.
+    * None without a declared type (legacy table) or a sidecar.
+    */
+  private def bloomSidecar(spark: SparkSession, dataDir: Path,
+      schema: Option[types.StructType], colmap: Map[String, String],
+      c: String): Option[(types.DataType, Map[String, Array[Byte]])] =
+    schema.flatMap(_.fields.find(_.name == c)).flatMap { f =>
+      Layout.sidecarRows(spark, bloomDir(dataDir, colmap.getOrElse(c, c)))
+        .map { case (s, rows) =>
+          val t = bloomType(f.dataType)
+          f.dataType -> (if (!s.fieldNames.contains("type")) Map.empty
+            else rows.collect { case (u, r) if r.getAs[String]("type") == t =>
+              u -> r.getAs[Array[Byte]]("bloom") })
+        }
+    }
+
+  /** How a Bloom sidecar row records the type its keys were hashed as. */
+  private[warehouse] def bloomType(dt: types.DataType): String =
+    dt.catalogString
 
   /** [[prune]] for the keys of a one-column frame (a change set's
     * touched keys, a tombstone key set) on table column `column`. The
@@ -134,13 +169,9 @@ private[graft] object FileSkipping
       colmap: Map[String, String],
       partition: Seq[(String, String)]): Pruned = {
     import org.apache.spark.sql.functions.{col, max, min}
-    val pc = colmap.getOrElse(column, column)
-    def indexed = partition.exists(_._1 == column) ||
-      Layout.statsManifestCols(spark, dataDir.toString)
-        .exists(_.contains(pc)) ||
-      (schema.isDefined && dataDir.getFileSystem(
-        spark.sparkContext.hadoopConfiguration).exists(bloomDir(dataDir, pc)))
-    if (names.isEmpty || !indexed) return Pruned(names, false, false)
+    if (names.isEmpty ||
+        !coveredBy(spark, dataDir, schema, colmap, partition, column))
+      return Pruned(names, false, false)
     val k = keys.na.drop()
     val vals = Snapshots.distinctRows(k, MaxPruneKeys).map(_.get(0))
     val filters =
@@ -199,11 +230,12 @@ private[graft] object FileSkipping
 
   /** `v` in the stats sidecar's typed encoding for a column of type `dt`
     * (a legacy table's column takes `v`'s own type): a double for
-    * numerics, the cast-to-string form (in the session zone, as the
-    * sidecar was written) for strings, dates and timestamps. A string
-    * probing a date/timestamp column casts to that type first. None
-    * when the categories differ or the cast fails: a sloppy cross-type
-    * comparison must never mis-prune.
+    * numerics, the cast-to-string form for strings and dates. A string
+    * probing a date column casts to a date first. None when the
+    * categories differ or the cast fails: a sloppy cross-type
+    * comparison must never mis-prune. None for timestamps too: the
+    * sidecar renders them in the time zone of the session that wrote
+    * it, which it does not record, so no probe value compares safely.
     */
   private def statsValue(v: Any, dt: Option[types.DataType],
       tz: String): Option[Any] = Try {
@@ -212,10 +244,10 @@ private[graft] object FileSkipping
       case (_: types.NumericType, _: types.NumericType) =>
         Cast(l, types.DoubleType, Some(tz)).eval()
       case (_: types.StringType, _: types.StringType) => l.value.toString
-      case (t @ (types.DateType | types.TimestampType |
-          types.TimestampNTZType), s)
-          if s == t || s.isInstanceOf[types.StringType] =>
-        Cast(Cast(l, t, Some(tz)), types.StringType, Some(tz)).eval().toString
+      case (types.DateType, s)
+          if s == types.DateType || s.isInstanceOf[types.StringType] =>
+        Cast(Cast(l, types.DateType, Some(tz)), types.StringType, Some(tz))
+          .eval().toString
     }
   }.toOption.filter(_ != null)
 
@@ -238,29 +270,25 @@ private[graft] object FileSkipping
   private def statsAnyOf(c: String,
       encoded: Seq[Option[Any]]): Option[StatsCond] = {
     import org.apache.spark.sql.functions.{exists, lit}
-    if (encoded.exists(_.isEmpty)) return None
     val vs = encoded.flatten
-    val arr: Option[Array[_]] =
-      if (vs.forall(_.isInstanceOf[Double]))
-        Some(vs.map(_.asInstanceOf[Double]).toArray)
-      else if (vs.forall(_.isInstanceOf[String]))
-        Some(vs.map(_.asInstanceOf[String]).toArray)
-      else None
-    arr.flatMap { a =>
-      if (a.length == 1) statsRange(c, Some(a(0)), Some(a(0)))
-      else if (a.length > MaxPruneKeys) {
-        // the envelope in the order the sidecar compares: doubles
-        // numerically, strings by UTF-8 bytes (Spark's string order,
-        // which is not java.lang.String's past the BMP)
-        val ord: Ordering[Any] =
-          if (a(0).isInstanceOf[Double])
-            Ordering.by[Any, Double](_.asInstanceOf[Double])
-          else Ordering.by[Any, UTF8String](x =>
-            UTF8String.fromString(x.toString))
-        statsRange(c, Some(a.min(ord)), Some(a.max(ord)))
-      } else Some(c -> { (min: Column, max: Column) =>
-        exists(lit(a), v => min <= v && max >= v)
-      })
+    val nums = vs.forall(_.isInstanceOf[Double])
+    if (vs.size < encoded.size || !(nums || vs.forall(_.isInstanceOf[String])))
+      None
+    else if (vs.size == 1) statsRange(c, vs.headOption, vs.headOption)
+    else if (vs.size > MaxPruneKeys) {
+      // the envelope in the order the sidecar compares: doubles
+      // numerically, strings by UTF-8 bytes (Spark's string order,
+      // which is not java.lang.String's past the BMP)
+      val ord: Ordering[Any] =
+        if (nums) Ordering.by[Any, Double](_.asInstanceOf[Double])
+        else Ordering.by[Any, UTF8String](x =>
+          UTF8String.fromString(x.toString))
+      statsRange(c, Some(vs.min(ord)), Some(vs.max(ord)))
+    } else {
+      val arr = lit(if (nums) vs.map(_.asInstanceOf[Double]).toArray
+        else vs.map(_.toString).toArray)
+      Some(c -> ((min: Column, max: Column) =>
+        exists(arr, v => min <= v && max >= v)))
     }
   }
 
@@ -311,7 +339,7 @@ private[graft] object FileSkipping
     * truncation is monotone, so `col >= lo` implies `trunc(col) >=
     * trunc(lo)` in ISO string order). Bucket dirs carry no order, so
     * only point sets whose classes match the declared type prune them;
-    * a member that does not render exactly prunes nothing.
+    * a member that does not render prunes nothing.
     */
   private def partitionLeg(partition: Seq[(String, String)],
       schema: Option[types.StructType],
@@ -328,16 +356,16 @@ private[graft] object FileSkipping
           dt.forall(_.isInstanceOf[types.StringType])
         val sets = points.filter(p => renders && p._1 == pc).flatMap {
           case (_, vs) =>
-            val rendered = vs.map(partProbeValue(kind, _, tz))
+            val rendered = vs.map(partRenderings(kind, _, dt, tz))
             if ((bucket && !vs.forall(bucketProbeTypeOk(dt, _))) ||
                 !rendered.forall(_.isDefined)) None
-            else Some(rendered.flatten.toSet)
+            else Some(rendered.flatten.flatten.toSet)
         }
         val bounds =
           if (bucket || !renders) Nil
           else ranges.filter(_._1 == pc).map { case (_, lo, hi) =>
-            (lo.flatMap(partProbeValue(kind, _, tz)),
-              hi.flatMap(partProbeValue(kind, _, tz)))
+            (lo.flatMap(partRenderings(kind, _, dt, tz)).map(_.min),
+              hi.flatMap(partRenderings(kind, _, dt, tz)).map(_.max))
           }
         if (live.isEmpty || (sets.isEmpty && bounds.isEmpty)) live
         else live.filter { e =>
@@ -351,65 +379,59 @@ private[graft] object FileSkipping
         }
     }
 
+  /** Every dir name a probe value `v` on a partition column of type
+    * `dt` may render to. A date or month dir of a TIMESTAMP column holds
+    * the file's rows truncated in the time zone of the session that
+    * staged it, which the manifest does not record; zone offsets stay
+    * within ±18 h, so the value's instant falls on its UTC date ±1 day
+    * in every zone, and all three render. Other values render once
+    * ([[partProbeValue]]). None when `v` does not render.
+    */
+  private def partRenderings(kind: String, v: Any,
+      dt: Option[types.DataType], tz: String): Option[Seq[String]] = {
+    val zoned = dt.contains(types.TimestampType) || (dt.isEmpty &&
+      (v.isInstanceOf[java.sql.Timestamp] || v.isInstanceOf[java.time.Instant]))
+    if (!zoned || (kind != "date" && kind != "month"))
+      partProbeValue(kind, v, tz).map(Seq(_))
+    else Try {
+      val day = Cast(Cast(Literal(v), types.TimestampType, Some(tz)),
+        types.DateType, Some("UTC")).eval() match { case d: Int => d }
+      (day - 1 to day + 1).map(d =>
+        partProbeValue(kind, java.time.LocalDate.ofEpochDay(d), tz).get)
+    }.toOption
+  }
+
   /** The transform's rendering of a driver-side probe value, in the
     * same form the staging writer puts in dir names — None when the
     * value's rendering is not exact (prune nothing, never wrongly).
-    * Timestamps truncate to a date in the session zone `tz`, as the
-    * writer's `cast(col AS date)` does.
+    * Timestamps truncate to a date in the session zone `tz`.
     */
   private[warehouse] def partProbeValue(kind: String, v: Any,
-      tz: String): Option[String] = {
-    def sessionDate(ts: Any): Option[String] = Try {
-      val days = Cast(Literal(ts), types.DateType, Some(tz))
-        .eval().asInstanceOf[Int]
-      java.time.LocalDate.ofEpochDay(days.toLong).toString
-    }.toOption
-    val dateStr: Option[String] = v match {
-      case d: java.sql.Date => Some(d.toString)
-      case t: java.sql.Timestamp => sessionDate(t)
-      case ins: java.time.Instant => sessionDate(ins)
-      // java8 / NTZ external forms (TIMESTAMP_NTZ filters arrive as
-      // LocalDateTime; the java8API conf serves LocalDate/Instant)
-      case ld: java.time.LocalDate => Some(ld.toString)
-      case ldt: java.time.LocalDateTime => Some(ldt.toLocalDate.toString)
-      case s: String if s.length >= 10 &&
-        s.matches("""\d{4}-\d{2}-\d{2}.*""") => Some(s.take(10))
-      case _ => None
+      tz: String): Option[String] = Try {
+    val l = Literal(v)
+    // a date as Spark casts the value (a string parses, a timestamp
+    // truncates in `tz`); an uncastable class renders nothing
+    def date = {
+      require(Cast.canCast(l.dataType, types.DateType))
+      Cast(l, types.DateType, Some(tz)).eval() match {
+        case d: Int => java.time.LocalDate.ofEpochDay(d).toString
+      }
     }
     kind match {
-      case "identity" => v match {
-        // strings only: a numeric rendering would compare
-        // lexicographically ("10" < "9") — prune nothing instead
-        case str: String => Some(str)
-        case _ => None
-      }
-      case "date" => dateStr
-      case "month" => dateStr.map(_.take(7))
-      case b if Snapshots.bucketModulus(b).isDefined =>
+      // strings only: a numeric rendering would compare
+      // lexicographically ("10" < "9") — prune nothing instead
+      case "identity" => v match { case s: String => s }
+      case "date" => date
+      case "month" => date.take(7)
+      case b =>
         // EQUALITY-ONLY semantics: the rendering is the probed value's
         // bucket id — meaningful for = / IN membership, never for
-        // ranges (partitionLeg guards). The hash must reproduce the
-        // writer's `pmod(hash(col), N)` from the EXTERNAL value, so
-        // only the classes with one internal form render.
-        Snapshots.bucketModulus(b).flatMap { n =>
-          import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
-          import org.apache.spark.sql.{types => T}
-          val h: Option[Int] = v match {
-            case i: java.lang.Integer => Some(Murmur3HashFunction
-              .hash(i.intValue(), T.IntegerType, 42L).toInt)
-            case l: java.lang.Long => Some(Murmur3HashFunction
-              .hash(l.longValue(), T.LongType, 42L).toInt)
-            case s: String => Some(Murmur3HashFunction.hash(
-              UTF8String.fromString(s), T.StringType, 42L).toInt)
-            case d: java.sql.Date => Some(Murmur3HashFunction.hash(
-              org.apache.spark.sql.catalyst.util.DateTimeUtils
-                .fromJavaDate(d), T.DateType, 42L).toInt)
-            case ld: java.time.LocalDate => Some(Murmur3HashFunction
-              .hash(ld.toEpochDay.toInt, T.DateType, 42L).toInt)
-            case _ => None
-          }
-          h.map(x => (((x % n) + n) % n).toString)
-        }
+        // ranges (partitionLeg guards). The writer's `pmod(hash(col),
+        // N)` over the literal: it hashes like the column's values only
+        // when its type is the declared one ([[bucketProbeTypeOk]]).
+        val n = Snapshots.bucketModulus(b).get
+        val h = Murmur3Hash(Seq(l), 42).eval().asInstanceOf[Int]
+        (((h % n) + n) % n).toString
     }
-  }
+  }.toOption
 }

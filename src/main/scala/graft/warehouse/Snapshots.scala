@@ -2580,8 +2580,12 @@ object Snapshots {
     * file list (never a directory listing — staged orphans stay out,
     * and a shallow clone's / in-place convert's FOREIGN refs index in),
     * scanning ONLY the column of the not-yet-covered files. Values
-    * hash through `xxhash64` of the column's native type; the build is
-    * ONE distributed aggregation (Spark's own BloomFilterAggregate,
+    * hash through `xxhash64` of the column's declared type, which each
+    * sidecar row records (`type`; NULL on a table with no declared
+    * schema): a row hashed under another type (a file indexed before
+    * ALTER widened the column, or by a build that did not record it)
+    * counts as uncovered and re-indexes here. The build is ONE
+    * distributed aggregation (Spark's own BloomFilterAggregate,
     * map-side partial like any agg), ~1.2 KB/file per 1k expected
     * items at fpp 0.01. Returns files newly indexed.
     */
@@ -2600,11 +2604,15 @@ object Snapshots {
     // the sidecar reads footers: it keys the PHYSICAL column name
     val pc = physName(m.colmap, column)
     val bd = FileSkipping.bloomDir(dataDir(table), pc)
+    val bt = m.schema.map(s => FileSkipping.bloomType(s(column).dataType))
     val existing =
       if (f.exists(bd))
         Some(spark.read.parquet(bd.toString).localCheckpoint(true))
       else None
-    val rawKnown = existing
+    // rows hashed under another type than the declared one re-index
+    val typed = existing.filter(_.columns.contains("type"))
+      .map(_.filter(col("type") <=> lit(bt.orNull)))
+    val rawKnown = typed
       .map(_.select("file").collect().map(_.getString(0)).toSeq)
       .getOrElse(Nil)
     val known = rawKnown.map(graft.operators.Layout.canonUri).toSet
@@ -2618,7 +2626,7 @@ object Snapshots {
     val missing = files.map(graft.operators.Layout.canonFile)
       .filterNot(known)
     if (missing.isEmpty && dead.isEmpty) return 0
-    val base = existing.map { e =>
+    val base = typed.map { e =>
       if (dead.isEmpty) e
       else e.filter(!org.apache.spark.sql.functions.col("file")
         .isInCollection(dead))
@@ -2650,6 +2658,7 @@ object Snapshots {
         .toAggregateExpression())
     val fresh = rd.groupBy(input_file_name().as("file"))
       .agg(bloomAgg.as("bloom"), count(lit(1)).as("rows"))
+      .withColumn("type", lit(bt.orNull).cast("string"))
     base match {
       case Some(e) => e.unionByName(fresh).coalesce(1)
         .write.mode("overwrite").parquet(bd.toString)

@@ -166,4 +166,17 @@ class CommitJobsSpec extends AnyFunSuite {
     assert(Snapshots.filesAt(spark, t, v.get).size == 1)
     assert(rows(t).size == 60)
   }
+
+  test("commitMerge on a Bloom-indexed key reads the sidecar once, then from the cache") {
+    val t = table()
+    Snapshots.extendBloom(spark, t, "id", expectedItemsPerFile = 100L)
+    val (_, cold) = jobsOf(Snapshots.commitMerge(spark,
+      Seq((3L, "u3")).toDF("id", "v"), t, Seq("id")))
+    val (_, warm) = jobsOf(Snapshots.commitMerge(spark,
+      Seq((25L, "u25")).toDF("id", "v"), t, Seq("id")))
+    assert(cold <= 4 && warm <= 2, s"the merges ran $cold, then $warm " +
+      "jobs; want <= 4 (sidecar read, probe, write), then <= 2")
+    val r = rows(t)
+    assert(r.size == 60 && r(3L) == "u3" && r(25L) == "u25" && r(4L) == "v4")
+  }
 }

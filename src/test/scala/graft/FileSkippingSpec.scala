@@ -266,4 +266,112 @@ class FileSkippingSpec extends AnyFunSuite {
       }
     } finally spark.conf.set("spark.sql.session.timeZone", zone)
   }
+
+  test("a Bloom sidecar built before ALTER widened its column drops no file") {
+    val t = Files.createTempDirectory("graft_skip_widen").toString + "/t"
+    Snapshots.commitAppend(spark, spark.range(400)
+      .selectExpr("CAST(id AS INT) AS k", "CAST(id AS STRING) AS v")
+      .repartitionByRange(4, col("k")), t)
+    Snapshots.extendBloom(spark, t, "k", expectedItemsPerFile = 200L)
+    Snapshots.commitWidenColumn(spark, t, "k", LongType)
+    // the old files hashed their keys as int; a probe hashes bigint
+    def rows(k: Long) = Snapshots.read(spark, t).filter(col("k") === k)
+      .collect().map(_.getString(1)).toSeq
+    assert(Snapshots.readPrunedByKeys(spark, t, "k", Seq(7L))
+      .filter(col("k") === 7L).count() == 1L, "readPrunedByKeys lost k=7")
+    Snapshots.commitMerge(spark, Seq((7L, "merged")).toDF("k", "v"), t,
+      Seq("k"))
+    assert(rows(7L) == Seq("merged"),
+      "MERGE must update the row an old file holds, not add one")
+    assert(Snapshots.commitDelete(spark, t, Seq(123L), "k")._2 == 1L)
+    assert(rows(123L).isEmpty)
+    assert(Snapshots.commitDeleteWhere(spark, t, col("k") === 250L)._2 == 1L)
+    assert(Snapshots.commitUpdateWhere(spark, t, col("k") === 330L,
+      Seq("v" -> lit("updated")))._2 == 1L)
+    assert(rows(330L) == Seq("updated"))
+    // re-extending re-indexes every live file under the widened type
+    val live = Snapshots.filesAt(spark, t, Snapshots.currentVersion(spark, t))
+    assert(Snapshots.extendBloom(spark, t, "k",
+      expectedItemsPerFile = 200L) == live.size)
+    assert(Snapshots.readPrunedByKeys(spark, t, "k", Seq(399L))
+      .filter(col("k") === 399L).count() == 1L)
+    val (chosen, total) = Snapshots.lastBloomPruned.get
+    assert(total == live.size && chosen < total,
+      s"the re-indexed Bloom kept $chosen of $total")
+  }
+
+  test("timestamp stats written in one session zone prune no probe from another") {
+    val root = Files.createTempDirectory("graft_skip_tsstats").toString
+    spark.conf.set("spark.sql.catalog.gfskipts",
+      classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gfskipts.root", root)
+    val t = s"$root/t"
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      spark.conf.set("spark.sql.session.timeZone", "UTC")
+      Snapshots.commitAppend(spark, spark.range(800).select(col("id"),
+        (lit(1704067200L + 3 * 3600L) + col("id") * 86400L).cast("timestamp")
+          .as("ts")).repartitionByRange(8, col("id")), t)
+      Snapshots.extendStats(spark, t, Seq("ts"))
+      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+      // each key is the first row of its file: rendered 8 h earlier than
+      // the UTC-rendered file min, it would fall below that file's range
+      for (id <- Seq(0L, 100L, 500L)) {
+        val key = Snapshots.read(spark, t).filter(col("id") === id)
+          .head().getTimestamp(1)
+        assert(spark.table("gfskipts.t").filter(col("ts") === lit(key))
+          .count() == 1L, s"catalog lookup of $key")
+        assert(Snapshots.readPrunedByKeys(spark, t, "ts", Seq(key))
+          .filter(col("ts") === lit(key)).count() == 1L,
+          s"readPrunedByKeys of $key")
+        assert(Snapshots.readPruned(spark, t, Seq(("ts", key, key)))
+          .filter(col("ts") === lit(key)).count() == 1L,
+          s"readPruned of $key")
+      }
+      assert(Snapshots.commitDelete(spark, t,
+        Seq(Snapshots.read(spark, t).filter(col("id") === 100L)
+          .head().getTimestamp(1)), "ts")._2 == 1L)
+      val key = Snapshots.read(spark, t).filter(col("id") === 200L)
+        .head().getTimestamp(1)
+      assert(Snapshots.commitDeleteWhere(spark, t,
+        col("ts") <= lit(key) && col("ts") >= lit(key))._2 == 1L)
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
+
+  test("date dirs of a timestamp column staged in one zone prune no probe from another") {
+    val root = Files.createTempDirectory("graft_skip_tsdirs").toString
+    spark.conf.set("spark.sql.catalog.gfskipdirs",
+      classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gfskipdirs.root", root)
+    val t = s"$root/t"
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    // one row a day at 23:00 UTC: 13:00 the next day at UTC+14
+    def rows(ids: Seq[Long]) = ids.toDF("id").select(col("id"),
+      (lit(1704067200L + 23 * 3600L) + col("id") * 86400L).cast("timestamp")
+        .as("ts"))
+    try {
+      spark.conf.set("spark.sql.session.timeZone", "UTC")
+      Snapshots.commitAppend(spark, rows(Seq(0L)), t)
+      Snapshots.commitSetPartition(spark, t, "ts", "date")
+      Snapshots.commitAppend(spark, rows(1L to 15L), t)
+      spark.conf.set("spark.sql.session.timeZone", "Pacific/Kiritimati")
+      def key(id: Long) = Snapshots.read(spark, t).filter(col("id") === id)
+        .head().getTimestamp(1)
+      for (id <- Seq(3L, 9L)) {
+        val k = key(id)
+        assert(spark.table("gfskipdirs.t").filter(col("ts") === lit(k))
+          .count() == 1L, s"catalog lookup of $k")
+        val (chosen, total) = Snapshots.lastCatalogPruned.get
+        assert(chosen < total, s"the dirs kept $chosen of $total files")
+        assert(Snapshots.readPrunedByKeys(spark, t, "ts", Seq(k))
+          .filter(col("ts") === lit(k)).count() == 1L,
+          s"readPrunedByKeys of $k")
+        assert(Snapshots.readPruned(spark, t, Seq(("ts", k, k)))
+          .filter(col("ts") === lit(k)).count() == 1L, s"readPruned of $k")
+      }
+      assert(Snapshots.commitDelete(spark, t, Seq(key(5L)), "ts")._2 == 1L)
+      assert(Snapshots.commitDeleteWhere(spark, t,
+        col("ts") === lit(key(12L)))._2 == 1L)
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
 }
