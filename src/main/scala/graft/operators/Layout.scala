@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Data-layout control — at 100 TB the dominant query cost is how much
   * data a scan must touch, and layout is the lever: files carry min/max
@@ -91,7 +94,7 @@ object Layout {
     // tombstone-filtered input, per-column aggs would re-execute the
     // whole upstream read k times
     val numeric = cols.filter(c =>
-      df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
+      df.schema(c).dataType.isInstanceOf[NumericType])
     val ranges: Map[String, (Double, Double)] =
       if (numeric.isEmpty) Map.empty
       else {
@@ -220,61 +223,58 @@ object Layout {
     try new org.apache.hadoop.fs.Path(new java.net.URI(s)).toString
     catch { case _: Exception => canonFile(s) }
 
-  /** The per-file min/max aggregate columns of a manifest (one builder,
-    * shared by write and incremental append so the encodings can never
-    * diverge). Encoding is TYPED per column: numerics as double,
-    * string/date/timestamp as strings (ISO date/timestamp strings sort
-    * chronologically, so lexicographic range checks are correct) —
-    * corpus tables key on `source`/`lang`/dates as often as on numbers.
+  /** The per-file aggregate columns of a stats sidecar (one builder,
+    * shared by write and incremental append so the layouts can never
+    * diverge): the file's row count, then per column its NULL count and
+    * [min, max] in the column's own type — exact and zone-free (a
+    * timestamp bound is an instant, a decimal keeps its scale), ordered
+    * by Spark's own min/max. The counts let COUNT(*)/COUNT(col) answer
+    * from the sidecar, and the ORDER BY pruner needs exact non-null
+    * cardinalities (nulls sort to one end). Sidecars from before the
+    * counts leave them NULL, and every consumer refuses then.
     */
-  private def statsAggs(schema: org.apache.spark.sql.types.StructType,
-      cols: Seq[String]): Seq[Column] =
-    // per-file row count first: COUNT(*) (and AVG reconstruction)
-    // answer from the manifest alone — the metadata-only aggregate path
-    count(lit(1L)).cast("long").as("__count") +:
-    cols.flatMap { c =>
-      // per-column NULL count alongside min/max: COUNT(col) answers
-      // from the manifest, and the ORDER BY file pruner needs exact
-      // non-null cardinalities (nulls sort to one end — a bound-only
-      // prune that miscounted them would drop top-k rows, not just IO).
-      // Older manifests lack the column; incremental appends leave
-      // their rows NULL (unionByName) and every consumer refuses then.
-      val nulls =
-        (count(lit(1L)) - count(col(c))).cast("long").as(s"${c}__nulls")
-      schema(c).dataType match {
-        case _: org.apache.spark.sql.types.NumericType => Seq(
-          min(col(c)).cast("double").as(s"${c}__min"),
-          max(col(c)).cast("double").as(s"${c}__max"), nulls)
-        case _ => Seq(
-          min(col(c)).cast("string").as(s"${c}__min"),
-          max(col(c)).cast("string").as(s"${c}__max"), nulls)
-      }
-    }
+  private def statsAggs(cols: Seq[String]): Seq[Column] =
+    count(lit(1L)).as("__count") +: cols.flatMap(c => Seq(
+      min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max"),
+      (count(lit(1L)) - count(col(c))).as(s"${c}__nulls")))
 
-  private def statsSupported(t: org.apache.spark.sql.types.DataType): Boolean =
-    t match {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case org.apache.spark.sql.types.StringType => true
-      case org.apache.spark.sql.types.DateType => true
-      case org.apache.spark.sql.types.TimestampType => true
-      case _ => false
-    }
+  private def statsSupported(t: DataType): Boolean = t match {
+    case _: NumericType | StringType | DateType | TimestampType => true
+    case _ => false
+  }
 
   /** Stats columns a manifest at `path` declares (parsed from its
-    * `<col>__min` schema), None when the table has no manifest — how
-    * maintenance rebuilds a manifest without being told the columns.
-    * The schema comes from [[sidecarRows]]'s cache when that is current,
-    * else from the sidecar's footer: maintenance usually rewrites the
-    * sidecar next, so its rows are not collected here.
+    * schema), None when the table has no manifest — how maintenance
+    * rebuilds a manifest without being told the columns. The schema
+    * comes from [[sidecarRows]]'s cache when that is current, else from
+    * the sidecar's footer: maintenance usually rewrites the sidecar
+    * next, so its rows are not collected here.
     */
   def statsManifestCols(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[Seq[String]] = {
     val p = new org.apache.hadoop.fs.Path(path, statsDir)
-    fingerprint(spark, p).map(fp => sidecarCache.get(p.toString)
+    fingerprint(spark, p).map(fp => trackedCols(sidecarCache.get(p.toString)
       .collect { case (`fp`, s, _) => s }
-      .getOrElse(spark.read.parquet(p.toString).schema).fieldNames.toSeq
-      .collect { case n if n.endsWith("__min") => n.stripSuffix("__min") })
+      .getOrElse(spark.read.parquet(p.toString).schema)))
   }
+
+  private def trackedCols(sidecar: StructType): Seq[String] =
+    sidecar.fieldNames.toSeq.collect {
+      case n if n.endsWith("__min") => n.stripSuffix("__min") }
+
+  /** The columns of a sidecar whose bounds are sound for `schema` (each
+    * column's type by physical name; None: the sidecar's own types
+    * stand), each with that type: the bounds' type must up-cast to it,
+    * as a file written before a widening does. The double and string
+    * encodings of older sidecars do not, so those columns drop out.
+    */
+  private def trackedTypes(sidecar: StructType,
+      schema: Option[StructType]): Map[String, DataType] =
+    trackedCols(sidecar).flatMap { c =>
+      val from = sidecar(s"${c}__min").dataType
+      val to = schema.flatMap(_.find(_.name == c)).fold(from)(_.dataType)
+      if (Cast.canUpCast(from, to)) Some(c -> to) else None
+    }.toMap
 
   /** Per-FILE column min/max manifest — the table-format stats idea
     * (Delta add-file stats, Iceberg manifest ranges) without adopting
@@ -309,7 +309,7 @@ object Layout {
         s"stats column $c is ${t.simpleString}; per-file min/max stats " +
           "require a numeric, string, date or timestamp column")
     }
-    val aggs = statsAggs(df.schema, statsCols)
+    val aggs = statsAggs(statsCols)
     df.groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .coalesce(1)
@@ -321,22 +321,32 @@ object Layout {
     * streaming accretion: appended files are readable immediately (the
     * pruned reader always includes unmanifested files) but unprunable
     * until this runs, and it scans ONLY the missing files, never the
-    * table. Returns how many files were added.
+    * table. A manifest a column's bounds are unsound in ([[trackedTypes]]
+    * against `schema`, by default the table's) is rewritten whole.
+    * Returns how many files were added.
     */
   def appendStatsManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String, files: Option[Seq[String]] = None): Int =
+      path: String, files: Option[Seq[String]] = None,
+      schema: Option[StructType] = None): Int =
     statsManifestCols(spark, path) match {
       case None => 0
       case Some(cols) =>
         val mPath = s"$path/$statsDir"
+        lazy val table = spark.read.parquet(path)
+        val candidates = files.map(_.map(canonFile))
+          .getOrElse(table.inputFiles.map(canonUri).toSeq)
+        val sidecar = spark.read.parquet(mPath)
+        val sound = trackedTypes(sidecar.schema,
+          schema.orElse(if (files.isEmpty) Some(table.schema) else None))
+        if (sound.size < cols.size) {
+          writeStatsManifest(spark, path, cols, files)
+          return candidates.size
+        }
         // materialize the current manifest BEFORE overwriting the dir a
         // lazy plan would still be reading from
-        val existing = spark.read.parquet(mPath).localCheckpoint(true)
+        val existing = sidecar.localCheckpoint(true)
         val known = existing.select("file").collect()
           .map(r => canonUri(r.getString(0))).toSet
-        val candidates = files.map(_.map(canonFile))
-          .getOrElse(spark.read.parquet(path).inputFiles
-            .map(canonUri).toSeq)
         val missing = candidates.filterNot(known)
         if (missing.isEmpty) 0
         else {
@@ -347,13 +357,14 @@ object Layout {
             case None => spark.read.option("basePath", path)
               .parquet(missing.toIndexedSeq: _*)
           }
-          val aggs = statsAggs(freshRead.schema, cols)
+          val aggs = statsAggs(cols)
           val fresh = freshRead
             .groupBy(input_file_name().as("file"))
             .agg(aggs.head, aggs.tail: _*)
           // pre-__count manifests lack the count column: their rows
           // keep a NULL count (pruning unaffected; the metadata-only
-          // aggregate path requires full nonnull coverage and refuses)
+          // aggregate path requires full nonnull coverage and refuses);
+          // bounds of files from before a widening widen with the union
           existing.unionByName(fresh, allowMissingColumns = true)
             .coalesce(1)
             .write.mode("overwrite").parquet(mPath)
@@ -370,8 +381,7 @@ object Layout {
   // (name, len, mtime), so any rewrite/append invalidates; bounded,
   // cleared wholesale past the cap (correctness never depends on a hit).
   private val sidecarCache = scala.collection.concurrent.TrieMap
-    .empty[String, (String, org.apache.spark.sql.types.StructType,
-      Map[String, org.apache.spark.sql.Row])]
+    .empty[String, (String, StructType, Map[String, Row])]
 
   /** The fingerprint of sidecar dir `p` from one listing: its files'
     * (name, length, mtime). None when there is no sidecar.
@@ -393,8 +403,7 @@ object Layout {
     */
   private[graft] def sidecarRows(spark: org.apache.spark.sql.SparkSession,
       p: org.apache.hadoop.fs.Path)
-      : Option[(org.apache.spark.sql.types.StructType,
-        Map[String, org.apache.spark.sql.Row])] =
+      : Option[(StructType, Map[String, Row])] =
     fingerprint(spark, p).map { fp =>
       sidecarCache.get(p.toString) match {
         case Some((`fp`, s, m)) => (s, m)
@@ -409,25 +418,76 @@ object Layout {
       }
     }
 
-  private def statsRows(spark: org.apache.spark.sql.SparkSession,
-      path: String) =
-    sidecarRows(spark, new org.apache.hadoop.fs.Path(path, statsDir))
-
-  /** The stats-manifest rows covering EXACTLY the given canonical file
-    * URIs — the metadata-only aggregate path's input: None when the
-    * manifest is missing or ANY file is uncovered (an answer from
-    * partial coverage would be silently wrong, never just slow).
-    * Returns (schema, row per file) with rows keyed like
-    * [[statsRows]] (canonical `input_file_name()` URIs).
+  /** One tracked column of one file: its NULL count (None on a row
+    * from before null counts) and [min, max] as Catalyst values of the
+    * column's type, null when the file holds no non-null value.
     */
-  private[graft] def statsRowsFor(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      canonFiles: Seq[String])
-      : Option[(org.apache.spark.sql.types.StructType,
-        Seq[org.apache.spark.sql.Row])] =
-    statsRows(spark, path).flatMap { case (schema, byFile) =>
-      val rows = canonFiles.map(byFile.get)
-      if (rows.exists(_.isEmpty)) None else Some((schema, rows.flatten))
+  private[graft] final case class ColumnStats(nulls: Option[Long],
+      min: Any, max: Any)
+
+  /** One file's sidecar row: its row count (None on a row from before
+    * row counts) and its tracked columns by physical name.
+    */
+  private[graft] final case class FileStats(rows: Option[Long],
+      columns: Map[String, ColumnStats])
+
+  /** Typed stats of a file list, aligned with it (None for a file the
+    * sidecar does not cover); `types` maps each tracked column to the
+    * type its bounds hold.
+    */
+  private[graft] final case class Stats(types: Map[String, DataType],
+      files: Seq[Option[FileStats]]) {
+    /** Every file's stats; None when any file is uncovered. */
+    def covered: Option[Seq[FileStats]] =
+      if (files.contains(None)) None else Some(files.flatten)
+    /** Every file's row count; None when any is unknown. */
+    def rowCounts: Option[Seq[Long]] = all(_.rows)
+    /** Every file's non-null count of column `c`; None when any is
+      * unknown or `c` is untracked.
+      */
+    def nonNulls(c: String): Option[Seq[Long]] = all(f => for {
+      n <- f.rows; s <- f.columns.get(c); u <- s.nulls } yield n - u)
+    private def all(v: FileStats => Option[Long]): Option[Seq[Long]] =
+      covered.map(_.map(v)).filter(_.forall(_.isDefined)).map(_.flatten)
+  }
+
+  /** The stats sidecar at `path`, typed, for the canonical file URIs
+    * `files` (built only when a sidecar exists): the one reader every
+    * consumer of `_graft_stats` goes through — file skipping, LIMIT and
+    * TopN pruning, metadata aggregates and row-count estimates. Bounds
+    * hold the column's type from `schema` (by physical name; None: the
+    * sidecar's own types): bounds written before a widening cast up,
+    * and a column whose bounds cannot ([[trackedTypes]]) is untracked,
+    * so it prunes nothing and answers nothing. None when there is no
+    * sidecar.
+    */
+  private[graft] def stats(spark: org.apache.spark.sql.SparkSession,
+      path: String, schema: Option[StructType],
+      files: => Seq[String]): Option[Stats] =
+    sidecarRows(spark, new org.apache.hadoop.fs.Path(path, statsDir)).map {
+      case (s, byFile) =>
+        val types = trackedTypes(s, schema)
+        val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
+        def long(n: String): Row => Option[Long] =
+          if (!s.fieldNames.contains(n)) _ => None
+          else {
+            val i = s.fieldIndex(n)
+            r => Option(r.get(i)).map(_.asInstanceOf[Long])
+          }
+        def bound(n: String, to: DataType): Row => Any = {
+          val i = s.fieldIndex(n)
+          val from = s(i).dataType
+          val toCatalyst =
+            CatalystTypeConverters.createToCatalystConverter(from)
+          r => if (r.isNullAt(i) || from == to) toCatalyst(r.get(i))
+            else Cast(Literal(toCatalyst(r.get(i)), from), to, tz).eval()
+        }
+        val cols = types.map { case (c, dt) => (c, long(s"${c}__nulls"),
+          bound(s"${c}__min", dt), bound(s"${c}__max", dt)) }
+        val rows = long("__count")
+        Stats(types, files.map(byFile.get(_).map(r => FileStats(rows(r),
+          cols.map { case (c, nulls, lo, hi) =>
+            c -> ColumnStats(nulls(r), lo(r), hi(r)) }.toMap))))
     }
 
   /** Drop manifest entries whose data file no longer exists — the cheap
@@ -464,41 +524,52 @@ object Layout {
   @volatile var lastStatsPruned: Option[(Int, Int)] = None
 
   /** Subset of `candidates` (canonical file URIs) that the stats
-    * sidecar at `path` cannot rule out: the one stats selector, shared by every
-    * file-skipping caller ([[graft.warehouse.FileSkipping]] for snapshot
-    * tables, [[statsPrunedRead]] for flat ones). Each condition pairs a
-    * column with a keep test over that column's `(__min, __max)` sidecar
-    * columns; a file survives when every test holds. The sidecar is
-    * read once ([[statsRows]]), which also says which columns it
-    * tracks: conditions on other columns are ignored. NULL min/max
-    * (all-null values, or a manifest from before the numeric guard)
-    * mean "cannot prune", never "skip the file", and files the sidecar
-    * does not cover are always kept. The tests run over the covered
-    * rows as a local relation, so the selection itself runs no Spark
-    * job, and `conds` and `candidates` are built only when a sidecar
-    * exists. None when there is no sidecar.
+    * sidecar at `path` cannot rule out: the one stats selector, shared
+    * by every file-skipping caller ([[graft.warehouse.FileSkipping]] for
+    * snapshot tables, [[statsPrunedRead]] for flat ones). `conds` gets
+    * the tracked columns' types ([[stats]], typed by `schema`) and pairs
+    * a column with a keep test over its `(min, max)` bounds; a file
+    * survives when every test holds. Tests compare under Spark's own
+    * ordering and type coercion, and conditions on untracked columns are
+    * ignored. NULL bounds (an all-null file) mean "cannot prune", and
+    * files the sidecar does not cover are always kept. The tests run
+    * over the bounds as a local relation, so the selection itself runs
+    * no Spark job, and `candidates` is built only when a sidecar exists.
+    * None when there is no sidecar.
     */
   private[graft] def selectByStats(spark: org.apache.spark.sql.SparkSession,
-      path: String, conds: => Seq[(String, (Column, Column) => Column)],
-      candidates: => Seq[String]): Option[Seq[String]] =
-    statsRows(spark, path).map { case (schema, byFile) =>
-      val live = candidates
-      val tracked =
-        conds.filter(c => schema.fieldNames.contains(s"${c._1}__min"))
-      val rows = live.flatMap(byFile.get)
-      if (tracked.isEmpty || rows.isEmpty) live
+      path: String, schema: Option[StructType],
+      conds: Map[String, DataType] => Seq[(String, (Column, Column) => Column)],
+      candidates: => Seq[String]): Option[Seq[String]] = {
+    lazy val live = candidates
+    stats(spark, path, schema, live).map { st =>
+      val tests = conds(st.types).filter(c => st.types.contains(c._1))
+      val cs = tests.map(_._1).distinct
+      val covered = st.files.zipWithIndex.collect { case (Some(f), i) =>
+        InternalRow.fromSeq(i +: cs.flatMap(c =>
+          Seq(f.columns(c).min, f.columns(c).max)))
+      }
+      if (tests.isEmpty || covered.isEmpty) live
       else {
-        val keep = tracked.map { case (c, test) =>
-          val (lo, hi) = (col(s"${c}__min"), col(s"${c}__max"))
+        import org.apache.spark.sql.catalyst.expressions.AttributeReference
+        val attrs = AttributeReference("i", IntegerType)() +:
+          cs.zipWithIndex.flatMap { case (c, j) => Seq(
+            AttributeReference(s"lo$j", st.types(c))(),
+            AttributeReference(s"hi$j", st.types(c))()) }
+        val keep = tests.map { case (c, test) =>
+          val j = cs.indexOf(c)
+          val (lo, hi) = (col(s"lo$j"), col(s"hi$j"))
           test(lo, hi) || lo.isNull || hi.isNull
         }.reduce(_ && _)
-        val selected = spark.createDataFrame(
-            java.util.Arrays.asList(rows: _*), schema)
-          .filter(keep).select("file").collect()
-          .map(r => canonUri(r.getString(0))).toSet
-        live.filter(f => selected(f) || !byFile.contains(f))
+        val kept = org.apache.spark.sql.graft.ColumnBridge.ofRows(spark,
+            org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+              attrs, covered))
+          .filter(keep).collect().map(_.getInt(0)).toSet
+        live.zip(st.files).zipWithIndex.collect {
+          case ((f, s), i) if kept(i) || s.isEmpty => f }
       }
     }
+  }
 
   /** Read `path` pruned by the stats manifest to files whose [min, max]
     * ranges intersect EVERY `(col, lo, hi)` box side (inclusive). Rows
@@ -517,7 +588,7 @@ object Layout {
     val live = all.inputFiles.map(canonUri).toSeq
     val box = ranges.map { case (c, lo, hi) =>
       c -> ((mn: Column, mx: Column) => mx >= lit(lo) && mn <= lit(hi)) }
-    val chosen = selectByStats(spark, path, box, live)
+    val chosen = selectByStats(spark, path, Some(all.schema), _ => box, live)
     lastStatsPruned = chosen.map(c => (c.length, live.length))
     chosen match {
       case None => all

@@ -1773,7 +1773,7 @@ object SnapshotQ {
 
   /** LIMIT file truncation (SupportsPushDownLimit on the catalog scan):
     * `SELECT * FROM snap.t LIMIT n` keeps only the shortest file PREFIX
-    * whose sidecar `__count`s sum to ≥ n — on a million-file table a
+    * whose sidecar row counts sum to ≥ n — on a million-file table a
     * LIMIT 10 peek opens one file, not one per partition planned. The
     * row set a LIMIT returns is nondeterministic by SQL semantics, so
     * the graded output is the COUNT of the limited subquery (987 <

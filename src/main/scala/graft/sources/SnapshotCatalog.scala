@@ -743,7 +743,7 @@ object SnapshotCatalog {
     override def isPartiallyPushed(): Boolean = true
 
     /** `LIMIT n` truncates the FILE LIST: when the stats sidecar holds a
-      * nonnull `__count` for every live entry (and nothing else was
+      * row count for every live entry (and nothing else was
       * pushed — a filter or aggregate changes what "n rows" means), the
       * scan keeps only the shortest entry prefix whose counts sum to
       * ≥ n. `SELECT * FROM snap.t LIMIT 10` on a million-file table
@@ -752,12 +752,8 @@ object SnapshotCatalog {
       */
     override def pushLimit(limit: Int): Boolean = {
       if (limit <= 0 || pushedCatalyst.nonEmpty || aggPushed) return false
-      val (ss, rows) = Snapshots.statsAggRows(spark, table, liveEntries)
-        .getOrElse(return false)
-      if (!ss.fieldNames.contains("__count")) return false
-      val ci = ss.fieldIndex("__count")
-      if (rows.exists(_.isNullAt(ci))) return false
-      val counts = rows.map(_.getLong(ci))
+      val counts = Snapshots.fileStats(spark, table, liveEntries, declared,
+        colmap).flatMap(_.rowCounts).getOrElse(return false)
       var cum = 0L; var n = 0
       while (n < counts.length && cum < limit) { cum += counts(n); n += 1 }
       if (cum >= limit && n < liveEntries.size) {
@@ -791,10 +787,8 @@ object SnapshotCatalog {
             if r.fieldNames().length == 1 => r.fieldNames()(0)
         case _ => return false
       }
-      val field = declared.flatMap(_.fields.find(_.name == colName))
-        .getOrElse(return false)
       val keep = SnapshotCatalog.topNKeepEntries(spark, table, liveEntries,
-        colmap.getOrElse(colName, colName), field.dataType,
+        colmap.getOrElse(colName, colName), declared, colmap,
         asc = o.direction() ==
           org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING,
         nullsFirst = o.nullOrdering() ==
@@ -1043,22 +1037,13 @@ object SnapshotCatalog {
     override def supportedCustomMetrics()
         : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
       initial.supportedCustomMetrics()
-    // EXACT row count from the stats sidecar's per-file __count when
+    // EXACT row count from the stats sidecar's per-file row counts when
     // every live entry is covered: the planner's join-strategy and AQE
     // decisions run on real cardinality instead of a bytes-only guess.
     // One driver-side read of the tiny manifest, cached per scan;
     // sizeInBytes still comes from the parquet scan.
-    private lazy val exactRows: Option[Long] =
-      Snapshots.statsAggRows(spark, table, baseEntries)
-        .flatMap { case (schema, rows) =>
-          if (!schema.fieldNames.contains("__count")) None
-          else {
-            val i = schema.fieldIndex("__count")
-            val cs = rows.map(_.get(i))
-            if (cs.exists(_ == null)) None
-            else Some(cs.map(_.asInstanceOf[Long]).sum)
-          }
-        }
+    private lazy val exactRows: Option[Long] = Snapshots.fileStats(spark,
+      table, baseEntries, declared, colmap).flatMap(_.rowCounts).map(_.sum)
 
     override def estimateStatistics()
         : org.apache.spark.sql.connector.read.Statistics = {
@@ -1082,95 +1067,59 @@ object SnapshotCatalog {
   /** The entries of a catalog scan that can still hold a row of the
     * global `ORDER BY <col> LIMIT k` answer, decided entirely from the
     * stats sidecar; None when the sidecar cannot prove a SOUND prune
-    * (missing file coverage, pre-`__nulls` manifest, undecodable
-    * encoding) — the caller then reads everything.
+    * (missing file coverage or counts, an untracked column) — the
+    * caller then reads everything.
     *
     * Soundness, phrased for ASC (DESC mirrors through the flipped
-    * comparator): sort files by their WORST value bound (max + slack),
+    * comparator): sort files by their WORST value bound (max),
     * accumulate guaranteed-rank rows until k are proven — under NULLS
     * FIRST every row of a file counts (nulls rank ahead of all
     * values), under NULLS LAST only the non-null rows do. T = the
     * worst bound among the counted files; every counted file survives
     * the prune by construction (its best bound ≤ its worst ≤ T). A
-    * file whose BEST bound (min − slack) ranks strictly worse than T
-    * is outranked by those ≥ k surviving rows for EVERY row it holds,
-    * so dropping it cannot change any valid top-k answer. Files with
+    * file whose BEST bound (min) ranks strictly worse than T is
+    * outranked by those ≥ k surviving rows for EVERY row it holds, so
+    * dropping it cannot change any valid top-k answer. Files with
     * nulls are never dropped under NULLS FIRST; under NULLS LAST the k
     * counted rows are non-null and outrank any null, so even an
-    * all-null file drops. Bounds widen by one ulp on long/decimal
-    * columns (their sidecar double encoding may round either way);
-    * date/timestamp string bounds refuse on a leading '-' (negative
-    * years do not sort lexicographically).
+    * all-null file drops. Bounds are exact in the column's type and
+    * compare under Spark's ordering for it.
     */
   private[sources] def topNKeepEntries(spark: SparkSession, table: String,
-      entries: Seq[String], physCol: String,
-      dt: org.apache.spark.sql.types.DataType, asc: Boolean,
-      nullsFirst: Boolean, k: Int): Option[Seq[String]] = {
-    import org.apache.spark.sql.types._
-    val numeric = dt.isInstanceOf[NumericType]
-    if (!numeric && dt != StringType && dt != DateType &&
-      dt != TimestampType) return None
-    val (ss, rows) = Snapshots.statsAggRows(spark, table, entries)
+      entries: Seq[String], physCol: String, declared: Option[StructType],
+      colmap: Map[String, String], asc: Boolean, nullsFirst: Boolean,
+      k: Int): Option[Seq[String]] = {
+    val st = Snapshots.fileStats(spark, table, entries, declared, colmap)
       .getOrElse(return None)
-    def idxOpt(n: String): Option[Int] =
-      if (ss.fieldNames.contains(n)) Some(ss.fieldIndex(n)) else None
-    val ci = idxOpt("__count").getOrElse(return None)
-    val ni = idxOpt(s"${physCol}__nulls").getOrElse(return None)
-    val li = idxOpt(s"${physCol}__min").getOrElse(return None)
-    val hi = idxOpt(s"${physCol}__max").getOrElse(return None)
-    val widen: Double => Double = dt match {
-      case LongType | _: DecimalType => v => Math.ulp(v)
-      case _ => _ => 0.0 // int/short/byte/float/double cast exactly
+    // defined only when every file has its row and null counts
+    val nonNulls = st.nonNulls(physCol).getOrElse(return None)
+    val fss = entries.zip(st.covered.get).zip(nonNulls).map {
+      case ((e, f), nn) =>
+        val b = f.columns(physCol)
+        if (nn < 0) return None
+        if (nn == 0) (e, f.rows.get, 0L, None, None)
+        else if (b.min == null || b.max == null) return None
+        else if (asc) (e, f.rows.get, nn, Some(b.min), Some(b.max))
+        else (e, f.rows.get, nn, Some(b.max), Some(b.min))
     }
-    // (entry, rows, non-null rows, best rank bound, worst rank bound);
-    // bounds None for files with no non-null value
-    final case class FS(entry: String, count: Long, nonNulls: Long,
-        best: Option[Any], worst: Option[Any])
-    val fss = entries.zip(rows).map { case (e, r) =>
-      if (r.isNullAt(ci) || r.isNullAt(ni)) return None
-      val count = r.getLong(ci)
-      val nonNulls = count - r.getLong(ni)
-      if (nonNulls < 0) return None
-      if (nonNulls == 0) FS(e, count, 0L, None, None)
-      else if (r.isNullAt(li) || r.isNullAt(hi)) return None
-      else if (numeric) {
-        val lo = r.getDouble(li); val hiV = r.getDouble(hi)
-        val (b, w) = if (asc) (lo - widen(lo), hiV + widen(hiV))
-          else (hiV + widen(hiV), lo - widen(lo))
-        FS(e, count, nonNulls, Some(b), Some(w))
-      } else {
-        val lo = r.getString(li); val hiV = r.getString(hi)
-        if (dt != StringType && (lo.startsWith("-") || hiV.startsWith("-")))
-          return None
-        val (b, w) = if (asc) (lo, hiV) else (hiV, lo)
-        FS(e, count, nonNulls, Some(b), Some(w))
-      }
-    }
-    Some(topNKeepStats(
-      fss.map(f => (f.entry, f.count, f.nonNulls, f.best, f.worst)),
-      numeric, asc, nullsFirst, k))
+    Some(topNKeepStats(fss, org.apache.spark.sql.catalyst.util.TypeUtils
+      .getInterpretedOrdering(st.types(physCol)), asc, nullsFirst, k))
   }
 
   /** Pure core of [[topNKeepEntries]] — the counting/exclusion algebra
-    * over already-decoded, direction-widened per-file stats
+    * over already-decoded per-file stats
     * `(entry, count, nonNulls, bestBound, worstBound)` (bounds None for
-    * files with no non-null value; Double when `numeric`, String
-    * otherwise). Separated so PropertySpec can fuzz it against a
+    * files with no non-null value), compared by `ord`, the column type's
+    * ordering. Separated so PropertySpec can fuzz it against a
     * brute-force top-k over synthetic row multisets.
     */
   private[graft] def topNKeepStats(
       fss: Seq[(String, Long, Long, Option[Any], Option[Any])],
-      numeric: Boolean, asc: Boolean, nullsFirst: Boolean,
+      ord: Ordering[Any], asc: Boolean, nullsFirst: Boolean,
       k: Int): Seq[String] = {
     // better(a, b) < 0 ⇔ a ranks strictly before b in the output order
-    val cmpVal: (Any, Any) => Int =
-      if (numeric) (a, b) => java.lang.Double
-        .compare(a.asInstanceOf[Double], b.asInstanceOf[Double])
-      else (a, b) => org.apache.spark.unsafe.types.UTF8String
-        .fromString(a.asInstanceOf[String])
-        .compareTo(org.apache.spark.unsafe.types.UTF8String
-          .fromString(b.asInstanceOf[String]))
-    def better(a: Any, b: Any): Int = if (asc) cmpVal(a, b) else -cmpVal(a, b)
+    def better(a: Any, b: Any): Int =
+      if (asc) ord.compare(a, b) else -ord.compare(a, b)
     // counting phase: prove k rows at rank ≤ T
     val (boundless, bounded) = fss.partition(_._5.isEmpty)
     var cum: Long =
@@ -1203,21 +1152,16 @@ object SnapshotCatalog {
     * idea. At 100 TB `SELECT count(*), min(k), max(k) FROM snap.fact`
     * becomes one driver-side read of a manifest with one row per file:
     * zero data files opened, zero tasks launched. COUNT(col) rides the
-    * sidecar's per-column null counts (Σ(__count − col__nulls)) — any
-    * column type, but only manifests written since `__nulls` landed
-    * (older rows keep NULL there and refuse).
+    * sidecar's per-file row and null counts.
     *
     * Refuses (→ the footer-pushdown path) unless the answer is provably
     * EXACT:
     *   - every entry of the scanned version has a stats row, and (for
-    *     COUNT) a nonnull `__count` (pre-count manifests refuse);
-    *   - MIN/MAX columns are stats-covered and their sidecar encoding
-    *     round-trips losslessly to the column type: integrals within
-    *     the double's 2^53 exact range, float/double as stored, strings
-    *     compared as UTF8String BYTES (Spark's ordering — a Java
-    *     String.compareTo would mis-order surrogate pairs), dates via
-    *     their ISO strings. Timestamps and decimals refuse (their
-    *     sidecar rendering is lossy).
+    *     COUNT) its counts (rows from before the counts refuse);
+    *   - MIN/MAX columns are tracked ([[graft.operators.Layout.stats]]):
+    *     their bounds hold the column's type exactly — timestamps and
+    *     decimals included, bounds from before a widening cast up — and
+    *     the winner is chosen by Spark's ordering for that type.
     * NULL file stats contribute nothing to MIN/MAX (an all-null or
     * empty file), matching Spark's null-ignoring aggregates; an overall
     * empty/all-null table answers NULL.
@@ -1231,115 +1175,42 @@ object SnapshotCatalog {
     import org.apache.spark.sql.types._
     if (agg.groupByExpressions.nonEmpty) return None
     val schema = declared.getOrElse(return None)
+    // (logical name, declared type, physical name) of a bare column
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Option[String] = e match {
+        : Option[(String, DataType, String)] = e match {
       case r: NamedReference if r.fieldNames().length == 1 =>
-        Some(r.fieldNames()(0))
+        val c = r.fieldNames()(0)
+        schema.fields.find(_.name == c)
+          .map(f => (c, f.dataType, colmap.getOrElse(c, c)))
       case _ => None
     }
     // shape check BEFORE touching the sidecar: Left(None) = COUNT(*),
-    // Left(Some(c)) = COUNT(c) (answered as Σ(__count − c__nulls) — any
-    // column type, provided the sidecar tracks its null counts),
-    // Right((c, isMin)) = MIN/MAX
-    val shapes: Seq[Either[Option[String], (String, Boolean)]] =
-      agg.aggregateExpressions().toSeq.map {
-        case _: CountStar => Left(None)
-        case c: Count if !c.isDistinct =>
-          Left(Some(colOf(c.column()).getOrElse(return None)))
-        case m: Min => colOf(m.column()).map((_, true))
-          .map(Right(_)).getOrElse(return None)
-        case m: Max => colOf(m.column()).map((_, false))
-          .map(Right(_)).getOrElse(return None)
-        case _ => return None
-      }
-    def decodable(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case FloatType | DoubleType => true
-      case StringType | DateType => true
-      case _ => false
+    // Left(Some(c)) = COUNT(c), Right((c, isMin)) = MIN/MAX
+    val shapes = agg.aggregateExpressions().toSeq.map {
+      case _: CountStar => Left(None)
+      case c: Count if !c.isDistinct =>
+        Left(Some(colOf(c.column()).getOrElse(return None)))
+      case m: Min => Right((colOf(m.column()).getOrElse(return None), true))
+      case m: Max => Right((colOf(m.column()).getOrElse(return None), false))
+      case _ => return None
     }
-    shapes.foreach {
-      case Right((c, _)) =>
-        val f = schema.fields.find(_.name == c).getOrElse(return None)
-        if (!decodable(f.dataType)) return None
-      case _ => ()
-    }
-    val (statsSchema, rows) = Snapshots.statsAggRows(spark, table, entries)
+    val st = Snapshots.fileStats(spark, table, entries, declared, colmap)
       .getOrElse(return None)
-    def idx(n: String): Option[Int] =
-      if (statsSchema.fieldNames.contains(n))
-        Some(statsSchema.fieldIndex(n))
-      else None
-    def minMax(c: String, isMin: Boolean): Option[Any] = {
-      val phys = colmap.getOrElse(c, c)
-      val i = idx(s"${phys}__${if (isMin) "min" else "max"}")
-        .getOrElse(return None)
-      val dt = schema.fields.find(_.name == c).get.dataType
-      val vals = rows.map(_.get(i)).filter(_ != null)
-      if (vals.isEmpty) return Some(null)
-      val best: Any = dt match {
-        case StringType =>
-          val us = vals.map(v =>
-            org.apache.spark.unsafe.types.UTF8String.fromString(
-              v.asInstanceOf[String]))
-          if (isMin) us.min else us.max
-        case DateType =>
-          // ISO strings order chronologically; decode the winner
-          val s = vals.map(_.asInstanceOf[String])
-          val w = if (isMin) s.min else s.max
-          try Integer.valueOf(
-            java.time.LocalDate.parse(w).toEpochDay.toInt)
-          catch { case _: Exception => return None }
-        case _ =>
-          val d = vals.map(_.asInstanceOf[Double])
-          val w = if (isMin) d.min else d.max
-          dt match {
-            case DoubleType => java.lang.Double.valueOf(w)
-            case FloatType => java.lang.Float.valueOf(w.toFloat)
-            case _ => // integral: exact only inside the double's range
-              if (w != math.rint(w) || math.abs(w) > (1L << 53).toDouble)
-                return None
-              dt match {
-                case LongType => java.lang.Long.valueOf(w.toLong)
-                case IntegerType => Integer.valueOf(w.toInt)
-                case ShortType => java.lang.Short.valueOf(w.toShort)
-                case _ => java.lang.Byte.valueOf(w.toByte)
-              }
-          }
-      }
-      Some(best)
-    }
-    lazy val totalCount: Option[Long] = idx("__count").flatMap { i =>
-      val cs = rows.map(_.get(i))
-      if (cs.exists(_ == null)) None
-      else Some(cs.map(_.asInstanceOf[Long]).sum)
-    }
-    def nonNullCount(c: String): Option[Long] = {
-      val phys = colmap.getOrElse(c, c)
-      for {
-        ti <- idx("__count")
-        ui <- idx(s"${phys}__nulls")
-        sums <- {
-          val pairs = rows.map(r => (r.get(ti), r.get(ui)))
-          if (pairs.exists(p => p._1 == null || p._2 == null)) None
-          else Some(pairs.map(p =>
-            p._1.asInstanceOf[Long] - p._2.asInstanceOf[Long]).sum)
-        }
-      } yield sums
-    }
+    val files = st.covered.getOrElse(return None)
     val out = shapes.map {
-      case Left(None) =>
-        val n = totalCount.getOrElse(return None)
-        (StructField("count(*)", LongType, nullable = false),
-          java.lang.Long.valueOf(n): Any)
-      case Left(Some(c)) =>
-        val n = nonNullCount(c).getOrElse(return None)
-        (StructField(s"count($c)", LongType, nullable = false),
-          java.lang.Long.valueOf(n): Any)
-      case Right((c, isMin)) =>
-        val dt = schema.fields.find(_.name == c).get.dataType
-        val v = minMax(c, isMin).getOrElse(return None)
-        (StructField(s"${if (isMin) "min" else "max"}($c)", dt), v)
+      case Left(c) =>
+        val n = c.fold(st.rowCounts)(c => st.nonNulls(c._3))
+          .getOrElse(return None).sum
+        (StructField(s"count(${c.fold("*")(_._1)})", LongType,
+          nullable = false), java.lang.Long.valueOf(n): Any)
+      case Right(((c, dt, phys), isMin)) =>
+        if (!st.types.contains(phys)) return None
+        val vs = files.map(f => f.columns(phys))
+          .map(b => if (isMin) b.min else b.max).filter(_ != null)
+        val ord = org.apache.spark.sql.catalyst.util.TypeUtils
+          .getInterpretedOrdering(dt)
+        (StructField(s"${if (isMin) "min" else "max"}($c)", dt),
+          if (vs.isEmpty) null else if (isMin) vs.min(ord) else vs.max(ord))
     }
     Some((StructType(out.map(_._1)),
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(

@@ -7,7 +7,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, types}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash,
   XxHash64}
 import org.apache.spark.sql.sources._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.Layout
 
@@ -18,10 +17,11 @@ import graft.operators.Layout
   * can hold a matching row):
   *   - partition directories: the declared transform's `__gp=` values;
   *     flat, foreign and NULL-partition entries always survive;
-  *   - the `_graft_stats` sidecar: per-file min/max, read once per call
-  *     by [[graft.operators.Layout.selectByStats]]; files it does not
-  *     cover, and NULL stats, always survive, and timestamp conditions
-  *     never prune by it;
+  *   - the `_graft_stats` sidecar: per-file min/max in the column's own
+  *     type, read once per call by
+  *     [[graft.operators.Layout.selectByStats]]; files it does not
+  *     cover, NULL stats, and values that do not compare with the
+  *     column in its order ([[comparable]]) always survive;
   *   - per-file Bloom sidecars (`_graft_bloom_<col>`): equality and IN
   *     probes on an indexed column, no false negatives by the Bloom
   *     contract; uncovered files, and files hashed under another type
@@ -54,7 +54,7 @@ private[graft] object FileSkipping
     * names, or qualified URIs for a clone's foreign refs) that may hold
     * a row matching every filter. `schema` is the version's declared
     * logical schema (None for a legacy header-less table: no Bloom
-    * probe, and stats values compare by their own type); `colmap` maps
+    * probe, and stats bounds keep the sidecar's own type); `colmap` maps
     * renamed columns to their physical names; `partition` is the
     * declared transform.
     */
@@ -82,22 +82,23 @@ private[graft] object FileSkipping
     }.map { case (a, vs) => (a, vs.filter(_ != null).distinct) }
       .filter(_._2.nonEmpty)
     if (ranges.isEmpty && points.isEmpty) return Pruned(names, false, false)
-    def typeOf(c: String) =
-      schema.flatMap(_.fields.find(_.name == c)).map(_.dataType)
     def phys(c: String) = colmap.getOrElse(c, c)
     val tz = spark.sessionState.conf.sessionLocalTimeZone
     var live = partitionLeg(partition, schema, ranges, points, names, tz)
     // sidecars key canonical qualified URIs
     lazy val canonOf = names.zip(canonical(spark, dataDir, names)._1).toMap
-    // STATS leg: every condition of the call in one selection
-    def conds = ranges.flatMap { case (c, lo, hi) =>
-      statsRange(phys(c), lo.flatMap(statsValue(_, typeOf(c), tz)),
-        hi.flatMap(statsValue(_, typeOf(c), tz)))
-    } ++ points.flatMap { case (c, vs) =>
-      statsAnyOf(phys(c), vs.map(statsValue(_, typeOf(c), tz)))
+    // STATS leg: every condition of the call in one selection, each
+    // value compared with the column's stats in the column's type
+    def conds(tracked: Map[String, types.DataType]) = {
+      def ok(c: String)(v: Any) =
+        tracked.get(phys(c)).exists(comparable(_, v, tz))
+      ranges.flatMap { case (c, lo, hi) =>
+        statsRange(phys(c), lo.filter(ok(c)), hi.filter(ok(c)))
+      } ++ points.collect { case (c, vs) if vs.forall(ok(c)) =>
+        statsAnyOf(phys(c), vs, tz) }.flatten
     }
-    val stats = Layout.selectByStats(spark, dataDir.toString, conds,
-      live.map(canonOf))
+    val stats = Layout.selectByStats(spark, dataDir.toString,
+      schema.map(Snapshots.physSchema(_, colmap)), conds, live.map(canonOf))
     stats.map(_.toSet).foreach(k => live = live.filter(n => k(canonOf(n))))
     // BLOOM leg: one sidecar read per point-probed column, and each
     // live file's filter deserialized once per call
@@ -228,28 +229,25 @@ private[graft] object FileSkipping
     case other => Seq(other)
   }
 
-  /** `v` in the stats sidecar's typed encoding for a column of type `dt`
-    * (a legacy table's column takes `v`'s own type): a double for
-    * numerics, the cast-to-string form for strings and dates. A string
-    * probing a date column casts to a date first. None when the
-    * categories differ or the cast fails: a sloppy cross-type
-    * comparison must never mis-prune. None for timestamps too: the
-    * sidecar renders them in the time zone of the session that wrote
-    * it, which it does not record, so no probe value compares safely.
+  /** Whether probe value `v` compares with a tracked column of type `dt`
+    * in the order the column's values sort: Spark's coercion then casts
+    * only the value, or widens both sides monotonically. A number never
+    * compares with a string (that cast does not keep order), and a
+    * string probes a date or timestamp column only when it casts to one
+    * (in the session zone `tz`).
     */
-  private def statsValue(v: Any, dt: Option[types.DataType],
-      tz: String): Option[Any] = Try {
-    val l = Literal(v)
-    (dt.getOrElse(l.dataType), l.dataType) match {
-      case (_: types.NumericType, _: types.NumericType) =>
-        Cast(l, types.DoubleType, Some(tz)).eval()
-      case (_: types.StringType, _: types.StringType) => l.value.toString
-      case (types.DateType, s)
-          if s == types.DateType || s.isInstanceOf[types.StringType] =>
-        Cast(Cast(l, types.DateType, Some(tz)), types.StringType, Some(tz))
-          .eval().toString
-    }
-  }.toOption.filter(_ != null)
+  private def comparable(dt: types.DataType, v: Any, tz: String): Boolean =
+    Try {
+      val l = Literal(v)
+      (dt, l.dataType) match {
+        case (_: types.NumericType, _: types.NumericType) => true
+        case (_: types.StringType, _: types.StringType) => true
+        case (types.DateType | types.TimestampType,
+          types.DateType | types.TimestampType) => true
+        case (types.DateType | types.TimestampType, _: types.StringType) =>
+          Cast(l, dt, Some(tz)).eval() != null
+      }
+    }.getOrElse(false)
 
   private type StatsCond = (String, (Column, Column) => Column)
 
@@ -262,34 +260,26 @@ private[graft] object FileSkipping
     })
 
   /** A point set on `c`: one member is a closed range, more test every
-    * point with ONE array-literal `exists` per sidecar row (never an
-    * n-term OR), and past [[MaxPruneKeys]] the [min, max] envelope.
-    * One unencodable member (or mixed encodings) prunes nothing: any
-    * file might hold it.
+    * point with ONE typed array literal (the members cast to their
+    * common type, in the session zone) — `exists` per sidecar row,
+    * never an n-term OR — and past [[MaxPruneKeys]] its `array_min`/
+    * `array_max` envelope. Members with no common type prune nothing.
     */
-  private def statsAnyOf(c: String,
-      encoded: Seq[Option[Any]]): Option[StatsCond] = {
-    import org.apache.spark.sql.functions.{exists, lit}
-    val vs = encoded.flatten
-    val nums = vs.forall(_.isInstanceOf[Double])
-    if (vs.size < encoded.size || !(nums || vs.forall(_.isInstanceOf[String])))
-      None
-    else if (vs.size == 1) statsRange(c, vs.headOption, vs.headOption)
-    else if (vs.size > MaxPruneKeys) {
-      // the envelope in the order the sidecar compares: doubles
-      // numerically, strings by UTF-8 bytes (Spark's string order,
-      // which is not java.lang.String's past the BMP)
-      val ord: Ordering[Any] =
-        if (nums) Ordering.by[Any, Double](_.asInstanceOf[Double])
-        else Ordering.by[Any, UTF8String](x =>
-          UTF8String.fromString(x.toString))
-      statsRange(c, Some(vs.min(ord)), Some(vs.max(ord)))
-    } else {
-      val arr = lit(if (nums) vs.map(_.asInstanceOf[Double]).toArray
-        else vs.map(_.toString).toArray)
-      Some(c -> ((min: Column, max: Column) =>
-        exists(arr, v => min <= v && max >= v)))
-    }
+  private def statsAnyOf(c: String, vs: Seq[Any],
+      tz: String): Option[StatsCond] = {
+    import org.apache.spark.sql.functions.{array_max, array_min, exists}
+    if (vs.size == 1) statsRange(c, vs.headOption, vs.headOption)
+    else Try {
+      val ls = vs.map(Literal(_))
+      val t = org.apache.spark.sql.catalyst.analysis.TypeCoercion
+        .findWiderCommonType(ls.map(_.dataType)).get
+      org.apache.spark.sql.graft.ColumnBridge.column(Literal(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+          ls.map(Cast(_, t, Some(tz)).eval())), types.ArrayType(t)))
+    }.toOption.map(arr => c -> ((min: Column, max: Column) =>
+      if (vs.size > MaxPruneKeys)
+        min <= array_max(arr) && max >= array_min(arr)
+      else exists(arr, v => min <= v && max >= v)))
   }
 
   /** Inclusive upper bound for the `LIKE 'p%'` range: the prefix with

@@ -504,7 +504,7 @@ object Snapshots {
   /** The declared (logical) schema with renamed fields mapped back to
     * their physical on-file names — what parquet reads resolve against.
     */
-  private def physSchema(schema: types.StructType,
+  private[warehouse] def physSchema(schema: types.StructType,
       colmap: Map[String, String]): types.StructType =
     if (colmap.isEmpty) schema
     else types.StructType(schema.fields.map(f =>
@@ -1556,18 +1556,17 @@ object Snapshots {
     */
   @volatile var lastAggAnswered: Option[Int] = None
 
-  /** The stats-sidecar rows for a VERSION's entry list, aligned —
-    * None when any entry is uncovered (the metadata-only aggregate
-    * path must refuse, not approximate). One driver-side read of the
-    * (tiny) manifest; zero data files are touched.
+  /** The typed stats sidecar ([[graft.operators.Layout.stats]]) for a
+    * VERSION's entry list, aligned, under its declared schema and
+    * column mapping. One driver-side read of the (tiny) manifest; zero
+    * data files are touched. None when the table has no sidecar.
     */
-  private[graft] def statsAggRows(spark: SparkSession, table: String,
-      entries: Seq[String])
-      : Option[(types.StructType, Seq[org.apache.spark.sql.Row])] = {
-    val (canon, _) = FileSkipping.canonical(spark, dataDir(table), entries)
-    graft.operators.Layout.statsRowsFor(spark, dataDir(table).toString,
-      canon)
-  }
+  private[graft] def fileStats(spark: SparkSession, table: String,
+      entries: Seq[String], declared: Option[types.StructType],
+      colmap: Map[String, String]): Option[graft.operators.Layout.Stats] =
+    graft.operators.Layout.stats(spark, dataDir(table).toString,
+      declared.map(physSchema(_, colmap)),
+      FileSkipping.canonical(spark, dataDir(table), entries)._1)
 
   /** Map probed physical URIs (`input_file_name()` output) back to the
     * MANIFEST ENTRIES that reference them: bare names for the table's
@@ -2087,8 +2086,9 @@ object Snapshots {
     * into the new manifest BY NAME — IO is proportional to the accreted
     * small-file debt, never the table, so it can run after every
     * streaming burst where [[compactData]]'s full rewrite could not.
-    * Byte census is one driver-side `listStatus` of the data dir
-    * (O(files) metadata, zero data reads for the decision). Packing
+    * Sizes come from the version's size ledger (zero data reads and,
+    * in steady state, zero filesystem calls for the decision), so
+    * orphaned files in the data dir cost nothing. Packing
     * COALESCES the scan's partitions into at most that many outputs:
     * no shuffle, so the pack is one Spark job, and each packed file
     * keeps its input rows' order.
@@ -2104,16 +2104,16 @@ object Snapshots {
       smallBytes: Long = 32L << 20, targetFileBytes: Long = 128L << 20,
       minSmall: Int = 8): Option[Long] = {
     require(smallBytes > 0 && targetFileBytes > 0)
-    val f = fs(spark, dataDir(table))
     transact(spark, table, "optimize") { m =>
-      // recursive census keyed by data-dir-RELATIVE path: partitioned
-      // entries (`__gp=.../f.parquet`) size like flat ones; sidecar
-      // dirs (underscore) and foreign refs (absent) stay out
-      val sizes =
-        if (m.version == 0) Map.empty[String, Long]
-        else dataFileCensus(f, dataDir(table)).map { case (_, rel, st) =>
-          rel -> st.getLen }.toMap
-      val small = m.files.filter(n => sizes.get(n).exists(_ < smallBytes))
+      // the version's own entries, sized from its ledger (`#fsz:`) and
+      // probed only where the ledger lacks them; foreign clone/convert
+      // refs (qualified URIs or absolute paths) are never packed
+      val own = m.files.filterNot(n => n.contains(":/") || n.startsWith("/"))
+      val unsized = own.filterNot(m.sizes.contains)
+      val sizes = m.sizes ++ unsized.zip(ManifestFileIndex.statusesOf(
+        spark.sparkContext.hadoopConfiguration, dataDir(table), unsized)
+        .map(_.getLen))
+      val small = own.filter(sizes(_) < smallBytes)
       if (small.isEmpty || small.size < minSmall) Skip(None)
       else {
         val nOut = math.max(1,
@@ -2133,8 +2133,8 @@ object Snapshots {
   }
 
   /** Every file under the data dir as (path, data-dir-relative entry,
-    * status) — the RECURSIVE census that compaction sizes and vacuum
-    * reconciles against: partitioned entries (`__gp=.../f.parquet`)
+    * status) — the RECURSIVE census vacuum reconciles against:
+    * partitioned entries (`__gp=.../f.parquet`)
     * count like flat ones; sidecar trees (underscore or dot components)
     * are never included.
     */
@@ -2463,7 +2463,10 @@ object Snapshots {
     * once to build the manifest; every later call is INCREMENTAL — only
     * files not yet covered are read, so the steady-state cost after each
     * commit is O(new files). Stats rows for vacuumed files are dropped
-    * for free. Returns the number of files newly covered.
+    * for free, and a sidecar whose bounds are unsound for the declared
+    * types (the double/string encoding of older builds) is rewritten
+    * whole ([[graft.operators.Layout.appendStatsManifest]]). Returns the
+    * number of files newly covered.
     *
     * Run it after commits (or from the maintenance policy); [[readPruned]]
     * stays correct either way because uncovered files are never skipped.
@@ -2497,7 +2500,8 @@ object Snapshots {
           s"stats manifest already tracks $cols; asked for $physCols")
         graft.operators.Layout.pruneStatsManifestEntries(spark, dd,
           Some(files))
-        graft.operators.Layout.appendStatsManifest(spark, dd, Some(files))
+        graft.operators.Layout.appendStatsManifest(spark, dd, Some(files),
+          m.schema.map(physSchema(_, m.colmap)))
     }
   }
 

@@ -338,6 +338,77 @@ class FileSkippingSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.session.timeZone", zone)
   }
 
+  test("timestamp stats written under UTC prune probes from America/Los_Angeles") {
+    val root = Files.createTempDirectory("graft_skip_tsprune").toString
+    spark.conf.set("spark.sql.catalog.gfskiptsp",
+      classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gfskiptsp.root", root)
+    val t = s"$root/t"
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      spark.conf.set("spark.sql.session.timeZone", "UTC")
+      Snapshots.commitAppend(spark, spark.range(800).select(col("id"),
+        (lit(1704067200L + 3 * 3600L) + col("id") * 86400L).cast("timestamp")
+          .as("ts")).repartitionByRange(8, col("id")), t)
+      Snapshots.extendStats(spark, t, Seq("ts"))
+      spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+      // the files hold disjoint 100-day ranges: each key is in one file
+      for (id <- Seq(0L, 99L, 100L, 500L, 799L)) {
+        val key = Snapshots.read(spark, t).filter(col("id") === id)
+          .head().getTimestamp(1)
+        assert(spark.table("gfskiptsp.t").filter(col("ts") === lit(key))
+          .count() == 1L, s"catalog lookup of $key")
+        val (chosen, total) = Snapshots.lastCatalogPruned.get
+        assert(total == 8 && chosen == 1,
+          s"the catalog kept $chosen of $total files for $key")
+        val byKeys = Snapshots.readPrunedByKeys(spark, t, "ts", Seq(key))
+        assert(byKeys.filter(col("ts") === lit(key)).count() == 1L,
+          s"readPrunedByKeys of $key")
+        assert(byKeys.inputFiles.length == 1,
+          s"readPrunedByKeys read ${byKeys.inputFiles.length} files")
+        assert(Snapshots.readPruned(spark, t, Seq(("ts", key, key)))
+          .filter(col("ts") === lit(key)).count() == 1L,
+          s"readPruned of $key")
+        val (read, n) = graft.operators.Layout.lastStatsPruned.get
+        assert(n == 8 && read == 1, s"readPruned kept $read of $n files")
+      }
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+  }
+
+  test("a sidecar in the old double/string encoding prunes nothing until extendStats rewrites it typed") {
+    val t = Files.createTempDirectory("graft_skip_legacy").toString + "/t"
+    Snapshots.commitAppend(spark, spark.range(800).select(
+      col("id").cast("int").as("k"),
+      date_add(lit(java.sql.Date.valueOf("2024-01-01")), col("id").cast("int"))
+        .as("d")).repartitionByRange(8, col("k")), t)
+    // the sidecar as older builds wrote it: numerics as double, dates
+    // (and strings and timestamps) cast to string
+    spark.read.parquet(s"$t/data").groupBy(input_file_name().as("file"))
+      .agg(count(lit(1L)).as("__count"),
+        min(col("k")).cast("double").as("k__min"),
+        max(col("k")).cast("double").as("k__max"),
+        (count(lit(1L)) - count(col("k"))).as("k__nulls"),
+        min(col("d")).cast("string").as("d__min"),
+        max(col("d")).cast("string").as("d__max"),
+        (count(lit(1L)) - count(col("d"))).as("d__nulls"))
+      .coalesce(1).write.parquet(s"$t/data/_graft_stats")
+    val day = java.sql.Date.valueOf("2024-03-01")
+    def kept(c: String, v: Any): (Int, Int) = {
+      assert(Snapshots.readPruned(spark, t, Seq((c, v, v)))
+        .filter(col(c) === lit(v)).count() == 1L, s"readPruned of $c = $v")
+      graft.operators.Layout.lastStatsPruned.get
+    }
+    assert(kept("k", 5) == ((8, 8)), "an int column's double stats pruned")
+    assert(kept("d", day) == ((8, 8)), "a date column's string stats pruned")
+    assert(Snapshots.extendStats(spark, t, Seq("k", "d")) == 8,
+      "extendStats must rewrite the whole sidecar")
+    val typed = spark.read.parquet(s"$t/data/_graft_stats").schema
+    assert(typed("k__min").dataType == IntegerType &&
+      typed("d__max").dataType == DateType, s"sidecar still $typed")
+    assert(kept("k", 5) == ((1, 8)))
+    assert(kept("d", day) == ((1, 8)))
+  }
+
   test("date dirs of a timestamp column staged in one zone prune no probe from another") {
     val root = Files.createTempDirectory("graft_skip_tsdirs").toString
     spark.conf.set("spark.sql.catalog.gfskipdirs",

@@ -45,8 +45,8 @@ class LambdaLintSpec extends AnyFunSuite {
   }
 
   test("every registered query plan is free of per-element re-tokenization") {
-    val dirty = SparkEntry.registry.flatMap { q =>
-      val plan = q.fn(spark, sf).queryExecution.optimizedPlan.toString
+    val dirty = RegistryPass.results.flatMap { case (q, ran) =>
+      val plan = ran.get.optimizedPlan
       val v = LambdaLint.violations(plan)
       if (v.isEmpty) Nil
       else Seq(s"${q.name}: ${v.map { case (body, pat) => s"$pat in [$body]" }.mkString("; ")}")

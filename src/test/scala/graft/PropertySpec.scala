@@ -239,7 +239,8 @@ class PropertySpec extends AnyFunSuite {
         (e, rows.size.toLong, vals.size.toLong, best, worst)
       }
       val kept = graft.sources.SnapshotCatalog
-        .topNKeepStats(stats, numeric = true, asc, nullsFirst, k).toSet
+        .topNKeepStats(stats, Ordering.by[Any, Double](_.asInstanceOf[Double]),
+          asc, nullsFirst, k).toSet
       def rank(rows: Seq[Option[Long]]): Seq[Option[Long]] = {
         val (nulls, vals) = rows.partition(_.isEmpty)
         val sorted = if (asc) vals.sortBy(_.get) else vals.sortBy(v => -v.get)

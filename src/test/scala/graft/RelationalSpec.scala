@@ -8,13 +8,33 @@ object SparkTest {
   val sf: String = "/root/testdata/sf0.001"
 }
 
+/** One pass over the query registry per test JVM, shared by every spec
+  * that checks all registered queries: the snap_* queries commit
+  * eagerly inside `fn`, so a pass per spec repeats that work. Records
+  * per query what `fn` returned — its columns, optimized plan and row
+  * count (or what counting threw) — or what `fn` threw.
+  */
+object RegistryPass {
+  final case class Ran(columns: Seq[String], optimizedPlan: String,
+      rows: scala.util.Try[Long])
+
+  lazy val results: Seq[(queries.QueryDef, scala.util.Try[Ran])] =
+    SparkEntry.registry.map { q =>
+      q -> scala.util.Try {
+        val df = q.fn(SparkTest.spark, SparkTest.sf)
+        Ran(df.columns.toSeq, df.queryExecution.optimizedPlan.toString,
+          scala.util.Try(df.count()))
+      }
+    }
+}
+
 class RelationalSpec extends AnyFunSuite {
   import SparkTest._
 
   test("every registered query runs and yields a non-degenerate result at sf0.001") {
-    SparkEntry.registry.foreach { q =>
-      val df = q.fn(spark, sf)
-      val n = df.count()
+    RegistryPass.results.foreach { case (q, ran) =>
+      val df = ran.get // rethrows what the query threw
+      val n = df.rows.get
       assert(n >= 0, s"${q.name} failed to execute")
       assert(df.columns.nonEmpty, s"${q.name} has no columns")
       // every oracle'd query must alias all columns identically in SQL

@@ -1032,4 +1032,56 @@ class SnapshotCatalogSpec extends AnyFunSuite {
     assert(d.head.getLong(0) == 200L)
     assert(Snapshots.lastAggAnswered.isEmpty)
   }
+
+  test("typed stats: timestamp, decimal and widened MIN/MAX answer from metadata; ORDER BY ts DESC LIMIT prunes") {
+    import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.types.{DecimalType, LongType}
+    val root = Files.createTempDirectory("graft_snapcat_typed").toString
+    val t = root + "/t"
+    // instants with microsecond parts (a string or double bound would
+    // round them) and decimals past the double's 2^53 exact range
+    val base = java.time.Instant.parse("2024-01-01T00:00:00Z")
+    val rows = (1 to 600).map { i =>
+      (i.toLong, java.sql.Timestamp.from(base.plusSeconds(i * 3600L)
+        .plusNanos(i * 1000L)), BigDecimal(9007199254740993L + i, 2), i)
+    }
+    Snapshots.commitAppend(spark, rows.toDF("k", "ts", "amt", "n")
+      .select(col("k"), col("ts"), col("amt").cast(DecimalType(20, 2))
+        .as("amt"), col("n")).repartitionByRange(6, col("k")), t)
+    Snapshots.extendStats(spark, t, Seq("ts", "amt", "n"))
+    // stats written while n was int now serve the widened bigint column
+    Snapshots.commitWidenColumn(spark, t, "n", LongType)
+    spark.conf.set("spark.sql.catalog.gtyped",
+      classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gtyped.root", root)
+    val data = Snapshots.read(spark, t)
+
+    // the A10 probe: MIN/MAX of the fact table's pickup timestamp
+    val a10 = spark.sql("SELECT min(ts), max(ts) FROM gtyped.t")
+    assert(a10.head == data.agg(min("ts"), max("ts")).head)
+    assert(Snapshots.lastAggAnswered.contains(2),
+      s"timestamp MIN/MAX must answer from the sidecar, got " +
+        s"${Snapshots.lastAggAnswered}")
+    assert(a10.queryExecution.executedPlan.toString
+      .contains("GraftStatsAggScan"))
+
+    val dec = spark.sql(
+      "SELECT min(amt), max(amt), min(n), max(n), count(n) FROM gtyped.t")
+    assert(dec.head == data.agg(min("amt"), max("amt"), min("n"), max("n"),
+      org.apache.spark.sql.functions.count("n")).head)
+    assert(dec.schema.map(_.dataType) ==
+      Seq(DecimalType(20, 2), DecimalType(20, 2), LongType, LongType, LongType))
+    assert(Snapshots.lastAggAnswered.contains(5),
+      s"decimal and widened MIN/MAX must answer from the sidecar, got " +
+        s"${Snapshots.lastAggAnswered}")
+
+    // the latest k instants sit in the last file
+    Snapshots.lastTopNPruned = None
+    val top = spark.sql(
+      "SELECT k, ts FROM gtyped.t ORDER BY ts DESC LIMIT 5")
+    assert(top.collect().map(_.getLong(0)).toSeq == (600L to 596L by -1L))
+    val (kept, total) = Snapshots.lastTopNPruned.getOrElse(
+      fail("ORDER BY ts DESC LIMIT never pruned"))
+    assert(total == 6 && kept == 1, s"TopN kept $kept of $total files")
+  }
 }

@@ -522,6 +522,39 @@ class SnapshotsSpec extends AnyFunSuite {
       smallBytes = bigLen, minSmall = 8).isEmpty)
   }
 
+  test("compactSmallFiles sizes from the manifest: orphaned files in data/ change nothing it packs") {
+    val t = freshTable()
+    Snapshots.commitAppend(spark,
+      (0L until 500L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1), t)
+    (0 until 9).foreach { i =>
+      Snapshots.commitAppend(spark,
+        Seq((1000L + i, s"s$i")).toDF("id", "v").coalesce(1), t)
+    }
+    val before = Snapshots.filesAt(spark, t, Snapshots.currentVersion(spark, t))
+    val big = Snapshots.filesAt(spark, t, 1L).head
+    val bigLen = java.nio.file.Files.size(
+      java.nio.file.Paths.get(t, "data", big))
+    // orphans a crashed writer could leave: small parquet files beside
+    // the table's own, flat and under a partition-style dir
+    val data = java.nio.file.Paths.get(t, "data")
+    Seq("part-orphan-1.parquet", "__gp=x/part-orphan-2.parquet").foreach { n =>
+      val dst = data.resolve(n)
+      java.nio.file.Files.createDirectories(dst.getParent)
+      java.nio.file.Files.copy(data.resolve(before.last), dst)
+    }
+    // a fresh process: only the manifests' size ledger is known
+    graft.warehouse.ManifestFileIndex.clearSizes()
+    val v = Snapshots.compactSmallFiles(spark, t,
+      smallBytes = bigLen, minSmall = 8).get
+    val after = Snapshots.filesAt(spark, t, v)
+    assert(after.size == 2 && after.contains(big),
+      s"the 9 small files pack into 1 beside the large one, got $after")
+    assert(ids(Snapshots.read(spark, t)) ==
+      ((0L until 500L) ++ (1000L until 1009L)).toSet)
+    assert(java.nio.file.Files.exists(data.resolve("part-orphan-1.parquet")),
+      "packing must not touch orphans")
+  }
+
   test("manifests are O(delta): steady-state commit bytes flat, checkpoints bound chains, vacuum keeps the floor resolvable") {
     val t = freshTable()
     (1 to 40).foreach { i =>
