@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
@@ -192,7 +193,7 @@ object Layout {
     * locality metric (at scale, with column stats, untouched files are
     * skipped outright).
     */
-  def filesTouched(spark: org.apache.spark.sql.SparkSession, path: String,
+  def filesTouched(spark: SparkSession, path: String,
       predicate: Column): Long =
     spark.read.parquet(path).filter(predicate)
       .select(input_file_name()).distinct().count()
@@ -207,7 +208,7 @@ object Layout {
     * Path) this is the identity up to scheme normalization.
     */
   private[graft] def canonFile(s: String): String =
-    new org.apache.hadoop.fs.Path(s).toString
+    new Path(s).toString
 
   /** Canonical spelling of a URI-ENCODED file string. input_file_name(),
     * DataFrame.inputFiles and the sidecar manifests' persisted `file`
@@ -220,7 +221,7 @@ object Layout {
     * silently no-op). Strings that don't parse as URIs fall back raw.
     */
   private[graft] def canonUri(s: String): String =
-    try new org.apache.hadoop.fs.Path(new java.net.URI(s)).toString
+    try new Path(new java.net.URI(s)).toString
     catch { case _: Exception => canonFile(s) }
 
   /** The per-file aggregate columns of a stats sidecar (one builder,
@@ -243,20 +244,14 @@ object Layout {
     case _ => false
   }
 
-  /** Stats columns a manifest at `path` declares (parsed from its
-    * schema), None when the table has no manifest — how maintenance
-    * rebuilds a manifest without being told the columns. The schema
-    * comes from [[sidecarRows]]'s cache when that is current, else from
-    * the sidecar's footer: maintenance usually rewrites the sidecar
-    * next, so its rows are not collected here.
+  /** Stats columns the sidecar at `path` tracks (from its schema), None
+    * when the table has none — how maintenance extends a sidecar
+    * without being told its columns. Read through [[sidecarRows]], so
+    * the build that usually follows reuses the rows.
     */
-  def statsManifestCols(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Seq[String]] = {
-    val p = new org.apache.hadoop.fs.Path(path, statsDir)
-    fingerprint(spark, p).map(fp => trackedCols(sidecarCache.get(p.toString)
-      .collect { case (`fp`, s, _) => s }
-      .getOrElse(spark.read.parquet(p.toString).schema)))
-  }
+  def statsManifestCols(spark: SparkSession,
+      path: String): Option[Seq[String]] =
+    sidecarRows(spark, new Path(path, statsDir)).map(s => trackedCols(s._1))
 
   private def trackedCols(sidecar: StructType): Seq[String] =
     sidecar.fieldNames.toSeq.collect {
@@ -286,34 +281,15 @@ object Layout {
     * files, manifest-level pruning is what keeps listing + planning
     * cost proportional to the data actually selected. Z-order writes
     * ([[zorderWrite]]) make the per-file ranges tight in BOTH
-    * dimensions, which is exactly what makes this pruning bite.
+    * dimensions, which is exactly what makes this pruning bite. A
+    * sidecar that already tracks `statsCols` soundly keeps its rows for
+    * files still present.
     */
-  def writeStatsManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String, statsCols: Seq[String],
-      files: Option[Seq[String]] = None): Unit = {
+  def writeStatsManifest(spark: SparkSession, path: String,
+      statsCols: Seq[String], files: Option[Seq[String]] = None): Unit = {
     require(statsCols.nonEmpty)
     require(files.forall(_.nonEmpty), "explicit file list must be non-empty")
-    // an explicit file list (a snapshot VERSION's files — which may be
-    // foreign qualified URIs on a shallow clone or an in-place convert)
-    // beats the directory listing: orphans stay out, references stat in
-    val df = files match {
-      case Some(fs) => spark.read.parquet(fs: _*)
-      case None => spark.read.parquet(path)
-    }
-    // orderable types only: a boolean/binary/array column has no useful
-    // file range, and an all-NULL or meaningless manifest row would mean
-    // "prunes nothing" at best — reject loudly at write time instead
-    statsCols.foreach { c =>
-      val t = df.schema(c).dataType
-      require(statsSupported(t),
-        s"stats column $c is ${t.simpleString}; per-file min/max stats " +
-          "require a numeric, string, date or timestamp column")
-    }
-    val aggs = statsAggs(statsCols)
-    df.groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/$statsDir")
+    tableStats(spark, path, statsCols, files, None)
   }
 
   /** Incrementally extend the stats manifest to the data files it does
@@ -325,51 +301,59 @@ object Layout {
     * against `schema`, by default the table's) is rewritten whole.
     * Returns how many files were added.
     */
-  def appendStatsManifest(spark: org.apache.spark.sql.SparkSession,
-      path: String, files: Option[Seq[String]] = None,
+  def appendStatsManifest(spark: SparkSession, path: String,
+      files: Option[Seq[String]] = None,
       schema: Option[StructType] = None): Int =
-    statsManifestCols(spark, path) match {
-      case None => 0
-      case Some(cols) =>
-        val mPath = s"$path/$statsDir"
-        lazy val table = spark.read.parquet(path)
-        val candidates = files.map(_.map(canonFile))
-          .getOrElse(table.inputFiles.map(canonUri).toSeq)
-        val sidecar = spark.read.parquet(mPath)
-        val sound = trackedTypes(sidecar.schema,
-          schema.orElse(if (files.isEmpty) Some(table.schema) else None))
-        if (sound.size < cols.size) {
-          writeStatsManifest(spark, path, cols, files)
-          return candidates.size
-        }
-        // materialize the current manifest BEFORE overwriting the dir a
-        // lazy plan would still be reading from
-        val existing = sidecar.localCheckpoint(true)
-        val known = existing.select("file").collect()
-          .map(r => canonUri(r.getString(0))).toSet
-        val missing = candidates.filterNot(known)
-        if (missing.isEmpty) 0
-        else {
-          // no basePath for explicit lists: a clone's foreign refs share
-          // no base with the table's own data dir
-          val freshRead = files match {
-            case Some(_) => spark.read.parquet(missing.toIndexedSeq: _*)
-            case None => spark.read.option("basePath", path)
-              .parquet(missing.toIndexedSeq: _*)
-          }
-          val aggs = statsAggs(cols)
-          val fresh = freshRead
-            .groupBy(input_file_name().as("file"))
-            .agg(aggs.head, aggs.tail: _*)
-          // pre-__count manifests lack the count column: their rows
-          // keep a NULL count (pruning unaffected; the metadata-only
-          // aggregate path requires full nonnull coverage and refuses);
-          // bounds of files from before a widening widen with the union
-          existing.unionByName(fresh, allowMissingColumns = true)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(mPath)
-          missing.length
-        }
+    statsManifestCols(spark, path).fold(0)(
+      tableStats(spark, path, _, files, schema))
+
+  /** The stats sidecar of the parquet table at `path` over its live
+    * files — `files` (raw paths; a clone's foreign refs among them) or
+    * else the directory's — read straight from their footers; bounds
+    * are sound for `schema`, by default the table's (None for an
+    * explicit list: the sidecar's own types stand).
+    */
+  private def tableStats(spark: SparkSession, path: String,
+      cols: Seq[String], files: Option[Seq[String]],
+      schema: Option[StructType]): Int = {
+    lazy val table = spark.read.parquet(path)
+    val live = files.map(_.map(canonFile))
+      .getOrElse(table.inputFiles.map(canonUri).toSeq)
+    extendStatsSidecar(spark, path, cols, live, schema.orElse(
+        files.fold[Option[StructType]](Some(table.schema))(_ => None))) {
+      // no basePath for explicit lists: a clone's foreign refs share no
+      // base with the table's own data dir
+      case missing if files.isDefined => spark.read.parquet(missing: _*)
+      case missing if missing.size == live.size => table
+      case missing => spark.read.option("basePath", path).parquet(missing: _*)
+    }
+  }
+
+  /** The stats caller of [[buildSidecar]]: the `_graft_stats` sidecar
+    * under `path` made to cover the `live` files (canonical URIs) on
+    * `cols`, the uncovered ones framed by `read`. Rows stay only while
+    * the sidecar tracks exactly `cols` with bounds sound for `types`
+    * ([[trackedTypes]]); otherwise every row drops and the sidecar is
+    * built anew. Returns how many files were added.
+    */
+  private[graft] def extendStatsSidecar(spark: SparkSession, path: String,
+      cols: Seq[String], live: Seq[String], types: => Option[StructType])(
+      read: Seq[String] => DataFrame): Int =
+    buildSidecar(spark, new Path(path, statsDir), live, { s =>
+      val sound = trackedTypes(s, types).keySet == cols.toSet
+      _ => sound
+    }, statsAggs(cols)) { missing =>
+      val df = read(missing)
+      // orderable types only: a boolean/binary/array column has no
+      // useful file range, and an all-NULL or meaningless row would mean
+      // "prunes nothing" at best — reject loudly instead
+      cols.foreach { c =>
+        val t = df.schema(c).dataType
+        require(statsSupported(t),
+          s"stats column $c is ${t.simpleString}; per-file min/max stats " +
+            "require a numeric, string, date or timestamp column")
+      }
+      df
     }
 
   // (sidecar dir → (fingerprint, schema, uri → row)): ONE collect of a
@@ -383,40 +367,91 @@ object Layout {
   private val sidecarCache = scala.collection.concurrent.TrieMap
     .empty[String, (String, StructType, Map[String, Row])]
 
-  /** The fingerprint of sidecar dir `p` from one listing: its files'
-    * (name, length, mtime). None when there is no sidecar.
+  /** One listing of sidecar dir `p`: its fingerprint, the files'
+    * (name, length, mtime), and its parquet parts — not `_SUCCESS` or a
+    * dot file, so a read of them logs no "All paths were ignored". None
+    * when there is no sidecar.
     */
-  private def fingerprint(spark: org.apache.spark.sql.SparkSession,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(p).filter(_.isFile)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:" +
-        s"${st.getModificationTime}")
-      .sorted.mkString(";"))
-    catch { case _: java.io.FileNotFoundException => None }
+  private def listSidecar(spark: SparkSession,
+      p: Path): Option[(String, Seq[String])] =
+    try {
+      val sts = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(p).filter(_.isFile).toSeq
+      Some((sts.map(st => s"${st.getPath.getName}:${st.getLen}:" +
+          s"${st.getModificationTime}").sorted.mkString(";"),
+        sts.map(_.getPath).filterNot(f => f.getName.startsWith("_") ||
+          f.getName.startsWith(".")).map(_.toString)))
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** Cache `rows` as the content of sidecar dir `p` at fingerprint `fp`. */
+  private def cacheSidecar(p: Path, fp: String, s: StructType,
+      rows: Seq[Row]): (StructType, Map[String, Row]) = {
+    val m = rows.map(r => canonUri(r.getAs[String]("file")) -> r).toMap
+    if (sidecarCache.size > 256) sidecarCache.clear()
+    sidecarCache.put(p.toString, (fp, s, m))
+    (s, m)
+  }
 
   /** The whole sidecar at dir `p`: its schema and one row per covered
     * file, keyed by canonical `input_file_name()` URI (its `file`
-    * column). One listing of the dir per call; the parquet read and
-    * collect (two Spark jobs) run only when the sidecar changed since
-    * the last call. None when there is no sidecar.
+    * column). One listing of the dir per call; the parquet read of its
+    * parts and the collect (two Spark jobs) run only when the sidecar
+    * changed since the last call. None when there is no sidecar.
     */
-  private[graft] def sidecarRows(spark: org.apache.spark.sql.SparkSession,
-      p: org.apache.hadoop.fs.Path)
-      : Option[(StructType, Map[String, Row])] =
-    fingerprint(spark, p).map { fp =>
+  private[graft] def sidecarRows(spark: SparkSession,
+      p: Path): Option[(StructType, Map[String, Row])] =
+    listSidecar(spark, p).map { case (fp, parts) =>
       sidecarCache.get(p.toString) match {
         case Some((`fp`, s, m)) => (s, m)
         case _ =>
-          val sidecar = spark.read.parquet(p.toString)
-          val m = sidecar.collect()
-            .map(r => canonUri(
-              r.getString(sidecar.schema.fieldIndex("file"))) -> r).toMap
-          if (sidecarCache.size > 256) sidecarCache.clear()
-          sidecarCache.put(p.toString, (fp, sidecar.schema, m))
-          (sidecar.schema, m)
+          val sidecar = spark.read.parquet(parts: _*)
+          cacheSidecar(p, fp, sidecar.schema, sidecar.collect().toSeq)
       }
     }
+
+  /** The one builder of a per-file index sidecar (`_graft_stats`, a
+    * `_graft_bloom_<col>`): it builds, extends and expires the sidecar
+    * at dir `p` so it holds a row for each file of `live` (canonical
+    * URIs) that has a row. Existing rows come from [[sidecarRows]]; a
+    * row stays while its file is live and `current` (given the
+    * sidecar's schema) accepts it. Only the live files no kept row
+    * covers are read, as `read` frames them, and aggregated per
+    * `input_file_name()` (the `file` column) by `aggs`; kept rows from
+    * before a column widened widen with the union. The sidecar is
+    * rewritten — one file, and the cache then holds the rows written,
+    * so the next read or build runs no Spark job — only when a row was
+    * added or dropped. Returns the number of rows added.
+    */
+  private[graft] def buildSidecar(spark: SparkSession, p: Path,
+      live: Seq[String], current: StructType => Row => Boolean,
+      aggs: Seq[Column])(read: Seq[String] => DataFrame): Int = {
+    val old = sidecarRows(spark, p)
+    val kept = old.fold(Map.empty[String, Row]) { case (s, rows) =>
+      val (isLive, ok) = (live.toSet, current(s))
+      rows.filter { case (f, r) => isLive(f) && ok(r) }
+    }
+    val missing = live.distinct.filterNot(kept.contains)
+    def frame(s: StructType, rows: Seq[Row]) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), s)
+    val (schema, rows) =
+      if (missing.isEmpty) (old.fold(new StructType)(_._1), kept.values.toSeq)
+      else {
+        val fresh = read(missing).groupBy(input_file_name().as("file"))
+          .agg(aggs.head, aggs.tail: _*)
+        val all = if (kept.isEmpty) fresh else frame(old.get._1,
+          kept.values.toSeq).unionByName(fresh, allowMissingColumns = true)
+        (StructType(all.schema.map(_.copy(nullable = true))),
+          all.collect().toSeq)
+      }
+    val added = rows.size - kept.size
+    // nothing added or dropped: an existing sidecar stands, and with no
+    // sidecar and no live file there is nothing to write
+    if (added == 0 && old.forall(_._2.size == kept.size) &&
+        (old.isDefined || missing.isEmpty)) return 0
+    frame(schema, rows).coalesce(1).write.mode("overwrite").parquet(p.toString)
+    listSidecar(spark, p).foreach(l => cacheSidecar(p, l._1, schema, rows))
+    added
+  }
 
   /** One tracked column of one file: its NULL count (None on a row
     * from before null counts) and [min, max] as Catalyst values of the
@@ -461,10 +496,10 @@ object Layout {
     * so it prunes nothing and answers nothing. None when there is no
     * sidecar.
     */
-  private[graft] def stats(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def stats(spark: SparkSession,
       path: String, schema: Option[StructType],
       files: => Seq[String]): Option[Stats] =
-    sidecarRows(spark, new org.apache.hadoop.fs.Path(path, statsDir)).map {
+    sidecarRows(spark, new Path(path, statsDir)).map {
       case (s, byFile) =>
         val types = trackedTypes(s, schema)
         val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
@@ -490,34 +525,6 @@ object Layout {
             c -> ColumnStats(nulls(r), lo(r), hi(r)) }.toMap))))
     }
 
-  /** Drop manifest entries whose data file no longer exists — the cheap
-    * maintenance after a pure directory drop (partition expiry):
-    * surviving files were not rewritten, so their stats are still valid
-    * and filtering the (tiny) manifest replaces a full-table stats
-    * rescan. Zero data files are read. Returns the number of dead
-    * entries dropped.
-    */
-  def pruneStatsManifestEntries(spark: org.apache.spark.sql.SparkSession,
-      path: String, files: Option[Seq[String]] = None): Int = {
-    val mPath = new org.apache.hadoop.fs.Path(path, statsDir)
-    val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mPath)) return 0
-    val existing = spark.read.parquet(mPath.toString)
-    val rows = existing.collect()
-    val fileIdx = existing.schema.fieldIndex("file")
-    // explicit live set (a snapshot version's files) keeps a clone's
-    // FOREIGN entries alive — a directory listing would wrongly expire
-    // every reference outside the table's own data dir
-    val live = files.map(_.map(canonFile).toSet)
-      .getOrElse(spark.read.parquet(path).inputFiles.map(canonUri).toSet)
-    val kept = rows.filter(r => live(canonUri(r.getString(fileIdx))))
-    if (kept.length == rows.length) return 0
-    spark.createDataFrame(
-        java.util.Arrays.asList(kept: _*), existing.schema)
-      .coalesce(1).write.mode("overwrite").parquet(mPath.toString)
-    rows.length - kept.length
-  }
-
   /** Spec hook: (files read, files total) of the last stats-pruned read;
     * None when no manifest was found (full scan).
     */
@@ -537,7 +544,7 @@ object Layout {
     * no Spark job, and `candidates` is built only when a sidecar exists.
     * None when there is no sidecar.
     */
-  private[graft] def selectByStats(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def selectByStats(spark: SparkSession,
       path: String, schema: Option[StructType],
       conds: Map[String, DataType] => Seq[(String, (Column, Column) => Column)],
       candidates: => Seq[String]): Option[Seq[String]] = {
@@ -582,7 +589,7 @@ object Layout {
     *     dropped — never a read of a dead path.
     * Falls back to the plain read when no manifest exists.
     */
-  def statsPrunedRead(spark: org.apache.spark.sql.SparkSession, path: String,
+  def statsPrunedRead(spark: SparkSession, path: String,
       ranges: Seq[(String, Any, Any)]): DataFrame = {
     val all = spark.read.parquet(path)
     val live = all.inputFiles.map(canonUri).toSeq

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Layout
+
 /** Table-maintenance operations a parquet warehouse needs at 100 TB —
   * the operational layer the reference outsources to Snowflake:
   *
@@ -104,35 +106,6 @@ object Maintenance {
       throw new CompactionInProgressException(tablePath)
   }
 
-  /** Rebuild the file-skipping stats manifest of `fromPath` (if it has
-    * one) over the rewritten files at `toPath`: every rewrite
-    * invalidates per-FILE stats wholesale (new file names), and while
-    * [[graft.operators.Layout.statsPrunedRead]] is drift-safe — dead
-    * entries dropped, unmanifested files always read — a stale manifest
-    * means a FULL scan on every range read until someone remembers to
-    * rebuild. Compaction/delete are the rebuild points, exactly like the
-    * bloom sidecars. The stats columns come from the old manifest's own
-    * schema.
-    */
-  private def refreshStatsManifest(spark: SparkSession,
-      fromPath: String, toPath: String): Unit =
-    rebuildStats(spark, toPath,
-      graft.operators.Layout.statsManifestCols(spark, fromPath))
-
-  /** Swap-path variant: per-file stats embed ABSOLUTE paths, so a
-    * manifest computed on `.__compact_tmp` dies at the rename — swap
-    * rewrites capture the stats columns BEFORE the swap and rebuild on
-    * the live path AFTER it (one extra column-pruned scan). A crash in
-    * between loses only the manifest, and a missing manifest is the safe
-    * state (readers full-scan).
-    */
-  private def rebuildStats(spark: SparkSession, path: String,
-      cols: Option[Seq[String]]): Unit =
-    cols.foreach { cs =>
-      if (cs.nonEmpty)
-        graft.operators.Layout.writeStatsManifest(spark, path, cs)
-    }
-
   /** Recursive set of visible data-file paths — the rewrite-window
     * change detector: compaction snapshots it before reading and again
     * before swapping, and ABORTS if they differ (a racing append slipped
@@ -162,6 +135,11 @@ object Maintenance {
   /** Shared swap harness for the rename-based compactions: lock, recover,
     * refuse on in-flight writers, rewrite, re-check, swap. `rewrite`
     * writes the compacted table into the tmp dir (data + sidecars).
+    * Per-file stats die with the rewritten files: their rows key
+    * ABSOLUTE paths, so the stats sidecar is never carried, and a table
+    * that kept one has it rebuilt on the live path after the swap (a
+    * crash in between loses only the sidecar, and readers of a table
+    * without one full-scan).
     */
   private def lockedCompactSwap(spark: SparkSession, tablePath: String)(
       rewrite: Path => Unit): Unit = {
@@ -171,6 +149,7 @@ object Maintenance {
     try {
       recoverLocked(fs, tablePath)
       require(fs.exists(p), s"no table at $tablePath")
+      val statsCols = Layout.statsManifestCols(spark, tablePath)
       // an in-flight Spark write job keeps its uncommitted output under
       // <table>/_temporary — compacting under it would swap away the
       // rows it is about to commit
@@ -205,7 +184,56 @@ object Maintenance {
       if (!fs.rename(tmp, p))
         throw new java.io.IOException(s"rename $tmp -> $p failed")
       fs.delete(old, true)
+      statsCols.foreach(Layout.writeStatsManifest(spark, tablePath, _))
     } finally releaseCompactionLock(spark, tablePath)
+  }
+
+  /** Copy every `_graft_*` root sidecar of the table at `p` into a
+    * swap's `tmp`, but the stats sidecar ([[lockedCompactSwap]]
+    * rebuilds it) and `except`.
+    */
+  private def carrySidecars(spark: SparkSession, p: Path, tmp: Path,
+      except: Set[String]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
+    fs.listStatus(p).map(_.getPath).filter(f => f.getName.startsWith("_graft_")
+        && f.getName != Layout.statsDir && !except(f.getName))
+      .foreach(f => org.apache.hadoop.fs.FileUtil.copy(fs, f, fs,
+        new Path(tmp, f.getName), false, conf))
+  }
+
+  /** The dynamic-partition overwrite of a locked table's rewritten
+    * partitions with `df`: both change signals are re-checked first (an
+    * in-flight job's `_temporary`, and the visible files against
+    * `before`, the set the rewrite read — a detected race aborts with
+    * nothing written). The `emptied` partition values, which the
+    * overwrite cannot replace, have their dirs dropped after it, and
+    * the stats sidecar then follows the rewrite.
+    */
+  private def overwritePartitions(spark: SparkSession, tablePath: String,
+      before: Set[String], partitionCol: String, df: DataFrame,
+      emptied: Seq[Any] = Nil): Unit = {
+    val p = new Path(tablePath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    compactBarrier.foreach(_())
+    if (fs.exists(new Path(p, "_temporary")))
+      throw new ConcurrentWriterException(tablePath,
+        "_temporary appeared before the overwrite — a write job is in flight")
+    val after = dataFileSet(fs, p)
+    if (after != before)
+      throw new ConcurrentWriterException(tablePath,
+        s"data files changed before the overwrite " +
+          s"(${(after diff before).size} new, ${(before diff after).size} gone)")
+    // the dynamic-overwrite conf is session-global: set it only once no
+    // abort path remains before the write, so the finally ALWAYS runs and
+    // a detected race can't leak dynamic mode into later plain overwrites
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val prev = spark.conf.getOption(mode)
+    spark.conf.set(mode, "dynamic")
+    try df.write.mode("overwrite").partitionBy(partitionCol).parquet(tablePath)
+    finally prev.fold(spark.conf.unset(mode))(spark.conf.set(mode, _))
+    emptied.foreach(v => fs.delete(new Path(p, s"$partitionCol=$v"), true))
+    Layout.appendStatsManifest(spark, tablePath)
   }
 
   // ------------------------------------------------- scheduled policy
@@ -282,15 +310,11 @@ object Maintenance {
     if (!fs.exists(p)) return None
     val base = maintainKind(spark, t, fs, p)
     // stats steady-state leg: a table with a manifest gets its appended
-    // (unmanifested) files covered — compaction already rebuilds the
-    // manifest wholesale, so this only pays when no rewrite ran, and it
-    // scans nothing but the new files
-    val statsMsg =
-      if (graft.operators.Layout.statsManifestCols(spark, t.path).isEmpty) None
-      else {
-        val n = graft.operators.Layout.appendStatsManifest(spark, t.path)
-        if (n > 0) Some(s"manifested $n new file(s) of ${t.path}") else None
-      }
+    // (unmanifested) files covered — compaction already extended the
+    // manifest, so this only pays when no rewrite ran, and it scans
+    // nothing but the new files
+    val statsMsg = Some(Layout.appendStatsManifest(spark, t.path))
+      .filter(_ > 0).map(n => s"manifested $n new file(s) of ${t.path}")
     val msgs = Seq(base, statsMsg).flatten
     if (msgs.isEmpty) None else Some(msgs.mkString("; "))
   }
@@ -378,29 +402,18 @@ object Maintenance {
           val vacMsg =
             if (dropped.isEmpty) None
             else Some(s"vacuumed ${dropped.size} file(s) of ${t.path}")
-          val ddPath = new Path(t.path, "data").toString
-          val statsMsg = graft.operators.Layout
-            .statsManifestCols(spark, ddPath).flatMap { cols =>
-              val added = Snapshots.extendStats(spark, t.path, cols)
-              if (added > 0) Some(s"manifested $added new file(s) of ${t.path}")
-              else None
-            }
-          // bloom steady-state leg, the stats twin: a compaction just
-          // replaced every file, and appends accrete uncovered ones —
-          // either way the point-lookup index re-extends over ONLY the
-          // uncovered files here, so lookups keep skipping after any
-          // rewrite without an operator remembering to re-index
-          val bloomMsg = {
-            val added = Snapshots.bloomIndexedColumns(spark, t.path)
-              .map(c => c -> Snapshots.extendBloom(spark, t.path, c))
-              .filter(_._2 > 0)
-            if (added.isEmpty) None
-            else Some(added.map { case (c, k) =>
-              s"bloomed $k new file(s) on $c" }.mkString("; ") +
-              s" of ${t.path}")
-          }
-          val msgs =
-            Seq(expireMsg, optimized, vacMsg, statsMsg, bloomMsg).flatten
+          // index steady-state leg: a compaction just replaced files,
+          // and appends accrete uncovered ones — either way the stats
+          // and Bloom sidecars re-extend over ONLY the uncovered files
+          // here, so reads and lookups keep skipping after any rewrite
+          // without an operator remembering to re-index
+          val (stats, blooms) = Snapshots.extendIndexes(spark, t.path)
+          val indexMsgs =
+            Seq(stats).filter(_ > 0).map(k =>
+              s"manifested $k new file(s) of ${t.path}") ++
+            blooms.collect { case (c, k) if k > 0 =>
+              s"bloomed $k new file(s) on $c of ${t.path}" }
+          val msgs = Seq(expireMsg, optimized, vacMsg).flatten ++ indexMsgs
           if (msgs.isEmpty) None else Some(msgs.mkString("; "))
         }
       case kind =>
@@ -492,29 +505,9 @@ object Maintenance {
     // regardless of targetRowsPerFile
     val salted = slice.withColumn("__salt",
       pmod(xxhash64(slice.columns.map(col).toIndexedSeq: _*), filesForCol))
-    compactBarrier.foreach(_())
-    if (fs.exists(new Path(p, "_temporary")))
-      throw new ConcurrentWriterException(tablePath,
-        "_temporary appeared before the overwrite — a write job is in flight")
-    val after = dataFileSet(fs, p)
-    if (after != before)
-      throw new ConcurrentWriterException(tablePath,
-        s"data files changed before the overwrite " +
-          s"(${(after diff before).size} new, ${(before diff after).size} gone)")
-    // the dynamic-overwrite conf is session-global: set it only once no
-    // abort path remains before the write, so the finally ALWAYS runs and
-    // a detected race can't leak dynamic mode into later plain overwrites
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try salted
+    overwritePartitions(spark, tablePath, before, partitionCol, salted
       .repartition(filesFor.values.sum.toInt, col(partitionCol), col("__salt"))
-      .drop("__salt")
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(tablePath)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    refreshStatsManifest(spark, tablePath, tablePath)
+      .drop("__salt"))
     oversized
   }
 
@@ -705,7 +698,6 @@ object Maintenance {
       spark: SparkSession, tablePath: String, keyCol: String = "doc_id",
       buckets: Int = 64): Unit = {
     require(buckets > 0)
-    val statsCols = graft.operators.Layout.statsManifestCols(spark, tablePath)
     lockedCompactSwap(spark, tablePath) { tmp =>
       val p = new Path(tablePath)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -724,15 +716,8 @@ object Maintenance {
       // `_graft_doc_bloom` saturates on a 100 TB doc table exactly like
       // the index blooms; compaction is the rebuild point for all
       // three sidecar families) — then declare the bucketing
-      fs.listStatus(p).filter(_.getPath.getName.startsWith("_graft_"))
-        .filterNot(f => Set("_graft_buckets", "_graft_doc_bloom",
-          BloomBank.dirName, graft.operators.Layout.statsDir)
-          .contains(f.getPath.getName))
-        .foreach { f =>
-          org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
-            new Path(tmp, f.getPath.getName), false,
-            spark.sparkContext.hadoopConfiguration)
-        }
+      carrySidecars(spark, p, tmp,
+        Set("_graft_buckets", "_graft_doc_bloom", BloomBank.dirName))
       if (fs.exists(new Path(p, "_graft_doc_bloom")) ||
           fs.exists(new Path(new Path(p, BloomBank.dirName), "_meta"))) {
         val compacted = spark.read.parquet(tmp.toString).select(col(keyCol))
@@ -743,10 +728,6 @@ object Maintenance {
       // third field = the bucket key column (see bucketKeyCol)
       try bf.write(s"$buckets:key:$keyCol".getBytes("UTF-8")) finally bf.close()
     }
-    // per-file stats are void after a rewrite — compaction is their
-    // rebuild point, same as the bloom families (post-swap: see
-    // rebuildStats for why not on tmp)
-    rebuildStats(spark, tablePath, statsCols)
   }
 
   /** Append to a possibly-compacted table, honoring its declared bucket
@@ -958,9 +939,9 @@ object Maintenance {
     * lexicographic IS chronological. Runs under the table lock with the
     * in-flight-writer refusal — a streaming append must not land into a
     * directory being dropped. The stats manifest (if any) has its dead
-    * entries filtered out — a pure manifest rewrite, no data read, since
-    * surviving files were not touched. Returns the dropped partition
-    * names.
+    * entries dropped — surviving files were not touched, so no data is
+    * read unless the manifest had yet to cover an appended file. Returns
+    * the dropped partition names.
     */
   def expirePartitions(spark: SparkSession, tablePath: String,
       cutoff: String, partitionCol: String = "p_date"): Seq[String] = {
@@ -981,12 +962,11 @@ object Maintenance {
       doomed.foreach(d => fs.delete(new Path(p, d), true))
       if (doomed.nonEmpty) {
         // a directory drop never rewrites a surviving file, so surviving
-        // stats entries are still valid — filter the dead ones out of
-        // the (tiny) manifest instead of rescanning the table (which
-        // would break this function's zero-bytes-read contract)
+        // stats entries are still valid — the dead ones drop out of the
+        // (tiny) manifest instead of the table being rescanned
         if (dataFileSet(fs, p).nonEmpty)
-          graft.operators.Layout.pruneStatsManifestEntries(spark, tablePath)
-        else fs.delete(new Path(p, graft.operators.Layout.statsDir), true)
+          Layout.appendStatsManifest(spark, tablePath)
+        else fs.delete(new Path(p, Layout.statsDir), true)
       }
       doomed
     } finally releaseCompactionLock(spark, tablePath)
@@ -1033,27 +1013,8 @@ object Maintenance {
       // drop their directories after the overwrite commits.
       val keptDbs = kept.select(col(partCol).cast("int")).distinct()
         .collect().map(_.getInt(0)).toSet
-      val emptied = hitDbs.filterNot(keptDbs)
-      compactBarrier.foreach(_())
-      if (fs.exists(new Path(p, "_temporary")))
-        throw new ConcurrentWriterException(tablePath,
-          "_temporary appeared before the overwrite — a write job is in flight")
-      val after = dataFileSet(fs, p)
-      if (after != before)
-        throw new ConcurrentWriterException(tablePath,
-          s"data files changed before the overwrite " +
-            s"(${(after diff before).size} new, ${(before diff after).size} gone)")
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try kept.write.mode("overwrite").partitionBy(partCol).parquet(tablePath)
-      finally prev match {
-        case Some(v) =>
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      emptied.foreach(db => fs.delete(new Path(p, s"$partCol=$db"), true))
-      refreshStatsManifest(spark, tablePath, tablePath)
+      overwritePartitions(spark, tablePath, before, partCol, kept,
+        hitDbs.filterNot(keptDbs))
       deleted
     } finally releaseCompactionLock(spark, tablePath)
   }
@@ -1070,7 +1031,6 @@ object Maintenance {
     // probe belong to a later deletion batch either way.
     if (spark.read.option("mergeSchema", "true").parquet(tablePath)
         .filter(col(keyCol).isInCollection(keys)).isEmpty) return 0L
-    val statsCols = graft.operators.Layout.statsManifestCols(spark, tablePath)
     var deleted = 0L
     lockedCompactSwap(spark, tablePath) { tmp =>
       // preserve whatever partition layout the table has (sb= signature
@@ -1090,18 +1050,8 @@ object Maintenance {
       // carry every root sidecar across the swap: hwm untouched, blooms
       // stay supersets (see scaladoc), the bucket declaration keeps the
       // layout honored by future appends
-      fs.listStatus(p).filter { f =>
-        (f.getPath.getName.startsWith("_graft_") ||
-          f.getPath.getName == BloomBank.dirName) &&
-          f.getPath.getName != graft.operators.Layout.statsDir
-      }.foreach { f =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
-          new Path(tmp, f.getPath.getName), false,
-          spark.sparkContext.hadoopConfiguration)
-      }
+      carrySidecars(spark, p, tmp, Set.empty)
     }
-    // per-file stats don't survive a rewrite — rebuild, don't carry
-    rebuildStats(spark, tablePath, statsCols)
     deleted
   }
 

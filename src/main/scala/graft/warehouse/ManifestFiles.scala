@@ -80,7 +80,11 @@ private[graft] object ManifestFileIndex {
     * filesystem — never the table's, whose `checkPath` would refuse a
     * foreign scheme/authority). Manifest-recorded sizes build the
     * status directly — zero filesystem round-trips; unknown sizes fall
-    * back to one `getFileStatus` each, threaded past 64 files.
+    * back to one `getFileStatus` each, threaded past 64 files. A
+    * ledger-built status has modification time 0, valid only because a
+    * data file never changes once a version references it:
+    * `DataFileImmutabilitySpec` checks that through random commits,
+    * maintenance, RESTORE, index extends and VACUUM.
     */
   def statusesOf(conf: Configuration, dd: Path,
       names: Seq[String]): Array[FileStatus] = {

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types
 
+import graft.operators.Layout
+
 /** Minimal snapshot-isolation commit protocol over plain parquet — the
   * upgrade path the README's concurrency section describes, implemented
   * with nothing but filesystem primitives (the same recipe the
@@ -15,6 +17,7 @@ import org.apache.spark.sql.types
   *   table/
   *     data/part-<uuid>.parquet        immutable data files
   *     data/_graft_stats/              optional per-file min/max manifest
+  *     data/_graft_bloom_<col>/        optional per-file Bloom index on col
   *     _manifests/v00000001.manifest   optional #-headers, then file names
   *     _manifests/v00000002.manifest
   * }}}
@@ -1563,8 +1566,8 @@ object Snapshots {
     */
   private[graft] def fileStats(spark: SparkSession, table: String,
       entries: Seq[String], declared: Option[types.StructType],
-      colmap: Map[String, String]): Option[graft.operators.Layout.Stats] =
-    graft.operators.Layout.stats(spark, dataDir(table).toString,
+      colmap: Map[String, String]): Option[Layout.Stats] =
+    Layout.stats(spark, dataDir(table).toString,
       declared.map(physSchema(_, colmap)),
       FileSkipping.canonical(spark, dataDir(table), entries)._1)
 
@@ -1580,7 +1583,7 @@ object Snapshots {
       candidates: Seq[String], probedUris: Iterable[String]): Set[String] = {
     val canonMap = FileSkipping.canonical(spark, dataDir(table), candidates)._2
     probedUris.map(u => canonMap.getOrElse(
-      graft.operators.Layout.canonUri(u), new Path(u).getName)).toSet
+      Layout.canonUri(u), new Path(u).getName)).toSet
   }
 
   /** Whether `df` is a deterministic plan over rows already on the
@@ -2063,7 +2066,7 @@ object Snapshots {
           readWithSchema(spark, table, m.files, m.schema, m.colmap))
         val rewritten =
           if (zorderBy.nonEmpty)
-            graft.operators.Layout.zorderFrameN(current, zorderBy, nOut)
+            Layout.zorderFrameN(current, zorderBy, nOut)
           else current.repartition(nOut)
         // the full rewrite NORMALIZES physical names (stage the logical
         // frame verbatim) and re-stages under the partition transform
@@ -2459,50 +2462,79 @@ object Snapshots {
 
   /** Maintain per-file min/max stats for a snapshot table (the Layout
     * `_graft_stats` sidecar, living inside `data/` where the underscore
-    * keeps it invisible to data readers). First call scans the data dir
-    * once to build the manifest; every later call is INCREMENTAL — only
-    * files not yet covered are read, so the steady-state cost after each
-    * commit is O(new files). Stats rows for vacuumed files are dropped
-    * for free, and a sidecar whose bounds are unsound for the declared
-    * types (the double/string encoding of older builds) is rewritten
-    * whole ([[graft.operators.Layout.appendStatsManifest]]). Returns the
-    * number of files newly covered.
+    * keeps it invisible to data readers). Driven by the head version's
+    * file list ([[headFiles]]): the first call reads every file it
+    * lists to build the sidecar; every later call is INCREMENTAL — only
+    * files not yet covered are read, so the steady-state cost after
+    * each commit is O(new files). Stats rows for files the head no
+    * longer lists are dropped for free, and a sidecar whose bounds are
+    * unsound for the declared types (the double/string encoding of
+    * older builds) is rewritten whole. Returns the number of files
+    * newly covered.
     *
     * Run it after commits (or from the maintenance policy); [[readPruned]]
     * stays correct either way because uncovered files are never skipped.
     */
   def extendStats(spark: SparkSession, table: String,
       statsCols: Seq[String]): Int = {
-    val dd = dataDir(table).toString
-    // the HEAD VERSION's file list drives the stats pass, never a
-    // directory listing: concurrent writers' staged orphans stay out,
-    // and a shallow clone's / in-place convert's FOREIGN references
-    // (qualified URIs outside the data dir) stat in — so z-order box
-    // pruning works on a zero-copy fork exactly like on the source
-    val f = fs(spark, dataDir(table))
-    val head = currentVersion(spark, table)
-    require(head > 0, s"no snapshot table at $table to stat")
-    val m = manifestAt(spark, table, head)
-    val files = m.files
-      .map(n => f.makeQualified(new Path(dataDir(table), n)).toString)
-    require(files.nonEmpty, s"$table@v$head has no data files to stat")
+    val (m, files) = headFiles(spark, table)
+    require(files.nonEmpty, s"$table has no data files to stat")
     // the sidecar reads footers, so it tracks PHYSICAL column names;
     // callers speak logical — map before touching the manifest
     val physCols = statsCols.map(physName(m.colmap, _))
-    graft.operators.Layout.statsManifestCols(spark, dd) match {
-      case None =>
-        graft.operators.Layout.writeStatsManifest(spark, dd, physCols,
-          Some(files))
-        spark.read.parquet(s"$dd/${graft.operators.Layout.statsDir}")
-          .count().toInt
-      case Some(cols) =>
-        require(cols.toSet == physCols.toSet,
-          s"stats manifest already tracks $cols; asked for $physCols")
-        graft.operators.Layout.pruneStatsManifestEntries(spark, dd,
-          Some(files))
-        graft.operators.Layout.appendStatsManifest(spark, dd, Some(files),
-          m.schema.map(physSchema(_, m.colmap)))
-    }
+    Layout.statsManifestCols(spark, dataDir(table).toString)
+      .foreach(cols => require(cols.toSet == physCols.toSet,
+        s"stats manifest already tracks $cols; asked for $physCols"))
+    physStats(spark, table, m, files, physCols)
+  }
+
+  /** The head version's manifest and its data files as canonical
+    * qualified URIs: what every index build covers — never a directory
+    * listing, so concurrent writers' staged orphans stay out, and a
+    * shallow clone's or in-place convert's FOREIGN references index in
+    * exactly like the table's own files.
+    */
+  private def headFiles(spark: SparkSession,
+      table: String): (Manifest, Seq[String]) = {
+    val m = manifestAt(spark, table, currentVersion(spark, table))
+    (m, FileSkipping.canonical(spark, dataDir(table), m.files)._1)
+  }
+
+  /** The stats sidecar on physical columns `cols` over `files`. */
+  private def physStats(spark: SparkSession, table: String, m: Manifest,
+      files: Seq[String], cols: Seq[String]): Int =
+    Layout.extendStatsSidecar(spark, dataDir(table).toString, cols, files,
+      m.schema.map(physSchema(_, m.colmap)))(
+      readColumns(spark, table, m, _, cols))
+
+  /** Physical columns `cols` of data files `names` in version `m`'s
+    * declared schema (a file written before a widening reads widened),
+    * or in the footers' types on a legacy version without one.
+    */
+  private def readColumns(spark: SparkSession, table: String, m: Manifest,
+      names: Seq[String], cols: Seq[String]): DataFrame = m.schema match {
+    case Some(s) => readFileList(spark, table, names, types.StructType(
+      physSchema(s, m.colmap).fields.filter(f => cols.contains(f.name))))
+    case None => spark.read.parquet(names: _*)
+      .select(cols.map(org.apache.spark.sql.functions.col): _*)
+  }
+
+  /** Extend every file-skipping index `table` keeps — the stats sidecar
+    * and each Bloom sidecar — over the head's uncovered files, dropping
+    * the rows of files the head no longer lists: the maintenance leg
+    * after a compaction replaced files or appends accreted new ones.
+    * Returns the files newly covered by the stats sidecar, and by each
+    * Bloom sidecar with its physical column. Nothing while the head
+    * lists no file.
+    */
+  def extendIndexes(spark: SparkSession,
+      table: String): (Int, Seq[(String, Int)]) = {
+    val (m, files) = headFiles(spark, table)
+    if (files.isEmpty) (0, Nil)
+    else (Layout.statsManifestCols(spark, dataDir(table).toString)
+        .fold(0)(physStats(spark, table, m, files, _)),
+      bloomIndexedColumns(spark, table)
+        .map(c => c -> physBloom(spark, table, m, files, c)))
   }
 
   /** Read a version of the table with the file list pre-pruned for a
@@ -2522,8 +2554,7 @@ object Snapshots {
     import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
     readSkipping(spark, table, version, ranges.flatMap { case (c, lo, hi) =>
       Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi)) }) { (p, n) =>
-      graft.operators.Layout.lastStatsPruned =
-        if (p.statsRead) Some((p.kept.size, n)) else None
+      Layout.lastStatsPruned = if (p.statsRead) Some((p.kept.size, n)) else None
     }
   }
 
@@ -2580,96 +2611,54 @@ object Snapshots {
     * footer opens. One underscore-prefixed parquet sidecar per indexed
     * column (`data/_graft_bloom_<col>`), invisible to every data read.
     *
-    * Incremental like [[extendStats]]: driven by the HEAD VERSION's
-    * file list (never a directory listing — staged orphans stay out,
-    * and a shallow clone's / in-place convert's FOREIGN refs index in),
-    * scanning ONLY the column of the not-yet-covered files. Values
-    * hash through `xxhash64` of the column's declared type, which each
-    * sidecar row records (`type`; NULL on a table with no declared
-    * schema): a row hashed under another type (a file indexed before
-    * ALTER widened the column, or by a build that did not record it)
-    * counts as uncovered and re-indexes here. The build is ONE
-    * distributed aggregation (Spark's own BloomFilterAggregate,
-    * map-side partial like any agg), ~1.2 KB/file per 1k expected
-    * items at fpp 0.01. Returns files newly indexed.
+    * Incremental like [[extendStats]]: driven by the head version's
+    * file list, scanning ONLY the column of the not-yet-covered files;
+    * rows of files the head no longer lists drop (a pinned-version read
+    * of those files falls back to "always read", the same staleness
+    * contract as stats). Values hash through `xxhash64` of the column's
+    * declared type, which each sidecar row records (`type`; NULL on a
+    * table with no declared schema): a row hashed under another type (a
+    * file indexed before ALTER widened the column, or by a build that
+    * did not record it) counts as uncovered and re-indexes here. The
+    * build is ONE distributed aggregation (Spark's own
+    * BloomFilterAggregate, map-side partial like any agg), ~1.2 KB/file
+    * per 1k expected items at fpp 0.01. Returns files newly indexed.
     */
   def extendBloom(spark: SparkSession, table: String, column: String,
       fpp: Double = 0.01, expectedItemsPerFile: Long = 100000L): Int = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name,
-      lit, xxhash64}
     require(fpp > 0 && fpp < 1, s"fpp $fpp out of (0, 1)")
-    val head = currentVersion(spark, table)
-    require(head > 0, s"no snapshot table at $table to index")
-    val f = fs(spark, dataDir(table))
-    val m = manifestAt(spark, table, head)
-    val files = m.files
-      .map(n => f.makeQualified(new Path(dataDir(table), n)).toString)
-    require(files.nonEmpty, s"$table@v$head has no data files to index")
-    // the sidecar reads footers: it keys the PHYSICAL column name
-    val pc = physName(m.colmap, column)
-    val bd = FileSkipping.bloomDir(dataDir(table), pc)
-    val bt = m.schema.map(s => FileSkipping.bloomType(s(column).dataType))
-    val existing =
-      if (f.exists(bd))
-        Some(spark.read.parquet(bd.toString).localCheckpoint(true))
-      else None
-    // rows hashed under another type than the declared one re-index
-    val typed = existing.filter(_.columns.contains("type"))
-      .map(_.filter(col("type") <=> lit(bt.orNull)))
-    val rawKnown = typed
-      .map(_.select("file").collect().map(_.getString(0)).toSeq)
-      .getOrElse(Nil)
-    val known = rawKnown.map(graft.operators.Layout.canonUri).toSet
-    val liveCanon = files.map(graft.operators.Layout.canonFile).toSet
-    // expire entries for files the head no longer references (a rewrite
-    // replaced them) — the sidecar twin of pruneStatsManifestEntries;
-    // pinned-version reads of those files simply fall back to "always
-    // read", the same staleness contract as stats
-    val dead = rawKnown
-      .filterNot(r => liveCanon(graft.operators.Layout.canonUri(r)))
-    val missing = files.map(graft.operators.Layout.canonFile)
-      .filterNot(known)
-    if (missing.isEmpty && dead.isEmpty) return 0
-    val base = typed.map { e =>
-      if (dead.isEmpty) e
-      else e.filter(!org.apache.spark.sql.functions.col("file")
-        .isInCollection(dead))
-    }
-    if (missing.isEmpty) {
-      base.get.coalesce(1).write.mode("overwrite").parquet(bd.toString)
-      return 0
-    }
+    val (m, files) = headFiles(spark, table)
+    require(files.nonEmpty, s"$table has no data files to index")
+    physBloom(spark, table, m, files, physName(m.colmap, column), fpp,
+      expectedItemsPerFile)
+  }
+
+  /** The Bloom sidecar on physical column `pc` over `files`. */
+  private def physBloom(spark: SparkSession, table: String, m: Manifest,
+      files: Seq[String], pc: String, fpp: Double = 0.01,
+      expectedItemsPerFile: Long = 100000L): Int = {
+    import org.apache.spark.sql.functions.{col, count, lit, xxhash64}
+    import org.apache.spark.sql.graft.ColumnBridge
+    val bt = m.schema.map(s =>
+      FileSkipping.bloomType(physSchema(s, m.colmap)(pc).dataType))
     // optimal bit count for the target fpp (standard Bloom sizing)
     val numBits = math.max(64L, math.ceil(
       -expectedItemsPerFile.toDouble * math.log(fpp) /
         (math.log(2) * math.log(2))).toLong)
-    val rd = m.schema match {
-      case Some(s) => readFileList(spark, table,
-        missing.toIndexedSeq,
-        physSchema(
-          types.StructType(s.fields.filter(_.name == column)), m.colmap))
-      case None => spark.read.parquet(missing.toIndexedSeq: _*)
-        .select(col(pc))
-    }
-    val bloomAgg = org.apache.spark.sql.graft.ColumnBridge.column(
-      new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(
-          org.apache.spark.sql.graft.ColumnBridge.expression(
-            xxhash64(col(pc))),
-          org.apache.spark.sql.catalyst.expressions.Literal(
-            expectedItemsPerFile),
-          org.apache.spark.sql.catalyst.expressions.Literal(numBits))
-        .toAggregateExpression())
-    val fresh = rd.groupBy(input_file_name().as("file"))
-      .agg(bloomAgg.as("bloom"), count(lit(1)).as("rows"))
-      .withColumn("type", lit(bt.orNull).cast("string"))
-    base match {
-      case Some(e) => e.unionByName(fresh).coalesce(1)
-        .write.mode("overwrite").parquet(bd.toString)
-      case None => fresh.coalesce(1)
-        .write.mode("overwrite").parquet(bd.toString)
-    }
-    missing.size
+    val bloomAgg = ColumnBridge.column(new org.apache.spark.sql.catalyst
+      .expressions.aggregate.BloomFilterAggregate(
+        ColumnBridge.expression(xxhash64(col(pc))),
+        org.apache.spark.sql.catalyst.expressions.Literal(expectedItemsPerFile),
+        org.apache.spark.sql.catalyst.expressions.Literal(numBits))
+      .toAggregateExpression())
+    Layout.buildSidecar(spark, FileSkipping.bloomDir(dataDir(table), pc),
+      files, { s =>
+        // rows hashed under another type than the declared one re-index
+        val typed = s.fieldNames.contains("type")
+        r => typed && Option(r.getAs[String]("type")) == bt
+      }, Seq(bloomAgg.as("bloom"), count(lit(1)).as("rows"),
+        lit(bt.orNull).cast("string").as("type")))(
+      readColumns(spark, table, m, _, Seq(pc)))
   }
 
   /** Point-lookup read with the file list pre-pruned by the per-file
@@ -2733,8 +2722,8 @@ object Snapshots {
       colmap: Map[String, String],
       partition: Seq[(String, String)]): Seq[String] = {
     val physToLogical = colmap.map(_.swap)
-    val stats = graft.operators.Layout
-      .statsManifestCols(spark, dataDir(table).toString).getOrElse(Nil)
+    val stats = Layout.statsManifestCols(spark, dataDir(table).toString)
+      .getOrElse(Nil)
     val bloom = bloomIndexedColumns(spark, table)
     (partition.map(_._1) ++
       (stats ++ bloom).map(p => physToLogical.getOrElse(p, p))).distinct

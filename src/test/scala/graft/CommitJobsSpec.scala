@@ -179,4 +179,28 @@ class CommitJobsSpec extends AnyFunSuite {
     val r = rows(t)
     assert(r.size == 60 && r(3L) == "u3" && r(25L) == "u25" && r(4L) == "v4")
   }
+
+  test("extendStats and extendBloom cover an appended file in at most three jobs each, and extends with nothing new run none") {
+    val t = table()
+    Snapshots.extendStats(spark, t, Seq("id"))
+    Snapshots.extendBloom(spark, t, "id", expectedItemsPerFile = 100L)
+    // a keyed read consults (and caches) both sidecars
+    assert(Snapshots.readPrunedByKeys(spark, t, "id", Seq(3L))
+      .filter(col("id") === 3L).count() == 1L)
+    Snapshots.commitAppend(spark, Seq((100L, "a")).toDF("id", "v"), t)
+    val (s, ns) = jobsOf(Snapshots.extendStats(spark, t, Seq("id")))
+    val (b, nb) = jobsOf(
+      Snapshots.extendBloom(spark, t, "id", expectedItemsPerFile = 100L))
+    assert(s == 1 && b == 1, s"covered $s and $b new files; want 1 each")
+    assert(ns <= 3 && nb <= 3, s"the extends ran $ns and $nb jobs; want " +
+      "<= 3 each (the aggregate's map stage, its collect, the write)")
+    val ((s2, b2), n2) = jobsOf((Snapshots.extendStats(spark, t, Seq("id")),
+      Snapshots.extendBloom(spark, t, "id", expectedItemsPerFile = 100L)))
+    assert(s2 == 0 && b2 == 0 && n2 == 0,
+      s"extends with nothing new covered $s2 and $b2 files in $n2 jobs")
+    assert(Snapshots.readPrunedByKeys(spark, t, "id", Seq(100L))
+      .filter(col("id") === 100L).collect().map(_.getString(1)).toSeq ==
+      Seq("a"))
+    assert(Snapshots.lastBloomPruned == Some((1, 7)))
+  }
 }
