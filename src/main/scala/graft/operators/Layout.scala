@@ -383,6 +383,12 @@ object Layout {
           f.getName.startsWith(".")).map(_.toString)))
     } catch { case _: java.io.FileNotFoundException => None }
 
+  /** Spec hook: drop the cached rows of sidecar dir `p`, so the next
+    * read of it is a cold one (as in a JVM that never saw it).
+    */
+  private[graft] def forgetSidecar(p: Path): Unit =
+    sidecarCache.remove(p.toString)
+
   /** Cache `rows` as the content of sidecar dir `p` at fingerprint `fp`. */
   private def cacheSidecar(p: Path, fp: String, s: StructType,
       rows: Seq[Row]): (StructType, Map[String, Row]) = {

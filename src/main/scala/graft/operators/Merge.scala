@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * `WHEN NOT MATCHED THEN INSERT`, plus the CDC variant with a delete
   * flag. The insert-only path stays in `Warehouse.mergeInsertOnly`
   * (partition-pruned probe); these operators produce the post-merge
-  * TABLE STATE, which `warehouse.Snapshots.commitMerge` publishes under
-  * snapshot isolation.
+  * TABLE STATE of plain DataFrames. (`warehouse.Snapshots.commitMerge`
+  * does not rebuild that state: it marks the matched rows dead by
+  * deletion vector and stages only the batch.)
   *
   * Scale design: one join keyed on the merge keys. The changed batch is
   * small in every real merge (CDC ticks, late corrections), so Catalyst

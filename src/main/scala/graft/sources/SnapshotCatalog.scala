@@ -114,6 +114,14 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
     val entries = Snapshots.filesAt(spark, t, version)
     val files = entries.map(n => new Path(dd, n).toString)
     val schema = Snapshots.schemaAt(spark, t, version)
+    // deletion vectors DO have a seat: the scan's reader drops their
+    // positions (DeadRowScan); a legacy version without a declared
+    // schema has no schema to add the row-index column to
+    val dead = Snapshots.deadRowsAt(spark, t, version)
+    if (dead.nonEmpty && schema.isEmpty)
+      throw new UnsupportedOperationException(
+        s"$t@v$version has deletion vectors but no declared schema — " +
+          "OPTIMIZE the table, or read via Snapshots.read")
     // column mapping (RENAME COLUMN): files hold PHYSICAL names, the
     // declared schema is LOGICAL — the scan builder reads physical and
     // re-labels positionally (see PruningScanBuilder)
@@ -152,7 +160,7 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
     // parquet scan is constructed (see PruningScanBuilder)
     def pruningScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
       new SnapshotCatalog.PruningScanBuilder(spark, t, scanName, entries,
-        files, schema, colmap, partition, options)
+        files, schema, colmap, partition, options, dead = dead)
     // wrap to a protocol-honoring face: ParquetTable's OWN BATCH_WRITE
     // must never surface (it would land files no manifest references);
     // the writable face routes inserts through the commit protocol
@@ -544,7 +552,8 @@ object SnapshotCatalog {
       colmap: Map[String, String], partition: Seq[(String, String)],
       options: CaseInsensitiveStringMap,
       onBuild: Scan => Unit = _ => (),
-      groupFilterOnly: Boolean = false)
+      groupFilterOnly: Boolean = false,
+      dead: Map[String, org.roaringbitmap.RoaringBitmap] = Map.empty)
     extends ScanBuilder
     with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
     with SupportsPushDownRequiredColumns
@@ -568,6 +577,22 @@ object SnapshotCatalog {
       else StructType(s.fields.map(f =>
         f.copy(name = colmap.getOrElse(f.name, f.name))))
     private val physDeclared = declared.map(toPhys)
+
+    // deletion vectors: every parquet scan of a vectored version also
+    // reads each row's index within its file (Spark's parquet reader
+    // fills this column by name), and DeadRowScan drops the dead
+    // positions and the column; a version with none plans as before
+    private def positioned(s: StructType): StructType =
+      if (dead.isEmpty) s else s.add(RowIndexField)
+    private lazy val deadByUri: Map[String, org.roaringbitmap.RoaringBitmap] = {
+      val uri = graft.warehouse.FileSkipping.canonical(spark,
+        new Path(table, "data"), dead.keys.toSeq)._2.map(_.swap)
+      dead.map { case (e, b) => uri(e) -> b }
+    }
+    private def deadCount(e: String): Long =
+      dead.get(e).fold(0L)(_.getLongCardinality)
+    private def withDead(s: Scan): Scan =
+      if (dead.isEmpty) s else new DeadRowScan(s, deadByUri)
 
     /** One driver-side `getFileStatus` per manifest file, fetched once
       * per scan build and served to every (re)built index below —
@@ -614,7 +639,8 @@ object SnapshotCatalog {
               Some(org.apache.spark.sql.execution.datasources
                 .PartitionSpec.emptySpec), None)
           new org.apache.spark.sql.execution.datasources.v2.parquet
-            .ParquetScanBuilder(spark, index, ds, ds, options)
+            .ParquetScanBuilder(spark, index, positioned(ds), positioned(ds),
+              options)
         case None => // legacy no-schema table: footer inference needs
           // ParquetTable's own discovery path
           ParquetTable(scanName, spark, CaseInsensitiveStringMap.empty(),
@@ -669,7 +695,7 @@ object SnapshotCatalog {
       if (groupFilterOnly) Array.empty else inner.pushedFilters
     override def pruneColumns(required: StructType): Unit = {
       requiredLogical = Some(required)
-      inner.pruneColumns(toPhys(required))
+      inner.pruneColumns(positioned(toPhys(required)))
     }
     /** The Aggregation with its field references renamed logical →
       * physical, so footer-stats pushdown works on RENAMED columns too
@@ -715,19 +741,23 @@ object SnapshotCatalog {
         : Option[(StructType, org.apache.spark.sql.catalyst.InternalRow)] =
       if (pushedCatalyst.nonEmpty) None
       else SnapshotCatalog.statsAggAnswer(spark, table, entries, colmap,
-        declared, agg)
+        declared, agg, deadCount)
+
+    // parquet's aggregate pushdown answers from footers, which count a
+    // vectored file's dead rows too
+    private def footerAggs: Boolean = !liveEntries.exists(dead.contains)
 
     override def pushAggregation(agg: Aggregation): Boolean = {
       statsServed = tryStatsAnswer(agg)
       if (statsServed.isDefined) { aggPushed = true; return true }
-      aggPushed = toPhysAgg(agg).exists(pa => inner match {
+      aggPushed = footerAggs && toPhysAgg(agg).exists(pa => inner match {
         case a: SupportsPushDownAggregates => a.pushAggregation(pa)
         case _ => false
       })
       aggPushed
     }
     override def supportCompletePushDown(agg: Aggregation): Boolean =
-      tryStatsAnswer(agg).isDefined ||
+      tryStatsAnswer(agg).isDefined || footerAggs &&
       toPhysAgg(agg).exists(pa => inner match {
         case a: SupportsPushDownAggregates => a.supportCompletePushDown(pa)
         case _ => false
@@ -752,8 +782,10 @@ object SnapshotCatalog {
       */
     override def pushLimit(limit: Int): Boolean = {
       if (limit <= 0 || pushedCatalyst.nonEmpty || aggPushed) return false
+      // live rows: a vectored file's dead rows do not count
       val counts = Snapshots.fileStats(spark, table, liveEntries, declared,
         colmap).flatMap(_.rowCounts).getOrElse(return false)
+        .zip(liveEntries).map { case (n, e) => n - deadCount(e) }
       var cum = 0L; var n = 0
       while (n < counts.length && cum < limit) { cum += counts(n); n += 1 }
       if (cum >= limit && n < liveEntries.size) {
@@ -793,7 +825,7 @@ object SnapshotCatalog {
           org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING,
         nullsFirst = o.nullOrdering() ==
           org.apache.spark.sql.connector.expressions.NullOrdering.NULLS_FIRST,
-        k = limit).getOrElse(return false)
+        k = limit, dead = deadCount).getOrElse(return false)
       if (keep.size < liveEntries.size) {
         Snapshots.lastTopNPruned = Some((keep.size, liveEntries.size))
         liveEntries = keep
@@ -809,10 +841,10 @@ object SnapshotCatalog {
     private def rebuildFor(keep: Set[String]): Scan = {
       val b = builderFor(pathsFor(keep))
       if (!groupFilterOnly) b.pushFilters(pushedCatalyst)
-      requiredLogical.foreach(r => b.pruneColumns(toPhys(r)))
+      requiredLogical.foreach(r => b.pruneColumns(positioned(toPhys(r))))
       val s = b.build()
-      if (colmap.isEmpty) s
-      else new SnapshotCatalog.LogicalNameScan(s, physToLogical)
+      withDead(if (colmap.isEmpty) s
+        else new SnapshotCatalog.LogicalNameScan(s, physToLogical))
     }
 
     override def build(): Scan = {
@@ -823,8 +855,8 @@ object SnapshotCatalog {
         return scan
       }
       val s0 = inner.build()
-      val s = if (colmap.isEmpty) s0
-        else new SnapshotCatalog.LogicalNameScan(s0, physToLogical)
+      val s = withDead(if (colmap.isEmpty) s0
+        else new SnapshotCatalog.LogicalNameScan(s0, physToLogical))
       // a pushed aggregate rewrites the scan's output to the agg values
       // — a runtime file re-prune under it would change RESULTS, not
       // just IO (partial MIN of fewer files), so it opts out
@@ -832,7 +864,7 @@ object SnapshotCatalog {
         if (aggPushed) s
         else new SnapshotCatalog.RuntimeFilterableScan(spark, table,
           liveEntries, declared, colmap, partition, s, rebuildFor,
-          allowRuntimeFilter = !truncated)
+          allowRuntimeFilter = !truncated, deadCount = deadCount)
       onBuild(built)
       built
     }
@@ -860,7 +892,8 @@ object SnapshotCatalog {
       table: String, baseEntries: Seq[String],
       declared: Option[StructType], colmap: Map[String, String],
       partition: Seq[(String, String)], initial: Scan,
-      rebuild: Set[String] => Scan, allowRuntimeFilter: Boolean = true)
+      rebuild: Set[String] => Scan, allowRuntimeFilter: Boolean = true,
+      deadCount: String => Long = _ => 0L)
     extends Scan
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
@@ -1042,8 +1075,10 @@ object SnapshotCatalog {
     // decisions run on real cardinality instead of a bytes-only guess.
     // One driver-side read of the tiny manifest, cached per scan;
     // sizeInBytes still comes from the parquet scan.
+    // A vectored file's dead rows do not count.
     private lazy val exactRows: Option[Long] = Snapshots.fileStats(spark,
-      table, baseEntries, declared, colmap).flatMap(_.rowCounts).map(_.sum)
+      table, baseEntries, declared, colmap).flatMap(_.rowCounts)
+      .map(_.sum - baseEntries.map(deadCount).sum)
 
     override def estimateStatistics()
         : org.apache.spark.sql.connector.read.Statistics = {
@@ -1088,19 +1123,23 @@ object SnapshotCatalog {
   private[sources] def topNKeepEntries(spark: SparkSession, table: String,
       entries: Seq[String], physCol: String, declared: Option[StructType],
       colmap: Map[String, String], asc: Boolean, nullsFirst: Boolean,
-      k: Int): Option[Seq[String]] = {
+      k: Int, dead: String => Long = _ => 0L): Option[Seq[String]] = {
     val st = Snapshots.fileStats(spark, table, entries, declared, colmap)
       .getOrElse(return None)
     // defined only when every file has its row and null counts
     val nonNulls = st.nonNulls(physCol).getOrElse(return None)
+    // a vectored file counts its live rows, and of its non-null values
+    // only those no dead row can have been; its bounds still hold every
+    // live value
     val fss = entries.zip(st.covered.get).zip(nonNulls).map {
       case ((e, f), nn) =>
         val b = f.columns(physCol)
+        val (d, rows) = (dead(e), f.rows.get - dead(e))
         if (nn < 0) return None
-        if (nn == 0) (e, f.rows.get, 0L, None, None)
+        if (nn == 0) (e, rows, 0L, None, None)
         else if (b.min == null || b.max == null) return None
-        else if (asc) (e, f.rows.get, nn, Some(b.min), Some(b.max))
-        else (e, f.rows.get, nn, Some(b.max), Some(b.min))
+        else if (asc) (e, rows, math.max(0L, nn - d), Some(b.min), Some(b.max))
+        else (e, rows, math.max(0L, nn - d), Some(b.max), Some(b.min))
     }
     Some(topNKeepStats(fss, org.apache.spark.sql.catalyst.util.TypeUtils
       .getInterpretedOrdering(st.types(physCol)), asc, nullsFirst, k))
@@ -1161,14 +1200,19 @@ object SnapshotCatalog {
     *   - MIN/MAX columns are tracked ([[graft.operators.Layout.stats]]):
     *     their bounds hold the column's type exactly — timestamps and
     *     decimals included, bounds from before a widening cast up — and
-    *     the winner is chosen by Spark's ordering for that type.
+    *     the winner is chosen by Spark's ordering for that type;
+    *   - on a file with `dead` rows (its deletion vector), COUNT(*)
+    *     counts the live ones, COUNT(col) answers only when the column
+    *     is all-null or null-free there, and MIN/MAX refuse (the file's
+    *     extreme row may be dead).
     * NULL file stats contribute nothing to MIN/MAX (an all-null or
     * empty file), matching Spark's null-ignoring aggregates; an overall
     * empty/all-null table answers NULL.
     */
   private[sources] def statsAggAnswer(spark: SparkSession, table: String,
       entries: Seq[String], colmap: Map[String, String],
-      declared: Option[StructType], agg: Aggregation)
+      declared: Option[StructType], agg: Aggregation,
+      dead: String => Long = _ => 0L)
       : Option[(StructType, org.apache.spark.sql.catalyst.InternalRow)] = {
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate._
@@ -1197,14 +1241,22 @@ object SnapshotCatalog {
     val st = Snapshots.fileStats(spark, table, entries, declared, colmap)
       .getOrElse(return None)
     val files = st.covered.getOrElse(return None)
+    val deadN = entries.map(dead)
+    val vectored = deadN.exists(_ > 0)
     val out = shapes.map {
       case Left(c) =>
-        val n = c.fold(st.rowCounts)(c => st.nonNulls(c._3))
-          .getOrElse(return None).sum
+        val rows = st.rowCounts.getOrElse(return None)
+        val counted = c.fold(rows)(c => st.nonNulls(c._3)
+          .getOrElse(return None))
+        val n = counted.lazyZip(rows).lazyZip(deadN).map { (k, r, d) =>
+          if (d == 0 || k == 0) k
+          else if (k == r) k - d // null-free: every dead row was counted
+          else return None
+        }.sum
         (StructField(s"count(${c.fold("*")(_._1)})", LongType,
           nullable = false), java.lang.Long.valueOf(n): Any)
       case Right(((c, dt, phys), isMin)) =>
-        if (!st.types.contains(phys)) return None
+        if (!st.types.contains(phys) || vectored) return None
         val vs = files.map(f => f.columns(phys))
           .map(b => if (isMin) b.min else b.max).filter(_ != null)
         val ord = org.apache.spark.sql.catalyst.util.TypeUtils
@@ -1331,11 +1383,18 @@ object SnapshotCatalog {
     */
   private[sources] class LogicalNameScan(inner: Scan,
       physToLogical: Map[String, String])
-    extends Scan
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+    extends WrappedScan(inner) {
     override def readSchema(): StructType =
       StructType(inner.readSchema().fields.map(f =>
         f.copy(name = physToLogical.getOrElse(f.name, f.name))))
+  }
+
+  /** A scan face over `inner` that changes what it serves, not how it is
+    * planned: batch, description, metrics and statistics delegate.
+    */
+  private[sources] abstract class WrappedScan(inner: Scan)
+    extends Scan
+    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
     override def toBatch: org.apache.spark.sql.connector.read.Batch =
       inner.toBatch
     override def description(): String = inner.description()
@@ -1351,6 +1410,87 @@ object SnapshotCatalog {
           java.util.OptionalLong.empty()
         override def numRows(): java.util.OptionalLong =
           java.util.OptionalLong.empty()
+      }
+    }
+  }
+
+  /** The column a vectored version's parquet scans add: Spark's parquet
+    * reader fills a field of this name with each row's index within its
+    * file.
+    */
+  private val RowIndexField = org.apache.spark.sql.types.StructField(
+    ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+    org.apache.spark.sql.types.LongType)
+
+  /** Scan face that serves a vectored version: the wrapped parquet scan
+    * reads [[RowIndexField]] too, and its reader factory drops the rows
+    * whose (file, row index) `dead` holds (bitmaps by canonical file URI)
+    * and projects the column away. Rows are served one at a time (a
+    * columnar batch cannot lose rows), so a version with no vector never
+    * takes this path.
+    */
+  private[sources] class DeadRowScan(inner: Scan,
+      dead: Map[String, org.roaringbitmap.RoaringBitmap])
+    extends WrappedScan(inner) {
+    private def rowIndex = inner.readSchema()
+      .fieldIndex(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME)
+    override def readSchema(): StructType =
+      StructType(inner.readSchema().fields.patch(rowIndex, Nil, 1))
+    override def toBatch: org.apache.spark.sql.connector.read.Batch = {
+      val b = inner.toBatch
+      val types = inner.readSchema().fields.map(_.dataType)
+      val at = rowIndex
+      new org.apache.spark.sql.connector.read.Batch {
+        override def planInputPartitions()
+            : Array[org.apache.spark.sql.connector.read.InputPartition] =
+          b.planInputPartitions()
+        override def createReaderFactory()
+            : org.apache.spark.sql.connector.read.PartitionReaderFactory =
+          new DeadRowReaderFactory(b.createReaderFactory(),
+            new graft.warehouse.DeletionVectors.RowMask(dead, Map.empty),
+            types, at)
+      }
+    }
+  }
+
+  /** The reader side of [[DeadRowScan]], beside [[DispatchingReaderFactory]]:
+    * each row's file is the one the file reader announces
+    * (`InputFileBlockHolder`, what `input_file_name()` reads), its index
+    * sits at ordinal `at` of the wrapped row (of column `types`), and
+    * `mask` decides whether it is served.
+    */
+  private[sources] class DeadRowReaderFactory(
+      inner: org.apache.spark.sql.connector.read.PartitionReaderFactory,
+      mask: graft.warehouse.DeletionVectors.RowMask,
+      types: Array[org.apache.spark.sql.types.DataType], at: Int)
+    extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
+    override def supportColumnarReads(
+        p: org.apache.spark.sql.connector.read.InputPartition): Boolean = false
+    override def createReader(
+        p: org.apache.spark.sql.connector.read.InputPartition)
+        : org.apache.spark.sql.connector.read.PartitionReader[
+          org.apache.spark.sql.catalyst.InternalRow] = {
+      import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+        UnsafeProjection}
+      val r = inner.createReader(p)
+      val project = UnsafeProjection.create(types.indices.filter(_ != at)
+        .map(i => BoundReference(i, types(i), nullable = true)))
+      new org.apache.spark.sql.connector.read.PartitionReader[
+          org.apache.spark.sql.catalyst.InternalRow] {
+        private var row: org.apache.spark.sql.catalyst.InternalRow = _
+        override def next(): Boolean = {
+          while (r.next()) {
+            val cur = r.get()
+            if (mask.live(org.apache.spark.sql.graft.ColumnBridge.inputFilePath,
+                cur.getLong(at))) {
+              row = project(cur)
+              return true
+            }
+          }
+          false
+        }
+        override def get(): org.apache.spark.sql.catalyst.InternalRow = row
+        override def close(): Unit = r.close()
       }
     }
   }

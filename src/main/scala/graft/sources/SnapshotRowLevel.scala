@@ -85,7 +85,7 @@ private[sources] class SnapshotRowLevelOperation(spark: SparkSession,
 
   // the version context the operation runs against, pinned at scan
   // build; the commit's conflict check re-verifies against the head
-  private val head = Snapshots.currentVersion(spark, table)
+  private[sources] val head = Snapshots.currentVersion(spark, table)
   private[sources] val colmap = Snapshots.colmapAt(spark, table, head)
   private val partition = Snapshots.partitionsAt(spark, table, head)
   private[sources] val partitionRaw: Option[String] =
@@ -116,8 +116,10 @@ private[sources] class SnapshotRowLevelOperation(spark: SparkSession,
       },
       // the pushed condition selects GROUPS, never rows: every row of
       // every kept file must come back or the rewrite loses the
-      // carried rows of partially-matching files
-      groupFilterOnly = true)
+      // carried rows of partially-matching files (the live ones: dead
+      // positions leave with the file's vector)
+      groupFilterOnly = true,
+      dead = Snapshots.deadRowsAt(spark, table, head))
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -171,7 +173,7 @@ private[sources] class SnapshotReplaceWrite(spark: SparkSession,
     val staged = messages.toSeq
       .collect { case StagedFileMessage(es) => es }.flatten
     Snapshots.commitReplaceEntries(spark, table, op.scannedEntries,
-      staged, op.colmap, op.partitionRaw)
+      staged, op.colmap, op.partitionRaw, scannedAt = Some(op.head))
     ()
   }
 

@@ -283,10 +283,7 @@ class SnapshotStreamSource(spark: SparkSession, table: String,
       if (stepFrom == 0)
         snapshotAt(v)
       else {
-        val appendOnly =
-          Snapshots.removedFiles(spark, table, stepFrom, v).isEmpty &&
-            Snapshots.sameTombstones(spark, table, stepFrom, v)
-        if (appendOnly) {
+        if (Snapshots.appendOnly(spark, table, stepFrom, v)) {
           val inc = Snapshots.incrementalRead(spark, table, stepFrom, v)
           if (readChangeFeed) conformCdf(inc, Some("insert"))
           else conform(inc)

@@ -45,14 +45,25 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *                                                    #dropped
   *   #partition:     #partition:<col>:<kind>[;...]   carried (overwrite too);
   *                   outermost level first            SET PARTITION sets it
+  *   #dv:            #dv:<vector file>:<entry>       written only when an entry
+  *                   (split at the first colon:       has a deletion vector;
+  *                   an entry may be a URI)           MERGE, DELETE and UPDATE
+  *                                                    set an affected entry's
+  *                                                    (its cumulative vector in
+  *                                                    `_deletes/`); a re-write
+  *                                                    of the entry (OPTIMIZE,
+  *                                                    small-file pack, the
+  *                                                    dead-fraction fallback)
+  *                                                    drops it; restore takes
+  *                                                    the target's
   *   #fsz:           #fsz:<bytes>:<entry>            recomputed by every claim
   *                                                    for every listed file
   *   #base: #add:    delta over version <base>       physical only: chosen at
   *   #remove:        (#add/#remove one per entry)     claim time, resolved away
   * }}}
   *
-  * Restore takes #schema, #tombstone(col), #dropped, #colmap and
-  * #partition from its target version and the rest from the head; a
+  * Restore takes #schema, #tombstone(col), #dropped, #colmap, #partition
+  * and #dv from its target version and the rest from the head; a
   * shallow clone copies everything. Header lines render in the table's
   * order, multi-valued ones sorted by key, so a manifest's text is a pure
   * function of its fields.
@@ -71,6 +82,7 @@ private[graft] final case class Manifest(
     dropped: Seq[String] = Nil,
     colmap: Map[String, String] = Map.empty,
     partitions: Seq[(String, String)] = Nil,
+    dvs: Map[String, String] = Map.empty,
     sizes: Map[String, Long] = Map.empty,
     files: Seq[String] = Nil,
     version: Long = 0L) extends Manifest.Text {
@@ -79,10 +91,15 @@ private[graft] final case class Manifest(
   /** The raw `#partition:` value, None for a flat table. */
   def partitionHeader: Option[String] = Manifest.partitionHeader(partitions)
 
-  /** This manifest exactly as `parse(render)` returns it. */
-  def canonical: Manifest = copy(
-    tombstoneCol = tombstoneCol.filter(_ => tombstones.nonEmpty),
-    tombstones = tombstones.sorted, dropped = dropped.sorted)
+  /** This manifest exactly as `parse(render)` returns it; a vector of an
+    * entry the file list no longer holds goes with the entry.
+    */
+  def canonical: Manifest = {
+    val live = files.toSet
+    copy(tombstoneCol = tombstoneCol.filter(_ => tombstones.nonEmpty),
+      tombstones = tombstones.sorted, dropped = dropped.sorted,
+      dvs = dvs.filter { case (e, _) => live(e) })
+  }
 
   private[warehouse] def headerLines: Seq[String] =
     (if (op.isEmpty) Nil else Seq(OpHeader + op)) ++
@@ -95,7 +112,8 @@ private[graft] final case class Manifest(
          tombstones.sorted.map(TombstoneHeader + _)) ++
       dropped.sorted.map(DroppedHeader + _) ++
       colmap.toSeq.sortBy(_._1).map { case (l, p) => s"$ColmapHeader$l:$p" } ++
-      partitionHeader.map(PartitionHeader + _)
+      partitionHeader.map(PartitionHeader + _) ++
+      dvs.toSeq.sortBy(_._1).map { case (e, v) => s"$DvHeader$v:$e" }
 
   private[warehouse] def sizeLines(entries: Seq[String]): Seq[String] =
     entries.flatMap(n => sizes.get(n).map(l => s"$FszHeader$l:$n"))
@@ -138,6 +156,7 @@ private[graft] object Manifest {
   private val DroppedHeader = "#dropped:"
   private val ColmapHeader = "#colmap:"
   private val PartitionHeader = "#partition:"
+  private val DvHeader = "#dv:"
   private val FszHeader = "#fsz:"
   private val BaseHeader = "#base:"
   private val AddHeader = "#add:"
@@ -184,6 +203,7 @@ private[graft] object Manifest {
     val marks = Map.newBuilder[String, Long]
     val checks, colmap = Map.newBuilder[String, String]
     val sizes = Map.newBuilder[String, Long]
+    val dvs = Map.newBuilder[String, String]
     text.split("\n", -1).iterator.filter(_.nonEmpty).foreach { l =>
       def v(h: String) = l.substring(h.length)
       if (!l.startsWith("#")) files += l
@@ -206,6 +226,9 @@ private[graft] object Manifest {
             val cut = p.lastIndexOf(':')
             (p.substring(0, cut), p.substring(cut + 1))
         })
+      else if (l.startsWith(DvHeader)) {
+        val (vf, e) = pair(v(DvHeader)); dvs += e -> vf
+      }
       else if (l.startsWith(FszHeader)) {
         val (len, n) = pair(v(FszHeader)); sizes += n -> len.toLong
       }
@@ -215,7 +238,8 @@ private[graft] object Manifest {
     }
     m = m.copy(marks = marks.result(), checks = checks.result(),
       tombstones = tombs.result(), dropped = dropped.result(),
-      colmap = colmap.result(), sizes = sizes.result(), files = files.result())
+      colmap = colmap.result(), dvs = dvs.result(), sizes = sizes.result(),
+      files = files.result())
     base match {
       case None => m
       case Some(b) => Delta(b, m, adds.result(), removes.result())

@@ -20,6 +20,8 @@ import graft.operators.Layout
   *     data/_graft_bloom_<col>/        optional per-file Bloom index on col
   *     _manifests/v00000001.manifest   optional #-headers, then file names
   *     _manifests/v00000002.manifest
+  *     _deletes/<uuid>.dv              immutable deletion vectors (dead
+  *                                     row positions per data file)
   * }}}
   *
   * Invariants:
@@ -46,8 +48,9 @@ import graft.operators.Layout
   * checkpoint resolution) lives in [[Manifest]]; every commit publishes
   * through the one commit loop, [[transact]].
   *
-  * On top of the core commit protocol the object provides MERGE,
-  * copy-on-write DELETE, OPTIMIZE, vacuum retention, per-file-stats
+  * On top of the core commit protocol the object provides MERGE, DELETE
+  * and UPDATE by deletion vectors ([[DeletionVectors]]), OPTIMIZE,
+  * vacuum retention, per-file-stats
   * pruned reads ([[readPruned]]), and incremental consumption
   * ([[incrementalRead]] / [[rowDiff]] — IO proportional to the delta /
   * churn, never the table). Single-table scope; no manifest-log
@@ -527,6 +530,21 @@ object Snapshots {
   def filesAt(spark: SparkSession, table: String, version: Long): Seq[String] =
     manifestAt(spark, table, version).files
 
+  /** The dead row positions of each of the version's entries that has a
+    * deletion vector ([[DeletionVectors]]); empty for a version with none.
+    * Driver-side: the vector files are read once per JVM, then cached.
+    */
+  private[graft] def deadRowsAt(spark: SparkSession, table: String,
+      version: Long): Map[String, org.roaringbitmap.RoaringBitmap] = {
+    val m = manifestAt(spark, table, version)
+    DeletionVectors.of(spark, table, m.dvs, m.files)
+  }
+
+  /** Spec hook: the deletion-vector files the version references. */
+  private[graft] def vectorFilesAt(spark: SparkSession, table: String,
+      version: Long): Seq[String] =
+    manifestAt(spark, table, version).dvs.values.toSeq.distinct.sorted
+
   /** Spec hook: the version's `#fsz:` size ledger (entry → bytes). */
   private[graft] def fileSizesAt(spark: SparkSession, table: String,
       version: Long): Map[String, Long] =
@@ -683,21 +701,64 @@ object Snapshots {
     * through parquet's name-based resolution), the returned frame serves
     * LOGICAL names, so every caller above this line — probes, merges,
     * constraints, tombstone joins, feeds — lives purely in logical space.
+    *
+    * Deletion vectors apply here too: `dead` (entry → positions) drops
+    * rows, `only` keeps just the listed positions of its entries (the
+    * change feed's view of rows that died or came back), and `positions`
+    * adds each row's file URI and row index. With none of the three the
+    * plan is the plain scan.
     */
   private def readWithSchema(spark: SparkSession, table: String,
       names: Seq[String], schema: Option[types.StructType],
-      colmap: Map[String, String]): DataFrame = {
-    schema match {
-      case Some(s) =>
-        val df = readFileList(spark, table, names, physSchema(s, colmap))
-        if (colmap.isEmpty) df else df.toDF(s.fieldNames.toIndexedSeq: _*)
+      colmap: Map[String, String],
+      dead: Map[String, org.roaringbitmap.RoaringBitmap] = Map.empty,
+      only: Map[String, org.roaringbitmap.RoaringBitmap] = Map.empty,
+      positions: Boolean = false): DataFrame = {
+    import DeletionVectors.{FileCol, RowCol}
+    val df = schema match {
+      case Some(s) => readFileList(spark, table, names, physSchema(s, colmap))
       case None => // legacy manifests without a declared schema: parquet
         // footer inference is the only source of truth — keep Spark's own
         // discovery path for them
         spark.read.parquet(
           names.map(n => new Path(dataDir(table), n).toString): _*)
     }
+    // the row positions ride the scan's hidden _metadata, which a filter
+    // passes through but a projection does not: mask, and take the
+    // positions, before any rename
+    val live =
+      if (dead.isEmpty && only.isEmpty) df
+      else {
+        val uri = FileSkipping.canonical(spark, dataDir(table),
+          (dead.keys ++ only.keys).toSeq.distinct)._2.map(_.swap)
+        def byUri(m: Map[String, org.roaringbitmap.RoaringBitmap]) =
+          m.map { case (e, b) => uri(e) -> b }
+        DeletionVectors.filter(df,
+          new DeletionVectors.RowMask(byUri(dead), byUri(only)))
+      }
+    val placed =
+      if (!positions) live
+      else live.select(org.apache.spark.sql.functions.col("*") +:
+        DeletionVectors.positionCols: _*)
+    schema match {
+      case Some(s) if colmap.nonEmpty => placed.toDF(
+        s.fieldNames.toIndexedSeq ++
+          (if (positions) Seq(FileCol, RowCol) else Nil): _*)
+      case _ => placed
+    }
   }
+
+  /** The rows of `names` that version `m` serves: its deletion vectors
+    * and pending tombstones applied, under its declared schema. The one
+    * read of live rows every reader goes through; `positions` keeps each
+    * row's file URI and row index ([[DeletionVectors.FileCol]],
+    * [[DeletionVectors.RowCol]]).
+    */
+  private def readLive(spark: SparkSession, table: String, m: Manifest,
+      names: Seq[String], positions: Boolean = false): DataFrame =
+    applyTombstones(spark, table, m, readWithSchema(spark, table, names,
+      m.schema, m.colmap, DeletionVectors.of(spark, table, m.dvs, names),
+      positions = positions))
 
   /** Scan exactly `names` under the given PHYSICAL schema through a
     * manifest-backed [[ManifestFileIndex]]: no file-listing job, no
@@ -1571,21 +1632,6 @@ object Snapshots {
       declared.map(physSchema(_, colmap)),
       FileSkipping.canonical(spark, dataDir(table), entries)._1)
 
-  /** Map probed physical URIs (`input_file_name()` output) back to the
-    * MANIFEST ENTRIES that reference them: bare names for the table's
-    * own files, qualified URIs for FOREIGN refs (shallow clones,
-    * in-place conversions). Collapsing to `getName` here would be a
-    * correctness bug, not a cosmetic one: a foreign entry never equals
-    * a bare name, so the copy-on-write carry logic would keep the
-    * affected file AND stage its rewrite — silent row duplication.
-    */
-  private def probedEntries(spark: SparkSession, table: String,
-      candidates: Seq[String], probedUris: Iterable[String]): Set[String] = {
-    val canonMap = FileSkipping.canonical(spark, dataDir(table), candidates)._2
-    probedUris.map(u => canonMap.getOrElse(
-      Layout.canonUri(u), new Path(u).getName)).toSet
-  }
-
   /** Whether `df` is a deterministic plan over rows already on the
     * driver (every leaf a `LocalRelation`, as in a batch built from
     * local rows): re-running it gives the same rows and reads no file,
@@ -1630,58 +1676,59 @@ object Snapshots {
       vals.map(toCatalyst).toSet))
   }
 
-  /** File-granular copy-on-write apply — the shared engine of
-    * [[commitMerge]] and [[syncReplica]]'s feed transport: stage only
-    * the files that PHYSICALLY hold a key the change set touches,
-    * carry every other file into the new manifest by name.
+  /** Row-level apply by deletion vectors — the shared engine of
+    * [[commitMerge]] and [[syncReplica]]'s feed transport: mark the rows
+    * the change set replaces or deletes dead, stage only the change set's
+    * new row versions, carry every file into the new manifest by name.
     *
-    *   1. probe: ONE scan of the version's files, filtered on the
-    *      touched keys (a key set for a single-column key, a broadcast
-    *      semi-join otherwise), projecting `input_file_name()`
-    *      and deduped per task ([[distinctRows]]) — the same recipe
-    *      [[commitDelete]] uses.
-    *      Only the key columns are read (column pruning), and the
-    *      scanned candidate set is itself pruned driver-side first by
-    *      [[FileSkipping]] (partition dirs, stats and Bloom sidecars
-    *      on the probe key) — on a z-ordered, stats-manifested table
-    *      the probe opens a handful of files, not the table;
-    *   2. rewrite: the affected slice, tombstone-filtered and conformed
-    *      to the evolved schema, merged with the changes (upserts
-    *      replace, `deleteCol`-flagged keys drop) — staged bytes are
-    *      O(churned files + batch), never O(table). A single-column
-    *      key's set doubles as the anti-join, so a MERGE runs three
-    *      jobs (key collect, probe, staged write), and two when the
-    *      change set is a batch of local rows, whose keys collect with
-    *      no job;
-    *   3. tombstones: pending tombstone headers CARRY forward, except
-    *      keys the change set re-asserts — those files are forced into
-    *      the affected set (their dead rows materialize in the rewrite)
-    *      and the keys leave the tombstone set, so a re-inserted key is
-    *      never swallowed by the read-side anti-join. When the change
-    *      set lacks the tombstone key column entirely, conforming
-    *      null-pads it and NULLs re-assert nothing.
+    *   1. probe: ONE positioned scan of the version's live rows,
+    *      filtered on the touched keys (a key set for a single-column
+    *      key, a broadcast semi-join otherwise), each task folding the
+    *      matched rows' positions into one bitmap per file
+    *      ([[DeletionVectors.positionsOf]]). Only the key columns are
+    *      read, and the candidate set is pruned driver-side first by
+    *      [[FileSkipping]] (partition dirs, stats and Bloom sidecars on
+    *      the probe key) — on a z-ordered, stats-manifested table the
+    *      probe opens a handful of files, not the table;
+    *   2. the matched positions die ([[killRows]]): an affected file
+    *      gains a cumulative deletion vector, or is re-written without
+    *      its dead rows once their share passes
+    *      [[DeletionVectors.MaxDeadFraction]];
+    *   3. stage: the upserts (the change set minus `deleteCol`-flagged
+    *      rows) plus any re-written survivors, in one write. A single-
+    *      column key's set is collected with the probe's filter, so a
+    *      MERGE runs three jobs (key collect, probe, staged write), and
+    *      two when the change set is a batch of local rows, whose keys
+    *      collect with no job;
+    *   4. tombstones: pending tombstone headers CARRY forward, except
+    *      keys the change set re-asserts — the rows of those keys die by
+    *      vector too (a second probe leg on the tombstone column), and
+    *      the keys leave the tombstone set, so a re-inserted key is never
+    *      swallowed by the read-side anti-join. When the change set lacks
+    *      the tombstone key column entirely, conforming null-pads it and
+    *      NULLs re-assert nothing.
     *
     * `changes` must already be conformed to `schema` (plus the optional
     * delete-flag column); `keys` must be unique within `changes`.
     * Returns the next manifest (declaring `schema`) and the files this
-    * pass staged — rewrites, inserts and any re-keyed tombstone sidecar —
-    * for the commit loop to reclaim on a lost claim (carried-forward
-    * sidecars are never touched).
+    * pass staged — data, the vector file and any re-keyed tombstone
+    * sidecar — for the commit loop to reclaim on a lost claim
+    * (carried-forward files are never touched).
     */
   private def cowApply(spark: SparkSession, table: String,
       m: Manifest, schema: types.StructType, changes0: DataFrame,
       keys: Seq[String], deleteCol: Option[String]): (Manifest, Seq[Path]) = {
-    import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
+    import org.apache.spark.sql.functions.{broadcast, col}
     val files = m.files
     def dataPaths(ns: Seq[String]) = ns.map(new Path(dataDir(table), _))
     // ONE materialization of the (bounded-by-contract) change set: the
-    // pass consumes it several times — key collect/probe, the merge, the
-    // tombstone re-assert legs — and in feed mode the lazy plan is a
-    // whole rowDiff join that must not re-execute per consumer. The
-    // checkpoint is LAZY: its first consumer (the key collect below, for
-    // single-column keys) materializes it inside its own job. It also
-    // cuts lineage to an in-memory RDD, which the input_file_name()
-    // probes require (they refuse plans carrying a second file source).
+    // pass consumes it several times — key collect/probe, the staged
+    // write, the tombstone re-assert legs — and in feed mode the lazy
+    // plan is a whole rowDiff join that must not re-execute per
+    // consumer. The checkpoint is LAZY: its first consumer (the key
+    // collect below, for single-column keys) materializes it inside its
+    // own job. It also cuts lineage to an in-memory RDD, so the
+    // positioned probes read one file source only.
     // A deterministic batch of local rows is already materialized,
     // holds no file source, and gives up its keys with no job: it is
     // used as is.
@@ -1698,12 +1745,10 @@ object Snapshots {
         dataPaths(staged))
     }
     // single-column keys (the common case) probe via a key set when the
-    // touch-set is bounded: the predicate pushes into the
-    // parquet scan (row-group min/max skipping applies), no second
-    // frame ever joins the probe, and the rewrite's anti-join is a
-    // filter on the same list — fastVals is None past the cap or for
-    // composite keys, falling back to the broadcast semi-join and
-    // Merge's anti-join.
+    // touch-set is bounded: the predicate pushes into the parquet scan
+    // (row-group min/max skipping applies) and no second frame ever
+    // joins the probe — fastVals is None past the cap or for composite
+    // keys, falling back to the broadcast semi-join.
     val fastVals: Option[Seq[Any]] =
       if (keys.size == 1)
         Some(distinctRows(changes.select(col(keys.head)).na.drop(),
@@ -1733,12 +1778,16 @@ object Snapshots {
         colmap, m.partitions).kept
       case None => pruneByKeys(keys.head, touched.select(col(keys.head)))
     }
+    // the probes read the vectors' live rows WITH tombstoned ones: a
+    // tombstoned row a change-set key matches is dead either way, and
+    // the re-assert leg must find exactly those rows
+    def positioned(cand: Seq[String]) = readWithSchema(spark, table, cand,
+      m.schema, colmap, DeletionVectors.of(spark, table, m.dvs, cand),
+      positions = true)
     def probeOf(cand: Seq[String], frame: DataFrame,
         on: Seq[String]): Option[DataFrame] =
       if (cand.isEmpty) None
-      else Some(readWithSchema(spark, table, cand, m.schema, colmap)
-        .join(broadcast(frame), on, "left_semi")
-        .select(input_file_name().as("file")))
+      else Some(positioned(cand).join(broadcast(frame), on, "left_semi"))
     val keyType = schema(keys.head).dataType
     val probeT = fastVals match {
       case Some(vals) =>
@@ -1749,10 +1798,9 @@ object Snapshots {
           // none, and a widening MERGE changes it
           val sameType = m.schema.exists(_.fields.exists(f =>
             f.name == keys.head && f.dataType == keyType))
-          Some(readWithSchema(spark, table, candT, m.schema, colmap)
+          Some(positioned(candT)
             .filter(if (sameType) inSet(keys.head, keyType, vals)
-              else col(keys.head).isInCollection(vals))
-            .select(input_file_name().as("file")))
+              else col(keys.head).isInCollection(vals)))
         }
       case None => probeOf(candT, touched, keys)
     }
@@ -1763,40 +1811,25 @@ object Snapshots {
       case None => (Nil, None)
     }
     lastCowProbePruned = Some(((candT ++ candR).distinct.size, files.size))
-    val affected = (probeT.toSeq ++ probeR.toSeq)
-      .reduceOption(_ unionByName _)
-      .map(p => probedEntries(spark, table, files,
-        distinctRows(p).map(_.getString(0))))
-      .getOrElse(Set.empty[String])
-    val carried = files.filterNot(affected)
-    val merged =
-      if (affected.isEmpty) upserts
-      else {
-        val affState = conform(applyTombstones(spark, table, m,
-          readWithSchema(spark, table, files.filter(affected),
-            m.schema, colmap)), schema)
-        (fastVals, deleteCol) match {
-          // the touched keys are already on the driver: the anti-join
-          // is a filter, with no broadcast job. NULL keys never match
-          // (as in the equi-join), so NULL-key target rows survive.
-          case (Some(vals), _) =>
-            affState.filter(col(keys.head).isNull ||
-                !inSet(keys.head, keyType, vals))
-              .unionByName(upserts)
-          case (None, None) =>
-            graft.operators.Merge.upsert(affState, changes, keys)
-          case (None, Some(dc)) =>
-            graft.operators.Merge.applyChanges(affState, changes, keys, dc)
-        }
-      }
-    val newFiles = stageData(spark, merged, table, colmap, m.partitions)
+    val dead = (probeT.toSeq ++ probeR.toSeq)
+      .map(_.select(DeletionVectors.FileCol, DeletionVectors.RowCol))
+      .reduceOption(_ union _)
+      .map(p => probedPositions(spark, table, files,
+        DeletionVectors.positionsOf(p)))
+      .getOrElse(Map.empty)
+    val kill = killRows(spark, table, m, dead)
+    // a batch of local rows is small by construction: it lands as one
+    // file (per partition dir), not one per default-parallelism slice
+    val batch = if (isLocal(changes0)) upserts.coalesce(1) else upserts
+    val newFiles = stageData(spark,
+      kill.survivors.fold(batch)(sv => batch.unionByName(conform(sv, schema))),
+      table, colmap, m.partitions)
     val (tombs, tombCol, stagedTombs) = (tk, reasserted) match {
       case (None, _) => (Nil, None, Nil)
       case (Some(_), None) => // untouched pending state carries verbatim
         (m.tombstones, m.tombstoneCol, Nil)
       case (Some((kc, tkeys)), Some(_)) =>
-        // drop the re-asserted keys; keys whose rows just materialized
-        // in the rewrite MAY stay listed (their anti-join is a no-op)
+        // drop the re-asserted keys: their rows just died by vector
         val remaining = tkeys.join(broadcast(
             changes.select(col(kc)).filter(col(kc).isNotNull).distinct()),
           Seq(kc), "left_anti")
@@ -1806,21 +1839,90 @@ object Snapshots {
           (staged, Some(kc), staged)
         }
     }
-    (m.copy(schema = Some(schema), files = carried ++ newFiles,
+    (kill(m).copy(schema = Some(schema), files = kill(m).files ++ newFiles,
         tombstones = tombs, tombstoneCol = tombCol),
-      dataPaths(newFiles) ++ stagedTombs.map(new Path(tombstoneDir(table), _)))
+      dataPaths(newFiles) ++ kill.staged ++
+        stagedTombs.map(new Path(tombstoneDir(table), _)))
   }
 
-  /** MERGE with an update branch, under snapshot isolation — COPY-ON-
-    * WRITE AT FILE GRANULARITY: one `input_file_name()` probe finds the
-    * files physically holding a batch key ([[cowApply]]); ONLY those are
-    * rewritten (matched keys updated, already-tombstoned rows
-    * materialized out), batch keys no file holds land as inserts, and
-    * every untouched file carries into the new manifest BY NAME — a
-    * 10-row CDC tick against a 100 TB table stages a few files, never
-    * the table. Pending lazy-delete tombstones carry forward, minus any
-    * key the batch re-inserts (the legitimate resurrection path: its
-    * files rewrite without the dead rows and the key leaves the set).
+  /** What a row-level commit does with the rows it kills. `gone` are the
+    * entries that leave the file list (re-written, or with no live row
+    * left), `survivors` the live rows of the re-written ones (to stage),
+    * `vectors` the entries that carry with a new cumulative vector in
+    * the one vector file `staged` holds, and `count` the rows killed.
+    */
+  private final case class Kill(gone: Set[String],
+      survivors: Option[DataFrame], vectors: Map[String, String],
+      staged: Seq[Path], count: Long) {
+    /** `m` with the gone entries out and the new vectors in. */
+    def apply(m: Manifest): Manifest =
+      m.copy(files = m.files.filterNot(gone), dvs = m.dvs ++ vectors)
+  }
+
+  /** Kill `dead` (entry → newly dead positions of version `m`'s live
+    * rows). Each affected entry's cumulative vector is its old one plus
+    * the new positions; past [[DeletionVectors.MaxDeadFraction]] of the
+    * file's rows (its footer count) the entry is re-written instead —
+    * its live rows under the cumulative vector and `m`'s tombstones
+    * become `survivors` — and a file with no live row left just leaves.
+    * The rest get their vectors in ONE vector file, written here on the
+    * driver with no Spark job.
+    */
+  private def killRows(spark: SparkSession, table: String, m: Manifest,
+      dead: Map[String, org.roaringbitmap.RoaringBitmap]): Kill = {
+    import org.roaringbitmap.RoaringBitmap
+    val old = DeletionVectors.of(spark, table, m.dvs, dead.keys)
+    val cum = dead.map { case (e, b) =>
+      e -> old.get(e).fold(b)(o => RoaringBitmap.or(o, b))
+    }
+    def rows(e: String) = DeletionVectors.rowCount(spark, table, e)
+    // a file holds at least (last dead position + 1) rows, so only a
+    // vector that could pass the bound against that needs the footer
+    val (rewrite, vectored) = cum.partition { case (e, b) =>
+      val bound = DeletionVectors.MaxDeadFraction
+      b.getLongCardinality > bound * (b.last().toLong + 1) &&
+        b.getLongCardinality > bound * rows(e)
+    }
+    val reread = m.files.filter(e =>
+      rewrite.get(e).exists(_.getLongCardinality < rows(e)))
+    val survivors =
+      if (reread.isEmpty) None
+      else Some(applyTombstones(spark, table, m, readWithSchema(spark, table,
+        reread, m.schema, m.colmap, reread.map(e => e -> rewrite(e)).toMap)))
+    val vf = if (vectored.isEmpty) None
+      else Some(DeletionVectors.write(spark, table, vectored))
+    Kill(rewrite.keySet, survivors,
+      vf.fold(Map.empty[String, String])(v => vectored.map(_._1 -> v).toMap),
+      vf.map(new Path(DeletionVectors.dir(table), _)).toSeq,
+      dead.values.map(_.getLongCardinality).sum)
+  }
+
+  /** Probed positions by canonical file URI ([[DeletionVectors.positionsOf]])
+    * re-keyed by the MANIFEST ENTRY that references each file: a bare
+    * name for the table's own files, the qualified URI of a FOREIGN ref
+    * (shallow clones, in-place conversions). Collapsing to `getName`
+    * would be a correctness bug, not a cosmetic one: a foreign entry
+    * never equals a bare name, so its rows would never die.
+    */
+  private def probedPositions(spark: SparkSession, table: String,
+      candidates: Seq[String],
+      byUri: Map[String, org.roaringbitmap.RoaringBitmap])
+      : Map[String, org.roaringbitmap.RoaringBitmap] = {
+    val canonMap = FileSkipping.canonical(spark, dataDir(table), candidates)._2
+    byUri.map { case (u, b) => canonMap.getOrElse(u, new Path(u).getName) -> b }
+  }
+
+  /** MERGE with an update branch, under snapshot isolation — ROW-LEVEL
+    * BY DELETION VECTORS: one positioned probe finds the rows holding a
+    * batch key ([[cowApply]]); they die by vector, the batch is staged
+    * as the new row versions (updates and inserts alike), and every file
+    * carries into the new manifest BY NAME — a 10-row CDC tick against a
+    * 100 TB table stages the 10 rows and a vector file, never a data
+    * file it did not write. A file whose dead share passes
+    * [[DeletionVectors.MaxDeadFraction]] is re-written without its dead
+    * rows instead. Pending lazy-delete tombstones carry forward, minus
+    * any key the batch re-inserts (the legitimate resurrection path: the
+    * key's rows die by vector and the key leaves the set).
     *
     * UNLIKE append, the result DEPENDS on the head it was computed
     * against, so a lost claim cannot simply retry the manifest: the
@@ -1855,14 +1957,16 @@ object Snapshots {
     }
   }
 
-  /** Snapshot-isolated targeted DELETE — copy-on-write at FILE
-    * granularity: only the data files physically containing a doomed key
-    * are rewritten (found via one input_file_name probe of the pinned
-    * head); every other file is carried into the new manifest BY NAME,
-    * zero bytes moved. Like [[commitMerge]], the result depends on the
-    * head it was computed against, so a lost claim deletes its orphaned
-    * files, re-reads the new head, and recomputes — concurrent deletes /
-    * appends / merges serialize instead of losing rows.
+  /** Snapshot-isolated targeted DELETE — row-level by deletion vectors:
+    * one positioned probe of the pinned head finds the doomed rows, they
+    * die by vector, and every file carries into the new manifest BY
+    * NAME; nothing is staged but the vector file, so the delete runs the
+    * probe's one Spark job (a file past
+    * [[DeletionVectors.MaxDeadFraction]] is re-written instead). Like
+    * [[commitMerge]], the result depends on the head it was computed
+    * against, so a lost claim deletes its orphaned files, re-reads the
+    * new head, and recomputes — concurrent deletes / appends / merges
+    * serialize instead of losing rows.
     *
     * Retention semantics (the GDPR fine print): the delete is LOGICAL at
     * commit — prior versions still reference the old files (that is what
@@ -1870,8 +1974,8 @@ object Snapshots {
     * by [[vacuum]] with a retention window of 0/1; until the vacuum, the
     * rows are readable via time travel by design.
     *
-    * Returns (committed version, rows deleted) — (head, 0) when no file
-    * contains any of the keys (no-op: no rewrite, no new version).
+    * Returns (committed version, rows deleted) — (head, 0) when no live
+    * row holds any of the keys (no-op: no new version).
     */
   def commitDelete(spark: SparkSession, table: String, keys: Seq[Any],
       keyCol: String): (Long, Long) = {
@@ -1885,13 +1989,13 @@ object Snapshots {
   /** Predicate DELETE — `DELETE FROM t WHERE <predicate>` for the
     * retention / erasure jobs that CANNOT enumerate keys on the driver
     * at 100 TB (`ts < '2024-01-01'`, `user_id = 'x'`): the same
-    * file-granular copy-on-write as [[commitDelete]], with the probe
+    * row-level delete by deletion vectors as [[commitDelete]], with the probe
     * filtering on the arbitrary predicate instead of a key list — the
     * predicate pushes down into the probe's parquet scan, so row-group
     * min/max skipping bounds even the probe's IO. Rows where the
     * predicate is NULL are KEPT (SQL DELETE semantics). Returns
-    * (committed version, rows deleted); (head, 0) when no file holds a
-    * matching row.
+    * (committed version, rows deleted); (head, 0) when no live row
+    * matches.
     */
   def commitDeleteWhere(spark: SparkSession, table: String,
       predicate: Column): (Long, Long) =
@@ -1899,16 +2003,16 @@ object Snapshots {
       m => FileSkipping.predicateFilters(spark, predicate, m.schema))
 
   /** Predicate UPDATE — `UPDATE t SET c = expr, ... WHERE pred` as a
-    * file-granular copy-on-write commit: ONE probe (predicate pushed
-    * into the parquet scan) finds the files physically holding a
-    * matching row, only those rewrite (matching rows take the SET
-    * expressions, their neighbors re-land verbatim), every other file
-    * carries by name. Rows where the predicate is NULL are NOT updated
-    * (SQL semantics); SET columns must already exist (UPDATE never
-    * evolves schema — that's what appends and MERGE are for); declared
-    * CHECK constraints are enforced on the rewritten slice (the only
-    * rows that changed) before any claim. Returns (committed version,
-    * rows updated); (head, 0) when nothing matches.
+    * row-level commit by deletion vectors: ONE positioned probe
+    * (predicate pushed into the parquet scan) finds the matching rows,
+    * they die by vector, and only their new versions (the SET
+    * expressions applied) are staged; every file carries by name. Rows
+    * where the predicate is NULL are NOT updated (SQL semantics); SET
+    * columns must already exist (UPDATE never evolves schema — that's
+    * what appends and MERGE are for); declared CHECK constraints are
+    * enforced on the updated rows (the only rows that changed) before
+    * any claim. Returns (committed version, rows updated); (head, 0)
+    * when nothing matches.
     */
   def commitUpdateWhere(spark: SparkSession, table: String,
       predicate: Column, sets: Seq[(String, Column)]): (Long, Long) = {
@@ -1922,96 +2026,79 @@ object Snapshots {
             "never evolves schema (append or MERGE a new column)")
       }
       FileSkipping.predicateFilters(spark, predicate, m.schema)
-    }) { (m, aff) =>
-      // when(pred, new).otherwise(old): FALSE and NULL predicates both
-      // keep the old value — exactly SQL UPDATE's row selection
-      val rewritten = aff.select(aff.columns.toIndexedSeq.map { c =>
+    }, Some { (m, matched) =>
+      val updated = matched.select(matched.columns.toIndexedSeq.map { c =>
         setMap.get(c) match {
           case Some(e) => // cast pins the column's DECLARED type — a SET
             // expression must never silently widen the stored schema
-            when(predicate, e).otherwise(col(c))
-              .cast(aff.schema(c).dataType).as(c)
+            e.cast(matched.schema(c).dataType).as(c)
           case None => col(c)
         }
       }: _*)
       // updated rows are the only new data — they must still satisfy
       // every declared CHECK before a manifest claims them
-      enforceChecks(rewritten, m.checks, table, m.schema)
-      rewritten
-    }
+      enforceChecks(updated, m.checks, table, m.schema)
+      updated
+    })
   }
 
   private def deleteWhereImpl(spark: SparkSession, table: String,
       predicate: Column,
       filters: Manifest => Seq[org.apache.spark.sql.sources.Filter])
       : (Long, Long) =
-    rewriteWhere(spark, table, "delete", predicate, filters) { (_, aff) =>
-      import org.apache.spark.sql.functions.{coalesce, lit}
-      // NULL-safe keep: NOT(NULL) is NULL and would silently drop rows
-      // whose predicate is undecided — SQL DELETE keeps them
-      aff.filter(!coalesce(predicate, lit(false)))
-    }
+    rewriteWhere(spark, table, "delete", predicate, filters, None)
 
-  /** Predicate copy-on-write at FILE granularity, shared by DELETE and
-    * UPDATE: ONE probe of the head's files, pre-pruned driver-side by
-    * [[FileSkipping]] on `filters` (an `In` for a key list, the
-    * translated predicate otherwise; computing them may also refuse),
-    * with the predicate pushed into the parquet scan, finds the files
-    * physically holding a matching row. Only those rewrite: `rewrite`
-    * maps their slice to the rows to re-land. Every other file carries
-    * by name. Like [[commitMerge]], the result depends on the head it
-    * was computed against, so a lost claim reclaims the rewrite and
-    * recomputes — concurrent writers serialize instead of losing rows.
-    * (head, 0) when no file holds a matching row.
+  /** Predicate row-level change by deletion vectors, shared by DELETE and
+    * UPDATE: ONE positioned probe of the head's live rows, pre-pruned
+    * driver-side by [[FileSkipping]] on `filters` (an `In` for a key
+    * list, the translated predicate otherwise; computing them may also
+    * refuse), with the predicate pushed into the parquet scan, folds the
+    * matching rows' positions into one bitmap per file. Those rows die
+    * ([[killRows]]); `update` maps the matching rows to their new
+    * versions, which are staged (a DELETE stages nothing). Every file
+    * carries by name unless its dead share passes
+    * [[DeletionVectors.MaxDeadFraction]]. Like [[commitMerge]], the
+    * result depends on the head it was computed against, so a lost
+    * claim reclaims what it staged and recomputes — concurrent writers
+    * serialize instead of losing rows. (head, 0) when no live row
+    * matches.
     *
-    * The slice is read under the DECLARED schema (a rewritten
-    * pre-evolution file re-lands with the new columns as NULLs, never
-    * narrowing the table) and from the APPLIED view: already-tombstoned
-    * rows neither count nor re-land (partial materialization), while
-    * untouched files keep relying on the carried tombstone headers. The
-    * rows changed (predicate TRUE) are counted by an `Observation` on
-    * the slice, so the count rides the first job that reads it — the
-    * staged write, or an UPDATE's CHECK pass over the same rows — and a
-    * DELETE or UPDATE runs two jobs: probe and staged write. Each
-    * attempt observes afresh, so a retry reports its own count.
+    * The probe reads the APPLIED view (vectors and tombstones): already
+    * dead rows neither count nor die again. The rows changed (predicate
+    * TRUE) are the killed positions, so counting them costs nothing: a
+    * DELETE runs one job (the probe) and an UPDATE two (probe and
+    * staged write).
     */
   private def rewriteWhere(spark: SparkSession, table: String, op: String,
       predicate: Column,
-      filters: Manifest => Seq[org.apache.spark.sql.sources.Filter])(
-      rewrite: (Manifest, DataFrame) => DataFrame): (Long, Long) =
+      filters: Manifest => Seq[org.apache.spark.sql.sources.Filter],
+      update: Option[(Manifest, DataFrame) => DataFrame]): (Long, Long) =
     transact(spark, table, op) { m =>
-      import org.apache.spark.sql.functions.{count_if, input_file_name}
       if (m.version == 0) Skip((0L, 0L))
       else {
         val cand = FileSkipping.prune(spark, dataDir(table), m.files,
           m.schema, filters(m), m.colmap, m.partitions).kept
         lastWherePruned = Some((cand.size, m.files.size))
-        val affected =
-          if (cand.isEmpty) Set.empty[String]
-          else probedEntries(spark, table, m.files,
-            distinctRows(readWithSchema(spark, table, cand, m.schema,
-                m.colmap)
-              .filter(predicate)
-              .select(input_file_name().as("file"))).map(_.getString(0)))
-        if (affected.isEmpty) Skip((m.version, 0L))
+        val dead =
+          if (cand.isEmpty) Map.empty[String, org.roaringbitmap.RoaringBitmap]
+          else probedPositions(spark, table, m.files,
+            DeletionVectors.positionsOf(
+              readLive(spark, table, m, cand, positions = true)
+                .filter(predicate)))
+        if (dead.isEmpty) Skip((m.version, 0L))
         else {
-          val changed = org.apache.spark.sql.Observation()
-          val aff = applyTombstones(spark, table, m,
-            readWithSchema(spark, table, m.files.filter(affected), m.schema,
-              m.colmap))
-            .observe(changed, count_if(predicate).as("n"))
-          val staged = stageData(spark, rewrite(m, aff), table, m.colmap,
-            m.partitions)
-          val n = changed.get.get("n") match {
-            case Some(c: Long) => c
-            // the optimizer proved the rewrite empty (a DELETE of every
-            // row: the keep filter folds to false) and pruned the
-            // observed slice with it
-            case _ => aff.filter(predicate).count()
-          }
+          val kill = killRows(spark, table, m, dead)
+          val updated = update.map(f =>
+            f(m, readLive(spark, table, m, m.files.filter(dead.contains))
+              .filter(predicate)))
+          val staged = (updated.toSeq ++ kill.survivors.toSeq)
+            .reduceOption(_ unionByName _)
+            .map(stageData(spark, _, table, m.colmap, m.partitions))
+            .getOrElse(Nil)
           raceHookForTests()
-          Claim(m.copy(files = m.files.filterNot(affected) ++ staged),
-            staged.map(new Path(dataDir(table), _)), v => (v, n))
+          Claim(kill(m).copy(files = kill(m).files ++ staged),
+            staged.map(new Path(dataDir(table), _)) ++ kill.staged,
+            v => (v, kill.count))
         }
       }
     }
@@ -2040,10 +2127,12 @@ object Snapshots {
     require(targetFiles >= 0, "targetFiles must be >= 0 (0 = size-derived)")
     val f = fs(spark, dataDir(table))
     transact(spark, table, "optimize") { m =>
-      // pending tombstones always compact (materializing merge-on-read
-      // deletes is the point, whatever the file count); otherwise the
-      // minFiles floor refuses pure write amplification
-      if (m.version == 0 || (m.files.size < minFiles && m.tombstones.isEmpty))
+      // pending tombstones and deletion vectors always compact
+      // (materializing merge-on-read deletes is the point, whatever the
+      // file count); otherwise the minFiles floor refuses pure write
+      // amplification
+      if (m.version == 0 || (m.files.size < minFiles && m.tombstones.isEmpty &&
+          m.dvs.isEmpty))
         Skip(None)
       else {
         // targetFiles == 0 → SIZE-DERIVED: aim for ~targetFileBytes per
@@ -2062,8 +2151,7 @@ object Snapshots {
           }
         // the rewrite is the APPLIED state — OPTIMIZE is the
         // materialization point
-        val current = applyTombstones(spark, table, m,
-          readWithSchema(spark, table, m.files, m.schema, m.colmap))
+        val current = readLive(spark, table, m, m.files)
         val rewritten =
           if (zorderBy.nonEmpty)
             Layout.zorderFrameN(current, zorderBy, nOut)
@@ -2071,12 +2159,13 @@ object Snapshots {
         // the full rewrite NORMALIZES physical names (stage the logical
         // frame verbatim) and re-stages under the partition transform
         // (layout policy); every surviving file is re-staged under the
-        // declared schema, so tombstones, the dropped-name ledger and
-        // the colmap all clear
+        // declared schema, so tombstones, deletion vectors, the
+        // dropped-name ledger and the colmap all clear
         val staged = stageData(spark, rewritten, table, Map.empty,
           m.partitions)
         Claim(m.copy(files = staged, tombstones = Nil, dropped = Nil,
-          colmap = Map.empty), staged.map(new Path(dataDir(table), _)),
+          colmap = Map.empty, dvs = Map.empty),
+          staged.map(new Path(dataDir(table), _)),
           v => Some(v))
       }
     }
@@ -2121,11 +2210,10 @@ object Snapshots {
       else {
         val nOut = math.max(1,
           math.ceil(small.map(sizes).sum.toDouble / targetFileBytes).toInt)
-        // the packed slice is read APPLIED (its tombstoned rows leave
-        // physically); carried files keep relying on the carried headers
-        val packed = applyTombstones(spark, table, m,
-          readWithSchema(spark, table, small, m.schema, m.colmap))
-          .coalesce(nOut)
+        // the packed slice is read APPLIED (its vectored and tombstoned
+        // rows leave physically, and its vectors go with its entries);
+        // carried files keep relying on the carried headers
+        val packed = readLive(spark, table, m, small).coalesce(nOut)
         val staged = stageData(spark, packed, table, m.colmap, m.partitions)
         // PARTIAL pack: carried files may still hold pre-drop values, so
         // the dropped-name ledger carries (unlike the full rewrite above)
@@ -2161,10 +2249,16 @@ object Snapshots {
       version: Option[Long] = None): DataFrame = {
     val m = manifestAt(spark, table,
       version.getOrElse(currentVersion(spark, table)))
-    if (m.files.isEmpty) spark.emptyDataFrame
-    else applyTombstones(spark, table, m,
-      readWithSchema(spark, table, m.files, m.schema, m.colmap))
+    if (m.files.isEmpty) emptyAt(spark, m)
+    else readLive(spark, table, m, m.files)
   }
+
+  /** The empty read of a version with no data file: its declared schema
+    * (a DELETE of every row leaves none), column-less without one.
+    */
+  private def emptyAt(spark: SparkSession, m: Manifest): DataFrame =
+    m.schema.fold(spark.emptyDataFrame)(s =>
+      spark.createDataFrame(new java.util.ArrayList[Row](), s))
 
   /** The table's commit log as a DataFrame — the audit surface a
     * versioned warehouse exposes (Delta's DESCRIBE HISTORY): one row per
@@ -2278,47 +2372,49 @@ object Snapshots {
     filesAt(spark, table, fromV).filterNot(after)
   }
 
-  /** True when the two versions carry identical pending-tombstone state
-    * — the other half of the append-only test an incremental consumer
-    * runs before choosing the added-files transport (a lazy delete
-    * touches no files but is NOT append-only: its window must flow
-    * through [[rowDiff]]). Metadata-only: two manifest reads.
+  /** True when the step `fromV` → `toV` only ADDED rows: no file left,
+    * the pending tombstones are the same, and every file of `fromV`
+    * keeps the deletion vector it had. A vectored DELETE or MERGE, like
+    * a lazy delete, removes no file but is NOT append-only: its window
+    * must flow through [[rowDiff]]. The test every incremental consumer
+    * runs before choosing the added-files transport
+    * ([[incrementalRead]]); metadata-only, two manifest reads.
     */
-  def sameTombstones(spark: SparkSession, table: String, fromV: Long,
-      toV: Long): Boolean =
-    manifestAt(spark, table, fromV).tombstones ==
-      manifestAt(spark, table, toV).tombstones
-
-  private def readDataFiles(spark: SparkSession, table: String,
-      names: Seq[String], schema: Option[types.StructType],
-      colmap: Map[String, String]): Option[DataFrame] =
-    if (names.isEmpty) None
-    else Some(readWithSchema(spark, table, names, schema, colmap))
+  def appendOnly(spark: SparkSession, table: String, fromV: Long,
+      toV: Long): Boolean = {
+    val (from, to) = (manifestAt(spark, table, fromV),
+      manifestAt(spark, table, toV))
+    val kept = to.files.toSet
+    from.files.forall(kept) && from.tombstones == to.tombstones &&
+      from.files.forall(e => from.dvs.get(e) == to.dvs.get(e))
+  }
 
   /** Rows appended between two versions of an APPEND-ONLY step, served by
     * reading ONLY the step's added files — IO is proportional to the new
     * data, never the table (the contract an incremental consumer needs at
     * 100 TB: tailing a snapshot table costs O(delta) per poll, like
-    * Delta's CDF on append commits). Throws when the step rewrote any
-    * file (delete/merge/compaction landed in the window) — added files
-    * then also carry rows that merely MOVED, so a file-level read would
-    * over-report; use [[rowDiff]] for those steps.
+    * Delta's CDF on append commits). Throws when the step is not
+    * [[appendOnly]] (a delete/merge/compaction landed in the window) —
+    * added files then also carry rows that merely MOVED or replace dead
+    * ones, so a file-level read would over-report; use [[rowDiff]] for
+    * those steps.
     */
   def incrementalRead(spark: SparkSession, table: String, fromV: Long,
       toV: Long): DataFrame = {
     require(fromV <= toV, s"fromV $fromV > toV $toV")
-    val removed = removedFiles(spark, table, fromV, toV)
-    require(removed.isEmpty,
-      s"step v$fromV->v$toV rewrote ${removed.size} file(s) — not " +
-        "append-only; use rowDiff(keys) for a row-exact change feed")
-    require(sameTombstones(spark, table, fromV, toV),
-      s"step v$fromV->v$toV changed the table's lazy-delete tombstones — " +
-        "not append-only; use rowDiff(keys) for a row-exact change feed")
+    require(appendOnly(spark, table, fromV, toV),
+      s"step v$fromV->v$toV rewrote or deleted rows (a file left, the " +
+        "lazy-delete tombstones changed, or a file gained a deletion " +
+        "vector) — not append-only; use rowDiff(keys) for a row-exact " +
+        "change feed")
     // the TO-version's declared schema: an evolution step's feed carries
-    // the new columns, and pre-evolution consumers see a superset schema
-    readDataFiles(spark, table, addedFiles(spark, table, fromV, toV),
-        schemaAt(spark, table, toV), colmapAt(spark, table, toV))
-      .getOrElse(read(spark, table, Some(toV)).limit(0))
+    // the new columns, and pre-evolution consumers see a superset schema;
+    // an added file vectored within the window serves its live rows
+    val to = manifestAt(spark, table, toV)
+    val added = addedFiles(spark, table, fromV, toV)
+    if (added.isEmpty) read(spark, table, Some(toV)).limit(0)
+    else readWithSchema(spark, table, added, to.schema, to.colmap,
+      DeletionVectors.of(spark, table, to.dvs, added))
   }
 
   /** Row-exact change feed between two versions, with IO proportional to
@@ -2359,21 +2455,45 @@ object Snapshots {
     // row dead at toV must not feed a post-image — e.g. a window that
     // only MATERIALIZES pending tombstones (OPTIMIZE) nets to an empty
     // feed instead of re-reporting the deletes.
+    // Deletion vectors work the same way: a side's files serve their
+    // live rows at that side's vectors, and a CARRIED file whose vector
+    // changed contributes the positions that died in the window as
+    // pre-images (read at fromV) and any that came back (a RESTORE past
+    // a vectored delete) as post-images (read at toV) — a vectored MERGE
+    // then pairs the dead old row with the staged new one as an update.
     val toSchema = to.schema
     val toColmap = to.colmap
-    val pre = readDataFiles(spark, table,
-      removedFiles(spark, table, fromV, toV), toSchema, toColmap)
-      .map(applyTombstones(spark, table, from, _))
-    val post = readDataFiles(spark, table,
-      addedFiles(spark, table, fromV, toV), toSchema, toColmap)
-      .map(applyTombstones(spark, table, to, _))
+    val carried = from.files.filter(to.files.toSet)
+    val moved = carried.filter(e => from.dvs.get(e) != to.dvs.get(e))
+    val (fromDv, toDv) = (DeletionVectors.of(spark, table, from.dvs, moved),
+      DeletionVectors.of(spark, table, to.dvs, moved))
+    def minus(a: Map[String, org.roaringbitmap.RoaringBitmap],
+        b: Map[String, org.roaringbitmap.RoaringBitmap]) =
+      moved.flatMap { e =>
+        val d = org.roaringbitmap.RoaringBitmap.andNot(
+          a.getOrElse(e, new org.roaringbitmap.RoaringBitmap),
+          b.getOrElse(e, new org.roaringbitmap.RoaringBitmap))
+        if (d.isEmpty) None else Some(e -> d)
+      }.toMap
+    /** `m`'s live rows of `names`, plus those at the `only` positions. */
+    def side(m: Manifest, names: Seq[String],
+        only: Map[String, org.roaringbitmap.RoaringBitmap]) =
+      (Some(names).filter(_.nonEmpty).map(ns => readWithSchema(spark, table,
+          ns, toSchema, toColmap, DeletionVectors.of(spark, table, m.dvs, ns))) ++
+        Some(only).filter(_.nonEmpty).map(o => readWithSchema(spark, table,
+          carried.filter(o.contains), toSchema, toColmap, only = o)))
+        .reduceOption(_ unionByName _)
+        .map(applyTombstones(spark, table, m, _))
+    val pre = side(from, removedFiles(spark, table, fromV, toV),
+      minus(toDv, fromDv))
+    val post = side(to, addedFiles(spark, table, fromV, toV),
+      minus(fromDv, toDv))
     // lazy deletes COMMITTED in the window touch no files, so the file
     // legs can't see them: rows of CARRIED files matching the window's
     // NEW tombstone keys are emitted as `delete` pre-images. Restricted
     // to carried files — removed-file rows are already classified above.
     val tombLeg: Option[DataFrame] = tombstoneKeys(spark, table, to)
       .flatMap { case (kc, toKeys) =>
-        val carried = from.files.toSet.intersect(to.files.toSet).toSeq
         if (carried.isEmpty) None
         else {
           // same key column at both ends → subtract the old set; a
@@ -2394,7 +2514,8 @@ object Snapshots {
             toSchema, kc, newKeys, toColmap, to.partitions).kept
           lastTombLegPruned = Some((cand.size, carried.size))
           if (cand.isEmpty) None
-          else Some(readDataFiles(spark, table, cand, toSchema, toColmap).get
+          else Some(readWithSchema(spark, table, cand, toSchema, toColmap,
+              DeletionVectors.of(spark, table, to.dvs, cand))
             .join(broadcast(newKeys), Seq(kc), "left_semi")
             .withColumn("change_type", lit("delete")))
         }
@@ -2571,9 +2692,8 @@ object Snapshots {
       report: (FileSkipping.Pruned, Int) => Unit): DataFrame = {
     val v = version.getOrElse(currentVersion(spark, table))
     val m = manifestAt(spark, table, v)
-    if (m.files.isEmpty) return spark.emptyDataFrame
-    def rd(names: Seq[String]) = applyTombstones(spark, table, m,
-      readWithSchema(spark, table, names, m.schema, m.colmap))
+    if (m.files.isEmpty) return emptyAt(spark, m)
+    def rd(names: Seq[String]) = readLive(spark, table, m, names)
     val p = FileSkipping.prune(spark, dataDir(table), m.files, m.schema,
       filters, m.colmap, m.partitions)
     report(p, m.files.size)
@@ -2894,7 +3014,8 @@ object Snapshots {
     *
     * CONFLICTS refuse, never merge: if any replaced file is no longer
     * referenced at claim time (a concurrent rewrite/delete/OPTIMIZE
-    * churned it) or pending tombstones appeared since the scan, the
+    * churned it), its deletion vector changed since the scan at version
+    * `scannedAt`, or pending tombstones appeared since the scan, the
     * staged files are reclaimed and a ConcurrentModificationException
     * surfaces — the Delta/Iceberg write-conflict discipline. Racing
     * APPENDS are fine (their files are not replaced; the operation ran
@@ -2903,7 +3024,8 @@ object Snapshots {
   def commitReplaceEntries(spark: SparkSession, table: String,
       replaced: Seq[String], staged: Seq[String],
       stagedColmap: Map[String, String],
-      stagedPartition: Option[String] = None): Long = {
+      stagedPartition: Option[String] = None,
+      scannedAt: Option[Long] = None): Long = {
     if (replaced.isEmpty && staged.isEmpty)
       return currentVersion(spark, table) // nothing scanned, nothing written
     val replacedSet = replaced.toSet
@@ -2919,6 +3041,17 @@ object Snapshots {
             "statement against the new snapshot")
       requireLayout(m, table, "row-level write", Some(stagedColmap),
         stagedPartition, staged.exists(_.contains(PartPrefix)))
+      // a replaced file whose deletion vector changed since the scan (a
+      // concurrent row-level commit killed more of its rows) was read
+      // with rows the rewrite would bring back
+      scannedAt.map(manifestAt(spark, table, _)).foreach { s =>
+        val moved = replaced.filter(e => m.dvs.get(e) != s.dvs.get(e))
+        if (moved.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"row-level write to $table conflicts with a concurrent " +
+              s"commit: ${moved.size} scanned file(s) gained deletion " +
+              "vectors since the scan — re-run the statement")
+      }
       if (m.tombstones.nonEmpty)
         throw new java.util.ConcurrentModificationException(
           s"row-level write to $table raced a lazy DELETE — pending " +
@@ -2991,10 +3124,11 @@ object Snapshots {
     * Carried state: declared schema, CHECK constraints, stream marks
     * (a stream switching its sink to the clone must not re-land batches
     * the source already committed — same rationale as [[commitRestore]]),
-    * and pending lazy-delete tombstones — their tiny key-list sidecars
+    * pending lazy-delete tombstones — their tiny key-list sidecars
     * are COPIED (not referenced) so the source's OPTIMIZE/VACUUM
     * materializing its own tombstones can't strand the clone's
-    * merge-on-read anti-join. The documented shallow-clone hazard is the
+    * merge-on-read anti-join — and deletion vectors, re-written into one
+    * vector file of the clone's keyed by its own entries. The documented shallow-clone hazard is the
     * same as Delta's: a VACUUM on the SOURCE that expires the cloned
     * version's files breaks the clone — deep-copy (CTAS) when the source
     * retention isn't under your control.
@@ -3028,9 +3162,18 @@ object Snapshots {
           spark.sparkContext.hadoopConfiguration)
       }
     }
-    transact(spark, dst, "clone") { m =>
+    // deletion vectors re-key to the clone's qualified entries in ONE
+    // vector file of its own, so the source's vacuum can never strand them
+    val vectors = DeletionVectors.of(spark, src, source.dvs, source.files)
+    val ref = source.files.zip(refs).toMap
+    val vf = if (vectors.isEmpty) None else Some(DeletionVectors.write(spark,
+      dst, vectors.map { case (e, b) => ref(e) -> b }))
+    transact(spark, dst, "clone",
+        vf.map(new Path(DeletionVectors.dir(dst), _)).toSeq) { m =>
       require(m.version == 0, s"clone target $dst already has a v1 manifest")
-      claim(source.copy(files = refs))
+      claim(source.copy(files = refs,
+        dvs = vf.fold(Map.empty[String, String])(v =>
+          vectors.keys.map(e => ref(e) -> v).toMap)))
     }
   }
 
@@ -3162,16 +3305,16 @@ object Snapshots {
     * transport per window — the cross-region / dev-mirror loop a 100 TB
     * warehouse runs on its change feed instead of re-copying tables:
     *
-    *   - `append`  — the window added files and rewrote none: ship ONLY
-    *     the added files' rows ([[incrementalRead]], IO ∝ delta) as a
-    *     stream append;
-    *   - `feed`    — the window rewrote files (delete/merge/OPTIMIZE
-    *     landed): apply the row-exact change feed ([[rowDiff]], IO ∝
-    *     churn on the source side) to the replica's own head via the
-    *     file-granular CDC merge ([[cowApply]]) — only the REPLICA
-    *     files physically holding changed keys rewrite, every other
-    *     replica file carries by name, so destination IO tracks churn
-    *     too (never replica size), and the replica's own pending
+    *   - `append`  — the window only added rows ([[appendOnly]]): ship
+    *     ONLY the added files' rows ([[incrementalRead]], IO ∝ delta) as
+    *     a stream append;
+    *   - `feed`    — the window rewrote files or killed rows
+    *     (delete/merge/OPTIMIZE landed): apply the row-exact change feed
+    *     ([[rowDiff]], IO ∝ churn on the source side) to the replica's
+    *     own head via the row-level CDC merge ([[cowApply]]) — the
+    *     changed keys' REPLICA rows die by vector and only the changes
+    *     stage, every replica file carries by name, so destination IO
+    *     tracks churn too (never replica size), and the replica's own pending
     *     lazy-delete tombstones survive the sync (minus keys the feed
     *     itself re-asserts);
     *   - `rebuild` — the replica lagged past the source's vacuum
@@ -3197,8 +3340,7 @@ object Snapshots {
     val from = lastCommittedBatch(spark, dst, sid).getOrElse(0L)
     if (srcHead <= from) return (from, srcHead, "noop")
     val precise = hasVersion(spark, src, from)
-    if (precise && removedFiles(spark, src, from, srcHead).isEmpty &&
-        sameTombstones(spark, src, from, srcHead)) {
+    if (precise && appendOnly(spark, src, from, srcHead)) {
       commitStreamAppend(spark, incrementalRead(spark, src, from, srcHead),
         dst, sid, srcHead)
       return (from, srcHead, "append")
@@ -3269,8 +3411,13 @@ object Snapshots {
 
   private def vacuumImpl(spark: SparkSession, table: String,
       keepVersions: Int, minAgeMs: Long, dryRun: Boolean): Seq[String] = {
-    val head = currentVersion(spark, table)
-    val keepFrom = math.max(1L, head - keepVersions + 1)
+    val versions = retainedVersions(spark, table)
+    val head = versions.lastOption.getOrElse(0L)
+    // an earlier vacuum with a shorter retention may already have
+    // expired versions this one would keep: the floor is never below
+    // the oldest version still retained
+    val keepFrom = math.max(math.max(1L, head - keepVersions + 1),
+      versions.headOption.getOrElse(1L))
     val kept = (keepFrom to head).map(manifestAt(spark, table, _))
     val referenced = kept.flatMap(_.files).toSet
     val dd = dataDir(table)
@@ -3282,19 +3429,20 @@ object Snapshots {
         now - st.getModificationTime >= minAgeMs && !referenced.contains(rel)
       }
       .map { case (p, rel, _) => if (!dryRun) f.delete(p, false); rel }
-    // tombstone sidecars age out exactly like data files: unreferenced by
-    // any retained manifest (materialized, or their version expired)
-    val td = tombstoneDir(table)
-    val tombsDeleted =
-      if (!f.exists(td)) Nil
-      else {
-        val referencedTombs = kept.flatMap(_.tombstones).toSet
-        f.listStatus(td).filter(_.isFile)
-          .filter(s => now - s.getModificationTime >= minAgeMs)
-          .map(_.getPath).filterNot(p => referencedTombs.contains(p.getName))
-          .map { p => if (!dryRun) f.delete(p, false); p.getName }.toSeq
-      }
-    if (dryRun) return deleted ++ tombsDeleted
+    // tombstone sidecars and deletion-vector files age out exactly like
+    // data files: unreferenced by any retained manifest (materialized or
+    // folded by a re-write, or their version expired)
+    def sweep(dir: Path, referenced: Set[String]): Seq[String] =
+      if (!f.exists(dir)) Nil
+      else f.listStatus(dir).toSeq.filter(_.isFile)
+        .filter(s => now - s.getModificationTime >= minAgeMs)
+        .map(_.getPath).filterNot(p => referenced.contains(p.getName))
+        .map { p => if (!dryRun) f.delete(p, false); p.getName }
+    val tombsDeleted = sweep(tombstoneDir(table),
+      kept.flatMap(_.tombstones).toSet)
+    val vectorsDeleted = sweep(DeletionVectors.dir(table),
+      kept.flatMap(_.dvs.values).toSet)
+    if (dryRun) return deleted ++ tombsDeleted ++ vectorsDeleted
     // the new retention floor must stay resolvable after its delta-chain
     // bases vanish: when keepFrom's physical manifest is delta-encoded
     // and no checkpoint exists yet, write one (idempotent content — the
@@ -3315,6 +3463,6 @@ object Snapshots {
       // resolutions, or filesAt/time-travel would serve vacuumed state
       resolvedManifests.remove((tableKey, v))
     }
-    deleted ++ tombsDeleted
+    deleted ++ tombsDeleted ++ vectorsDeleted
   }
 }

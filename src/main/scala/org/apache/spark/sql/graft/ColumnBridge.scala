@@ -50,4 +50,10 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** The file the current task's file reader is on (what
+    * `input_file_name()` reads), URI-encoded; empty outside a file scan.
+    */
+  def inputFilePath: org.apache.spark.unsafe.types.UTF8String =
+    org.apache.spark.rdd.InputFileBlockHolder.getInputFilePath
 }

@@ -55,14 +55,19 @@ class CloneCopySpec extends AnyFunSuite {
     Snapshots.cloneTable(spark, src, dst)
     val foreignBefore = Snapshots.filesAt(spark, dst, 1L)
     assert(foreignBefore.size == 8)
-    // a 1-key merge must rewrite exactly the ONE foreign file holding it
+    // a 1-key merge must give exactly the ONE foreign file holding it a
+    // deletion vector (in the clone's manifest, never the source's)
     Snapshots.commitMerge(spark, Seq((7L, 777L)).toDF("id", "x"),
       dst, Seq("id"))
     val after = Snapshots.filesAt(spark, dst, 2L)
     val (foreign, local) = after.partition(_.contains("/"))
-    assert(foreign.size == 7, s"expected 7 carried foreign refs, got $after")
+    assert(foreign == foreignBefore, s"expected 8 carried foreign refs, got $after")
+    val holder = foreignBefore.filter(f =>
+      spark.read.parquet(f).filter(col("id") === 7L).count() > 0)
+    assert(holder.size == 1 &&
+      Snapshots.deadRowsAt(spark, dst, 2L).keySet == holder.toSet)
     assert(local.size >= 1 && local.forall(dataFiles(dst).contains),
-      "rewritten slice must live in the clone's own data dir")
+      "the staged batch must live in the clone's own data dir")
     // the source is untouched: same head, same files, same rows
     assert(Snapshots.currentVersion(spark, src) == 1L)
     assert(Snapshots.read(spark, src)

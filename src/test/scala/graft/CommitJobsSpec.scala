@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.warehouse.Snapshots
 
-/** Pins how many Spark jobs each copy-on-write commit runs on a table
-  * with no stats sidecar and no tombstones. Job count is the main cost
+/** Pins how many Spark jobs each row-level commit (by deletion vectors)
+  * and maintenance commit runs on a table with no stats sidecar and no
+  * tombstones. Job count is the main cost
   * of a commit at small scale (ROADMAP's cost fit), so a change that
   * adds a shuffle, an eager checkpoint or a recount to these paths
   * fails here before it shows in the benchmark.
@@ -91,9 +92,17 @@ class CommitJobsSpec extends AnyFunSuite {
     val r = rows(t)
     assert(r.size == 62 && r(3L) == "u3" && r(25L) == "u25" &&
       r(200L) == "n200" && r(4L) == "v4")
-    // only the two files holding a batch key were rewritten
-    assert(Snapshots.filesAt(spark, t, 7L).toSet
-      .intersect(Snapshots.filesAt(spark, t, 6L).toSet).size == 4)
+    // exactly the two files holding a batch key gained a vector (one dead
+    // row each), every file carried, and the staged files hold only the
+    // batch's four rows
+    val (before, after) = (Snapshots.filesAt(spark, t, 6L),
+      Snapshots.filesAt(spark, t, 7L))
+    assert(after.take(6) == before)
+    val dead = Snapshots.deadRowsAt(spark, t, 7L)
+    assert(dead.keySet == Set(before(0), before(2)) &&
+      dead.values.forall(_.getCardinality == 1), s"vectors $dead")
+    assert(spark.read.parquet(after.drop(6).map(f => s"$t/data/$f"): _*)
+      .count() == 4L)
     // a computed batch is checkpointed inside its key collect's job
     val computed = spark.range(58L, 62L)
       .select(col("id"), concat(lit("c"), col("id").cast("string")).as("v"))
@@ -106,15 +115,26 @@ class CommitJobsSpec extends AnyFunSuite {
 
   test("commitDelete, commitDeleteWhere and commitUpdateWhere run at most two jobs") {
     val t = table()
-    val ((_, d1), n1) = jobsOf(
+    val files = Snapshots.filesAt(spark, t, 6L)
+    // a vectored delete runs only its probe and stages no data file
+    val ((v1, d1), n1) = jobsOf(
       Snapshots.commitDelete(spark, t, Seq(1L, 2L, 999L), "id"))
-    assert(d1 == 2L && n1 <= 2, s"delete removed $d1 rows in $n1 jobs")
-    val ((_, d2), n2) = jobsOf(
+    assert(d1 == 2L && n1 <= 1, s"delete removed $d1 rows in $n1 jobs")
+    assert(Snapshots.filesAt(spark, t, v1) == files)
+    assert(Snapshots.deadRowsAt(spark, t, v1).keySet == Set(files(0)))
+    val ((v2, d2), n2) = jobsOf(
       Snapshots.commitDeleteWhere(spark, t, col("id").between(40L, 44L)))
-    assert(d2 == 5L && n2 <= 2, s"delete-where removed $d2 rows in $n2 jobs")
-    val ((_, u), n3) = jobsOf(Snapshots.commitUpdateWhere(spark, t,
+    assert(d2 == 5L && n2 <= 1, s"delete-where removed $d2 rows in $n2 jobs")
+    assert(Snapshots.filesAt(spark, t, v2) == files)
+    // an update stages only the updated rows
+    val ((v3, u), n3) = jobsOf(Snapshots.commitUpdateWhere(spark, t,
       col("id") >= 55L, Seq("v" -> lit("hot"))))
     assert(u == 5L && n3 <= 2, s"update changed $u rows in $n3 jobs")
+    val staged = Snapshots.filesAt(spark, t, v3).drop(files.size)
+    assert(Snapshots.filesAt(spark, t, v3).take(files.size) == files &&
+      staged.map(f => spark.read.parquet(s"$t/data/$f").count()).sum == 5L)
+    assert(Snapshots.deadRowsAt(spark, t, v3).keySet ==
+      Set(files(0), files(4), files(5)))
     val r = rows(t)
     assert(r.size == 53 && !r.contains(1L) && !r.contains(42L) &&
       r(55L) == "hot" && r(54L) == "v54")
@@ -170,12 +190,15 @@ class CommitJobsSpec extends AnyFunSuite {
   test("commitMerge on a Bloom-indexed key reads the sidecar once, then from the cache") {
     val t = table()
     Snapshots.extendBloom(spark, t, "id", expectedItemsPerFile = 100L)
+    // the extend leaves the sidecar cached; the first merge must read it
+    graft.operators.Layout.forgetSidecar(
+      new org.apache.hadoop.fs.Path(t, "data/_graft_bloom_id"))
     val (_, cold) = jobsOf(Snapshots.commitMerge(spark,
       Seq((3L, "u3")).toDF("id", "v"), t, Seq("id")))
     val (_, warm) = jobsOf(Snapshots.commitMerge(spark,
       Seq((25L, "u25")).toDF("id", "v"), t, Seq("id")))
-    assert(cold <= 4 && warm <= 2, s"the merges ran $cold, then $warm " +
-      "jobs; want <= 4 (sidecar read, probe, write), then <= 2")
+    assert(cold <= 4 && warm <= 2 && cold > warm, s"the merges ran $cold, " +
+      s"then $warm jobs; want <= 4 (sidecar read, probe, write), then <= 2")
     val r = rows(t)
     assert(r.size == 60 && r(3L) == "u3" && r(25L) == "u25" && r(4L) == "v4")
   }

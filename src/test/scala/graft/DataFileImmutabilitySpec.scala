@@ -9,16 +9,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.warehouse.{ManifestFileIndex, Snapshots}
 
-/** Pins the data-file immutability contract two structures rely on: the
-  * stats and Bloom sidecars key their rows by file URI, and the `#fsz:`
+/** Pins the data-file immutability contract three structures rely on:
+  * the stats and Bloom sidecars key their rows by file URI, the `#fsz:`
   * size ledger serves each entry as a `FileStatus` with the recorded
-  * length and modification time 0 ([[ManifestFileIndex.statusesOf]]).
-  * Both are valid only if a file, once a version references it, never
-  * changes. A seeded random sequence of commits (append, MERGE, DELETE
+  * length and modification time 0 ([[ManifestFileIndex.statusesOf]]),
+  * and deletion vectors name dead rows by their position in the file.
+  * All are valid only if a file, once a version references it, never
+  * changes — and a vector file (`_deletes/`, cached by name for the JVM)
+  * must never change either. A seeded random sequence of commits (append, MERGE, DELETE
   * WHERE, UPDATE), maintenance (small-file pack, OPTIMIZE, VACUUM with
   * retention), RESTORE and index extends runs on one table; after each
-  * step every file a retained version references must keep the length
-  * and SHA-256 it had when first referenced, and match its ledger size.
+  * step every data and vector file a retained version references must
+  * keep the length and SHA-256 it had when first referenced, and every
+  * data file must match its ledger size.
   */
 class DataFileImmutabilitySpec extends AnyFunSuite {
   import SparkTest._
@@ -61,6 +64,8 @@ class DataFileImmutabilitySpec extends AnyFunSuite {
     }
     // qualified file → (length, SHA-256) when a version first referenced it
     val first = mutable.Map.empty[String, (Long, String)]
+    // the vector files checked at least once
+    val vectors = mutable.Set.empty[String]
     def check(step: String): Unit = {
       val head = Snapshots.currentVersion(spark, t)
       (1L to head).filter(Snapshots.hasVersion(spark, t, _)).foreach { v =>
@@ -77,6 +82,14 @@ class DataFileImmutabilitySpec extends AnyFunSuite {
             s"$at is ${now._1} bytes; the ledger says ${ledger(n)}")
           assert(st.getLen == now._1, s"$at: its status says ${st.getLen} bytes")
         }
+        Snapshots.vectorFilesAt(spark, t, v).foreach { n =>
+          val p = fs.makeQualified(new Path(new Path(t, "_deletes"), n))
+          val now = (fs.getFileStatus(p).getLen, sha256(p))
+          val was = first.getOrElseUpdate(p.toString, now)
+          assert(now == was, s"seed=$seed, after $step: vector file $n " +
+            s"of v$v changed from $was to $now")
+          vectors += p.toString
+        }
       }
     }
     Snapshots.commitAppend(spark, rows(fresh(20)).repartition(2), t)
@@ -89,6 +102,8 @@ class DataFileImmutabilitySpec extends AnyFunSuite {
         rows(fresh(1 + rnd.nextInt(4))), t)),
       "merge" -> (() => Snapshots.commitMerge(spark,
         rows(rnd.shuffle(live).take(2) ++ fresh(1)), t, Seq("id"))),
+      "delete" -> (() => Snapshots.commitDelete(spark, t,
+        rnd.shuffle(live).take(2), "id")),
       "delete where" -> (() => Snapshots.commitDeleteWhere(spark, t,
         col("v") < rnd.nextInt(20))),
       "update" -> (() => Snapshots.commitUpdateWhere(spark, t,
@@ -116,5 +131,6 @@ class DataFileImmutabilitySpec extends AnyFunSuite {
     val order = rnd.shuffle(steps) ++ Seq.fill(10)(steps(rnd.nextInt(steps.size)))
     order.foreach { case (name, run) => run(); check(name) }
     assert(first.size > 10, s"seed=$seed: only ${first.size} files were checked")
+    assert(vectors.nonEmpty, s"seed=$seed: no vector file was checked")
   }
 }

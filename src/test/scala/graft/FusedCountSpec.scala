@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.warehouse.Snapshots
 
-/** DELETE and UPDATE report the rows they changed from an observation
-  * on the staged rewrite, not from a separate count; MERGE's anti-join
+/** DELETE and UPDATE report the rows they changed from the positions
+  * their probe killed, not from a separate count; MERGE's anti-join
   * is a key-set filter when the key list is on the driver. These cases
   * pin the reported counts and the surviving rows where the two forms
   * could part: NULL predicates, already-tombstoned rows, a slice read
@@ -30,11 +30,6 @@ class FusedCountSpec extends AnyFunSuite {
     df.collect().map(r => r.getLong(0) ->
       (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
 
-  /** Every row the head's files hold, tombstones NOT applied. */
-  private def physical(t: String): Map[Long, Option[Double]] =
-    state(spark.read.parquet(Snapshots.filesAt(spark, t,
-      Snapshots.currentVersion(spark, t)).map(f => s"$t/data/$f"): _*))
-
   test("rows whose predicate is NULL are kept and not counted") {
     val t = table()
     // x > 10 is NULL for ids 4, 8, ..., 20 and TRUE for 11..19 minus 12, 16
@@ -52,15 +47,22 @@ class FusedCountSpec extends AnyFunSuite {
   test("already-tombstoned rows in an affected file neither count nor re-land") {
     val t = table()
     Snapshots.commitDeleteLazy(spark, t, Seq(2L, 3L), "id")
-    val (_, n) = Snapshots.commitDeleteWhere(spark, t, col("id") <= 5L)
+    val files = Snapshots.filesAt(spark, t, 2L)
+    val (v, n) = Snapshots.commitDeleteWhere(spark, t, col("id") <= 5L)
     assert(n == 3L) // 1, 4, 5: 2 and 3 were already gone
-    assert(!physical(t).keySet.exists(_ <= 5L),
-      "the rewrite must not re-land tombstoned rows")
+    // nothing re-lands: the file carries, and its vector holds the three
+    // rows the delete killed, not the tombstoned two
+    assert(Snapshots.filesAt(spark, t, v) == files &&
+      Snapshots.deadRowsAt(spark, t, v).values.map(_.getCardinality).sum == 3,
+      "the delete must not re-land or re-kill tombstoned rows")
     Snapshots.commitDeleteLazy(spark, t, Seq(7L), "id")
-    val (_, u) = Snapshots.commitUpdateWhere(spark, t, col("id") <= 8L,
+    val (u3, u) = Snapshots.commitUpdateWhere(spark, t, col("id") <= 8L,
       Seq("x" -> lit(-1.0)))
     assert(u == 2L) // 6 and 8
-    assert(!physical(t).contains(7L))
+    // the update stages only its two rows, never the tombstoned 7
+    val staged = Snapshots.filesAt(spark, t, u3).filterNot(files.contains)
+    assert(state(spark.read.parquet(staged.map(f => s"$t/data/$f"): _*))
+      .keySet == Set(6L, 8L))
     val s = state(Snapshots.read(spark, t))
     assert(s(6L).contains(-1.0) && s(8L).contains(-1.0) && !s.contains(7L))
   }

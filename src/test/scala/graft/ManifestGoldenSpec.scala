@@ -13,9 +13,9 @@ import graft.warehouse.Snapshots
   * op sequence chosen so that, between them, the physical manifests carry
   * every header kind: `#op`, `#ts`, `#schema` (with column DEFAULT
   * metadata), `#stream`, `#check`, `#tombstonecol`/`#tombstone`,
-  * `#dropped`, `#colmap`, a composite `#partition`, the `#fsz` size
-  * ledger, delta manifests (`#base`/`#add`/`#remove`) and the v16
-  * checkpoint. The files under `src/test/resources/manifests/` are that
+  * `#dropped`, `#colmap`, a composite `#partition`, `#dv` (the keyed
+  * DELETE's and the MERGE's deletion vectors), the `#fsz` size ledger,
+  * delta manifests (`#base`/`#add`/`#remove`) and the v16 checkpoint. The files under `src/test/resources/manifests/` are that
   * script's output; regenerate them (only on a deliberate format change)
   * with
   * {{{
@@ -49,6 +49,9 @@ object ManifestGoldens {
       Snapshots.commitAppend(spark,
         Seq((100L + v, v.toLong)).toDF("id", "w").repartition(1), flat)
     }
+    // every row of the v15 and v16 files dies: the files leave (#remove)
+    Snapshots.commitDeleteWhere(spark, flat,
+      org.apache.spark.sql.functions.col("id") >= 115L)               // v17
 
     val part = s"$root/part"
     Snapshots.commitCreate(spark, part,
@@ -128,7 +131,7 @@ class ManifestGoldenSpec extends AnyFunSuite {
     val all = ManifestGoldens.Tables.flatMap(golden).map(_._2)
       .flatMap(_.split("\n")).toSet
     Seq("#op:", "#ts:", "#schema:", "#stream:", "#check:", "#tombstonecol:",
-      "#tombstone:", "#dropped:", "#colmap:", "#partition:", "#fsz:",
+      "#tombstone:", "#dropped:", "#colmap:", "#partition:", "#dv:", "#fsz:",
       "#base:", "#add:", "#remove:").foreach { h =>
       assert(all.exists(_.startsWith(h)), s"no golden line carries $h")
     }

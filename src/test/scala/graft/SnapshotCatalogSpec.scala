@@ -1084,4 +1084,45 @@ class SnapshotCatalogSpec extends AnyFunSuite {
       fail("ORDER BY ts DESC LIMIT never pruned"))
     assert(total == 6 && kept == 1, s"TopN kept $kept of $total files")
   }
+
+  test("metadata answers count live rows when the min and max rows are deleted by vector") {
+    import org.apache.spark.sql.functions.{col, max, min}
+    val root = Files.createTempDirectory("graft_snapcat_dv").toString
+    spark.conf.set("spark.sql.catalog.gdv",
+      classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gdv.root", root)
+    val t = root + "/t"
+    Snapshots.commitAppend(spark, spark.range(0, 40).toDF("id")
+      .withColumn("v", col("id") * 2).repartitionByRange(4, col("id")), t)
+    Snapshots.extendStats(spark, t, Seq("id", "v"))
+    // the table's min and max rows die by vector: no file is re-written,
+    // so every sidecar row still counts and bounds them
+    val (v, n) = Snapshots.commitDelete(spark, t, Seq(0L, 39L), "id")
+    assert(n == 2L && Snapshots.filesAt(spark, t, v) ==
+      Snapshots.filesAt(spark, t, v - 1))
+    assert(Snapshots.deadRowsAt(spark, t, v).size == 2)
+    val data = Snapshots.read(spark, t)
+    def ids(q: String) = spark.sql(q).collect().map(_.getLong(0)).toSeq
+    // COUNT(*) and COUNT(v) (null-free) answer from metadata, live rows only
+    val counts = spark.sql("SELECT count(*), count(v) FROM gdv.t").head
+    assert(Snapshots.lastAggAnswered.contains(2))
+    assert(counts.getLong(0) == data.count() && counts.getLong(1) == 38L)
+    // MIN/MAX refuse the metadata answer: a file's extreme row may be dead
+    val mm = spark.sql("SELECT min(id), max(id) FROM gdv.t").head
+    assert(Snapshots.lastAggAnswered.isEmpty)
+    val want = data.agg(min("id"), max("id")).head
+    assert((mm.getLong(0), mm.getLong(1)) == ((want.getLong(0), want.getLong(1))))
+    assert((mm.getLong(0), mm.getLong(1)) == ((1L, 38L)))
+    // ORDER BY ... LIMIT and LIMIT count each file's live rows: the first
+    // file holds 9, so ten rows need the second file too
+    val asc = data.orderBy("id").limit(10).collect().map(_.getLong(0)).toSeq
+    assert(ids("SELECT id FROM gdv.t ORDER BY id LIMIT 10") == asc)
+    assert(asc == (1L to 10L))
+    val desc = data.orderBy(col("id").desc).limit(10).collect()
+      .map(_.getLong(0)).toSeq
+    assert(ids("SELECT id FROM gdv.t ORDER BY id DESC LIMIT 10") == desc)
+    assert(desc == (29L to 38L).reverse)
+    val limited = ids("SELECT id FROM gdv.t LIMIT 10")
+    assert(limited.size == 10 && limited.forall(i => i != 0L && i != 39L))
+  }
 }

@@ -19,7 +19,9 @@ import graft.warehouse.Snapshots
   * sequence adds, renames and drops. Each step runs one public `Snapshots`
   * operation: append, MERGE, UPDATE/DELETE WHERE, key-list DELETE, lazy
   * DELETE, OPTIMIZE, RESTORE, ADD/RENAME/DROP COLUMN, VACUUM or SHALLOW
-  * CLONE. Then every retained version is read back through time travel;
+  * CLONE. Row-level commits take the deletion-vector branch or, past the
+  * dead-fraction bound, the re-write branch; the run prints how often
+  * each was taken. Then every retained version is read back through time travel;
   * each must equal the model's copy of that version (columns in declared
   * order, rows as a multiset), and the set of retained versions must
   * equal the model's.
@@ -55,6 +57,27 @@ object SnapshotModel extends Commands {
   type Seen = Map[Long, (Seq[String], Seq[Seq[Option[Long]]])]
 
   private def spark = SparkTest.spark
+
+  /** Row-level commits (MERGE, UPDATE, DELETE) over the run that gave a
+    * file a new deletion vector, and that re-wrote or dropped a file.
+    */
+  val vectorCommits, rewriteCommits =
+    new java.util.concurrent.atomic.AtomicInteger
+
+  /** Run a row-level commit on `t`, counting the branches it took. */
+  private def rowLevel(t: String)(body: => Unit): Seen = {
+    val v0 = Snapshots.currentVersion(spark, t)
+    body
+    val v1 = Snapshots.currentVersion(spark, t)
+    if (v1 > v0) {
+      val before = Snapshots.deadRowsAt(spark, t, v0)
+      if (Snapshots.deadRowsAt(spark, t, v1).exists { case (e, b) =>
+          !before.get(e).contains(b) }) vectorCommits.incrementAndGet()
+      if (Snapshots.removedFiles(spark, t, v0, v1).nonEmpty)
+        rewriteCommits.incrementAndGet()
+    }
+    Map.empty
+  }
 
   def canCreateNewSut(newState: State, initSuts: Iterable[State],
       runningSuts: Iterable[Sut]): Boolean = true
@@ -208,9 +231,8 @@ object SnapshotModel extends Commands {
       rows: Seq[(Long, Vector[Option[Long]])]) extends Step {
     override def preCondition(s: State): Boolean =
       s.cur.cols == cols && rows.nonEmpty
-    def op(t: String): Seen = {
-      Snapshots.commitMerge(spark, frame(cols, rows), t, Seq("id")); Map.empty
-    }
+    def op(t: String): Seen =
+      rowLevel(t)(Snapshots.commitMerge(spark, frame(cols, rows), t, Seq("id")))
     def next(s: State): State = s.commit(s.cur.copy(
         rows = s.cur.rows ++ rows, tombs = s.cur.tombs -- rows.map(_._1)))
       .copy(nextId = math.max(s.nextId, rows.map(_._1).max + 1))
@@ -219,10 +241,8 @@ object SnapshotModel extends Commands {
   final case class UpdateWhere(m: Long, r: Long, c: String) extends Step {
     override def preCondition(s: State): Boolean =
       s.cur.tombs.isEmpty && s.cur.cols.contains(c)
-    def op(t: String): Seen = {
-      Snapshots.commitUpdateWhere(spark, t, col("id") % m === r,
-        Seq(c -> (col(c) + 1000))); Map.empty
-    }
+    def op(t: String): Seen = rowLevel(t)(Snapshots.commitUpdateWhere(
+      spark, t, col("id") % m === r, Seq(c -> (col(c) + 1000))))
     def next(s: State): State = {
       val i = s.cur.cols.indexOf(c)
       val hit = s.cur.rows.keySet.filter(_ % m == r)
@@ -235,9 +255,8 @@ object SnapshotModel extends Commands {
 
   final case class DeleteWhere(below: Long) extends Step {
     override def preCondition(s: State): Boolean = s.cur.tombs.isEmpty
-    def op(t: String): Seen = {
-      Snapshots.commitDeleteWhere(spark, t, col("id") < below); Map.empty
-    }
+    def op(t: String): Seen =
+      rowLevel(t)(Snapshots.commitDeleteWhere(spark, t, col("id") < below))
     def next(s: State): State =
       if (!s.cur.rows.keys.exists(_ < below)) s
       else s.commit(s.cur.copy(rows = s.cur.rows.filter(_._1 >= below)))
@@ -246,9 +265,8 @@ object SnapshotModel extends Commands {
   final case class Delete(keys: Seq[Long]) extends Step {
     override def preCondition(s: State): Boolean =
       keys.nonEmpty && !keys.exists(s.cur.tombs)
-    def op(t: String): Seen = {
-      Snapshots.commitDelete(spark, t, keys, "id"); Map.empty
-    }
+    def op(t: String): Seen =
+      rowLevel(t)(Snapshots.commitDelete(spark, t, keys, "id"))
     def next(s: State): State =
       if (!keys.exists(s.cur.rows.contains)) s
       else s.commit(s.cur.copy(rows = s.cur.rows -- keys))
@@ -352,7 +370,12 @@ class SnapshotModelSpec extends AnyFunSuite {
       .withMinSize(8)
       .withMaxSize(12)
       .withWorkers(1)
+    SnapshotModel.vectorCommits.set(0)
+    SnapshotModel.rewriteCommits.set(0)
     val result = Test.check(params, SnapshotModel.property())
+    println(s"SnapshotModelSpec seed=$seed: row-level commits that " +
+      s"vectored a file ${SnapshotModel.vectorCommits.get}, that re-wrote " +
+      s"or dropped one ${SnapshotModel.rewriteCommits.get}")
     assert(result.passed,
       s"seed=$seed\n${Pretty.pretty(result, Pretty.Params(2))}")
   }

@@ -268,14 +268,22 @@ class SnapshotsSpec extends AnyFunSuite {
     // a pinned OLD version prunes too — and a box outside it reads nothing
     assert(Snapshots.readPruned(spark, t,
       Seq(("id", 250.0, 260.0)), Some(2L)).isEmpty)
-    // copy-on-write delete: rewritten files are uncovered until the next
-    // extend; the pruned read stays exact throughout
-    Snapshots.commitDelete(spark, t, Seq(10L), "id")
+    // a vectored delete: the file holding key 10 gains a deletion vector
+    // and keeps its stats row (a superset of its live rows), every file
+    // carries, so the extend has nothing new to cover; the pruned read
+    // stays exact throughout
+    val v3 = Snapshots.currentVersion(spark, t)
+    val (v4, _) = Snapshots.commitDelete(spark, t, Seq(10L), "id")
+    assert(Snapshots.filesAt(spark, t, v4) == Snapshots.filesAt(spark, t, v3))
+    val holder = Snapshots.filesAt(spark, t, v3).filter(f =>
+      spark.read.parquet(s"$t/data/$f").filter(col("id") === 10L).count() > 0)
+    assert(holder.size == 1 &&
+      Snapshots.deadRowsAt(spark, t, v4).keySet == holder.toSet)
     val afterDel = Snapshots.readPruned(spark, t, box).filter(col("id") <= 40)
     assert(afterDel.collect().map(_.getLong(0)).sorted.sameElements(
       Snapshots.read(spark, t).filter(col("id") <= 40)
         .collect().map(_.getLong(0)).sorted))
-    assert(Snapshots.extendStats(spark, t, Seq("id")) >= 1)
+    assert(Snapshots.extendStats(spark, t, Seq("id")) == 0)
     // the manifest now skips the box again on the rewritten layout
     Snapshots.readPruned(spark, t, box).collect()
     val (read3, total3) = Layout.lastStatsPruned.get
@@ -442,11 +450,14 @@ class SnapshotsSpec extends AnyFunSuite {
     val v = Snapshots.commitMerge(spark,
       Seq((155L, "bumped"), (9999L, "new")).toDF("id", "v"), t, Seq("id"))
     val after = Snapshots.filesAt(spark, t, v)
-    val rewritten = before.toSet.diff(after.toSet)
-    assert(rewritten.size == 1,
-      s"exactly the file holding key 155 rewrites, got ${rewritten.size}")
-    assert(before.toSet.intersect(after.toSet).size == before.size - 1,
-      "every other file must carry into the new manifest by name")
+    val vectored = Snapshots.deadRowsAt(spark, t, v)
+    assert(vectored.keySet == Set(before(15)) &&
+      vectored(before(15)).getCardinality == 1,
+      s"exactly the file holding key 155 gains a vector, got ${vectored.keySet}")
+    assert(after.take(before.size) == before,
+      "every file must carry into the new manifest by name")
+    assert(spark.read.parquet(after.drop(before.size).map(f =>
+      s"$t/data/$f"): _*).count() == 2L, "only the batch's rows stage")
     val state = Snapshots.read(spark, t)
     assert(state.count() == 321)
     assert(state.filter("id = 155").head.getString(1) == "bumped")
@@ -622,8 +633,10 @@ class SnapshotsSpec extends AnyFunSuite {
     val state = Snapshots.read(spark, t)
     assert(state.count() == 321 &&
       state.filter("id = 42").head.getString(1) == "bump")
-    assert(Snapshots.filesAt(spark, t, v).toSet
-      .intersect(Snapshots.filesAt(spark, t, 32L).toSet).size == 31)
+    // exactly key 42's slab gains a vector; every file carries
+    val before = Snapshots.filesAt(spark, t, 32L)
+    assert(Snapshots.deadRowsAt(spark, t, v).keySet == Set(before(4)))
+    assert(Snapshots.filesAt(spark, t, v).take(before.size) == before)
   }
 
   test("merge carries pending tombstones it does not touch; re-asserted keys leave the set") {
@@ -1454,5 +1467,18 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(del2 > 0, "the flat entry must not block later deletes")
     assert(Snapshots.read(spark, t).filter(col("id") === 900L)
       .count() == 1, "flat-staged rows survive unrelated deletes")
+  }
+
+  test("a vacuum with a longer retention after a shorter one keeps what is left") {
+    val t = freshTable()
+    (1L to 4L).foreach(i =>
+      Snapshots.commitAppend(spark, Seq((i, s"v$i")).toDF("id", "v"), t))
+    Snapshots.vacuum(spark, t, keepVersions = 1) // v1..v3 expire
+    Snapshots.commitAppend(spark, Seq((5L, "v5")).toDF("id", "v"), t)
+    // keep 3 would reach back to v3, which is already gone
+    Snapshots.vacuum(spark, t, keepVersions = 3)
+    assert((1L to 5L).filter(Snapshots.hasVersion(spark, t, _)) == Seq(4L, 5L))
+    assert(Snapshots.read(spark, t, Some(4L)).count() == 4L &&
+      Snapshots.read(spark, t).count() == 5L)
   }
 }
