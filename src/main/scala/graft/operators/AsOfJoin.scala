@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Cost: ONE shuffle of |L|+|R| rows on the key (same as a plain
   * equi-join) and a linear window pass — scales to 100 TB wherever a
-  * groupBy on the key does. Right-side tombstones are not needed because
+  * groupBy on the key does. Right-side expiry markers are not needed because
   * the window never looks forward.
   */
 object AsOfJoin {

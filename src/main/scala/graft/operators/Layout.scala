@@ -92,7 +92,7 @@ object Layout {
       numFiles: Int): DataFrame = {
     // ONE combined agg serves every numeric column's [min, max] (2k
     // values in one driver action): on a manifest-pinned or
-    // tombstone-filtered input, per-column aggs would re-execute the
+    // vector-filtered input, per-column aggs would re-execute the
     // whole upstream read k times
     val numeric = cols.filter(c =>
       df.schema(c).dataType.isInstanceOf[NumericType])

@@ -399,8 +399,8 @@ final case class OptimizeSnapshot(target: MaintenanceSql.SnapTarget,
   * (default 32 MB) rewrite, packed to ~128 MB outputs; every compact
   * file carries by name, so the statement's IO tracks the accreted
   * small-file debt, never the table (the steady-state OPTIMIZE at
-  * 100 TB; the full-rewrite form above remains the clustering /
-  * tombstone-materialization pass).
+  * 100 TB; the full-rewrite form above remains the clustering pass and
+  * the one that re-writes every vectored file without its dead rows).
   */
 final case class OptimizeSnapshotSmall(target: MaintenanceSql.SnapTarget,
     smallBytes: Long) extends LeafRunnableCommand {
@@ -446,7 +446,7 @@ final case class VacuumSnapshotDryRun(target: MaintenanceSql.SnapTarget,
 
 /** `DESC[RIBE] DETAIL t` → one row of table-level metadata (Delta's
   * DESCRIBE DETAIL shape): head version, live file count and bytes,
-  * declared schema DDL, constraint and pending-tombstone counts, and
+  * declared schema DDL, constraint and deletion-vector file counts, and
   * the head commit instant. Metadata-only — the head manifest plus one
   * getFileStatus per live file, never a data read.
   */
@@ -459,7 +459,7 @@ final case class DescribeSnapshotDetail(target: MaintenanceSql.SnapTarget)
     AttributeReference("size_bytes", LongType, nullable = false)(),
     AttributeReference("schema_ddl", StringType, nullable = false)(),
     AttributeReference("num_constraints", IntegerType, nullable = false)(),
-    AttributeReference("pending_tombstone_files", IntegerType,
+    AttributeReference("deletion_vector_files", IntegerType,
       nullable = false)(),
     AttributeReference("committed_at", TimestampType, nullable = true)(),
     AttributeReference("stats_columns", StringType, nullable = false)(),
@@ -482,7 +482,7 @@ final case class DescribeSnapshotDetail(target: MaintenanceSql.SnapTarget)
     val schema = Snapshots.schemaAt(spark, path, head)
       .map(_.toDDL).getOrElse("")
     val checks = Snapshots.checkConstraints(spark, path, Some(head))
-    val (_, tombs) = Snapshots.pendingTombstones(spark, path, Some(head))
+    val vectorFiles = Snapshots.vectorFilesAt(spark, path, head)
     val instant = Snapshots.commitInstants(spark, path)
       .find(_._1 == head).map(t => new java.sql.Timestamp(t._2)).orNull
     // the index audit: which file-skipping sidecars this table keeps
@@ -500,7 +500,7 @@ final case class DescribeSnapshotDetail(target: MaintenanceSql.SnapTarget)
     val defaults = Snapshots.columnDefaults(spark, path, Some(head))
       .toSeq.sortBy(_._1).map { case (c, d) => s"$c=$d" }.mkString(",")
     Seq(Row(path, head, files.size, bytes, schema, checks.size,
-      tombs.size, instant, statsCols, bloomCols, partitionT, renamed,
+      vectorFiles.size, instant, statsCols, bloomCols, partitionT, renamed,
       defaults))
   }
 }
@@ -728,7 +728,7 @@ final case class WidenSnapshotColumn(target: MaintenanceSql.SnapTarget,
   * the NAME enters the carried `#dropped:` ledger and stays refused for
   * re-adding until a full-rewrite OPTIMIZE physically purges the old
   * values (name-based parquet resolution would otherwise resurrect
-  * them). Refuses the last column, the pending-tombstone key, and any
+  * them). Refuses the last column, the partition column, and any
   * CHECK-mentioned column.
   */
 final case class DropSnapshotColumn(target: MaintenanceSql.SnapTarget,
@@ -751,8 +751,8 @@ final case class DropSnapshotColumn(target: MaintenanceSql.SnapTarget,
   * names, zero data moves at any size. The OLD name enters the
   * `#dropped:` ledger (its physical data is live under the new name) and
   * stays refused until a full-rewrite OPTIMIZE normalizes physical
-  * names; renaming onto a dropped name, a pending-tombstone key, or a
-  * CHECK-mentioned column refuses loudly.
+  * names; renaming onto a dropped name, or renaming the partition
+  * column or a CHECK-mentioned column, refuses loudly.
   */
 final case class RenameSnapshotColumn(target: MaintenanceSql.SnapTarget,
     from: String, to: String) extends LeafRunnableCommand {
@@ -769,8 +769,9 @@ final case class RenameSnapshotColumn(target: MaintenanceSql.SnapTarget,
 }
 
 /** `DELETE FROM '<path>' WHERE k IN (...)` → Snapshots.commitDelete:
-  * copy-on-write at file granularity — only files physically holding a
-  * doomed key rewrite. Quoted-path targets only (identifier targets keep
+  * row-level by deletion vectors — the doomed rows die by vector and
+  * every file carries by name (a file past the dead-fraction bound is
+  * re-written instead). Quoted-path targets only (identifier targets keep
   * delegating to Spark's own DSv2 DELETE). Returns (version, rows
   * deleted); a miss is a no-op at the unchanged head.
   */
@@ -788,8 +789,9 @@ final case class DeleteSnapshotKeys(target: MaintenanceSql.SnapTarget,
 }
 
 /** `DELETE FROM '<path>' WHERE <predicate>` → Snapshots.commitDeleteWhere:
-  * predicate-driven copy-on-write delete — the retention/erasure shape
-  * that cannot enumerate keys on the driver at 100 TB. The predicate is
+  * predicate-driven row-level delete by deletion vectors — the
+  * retention/erasure shape that cannot enumerate keys on the driver at
+  * 100 TB. The predicate is
   * parsed by the SESSION's expression parser at run time (full Spark SQL
   * expression surface: dates, LIKE, string keys, AND/OR), pushes into
   * the probe's parquet scan, and rows where it evaluates NULL are kept
@@ -810,11 +812,11 @@ final case class DeleteSnapshotWhere(target: MaintenanceSql.SnapTarget,
 }
 
 /** `UPDATE <target> SET c = e [, ...] WHERE <pred>` →
-  * Snapshots.commitUpdateWhere: predicate-driven copy-on-write update —
-  * only files physically holding a matching row rewrite (matching rows
-  * take the SET expressions under the column's declared type, NULL
-  * predicates leave rows untouched, CHECK constraints bind the
-  * rewritten slice). SET assignments and the predicate resolve through
+  * Snapshots.commitUpdateWhere: predicate-driven row-level update — the
+  * matching rows die by deletion vector and only their new versions
+  * stage (they take the SET expressions under the column's declared
+  * type, NULL predicates leave rows untouched, CHECK constraints bind
+  * the updated rows). SET assignments and the predicate resolve through
   * the session's expression parser at run time; the SET list splits
   * paren- and quote-aware so expressions may call functions. Targets are
   * quoted paths only: an UPDATE on a catalog identifier is Spark's own,
@@ -875,12 +877,11 @@ final case class UpdateSnapshotWhere(target: MaintenanceSql.SnapTarget,
 /** `MERGE INTO <target> USING <src> ON (keys) [WHEN MATCHED THEN UPDATE
   * SET * WHEN NOT MATCHED THEN INSERT *]` → Snapshots.commitMerge: the
   * protocol's key-based upsert as real SQL — matched keys update
-  * wholesale, unmatched insert, untouched target rows carry via the
-  * file-granular copy-on-write engine (only files physically holding a
-  * source key rewrite). The source is a view/table name or a
-  * parenthesized subquery resolved by the session at run time; the
-  * clause pair is the canonical upsert and may be omitted (same
-  * semantics). Targets are quoted paths only — a MERGE on a catalog
+  * wholesale, unmatched insert, and the matched target rows die by
+  * deletion vector while every file carries by name. The source is a
+  * view/table name or a parenthesized subquery resolved by the session
+  * at run time; the clause pair is the canonical upsert and may be
+  * omitted (same semantics). Targets are quoted paths only — a MERGE on a catalog
   * identifier is Spark's own, served as row-level copy-on-write
   * (sources/SnapshotRowLevel.scala) — and a target with no committed
   * version refuses (MERGE never creates).

@@ -339,14 +339,13 @@ object SnapshotQ {
            |FROM snapshot_changes('$table', 2, 3, 'o_orderkey')""".stripMargin)
     })
 
-  /** Merge-on-read lazy delete (Snapshots.commitDeleteLazy — key
-    * tombstones, the deletion-vector idea at key granularity): the
-    * doomed keys commit as a tiny sidecar with ZERO data files read or
-    * rewritten — asserted in-query by comparing the two versions' file
-    * lists — and every read anti-joins the bounded tombstone set. The
-    * emitted rows are the post-delete head plus the window's change
-    * feed (`delete` pre-images for rows no file rewrite ever touched),
-    * both fully DuckDB-oracled from orders.
+  /** Merge-on-read keyed delete (Snapshots.commitDelete): the doomed
+    * rows die by deletion vector with ZERO data files rewritten —
+    * asserted in-query by comparing the two versions' file lists — and
+    * every read drops the vectored rows. The emitted rows are the
+    * post-delete head plus the window's change feed (`delete`
+    * pre-images for rows no file rewrite ever touched), both fully
+    * DuckDB-oracled from orders.
     */
   val snapLazyDelete = QueryDef(
     "snap_lazy_delete",
@@ -364,13 +363,12 @@ object SnapshotQ {
       Snapshots.commitAppend(spark, orders, table)
       val doomed = orders.filter(col("o_orderkey") % 10 === 6)
         .select("o_orderkey").collect().map(_.getLong(0)).toSeq
-      val (v, n) = Snapshots.commitDeleteLazy(spark, table, doomed,
-        "o_orderkey")
-      require(v == 2L && n == doomed.size, s"unexpected lazy commit ($v, $n)")
+      val (v, n) = Snapshots.commitDelete(spark, table, doomed, "o_orderkey")
+      require(v == 2L && n == doomed.size, s"unexpected delete ($v, $n)")
       // the heart of the contract: the delete moved ZERO data bytes
       require(Snapshots.filesAt(spark, table, 1L) ==
         Snapshots.filesAt(spark, table, 2L),
-        "lazy delete must not touch data files")
+        "a vectored delete must not touch data files")
       Snapshots.read(spark, table).withColumn("part", lit("head"))
         .unionByName(Snapshots.rowDiff(spark, table, 1L, 2L,
             Seq("o_orderkey"))
@@ -828,13 +826,14 @@ object SnapshotQ {
 
   /** The DESCRIBE DETAIL audit surface (plans/MaintenanceSql
     * DescribeSnapshotDetail): a table with a known lifecycle — 4-file
-    * append, CHECK constraint, lazy delete — reports its head metadata
+    * append, CHECK constraint, keyed delete — reports its head metadata
     * in ONE metadata-only row, and every reported value is a protocol
     * constant gradeable against the DuckDB oracle: the version, the
-    * LIVE file count (still 4 — the lazy delete moved zero data files),
-    * the constraint and pending-tombstone counts, plus liveness flags
-    * for the byte census, the declared-schema DDL, and the durable
-    * commit instant.
+    * LIVE file count (still 4 — the vectored delete moved zero data
+    * files), the constraint count and the deletion-vector file count
+    * (under its older label, so the oracle's expected rows stay the
+    * same), plus liveness flags for the byte census, the declared-schema
+    * DDL, and the durable commit instant.
     */
   val snapDetail = QueryDef(
     "snap_detail",
@@ -859,7 +858,7 @@ object SnapshotQ {
         "o_totalprice > 0") // v2: metadata-only
       val doomed = orders.orderBy("o_orderkey").limit(3)
         .collect().map(_.getLong(0)).toSeq
-      Snapshots.commitDeleteLazy(spark, table, doomed, "o_orderkey") // v3
+      Snapshots.commitDelete(spark, table, doomed, "o_orderkey") // v3
       // sidecar-only index builds: no commit, num_files/version unmoved
       spark.sql(s"CREATE BLOOM INDEX ON '$table' (o_orderkey)").collect()
       spark.sql(s"CREATE STATS INDEX ON '$table' (o_totalprice)").collect()

@@ -50,13 +50,13 @@ import graft.warehouse.Snapshots
   * whose job commit IS `Snapshots.commitAppend`/`commitOverwrite` —
   * data stages distributed under unique names first, then one atomic
   * manifest claim publishes it, so a SQL writer gets the same
-  * optimistic-concurrency, constraint-enforcement and tombstone-refusal
-  * guarantees as the Scala API (a bare parquet write under `data/`
-  * would corrupt every invariant; that path stays impossible).
+  * optimistic-concurrency and constraint-enforcement guarantees as the
+  * Scala API (a bare parquet write under `data/` would corrupt every
+  * invariant; that path stays impossible).
   * `CREATE TABLE` commits v1 (schema-only when empty — CTAS works),
   * `DROP TABLE` removes the table tree, and `DELETE FROM snap.t WHERE
   * ...` resolves through Spark's own DSv2 delete into the protocol's
-  * copy-on-write predicate delete. Time-travel reads
+  * row-level predicate delete. Time-travel reads
   * (`VERSION/TIMESTAMP AS OF`) remain read-only — history is immutable.
   * `ALTER TABLE` column changes (rename, add, drop, widen, defaults)
   * commit through [[alterTable]]; every other ALTER, and RENAME TABLE,
@@ -100,14 +100,6 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
   private def tableAt(ident: Identifier, version: Long,
       writable: Boolean = false): Table = {
     val t = tablePath(ident)
-    // the catalog hands Spark a bare file list — it has no seat for the
-    // merge-on-read anti-join, so serving a pending-tombstone version
-    // here would RESURRECT lazily-deleted rows; refuse loudly instead
-    val (_, tombs) = Snapshots.pendingTombstones(spark, t, Some(version))
-    if (tombs.nonEmpty) throw new UnsupportedOperationException(
-      s"$t@v$version has ${tombs.size} pending lazy-delete tombstone " +
-        "file(s) — OPTIMIZE the table to materialize them, or read via " +
-        "Snapshots.read / snapshot_at(...)")
     // two-arg Path resolution: bare names land under data/, a shallow
     // clone's foreign refs (qualified URIs) resolve as themselves
     val dd = new Path(t, "data")
@@ -245,8 +237,8 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
                         ov: Boolean): Unit = {
                       // the job commit IS the protocol commit: data
                       // stages distributed, ONE atomic claim publishes —
-                      // constraints, tombstone refusal and optimistic
-                      // retry all apply to the SQL writer too
+                      // constraints and optimistic retry apply to the
+                      // SQL writer too
                       if (overwrite || ov)
                         Snapshots.commitOverwrite(sp, data, t)
                       else Snapshots.commitAppend(sp, data, t)

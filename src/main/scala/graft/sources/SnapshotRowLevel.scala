@@ -95,13 +95,6 @@ private[sources] class SnapshotRowLevelOperation(spark: SparkSession,
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder = {
-    // a pending-tombstone version cannot serve a bare file list (the
-    // merge-on-read anti-join has no seat here) — same refusal as the
-    // catalog read face
-    val (_, tombs) = Snapshots.pendingTombstones(spark, table, Some(head))
-    if (tombs.nonEmpty) throw new UnsupportedOperationException(
-      s"$table@v$head has ${tombs.size} pending lazy-delete tombstone " +
-        "file(s) — OPTIMIZE the table before row-level SQL")
     val dd = new Path(table, "data")
     val entries = Snapshots.filesAt(spark, table, head)
     val files = entries.map(n => new Path(dd, n).toString)

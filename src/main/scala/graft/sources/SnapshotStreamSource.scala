@@ -269,7 +269,7 @@ class SnapshotStreamSource(spark: SparkSession, table: String,
     }
     if (fromOpt.isEmpty)
       // initial batch: the FULL applied snapshot at the end version —
-      // tombstones filtered, pinned (later commits can't change it)
+      // dead rows filtered, pinned (later commits can't change it)
       return asStreaming(snapshotAt(to))
     if (from >= to)
       return asStreaming(snapshotAt(to).limit(0))

@@ -160,7 +160,7 @@ private[graft] object FileSkipping
     dt.catalogString
 
   /** [[prune]] for the keys of a one-column frame (a change set's
-    * touched keys, a tombstone key set) on table column `column`. The
+    * touched keys) on table column `column`. The
     * frame is collected only when an index covers the column: at most
     * [[MaxPruneKeys]] + 1 distinct keys in one job, or one min/max
     * aggregate past that — never an unbounded key list on the driver.

@@ -283,7 +283,7 @@ object Maintenance {
       // clustering pass that keeps stats-pruned reads effective
       zorderCols: Seq[String] = Nil,
       // Snapshot tables only: files under this size count as small-file
-      // debt for the policy's bin-packing tier (no tombstones, no
+      // debt for the policy's bin-packing tier (no deletion vectors, no
       // zorder → pack instead of full rewrite)
       smallFileBytes: Long = 32L << 20)
 
@@ -369,16 +369,18 @@ object Maintenance {
                 s"expired $k partition file(s) of ${t.path} at v$v"
             }
           }
-          val n = Snapshots.filesAt(spark, t.path,
-            Snapshots.currentVersion(spark, t.path)).size
-          // pending lazy-delete tombstones always trigger the OPTIMIZE:
-          // the scheduled materialization is what turns a logical GDPR
-          // erasure into a physical one on a bounded deadline
-          val tombsPending =
-            Snapshots.pendingTombstones(spark, t.path)._2.nonEmpty
+          // the expiry leg may have committed: re-read the head
+          val latest = Snapshots.currentVersion(spark, t.path)
+          val n = Snapshots.filesAt(spark, t.path, latest).size
+          // deletion vectors always trigger the full OPTIMIZE: a vectored
+          // row stays in its data file until a re-write drops it, so the
+          // scheduled re-write is what turns a logical GDPR erasure into
+          // a physical one (after the vacuum) on a bounded deadline
+          val vectored =
+            Snapshots.vectorFilesAt(spark, t.path, latest).nonEmpty
           val optimized =
-            if (n <= t.maxDataFiles && !tombsPending) None
-            else if (!tombsPending && t.zorderCols.isEmpty)
+            if (n <= t.maxDataFiles && !vectored) None
+            else if (!vectored && t.zorderCols.isEmpty)
               // steady-state accretion with nothing to materialize or
               // cluster: BIN-PACK the small-file debt first — IO ∝ debt,
               // so the policy can fire after every burst; the full

@@ -29,13 +29,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   #check:         #check:<name>:<sql>             carried (restore keeps the
   *                                                    head's); ADD/DROP
   *                                                    CONSTRAINT change it
-  *   #tombstonecol:  #tombstonecol:<key column>      written only with
-  *                                                    #tombstone lines
-  *   #tombstone:     #tombstone:<sidecar file>       carried; lazy DELETE adds;
-  *                                                    MERGE/replica feed drop
-  *                                                    re-asserted keys; full
-  *                                                    OPTIMIZE, overwrite and
-  *                                                    replica rebuild clear
   *   #dropped:       #dropped:<physical column>      carried; DROP/RENAME
   *                                                    COLUMN add; full
   *                                                    OPTIMIZE, overwrite and
@@ -62,11 +55,17 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   #remove:        (#add/#remove one per entry)     claim time, resolved away
   * }}}
   *
-  * Restore takes #schema, #tombstone(col), #dropped, #colmap, #partition
-  * and #dv from its target version and the rest from the head; a
-  * shallow clone copies everything. Header lines render in the table's
-  * order, multi-valued ones sorted by key, so a manifest's text is a pure
-  * function of its fields.
+  * Restore takes #schema, #dropped, #colmap, #partition and #dv from its
+  * target version and the rest from the head; a shallow clone copies
+  * everything. Header lines render in the table's order, multi-valued
+  * ones sorted by key, so a manifest's text is a pure function of its
+  * fields.
+  *
+  * Deletion vectors are the one record of dead rows. Older builds also
+  * wrote key tombstones (`#tombstone:` / `#tombstonecol:` headers naming
+  * key sidecars that every read anti-joined); [[parse]] refuses them
+  * rather than serve their deleted rows as live. OPTIMIZE with an older
+  * build materializes them.
   *
   * `version` is the version the manifest was resolved as (0 for the empty
   * table); it is not part of the text.
@@ -77,8 +76,6 @@ private[graft] final case class Manifest(
     schema: Option[StructType] = None,
     marks: Map[String, Long] = Map.empty,
     checks: Map[String, String] = Map.empty,
-    tombstoneCol: Option[String] = None,
-    tombstones: Seq[String] = Nil,
     dropped: Seq[String] = Nil,
     colmap: Map[String, String] = Map.empty,
     partitions: Seq[(String, String)] = Nil,
@@ -96,9 +93,7 @@ private[graft] final case class Manifest(
     */
   def canonical: Manifest = {
     val live = files.toSet
-    copy(tombstoneCol = tombstoneCol.filter(_ => tombstones.nonEmpty),
-      tombstones = tombstones.sorted, dropped = dropped.sorted,
-      dvs = dvs.filter { case (e, _) => live(e) })
+    copy(dropped = dropped.sorted, dvs = dvs.filter { case (e, _) => live(e) })
   }
 
   private[warehouse] def headerLines: Seq[String] =
@@ -107,9 +102,6 @@ private[graft] final case class Manifest(
       schema.map(SchemaHeader + _.json) ++
       marks.toSeq.sortBy(_._1).map { case (s, b) => s"$StreamHeader$b:$s" } ++
       checks.toSeq.sortBy(_._1).map { case (n, e) => s"$CheckHeader$n:$e" } ++
-      (if (tombstones.isEmpty) Nil
-       else tombstoneCol.map(TombstoneColHeader + _).toSeq ++
-         tombstones.sorted.map(TombstoneHeader + _)) ++
       dropped.sorted.map(DroppedHeader + _) ++
       colmap.toSeq.sortBy(_._1).map { case (l, p) => s"$ColmapHeader$l:$p" } ++
       partitionHeader.map(PartitionHeader + _) ++
@@ -151,8 +143,8 @@ private[graft] object Manifest {
   private val SchemaHeader = "#schema:"
   private val StreamHeader = "#stream:"
   private val CheckHeader = "#check:"
-  private val TombstoneColHeader = "#tombstonecol:"
-  private val TombstoneHeader = "#tombstone:"
+  /** Prefix of both legacy tombstone headers, refused by [[parse]]. */
+  private val LegacyTombstonePrefix = "#tombstone"
   private val DroppedHeader = "#dropped:"
   private val ColmapHeader = "#colmap:"
   private val PartitionHeader = "#partition:"
@@ -198,7 +190,7 @@ private[graft] object Manifest {
   def parse(text: String): Text = {
     var m = Manifest()
     var base: Option[Long] = None
-    val files, tombs, dropped, adds, removes =
+    val files, dropped, adds, removes =
       Vector.newBuilder[String]
     val marks = Map.newBuilder[String, Long]
     val checks, colmap = Map.newBuilder[String, String]
@@ -215,9 +207,11 @@ private[graft] object Manifest {
         val (b, s) = pair(v(StreamHeader)); marks += s -> b.toLong
       }
       else if (l.startsWith(CheckHeader)) checks += pair(v(CheckHeader))
-      else if (l.startsWith(TombstoneColHeader))
-        m = m.copy(tombstoneCol = Some(v(TombstoneColHeader)))
-      else if (l.startsWith(TombstoneHeader)) tombs += v(TombstoneHeader)
+      else if (l.startsWith(LegacyTombstonePrefix))
+        throw new IllegalStateException(
+          s"manifest header ${l.takeWhile(_ != ':')}: holds pending " +
+            "tombstone deletes, which this build no longer applies — " +
+            "OPTIMIZE the table with an older build to materialize them")
       else if (l.startsWith(DroppedHeader)) dropped += v(DroppedHeader)
       else if (l.startsWith(ColmapHeader)) colmap += pair(v(ColmapHeader))
       else if (l.startsWith(PartitionHeader))
@@ -237,7 +231,7 @@ private[graft] object Manifest {
       else if (l.startsWith(RemoveHeader)) removes += v(RemoveHeader)
     }
     m = m.copy(marks = marks.result(), checks = checks.result(),
-      tombstones = tombs.result(), dropped = dropped.result(),
+      dropped = dropped.result(),
       colmap = colmap.result(), dvs = dvs.result(), sizes = sizes.result(),
       files = files.result())
     base match {

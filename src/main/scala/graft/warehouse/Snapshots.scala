@@ -62,7 +62,7 @@ object Snapshots {
   /** Test-only race-injection seam: runs between a commit's staging step
     * and its claim (an append's, or each DELETE/UPDATE attempt's), where
     * a concurrent writer's commit can land.
-    * Specs use it to interleave a lazy delete / ADD CONSTRAINT
+    * Specs use it to interleave a DELETE / ADD CONSTRAINT
     * deterministically and prove the claim loop re-validates against the
     * moved head. A no-op in production.
     */
@@ -431,9 +431,6 @@ object Snapshots {
       // the null partition can't prove its age — never expire it
       val (doomed, kept) = m.files.partition(e =>
         partValueAt(e, level).exists(v => v != NullPartition && v < cut))
-      // a pending tombstone key may live in a doomed partition — the
-      // tombstones CARRY (anti-join of a gone row is a no-op, never a
-      // resurrection)
       if (doomed.isEmpty) Skip((m.version, 0))
       else Claim(m.copy(files = kept), Nil, v => (v, doomed.size))
     }
@@ -540,7 +537,7 @@ object Snapshots {
     DeletionVectors.of(spark, table, m.dvs, m.files)
   }
 
-  /** Spec hook: the deletion-vector files the version references. */
+  /** The distinct deletion-vector files the version references. */
   private[graft] def vectorFilesAt(spark: SparkSession, table: String,
       version: Long): Seq[String] =
     manifestAt(spark, table, version).dvs.values.toSeq.distinct.sorted
@@ -700,7 +697,7 @@ object Snapshots {
     * PHYSICAL names (renamed columns would otherwise read all-NULL
     * through parquet's name-based resolution), the returned frame serves
     * LOGICAL names, so every caller above this line — probes, merges,
-    * constraints, tombstone joins, feeds — lives purely in logical space.
+    * constraints, feeds — lives purely in logical space.
     *
     * Deletion vectors apply here too: `dead` (entry → positions) drops
     * rows, `only` keeps just the listed positions of its entries (the
@@ -749,16 +746,14 @@ object Snapshots {
   }
 
   /** The rows of `names` that version `m` serves: its deletion vectors
-    * and pending tombstones applied, under its declared schema. The one
-    * read of live rows every reader goes through; `positions` keeps each
-    * row's file URI and row index ([[DeletionVectors.FileCol]],
-    * [[DeletionVectors.RowCol]]).
+    * applied, under its declared schema. The one read of live rows every
+    * reader goes through; `positions` keeps each row's file URI and row
+    * index ([[DeletionVectors.FileCol]], [[DeletionVectors.RowCol]]).
     */
   private def readLive(spark: SparkSession, table: String, m: Manifest,
       names: Seq[String], positions: Boolean = false): DataFrame =
-    applyTombstones(spark, table, m, readWithSchema(spark, table, names,
-      m.schema, m.colmap, DeletionVectors.of(spark, table, m.dvs, names),
-      positions = positions))
+    readWithSchema(spark, table, names, m.schema, m.colmap,
+      DeletionVectors.of(spark, table, m.dvs, names), positions = positions)
 
   /** Scan exactly `names` under the given PHYSICAL schema through a
     * manifest-backed [[ManifestFileIndex]]: no file-listing job, no
@@ -931,16 +926,11 @@ object Snapshots {
         if (f.name == column) f.copy(dataType = to) else f))))
     }
 
-  /** Refuse a column DDL on `column` while pending lazy-delete
-    * tombstones key on it (their sidecar holds the name) or a CHECK
-    * constraint mentions it (expression strings do not rewrite).
+  /** Refuse a column DDL on `column` while a CHECK constraint mentions
+    * it (expression strings do not rewrite).
     */
   private def requireUnreferenced(m: Manifest, table: String,
       column: String, afterDrop: String): Unit = {
-    require(!(m.tombstones.nonEmpty && m.tombstoneCol.contains(column)),
-      s"column $column keys ${m.tombstones.size} pending " +
-        s"lazy-delete tombstone file(s) on $table — OPTIMIZE to " +
-        "materialize them first")
     val mention = ("(?i)\\b" +
       java.util.regex.Pattern.quote(column) + "\\b").r
     m.checks.foreach { case (n, ex) =>
@@ -964,9 +954,8 @@ object Snapshots {
     * purges the old values — Delta needs column-mapping mode for DROP
     * COLUMN precisely because name-based resolution would otherwise
     * resurrect them; the ledger is this protocol's name-based answer.
-    * Refuses to drop the last column, the pending-tombstone key column
-    * (the read-side anti-join would lose its key), or a column a CHECK
-    * constraint mentions (DROP CONSTRAINT first).
+    * Refuses to drop the last column, the partition column, or a column
+    * a CHECK constraint mentions (DROP CONSTRAINT first).
     */
   def commitDropColumn(spark: SparkSession, table: String,
       column: String): Long =
@@ -1049,10 +1038,9 @@ object Snapshots {
     * carrying it) must refuse until a full-rewrite OPTIMIZE normalizes
     * physical names (which clears colmap and ledger together); renaming
     * ONTO a dropped name refuses for the same reason in reverse.
-    * Refuses while pending lazy-delete tombstones key on the column
-    * (their sidecar holds the old name) and when a CHECK constraint
-    * mentions it (expression strings do not rewrite — DROP CONSTRAINT
-    * first, re-declare under the new name).
+    * Refuses when a CHECK constraint mentions the column (expression
+    * strings do not rewrite — DROP CONSTRAINT first, re-declare under
+    * the new name).
     */
   def commitRenameColumn(spark: SparkSession, table: String, from: String,
       to: String): Long = {
@@ -1131,147 +1119,6 @@ object Snapshots {
       require(m.checks.contains(name),
         s"no CHECK constraint named $name on $table")
       claim(m.copy(checks = m.checks - name))
-    }
-
-  // ------------------------------------------------------------------
-  // Merge-on-read lazy deletes (key tombstones)
-  // ------------------------------------------------------------------
-
-  /** Pending lazy-delete state of a version: (key column, tombstone
-    * sidecar file names). Empty when all deletes are materialized.
-    */
-  def pendingTombstones(spark: SparkSession, table: String,
-      version: Option[Long] = None): (Option[String], Seq[String]) = {
-    val m = manifestAt(spark, table,
-      version.getOrElse(currentVersion(spark, table)))
-    (m.tombstoneCol, m.tombstones)
-  }
-
-  /** Tombstone sidecars live OUTSIDE `data/` (like `_manifests`): data
-    * readers, per-file stats and the compaction file census must never
-    * see them as table files.
-    */
-  private def tombstoneDir(table: String) = new Path(table, "_tombstones")
-
-  /** The distinct tombstoned keys of a version (bounded: deletion-request
-    * batches, never the table) — None when the version has none.
-    */
-  private def tombstoneKeys(spark: SparkSession, table: String,
-      m: Manifest): Option[(String, DataFrame)] =
-    m.tombstoneCol.filter(_ => m.tombstones.nonEmpty).map { kc =>
-      kc -> spark.read.parquet(m.tombstones.map(n =>
-          new Path(tombstoneDir(table), n).toString): _*)
-        .select(kc).distinct()
-    }
-
-  /** Anti-filter `df` by the version's tombstones (merge-on-read): the
-    * tombstone side is bounded and broadcast, NULL-key rows always
-    * survive (anti join on equality), and a version with no tombstones
-    * costs nothing.
-    */
-  private def applyTombstones(spark: SparkSession, table: String,
-      m: Manifest, df: DataFrame): DataFrame =
-    tombstoneKeys(spark, table, m) match {
-      case None => df
-      case Some((kc, keys)) =>
-        df.join(org.apache.spark.sql.functions.broadcast(keys),
-          Seq(kc), "left_anti")
-    }
-
-  /** MERGE-ON-READ delete ("deletion vectors" at KEY granularity): the
-    * doomed keys land as a tiny tombstone sidecar referenced from the
-    * new manifest — ZERO data files are read or rewritten, so a delete
-    * request on a 100 TB table commits in O(keys) regardless of table
-    * size (the instant-logical-erasure half of the GDPR contract).
-    * Every read of the table anti-joins the (bounded, broadcast)
-    * tombstone keys; the next OPTIMIZE / merge / overwrite MATERIALIZES
-    * them — rewrites without the doomed rows and clears the headers —
-    * and a `commitDelete`-then-`vacuum` remains the immediate
-    * physical-erasure path.
-    *
-    * Key semantics, not positions: a tombstoned key means "this key is
-    * deleted", so APPENDING a tombstoned key is refused (the read-side
-    * filter would silently swallow the new row — resurrect via
-    * `commitMerge`, which materializes tombstones, or OPTIMIZE first).
-    * `keyCol` must stay consistent while tombstones are pending.
-    * Returns (new version, distinct keys tombstoned).
-    */
-  /** Write a one-column key frame into `_tombstones/` under unique names
-    * (the same write-first-claim-later discipline as data files).
-    * Returns the staged sidecar names — unreferenced until a manifest
-    * claims them.
-    */
-  private def stageTombstoneSidecar(spark: SparkSession, table: String,
-      keys: DataFrame): Seq[String] = {
-    val td = tombstoneDir(table)
-    val f = fs(spark, td)
-    val staging = new Path(table, s"_staging-ts-${java.util.UUID.randomUUID}")
-    keys.coalesce(1).write.parquet(staging.toString)
-    f.mkdirs(td)
-    val names = f.listStatus(staging)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val target = new Path(td, s"${java.util.UUID.randomUUID}.parquet")
-        require(f.rename(s.getPath, target), s"failed to stage ${s.getPath}")
-        target.getName
-      }.toSeq
-    f.delete(staging, true)
-    names
-  }
-
-  def commitDeleteLazy(spark: SparkSession, table: String, keys: Seq[Long],
-      keyCol: String): (Long, Int) = {
-    import spark.implicits._
-    if (keys.isEmpty) return (currentVersion(spark, table), 0)
-    commitDeleteLazyKeys(spark, table, keys.distinct.toDF(keyCol))
-  }
-
-  /** One-column-DataFrame variant of [[commitDeleteLazy]] — any key type
-    * (string user ids, dates), and the key list never lands on the
-    * driver: the frame stages straight into the tombstone sidecar, so an
-    * erasure job can tombstone the OUTPUT OF A QUERY
-    * (`read(t).filter(pred).select(k)`) at 100 TB. The frame's single
-    * column names the key column. NULL keys are dropped (a NULL key
-    * matches no row in the read-side anti-join). Returns (new version,
-    * distinct keys tombstoned).
-    */
-  def commitDeleteLazyKeys(spark: SparkSession, table: String,
-      keys: DataFrame): (Long, Int) = {
-    require(keys.columns.length == 1,
-      s"tombstone keys must be a one-column frame, got " +
-        keys.columns.mkString("(", ", ", ")"))
-    val keyCol = keys.columns.head
-    val distinctKeys = keys.na.drop().distinct().localCheckpoint(true)
-    val n = distinctKeys.count()
-    if (n == 0) return (currentVersion(spark, table), 0)
-    val newFiles = stageTombstoneSidecar(spark, table, distinctKeys)
-    transact(spark, table, "deleteLazy",
-        newFiles.map(new Path(tombstoneDir(table), _))) { m =>
-      require(m.version > 0, s"no table at $table to delete from")
-      m.tombstoneCol.foreach(existing => require(existing == keyCol,
-        s"pending tombstones of $table are keyed on $existing, not $keyCol" +
-          " — materialize (OPTIMIZE) before switching key columns"))
-      Claim(m.copy(tombstones = m.tombstones ++ newFiles,
-        tombstoneCol = Some(keyCol)), Nil, v => (v, n.toInt))
-    }
-  }
-
-  /** Refuse a batch that re-uses a pending tombstoned key (see
-    * [[commitDeleteLazy]] — the read filter would swallow the new row).
-    * One bounded broadcast semi-join; free when no tombstones exist.
-    */
-  private def refuseTombstonedKeys(spark: SparkSession, table: String,
-      m: Manifest, batch: DataFrame): Unit =
-    tombstoneKeys(spark, table, m).foreach { case (kc, keys) =>
-      if (batch.columns.contains(kc)) {
-        val clash = batch
-          .join(org.apache.spark.sql.functions.broadcast(keys), Seq(kc),
-            "left_semi").count()
-        require(clash == 0,
-          s"append to $table re-uses $clash pending-tombstoned $kc key(s)" +
-            " — the merge-on-read filter would swallow the new rows;" +
-            " OPTIMIZE to materialize the deletes first, or commitMerge")
-      }
     }
 
   /** Append `batch` as a new snapshot version. Data lands before the
@@ -1391,11 +1238,11 @@ object Snapshots {
     * `OptimisticTransaction` / Iceberg's `TableOperations.commit(base,
     * metadata)`. Every claim is stamped with `op` and the claim instant.
     *
-    * `staged` are files written ONCE before the loop (an append's data,
-    * a lazy delete's sidecar) and re-referenced by every attempt; they
-    * are reclaimed whenever the loop exits without committing them — a
-    * refusal, a Skip, or exhausted attempts — so no exit strands
-    * unreferenced files for vacuum to find.
+    * `staged` are files written ONCE before the loop (an append's data)
+    * and re-referenced by every attempt; they are reclaimed whenever the
+    * loop exits without committing them — a refusal, a Skip, or
+    * exhausted attempts — so no exit strands unreferenced files for
+    * vacuum to find.
     */
   private def transact[A](spark: SparkSession, table: String, op: String,
       staged: Seq[Path] = Nil)(attempt: Manifest => Step[A]): A = {
@@ -1525,20 +1372,15 @@ object Snapshots {
 
     /** Re-validate against `m`, the head this attempt claims over, and
       * return the schema to declare. The pre-staging checks ran against
-      * an older head, but the claim CARRIES the new head's tombstones
-      * and constraints: a lazy delete or ADD CONSTRAINT landing while we
-      * staged must re-validate here, or the append could resurrect a
-      * freshly-tombstoned key (the read-side anti-join would silently
-      * swallow the new rows) or land a violating batch under a manifest
-      * that claims the constraint holds. The schema re-evolution is a
+      * an older head, but the claim CARRIES the new head's constraints:
+      * an ADD CONSTRAINT landing while we staged must re-validate here,
+      * or the append could land a violating batch under a manifest that
+      * claims the constraint holds. The schema re-evolution is a
       * re-validation too: a widen landing mid-stage can make the batch's
       * types illegal. Overwrite RESETS the schema, so the head schema
       * neither conforms its checks nor evolves it.
       */
     def revalidate(m: Manifest): types.StructType = {
-      if (!replace && (m.tombstones != validated.tombstones ||
-          m.tombstoneCol != validated.tombstoneCol))
-        refuseTombstonedKeys(spark, table, m, batch)
       if (m.checks != validated.checks)
         enforceChecks(batch, m.checks, table,
           if (replace) None else m.schema)
@@ -1568,7 +1410,6 @@ object Snapshots {
     val batch = if (replace) batch0 else fillWriteDefaults(batch0, head.schema)
     if (!replace) {
       evolveSchema(head.schema, batch.schema)
-      refuseTombstonedKeys(spark, table, head, batch)
       refuseDroppedColumns(batch, table, head)
     }
     // overwrite RESETS the declared schema, so the head schema must not
@@ -1589,23 +1430,21 @@ object Snapshots {
     val staged = stageBatch(spark, table, op, batch0, replace)
     transact(spark, table, op, staged.paths) { m =>
       val schema = Some(staged.revalidate(m))
-      // overwrite REPLACES the data state: pending tombstones, the
-      // dropped-name ledger and the colmap go with the old files; an
-      // append carries them (the re-validation keeps reads correct)
+      // overwrite REPLACES the data state: the dropped-name ledger and
+      // the colmap go with the old files; an append carries them (the
+      // re-validation keeps reads correct)
       claim(
         if (replace) m.copy(schema = schema, files = staged.files,
-          tombstones = Nil, dropped = Nil, colmap = Map.empty)
+          dropped = Nil, colmap = Map.empty)
         else m.copy(schema = schema, files = m.files ++ staged.files))
     }
   }
 
-  /** Spec hooks: (candidate files actually probed/read, total candidate
-    * files) of the last stats-pruned copy-on-write probe ([[cowApply]])
-    * and the last lazy-delete feed leg ([[rowDiff]]). None until either
-    * path runs.
+  /** Spec hook: (candidate files actually probed/read, total candidate
+    * files) of the last stats-pruned copy-on-write probe ([[cowApply]]).
+    * None until it runs.
     */
   @volatile private[graft] var lastCowProbePruned: Option[(Int, Int)] = None
-  @volatile private[graft] var lastTombLegPruned: Option[(Int, Int)] = None
 
   /** Spec hook: (candidate files probed, total files) of the last
     * predicate-driven DELETE/UPDATE probe (stats-pruned when the
@@ -1699,21 +1538,13 @@ object Snapshots {
     *      column key's set is collected with the probe's filter, so a
     *      MERGE runs three jobs (key collect, probe, staged write), and
     *      two when the change set is a batch of local rows, whose keys
-    *      collect with no job;
-    *   4. tombstones: pending tombstone headers CARRY forward, except
-    *      keys the change set re-asserts — the rows of those keys die by
-    *      vector too (a second probe leg on the tombstone column), and
-    *      the keys leave the tombstone set, so a re-inserted key is never
-    *      swallowed by the read-side anti-join. When the change set lacks
-    *      the tombstone key column entirely, conforming null-pads it and
-    *      NULLs re-assert nothing.
+    *      collect with no job.
     *
     * `changes` must already be conformed to `schema` (plus the optional
     * delete-flag column); `keys` must be unique within `changes`.
     * Returns the next manifest (declaring `schema`) and the files this
-    * pass staged — data, the vector file and any re-keyed tombstone
-    * sidecar — for the commit loop to reclaim on a lost claim
-    * (carried-forward files are never touched).
+    * pass staged — data and the vector file — for the commit loop to
+    * reclaim on a lost claim (carried-forward files are never touched).
     */
   private def cowApply(spark: SparkSession, table: String,
       m: Manifest, schema: types.StructType, changes0: DataFrame,
@@ -1722,12 +1553,11 @@ object Snapshots {
     val files = m.files
     def dataPaths(ns: Seq[String]) = ns.map(new Path(dataDir(table), _))
     // ONE materialization of the (bounded-by-contract) change set: the
-    // pass consumes it several times — key collect/probe, the staged
-    // write, the tombstone re-assert legs — and in feed mode the lazy
-    // plan is a whole rowDiff join that must not re-execute per
-    // consumer. The checkpoint is LAZY: its first consumer (the key
-    // collect below, for single-column keys) materializes it inside its
-    // own job. It also cuts lineage to an in-memory RDD, so the
+    // pass consumes it several times — key collect/probe and the staged
+    // write — and in feed mode the lazy plan is a whole rowDiff join that
+    // must not re-execute per consumer. The checkpoint is LAZY: its first
+    // consumer (the key collect below, for single-column keys)
+    // materializes it inside its own job. It also cuts lineage to an in-memory RDD, so the
     // positioned probes read one file source only.
     // A deterministic batch of local rows is already materialized,
     // holds no file source, and gives up its keys with no job: it is
@@ -1741,8 +1571,7 @@ object Snapshots {
     val colmap = m.colmap
     if (files.isEmpty) {
       val staged = stageData(spark, upserts, table, colmap, m.partitions)
-      return (m.copy(schema = Some(schema), files = staged, tombstones = Nil),
-        dataPaths(staged))
+      return (m.copy(schema = Some(schema), files = staged), dataPaths(staged))
     }
     // single-column keys (the common case) probe via a key set when the
     // touch-set is bounded: the predicate pushes into the parquet scan
@@ -1756,66 +1585,42 @@ object Snapshots {
           .filter(_.size <= FileSkipping.MaxPruneKeys)
       else None
     lazy val touched = changes.select(keys.map(col): _*).distinct()
-    // pending-tombstone keys the change set re-asserts (bounded × bounded)
-    val tk = tombstoneKeys(spark, table, m)
-    val reasserted = tk.map { case (kc, tkeys) =>
-      kc -> tkeys.join(broadcast(
-          changes.select(col(kc)).filter(col(kc).isNotNull).distinct()),
-        Seq(kc), "left_semi").localCheckpoint(true)
-    }.filter(_._2.limit(1).count() > 0)
     // pruned probe: the candidate file set shrinks DRIVER-SIDE before
     // the scan — on a z-ordered table a small touch-set probes a
     // handful of files, so the probe itself costs O(candidate files),
-    // not O(table). Each leg prunes on ITS join column (the merge keys
-    // vs the tombstone column), never one leg's candidates standing in
-    // for the other's.
-    def pruneByKeys(kc: String, frame: DataFrame) = FileSkipping.pruneByKeys(
-      spark, dataDir(table), files, m.schema, kc, frame, colmap,
-      m.partitions).kept
-    val candT = fastVals match {
+    // not O(table)
+    val cand = fastVals match {
       case Some(vals) => FileSkipping.prune(spark, dataDir(table), files,
         m.schema, Seq(org.apache.spark.sql.sources.In(keys.head, vals.toArray)),
         colmap, m.partitions).kept
-      case None => pruneByKeys(keys.head, touched.select(col(keys.head)))
+      case None => FileSkipping.pruneByKeys(spark, dataDir(table), files,
+        m.schema, keys.head, touched.select(col(keys.head)), colmap,
+        m.partitions).kept
     }
-    // the probes read the vectors' live rows WITH tombstoned ones: a
-    // tombstoned row a change-set key matches is dead either way, and
-    // the re-assert leg must find exactly those rows
-    def positioned(cand: Seq[String]) = readWithSchema(spark, table, cand,
-      m.schema, colmap, DeletionVectors.of(spark, table, m.dvs, cand),
-      positions = true)
-    def probeOf(cand: Seq[String], frame: DataFrame,
-        on: Seq[String]): Option[DataFrame] =
-      if (cand.isEmpty) None
-      else Some(positioned(cand).join(broadcast(frame), on, "left_semi"))
+    lazy val positioned = readWithSchema(spark, table, cand, m.schema,
+      colmap, DeletionVectors.of(spark, table, m.dvs, cand), positions = true)
     val keyType = schema(keys.head).dataType
-    val probeT = fastVals match {
+    val probe = fastVals match {
+      case _ if cand.isEmpty => None
       case Some(vals) =>
-        if (candT.isEmpty || vals.isEmpty) None
+        if (vals.isEmpty) None
         else {
           // a set lookup needs the key's type in the files, as the head
           // declares it, to be the change set's: a legacy head declares
           // none, and a widening MERGE changes it
           val sameType = m.schema.exists(_.fields.exists(f =>
             f.name == keys.head && f.dataType == keyType))
-          Some(positioned(candT)
+          Some(positioned
             .filter(if (sameType) inSet(keys.head, keyType, vals)
               else col(keys.head).isInCollection(vals)))
         }
-      case None => probeOf(candT, touched, keys)
+      case None => Some(positioned.join(broadcast(touched), keys, "left_semi"))
     }
-    val (candR, probeR) = reasserted match {
-      case Some((kc, r)) =>
-        val c = pruneByKeys(kc, r)
-        (c, probeOf(c, r, Seq(kc)))
-      case None => (Nil, None)
-    }
-    lastCowProbePruned = Some(((candT ++ candR).distinct.size, files.size))
-    val dead = (probeT.toSeq ++ probeR.toSeq)
-      .map(_.select(DeletionVectors.FileCol, DeletionVectors.RowCol))
-      .reduceOption(_ union _)
+    lastCowProbePruned = Some((cand.size, files.size))
+    val dead = probe
       .map(p => probedPositions(spark, table, files,
-        DeletionVectors.positionsOf(p)))
+        DeletionVectors.positionsOf(
+          p.select(DeletionVectors.FileCol, DeletionVectors.RowCol))))
       .getOrElse(Map.empty)
     val kill = killRows(spark, table, m, dead)
     // a batch of local rows is small by construction: it lands as one
@@ -1824,25 +1629,8 @@ object Snapshots {
     val newFiles = stageData(spark,
       kill.survivors.fold(batch)(sv => batch.unionByName(conform(sv, schema))),
       table, colmap, m.partitions)
-    val (tombs, tombCol, stagedTombs) = (tk, reasserted) match {
-      case (None, _) => (Nil, None, Nil)
-      case (Some(_), None) => // untouched pending state carries verbatim
-        (m.tombstones, m.tombstoneCol, Nil)
-      case (Some((kc, tkeys)), Some(_)) =>
-        // drop the re-asserted keys: their rows just died by vector
-        val remaining = tkeys.join(broadcast(
-            changes.select(col(kc)).filter(col(kc).isNotNull).distinct()),
-          Seq(kc), "left_anti")
-        if (remaining.limit(1).count() == 0) (Nil, None, Nil)
-        else {
-          val staged = stageTombstoneSidecar(spark, table, remaining)
-          (staged, Some(kc), staged)
-        }
-    }
-    (kill(m).copy(schema = Some(schema), files = kill(m).files ++ newFiles,
-        tombstones = tombs, tombstoneCol = tombCol),
-      dataPaths(newFiles) ++ kill.staged ++
-        stagedTombs.map(new Path(tombstoneDir(table), _)))
+    (kill(m).copy(schema = Some(schema), files = kill(m).files ++ newFiles),
+      dataPaths(newFiles) ++ kill.staged)
   }
 
   /** What a row-level commit does with the rows it kills. `gone` are the
@@ -1863,8 +1651,8 @@ object Snapshots {
     * rows). Each affected entry's cumulative vector is its old one plus
     * the new positions; past [[DeletionVectors.MaxDeadFraction]] of the
     * file's rows (its footer count) the entry is re-written instead —
-    * its live rows under the cumulative vector and `m`'s tombstones
-    * become `survivors` — and a file with no live row left just leaves.
+    * its live rows under the cumulative vector become `survivors` — and
+    * a file with no live row left just leaves.
     * The rest get their vectors in ONE vector file, written here on the
     * driver with no Spark job.
     */
@@ -1887,8 +1675,8 @@ object Snapshots {
       rewrite.get(e).exists(_.getLongCardinality < rows(e)))
     val survivors =
       if (reread.isEmpty) None
-      else Some(applyTombstones(spark, table, m, readWithSchema(spark, table,
-        reread, m.schema, m.colmap, reread.map(e => e -> rewrite(e)).toMap)))
+      else Some(readWithSchema(spark, table, reread, m.schema, m.colmap,
+        reread.map(e => e -> rewrite(e)).toMap))
     val vf = if (vectored.isEmpty) None
       else Some(DeletionVectors.write(spark, table, vectored))
     Kill(rewrite.keySet, survivors,
@@ -1920,13 +1708,11 @@ object Snapshots {
     * 100 TB table stages the 10 rows and a vector file, never a data
     * file it did not write. A file whose dead share passes
     * [[DeletionVectors.MaxDeadFraction]] is re-written without its dead
-    * rows instead. Pending lazy-delete tombstones carry forward, minus
-    * any key the batch re-inserts (the legitimate resurrection path: the
-    * key's rows die by vector and the key leaves the set).
+    * rows instead.
     *
     * UNLIKE append, the result DEPENDS on the head it was computed
     * against, so a lost claim cannot simply retry the manifest: the
-    * loser deletes its orphaned files (and any sidecar it staged),
+    * loser deletes its orphaned files (and the vector file it staged),
     * RE-READS the new head, RECOMPUTES the merge and tries again — full
     * optimistic concurrency (Delta-style), serializing concurrent merges
     * instead of losing one. Returns the committed version.
@@ -1969,10 +1755,12 @@ object Snapshots {
     * serialize instead of losing rows.
     *
     * Retention semantics (the GDPR fine print): the delete is LOGICAL at
-    * commit — prior versions still reference the old files (that is what
-    * time travel means), so PHYSICAL erasure is `commitDelete` followed
-    * by [[vacuum]] with a retention window of 0/1; until the vacuum, the
-    * rows are readable via time travel by design.
+    * commit — a vectored row stays in its data file, and prior versions
+    * still reference the old files (that is what time travel means). So
+    * PHYSICAL erasure is `commitDelete`, then OPTIMIZE ([[compactData]],
+    * which re-writes every vectored file without its dead rows and drops
+    * the vectors), then [[vacuum]] with a retention window of 0/1; until
+    * the vacuum, the rows are readable via time travel by design.
     *
     * Returns (committed version, rows deleted) — (head, 0) when no live
     * row holds any of the keys (no-op: no new version).
@@ -2063,8 +1851,8 @@ object Snapshots {
     * serialize instead of losing rows. (head, 0) when no live row
     * matches.
     *
-    * The probe reads the APPLIED view (vectors and tombstones): already
-    * dead rows neither count nor die again. The rows changed (predicate
+    * The probe reads the APPLIED view (the vectors): already dead rows
+    * neither count nor die again. The rows changed (predicate
     * TRUE) are the killed positions, so counting them costs nothing: a
     * DELETE runs one job (the probe) and an UPDATE two (probe and
     * staged write).
@@ -2127,12 +1915,10 @@ object Snapshots {
     require(targetFiles >= 0, "targetFiles must be >= 0 (0 = size-derived)")
     val f = fs(spark, dataDir(table))
     transact(spark, table, "optimize") { m =>
-      // pending tombstones and deletion vectors always compact
-      // (materializing merge-on-read deletes is the point, whatever the
-      // file count); otherwise the minFiles floor refuses pure write
-      // amplification
-      if (m.version == 0 || (m.files.size < minFiles && m.tombstones.isEmpty &&
-          m.dvs.isEmpty))
+      // deletion vectors always compact (physically dropping dead rows is
+      // the point, whatever the file count); otherwise the minFiles floor
+      // refuses pure write amplification
+      if (m.version == 0 || (m.files.size < minFiles && m.dvs.isEmpty))
         Skip(None)
       else {
         // targetFiles == 0 → SIZE-DERIVED: aim for ~targetFileBytes per
@@ -2159,11 +1945,11 @@ object Snapshots {
         // the full rewrite NORMALIZES physical names (stage the logical
         // frame verbatim) and re-stages under the partition transform
         // (layout policy); every surviving file is re-staged under the
-        // declared schema, so tombstones, deletion vectors, the
-        // dropped-name ledger and the colmap all clear
+        // declared schema, so deletion vectors, the dropped-name ledger
+        // and the colmap all clear
         val staged = stageData(spark, rewritten, table, Map.empty,
           m.partitions)
-        Claim(m.copy(files = staged, tombstones = Nil, dropped = Nil,
+        Claim(m.copy(files = staged, dropped = Nil,
           colmap = Map.empty, dvs = Map.empty),
           staged.map(new Path(dataDir(table), _)),
           v => Some(v))
@@ -2185,9 +1971,8 @@ object Snapshots {
     * no shuffle, so the pack is one Spark job, and each packed file
     * keeps its input rows' order.
     *
-    * Pending lazy-delete tombstones CARRY FORWARD: the rewritten slice
-    * materializes its share (rows filtered out of the packed output),
-    * carried files keep the read-side anti-join via the carried headers
+    * Deletion vectors of the packed slice go with its entries (dead rows
+    * are filtered out of the packed output); carried files keep theirs
     * — full [[compactData]] remains the total materialization point.
     * No-op (None) below `minSmall` small files — packing two files is
     * pure write amplification. Returns the committed version.
@@ -2210,9 +1995,9 @@ object Snapshots {
       else {
         val nOut = math.max(1,
           math.ceil(small.map(sizes).sum.toDouble / targetFileBytes).toInt)
-        // the packed slice is read APPLIED (its vectored and tombstoned
-        // rows leave physically, and its vectors go with its entries);
-        // carried files keep relying on the carried headers
+        // the packed slice is read APPLIED (its vectored rows leave
+        // physically, and its vectors go with its entries); carried files
+        // keep their vectors
         val packed = readLive(spark, table, m, small).coalesce(nOut)
         val staged = stageData(spark, packed, table, m.colmap, m.partitions)
         // PARTIAL pack: carried files may still hold pre-drop values, so
@@ -2373,10 +2158,9 @@ object Snapshots {
   }
 
   /** True when the step `fromV` → `toV` only ADDED rows: no file left,
-    * the pending tombstones are the same, and every file of `fromV`
-    * keeps the deletion vector it had. A vectored DELETE or MERGE, like
-    * a lazy delete, removes no file but is NOT append-only: its window
-    * must flow through [[rowDiff]]. The test every incremental consumer
+    * and every file of `fromV` keeps the deletion vector it had. A
+    * vectored DELETE or MERGE removes no file but is NOT append-only: its
+    * window must flow through [[rowDiff]]. The test every incremental consumer
     * runs before choosing the added-files transport
     * ([[incrementalRead]]); metadata-only, two manifest reads.
     */
@@ -2385,7 +2169,7 @@ object Snapshots {
     val (from, to) = (manifestAt(spark, table, fromV),
       manifestAt(spark, table, toV))
     val kept = to.files.toSet
-    from.files.forall(kept) && from.tombstones == to.tombstones &&
+    from.files.forall(kept) &&
       from.files.forall(e => from.dvs.get(e) == to.dvs.get(e))
   }
 
@@ -2403,10 +2187,9 @@ object Snapshots {
       toV: Long): DataFrame = {
     require(fromV <= toV, s"fromV $fromV > toV $toV")
     require(appendOnly(spark, table, fromV, toV),
-      s"step v$fromV->v$toV rewrote or deleted rows (a file left, the " +
-        "lazy-delete tombstones changed, or a file gained a deletion " +
-        "vector) — not append-only; use rowDiff(keys) for a row-exact " +
-        "change feed")
+      s"step v$fromV->v$toV rewrote or deleted rows (a file left, or a " +
+        "file gained a deletion vector) — not append-only; use " +
+        "rowDiff(keys) for a row-exact change feed")
     // the TO-version's declared schema: an evolution step's feed carries
     // the new columns, and pre-evolution consumers see a superset schema;
     // an added file vectored within the window serves its live rows
@@ -2450,13 +2233,12 @@ object Snapshots {
     // BOTH sides read under the to-version's declared schema: files from
     // before an added column serve it as NULL, so a backfill rewrite
     // classifies as `update` instead of failing the column resolution.
-    // Each side is read at ITS version's APPLIED state (tombstones
-    // filtered): a row dead at fromV must not feed a pre-image, and a
-    // row dead at toV must not feed a post-image — e.g. a window that
-    // only MATERIALIZES pending tombstones (OPTIMIZE) nets to an empty
-    // feed instead of re-reporting the deletes.
-    // Deletion vectors work the same way: a side's files serve their
-    // live rows at that side's vectors, and a CARRIED file whose vector
+    // Each side is read at ITS version's APPLIED state: a row dead at
+    // fromV must not feed a pre-image, and a row dead at toV must not
+    // feed a post-image — e.g. a window that only re-writes vectored
+    // files (OPTIMIZE) nets to an empty feed instead of re-reporting the
+    // deletes. A side's files serve their live rows at that side's
+    // vectors, and a CARRIED file whose vector
     // changed contributes the positions that died in the window as
     // pre-images (read at fromV) and any that came back (a RESTORE past
     // a vectored delete) as post-images (read at toV) — a vectored MERGE
@@ -2483,49 +2265,11 @@ object Snapshots {
         Some(only).filter(_.nonEmpty).map(o => readWithSchema(spark, table,
           carried.filter(o.contains), toSchema, toColmap, only = o)))
         .reduceOption(_ unionByName _)
-        .map(applyTombstones(spark, table, m, _))
     val pre = side(from, removedFiles(spark, table, fromV, toV),
       minus(toDv, fromDv))
     val post = side(to, addedFiles(spark, table, fromV, toV),
       minus(fromDv, toDv))
-    // lazy deletes COMMITTED in the window touch no files, so the file
-    // legs can't see them: rows of CARRIED files matching the window's
-    // NEW tombstone keys are emitted as `delete` pre-images. Restricted
-    // to carried files — removed-file rows are already classified above.
-    val tombLeg: Option[DataFrame] = tombstoneKeys(spark, table, to)
-      .flatMap { case (kc, toKeys) =>
-        if (carried.isEmpty) None
-        else {
-          // same key column at both ends → subtract the old set; a
-          // differing column means fromV's tombstones were materialized
-          // in-window (their rows left via file rewrites) — all of toV's
-          // keys are new
-          val newKeys = tombstoneKeys(spark, table, from) match {
-            case Some((fkc, fromKeys)) if fkc == kc =>
-              toKeys.exceptAll(fromKeys)
-            case _ => toKeys
-          }
-          // the feed of an O(keys) lazy-delete commit must not cost
-          // O(table): when an index covers the tombstone column, the
-          // carried set prunes driver-side to files that can hold a
-          // deleted key — on a z-ordered, stats-manifested table the
-          // pre-images come from a handful of files, not every carried one
-          val cand = FileSkipping.pruneByKeys(spark, dataDir(table), carried,
-            toSchema, kc, newKeys, toColmap, to.partitions).kept
-          lastTombLegPruned = Some((cand.size, carried.size))
-          if (cand.isEmpty) None
-          else Some(readWithSchema(spark, table, cand, toSchema, toColmap,
-              DeletionVectors.of(spark, table, to.dvs, cand))
-            .join(broadcast(newKeys), Seq(kc), "left_semi")
-            .withColumn("change_type", lit("delete")))
-        }
-      }
-    def withTombLeg(base: DataFrame): DataFrame = tombLeg match {
-      case None => base
-      case Some(t) =>
-        base.unionByName(t.select(base.columns.map(col).toIndexedSeq: _*))
-    }
-    withTombLeg((pre, post) match {
+    (pre, post) match {
       case (None, None) =>
         read(spark, table, Some(toV)).limit(0)
           .withColumn("change_type", lit(""))
@@ -2574,7 +2318,7 @@ object Snapshots {
               col("__e").getField("img").getField(c).as(c)) :+
               col("__e").getField("ct").as("change_type"): _*)
         }
-    })
+    }
   }
 
   // ------------------------------------------------------------------
@@ -2683,7 +2427,7 @@ object Snapshots {
     * `filters`: the candidate set is the VERSION's file list (never a
     * directory listing, so orphans and other versions' files can't leak
     * in), and every read honors the version's DECLARED schema and its
-    * pending tombstones, exactly like the plain read. `report` receives
+    * deletion vectors, exactly like the plain read. `report` receives
     * the prune and the version's file count (the spec hooks). An empty
     * selection keeps the schema.
     */
@@ -2789,8 +2533,8 @@ object Snapshots {
     * the sidecar (no false negatives by the Bloom contract; false
     * positives only cost an extra file read). Composes with snapshot
     * semantics exactly like [[readPruned]]: the candidate set is the
-    * VERSION's file list, the declared schema applies, pending
-    * tombstones filter, pinned versions stay prunable. The keys are an
+    * VERSION's file list, the declared schema applies, deletion
+    * vectors filter, pinned versions stay prunable. The keys are an
     * `In` probe for [[FileSkipping]], so partition dirs and stats prune
     * too; each key hashes as a literal cast to the column's declared
     * type, exactly as the index build hashed the column.
@@ -2948,10 +2692,10 @@ object Snapshots {
     * (streamId, batchId) watermark semantics as [[commitStreamAppend]]
     * — state and data in ONE atomic manifest claim, idempotent under
     * Structured Streaming's restart replay. Validation (schema
-    * evolution, CHECK constraints, tombstone refusal, dropped-name
-    * ledger) runs by READING THE STAGED FILES BACK — a distributed scan
-    * of only the new batch, O(batch) at any table size; any refusal
-    * deletes the staged files before surfacing.
+    * evolution, CHECK constraints, dropped-name ledger) runs by READING
+    * THE STAGED FILES BACK — a distributed scan of only the new batch,
+    * O(batch) at any table size; any refusal deletes the staged files
+    * before surfacing.
     *
     * `stagedColmap` is the column mapping the WRITERS staged under
     * (fetched when the write was built): a rename that lands between
@@ -2988,7 +2732,6 @@ object Snapshots {
               "select them explicitly (or sink via foreachBatch + " +
               "commitStreamAppend)")
         }
-        refuseTombstonedKeys(spark, table, m, batch)
         refuseDroppedColumns(batch, table, m)
         enforceChecks(batch, m.checks, table, m.schema)
         requireLayout(m, table, "stream append", Some(stagedColmap),
@@ -3007,17 +2750,17 @@ object Snapshots {
     * `replaced` (the files the operation's scan read — Spark rewrote
     * their surviving rows), every other file carries by name, one
     * atomic claim publishes. Validation mirrors the staged stream
-    * commit: checks/tombstoned-keys/dropped-columns enforced on the
-    * staged rows read back through the writers' colmap; a racing
-    * RENAME or partition-transform change refuses (stale physical
-    * names / dir values).
+    * commit: checks and dropped columns enforced on the staged rows
+    * read back through the writers' colmap; a racing RENAME or
+    * partition-transform change refuses (stale physical names / dir
+    * values).
     *
     * CONFLICTS refuse, never merge: if any replaced file is no longer
     * referenced at claim time (a concurrent rewrite/delete/OPTIMIZE
-    * churned it), its deletion vector changed since the scan at version
-    * `scannedAt`, or pending tombstones appeared since the scan, the
-    * staged files are reclaimed and a ConcurrentModificationException
-    * surfaces — the Delta/Iceberg write-conflict discipline. Racing
+    * churned it) or its deletion vector changed since the scan at
+    * version `scannedAt`, the staged files are reclaimed and a
+    * ConcurrentModificationException surfaces — the Delta/Iceberg
+    * write-conflict discipline. Racing
     * APPENDS are fine (their files are not replaced; the operation ran
     * on its snapshot — ordinary snapshot isolation).
     */
@@ -3052,10 +2795,6 @@ object Snapshots {
               s"commit: ${moved.size} scanned file(s) gained deletion " +
               "vectors since the scan — re-run the statement")
       }
-      if (m.tombstones.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"row-level write to $table raced a lazy DELETE — pending " +
-            "tombstones landed after the operation's scan")
       val schema =
         if (staged.isEmpty) m.schema // all scanned rows deleted
         else {
@@ -3092,9 +2831,9 @@ object Snapshots {
       // marks AND constraints carry from the pre-restore head: the undo
       // rewinds DATA, not ingestion state or declared policy (restored
       // rows predating a constraint are an operator decision — commits
-      // after the restore enforce as usual). The target's tombstones and
-      // dropped-name ledger are DATA state, restored with its files (a
-      // rollback past a lazy delete resurrects; a pre-drop target
+      // after the restore enforce as usual). The target's deletion
+      // vectors and dropped-name ledger are DATA state, restored with its
+      // files (a rollback past a delete resurrects; a pre-drop target
       // legitimately has the column back)
       if (m.version == toVersion) Skip(m.version) // already that state
       else claim(target.copy(marks = m.marks, checks = m.checks))
@@ -3113,22 +2852,20 @@ object Snapshots {
     * containing `/` resolves as its own URI; bare names stay relative to
     * the table's `data/` dir — Hadoop's `Path(parent, child)` resolution
     * makes every existing read/probe/census site handle both forms).
-    * Divergence is natural copy-on-write: the clone's DML rewrites ONLY
-    * the foreign files physically holding touched keys into the clone's
-    * own `data/` dir (the [[cowApply]] carry logic treats foreign names
-    * like any other), appends land locally, and OPTIMIZE localizes
-    * everything it rewrites. The clone's VACUUM can never delete source
+    * Divergence stays local: the clone's DML kills rows of foreign files
+    * by deletion vectors in the clone's own `_deletes/` dir (the
+    * [[cowApply]] carry logic treats foreign names like any other),
+    * appends land locally, and OPTIMIZE localizes everything it
+    * rewrites. The clone's VACUUM can never delete source
     * bytes (it reconciles only its OWN `data/` listing), and a
     * clone-of-a-clone carries grandparent references verbatim.
     *
     * Carried state: declared schema, CHECK constraints, stream marks
     * (a stream switching its sink to the clone must not re-land batches
-    * the source already committed — same rationale as [[commitRestore]]),
-    * pending lazy-delete tombstones — their tiny key-list sidecars
-    * are COPIED (not referenced) so the source's OPTIMIZE/VACUUM
-    * materializing its own tombstones can't strand the clone's
-    * merge-on-read anti-join — and deletion vectors, re-written into one
-    * vector file of the clone's keyed by its own entries. The documented shallow-clone hazard is the
+    * the source already committed — same rationale as [[commitRestore]])
+    * and deletion vectors, re-written into one vector file of the
+    * clone's keyed by its own entries, so the source's VACUUM can never
+    * strand them. The documented shallow-clone hazard is the
     * same as Delta's: a VACUUM on the SOURCE that expires the cloned
     * version's files breaks the clone — deep-copy (CTAS) when the source
     * retention isn't under your control.
@@ -3151,16 +2888,6 @@ object Snapshots {
       // bare name (two-arg Path resolves the subdir)
       if (n.contains(":/") || n.startsWith("/")) n
       else f.makeQualified(new Path(dataDir(src), n)).toString
-    }
-    if (source.tombstones.nonEmpty) {
-      val td = tombstoneDir(dst)
-      val fd = fs(spark, td)
-      fd.mkdirs(td)
-      source.tombstones.foreach { n =>
-        org.apache.hadoop.fs.FileUtil.copy(f, new Path(tombstoneDir(src), n),
-          fd, new Path(td, n), false, true,
-          spark.sparkContext.hadoopConfiguration)
-      }
     }
     // deletion vectors re-key to the clone's qualified entries in ONE
     // vector file of its own, so the source's vacuum can never strand them
@@ -3232,8 +2959,8 @@ object Snapshots {
     *
     * The listing is one driver-side `listStatus` (O(landing-dir files),
     * no data reads for the decision); loaded bytes are read through the
-    * normal staging path so schema evolution, CHECK constraints, and
-    * tombstone refusal apply exactly as for any append. Returns
+    * normal staging path so schema evolution, CHECK constraints and the
+    * dropped-name ledger apply exactly as for any append. Returns
     * (committed version, files loaded, rows loaded) — version is the
     * unchanged head when nothing was new.
     */
@@ -3314,9 +3041,8 @@ object Snapshots {
     *     own head via the row-level CDC merge ([[cowApply]]) — the
     *     changed keys' REPLICA rows die by vector and only the changes
     *     stage, every replica file carries by name, so destination IO
-    *     tracks churn too (never replica size), and the replica's own pending
-    *     lazy-delete tombstones survive the sync (minus keys the feed
-    *     itself re-asserts);
+    *     tracks churn too (never replica size), and the replica's own
+    *     deletes of keys the feed does not touch stay deleted;
     *   - `rebuild` — the replica lagged past the source's vacuum
     *     retention (its cursor's manifest is gone): one full re-mirror
     *     of the source head, then incremental syncs resume;
@@ -3356,12 +3082,12 @@ object Snapshots {
           if (!precise || m.version == 0 || m.files.isEmpty) {
             // rebuild: one full re-mirror of the source head (the
             // replica lagged past retention, or is empty) — O(src) by
-            // definition; the new files carry no tombstones, ledger or
+            // definition; the new files carry no vectors, ledger or
             // colmap
             val state = read(spark, src, Some(srcHead))
             val files = stageData(spark, state, dst, Map.empty, m.partitions)
             (m.copy(schema = Some(state.schema), files = files,
-              tombstones = Nil, dropped = Nil, colmap = Map.empty),
+              dropped = Nil, colmap = Map.empty),
               files.map(new Path(dataDir(dst), _)))
           } else {
             // replica state evolves to the union of its own schema and
@@ -3429,20 +3155,18 @@ object Snapshots {
         now - st.getModificationTime >= minAgeMs && !referenced.contains(rel)
       }
       .map { case (p, rel, _) => if (!dryRun) f.delete(p, false); rel }
-    // tombstone sidecars and deletion-vector files age out exactly like
-    // data files: unreferenced by any retained manifest (materialized or
-    // folded by a re-write, or their version expired)
-    def sweep(dir: Path, referenced: Set[String]): Seq[String] =
-      if (!f.exists(dir)) Nil
-      else f.listStatus(dir).toSeq.filter(_.isFile)
+    // deletion-vector files age out exactly like data files: unreferenced
+    // by any retained manifest (folded by a re-write, or their version
+    // expired)
+    val dvDir = DeletionVectors.dir(table)
+    val liveVectors = kept.flatMap(_.dvs.values).toSet
+    val vectorsDeleted =
+      if (!f.exists(dvDir)) Nil
+      else f.listStatus(dvDir).toSeq.filter(_.isFile)
         .filter(s => now - s.getModificationTime >= minAgeMs)
-        .map(_.getPath).filterNot(p => referenced.contains(p.getName))
+        .map(_.getPath).filterNot(p => liveVectors.contains(p.getName))
         .map { p => if (!dryRun) f.delete(p, false); p.getName }
-    val tombsDeleted = sweep(tombstoneDir(table),
-      kept.flatMap(_.tombstones).toSet)
-    val vectorsDeleted = sweep(DeletionVectors.dir(table),
-      kept.flatMap(_.dvs.values).toSet)
-    if (dryRun) return deleted ++ tombsDeleted ++ vectorsDeleted
+    if (dryRun) return deleted ++ vectorsDeleted
     // the new retention floor must stay resolvable after its delta-chain
     // bases vanish: when keepFrom's physical manifest is delta-encoded
     // and no checkpoint exists yet, write one (idempotent content — the
@@ -3463,6 +3187,6 @@ object Snapshots {
       // resolutions, or filesAt/time-travel would serve vacuumed state
       resolvedManifests.remove((tableKey, v))
     }
-    deleted ++ tombsDeleted ++ vectorsDeleted
+    deleted ++ vectorsDeleted
   }
 }

@@ -75,13 +75,16 @@ class BloomIndexSpec extends AnyFunSuite {
     assert(Snapshots.readPrunedByKeys(spark, c, "uid", Seq("user42"))
       .filter(col("uid") === "user42").count() == 1L)
     assert(Snapshots.lastBloomPruned.get._1 < 8)
-    // a lazy-deleted key stays deleted through the pruned read (the
-    // bloom may still hit its file; the tombstone anti-join filters)
-    Snapshots.commitDeleteLazyKeys(spark, t,
-      Seq("user42").toDF("uid"))
+    // a deleted key stays deleted through the pruned read: its file is
+    // vectored, not re-written, so the bloom still hits it and the
+    // deletion vector filters
+    val (v, n) = Snapshots.commitDelete(spark, t, Seq("user42"), "uid")
+    assert(n == 1L && Snapshots.filesAt(spark, t, v) ==
+      Snapshots.filesAt(spark, t, v - 1))
+    assert(Snapshots.vectorFilesAt(spark, t, v).nonEmpty)
     assert(Snapshots.readPrunedByKeys(spark, t, "uid", Seq("user42"))
       .filter(col("uid") === "user42").count() == 0L,
-      "bloom-pruned read resurrected a tombstoned key")
+      "bloom-pruned read resurrected a deleted key")
   }
 
   test("rewrite expiry + the maintenance leg: dead entries drop, new files re-cover") {

@@ -106,21 +106,25 @@ class CloneCopySpec extends AnyFunSuite {
     val root = freshRoot()
     val src = root + "/src"
     Snapshots.commitStreamAppend(spark,
-      (1L to 20L).map(i => (i, i)).toDF("id", "x"), src, "s1", 5L)
+      (1L to 20L).map(i => (i, i)).toDF("id", "x").coalesce(1), src, "s1",
+      5L)
     Snapshots.addCheckConstraint(spark, src, "pos", "x > 0")
-    Snapshots.commitDeleteLazy(spark, src, Seq(3L, 4L), "id")
+    Snapshots.commitDelete(spark, src, Seq(3L, 4L), "id")
     val dst = root + "/fork"
     Snapshots.cloneTable(spark, src, dst)
-    // pending lazy-delete tombstones filter the clone's reads
+    // the source's deletion vectors filter the clone's reads
     assert(Snapshots.read(spark, dst).count() == 18L)
-    // ...from the clone's OWN sidecar copy: deleting the source's
-    // tombstone dir must not break the clone (the source might OPTIMIZE
-    // + vacuum its materialized tombstones away at any time)
-    val srcTombs = new java.io.File(src, "_tombstones")
-    srcTombs.listFiles().foreach(_.delete())
+    // ...from the clone's OWN vector file: the source's OPTIMIZE +
+    // vacuum may drop its vector files at any time
+    val srcVectors = new java.io.File(src, "_deletes").list().toSet
+    val dstVectors = Snapshots.vectorFilesAt(spark, dst, 1L)
+    assert(dstVectors.nonEmpty && dstVectors.forall(n =>
+      new java.io.File(new java.io.File(dst, "_deletes"), n).isFile &&
+        !srcVectors(n)), s"clone vectors $dstVectors, source's $srcVectors")
+    new java.io.File(src, "_deletes").listFiles().foreach(_.delete())
     Snapshots.invalidateTable(dst)
     assert(Snapshots.read(spark, dst).count() == 18L,
-      "clone read depends on the source's tombstone sidecars")
+      "clone read depends on the source's vector files")
     // CHECK constraints carried: a violating append refuses
     intercept[Exception] {
       Snapshots.commitAppend(spark, Seq((99L, -1L)).toDF("id", "x"), dst)

@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.warehouse.Snapshots
 
 /** Pins how many Spark jobs each row-level commit (by deletion vectors)
-  * and maintenance commit runs on a table with no stats sidecar and no
-  * tombstones. Job count is the main cost
+  * and maintenance commit runs on a table with no stats sidecar. Job
+  * count is the main cost
   * of a commit at small scale (ROADMAP's cost fit), so a change that
   * adds a shuffle, an eager checkpoint or a recount to these paths
   * fails here before it shows in the benchmark.

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.warehouse.Snapshots
+import graft.warehouse.{Maintenance, Snapshots}
 
 /** Deletion vectors on every read path. The fixture is an in-place
   * converted table — two FOREIGN entries (qualified URIs of the
@@ -25,6 +25,12 @@ import graft.warehouse.Snapshots
   *   - shallow clone, deep clone (CTAS through the catalog), RESTORE;
   *   - the streaming source and `syncReplica`;
   *   - VACUUM, which reclaims unreferenced `_deletes/` files only.
+  *
+  * The cases after the fixture's are the merge-on-read contract on small
+  * one-file tables: OPTIMIZE as the physical-erasure point (by hand and
+  * by the maintenance policy), the change feed and replica sync across a
+  * keyed-delete window, string and NULL keys, and re-appending a deleted
+  * key.
   */
 class DeletionVectorSpec extends AnyFunSuite {
   import SparkTest._
@@ -49,6 +55,25 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
     df.select("id").as[Long].collect().toSet
+
+  /** A one-file table of `rows`: a delete of under half of them vectors
+    * the file instead of re-writing it.
+    */
+  private def oneFile(rows: Seq[(Long, String)]): String = {
+    val t = Files.createTempDirectory("graft_dv_mor").toString + "/t"
+    Snapshots.commitAppend(spark, rows.toDF("id", "v").coalesce(1), t)
+    t
+  }
+
+  /** The ids held by every parquet data file under `t`'s `data/` dir,
+    * read raw (no manifest, no vector): what is physically on disk.
+    */
+  private def rawIds(t: String): Set[Long] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(t, "data"))
+      .toArray.map(_.toString).filter(_.endsWith(".parquet"))
+      .filterNot(_.split("/").exists(c => c.startsWith("_") || c.startsWith(".")))
+    if (files.isEmpty) Set.empty else ids(spark.read.parquet(files.toSeq: _*))
+  }
 
   test("Spark's parquet v2 reader fills the row-index column by name") {
     val dir = Files.createTempDirectory("graft_dv_rowidx").toString + "/p"
@@ -88,7 +113,7 @@ class DeletionVectorSpec extends AnyFunSuite {
   }
 
   test("the catalog scan serves vectored versions: plain, runtime-filtered, aggregate-pushed") {
-    val (root, t, before, _) = fixture()
+    val (root, t, before, after) = fixture()
     spark.conf.set("spark.sql.catalog.dvcat",
       classOf[graft.sources.SnapshotCatalog].getName)
     spark.conf.set("spark.sql.catalog.dvcat.root", root)
@@ -96,6 +121,9 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(ids(q("SELECT id FROM dvcat.t")) == Live)
     assert(ids(q(s"SELECT id FROM dvcat.t VERSION AS OF $before")) ==
       Live ++ Doomed)
+    // the snapshot_at TVF reads through Snapshots.read
+    assert(q(s"SELECT count(*) FROM snapshot_at('$t', $after)")
+      .head.getLong(0) == 36L)
     assert(q("SELECT id, v FROM dvcat.t WHERE id < 20").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Live.filter(_ < 20).map(i => (i, 10 * i)))
@@ -283,5 +311,145 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(Snapshots.read(spark, t).filter(col("id") < 6L).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set(0L, 1L, 2L, 5L).map(_ -> -1L))
+  }
+
+  test("OPTIMIZE re-writes vectored files: vectors cleared, rows physically gone, vector file vacuumed") {
+    val t = oneFile((1L to 10L).map(i => (i, s"v$i")))
+    Snapshots.commitDelete(spark, t, Seq(2L, 4L), "id")
+    assert(Snapshots.vectorFilesAt(spark, t, 2L).nonEmpty)
+    assert(rawIds(t) == (1L to 10L).toSet, "a vectored row stays on disk")
+    // vectors compact even under the minFiles floor
+    val v = Snapshots.compactData(spark, t, targetFiles = 2, minFiles = 16)
+    assert(v.contains(3L))
+    assert(Snapshots.vectorFilesAt(spark, t, 3L).isEmpty)
+    // physically gone: the RAW head files no longer hold the rows
+    val raw = spark.read.parquet(Snapshots.filesAt(spark, t, 3L)
+      .map(n => s"$t/data/$n"): _*)
+    assert(ids(raw) == (1L to 10L).toSet -- Set(2L, 4L))
+    // vacuum reclaims the pre-OPTIMIZE file and the unreferenced vector
+    val deleted = Snapshots.vacuum(spark, t, keepVersions = 1)
+    assert(deleted.nonEmpty)
+    val vd = new java.io.File(s"$t/_deletes")
+    assert(!vd.exists() || vd.listFiles().isEmpty)
+    assert(rawIds(t) == (1L to 10L).toSet -- Set(2L, 4L))
+    assert(ids(Snapshots.read(spark, t)) == (1L to 10L).toSet -- Set(2L, 4L))
+  }
+
+  test("maintenance policy: deletion vectors trigger the scheduled OPTIMIZE, so vacuum erases the rows") {
+    val t = oneFile((1L to 6L).map(i => (i, s"v$i")))
+    Snapshots.commitDelete(spark, t, Seq(6L), "id")
+    val action = Maintenance.maintainIfNeeded(spark,
+      Maintenance.MaintenanceTarget(t, Maintenance.TableKind.Snapshot,
+        maxDataFiles = 1000, vacuumMinAgeMs = 0L))
+    assert(action.exists(_.contains("optimized")),
+      s"policy must re-write the vectored file, got $action")
+    assert(Snapshots.vectorFilesAt(spark, t,
+      Snapshots.currentVersion(spark, t)).isEmpty)
+    Snapshots.vacuum(spark, t, keepVersions = 1)
+    // every data file left on disk, read raw, holds no deleted key
+    assert(rawIds(t) == (1L to 5L).toSet)
+    assert(ids(Snapshots.read(spark, t)) == (1L to 5L).toSet)
+  }
+
+  test("change feed: a keyed-delete window emits delete pre-images; the OPTIMIZE re-write nets empty") {
+    val t = oneFile((1L to 6L).map(i => (i, s"v$i")))
+    Snapshots.commitDelete(spark, t, Seq(5L), "id") // v2
+    // append-only transport must refuse the vectored window
+    intercept[IllegalArgumentException] {
+      Snapshots.incrementalRead(spark, t, 1L, 2L)
+    }
+    val feed12 = Snapshots.rowDiff(spark, t, 1L, 2L, Seq("id")).collect()
+    assert(feed12.map(r => (r.getAs[Long]("id"),
+      r.getAs[String]("change_type"))).toSet == Set((5L, "delete")))
+    Snapshots.compactData(spark, t, targetFiles = 1, minFiles = 16) // v3
+    assert(Snapshots.rowDiff(spark, t, 2L, 3L, Seq("id")).count() == 0,
+      "re-writing already-reported deletes must not re-report them")
+    // and the full window reports the delete exactly once
+    assert(Snapshots.rowDiff(spark, t, 1L, 3L, Seq("id")).count() == 1)
+  }
+
+  test("a keyed delete over a stats-manifested table vectors exactly the 2 holding files") {
+    // 32 single-file key slabs (the layout a maintained, clustered table
+    // has) + a stats manifest on the key column
+    val t = Files.createTempDirectory("graft_dv_mor").toString + "/t"
+    (0 until 32).foreach { i =>
+      Snapshots.commitAppend(spark,
+        (0 until 10).map(j => (i * 10L + j, s"v$i-$j")).toDF("id", "v")
+          .coalesce(1), t)
+    }
+    Snapshots.extendStats(spark, t, Seq("id"))
+    // delete keys living in exactly 2 slabs — zero files re-written
+    val (v, _) = Snapshots.commitDelete(spark, t, Seq(55L, 171L), "id")
+    assert(Snapshots.filesAt(spark, t, v) == Snapshots.filesAt(spark, t, v - 1))
+    // the manifests: exactly the 2 holders gained vectors, one row each
+    assert(Snapshots.deadRowsAt(spark, t, v - 1).isEmpty)
+    val dead = Snapshots.deadRowsAt(spark, t, v)
+    assert(dead.size == 2 && dead.values.forall(_.getCardinality == 1),
+      s"vectored ${dead.size} of 32 files; want 2")
+    val feed = Snapshots.rowDiff(spark, t, v - 1, v, Seq("id")).collect()
+    assert(feed.map(r => (r.getAs[Long]("id"),
+      r.getAs[String]("change_type"))).toSet ==
+      Set((55L, "delete"), (171L, "delete")))
+  }
+
+  test("a deleted key re-appends and is served; a merge updates it") {
+    val t = oneFile((1L to 5L).map(i => (i, s"v$i")))
+    Snapshots.commitDelete(spark, t, Seq(2L), "id")
+    Snapshots.commitAppend(spark, Seq((2L, "again")).toDF("id", "v"), t)
+    assert(Snapshots.read(spark, t).filter(col("id") === 2L)
+      .select("v").as[String].collect().toSeq == Seq("again"))
+    Snapshots.commitAppend(spark, Seq((9L, "v9")).toDF("id", "v"), t)
+    assert(ids(Snapshots.read(spark, t)) == Set(1L, 2L, 3L, 4L, 5L, 9L))
+    Snapshots.commitMerge(spark, Seq((2L, "reborn")).toDF("id", "v"), t,
+      Seq("id"))
+    assert(Snapshots.read(spark, t).filter(col("id") === 2L)
+      .select("v").as[String].collect().toSeq == Seq("reborn"))
+  }
+
+  test("replica sync crosses a keyed-delete window via the feed transport") {
+    val root = Files.createTempDirectory("graft_dv_rep").toString
+    val (src, dst) = (root + "/src", root + "/dst")
+    Snapshots.commitAppend(spark, (1L to 8L).map(i => (i, s"v$i"))
+      .toDF("id", "v").coalesce(1), src)
+    assert(Snapshots.syncReplica(spark, src, dst, Seq("id"))._3 == "append")
+    Snapshots.commitDelete(spark, src, Seq(3L, 6L), "id")
+    val (_, _, mode) = Snapshots.syncReplica(spark, src, dst, Seq("id"))
+    assert(mode == "feed",
+      "a vector-changing window must not ship as append-only")
+    assert(ids(Snapshots.read(spark, dst)) ==
+      ids(Snapshots.read(spark, src)))
+  }
+
+  test("string-keyed deletes: predicate and key list both vector, OPTIMIZE clears them") {
+    val t = Files.createTempDirectory("graft_dv_mor").toString + "/t"
+    Snapshots.commitAppend(spark,
+      Seq((1L, "alice"), (2L, "bob"), (3L, "carol"), (4L, "bob"),
+        (5L, "dave"), (6L, "erin"), (7L, "frank"), (8L, "gina"))
+        .toDF("id", "user").coalesce(1), t)
+    // the erasure-job shape: a predicate, no driver-side key list
+    val (v, n) = Snapshots.commitDeleteWhere(spark, t,
+      col("user").isin("bob", "dave"))
+    assert(v == 2L && n == 3L, s"got ($v, $n)") // 3 ROWS of 2 keys
+    val (v3, n3) = Snapshots.commitDelete(spark, t, Seq("carol"), "user")
+    assert(v3 == 3L && n3 == 1L, s"got ($v3, $n3)")
+    // zero data files churned; reads drop the vectored rows
+    assert(Snapshots.filesAt(spark, t, 1L) == Snapshots.filesAt(spark, t, 3L))
+    assert(ids(Snapshots.read(spark, t)) == Set(1L, 6L, 7L, 8L))
+    assert(Snapshots.vectorFilesAt(spark, t, 3L).nonEmpty)
+    // the re-write clears them like any other vector
+    Snapshots.compactData(spark, t, targetFiles = 1, minFiles = 0)
+    assert(Snapshots.vectorFilesAt(spark, t, 4L).isEmpty)
+    assert(ids(Snapshots.read(spark, t)) == Set(1L, 6L, 7L, 8L))
+  }
+
+  test("NULL-key rows always survive a keyed delete") {
+    val t = Files.createTempDirectory("graft_dv_null").toString + "/t"
+    Snapshots.commitAppend(spark,
+      Seq((Some(1L), "a"), (None, "nullkey"), (Some(2L), "b"))
+        .toDF("id", "v").coalesce(1), t)
+    Snapshots.commitDelete(spark, t, Seq(1L), "id")
+    val rows = Snapshots.read(spark, t).select("v").collect()
+      .map(_.getString(0)).toSet
+    assert(rows == Set("nullkey", "b"))
   }
 }

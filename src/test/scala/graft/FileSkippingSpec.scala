@@ -188,7 +188,7 @@ class FileSkippingSpec extends AnyFunSuite {
       keeps(Snapshots.pruneFilesByFilters(spark, t, files, declared,
         Seq(org.apache.spark.sql.sources.In(c, ks.toArray)), Map.empty,
         transforms).toSet, i, "the key-list and runtime-filter probe")
-      // a key frame (a computed MERGE batch, a tombstone leg)
+      // a key frame (a computed MERGE batch's keys)
       val frame = spark.createDataFrame(
         java.util.Arrays.asList(ks.map(Row(_)): _*),
         StructType(Seq(schema(c))))

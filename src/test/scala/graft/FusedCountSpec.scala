@@ -10,7 +10,7 @@ import graft.warehouse.Snapshots
   * their probe killed, not from a separate count; MERGE's anti-join
   * is a key-set filter when the key list is on the driver. These cases
   * pin the reported counts and the surviving rows where the two forms
-  * could part: NULL predicates, already-tombstoned rows, a slice read
+  * could part: NULL predicates, already-vectored rows, a slice read
   * twice, a retried attempt, NULL merge keys and a widened key type.
   */
 class FusedCountSpec extends AnyFunSuite {
@@ -46,20 +46,24 @@ class FusedCountSpec extends AnyFunSuite {
 
   test("already-tombstoned rows in an affected file neither count nor re-land") {
     val t = table()
-    Snapshots.commitDeleteLazy(spark, t, Seq(2L, 3L), "id")
+    Snapshots.commitDelete(spark, t, Seq(2L, 3L), "id")
     val files = Snapshots.filesAt(spark, t, 2L)
     val (v, n) = Snapshots.commitDeleteWhere(spark, t, col("id") <= 5L)
     assert(n == 3L) // 1, 4, 5: 2 and 3 were already gone
-    // nothing re-lands: the file carries, and its vector holds the three
-    // rows the delete killed, not the tombstoned two
+    // nothing re-lands: the file carries, and its vector gains exactly
+    // the three rows the delete killed on top of the earlier two
+    def dead(version: Long) = Snapshots.deadRowsAt(spark, t, version)
     assert(Snapshots.filesAt(spark, t, v) == files &&
-      Snapshots.deadRowsAt(spark, t, v).values.map(_.getCardinality).sum == 3,
-      "the delete must not re-land or re-kill tombstoned rows")
-    Snapshots.commitDeleteLazy(spark, t, Seq(7L), "id")
+      dead(2L).values.map(_.getCardinality).sum == 2 &&
+      dead(v).values.map(_.getCardinality).sum == 5 &&
+      dead(2L).forall { case (e, b) =>
+        org.roaringbitmap.RoaringBitmap.andNot(b, dead(v)(e)).isEmpty },
+      "the delete must not re-land or re-kill already-dead rows")
+    Snapshots.commitDelete(spark, t, Seq(7L), "id")
     val (u3, u) = Snapshots.commitUpdateWhere(spark, t, col("id") <= 8L,
       Seq("x" -> lit(-1.0)))
     assert(u == 2L) // 6 and 8
-    // the update stages only its two rows, never the tombstoned 7
+    // the update stages only its two rows, never the deleted 7
     val staged = Snapshots.filesAt(spark, t, u3).filterNot(files.contains)
     assert(state(spark.read.parquet(staged.map(f => s"$t/data/$f"): _*))
       .keySet == Set(6L, 8L))

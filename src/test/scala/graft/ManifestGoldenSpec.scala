@@ -12,15 +12,17 @@ import graft.warehouse.Snapshots
   * [[ManifestGoldens.script]] drives two snapshot tables through a fixed
   * op sequence chosen so that, between them, the physical manifests carry
   * every header kind: `#op`, `#ts`, `#schema` (with column DEFAULT
-  * metadata), `#stream`, `#check`, `#tombstonecol`/`#tombstone`,
-  * `#dropped`, `#colmap`, a composite `#partition`, `#dv` (the keyed
-  * DELETE's and the MERGE's deletion vectors), the `#fsz` size ledger,
-  * delta manifests (`#base`/`#add`/`#remove`) and the v16 checkpoint. The files under `src/test/resources/manifests/` are that
-  * script's output; regenerate them (only on a deliberate format change)
-  * with
+  * metadata), `#stream`, `#check`, `#dropped`, `#colmap`, a composite
+  * `#partition`, `#dv` (the keyed DELETEs' and the MERGE's deletion
+  * vectors), the `#fsz` size ledger, delta manifests
+  * (`#base`/`#add`/`#remove`) and the v16 checkpoint. The files under
+  * `src/test/resources/manifests/flat` and `.../part` are that script's
+  * output; regenerate them (only on a deliberate format change) with
   * {{{
   *   sbt "Test/runMain graft.ManifestGoldens src/test/resources/manifests"
   * }}}
+  * `.../legacy` holds a manifest an older build wrote, with the key
+  * tombstone headers this build refuses.
   */
 object ManifestGoldens {
 
@@ -39,7 +41,7 @@ object ManifestGoldens {
     Snapshots.commitStreamAppend(spark,
       (40L until 45L).map(i => (i, i * 10)).toDF("id", "v")
         .repartition(1), flat, "s1", 0L)                               // v4
-    Snapshots.commitDeleteLazy(spark, flat, Seq(1L, 2L), "id")         // v5
+    Snapshots.commitDelete(spark, flat, Seq(1L, 2L), "id")             // v5
     Snapshots.commitRenameColumn(spark, flat, "v", "w")                // v6
     Snapshots.commitAddColumns(spark, flat,
       Seq(StructField("d", LongType)))                                 // v7
@@ -89,15 +91,23 @@ object ManifestGoldens {
   private val Ts = "(?m)^#ts:\\d+$".r
 
   /** Blank out what legitimately differs between two runs of the script:
-    * every `#ts:` value, and the random UUID in each staged file name,
-    * replaced by its order of first appearance across the table's files.
+    * every `#ts:` value, the random UUID in each staged file name,
+    * replaced by its order of first appearance across the table's files,
+    * and the order of the `#dv:` lines, which render sorted by entry
+    * name and so by those UUIDs.
     */
   def normalise(files: Seq[(String, String)]): Seq[(String, String)] = {
     val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     files.map { case (n, body) =>
       val noTs = Ts.replaceAllIn(body, "#ts:0")
-      n -> Uuid.replaceAllIn(noTs,
+      val named = Uuid.replaceAllIn(noTs,
         m => s"file${ids.getOrElseUpdate(m.matched, ids.size)}")
+      // the #dv: lines are one contiguous block
+      val lines = named.split("\n", -1).toSeq
+      val at = lines.indexWhere(_.startsWith("#dv:"))
+      val k = lines.count(_.startsWith("#dv:"))
+      n -> (if (at < 0) named else (lines.take(at) ++
+        lines.slice(at, at + k).sorted ++ lines.drop(at + k)).mkString("\n"))
     }
   }
 
@@ -130,9 +140,9 @@ class ManifestGoldenSpec extends AnyFunSuite {
   test("the golden fixtures cover every manifest header kind") {
     val all = ManifestGoldens.Tables.flatMap(golden).map(_._2)
       .flatMap(_.split("\n")).toSet
-    Seq("#op:", "#ts:", "#schema:", "#stream:", "#check:", "#tombstonecol:",
-      "#tombstone:", "#dropped:", "#colmap:", "#partition:", "#dv:", "#fsz:",
-      "#base:", "#add:", "#remove:").foreach { h =>
+    Seq("#op:", "#ts:", "#schema:", "#stream:", "#check:", "#dropped:",
+      "#colmap:", "#partition:", "#dv:", "#fsz:", "#base:", "#add:",
+      "#remove:").foreach { h =>
       assert(all.exists(_.startsWith(h)), s"no golden line carries $h")
     }
     assert(all.exists(l => l.startsWith("#partition:") && l.contains(";")),
@@ -147,6 +157,22 @@ class ManifestGoldenSpec extends AnyFunSuite {
       assert(graft.warehouse.Manifest.parse(text).render == text,
         s"$n does not round-trip")
     }
+  }
+
+  test("a legacy manifest with pending tombstone headers refuses to parse") {
+    val Seq((_, text)) = golden("legacy")
+    assert(text.contains("\n#tombstonecol:") && text.contains("\n#tombstone:"))
+    val e = intercept[IllegalStateException] {
+      graft.warehouse.Manifest.parse(text)
+    }
+    assert(e.getMessage.contains("#tombstonecol:") &&
+      e.getMessage.contains("OPTIMIZE"), e.getMessage)
+    // the other header alone refuses too
+    val e2 = intercept[IllegalStateException] {
+      graft.warehouse.Manifest.parse(
+        text.split("\n").filterNot(_.startsWith("#tombstonecol:")).mkString("\n"))
+    }
+    assert(e2.getMessage.contains("#tombstone:"), e2.getMessage)
   }
 
   test("replaying the script writes the golden manifests (up to #ts and file UUIDs)") {

@@ -121,21 +121,25 @@ class ReplicaSpec extends AnyFunSuite {
   test("a replica-local lazy delete survives a feed sync (no resurrection)") {
     val (src, dst) = pair()
     Snapshots.commitAppend(spark,
-      (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v"), src)
+      (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1), src)
     Snapshots.syncReplica(spark, src, dst, Seq("id"))
-    // the replica locally tombstones key 9 (e.g. a regional erasure the
-    // source has not processed yet) — key-granular, zero files touched
-    Snapshots.commitDeleteLazy(spark, dst, Seq(9L), "id")
+    // the replica locally deletes key 9 (e.g. a regional erasure the
+    // source has not processed yet) — by vector, zero files touched
+    val files = Snapshots.filesAt(spark, dst, Snapshots.currentVersion(spark, dst))
+    val (local, _) = Snapshots.commitDelete(spark, dst, Seq(9L), "id")
+    assert(Snapshots.filesAt(spark, dst, local) == files)
     assert(!state(dst).exists(_._1 == 9L))
     // a source rewrite window NOT touching key 9 feeds through: the
-    // replica's pending tombstone must carry, not silently vanish with
-    // its dead row physically re-landing
+    // replica's vectored row must stay dead, not silently come back
+    // through the feed's re-write
     Snapshots.commitMerge(spark, Seq((2L, "BUMP")).toDF("id", "v"),
       src, Seq("id"))
     assert(Snapshots.syncReplica(spark, src, dst, Seq("id"))._3 == "feed")
     assert(!state(dst).exists(_._1 == 9L),
-      "replica-local tombstone resurrected by the feed sync")
-    assert(Snapshots.pendingTombstones(spark, dst)._2.nonEmpty)
+      "replica-local delete resurrected by the feed sync")
+    val synced = Snapshots.currentVersion(spark, dst)
+    assert(Snapshots.deadRowsAt(spark, dst, synced).values
+      .map(_.getCardinality).sum == 2, "key 9's vector carries, key 2's joins")
     assert(state(dst) == state(src) - ((9L, "v9")))
     // but when the SOURCE re-asserts key 9, the feed legitimately
     // resurrects it on the replica (source truth wins)

@@ -17,9 +17,8 @@ import graft.warehouse.Snapshots
   *
   * The table has a unique BIGINT `id` key plus nullable BIGINT columns the
   * sequence adds, renames and drops. Each step runs one public `Snapshots`
-  * operation: append, MERGE, UPDATE/DELETE WHERE, key-list DELETE, lazy
-  * DELETE, OPTIMIZE, RESTORE, ADD/RENAME/DROP COLUMN, VACUUM or SHALLOW
-  * CLONE. Row-level commits take the deletion-vector branch or, past the
+  * operation: append, MERGE, UPDATE/DELETE WHERE, key-list DELETE,
+  * OPTIMIZE, RESTORE, ADD/RENAME/DROP COLUMN, VACUUM or SHALLOW CLONE. Row-level commits take the deletion-vector branch or, past the
   * dead-fraction bound, the re-write branch; the run prints how often
   * each was taken. Then every retained version is read back through time travel;
   * each must equal the model's copy of that version (columns in declared
@@ -28,11 +27,11 @@ import graft.warehouse.Snapshots
   */
 object SnapshotModel extends Commands {
 
-  /** One committed version: logical columns after `id`, live rows by id,
-    * and the keys of pending lazy-delete tombstones.
+  /** One committed version: logical columns after `id` and live rows by
+    * id.
     */
   final case class Version(cols: Vector[String],
-      rows: Map[Long, Vector[Option[Long]]], tombs: Set[Long])
+      rows: Map[Long, Vector[Option[Long]]])
 
   /** Versions 1..head (index v-1), the oldest version vacuum kept, and
     * the next never-used id and column number.
@@ -115,7 +114,7 @@ object SnapshotModel extends Commands {
     vs <- Gen.listOfN(n, genRow(1))
   } yield {
     val rows = vs.zipWithIndex.map { case (r, i) => i.toLong -> r }.toMap
-    State(Vector(Version(Vector("v"), rows, Set.empty)), 1L, n.toLong, 0)
+    State(Vector(Version(Vector("v"), rows)), 1L, n.toLong, 0)
   }
 
   def genCommand(s: State): Gen[Command] = {
@@ -128,21 +127,18 @@ object SnapshotModel extends Commands {
     val append = Gen.choose(1, 3).flatMap(n =>
       Gen.listOfN(n, genRow(v.cols.size)).map(rs => Append(v.cols,
         rs.zipWithIndex.map { case (r, i) => (s.nextId + i, r) })))
+    // a MERGE may re-insert a few deleted keys
+    val dead = (0L until s.nextId).filterNot(v.rows.contains).take(3)
     val merge = for {
-      ks <- Gen.someOf(live ++ v.tombs.toSeq.sorted :+ s.nextId)
-        .map(_.toSeq.sorted)
+      ks <- Gen.someOf(live ++ dead :+ s.nextId).map(_.toSeq.sorted)
       rs <- Gen.listOfN(ks.size, genRow(v.cols.size))
     } yield Merge(v.cols, ks.zip(rs))
     val delete = for {
       ks <- someLive
       unseen <- Gen.oneOf(Nil, Seq(s.nextId + 7))
     } yield Delete(ks ++ unseen)
-    // predicate DML commits or not by the PHYSICAL rows it matches, and
-    // pending tombstones keep dead rows physically present, so these two
-    // are generated only while no tombstone is pending
     val predicateDml =
-      if (v.tombs.nonEmpty) Nil
-      else Seq(1 -> Gen.choose(0L, s.nextId).map(DeleteWhere(_))) ++
+      Seq(1 -> Gen.choose(0L, s.nextId).map(DeleteWhere(_))) ++
         (if (v.cols.isEmpty) Nil
          else Seq(2 -> (for {
            m <- Gen.choose(2L, 4L); r <- Gen.choose(0L, m - 1)
@@ -157,7 +153,7 @@ object SnapshotModel extends Commands {
          1 -> Gen.oneOf(v.cols).map(DropColumn(_))))
     Gen.frequency(Seq(
       4 -> append, 3 -> merge, 2 -> delete,
-      2 -> someLive.map(LazyDelete(_)),
+      2 -> someLive.map(Delete(_)),
       1 -> Gen.const(Compact),
       1 -> Gen.choose(1, 3).map(Vacuum(_)),
       1 -> Gen.const(Clone)) ++ predicateDml ++ restore ++ columnDdl: _*)
@@ -218,8 +214,7 @@ object SnapshotModel extends Commands {
   final case class Append(cols: Vector[String],
       rows: Seq[(Long, Vector[Option[Long]])]) extends Step {
     override def preCondition(s: State): Boolean = s.cur.cols == cols &&
-      rows.forall { case (id, _) =>
-        !s.cur.rows.contains(id) && !s.cur.tombs.contains(id) }
+      rows.forall { case (id, _) => !s.cur.rows.contains(id) }
     def op(t: String): Seen = {
       Snapshots.commitAppend(spark, frame(cols, rows), t); Map.empty
     }
@@ -233,14 +228,12 @@ object SnapshotModel extends Commands {
       s.cur.cols == cols && rows.nonEmpty
     def op(t: String): Seen =
       rowLevel(t)(Snapshots.commitMerge(spark, frame(cols, rows), t, Seq("id")))
-    def next(s: State): State = s.commit(s.cur.copy(
-        rows = s.cur.rows ++ rows, tombs = s.cur.tombs -- rows.map(_._1)))
+    def next(s: State): State = s.commit(s.cur.copy(rows = s.cur.rows ++ rows))
       .copy(nextId = math.max(s.nextId, rows.map(_._1).max + 1))
   }
 
   final case class UpdateWhere(m: Long, r: Long, c: String) extends Step {
-    override def preCondition(s: State): Boolean =
-      s.cur.tombs.isEmpty && s.cur.cols.contains(c)
+    override def preCondition(s: State): Boolean = s.cur.cols.contains(c)
     def op(t: String): Seen = rowLevel(t)(Snapshots.commitUpdateWhere(
       spark, t, col("id") % m === r, Seq(c -> (col(c) + 1000))))
     def next(s: State): State = {
@@ -254,7 +247,6 @@ object SnapshotModel extends Commands {
   }
 
   final case class DeleteWhere(below: Long) extends Step {
-    override def preCondition(s: State): Boolean = s.cur.tombs.isEmpty
     def op(t: String): Seen =
       rowLevel(t)(Snapshots.commitDeleteWhere(spark, t, col("id") < below))
     def next(s: State): State =
@@ -263,8 +255,7 @@ object SnapshotModel extends Commands {
   }
 
   final case class Delete(keys: Seq[Long]) extends Step {
-    override def preCondition(s: State): Boolean =
-      keys.nonEmpty && !keys.exists(s.cur.tombs)
+    override def preCondition(s: State): Boolean = keys.nonEmpty
     def op(t: String): Seen =
       rowLevel(t)(Snapshots.commitDelete(spark, t, keys, "id"))
     def next(s: State): State =
@@ -272,21 +263,12 @@ object SnapshotModel extends Commands {
       else s.commit(s.cur.copy(rows = s.cur.rows -- keys))
   }
 
-  final case class LazyDelete(keys: Seq[Long]) extends Step {
-    override def preCondition(s: State): Boolean = keys.nonEmpty
-    def op(t: String): Seen = {
-      Snapshots.commitDeleteLazy(spark, t, keys, "id"); Map.empty
-    }
-    def next(s: State): State = s.commit(s.cur.copy(
-      rows = s.cur.rows -- keys, tombs = s.cur.tombs ++ keys))
-  }
-
   case object Compact extends Step {
     def op(t: String): Seen = {
       Snapshots.compactData(spark, t, targetFiles = 1, minFiles = 0)
       Map.empty
     }
-    def next(s: State): State = s.commit(s.cur.copy(tombs = Set.empty))
+    def next(s: State): State = s.commit(s.cur)
   }
 
   final case class Restore(to: Long) extends Step {

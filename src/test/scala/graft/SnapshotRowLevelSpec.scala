@@ -120,15 +120,26 @@ class SnapshotRowLevelSpec extends AnyFunSuite {
     assert(Snapshots.read(spark, t).where("v = k + 1").count() == 7L)
   }
 
-  test("commitReplaceEntries refuses conflicts: vanished groups and racing tombstones") {
+  test("commitReplaceEntries refuses conflicts: vanished groups and racing vectored deletes") {
     val root = Files.createTempDirectory("graft_rl_cme").toString
     val t = root + "/t"
     Snapshots.commitAppend(spark,
-      (1 to 20).map(i => (i.toLong, s"v$i")).toDF("k", "v"), t)
+      (1 to 20).map(i => (i.toLong, s"v$i")).toDF("k", "v").coalesce(1), t)
     intercept[java.util.ConcurrentModificationException] {
       Snapshots.commitReplaceEntries(spark, t,
         Seq("no-such-file.parquet"), Nil, Map.empty)
     }
+    // a keyed DELETE lands after the operation scanned v1: the scanned
+    // file gained a vector, so re-writing it would bring the row back
+    val scanned = Snapshots.filesAt(spark, t, 1L)
+    Snapshots.commitDelete(spark, t, Seq(3L), "k")
+    val e = intercept[java.util.ConcurrentModificationException] {
+      Snapshots.commitReplaceEntries(spark, t, scanned, Nil, Map.empty,
+        scannedAt = Some(1L))
+    }
+    assert(e.getMessage.contains("deletion"))
+    assert(Snapshots.currentVersion(spark, t) == 2L)
+    assert(Snapshots.read(spark, t).count() == 19L)
     // empty replace is a no-op at the current head
     assert(Snapshots.commitReplaceEntries(spark, t, Nil, Nil, Map.empty)
       == Snapshots.currentVersion(spark, t))

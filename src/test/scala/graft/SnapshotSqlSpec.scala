@@ -585,12 +585,14 @@ class SnapshotSqlSpec extends AnyFunSuite {
   test("DESCRIBE DETAIL reports head metadata in one metadata-only row") {
     val t = Files.createTempDirectory("graft_snapsql_det").toString + "/t"
     Snapshots.commitAppend(spark,
-      Seq((1L, 10.0), (2L, 20.0)).toDF("id", "x").coalesce(2), t)
+      (1L to 6L).map(i => (i, i * 10.0)).toDF("id", "x")
+        .repartitionByRange(2, $"id"), t)
     spark.sql(s"ALTER TABLE '$t' ADD CONSTRAINT x_pos CHECK (x > 0)")
-    Snapshots.commitDeleteLazy(spark, t, Seq(2L), "id")
+    // a keyed delete of one row of three: its file gains a vector
+    spark.sql(s"DELETE FROM '$t' WHERE id IN (2)").collect()
     val d = spark.sql(s"DESC DETAIL '$t'").head
     assert(d.getString(0) == t)
-    assert(d.getLong(1) == 3L) // append + constraint + lazy delete
+    assert(d.getLong(1) == 3L) // append + constraint + keyed delete
     assert(d.getInt(2) == 2 && d.getLong(3) > 0L)
     assert(d.getString(4).toLowerCase.contains("id") &&
       d.getString(4).toLowerCase.contains("bigint"))
@@ -601,11 +603,12 @@ class SnapshotSqlSpec extends AnyFunSuite {
     // layout/mapping audit columns: empty on a plain table...
     assert(d.getString(10) == "" && d.getString(11) == "" &&
       d.getString(12) == "")
-    // ...and populated after the layout DDL lands (tombstones must
-    // materialize before the rename; the partition column may not
-    // rename, so map `x`)
+    // ...and populated after the layout DDL lands (the partition column
+    // may not rename, so map `x`); the OPTIMIZE re-writes the vectored
+    // file, so no vector file is left referenced
     assert(Snapshots.compactData(spark, t, targetFiles = 1,
       minFiles = 1).nonEmpty)
+    assert(spark.sql(s"DESC DETAIL '$t'").head.getInt(6) == 0)
     spark.sql(s"ALTER TABLE '$t' SET PARTITION (identity(id))").collect()
     spark.sql(s"ALTER TABLE '$t' DROP CONSTRAINT x_pos").collect()
     spark.sql(s"ALTER TABLE '$t' RENAME COLUMN x TO score").collect()

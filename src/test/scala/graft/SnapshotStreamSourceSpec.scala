@@ -221,10 +221,10 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
       (1L to 6L).map(i => (i, s"v$i")).toDF("id", "v"), t)
     val got = collectStream(t, root + "/ck", keys = Some("id"))(
       () => (),
-      () => { // one update + one insert + one lazy delete in the window
+      () => { // one update + one insert + one keyed delete in the window
         Snapshots.commitMerge(spark,
           Seq((3L, "BUMPED"), (10L, "NEW")).toDF("id", "v"), t, Seq("id"))
-        Snapshots.commitDeleteLazy(spark, t, Seq(5L), "id")
+        Snapshots.commitDelete(spark, t, Seq(5L), "id")
         ()
       })
     // post-images only: the update's new row + the insert; the DELETE
@@ -270,23 +270,23 @@ class SnapshotStreamSourceSpec extends AnyFunSuite {
       try phases.foreach { p => p(); q.processAllAvailable() }
       finally q.stop()
     }
-    // phase 1: initial snapshot (10 inserts), then a copy-on-write
-    // DELETE window whose pre-images must flow
+    // phase 1: initial snapshot (10 inserts), then a keyed DELETE
+    // window whose pre-images must flow
     run(
       () => (),
       () => { Snapshots.commitDelete(spark, t, Seq(3L, 4L), "id"); () })
     assert(seen.count(_._3 == "insert") == 10)
     assert(seen.filter(_._3 == "delete").map(_._1).toSet == Set(3L, 4L))
     // phase 2 happens while the stream is DOWN: a merge bump and a
-    // merge-on-read lazy delete — the restarted stream must serve both
+    // second keyed delete — the restarted stream must serve both
     // windows exactly once from the checkpoint
     Snapshots.commitMerge(spark,
       Seq((5L, "V5")).toDF("id", "v"), t, Seq("id")) // v3
-    Snapshots.commitDeleteLazy(spark, t, Seq(6L), "id") // v4: no files move
+    Snapshots.commitDelete(spark, t, Seq(6L), "id") // v4
     run(() => ())
     assert(seen.count(_._3 == "delete") == 3, s"got $seen")
     assert(seen.filter(_._3 == "delete").map(_._1).toSet == Set(3L, 4L, 6L),
-      "the lazy-delete window must emit its pre-image exactly once")
+      "the second delete's window must emit its pre-image exactly once")
     assert(seen.collect {
       case (5L, v, "update_preimage") => v }.toSeq == Seq("v5"))
     assert(seen.collect {

@@ -512,22 +512,21 @@ class SnapshotsSpec extends AnyFunSuite {
     val big = Snapshots.filesAt(spark, t, 1L).head
     val bigLen = java.nio.file.Files.size(
       java.nio.file.Paths.get(t, "data", big))
-    // a pending tombstone on a SMALL file's row materializes in the
-    // pack; one on the LARGE file keeps riding the carried headers
-    Snapshots.commitDeleteLazy(spark, t, Seq(7L, 1003L), "id")
+    // a delete of a SMALL file's only row drops that file; one on the
+    // LARGE file vectors it, and the vector rides the carried entry
+    Snapshots.commitDelete(spark, t, Seq(7L, 1003L), "id")
     val v = Snapshots.compactSmallFiles(spark, t,
       smallBytes = bigLen, minSmall = 8).get
     val after = Snapshots.filesAt(spark, t, v)
     assert(after.contains(big), "the compact file must carry by name")
-    assert(after.size == 2, s"10 small files pack into 1, got $after")
-    // carried-file tombstone still applies read-side; packed one is gone
+    assert(after.size == 2, s"9 small files pack into 1, got $after")
+    // the carried file's vector still applies read-side
     val ids0 = ids(Snapshots.read(spark, t))
     assert(!ids0.contains(7L) && !ids0.contains(1003L))
     assert(ids0.size == 508)
-    assert(Snapshots.pendingTombstones(spark, t)._2.nonEmpty,
-      "partial compaction must NOT clear tombstone headers (carried " +
-        "files still need the anti-join); full compactData is the " +
-        "materialization point")
+    assert(Snapshots.deadRowsAt(spark, t, v).keySet == Set(big),
+      "partial compaction must carry the compact file's vector; full " +
+        "compactData is the point that re-writes it")
     // below the debt floor: no-op
     assert(Snapshots.compactSmallFiles(spark, t,
       smallBytes = bigLen, minSmall = 8).isEmpty)
@@ -639,33 +638,35 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(Snapshots.filesAt(spark, t, v).take(before.size) == before)
   }
 
-  test("merge carries pending tombstones it does not touch; re-asserted keys leave the set") {
+  test("merge carries deletion vectors it does not touch; a deleted key it re-inserts is served") {
     val t = freshTable()
     (0 until 4).foreach { i =>
       Snapshots.commitAppend(spark,
         (0 until 5).map(j => (i * 5L + j, s"v$i$j")).toDF("id", "v")
           .coalesce(1), t)
     }
-    Snapshots.commitDeleteLazy(spark, t, Seq(2L, 12L), "id") // v5
-    // merge touching key 7 only: both tombstones carry, reads stay dead
-    Snapshots.commitMerge(spark, Seq((7L, "x")).toDF("id", "v"), t, Seq("id"))
-    assert(Snapshots.pendingTombstones(spark, t)._2.nonEmpty,
-      "a merge not touching a tombstoned key must carry the tombstones")
+    val files = Snapshots.filesAt(spark, t, 4L)
+    Snapshots.commitDelete(spark, t, Seq(2L, 12L), "id") // v5
+    val dead5 = Snapshots.deadRowsAt(spark, t, 5L)
+    assert(dead5.keySet == Set(files(0), files(2)))
+    // merge touching key 7 only: both vectors carry, reads stay dead
+    val v6 = Snapshots.commitMerge(spark, Seq((7L, "x")).toDF("id", "v"), t,
+      Seq("id"))
+    assert(Snapshots.deadRowsAt(spark, t, v6) - files(1) == dead5,
+      "a merge not touching a deleted key must carry its vector")
     assert(ids(Snapshots.read(spark, t)) == (0L until 20L).toSet -- Set(2L, 12L))
-    // merge re-asserting key 2: its file rewrites (dead row materializes
-    // out), the key leaves the tombstone set, 12 stays dead
-    Snapshots.commitMerge(spark,
+    // merge re-inserting key 2: the new row is served, 12 stays dead
+    val v7 = Snapshots.commitMerge(spark,
       Seq((2L, "reborn")).toDF("id", "v"), t, Seq("id"))
-    val (kc, tombs) = Snapshots.pendingTombstones(spark, t)
-    assert(tombs.nonEmpty && kc.contains("id"),
-      "the untouched tombstone (key 12) must survive the partial re-assert")
+    assert(Snapshots.deadRowsAt(spark, t, v7)(files(2)) == dead5(files(2)),
+      "the untouched vector (key 12) must survive the merge")
     val state = Snapshots.read(spark, t)
     assert(state.filter("id = 2").head.getString(1) == "reborn")
     assert(state.filter("id = 12").count() == 0)
     assert(state.count() == 19)
   }
 
-  test("a tombstone or constraint landing between staging and claim is re-validated") {
+  test("a delete landing between staging and claim is carried; a constraint is re-validated") {
     val t = freshTable()
     Snapshots.commitAppend(spark,
       (1L to 5L).map(i => (i, s"v$i")).toDF("id", "v"), t)
@@ -675,24 +676,24 @@ class SnapshotsSpec extends AnyFunSuite {
       f.listStatus(dd).count(_.isFile)
     }
     try {
-      // tombstone race: a lazy delete of key 2 lands AFTER the append's
-      // pre-staging validation read the head — the claim loop must
-      // refuse (a silent carry would let the read-side anti-join swallow
-      // the appended row), and the refusal reclaims the staged files
-      val before = dataFiles()
+      def rows() = Snapshots.read(spark, t).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+      // delete race: a delete of key 2 lands AFTER the append's
+      // pre-staging validation read the head — the claim carries the
+      // new head's file list and vectors, so the old row stays dead and
+      // the appended one is served
       Snapshots.raceHookForTests = () => {
-        Snapshots.commitDeleteLazy(spark, t, Seq(2L), "id")
         Snapshots.raceHookForTests = () => ()
+        Snapshots.commitDelete(spark, t, Seq(2L), "id")
       }
-      val e = intercept[IllegalArgumentException] {
-        Snapshots.commitAppend(spark, Seq((2L, "zombie")).toDF("id", "v"), t)
-      }
-      assert(e.getMessage.contains("tombstoned"))
-      assert(dataFiles() == before, "refused claim must reclaim staged files")
-      assert(ids(Snapshots.read(spark, t)) == Set(1L, 3L, 4L, 5L))
+      Snapshots.commitAppend(spark, Seq((2L, "zombie")).toDF("id", "v"), t)
+      assert(rows() == Set((1L, "v1"), (2L, "zombie"), (3L, "v3"),
+        (4L, "v4"), (5L, "v5")))
       // constraint race: ADD CONSTRAINT lands mid-commit; the violating
-      // batch is refused at claim time under the constraint's name
+      // batch is refused at claim time under the constraint's name, and
+      // the refusal reclaims the staged files
       Snapshots.compactData(spark, t, targetFiles = 1, minFiles = 1)
+      val before = dataFiles()
       Snapshots.raceHookForTests = () => {
         Snapshots.addCheckConstraint(spark, t, "id_small", "id < 100")
         Snapshots.raceHookForTests = () => ()
@@ -701,16 +702,16 @@ class SnapshotsSpec extends AnyFunSuite {
         Snapshots.commitAppend(spark, Seq((500L, "big")).toDF("id", "v"), t)
       }
       assert(e2.getMessage.contains("id_small"))
-      // the streaming ingest path carries the same guard
+      assert(dataFiles() == before, "refused claim must reclaim staged files")
+      // the streaming ingest path carries a racing delete the same way
       Snapshots.raceHookForTests = () => {
-        Snapshots.commitDeleteLazy(spark, t, Seq(3L), "id")
         Snapshots.raceHookForTests = () => ()
+        Snapshots.commitDelete(spark, t, Seq(3L), "id")
       }
-      val e3 = intercept[IllegalArgumentException] {
-        Snapshots.commitStreamAppend(spark,
-          Seq((3L, "z")).toDF("id", "v"), t, "race_s", 0L)
-      }
-      assert(e3.getMessage.contains("tombstoned"))
+      Snapshots.commitStreamAppend(spark,
+        Seq((3L, "z")).toDF("id", "v"), t, "race_s", 0L)
+      assert(rows() == Set((1L, "v1"), (2L, "zombie"), (3L, "z"),
+        (4L, "v4"), (5L, "v5")))
     } finally Snapshots.raceHookForTests = () => ()
   }
 
@@ -975,20 +976,21 @@ class SnapshotsSpec extends AnyFunSuite {
       .count() == 0L, "re-added column resurrected pre-drop values")
   }
 
-  test("DROP COLUMN refusals: last column, pending-tombstone key, CHECK-mentioned") {
+  test("DROP COLUMN refusals: last column, CHECK-mentioned; vectored rows stay dead through the drop") {
     val t = freshTable()
     Snapshots.commitAppend(spark,
-      (1L to 10L).map(i => (i, i * 1.0)).toDF("id", "x"), t)
+      (1L to 10L).map(i => (i, i * 1.0)).toDF("id", "x").coalesce(1), t)
     Snapshots.addCheckConstraint(spark, t, "pos", "x > 0")
     intercept[IllegalArgumentException] {
       Snapshots.commitDropColumn(spark, t, "x") // CHECK pos mentions it
     }
     Snapshots.dropCheckConstraint(spark, t, "pos")
-    Snapshots.commitDeleteLazy(spark, t, Seq(3L), "id")
-    intercept[IllegalArgumentException] {
-      Snapshots.commitDropColumn(spark, t, "id") // pending tombstone key
-    }
-    Snapshots.commitDropColumn(spark, t, "x") // fine now
+    val (deleted, _) = Snapshots.commitDelete(spark, t, Seq(3L), "id")
+    assert(Snapshots.vectorFilesAt(spark, t, deleted).nonEmpty)
+    val dropped = Snapshots.commitDropColumn(spark, t, "x") // fine now
+    assert(Snapshots.vectorFilesAt(spark, t, dropped) ==
+      Snapshots.vectorFilesAt(spark, t, deleted))
+    assert(ids(Snapshots.read(spark, t)) == (1L to 10L).toSet - 3L)
     intercept[IllegalArgumentException] {
       Snapshots.commitDropColumn(spark, t, "id") // last column
     }
@@ -1011,17 +1013,20 @@ class SnapshotsSpec extends AnyFunSuite {
   test("constraint DDL carries pending tombstones: no resurrection through ADD/DROP CONSTRAINT") {
     val t = freshTable()
     Snapshots.commitAppend(spark,
-      (1L to 10L).map(i => (i, i * 1.0)).toDF("id", "x"), t)
-    Snapshots.commitDeleteLazy(spark, t, Seq(3L, 4L), "id")
-    assert(Snapshots.read(spark, t).count() == 8L)
-    // a metadata-only constraint commit must CARRY the tombstone headers
-    // — dropping them would resurrect the lazily-deleted rows
-    Snapshots.addCheckConstraint(spark, t, "pos", "x > 0")
+      (1L to 10L).map(i => (i, i * 1.0)).toDF("id", "x").coalesce(1), t)
+    val (deleted, _) = Snapshots.commitDelete(spark, t, Seq(3L, 4L), "id")
+    val vectors = Snapshots.vectorFilesAt(spark, t, deleted)
+    assert(vectors.nonEmpty && Snapshots.read(spark, t).count() == 8L)
+    // a metadata-only constraint commit must CARRY the deletion vectors
+    // — dropping them would resurrect the deleted rows
+    val added = Snapshots.addCheckConstraint(spark, t, "pos", "x > 0")
+    assert(Snapshots.vectorFilesAt(spark, t, added) == vectors)
     assert(Snapshots.read(spark, t).count() == 8L,
-      "ADD CONSTRAINT resurrected lazily-deleted rows")
-    Snapshots.dropCheckConstraint(spark, t, "pos")
+      "ADD CONSTRAINT resurrected deleted rows")
+    val dropped = Snapshots.dropCheckConstraint(spark, t, "pos")
+    assert(Snapshots.vectorFilesAt(spark, t, dropped) == vectors)
     assert(Snapshots.read(spark, t).count() == 8L,
-      "DROP CONSTRAINT resurrected lazily-deleted rows")
+      "DROP CONSTRAINT resurrected deleted rows")
   }
 
   test("RENAME COLUMN: metadata-only column mapping — reads, writes, time travel") {
@@ -1093,28 +1098,28 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(vb == 6L)
   }
 
-  test("RENAME COLUMN refusals: dropped names, tombstone keys, CHECK mentions, races") {
+  test("RENAME COLUMN refusals: dropped names, CHECK mentions, races; vectored rows stay dead through a rename") {
     val t = freshTable()
     Snapshots.commitAppend(spark,
-      Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "v", "score"), t)
+      Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0))
+        .toDF("id", "v", "score").coalesce(1), t)
     // renaming ONTO a dropped name would resurrect its data
     Snapshots.commitDropColumn(spark, t, "score")
     val e1 = intercept[IllegalArgumentException] {
       Snapshots.commitRenameColumn(spark, t, "v", "score")
     }
     assert(e1.getMessage.contains("DROPPED"))
-    // pending tombstones key on the column -> refuse (sidecar holds the
-    // old name); other columns still rename
-    Snapshots.commitDeleteLazy(spark, t, Seq(2L), "id")
-    val e2 = intercept[IllegalArgumentException] {
-      Snapshots.commitRenameColumn(spark, t, "id", "ident")
-    }
-    assert(e2.getMessage.contains("tombstone"))
-    Snapshots.commitRenameColumn(spark, t, "v", "label")
-    assert(Snapshots.read(spark, t).count() == 1L,
-      "rename must carry pending tombstones")
+    // a vectored delete: a rename carries the vector by entry, so the
+    // dead row stays dead under the new name
+    val (deleted, _) = Snapshots.commitDelete(spark, t, Seq(2L), "id")
+    val renamed = Snapshots.commitRenameColumn(spark, t, "v", "label")
+    assert(Snapshots.vectorFilesAt(spark, t, renamed).nonEmpty &&
+      Snapshots.vectorFilesAt(spark, t, renamed) ==
+        Snapshots.vectorFilesAt(spark, t, deleted))
+    assert(ids(Snapshots.read(spark, t)) == Set(1L, 3L),
+      "rename must carry the deletion vector")
     assert(Snapshots.compactData(spark, t, targetFiles = 1,
-      minFiles = 1).nonEmpty) // materialize tombstones
+      minFiles = 1).nonEmpty) // re-writes the vectored file
     // CHECK mentions -> refuse (expression strings do not rewrite)
     Snapshots.addCheckConstraint(spark, t, "lab_ok", "label IS NOT NULL")
     val e3 = intercept[IllegalArgumentException] {
