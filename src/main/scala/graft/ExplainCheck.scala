@@ -672,34 +672,49 @@ object ExplainCheck {
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       }
     }
-    // stock row-level SQL is GROUP-GRANULAR copy-on-write: an UPDATE
-    // whose condition the stats sidecar can prune rewrites only the
-    // matching range files — untouched files carry BY NAME through the
-    // replace commit, and no row is lost across the partial-file cut
+    // stock row-level SQL commits by deletion vector: an UPDATE whose
+    // condition the stats sidecar can prune kills the matched rows in
+    // place — every original file still holding an untouched row
+    // carries BY NAME, the partly-updated one with a vector, and only
+    // the new row versions are staged
     locally {
       val root = java.nio.file.Files
         .createTempDirectory("graft_explain_rl").toString
       val t = root + "/t"
+      // eight files of 500 consecutive ids each
       graft.warehouse.Snapshots.commitAppend(spark,
-        spark.range(0, 4000).selectExpr("id", "CAST(id AS DOUBLE) AS v")
-          .repartitionByRange(8, org.apache.spark.sql.functions.col("id")),
+        spark.range(0, 4000, 1, 8).selectExpr("id", "CAST(id AS DOUBLE) AS v"),
         t)
       graft.warehouse.Snapshots.extendStats(spark, t, Seq("id"))
       spark.conf.set("spark.sql.catalog.gexrl",
         classOf[graft.sources.SnapshotCatalog].getName)
       spark.conf.set("spark.sql.catalog.gexrl.root", root)
       val before = graft.warehouse.Snapshots.filesAt(spark, t, 1L)
-      spark.sql("UPDATE gexrl.t SET v = v + 10000 WHERE id < 750")
+      def ids(f: String) = spark.read.parquet(s"$t/data/$f")
+        .agg(org.apache.spark.sql.functions.min("id"),
+          org.apache.spark.sql.functions.max("id")).head
+      val untouched = before.filter(f => ids(f).getLong(1) >= 700L)
+      val partly = before.filter { f =>
+        val r = ids(f); r.getLong(0) < 700L && r.getLong(1) >= 700L
+      }
+      spark.sql("UPDATE gexrl.t SET v = v + 10000 WHERE id < 700")
       val after = graft.warehouse.Snapshots.filesAt(spark, t, 2L)
-      val carried = after.toSet.intersect(before.toSet)
+      val vectored = graft.warehouse.Snapshots.deadRowsAt(spark, t, 2L)
+      val staged = after.filterNot(before.contains)
+      val stagedRows = staged.map(f =>
+        spark.read.parquet(s"$t/data/$f").count()).sum
       val r = spark.sql(
         "SELECT count(*) AS n, sum(CASE WHEN v >= 10000 THEN 1 ELSE 0 " +
           "END) AS bumped FROM gexrl.t").collect()(0)
-      val pass = before.size == 8 && carried.size >= 6 &&
-        r.getLong(0) == 4000L && r.getLong(1) == 750L
+      val pass = before.size == 8 && untouched.size == 7 &&
+        partly.size == 1 && untouched.forall(after.contains) &&
+        vectored.keySet == partly.toSet && stagedRows == 700L &&
+        r.getLong(0) == 4000L && r.getLong(1) == 700L
       if (!pass) { bad += 1
-        println(s"before=${before.size} carried=${carried.size} r=$r") }
-      println(f"snap_rowlevel_cow        ${if (pass) "PLAN_OK " else "PLAN_BAD"} stock UPDATE rewrites only matching files, zero rows lost")
+        println(s"before=${before.size} untouched=${untouched.size} " +
+          s"partly=$partly carried=${untouched.count(after.contains)} " +
+          s"vectored=${vectored.keySet} staged rows=$stagedRows r=$r") }
+      println(f"snap_rowlevel_dv         ${if (pass) "PLAN_OK " else "PLAN_BAD"} stock UPDATE kills rows by deletion vector: untouched rows' files carry, only new versions staged")
     }
     // registry-wide lambda lint (the dev gate TextFns/Text scaladoc points
     // at): no registered query's optimized plan may re-tokenize per array

@@ -34,9 +34,9 @@ import graft.warehouse.Snapshots
   * UPDATE, MERGE and DELETE are parsed here only for QUOTED PATHS (a
   * path has no catalog seat for Spark to resolve). Catalog identifiers
   * (`snap.t`) delegate to Spark's own DML: the catalog implements
-  * SupportsRowLevelOperations (sources/SnapshotRowLevel.scala) and
-  * SupportsDelete, so stock `UPDATE`/`MERGE INTO`/`DELETE` plan as
-  * copy-on-write commits there. All DML refuses loudly when no snapshot
+  * delta-based SupportsRowLevelOperations (sources/SnapshotRowLevel
+  * .scala), so stock `UPDATE`/`MERGE INTO`/`DELETE` commit there by
+  * deletion vector, like these verbs do. All DML refuses loudly when no snapshot
   * table exists at the target — a typo'd path must never no-op as
   * success or have MERGE quietly create a table there.
   *
@@ -315,11 +315,12 @@ object MaintenanceSql {
         Some(DeleteSnapshotWhere(SnapTarget(target), "true"))
       // UPDATE/MERGE on QUOTED PATHS stay the engine's verbs (a path
       // has no catalog seat for Spark to resolve); catalog IDENTIFIERS
-      // delegate to Spark's own row-level machinery — the catalog now
-      // implements SupportsRowLevelOperations (sources/
+      // delegate to Spark's own row-level machinery — the catalog
+      // implements delta-based SupportsRowLevelOperations (sources/
       // SnapshotRowLevel.scala), so stock `UPDATE snap.t` / `MERGE
       // INTO snap.t` (including rich clause forms this verb never
-      // parsed) plan as sidecar-pruned copy-on-write ReplaceData.
+      // parsed) plan as a sidecar-pruned WriteDelta that commits by
+      // deletion vector.
       case UpdateRe(target, sets, predicate) if target.startsWith("'") =>
         Some(UpdateSnapshotWhere(SnapTarget(target), sets.trim,
           Option(predicate).map(_.trim).orNull)) // null = no WHERE
@@ -882,7 +883,7 @@ final case class UpdateSnapshotWhere(target: MaintenanceSql.SnapTarget,
   * view/table name or a parenthesized subquery resolved by the session
   * at run time; the clause pair is the canonical upsert and may be
   * omitted (same semantics). Targets are quoted paths only — a MERGE on a catalog
-  * identifier is Spark's own, served as row-level copy-on-write
+  * identifier is Spark's own, served by deletion vectors too
   * (sources/SnapshotRowLevel.scala) — and a target with no committed
   * version refuses (MERGE never creates).
   */

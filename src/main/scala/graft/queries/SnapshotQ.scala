@@ -640,10 +640,10 @@ object SnapshotQ {
   /** Row-level SQL on CATALOG IDENTIFIERS through STOCK Spark: the
     * catalog implements SupportsRowLevelOperations (sources/
     * SnapshotRowLevel.scala), so `UPDATE <catalog>.<table>` and `MERGE
-    * INTO <catalog>.<table>` resolve through Spark's own group-based
-    * rewrite — copy-on-write ReplaceData whose scan is the
-    * sidecar-pruned catalog scan and whose write is the protocol's
-    * group-replace claim (Snapshots.commitReplaceEntries). No engine
+    * INTO <catalog>.<table>` resolve through Spark's own delta-based
+    * rewrite — a WriteDelta whose scan is the sidecar-pruned catalog
+    * scan and whose commit kills the changed rows by deletion vector and
+    * stages their new versions (Snapshots.commitRowDelta). No engine
     * parser involved: this is the statement a stock Spark user types.
     * The lifecycle: UPDATE bumps the %10=7 slice 10% (v2), MERGE
     * upserts bumped-key updates plus shifted inserts (v3), and the
@@ -682,7 +682,7 @@ object SnapshotQ {
       spark.sql(s"UPDATE $cat.t SET " +
         "o_totalprice = o_totalprice * 1.1 WHERE o_orderkey % 10 = 7")
       require(Snapshots.currentVersion(spark, root + "/t") == 2L,
-        "stock UPDATE must land exactly one replaceData commit")
+        "stock UPDATE must land exactly one deletion-vector commit")
       // v3: STOCK identifier MERGE — a further 10% bump on the same
       // keys (compounding to 1.21x, so a silently-skipped statement is
       // visible) plus shifted inserts
@@ -696,7 +696,7 @@ object SnapshotQ {
         "ON t.o_orderkey = s.o_orderkey " +
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
       require(Snapshots.currentVersion(spark, root + "/t") == 3L,
-        "stock MERGE must land exactly one replaceData commit")
+        "stock MERGE must land exactly one deletion-vector commit")
       spark.sql(s"""SELECT o_orderkey, o_custkey,
                    |round(o_totalprice, 4) AS o_totalprice
                    |FROM $cat.t""".stripMargin)

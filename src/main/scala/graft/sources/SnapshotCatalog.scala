@@ -54,9 +54,10 @@ import graft.warehouse.Snapshots
   * Scala API (a bare parquet write under `data/` would corrupt every
   * invariant; that path stays impossible).
   * `CREATE TABLE` commits v1 (schema-only when empty — CTAS works),
-  * `DROP TABLE` removes the table tree, and `DELETE FROM snap.t WHERE
-  * ...` resolves through Spark's own DSv2 delete into the protocol's
-  * row-level predicate delete. Time-travel reads
+  * `DROP TABLE` removes the table tree, and `UPDATE`, `MERGE INTO` and
+  * `DELETE FROM` resolve through Spark's own delta-based row-level
+  * rewrite into one deletion-vector commit (sources/SnapshotRowLevel
+  * .scala). Time-travel reads
   * (`VERSION/TIMESTAMP AS OF`) remain read-only — history is immutable.
   * `ALTER TABLE` column changes (rename, add, drop, widen, defaults)
   * commit through [[alterTable]]; every other ALTER, and RENAME TABLE,
@@ -107,7 +108,7 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
     val files = entries.map(n => new Path(dd, n).toString)
     val schema = Snapshots.schemaAt(spark, t, version)
     // deletion vectors DO have a seat: the scan's reader drops their
-    // positions (DeadRowScan); a legacy version without a declared
+    // positions (PositionedScan); a legacy version without a declared
     // schema has no schema to add the row-index column to
     val dead = Snapshots.deadRowsAt(spark, t, version)
     if (dead.nonEmpty && schema.isEmpty)
@@ -169,19 +170,17 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
     else {
       val sp = spark
       new Table with SupportsRead with SupportsWrite
-          with SupportsDelete
+          with SupportsMetadataColumns
           with SupportsRowLevelOperations {
-        /** STOCK Spark `UPDATE` / `MERGE INTO` / non-translatable
-          * `DELETE` (SupportsRowLevelOperations): Spark rewrites the
-          * statement into ReplaceData over a copy-on-write group scan
-          * — the scan is the ordinary sidecar-pruned catalog scan (so
-          * static predicates AND runtime group filters skip files
-          * through stats/Bloom/partition dirs), and the write commits
-          * through the protocol's group-replace claim
-          * (Snapshots.commitReplaceEntries). Translatable DELETEs
-          * still collapse to the metadata-only SupportsDelete path
-          * (Spark's OptimizeMetadataOnlyDeleteFromTable).
+        /** STOCK Spark `UPDATE` / `MERGE INTO` / `DELETE`
+          * (SupportsRowLevelOperations): Spark rewrites the statement
+          * into a WriteDelta whose row id is the metadata columns
+          * below; the scan is the ordinary sidecar-pruned catalog scan,
+          * and the commit kills the changed rows by deletion vector
+          * (Snapshots.commitRowDelta).
           */
+        override def metadataColumns(): Array[MetadataColumn] =
+          SnapshotCatalog.metadataColumns
         override def newRowLevelOperationBuilder(
             info: org.apache.spark.sql.connector.write
               .RowLevelOperationInfo)
@@ -197,25 +196,6 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
         override def newScanBuilder(
             options: CaseInsensitiveStringMap): ScanBuilder =
           pruningScanBuilder(options)
-        // `DELETE FROM snap.t WHERE ...` through Spark's own DSv2
-        // resolution: translatable filters become one predicate and the
-        // delete is the protocol's copy-on-write commit — file-granular
-        // rewrite, NULL predicates keep their rows. Untranslatable
-        // conditions refuse at analysis (canDeleteWhere), loudly.
-        override def canDeleteWhere(
-            filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-          filters.forall(f => SnapshotCatalog.filterToColumn(f).isDefined)
-        override def deleteWhere(
-            filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-          import org.apache.spark.sql.functions.lit
-          val pred = filters.toSeq
-            .map(f => SnapshotCatalog.filterToColumn(f).getOrElse(
-              throw new UnsupportedOperationException(
-                s"cannot translate DELETE condition $f")))
-            .reduceOption(_ && _).getOrElse(lit(true))
-          Snapshots.commitDeleteWhere(sp, t, pred)
-          ()
-        }
         override def newWriteBuilder(
             info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
             : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -543,8 +523,6 @@ object SnapshotCatalog {
       files: Seq[String], declared: Option[StructType],
       colmap: Map[String, String], partition: Seq[(String, String)],
       options: CaseInsensitiveStringMap,
-      onBuild: Scan => Unit = _ => (),
-      groupFilterOnly: Boolean = false,
       dead: Map[String, org.roaringbitmap.RoaringBitmap] = Map.empty)
     extends ScanBuilder
     with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -570,12 +548,17 @@ object SnapshotCatalog {
         f.copy(name = colmap.getOrElse(f.name, f.name))))
     private val physDeclared = declared.map(toPhys)
 
-    // deletion vectors: every parquet scan of a vectored version also
+    // the metadata columns the plan asked for (`_file`, `_pos`: the
+    // row id of a row-level statement); a declared column of the same
+    // name shadows one
+    private var meta: Seq[String] = Nil
+    // deletion vectors and metadata columns: the parquet scan also
     // reads each row's index within its file (Spark's parquet reader
-    // fills this column by name), and DeadRowScan drops the dead
-    // positions and the column; a version with none plans as before
+    // fills this column by name), and PositionedScan drops the dead
+    // positions and the column and serves the metadata columns; a scan
+    // that needs neither plans as before
     private def positioned(s: StructType): StructType =
-      if (dead.isEmpty) s else s.add(RowIndexField)
+      if (dead.isEmpty && meta.isEmpty) s else s.add(RowIndexField)
     private lazy val deadByUri: Map[String, org.roaringbitmap.RoaringBitmap] = {
       val uri = graft.warehouse.FileSkipping.canonical(spark,
         new Path(table, "data"), dead.keys.toSeq)._2.map(_.swap)
@@ -583,8 +566,17 @@ object SnapshotCatalog {
     }
     private def deadCount(e: String): Long =
       dead.get(e).fold(0L)(_.getLongCardinality)
-    private def withDead(s: Scan): Scan =
-      if (dead.isEmpty) s else new DeadRowScan(s, deadByUri)
+    /** `s` (a parquet scan of physical names) as the catalog serves it:
+      * logical names, and the dead rows dropped and the metadata columns
+      * served whenever it reads the row index.
+      */
+    private def served(s: Scan): Scan = {
+      val named =
+        if (colmap.isEmpty) s
+        else new SnapshotCatalog.LogicalNameScan(s, physToLogical)
+      if (!s.readSchema().fieldNames.contains(RowIndexField.name)) named
+      else new PositionedScan(named, deadByUri, meta)
+    }
 
     /** One driver-side `getFileStatus` per manifest file, fetched once
       * per scan build and served to every (re)built index below —
@@ -630,9 +622,9 @@ object SnapshotCatalog {
               Map.empty[String, String], Some(ds), PinnedStatusCache,
               Some(org.apache.spark.sql.execution.datasources
                 .PartitionSpec.emptySpec), None)
+          val withIndex = ds.add(RowIndexField)
           new org.apache.spark.sql.execution.datasources.v2.parquet
-            .ParquetScanBuilder(spark, index, positioned(ds), positioned(ds),
-              options)
+            .ParquetScanBuilder(spark, index, withIndex, withIndex, options)
         case None => // legacy no-schema table: footer inference needs
           // ParquetTable's own discovery path
           ParquetTable(scanName, spark, CaseInsensitiveStringMap.empty(),
@@ -673,21 +665,20 @@ object SnapshotCatalog {
       liveEntries = kept
       pushedCatalyst = filters
       if (kept.size < entries.size) inner = builderFor(pathsFor(kept.toSet))
-      // a ROW-LEVEL operation's pushed condition is a GROUP hint, not a
-      // row filter: the scan must return EVERY row of every kept file
-      // (Spark rewrites whole groups — a parquet record- or row-group-
-      // level filter here would silently DROP the carried rows of a
-      // partially-matching file from the rewrite). File-level sidecar
-      // skipping above stays sound: an excluded file is not replaced,
-      // so its rows survive untouched.
-      if (groupFilterOnly) filters
-      else inner.pushFilters(filters)
+      inner.pushFilters(filters)
     }
-    override def pushedFilters: Array[Predicate] =
-      if (groupFilterOnly) Array.empty else inner.pushedFilters
+    override def pushedFilters: Array[Predicate] = inner.pushedFilters
     override def pruneColumns(required: StructType): Unit = {
-      requiredLogical = Some(required)
-      inner.pruneColumns(positioned(toPhys(required)))
+      val (asked, data) = required.fields.partition(f =>
+        MetadataNames(f.name) &&
+          !declared.exists(_.fieldNames.contains(f.name)))
+      if (asked.nonEmpty && declared.isEmpty)
+        throw new UnsupportedOperationException(
+          s"$table has no declared schema: its rows have no _file/_pos " +
+            "(OPTIMIZE the table first)")
+      meta = asked.map(_.name).toSeq
+      requiredLogical = Some(StructType(data))
+      inner.pruneColumns(positioned(toPhys(StructType(data))))
     }
     /** The Aggregation with its field references renamed logical →
       * physical, so footer-stats pushdown works on RENAMED columns too
@@ -832,33 +823,24 @@ object SnapshotCatalog {
       */
     private def rebuildFor(keep: Set[String]): Scan = {
       val b = builderFor(pathsFor(keep))
-      if (!groupFilterOnly) b.pushFilters(pushedCatalyst)
+      b.pushFilters(pushedCatalyst)
       requiredLogical.foreach(r => b.pruneColumns(positioned(toPhys(r))))
-      val s = b.build()
-      withDead(if (colmap.isEmpty) s
-        else new SnapshotCatalog.LogicalNameScan(s, physToLogical))
+      served(b.build())
     }
 
     override def build(): Scan = {
       statsServed.foreach { case (schema, row) =>
         Snapshots.lastAggAnswered = Some(schema.fields.length)
-        val scan = new SnapshotCatalog.StatsAggScan(schema, row)
-        onBuild(scan)
-        return scan
+        return new SnapshotCatalog.StatsAggScan(schema, row)
       }
-      val s0 = inner.build()
-      val s = withDead(if (colmap.isEmpty) s0
-        else new SnapshotCatalog.LogicalNameScan(s0, physToLogical))
+      val s = served(inner.build())
       // a pushed aggregate rewrites the scan's output to the agg values
       // — a runtime file re-prune under it would change RESULTS, not
       // just IO (partial MIN of fewer files), so it opts out
-      val built =
-        if (aggPushed) s
-        else new SnapshotCatalog.RuntimeFilterableScan(spark, table,
-          liveEntries, declared, colmap, partition, s, rebuildFor,
-          allowRuntimeFilter = !truncated, deadCount = deadCount)
-      onBuild(built)
-      built
+      if (aggPushed) s
+      else new SnapshotCatalog.RuntimeFilterableScan(spark, table,
+        liveEntries, declared, colmap, partition, s, rebuildFor,
+        allowRuntimeFilter = !truncated, deadCount = deadCount)
     }
   }
 
@@ -893,20 +875,6 @@ object SnapshotCatalog {
 
     @volatile private var current: Scan = initial
     @volatile private var live: Seq[String] = baseEntries
-
-    /** The entry set this scan will actually read — static prune plus
-      * any runtime re-prune that already arrived. What the row-level
-      * REPLACE commit removes (sources/SnapshotRowLevel.scala).
-      */
-    private[sources] def currentEntries: Seq[String] = live
-
-    /** True once Spark pushed a runtime filter into this scan — the
-      * row-level operation's discriminator between its ReplaceData READ
-      * scan (group-filtered at execution) and the group-filter
-      * SUBQUERY's scan of the same table (never filtered). Set before
-      * any early return: the invocation is the signal, not the prune.
-      */
-    @volatile private[sources] var runtimeFilterInvoked = false
 
     /** The declared IDENTITY transform as a reported storage
       * partitioning (`SupportsReportPartitioning`): the `__gp=` dirs
@@ -1022,7 +990,6 @@ object SnapshotCatalog {
     }
 
     override def filter(predicates: Array[Predicate]): Unit = {
-      runtimeFilterInvoked = true
       // a LIMIT/TopN-truncated file list must not shrink further: the
       // kept subset is exactly sufficient for the query's k rows
       if (!allowRuntimeFilter) return
@@ -1406,28 +1373,47 @@ object SnapshotCatalog {
     }
   }
 
-  /** The column a vectored version's parquet scans add: Spark's parquet
-    * reader fills a field of this name with each row's index within its
-    * file.
+  /** The column a positioned parquet scan adds: Spark's parquet reader
+    * fills a field of this name with each row's index within its file.
     */
   private val RowIndexField = org.apache.spark.sql.types.StructField(
     ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
     org.apache.spark.sql.types.LongType)
 
-  /** Scan face that serves a vectored version: the wrapped parquet scan
-    * reads [[RowIndexField]] too, and its reader factory drops the rows
-    * whose (file, row index) `dead` holds (bitmaps by canonical file URI)
-    * and projects the column away. Rows are served one at a time (a
-    * columnar batch cannot lose rows), so a version with no vector never
-    * takes this path.
+  /** The head table's metadata columns, Iceberg's names: a row's data
+    * file URI and its row index in that file. Together they are the row
+    * id of a row-level statement (sources/SnapshotRowLevel.scala), so
+    * neither is nullable.
     */
-  private[sources] class DeadRowScan(inner: Scan,
-      dead: Map[String, org.roaringbitmap.RoaringBitmap])
+  private[sources] val FileColumn = "_file"
+  private[sources] val PosColumn = "_pos"
+  private val MetadataNames = Set(FileColumn, PosColumn)
+  private[sources] val metadataColumns: Array[MetadataColumn] =
+    Array(FileColumn -> org.apache.spark.sql.types.StringType,
+        PosColumn -> org.apache.spark.sql.types.LongType).map {
+      case (n, t) => new MetadataColumn {
+        override def name(): String = n
+        override def dataType(): org.apache.spark.sql.types.DataType = t
+        override def isNullable: Boolean = false
+      }
+    }
+
+  /** Scan face over a parquet scan that reads [[RowIndexField]]: its
+    * reader factory drops the rows whose (file, row index) `dead` holds
+    * (bitmaps by canonical file URI), projects the index column away and
+    * appends the metadata columns `meta` asks for. Rows are served one at
+    * a time (a columnar batch cannot lose rows), so a scan that needs
+    * neither never takes this path.
+    */
+  private[sources] class PositionedScan(inner: Scan,
+      dead: Map[String, org.roaringbitmap.RoaringBitmap], meta: Seq[String])
     extends WrappedScan(inner) {
-    private def rowIndex = inner.readSchema()
-      .fieldIndex(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME)
+    private def rowIndex = inner.readSchema().fieldIndex(RowIndexField.name)
     override def readSchema(): StructType =
-      StructType(inner.readSchema().fields.patch(rowIndex, Nil, 1))
+      StructType(inner.readSchema().fields.patch(rowIndex, Nil, 1) ++
+        meta.map(n => metadataColumns.find(_.name == n).map(c =>
+          org.apache.spark.sql.types.StructField(n, c.dataType,
+            nullable = false)).get))
     override def toBatch: org.apache.spark.sql.connector.read.Batch = {
       val b = inner.toBatch
       val types = inner.readSchema().fields.map(_.dataType)
@@ -1438,23 +1424,25 @@ object SnapshotCatalog {
           b.planInputPartitions()
         override def createReaderFactory()
             : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-          new DeadRowReaderFactory(b.createReaderFactory(),
+          new PositionedReaderFactory(b.createReaderFactory(),
             new graft.warehouse.DeletionVectors.RowMask(dead, Map.empty),
-            types, at)
+            types, at, meta)
       }
     }
   }
 
-  /** The reader side of [[DeadRowScan]], beside [[DispatchingReaderFactory]]:
-    * each row's file is the one the file reader announces
-    * (`InputFileBlockHolder`, what `input_file_name()` reads), its index
-    * sits at ordinal `at` of the wrapped row (of column `types`), and
-    * `mask` decides whether it is served.
+  /** The reader side of [[PositionedScan]], beside
+    * [[DispatchingReaderFactory]]: each row's file is the one the file
+    * reader announces (`InputFileBlockHolder`, what `input_file_name()`
+    * reads), its index sits at ordinal `at` of the wrapped row (of column
+    * `types`), `mask` decides whether it is served, and `meta` which of
+    * file and index it carries after its columns.
     */
-  private[sources] class DeadRowReaderFactory(
+  private[sources] class PositionedReaderFactory(
       inner: org.apache.spark.sql.connector.read.PartitionReaderFactory,
       mask: graft.warehouse.DeletionVectors.RowMask,
-      types: Array[org.apache.spark.sql.types.DataType], at: Int)
+      types: Array[org.apache.spark.sql.types.DataType], at: Int,
+      meta: Seq[String])
     extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
     override def supportColumnarReads(
         p: org.apache.spark.sql.connector.read.InputPartition): Boolean = false
@@ -1463,19 +1451,29 @@ object SnapshotCatalog {
         : org.apache.spark.sql.connector.read.PartitionReader[
           org.apache.spark.sql.catalyst.InternalRow] = {
       import org.apache.spark.sql.catalyst.expressions.{BoundReference,
-        UnsafeProjection}
+        GenericInternalRow, JoinedRow, UnsafeProjection}
       val r = inner.createReader(p)
+      // the file URI rides as one extra field after the wrapped row's
       val project = UnsafeProjection.create(types.indices.filter(_ != at)
-        .map(i => BoundReference(i, types(i), nullable = true)))
+        .map(i => BoundReference(i, types(i), nullable = true)) ++
+        meta.map { n =>
+          if (n == FileColumn) BoundReference(types.length,
+            org.apache.spark.sql.types.StringType, nullable = false)
+          else BoundReference(at, org.apache.spark.sql.types.LongType,
+            nullable = false)
+        })
+      val file = new GenericInternalRow(1)
+      val joined = new JoinedRow
       new org.apache.spark.sql.connector.read.PartitionReader[
           org.apache.spark.sql.catalyst.InternalRow] {
         private var row: org.apache.spark.sql.catalyst.InternalRow = _
         override def next(): Boolean = {
           while (r.next()) {
             val cur = r.get()
-            if (mask.live(org.apache.spark.sql.graft.ColumnBridge.inputFilePath,
-                cur.getLong(at))) {
-              row = project(cur)
+            val f = org.apache.spark.sql.graft.ColumnBridge.inputFilePath
+            if (mask.live(f, cur.getLong(at))) {
+              file.update(0, f)
+              row = project(joined(cur, file))
               return true
             }
           }
@@ -1484,42 +1482,6 @@ object SnapshotCatalog {
         override def get(): org.apache.spark.sql.catalyst.InternalRow = row
         override def close(): Unit = r.close()
       }
-    }
-  }
-
-  /** DSv2 `Filter` → `Column` for the DELETE path: Some(column) when the
-    * filter translates exactly, None otherwise (canDeleteWhere then
-    * refuses at analysis — never a silent partial delete). Covers the
-    * whole source-filter algebra Spark pushes for DELETE conditions.
-    */
-  private[sources] def filterToColumn(
-      f: org.apache.spark.sql.sources.Filter)
-      : Option[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.sources._
-    f match {
-      case EqualTo(a, v) => Some(col(a) === lit(v))
-      case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-      case GreaterThan(a, v) => Some(col(a) > lit(v))
-      case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-      case LessThan(a, v) => Some(col(a) < lit(v))
-      case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-      case In(a, vs) => Some(col(a).isInCollection(vs.toSeq))
-      case IsNull(a) => Some(col(a).isNull)
-      case IsNotNull(a) => Some(col(a).isNotNull)
-      case And(l, r) => for {
-        lc <- filterToColumn(l); rc <- filterToColumn(r)
-      } yield lc && rc
-      case Or(l, r) => for {
-        lc <- filterToColumn(l); rc <- filterToColumn(r)
-      } yield lc || rc
-      case Not(c) => filterToColumn(c).map(!_)
-      case StringStartsWith(a, v) => Some(col(a).startsWith(v))
-      case StringEndsWith(a, v) => Some(col(a).endsWith(v))
-      case StringContains(a, v) => Some(col(a).contains(v))
-      case _: AlwaysTrue => Some(lit(true))
-      case _: AlwaysFalse => Some(lit(false))
-      case _ => None
     }
   }
 }

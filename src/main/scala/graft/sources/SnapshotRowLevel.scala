@@ -3,18 +3,23 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter,
-  DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo,
-  RowLevelOperation, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.expressions.{Expressions,
+  NamedReference}
+import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.connector.write.{DataWriter, DeltaBatchWrite,
+  DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory,
+  LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta,
+  WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
+import org.roaringbitmap.RoaringBitmap
 
-import graft.warehouse.Snapshots
+import graft.warehouse.{DeletionVectors, Snapshots}
 
-/** STOCK Spark row-level SQL on snapshot tables — the
-  * `SupportsRowLevelOperations` seat (group-based, copy-on-write):
+/** STOCK Spark row-level SQL on snapshot tables — the catalog's
+  * `SupportsRowLevelOperations` seat, delta-based (merge-on-read):
   *
   * {{{
   *   UPDATE snap.t SET v = v * 1.1 WHERE k % 7 = 3
@@ -22,210 +27,152 @@ import graft.warehouse.Snapshots
   *     WHEN MATCHED AND s.del THEN DELETE
   *     WHEN MATCHED THEN UPDATE SET v = s.v
   *     WHEN NOT MATCHED THEN INSERT *
-  *   DELETE FROM snap.t WHERE lower(v) LIKE '%x%'  -- untranslatable
+  *   DELETE FROM snap.t WHERE lower(v) LIKE '%x%'
   * }}}
   *
-  * Spark rewrites each statement into ReplaceData over this operation:
-  * the SCAN is the ordinary sidecar-pruned catalog scan
-  * (SnapshotCatalog.PruningScanBuilder — pushed predicates AND the
-  * runtime group-filter key sets skip files through the stats/Bloom/
-  * partition sidecars, so a keyed MERGE touches the keys' files, not
-  * the table), Spark recomputes the surviving rows of exactly the
-  * files that scan read, and the WRITE stages them distributed
-  * (executors write parquet under unique names, partition-transform
-  * dirs included) before ONE atomic group-replace claim
-  * ([[Snapshots.commitReplaceEntries]]) swaps the scanned files for
-  * the staged ones. Concurrent commits that churned any scanned file
-  * refuse with a conflict, appends land untouched — the Delta/Iceberg
-  * copy-on-write discipline on this engine's manifest protocol.
-  *
-  * Translatable DELETEs never reach here: Spark's
-  * OptimizeMetadataOnlyDeleteFromTable collapses them back to the
-  * catalog's SupportsDelete face (the protocol's file-granular
-  * predicate delete).
+  * Spark rewrites each statement into a WriteDelta over this operation
+  * (`SupportsDelta`, the shape Iceberg's position deletes use). The row
+  * id is the pair of head-table metadata columns `_file` (the row's
+  * data file URI) and `_pos` (its parquet row index there), served by
+  * the ordinary sidecar-pruned catalog scan
+  * ([[SnapshotCatalog.PruningScanBuilder]]), which also drops rows
+  * already dead. An UPDATE arrives as delete + insert
+  * (`representUpdateAsDeleteAndInsert`): each task folds the deleted
+  * ids into one RoaringBitmap per file and stages the inserted rows
+  * through [[SnapshotStreamDataWriter]], and the driver's commit
+  * ([[Snapshots.commitRowDelta]]) kills the positions by deletion
+  * vector and publishes the staged rows in one claim. Untouched rows
+  * stay where they are: no original file is re-written unless its dead
+  * share passes the deletion-vector re-write bound.
   */
 private[sources] class SnapshotRowLevelOperation(spark: SparkSession,
     table: String, cmd: RowLevelOperation.Command)
-  extends RowLevelOperation {
+  extends SupportsDelta {
 
-  // every scan Spark builds through this operation: the ReplaceData
-  // READ scan, and — when the runtime group filter fires —
-  // RowLevelOperationRuntimeGroupFiltering's matching-rows SUBQUERY
-  // scan of the same table (the rule re-enters this operation's
-  // newScanBuilder via the cloned RowLevelOperationTable relation).
-  // Build ORDER is not a safe discriminator (observed: MERGE builds
-  // the subquery scan first, UPDATE the read scan first); committing
-  // the wrong one either deletes never-rewritten rows (replaced ⊋
-  // scanned) or duplicates rewritten ones (replaced ⊊ scanned).
-  private val builtScans = scala.collection.mutable.ListBuffer
-    .empty[SnapshotCatalog.RuntimeFilterableScan]
-
-  /** The files the executed ReplaceData read actually covered — what
-    * the group-replace commit removes. The READ scan is the one Spark
-    * pushed its runtime group filter into (`runtimeFilterInvoked`);
-    * with no group filter there is exactly one scan. Any other shape
-    * is refused loudly: guessing here is silent data loss.
-    */
-  private[sources] def scannedEntries: Seq[String] =
-    builtScans.synchronized {
-      val scans = builtScans.toList
-      val filtered = scans.filter(_.runtimeFilterInvoked)
-      (filtered, scans) match {
-        case (one :: Nil, _) => one.currentEntries
-        case (Nil, one :: Nil) => one.currentEntries
-        case (Nil, Nil) => throw new IllegalStateException(
-          s"row-level $cmd on $table committed before its scan was " +
-            "planned")
-        case _ => throw new IllegalStateException(
-          s"row-level $cmd on $table planned ${scans.size} scans, " +
-            s"${filtered.size} runtime-filtered — cannot identify the " +
-            "ReplaceData read scan; refusing the commit")
-      }
-    }
-
-  // the version context the operation runs against, pinned at scan
-  // build; the commit's conflict check re-verifies against the head
-  private[sources] val head = Snapshots.currentVersion(spark, table)
-  private[sources] val colmap = Snapshots.colmapAt(spark, table, head)
+  // the version the operation runs against, pinned at scan build; the
+  // commit refuses if a file it changed moved since
+  private val head = Snapshots.currentVersion(spark, table)
+  private val colmap = Snapshots.colmapAt(spark, table, head)
   private val partition = Snapshots.partitionsAt(spark, table, head)
-  private[sources] val partitionRaw: Option[String] =
-    graft.warehouse.Manifest.partitionHeader(partition)
 
   override def command(): RowLevelOperation.Command = cmd
+
+  override def rowId(): Array[NamedReference] = Array(
+    Expressions.column(SnapshotCatalog.FileColumn),
+    Expressions.column(SnapshotCatalog.PosColumn))
+
+  override def representUpdateAsDeleteAndInsert(): Boolean = true
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder = {
     val dd = new Path(table, "data")
     val entries = Snapshots.filesAt(spark, table, head)
-    val files = entries.map(n => new Path(dd, n).toString)
-    val schema = Snapshots.schemaAt(spark, table, head)
     new SnapshotCatalog.PruningScanBuilder(spark, table,
-      s"$table@rowlevel-v$head", entries, files, schema, colmap,
-      partition, options, onBuild = {
-        case r: SnapshotCatalog.RuntimeFilterableScan =>
-          builtScans.synchronized { builtScans += r }
-          ()
-        case _: Scan => () // agg/stats shapes never occur in this plan
-      },
-      // the pushed condition selects GROUPS, never rows: every row of
-      // every kept file must come back or the rewrite loses the
-      // carried rows of partially-matching files (the live ones: dead
-      // positions leave with the file's vector)
-      groupFilterOnly = true,
+      s"$table@rowlevel-v$head", entries,
+      entries.map(n => new Path(dd, n).toString),
+      Snapshots.schemaAt(spark, table, head), colmap, partition, options,
       dead = Snapshots.deadRowsAt(spark, table, head))
   }
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new SnapshotReplaceWrite(spark, table, this, info.schema())
-}
+  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
+    new DeltaWriteBuilder with DeltaWrite with DeltaBatchWrite {
+      private val rowSchema = info.schema()
+      private val physSchema = StructType(rowSchema.fields.map(f =>
+        f.copy(name = colmap.getOrElse(f.name, f.name))))
 
-/** The ReplaceData write: executors stage the replacement rows as
-  * parquet files under `data/` (unique names, partition dirs routed
-  * exactly like the batch/stream stagers — [[SnapshotStreamDataWriter]]
-  * is the shared per-task writer), and the driver's commit swaps the
-  * scanned files for the staged ones in one claim.
-  */
-private[sources] class SnapshotReplaceWrite(spark: SparkSession,
-    table: String, op: SnapshotRowLevelOperation, querySchema: StructType)
-  extends WriteBuilder
-  with org.apache.spark.sql.connector.write.Write with BatchWrite {
+      override def build(): DeltaWrite = this
+      override def toBatch: DeltaBatchWrite = this
 
-  override def build(): org.apache.spark.sql.connector.write.Write = this
-  override def toBatch: BatchWrite = this
-
-  private val physSchema = StructType(querySchema.fields.map(f =>
-    f.copy(name = op.colmap.getOrElse(f.name, f.name))))
-  private val partition: Seq[(String, String, Int)] = {
-    val declared = Snapshots.partitionsAt(spark, table,
-      Snapshots.currentVersion(spark, table))
-    if (declared.forall(p => querySchema.fieldNames.contains(p._1)))
-      declared.map { case (c, k) =>
-        (c, k, querySchema.fieldNames.indexOf(c))
+      override def createBatchWriterFactory(
+          pinfo: PhysicalWriteInfo): DeltaWriterFactory = {
+        val dd = new Path(table, "data")
+        val hconf = spark.sessionState.newHadoopConf()
+        dd.getFileSystem(hconf).mkdirs(dd)
+        val job = org.apache.hadoop.mapreduce.Job.getInstance(hconf)
+        val factory = new org.apache.spark.sql.execution.datasources
+          .parquet.ParquetFileFormat()
+          .prepareWrite(spark, job, Map.empty, physSchema)
+        // partition dirs route by the declared transforms' columns
+        val routed =
+          if (partition.forall(p => rowSchema.fieldNames.contains(p._1)))
+            partition.map { case (c, k) =>
+              (c, k, rowSchema.fieldNames.indexOf(c))
+            }
+          else Nil
+        new SnapshotDeltaWriterFactory(factory,
+          new SerializableConfiguration(job.getConfiguration),
+          dd.toString, physSchema, routed,
+          spark.sessionState.conf.sessionLocalTimeZone)
       }
-    else Nil
-  }
 
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    val dd = new Path(table, "data")
-    val hconf = spark.sessionState.newHadoopConf()
-    dd.getFileSystem(hconf).mkdirs(dd)
-    val job = org.apache.hadoop.mapreduce.Job.getInstance(hconf)
-    val factory = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, physSchema)
-    new OperationStrippingWriterFactory(
-      new SnapshotBatchWriterFactory(factory,
-        new SerializableConfiguration(job.getConfiguration),
-        dd.toString, physSchema, partition,
-        spark.sessionState.conf.sessionLocalTimeZone),
-      physSchema)
-  }
+      override def commit(messages: Array[WriterCommitMessage]): Unit = {
+        val parts = messages.toSeq.collect { case m: RowDeltaMessage => m }
+        Snapshots.commitRowDelta(spark, table,
+          cmd.name().toLowerCase(java.util.Locale.ROOT),
+          DeletionVectors.fold(parts.flatMap(_.dead)),
+          parts.flatMap(_.staged), rowSchema, colmap,
+          graft.warehouse.Manifest.partitionHeader(partition), head)
+        ()
+      }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.toSeq
-      .collect { case StagedFileMessage(es) => es }.flatten
-    Snapshots.commitReplaceEntries(spark, table, op.scannedEntries,
-      staged, op.colmap, op.partitionRaw, scannedAt = Some(op.head))
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val dd = new Path(table, "data")
-    val f = dd.getFileSystem(spark.sessionState.newHadoopConf())
-    messages.toSeq.collect { case StagedFileMessage(es) => es }.flatten
-      .foreach(n => f.delete(new Path(dd, n), false))
-  }
-}
-
-/** Strips the OPERATION column Spark's group-based row-level rewrite
-  * PREPENDS to every ReplaceData row (RowDeltaUtils.WRITE_OPERATION at
-  * ordinal 0): Spark only projects it away itself when the operation
-  * declares metadata attributes (DataAndMetadataWritingSparkTask); a
-  * metadata-free connector receives the raw [op, data...] rows and
-  * must slice off the tag. Defensive on both axes: rows already at the
-  * data width pass through untouched, and an unexpected width or a
-  * non-write tag throws rather than writing a misaligned row.
-  */
-private[sources] class OperationStrippingWriterFactory(
-    inner: DataWriterFactory, dataSchema: StructType)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val delegate = inner.createWriter(partitionId, taskId)
-      private val width = dataSchema.fields.length
-      private val proj = org.apache.spark.sql.catalyst
-        .ProjectingInternalRow(dataSchema, (1 to width).toIndexedSeq)
-      private val writeOps = Set(
-        org.apache.spark.sql.catalyst.util.RowDeltaUtils.WRITE_OPERATION,
-        org.apache.spark.sql.catalyst.util.RowDeltaUtils
-          .WRITE_WITH_METADATA_OPERATION)
-      override def write(row: InternalRow): Unit =
-        if (row.numFields == width) delegate.write(row)
-        else if (row.numFields == width + 1 &&
-            writeOps.contains(row.getInt(0))) {
-          proj.project(row)
-          delegate.write(proj)
-        } else throw new IllegalStateException(
-          s"ReplaceData row has ${row.numFields} fields for a " +
-            s"$width-column write schema — unexpected row-level shape")
-      override def commit(): WriterCommitMessage = delegate.commit()
-      override def abort(): Unit = delegate.abort()
-      override def close(): Unit = delegate.close()
+      override def abort(messages: Array[WriterCommitMessage]): Unit = {
+        val dd = new Path(table, "data")
+        val f = dd.getFileSystem(spark.sessionState.newHadoopConf())
+        messages.toSeq.collect { case m: RowDeltaMessage => m.staged }
+          .flatten.foreach(n => f.delete(new Path(dd, n), false))
+      }
     }
 }
 
-/** Batch twin of [[SnapshotStreamingWriterFactory]] — same per-task
-  * lazy-per-dir parquet writer, batch `DataWriterFactory` face.
+/** A task's share of a row-level statement: the `data/` entries it
+  * staged and, per file URI it deleted rows of, their positions as a
+  * serialized bitmap.
   */
-private[sources] class SnapshotBatchWriterFactory(
+private[sources] case class RowDeltaMessage(staged: Seq[String],
+    dead: Seq[(String, Array[Byte])]) extends WriterCommitMessage
+
+private[sources] class SnapshotDeltaWriterFactory(
     factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
     conf: SerializableConfiguration, dataDir: String, schema: StructType,
     partition: Seq[(String, String, Int)], zone: String)
-  extends DataWriterFactory {
+  extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    new SnapshotStreamDataWriter(factory, conf, dataDir, schema,
-      partition, zone, partitionId, taskId, epochId = 0L)
+      taskId: Long): DeltaWriter[InternalRow] =
+    new SnapshotDeltaWriter(new SnapshotStreamDataWriter(factory, conf,
+      dataDir, schema, partition, zone, partitionId, taskId, epochId = 0L))
+}
+
+/** Executor side of a row-level statement: a deleted row id
+  * (`_file`, `_pos`) sets its position in its file's bitmap, an
+  * inserted row is staged by `rows`. Updates never arrive: the
+  * operation represents them as delete + insert.
+  */
+private[sources] class SnapshotDeltaWriter(rows: DataWriter[InternalRow])
+  extends DeltaWriter[InternalRow] {
+  private val dead =
+    scala.collection.mutable.LinkedHashMap.empty[String, RoaringBitmap]
+  // rows arrive file by file: look the bitmap up once per file change
+  private var lastFile: UTF8String = _
+  private var last: RoaringBitmap = _
+
+  override def delete(metadata: InternalRow, id: InternalRow): Unit = {
+    val file = id.getUTF8String(0)
+    if (lastFile == null || !lastFile.equals(file)) {
+      lastFile = file.clone()
+      last = dead.getOrElseUpdate(file.toString, new RoaringBitmap)
+    }
+    last.add(Math.toIntExact(id.getLong(1)))
+  }
+  override def update(metadata: InternalRow, id: InternalRow,
+      row: InternalRow): Unit = throw new UnsupportedOperationException(
+    "snapshot tables take an UPDATE as delete + insert")
+  override def insert(row: InternalRow): Unit = rows.write(row)
+
+  override def commit(): WriterCommitMessage = rows.commit() match {
+    case StagedFileMessage(staged) => RowDeltaMessage(staged,
+      dead.iterator.map { case (f, b) => f -> DeletionVectors.serialize(b) }
+        .toSeq)
+  }
+  override def abort(): Unit = rows.abort()
+  override def close(): Unit = rows.close()
 }

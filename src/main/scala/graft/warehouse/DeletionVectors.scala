@@ -213,7 +213,7 @@ private[graft] object DeletionVectors {
     val enc = org.apache.spark.sql.Encoders.tuple(
       org.apache.spark.sql.Encoders.STRING,
       org.apache.spark.sql.Encoders.BINARY)
-    df.select(org.apache.spark.sql.functions.col(FileCol),
+    fold(df.select(org.apache.spark.sql.functions.col(FileCol),
         org.apache.spark.sql.functions.col(RowCol))
       .mapPartitions { it =>
         val acc = scala.collection.mutable.HashMap.empty[String, RoaringBitmap]
@@ -222,11 +222,17 @@ private[graft] object DeletionVectors {
             .add(Math.toIntExact(r.getLong(1)))
         }
         acc.iterator.map { case (f, b) => (f, serialize(b)) }
-      }(enc).collect().toSeq
-      .groupBy(r => Layout.canonUri(r._1))
+      }(enc).collect().toSeq)
+  }
+
+  /** Per-task position bitmaps (file URI, serialized bitmap) as one
+    * bitmap per canonical file URI: a file split across tasks ORs its
+    * parts.
+    */
+  def fold(parts: Seq[(String, Array[Byte])]): Map[String, RoaringBitmap] =
+    parts.groupBy(r => Layout.canonUri(r._1))
       .map { case (f, bs) => f -> RoaringBitmap.or(
         bs.map(b => deserialize(b._2)).iterator.asJava) }
-  }
 
   /** The positioned columns of a file scan's hidden `_metadata`. */
   def positionCols: Seq[Column] = {

@@ -1084,9 +1084,9 @@ object Snapshots {
     * files, and the union-evolve would re-expose them (see
     * [[commitDropColumn]]).
     */
-  private def refuseDroppedColumns(batch: DataFrame, table: String,
+  private def refuseDroppedColumns(schema: types.StructType, table: String,
       m: Manifest): Unit = {
-    val hit = batch.schema.fieldNames.filter(m.dropped.toSet)
+    val hit = schema.fieldNames.filter(m.dropped.toSet)
     require(hit.isEmpty,
       s"column(s) ${hit.mkString(", ")} were DROPPED from $table and " +
         "their pre-drop data still exists in carried files — OPTIMIZE " +
@@ -1144,10 +1144,25 @@ object Snapshots {
     * WRITE half of the column-mapping boundary: the logical frame's
     * renamed columns stage under their PHYSICAL names, so data files
     * stay uniformly physical whatever commit staged them.
+    *
+    * A batch of local rows ([[isLocal]]) is small by construction and
+    * lands as one file per partition dir, not one per default-
+    * parallelism slice, unless its plan asks for a layout (an explicit
+    * `repartition`/`repartitionByRange`). `survivors`, the live rows a
+    * row-level commit re-writes, stage in the same write.
     */
-  private def stageData(spark: SparkSession, batch0: DataFrame,
+  private def stageData(spark: SparkSession, batch: DataFrame,
       table: String, colmap: Map[String, String],
-      partition: Seq[(String, String)] = Nil): Seq[String] = {
+      partition: Seq[(String, String)] = Nil,
+      survivors: Option[DataFrame] = None): Seq[String] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Repartition,
+      RepartitionByExpression}
+    val shaped = isLocal(batch) && batch.queryExecution.analyzed.find {
+      case _: Repartition | _: RepartitionByExpression => true
+      case _ => false
+    }.isEmpty
+    val rows = survivors.foldLeft(if (shaped) batch.coalesce(1) else batch)(
+      _ unionByName _)
     val dd = dataDir(table)
     val f = fs(spark, dd)
     val staging = new Path(table, s"_staging-${java.util.UUID.randomUUID}")
@@ -1158,9 +1173,9 @@ object Snapshots {
     // column stages flat (its entries carry no prefix, so every pruner
     // always reads them — sound).
     val routed = partition
-      .filter(_ => partition.forall(p => batch0.columns.contains(p._1)))
+      .filter(_ => partition.forall(p => rows.columns.contains(p._1)))
     if (routed.nonEmpty) {
-      val withDirs = routed.zipWithIndex.foldLeft(batch0) {
+      val withDirs = routed.zipWithIndex.foldLeft(rows) {
         case (df, ((c, kind), i)) =>
           df.withColumn(partLevelCol(i), partitionExpr(c, kind))
       }
@@ -1181,7 +1196,7 @@ object Snapshots {
       toPhysical(shaped, colmap).write
         .partitionBy(routed.indices.map(partLevelCol): _*)
         .parquet(staging.toString)
-    } else toPhysical(batch0, colmap).write.parquet(staging.toString)
+    } else toPhysical(rows, colmap).write.parquet(staging.toString)
     f.mkdirs(dd)
     // collect staged files RECURSIVELY, keeping the partition dirs in
     // the manifest entry (relative paths resolve through two-arg Path
@@ -1387,7 +1402,7 @@ object Snapshots {
       // an append re-introducing a DROPPED column name would expose
       // pre-drop values from carried files; overwrite replaces every
       // file, so the name becomes legitimately reusable
-      if (!replace) refuseDroppedColumns(batch, table, m)
+      if (!replace) refuseDroppedColumns(batch.schema, table, m)
       requireLayout(m, table, what,
         if (replace) None else Some(stagedAt.colmap),
         stagedAt.partitionHeader, prefixed = true)
@@ -1410,7 +1425,7 @@ object Snapshots {
     val batch = if (replace) batch0 else fillWriteDefaults(batch0, head.schema)
     if (!replace) {
       evolveSchema(head.schema, batch.schema)
-      refuseDroppedColumns(batch, table, head)
+      refuseDroppedColumns(batch.schema, table, head)
     }
     // overwrite RESETS the declared schema, so the head schema must not
     // conform the batch here: a legitimate column-type-changing overwrite
@@ -1623,12 +1638,8 @@ object Snapshots {
           p.select(DeletionVectors.FileCol, DeletionVectors.RowCol))))
       .getOrElse(Map.empty)
     val kill = killRows(spark, table, m, dead)
-    // a batch of local rows is small by construction: it lands as one
-    // file (per partition dir), not one per default-parallelism slice
-    val batch = if (isLocal(changes0)) upserts.coalesce(1) else upserts
-    val newFiles = stageData(spark,
-      kill.survivors.fold(batch)(sv => batch.unionByName(conform(sv, schema))),
-      table, colmap, m.partitions)
+    val newFiles = stageData(spark, upserts, table, colmap, m.partitions,
+      kill.survivors.map(conform(_, schema)))
     (kill(m).copy(schema = Some(schema), files = kill(m).files ++ newFiles),
       dataPaths(newFiles) ++ kill.staged)
   }
@@ -1735,7 +1746,7 @@ object Snapshots {
       // evolve first, then conform BOTH sides: a merge may introduce a
       // new column (target rows null-pad) or omit one (batch null-pads)
       // — but never a DROPPED name while pre-drop files are carried
-      refuseDroppedColumns(batch, table, m)
+      refuseDroppedColumns(batch.schema, table, m)
       val schema = evolveSchema(m.schema, batch.schema)
       val (next, staged) = cowApply(spark, table, m, schema,
         conform(batch, schema), keys, deleteCol = None)
@@ -2732,7 +2743,7 @@ object Snapshots {
               "select them explicitly (or sink via foreachBatch + " +
               "commitStreamAppend)")
         }
-        refuseDroppedColumns(batch, table, m)
+        refuseDroppedColumns(batch.schema, table, m)
         enforceChecks(batch, m.checks, table, m.schema)
         requireLayout(m, table, "stream append", Some(stagedColmap),
           stagedPartition, staged.exists(_.contains(PartPrefix)))
@@ -2743,67 +2754,67 @@ object Snapshots {
     }
   }
 
-  /** GROUP-REPLACE commit — the protocol seat for STOCK Spark row-level
-    * SQL (`UPDATE` / `MERGE INTO` / copy-on-write `DELETE` through the
-    * catalog's SupportsRowLevelOperations face, sources/
-    * SnapshotRowLevel.scala): the already-staged files REPLACE exactly
-    * `replaced` (the files the operation's scan read — Spark rewrote
-    * their surviving rows), every other file carries by name, one
-    * atomic claim publishes. Validation mirrors the staged stream
-    * commit: checks and dropped columns enforced on the staged rows
-    * read back through the writers' colmap; a racing RENAME or
+  /** The vector commit of stock row-level SQL — `UPDATE`, `MERGE INTO`
+    * and `DELETE` on a catalog identifier, through the catalog's
+    * delta-based row-level seat (sources/SnapshotRowLevel.scala). The
+    * executors already found the changed rows and staged their new
+    * versions: `deadByUri` holds the positions of the rows the statement
+    * deleted or replaced, by canonical file URI, as of the scan at
+    * version `scannedAt`, and `staged` the new row versions (`data/`
+    * entries written under `stagedColmap`, logical schema `rowSchema`).
+    * The dead rows die like every other row-level commit's
+    * ([[killRows]]: a cumulative vector, or a re-write past
+    * [[DeletionVectors.MaxDeadFraction]]), every other file carries by
+    * name, and one claim publishes, stamped with `op` (the SQL command).
+    * CHECK constraints bind the staged rows; a racing RENAME or
     * partition-transform change refuses (stale physical names / dir
     * values).
     *
-    * CONFLICTS refuse, never merge: if any replaced file is no longer
-    * referenced at claim time (a concurrent rewrite/delete/OPTIMIZE
-    * churned it) or its deletion vector changed since the scan at
-    * version `scannedAt`, the staged files are reclaimed and a
-    * ConcurrentModificationException surfaces — the Delta/Iceberg
-    * write-conflict discipline. Racing
-    * APPENDS are fine (their files are not replaced; the operation ran
-    * on its snapshot — ordinary snapshot isolation).
+    * CONFLICTS refuse, never merge: if a touched entry is no longer
+    * referenced at claim time (a concurrent re-write churned it) or its
+    * deletion vector changed since the scan (a concurrent row-level
+    * commit killed more of its rows, so the positions no longer describe
+    * what the statement read), the staged files are reclaimed and a
+    * ConcurrentModificationException surfaces. Racing APPENDS are fine:
+    * their files are not touched.
     */
-  def commitReplaceEntries(spark: SparkSession, table: String,
-      replaced: Seq[String], staged: Seq[String],
-      stagedColmap: Map[String, String],
-      stagedPartition: Option[String] = None,
-      scannedAt: Option[Long] = None): Long = {
-    if (replaced.isEmpty && staged.isEmpty)
-      return currentVersion(spark, table) // nothing scanned, nothing written
-    val replacedSet = replaced.toSet
+  private[graft] def commitRowDelta(spark: SparkSession, table: String,
+      op: String, deadByUri: Map[String, org.roaringbitmap.RoaringBitmap],
+      staged: Seq[String], rowSchema: types.StructType,
+      stagedColmap: Map[String, String], stagedPartition: Option[String],
+      scannedAt: Long): Long = {
+    if (deadByUri.isEmpty && staged.isEmpty)
+      return currentVersion(spark, table) // nothing matched
+    val scan = manifestAt(spark, table, scannedAt)
+    val dead = probedPositions(spark, table, scan.files, deadByUri)
     lazy val batch = readStaged(spark, table, staged, stagedColmap)
-    transact(spark, table, "replaceData",
-        staged.map(new Path(dataDir(table), _))) { m =>
-      val gone = replaced.filterNot(m.files.toSet)
-      if (gone.nonEmpty)
+    transact(spark, table, op, staged.map(new Path(dataDir(table), _))) { m =>
+      val gone = dead.keys.filterNot(m.files.toSet)
+      val moved = dead.keys.filter(e => m.dvs.get(e) != scan.dvs.get(e))
+      if (gone.nonEmpty || moved.nonEmpty)
         throw new java.util.ConcurrentModificationException(
-          s"row-level write to $table conflicts with a concurrent " +
-            s"commit: ${gone.size} of the ${replaced.size} scanned " +
-            "file(s) are no longer referenced at the head — re-run the " +
-            "statement against the new snapshot")
-      requireLayout(m, table, "row-level write", Some(stagedColmap),
+          s"row-level $op on $table conflicts with a concurrent commit: " +
+            s"of the ${dead.size} file(s) it changed, ${gone.size} left " +
+            s"the head and ${moved.size} gained deletion vectors since " +
+            "the scan — re-run the statement against the new snapshot")
+      requireLayout(m, table, s"row-level $op", Some(stagedColmap),
         stagedPartition, staged.exists(_.contains(PartPrefix)))
-      // a replaced file whose deletion vector changed since the scan (a
-      // concurrent row-level commit killed more of its rows) was read
-      // with rows the rewrite would bring back
-      scannedAt.map(manifestAt(spark, table, _)).foreach { s =>
-        val moved = replaced.filter(e => m.dvs.get(e) != s.dvs.get(e))
-        if (moved.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"row-level write to $table conflicts with a concurrent " +
-              s"commit: ${moved.size} scanned file(s) gained deletion " +
-              "vectors since the scan — re-run the statement")
-      }
       val schema =
-        if (staged.isEmpty) m.schema // all scanned rows deleted
+        if (staged.isEmpty) m.schema
         else {
-          refuseDroppedColumns(batch, table, m)
-          enforceChecks(batch, m.checks, table, m.schema)
-          Some(evolveSchema(m.schema, batch.schema))
+          refuseDroppedColumns(rowSchema, table, m)
+          // only a CHECK reads the staged rows back
+          if (m.checks.nonEmpty)
+            enforceChecks(batch, m.checks, table, m.schema)
+          Some(evolveSchema(m.schema, rowSchema))
         }
-      claim(m.copy(schema = schema,
-        files = m.files.filterNot(replacedSet) ++ staged))
+      val kill = killRows(spark, table, m, dead)
+      val rewritten = kill.survivors
+        .map(stageData(spark, _, table, m.colmap, m.partitions))
+        .getOrElse(Nil)
+      Claim(kill(m).copy(schema = schema,
+          files = kill(m).files ++ staged ++ rewritten),
+        rewritten.map(new Path(dataDir(table), _)) ++ kill.staged, identity)
     }
   }
 

@@ -57,7 +57,7 @@ class BloomIndexSpec extends AnyFunSuite {
       s"covered lookup opened $chosen of $total")
   }
 
-  test("string keys, clone foreign refs, and tombstones compose") {
+  test("string keys, clone foreign refs, and deletion vectors compose") {
     val t = freshTable()
     Snapshots.commitAppend(spark,
       (1L to 200L).map(i => (s"user$i", i)).toDF("uid", "x")

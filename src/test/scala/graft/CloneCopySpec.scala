@@ -102,7 +102,7 @@ class CloneCopySpec extends AnyFunSuite {
     assert(Snapshots.read(spark, dst).count() == 51L)
   }
 
-  test("clone carries checks, pending tombstones (sidecars copied), and stream marks") {
+  test("clone carries checks, deletion vectors (own vector files), and stream marks") {
     val root = freshRoot()
     val src = root + "/src"
     Snapshots.commitStreamAppend(spark,

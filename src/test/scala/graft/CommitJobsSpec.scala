@@ -140,6 +140,27 @@ class CommitJobsSpec extends AnyFunSuite {
       r(55L) == "hot" && r(54L) == "v54")
   }
 
+  test("a one-key catalog UPDATE on a multi-file table runs one job") {
+    val t = table()
+    val cat = "gjobs_" + java.util.UUID.randomUUID.toString.take(8)
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root",
+      new java.io.File(t).getParent)
+    val files = Snapshots.filesAt(spark, t, 6L)
+    // the scan finds the row and the same job stages its new version;
+    // the commit kills it by vector on the driver, reading no staged
+    // file back. (The copy-on-write ReplaceData this replaced ran 2: the
+    // re-write of the matched file, then a read of the staged files'
+    // schema.)
+    val (_, n) = jobsOf(spark.sql(s"UPDATE $cat.t SET v = 'hot' WHERE id = 25"))
+    assert(n <= 1, s"catalog UPDATE ran $n jobs; want <= 1 (scan and write)")
+    assert(Snapshots.filesAt(spark, t, 7L).take(6) == files)
+    assert(Snapshots.deadRowsAt(spark, t, 7L).keySet == Set(files(2)))
+    val r = rows(t)
+    assert(r.size == 60 && r(25L) == "hot" && r(24L) == "v24")
+  }
+
   /** [[table]] with a third column `x` = 2 × id and `_graft_stats` on all
     * three columns.
     */

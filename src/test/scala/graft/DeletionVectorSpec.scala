@@ -298,9 +298,13 @@ class DeletionVectorSpec extends AnyFunSuite {
     val scanned = Snapshots.filesAt(spark, t, after).take(1)
     // a concurrent keyed DELETE kills another row of the scanned file
     Snapshots.commitDelete(spark, t, Seq(4L), "id")
+    // a statement that scanned `after` killing the file's first row
+    val uri = graft.warehouse.FileSkipping.canonical(spark,
+      new org.apache.hadoop.fs.Path(t, "data"), scanned)._1.head
     intercept[java.util.ConcurrentModificationException] {
-      Snapshots.commitReplaceEntries(spark, t, scanned, Nil, Map.empty,
-        scannedAt = Some(after))
+      Snapshots.commitRowDelta(spark, t, "update",
+        Map(uri -> org.roaringbitmap.RoaringBitmap.bitmapOf(0)), Nil,
+        Snapshots.read(spark, t).schema, Map.empty, None, scannedAt = after)
     }
     assert(ids(Snapshots.read(spark, t)) == Live - 4L)
     // through SQL: an UPDATE runs against the head and sees only live rows

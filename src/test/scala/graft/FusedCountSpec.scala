@@ -44,7 +44,7 @@ class FusedCountSpec extends AnyFunSuite {
     assert(s2(6L).contains(0.0) && s2(5L).contains(5.0) && s2(12L).isEmpty)
   }
 
-  test("already-tombstoned rows in an affected file neither count nor re-land") {
+  test("already-vectored rows in an affected file neither count nor re-land") {
     val t = table()
     Snapshots.commitDelete(spark, t, Seq(2L, 3L), "id")
     val files = Snapshots.filesAt(spark, t, 2L)

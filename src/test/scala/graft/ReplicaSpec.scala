@@ -118,7 +118,7 @@ class ReplicaSpec extends AnyFunSuite {
     assert(state(dst) == state(src))
   }
 
-  test("a replica-local lazy delete survives a feed sync (no resurrection)") {
+  test("a replica-local vectored delete survives a feed sync (no resurrection)") {
     val (src, dst) = pair()
     Snapshots.commitAppend(spark,
       (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1), src)

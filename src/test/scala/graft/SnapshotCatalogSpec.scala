@@ -110,14 +110,14 @@ class SnapshotCatalogSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE gw.t2 AS SELECT id FROM range(4)")
     assert(spark.sql("SELECT count(*) FROM gw.t2").head.getLong(0) == 4L)
     assert(spark.sql("SHOW TABLES IN gw").count() == 2)
-    // identifier DELETE resolves through Spark's own DSv2 machinery
-    // into the protocol's copy-on-write predicate delete
+    // identifier DELETE resolves through Spark's own row-level
+    // machinery into one deletion-vector commit
     spark.sql("DELETE FROM gw.t2 WHERE id >= 2")
     assert(spark.sql("SELECT id FROM gw.t2").collect()
       .map(_.getLong(0)).toSet == Set(0L, 1L))
     assert(Snapshots.history(spark, root + "/t2").select("op").collect()
       .map(_.getString(0)).toSeq.head == "delete",
-      "the DSv2 delete must be one protocol commit")
+      "the SQL delete must be one protocol commit")
     spark.sql("DROP TABLE gw.t2")
     assert(spark.sql("SHOW TABLES IN gw").count() == 1)
   }

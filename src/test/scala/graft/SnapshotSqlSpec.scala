@@ -426,7 +426,8 @@ class SnapshotSqlSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.catalog.gsqlrl.root", root)
     // identifier UPDATE — Spark's OWN row-level rewrite (the parser no
     // longer intercepts identifiers; the catalog has a
-    // SupportsRowLevelOperations seat), committed as replaceData
+    // SupportsRowLevelOperations seat), committed by deletion vector
+    // under the statement's own op
     spark.sql("UPDATE gsqlrl.t SET x = x + 1 WHERE id <= 2")
     assert(spark.sql("SELECT x FROM gsqlrl.t WHERE id = 1").head
       .getDouble(0) == 11.0)
@@ -443,7 +444,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
     // the commits are first-class history (no side door)
     assert(Snapshots.history(spark, t).select("op").collect()
       .map(_.getString(0)).toSeq ==
-      Seq("replaceData", "replaceData", "append"))
+      Seq("merge", "update", "append"))
     // UNOWNED identifiers keep delegating to Spark (vanilla failure
     // modes, never our resolver's)
     spark.range(3).createOrReplaceTempView("graft_rl_plain")

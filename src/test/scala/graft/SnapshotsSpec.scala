@@ -500,7 +500,7 @@ class SnapshotsSpec extends AnyFunSuite {
     }
   }
 
-  test("compactSmallFiles packs only the small-file debt; compact files and tombstones carry") {
+  test("compactSmallFiles packs only the small-file debt; compact files and their deletion vectors carry") {
     val t = freshTable()
     // one "large" slab + 10 accreted small files
     Snapshots.commitAppend(spark,
@@ -1010,7 +1010,7 @@ class SnapshotsSpec extends AnyFunSuite {
     assert(Snapshots.read(spark, t).count() == 11L)
   }
 
-  test("constraint DDL carries pending tombstones: no resurrection through ADD/DROP CONSTRAINT") {
+  test("constraint DDL carries deletion vectors: no resurrection through ADD/DROP CONSTRAINT") {
     val t = freshTable()
     Snapshots.commitAppend(spark,
       (1L to 10L).map(i => (i, i * 1.0)).toDF("id", "x").coalesce(1), t)
