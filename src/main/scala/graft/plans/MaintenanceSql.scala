@@ -36,9 +36,9 @@ import graft.warehouse.Snapshots
   * (`snap.t`) delegate to Spark's own DML: the catalog implements
   * delta-based SupportsRowLevelOperations (sources/SnapshotRowLevel
   * .scala), so stock `UPDATE`/`MERGE INTO`/`DELETE` commit there by
-  * deletion vector, like these verbs do. All DML refuses loudly when no snapshot
-  * table exists at the target — a typo'd path must never no-op as
-  * success or have MERGE quietly create a table there.
+  * deletion vector, like these verbs do. All DML refuses loudly when
+  * no snapshot table exists at the target — a typo'd path must never
+  * no-op as success or have MERGE quietly create a table there.
   *
   * `<target>` is either a quoted filesystem path (`'/warehouse/t'`) or a
   * catalog-qualified identifier (`snap.events`) resolved through the same

@@ -670,7 +670,7 @@ object SnapshotCatalog {
     override def pushedFilters: Array[Predicate] = inner.pushedFilters
     override def pruneColumns(required: StructType): Unit = {
       val (asked, data) = required.fields.partition(f =>
-        MetadataNames(f.name) &&
+        MetadataTypes.contains(f.name) &&
           !declared.exists(_.fieldNames.contains(f.name)))
       if (asked.nonEmpty && declared.isEmpty)
         throw new UnsupportedOperationException(
@@ -1387,11 +1387,12 @@ object SnapshotCatalog {
     */
   private[sources] val FileColumn = "_file"
   private[sources] val PosColumn = "_pos"
-  private val MetadataNames = Set(FileColumn, PosColumn)
+  private val MetadataTypes = Map[String, org.apache.spark.sql.types.DataType](
+    FileColumn -> org.apache.spark.sql.types.StringType,
+    PosColumn -> org.apache.spark.sql.types.LongType)
   private[sources] val metadataColumns: Array[MetadataColumn] =
-    Array(FileColumn -> org.apache.spark.sql.types.StringType,
-        PosColumn -> org.apache.spark.sql.types.LongType).map {
-      case (n, t) => new MetadataColumn {
+    MetadataTypes.toArray.map { case (n, t) =>
+      new MetadataColumn {
         override def name(): String = n
         override def dataType(): org.apache.spark.sql.types.DataType = t
         override def isNullable: Boolean = false
@@ -1411,9 +1412,8 @@ object SnapshotCatalog {
     private def rowIndex = inner.readSchema().fieldIndex(RowIndexField.name)
     override def readSchema(): StructType =
       StructType(inner.readSchema().fields.patch(rowIndex, Nil, 1) ++
-        meta.map(n => metadataColumns.find(_.name == n).map(c =>
-          org.apache.spark.sql.types.StructField(n, c.dataType,
-            nullable = false)).get))
+        meta.map(n => org.apache.spark.sql.types.StructField(n,
+          MetadataTypes(n), nullable = false)))
     override def toBatch: org.apache.spark.sql.connector.read.Batch = {
       val b = inner.toBatch
       val types = inner.readSchema().fields.map(_.dataType)
