@@ -268,4 +268,16 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` with the Spark jobs it starts described as `what` (the
+    * `spark.job.description` the UI, event log and listeners show),
+    * appended to a description already set; the prior one is restored.
+    */
+  def named[A](spark: SparkSession, what: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val prior = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, Option(prior).fold(what)(p => s"$p / $what"))
+    try body finally sc.setLocalProperty(key, prior)
+  }
 }

@@ -447,14 +447,16 @@ object Layout {
         val all = if (kept.isEmpty) fresh else frame(old.get._1,
           kept.values.toSeq).unionByName(fresh, allowMissingColumns = true)
         (StructType(all.schema.map(_.copy(nullable = true))),
-          all.collect().toSeq)
+          graft.GraftSession.named(spark, "graft sidecar build")(
+            all.collect().toSeq))
       }
     val added = rows.size - kept.size
     // nothing added or dropped: an existing sidecar stands, and with no
     // sidecar and no live file there is nothing to write
     if (added == 0 && old.forall(_._2.size == kept.size) &&
         (old.isDefined || missing.isEmpty)) return 0
-    frame(schema, rows).coalesce(1).write.mode("overwrite").parquet(p.toString)
+    graft.GraftSession.named(spark, "graft sidecar build")(
+      frame(schema, rows).coalesce(1).write.mode("overwrite").parquet(p.toString))
     listSidecar(spark, p).foreach(l => cacheSidecar(p, l._1, schema, rows))
     added
   }

@@ -6,17 +6,16 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions,
   NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write.{DataWriter, DeltaBatchWrite,
+import org.apache.spark.sql.connector.write.{DeltaBatchWrite,
   DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory,
   LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta,
   WriterCommitMessage}
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 import org.roaringbitmap.RoaringBitmap
 
-import graft.warehouse.{DeletionVectors, Snapshots}
+import graft.warehouse.{DeletionVectors, Snapshots, StagedFileSetup,
+  StagedFileWriter, StagedFiles}
 
 /** STOCK Spark row-level SQL on snapshot tables — the catalog's
   * `SupportsRowLevelOperations` seat, delta-based (merge-on-read):
@@ -39,11 +38,12 @@ import graft.warehouse.{DeletionVectors, Snapshots}
   * already dead. An UPDATE arrives as delete + insert
   * (`representUpdateAsDeleteAndInsert`): each task folds the deleted
   * ids into one RoaringBitmap per file and stages the inserted rows
-  * through [[SnapshotStreamDataWriter]], and the driver's commit
-  * ([[Snapshots.commitRowDelta]]) kills the positions by deletion
-  * vector and publishes the staged rows in one claim. Untouched rows
-  * stay where they are: no original file is re-written unless its dead
-  * share passes the deletion-vector re-write bound.
+  * through the engine's one staged-file writer ([[StagedFiles]]), and
+  * the driver's commit ([[Snapshots.commitRowDelta]]) kills the
+  * positions by deletion vector and publishes the staged rows in one
+  * claim. Untouched rows stay where they are: no original file is
+  * re-written unless its dead share passes the deletion-vector re-write
+  * bound.
   */
 private[sources] class SnapshotRowLevelOperation(spark: SparkSession,
     table: String, cmd: RowLevelOperation.Command)
@@ -77,33 +77,14 @@ private[sources] class SnapshotRowLevelOperation(spark: SparkSession,
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder with DeltaWrite with DeltaBatchWrite {
       private val rowSchema = info.schema()
-      private val physSchema = StructType(rowSchema.fields.map(f =>
-        f.copy(name = colmap.getOrElse(f.name, f.name))))
 
       override def build(): DeltaWrite = this
       override def toBatch: DeltaBatchWrite = this
 
       override def createBatchWriterFactory(
-          pinfo: PhysicalWriteInfo): DeltaWriterFactory = {
-        val dd = new Path(table, "data")
-        val hconf = spark.sessionState.newHadoopConf()
-        dd.getFileSystem(hconf).mkdirs(dd)
-        val job = org.apache.hadoop.mapreduce.Job.getInstance(hconf)
-        val factory = new org.apache.spark.sql.execution.datasources
-          .parquet.ParquetFileFormat()
-          .prepareWrite(spark, job, Map.empty, physSchema)
-        // partition dirs route by the declared transforms' columns
-        val routed =
-          if (partition.forall(p => rowSchema.fieldNames.contains(p._1)))
-            partition.map { case (c, k) =>
-              (c, k, rowSchema.fieldNames.indexOf(c))
-            }
-          else Nil
-        new SnapshotDeltaWriterFactory(factory,
-          new SerializableConfiguration(job.getConfiguration),
-          dd.toString, physSchema, routed,
-          spark.sessionState.conf.sessionLocalTimeZone)
-      }
+          pinfo: PhysicalWriteInfo): DeltaWriterFactory =
+        new SnapshotDeltaWriterFactory(
+          StagedFiles.setup(spark, table, rowSchema, colmap, partition))
 
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
         val parts = messages.toSeq.collect { case m: RowDeltaMessage => m }
@@ -131,15 +112,11 @@ private[sources] class SnapshotRowLevelOperation(spark: SparkSession,
 private[sources] case class RowDeltaMessage(staged: Seq[String],
     dead: Seq[(String, Array[Byte])]) extends WriterCommitMessage
 
-private[sources] class SnapshotDeltaWriterFactory(
-    factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: SerializableConfiguration, dataDir: String, schema: StructType,
-    partition: Seq[(String, String, Int)], zone: String)
+private[sources] class SnapshotDeltaWriterFactory(s: StagedFileSetup)
   extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
-    new SnapshotDeltaWriter(new SnapshotStreamDataWriter(factory, conf,
-      dataDir, schema, partition, zone, partitionId, taskId, epochId = 0L))
+    new SnapshotDeltaWriter(s.writer(partitionId, taskId))
 }
 
 /** Executor side of a row-level statement: a deleted row id
@@ -147,7 +124,7 @@ private[sources] class SnapshotDeltaWriterFactory(
   * inserted row is staged by `rows`. Updates never arrive: the
   * operation represents them as delete + insert.
   */
-private[sources] class SnapshotDeltaWriter(rows: DataWriter[InternalRow])
+private[sources] class SnapshotDeltaWriter(rows: StagedFileWriter)
   extends DeltaWriter[InternalRow] {
   private val dead =
     scala.collection.mutable.LinkedHashMap.empty[String, RoaringBitmap]
@@ -168,11 +145,10 @@ private[sources] class SnapshotDeltaWriter(rows: DataWriter[InternalRow])
     "snapshot tables take an UPDATE as delete + insert")
   override def insert(row: InternalRow): Unit = rows.write(row)
 
-  override def commit(): WriterCommitMessage = rows.commit() match {
-    case StagedFileMessage(staged) => RowDeltaMessage(staged,
+  override def commit(): WriterCommitMessage =
+    RowDeltaMessage(rows.commit().entries,
       dead.iterator.map { case (f, b) => f -> DeletionVectors.serialize(b) }
         .toSeq)
-  }
   override def abort(): Unit = rows.abort()
   override def close(): Unit = rows.close()
 }

@@ -213,7 +213,8 @@ private[graft] object DeletionVectors {
     val enc = org.apache.spark.sql.Encoders.tuple(
       org.apache.spark.sql.Encoders.STRING,
       org.apache.spark.sql.Encoders.BINARY)
-    fold(df.select(org.apache.spark.sql.functions.col(FileCol),
+    fold(graft.GraftSession.named(df.sparkSession, "graft positioned probe")(
+      df.select(org.apache.spark.sql.functions.col(FileCol),
         org.apache.spark.sql.functions.col(RowCol))
       .mapPartitions { it =>
         val acc = scala.collection.mutable.HashMap.empty[String, RoaringBitmap]
@@ -222,7 +223,7 @@ private[graft] object DeletionVectors {
             .add(Math.toIntExact(r.getLong(1)))
         }
         acc.iterator.map { case (f, b) => (f, serialize(b)) }
-      }(enc).collect().toSeq)
+      }(enc).collect().toSeq))
   }
 
   /** Per-task position bitmaps (file URI, serialized bitmap) as one

@@ -4,8 +4,7 @@ import scala.util.Try
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, types}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash,
-  XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
 import org.apache.spark.sql.sources._
 
 import graft.operators.Layout
@@ -327,7 +326,8 @@ private[graft] object FileSkipping
     * can rule it out. A point set keeps the dirs its members render to;
     * a range keeps dirs within its rendered bounds (date/month
     * truncation is monotone, so `col >= lo` implies `trunc(col) >=
-    * trunc(lo)` in ISO string order). Bucket dirs carry no order, so
+    * trunc(lo)` in ISO string order; a date/month dir outside years
+    * 0000–9999 is always read). Bucket dirs carry no order, so
     * only point sets whose classes match the declared type prune them;
     * a member that does not render prunes nothing.
     */
@@ -351,17 +351,24 @@ private[graft] object FileSkipping
                 !rendered.forall(_.isDefined)) None
             else Some(rendered.flatten.flatten.toSet)
         }
+        // a date/month value outside ISO string order bounds nothing
+        def bound(v: Option[Any], pick: Seq[String] => String) = v
+          .flatMap(partRenderings(kind, _, dt, tz)).map(pick)
+          .filter(b => kind == "identity" || StagedFiles.isoOrdered(b))
         val bounds =
           if (bucket || !renders) Nil
           else ranges.filter(_._1 == pc).map { case (_, lo, hi) =>
-            (lo.flatMap(partRenderings(kind, _, dt, tz)).map(_.min),
-              hi.flatMap(partRenderings(kind, _, dt, tz)).map(_.max))
+            (bound(lo, _.min), bound(hi, _.max))
           }
         if (live.isEmpty || (sets.isEmpty && bounds.isEmpty)) live
         else live.filter { e =>
           Snapshots.partValueAt(e, level) match {
             case None => true // flat/foreign/pre-transform: always read
             case Some(Snapshots.NullPartition) => true // no order, no value
+            // a date/month dir outside years 0000-9999 neither orders nor,
+            // if staged before the renderings were unified, matches
+            case Some(v) if (kind == "date" || kind == "month") &&
+              !StagedFiles.isoOrdered(v) => true
             case Some(v) => sets.forall(_(v)) && bounds.forall {
               case (lo, hi) => lo.forall(v >= _) && hi.forall(v <= _)
             }
@@ -391,37 +398,28 @@ private[graft] object FileSkipping
     }.toOption
   }
 
-  /** The transform's rendering of a driver-side probe value, in the
-    * same form the staging writer puts in dir names — None when the
-    * value's rendering is not exact (prune nothing, never wrongly).
-    * Timestamps truncate to a date in the session zone `tz`.
+  /** The transform's rendering of a driver-side probe value
+    * ([[StagedFiles.render]], the form the staging writers put in dir
+    * names) — None when the value's rendering is not exact (prune
+    * nothing, never wrongly). Timestamps truncate to a date in the
+    * session zone `tz`.
     */
   private[warehouse] def partProbeValue(kind: String, v: Any,
       tz: String): Option[String] = Try {
     val l = Literal(v)
-    // a date as Spark casts the value (a string parses, a timestamp
-    // truncates in `tz`); an uncastable class renders nothing
-    def date = {
-      require(Cast.canCast(l.dataType, types.DateType))
-      Cast(l, types.DateType, Some(tz)).eval() match {
-        case d: Int => java.time.LocalDate.ofEpochDay(d).toString
-      }
-    }
-    kind match {
+    require(kind match {
       // strings only: a numeric rendering would compare
       // lexicographically ("10" < "9") — prune nothing instead
-      case "identity" => v match { case s: String => s }
-      case "date" => date
-      case "month" => date.take(7)
-      case b =>
-        // EQUALITY-ONLY semantics: the rendering is the probed value's
-        // bucket id — meaningful for = / IN membership, never for
-        // ranges (partitionLeg guards). The writer's `pmod(hash(col),
-        // N)` over the literal: it hashes like the column's values only
-        // when its type is the declared one ([[bucketProbeTypeOk]]).
-        val n = Snapshots.bucketModulus(b).get
-        val h = Murmur3Hash(Seq(l), 42).eval().asInstanceOf[Int]
-        (((h % n) + n) % n).toString
-    }
+      case "identity" => v.isInstanceOf[String]
+      // a date as Spark casts the value (a string parses, a timestamp
+      // truncates in `tz`); an uncastable class renders nothing
+      case "date" | "month" => Cast.canCast(l.dataType, types.DateType)
+      // EQUALITY-ONLY semantics: the rendering is the probed value's
+      // bucket id — meaningful for = / IN membership, never for ranges
+      // (partitionLeg guards). It hashes like the column's values only
+      // when its type is the declared one ([[bucketProbeTypeOk]]).
+      case _ => true
+    })
+    StagedFiles.render(kind, l, Some(tz)).eval().toString
   }.toOption
 }

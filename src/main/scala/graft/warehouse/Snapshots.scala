@@ -268,20 +268,13 @@ object Snapshots {
     }
   }
 
-  /** The partition-transform Column of a logical frame. */
-  private def partitionExpr(c: String, kind: String)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, date_format, hash, lit,
-      pmod}
-    kind match {
-      case "identity" => col(c).cast("string")
-      case "date" => col(c).cast("date").cast("string")
-      case "month" => date_format(col(c).cast("date"), "yyyy-MM")
-      case b => // bucket<N>: murmur3 (seed 42, Spark's own hash()) mod N
-        val n = bucketModulus(b).getOrElse(
-          throw new IllegalArgumentException(s"unknown partition kind $b"))
-        pmod(hash(col(c)), lit(n)).cast("string")
-    }
+  /** The partition-transform Column of a logical frame
+    * ([[StagedFiles.render]]).
+    */
+  private def partitionExpr(c: String, kind: String): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(StagedFiles.render(kind,
+      ColumnBridge.expression(org.apache.spark.sql.functions.col(c)), None))
   }
 
   /** Dir-column name of nesting level `i` (what the staging writer
@@ -428,9 +421,10 @@ object Snapshots {
         spark.sessionState.conf.sessionLocalTimeZone).getOrElse(
         throw new IllegalArgumentException(
           s"cutoff $cutoff does not render under $kind($pc)"))
-      // the null partition can't prove its age — never expire it
-      val (doomed, kept) = m.files.partition(e =>
-        partValueAt(e, level).exists(v => v != NullPartition && v < cut))
+      // the null partition and values outside ISO order can't prove
+      // their age — never expire them
+      val (doomed, kept) = m.files.partition(e => partValueAt(e, level)
+        .exists(v => StagedFiles.isoOrdered(v) && v < cut))
       if (doomed.isEmpty) Skip((m.version, 0))
       else Claim(m.copy(files = kept), Nil, v => (v, doomed.size))
     }
@@ -1124,7 +1118,9 @@ object Snapshots {
   /** Append `batch` as a new snapshot version. Data lands before the
     * commit; the commit itself is an atomic create-if-absent of the next
     * manifest. On a lost race the commit retries against the new head —
-    * data files are never rewritten, only re-referenced.
+    * data files are never rewritten, only re-referenced. A batch of
+    * local rows stages on the driver and the append runs no Spark job;
+    * any other batch is written by a Spark write job ([[stageData]]).
     * Returns the committed version.
     */
   def commitAppend(spark: SparkSession, batch: DataFrame,
@@ -1145,24 +1141,30 @@ object Snapshots {
     * renamed columns stage under their PHYSICAL names, so data files
     * stay uniformly physical whatever commit staged them.
     *
-    * A batch of local rows ([[isLocal]]) is small by construction and
-    * lands as one file per partition dir, not one per default-
-    * parallelism slice, unless its plan asks for a layout (an explicit
-    * `repartition`/`repartitionByRange`). `survivors`, the live rows a
-    * row-level commit re-writes, stage in the same write.
+    * A batch of local rows — its optimized plan a `LocalRelation`, and
+    * no explicit `repartition`/`repartitionByRange` asking for a layout
+    * — is staged on the driver by the engine's one staged-file writer
+    * ([[StagedFiles.writeLocal]]): one file per partition dir, and no
+    * Spark job. Any other batch, and any with `survivors` (the live rows
+    * a row-level commit re-writes, staged in the same write), is written
+    * by a Spark write job.
     */
   private def stageData(spark: SparkSession, batch: DataFrame,
       table: String, colmap: Map[String, String],
       partition: Seq[(String, String)] = Nil,
       survivors: Option[DataFrame] = None): Seq[String] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Repartition,
-      RepartitionByExpression}
-    val shaped = isLocal(batch) && batch.queryExecution.analyzed.find {
-      case _: Repartition | _: RepartitionByExpression => true
-      case _ => false
-    }.isEmpty
-    val rows = survivors.foldLeft(if (shaped) batch.coalesce(1) else batch)(
-      _ unionByName _)
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+      Repartition, RepartitionByExpression}
+    if (survivors.isEmpty && isLocal(batch) &&
+        batch.queryExecution.analyzed.find {
+          case _: Repartition | _: RepartitionByExpression => true
+          case _ => false
+        }.isEmpty) batch.queryExecution.optimizedPlan match {
+      case l: LocalRelation => return StagedFiles.writeLocal(spark, table,
+        l.schema, colmap, partition, l.data)
+      case _ =>
+    }
+    val rows = survivors.foldLeft(batch)(_ unionByName _)
     val dd = dataDir(table)
     val f = fs(spark, dd)
     val staging = new Path(table, s"_staging-${java.util.UUID.randomUUID}")
@@ -1174,7 +1176,7 @@ object Snapshots {
     // always reads them — sound).
     val routed = partition
       .filter(_ => partition.forall(p => rows.columns.contains(p._1)))
-    if (routed.nonEmpty) {
+    val writer = if (routed.nonEmpty) {
       val withDirs = routed.zipWithIndex.foldLeft(rows) {
         case (df, ((c, kind), i)) =>
           df.withColumn(partLevelCol(i), partitionExpr(c, kind))
@@ -1195,8 +1197,9 @@ object Snapshots {
         else withDirs
       toPhysical(shaped, colmap).write
         .partitionBy(routed.indices.map(partLevelCol): _*)
-        .parquet(staging.toString)
-    } else toPhysical(rows, colmap).write.parquet(staging.toString)
+    } else toPhysical(rows, colmap).write
+    graft.GraftSession.named(spark, "graft staged write")(
+      writer.parquet(staging.toString))
     f.mkdirs(dd)
     // collect staged files RECURSIVELY, keeping the partition dirs in
     // the manifest entry (relative paths resolve through two-arg Path
@@ -1552,8 +1555,9 @@ object Snapshots {
     *      rows) plus any re-written survivors, in one write. A single-
     *      column key's set is collected with the probe's filter, so a
     *      MERGE runs three jobs (key collect, probe, staged write), and
-    *      two when the change set is a batch of local rows, whose keys
-    *      collect with no job.
+    *      one, the probe, when the change set is a batch of local rows:
+    *      its keys collect and its rows stage on the driver
+    *      ([[stageData]]) with no job.
     *
     * `changes` must already be conformed to `schema` (plus the optional
     * delete-flag column); `keys` must be unique within `changes`.
@@ -1595,8 +1599,9 @@ object Snapshots {
     // keys, falling back to the broadcast semi-join.
     val fastVals: Option[Seq[Any]] =
       if (keys.size == 1)
-        Some(distinctRows(changes.select(col(keys.head)).na.drop(),
-            FileSkipping.MaxPruneKeys).map(_.get(0)))
+        Some(graft.GraftSession.named(spark, "graft change set")(
+            distinctRows(changes.select(col(keys.head)).na.drop(),
+              FileSkipping.MaxPruneKeys)).map(_.get(0)))
           .filter(_.size <= FileSkipping.MaxPruneKeys)
       else None
     lazy val touched = changes.select(keys.map(col): _*).distinct()
@@ -1719,7 +1724,8 @@ object Snapshots {
     * 100 TB table stages the 10 rows and a vector file, never a data
     * file it did not write. A file whose dead share passes
     * [[DeletionVectors.MaxDeadFraction]] is re-written without its dead
-    * rows instead.
+    * rows instead. A batch of local rows runs one Spark job, the probe;
+    * a computed batch three ([[cowApply]]).
     *
     * UNLIKE append, the result DEPENDS on the head it was computed
     * against, so a lost claim cannot simply retry the manifest: the
@@ -2010,7 +2016,8 @@ object Snapshots {
         // physically, and its vectors go with its entries); carried files
         // keep their vectors
         val packed = readLive(spark, table, m, small).coalesce(nOut)
-        val staged = stageData(spark, packed, table, m.colmap, m.partitions)
+        val staged = graft.GraftSession.named(spark, "graft compaction pack")(
+          stageData(spark, packed, table, m.colmap, m.partitions))
         // PARTIAL pack: carried files may still hold pre-drop values, so
         // the dropped-name ledger carries (unlike the full rewrite above)
         Claim(m.copy(files = m.files.filterNot(small.toSet) ++ staged),

@@ -74,21 +74,34 @@ class CommitJobsSpec extends AnyFunSuite {
     Snapshots.read(spark, t).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
 
-  test("commitAppend runs one job: the staged write") {
+  test("an append of local rows runs no job; a coalesce(1) or repartition(n) batch runs the Spark write and lands as laid out") {
     val t = table()
-    val (_, n) = jobsOf(Snapshots.commitAppend(spark,
+    // the driver stages the rows itself: one file, no Spark job
+    val (v, n) = jobsOf(Snapshots.commitAppend(spark,
       Seq((100L, "a"), (101L, "b")).toDF("id", "v"), t))
-    assert(n == 1, s"append ran $n jobs")
-    assert(rows(t).size == 62)
+    assert(n == 0, s"append of local rows ran $n jobs")
+    assert(Snapshots.filesAt(spark, t, v).size == 7)
+    // an explicit layout is a Spark write, one file per slice
+    val (v1, n1) = jobsOf(Snapshots.commitAppend(spark,
+      Seq((102L, "c"), (103L, "d")).toDF("id", "v").coalesce(1), t))
+    assert(n1 == 1, s"coalesce(1) append ran $n1 jobs")
+    assert(Snapshots.filesAt(spark, t, v1).size == 8)
+    val (v2, n2) = jobsOf(Snapshots.commitAppend(spark,
+      (104L until 112L).map(i => (i, s"r$i")).toDF("id", "v").repartition(3),
+      t))
+    // under AQE the shuffle runs as its own job before the write
+    assert(n2 == 2, s"repartition(3) append ran $n2 jobs; want 2 (shuffle, write)")
+    assert(Snapshots.filesAt(spark, t, v2).size == 11)
+    assert(rows(t).size == 72)
   }
 
-  test("commitMerge on a single-column key runs at most three jobs, two for local rows") {
+  test("commitMerge on a single-column key runs at most three jobs, one for local rows") {
     val t = table()
     // two keys in two existing files update, two are new
     val local = Seq((3L, "u3"), (25L, "u25"), (200L, "n200"), (201L, "n201"))
       .toDF("id", "v")
     val (_, n) = jobsOf(Snapshots.commitMerge(spark, local, t, Seq("id")))
-    assert(n <= 2, s"merge of local rows ran $n jobs; want <= 2 (probe, write)")
+    assert(n <= 1, s"merge of local rows ran $n jobs; want <= 1 (the probe)")
     val r = rows(t)
     assert(r.size == 62 && r(3L) == "u3" && r(25L) == "u25" &&
       r(200L) == "n200" && r(4L) == "v4")
