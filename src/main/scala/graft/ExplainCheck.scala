@@ -716,6 +716,31 @@ object ExplainCheck {
           s"vectored=${vectored.keySet} staged rows=$stagedRows r=$r") }
       println(f"snap_rowlevel_dv         ${if (pass) "PLAN_OK " else "PLAN_BAD"} stock UPDATE kills rows by deletion vector: untouched rows' files carry, only new versions staged")
     }
+    // quoted-path DML is Spark's own row-level plan over the snapshot
+    // catalog's path identifier: a WriteDelta whose scan is the snapshot
+    // scan, never an engine command with a second parse of the statement
+    locally {
+      val t = java.nio.file.Files
+        .createTempDirectory("graft_explain_path").toString + "/t"
+      graft.warehouse.Snapshots.commitAppend(spark,
+        spark.range(0, 100, 1, 2).selectExpr("id", "CAST(id AS DOUBLE) AS v"),
+        t)
+      val df = spark.sql(s"UPDATE '$t' SET v = v + 1 WHERE id < 10")
+      val (logical, physical) = df.queryExecution.analyzed match {
+        case c: org.apache.spark.sql.catalyst.plans.logical.CommandResult =>
+          (c.commandLogicalPlan, c.commandPhysicalPlan)
+        case p => (p, df.queryExecution.executedPlan)
+      }
+      val pass = logical.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.logical.WriteDelta] &&
+        physical.toString.contains("WriteDelta") &&
+        physical.toString.contains(
+          s"BatchScan ${graft.sources.SnapshotCatalog.PathCatalog}.$t@v1") &&
+        graft.warehouse.Snapshots.currentVersion(spark, t) == 2L
+      if (!pass) { bad += 1; println(logical.toString.take(1500))
+        println(physical.toString.take(2500)) }
+      println(f"snap_path_rowlevel       ${if (pass) "PLAN_OK " else "PLAN_BAD"} quoted-path UPDATE plans a WriteDelta over the snapshot scan")
+    }
     // registry-wide lambda lint (the dev gate TextFns/Text scaladoc points
     // at): no registered query's optimized plan may re-tokenize per array
     // element inside a HOF lambda — the O(len²) class that shipped twice.

@@ -8,10 +8,12 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types._
 
+import graft.sources.SnapshotCatalog
 import graft.warehouse.Snapshots
 
 /** Maintenance statements for snapshot tables as REAL SQL — the operator
-  * surface a versioned warehouse schedules from plain `spark.sql(...)`:
+  * surface a versioned warehouse schedules from plain `spark.sql(...)`,
+  * for the verbs stock Spark has no statement for:
   *
   * {{{
   *   OPTIMIZE <target> [TARGET <n> FILES] [ZORDER BY (c1, c2 [, ...])]
@@ -22,23 +24,15 @@ import graft.warehouse.Snapshots
   *   RESTORE [TABLE] <target> [TO] VERSION AS OF <n>
   *   ALTER TABLE <target> ADD CONSTRAINT <name> CHECK (<expr>)
   *   ALTER TABLE <target> DROP CONSTRAINT <name>
-  *   ALTER TABLE <target> ADD COLUMNS (c1 TYPE [, c2 TYPE ...])
-  *   ALTER TABLE <target> ALTER COLUMN <c> TYPE <widerType>
-  *   DELETE FROM '<path>' WHERE <keyCol> IN (<k1>, <k2>, ...)
-  *   DELETE FROM '<path>' [WHERE <arbitrary predicate>]
-  *   MERGE INTO <target> USING <view|(subquery)> ON (k1 [, k2 ...])
-  *     [WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *]
-  *   UPDATE <target> SET c1 = e1 [, c2 = e2 ...] [WHERE <predicate>]
+  *   ALTER TABLE <target> SET PARTITION (<transform> [, ...])
+  *   ALTER TABLE <target> EXPIRE PARTITIONS OLDER THAN '<cutoff>'
+  *   CREATE TABLE <target> SHALLOW CLONE <target> [VERSION AS OF <n>]
+  *   COPY INTO <target> FROM '<dir>' [FILEFORMAT = <fmt>] [FORCE]
+  *   CONVERT TO SNAPSHOT '<dir>'
+  *   CREATE BLOOM INDEX ON <target> (<col>) [FPP <p>]
+  *   DROP BLOOM INDEX ON <target> (<col>)
+  *   CREATE STATS INDEX ON <target> (<c1> [, ...])
   * }}}
-  *
-  * UPDATE, MERGE and DELETE are parsed here only for QUOTED PATHS (a
-  * path has no catalog seat for Spark to resolve). Catalog identifiers
-  * (`snap.t`) delegate to Spark's own DML: the catalog implements
-  * delta-based SupportsRowLevelOperations (sources/SnapshotRowLevel
-  * .scala), so stock `UPDATE`/`MERGE INTO`/`DELETE` commit there by
-  * deletion vector, like these verbs do. All DML refuses loudly when
-  * no snapshot table exists at the target — a typo'd path must never
-  * no-op as success or have MERGE quietly create a table there.
   *
   * `<target>` is either a quoted filesystem path (`'/warehouse/t'`) or a
   * catalog-qualified identifier (`snap.events`) resolved through the same
@@ -46,11 +40,20 @@ import graft.warehouse.Snapshots
   * ([[graft.sources.SnapshotCatalog]]) uses — one registration serves
   * both the read face (SELECT/time travel) and the maintenance face.
   *
+  * `UPDATE`, `DELETE FROM`, `MERGE INTO` and `ALTER TABLE ... ADD/ALTER/
+  * DROP/RENAME COLUMN` are stock Spark on any target: for a quoted path
+  * the parser only rewrites the target token into a path identifier of
+  * the snapshot catalog (`snapshot.`/warehouse/t``, Delta's path
+  * identifiers), so the statement plans as Spark's own row-level
+  * WriteDelta or `alterTable` call, exactly as on `snap.t`. A path with
+  * no committed version fails analysis (the table is not found) before
+  * anything is written — DML never creates a table.
+  *
   * Implementation is the parser-delegation recipe the transactional table
   * formats use for their own OPTIMIZE/VACUUM (SparkSessionExtensions
   * `injectParser`): [[GraftSqlParser]] recognizes exactly these
-  * statements and hands EVERYTHING else verbatim to the session's normal
-  * parser, so no Spark SQL behavior changes. Each statement becomes a
+  * statements and hands EVERYTHING else to the session's normal parser,
+  * so no Spark SQL behavior changes. Each statement becomes a
   * `LeafRunnableCommand` — executed eagerly by Spark's command machinery,
   * results returned as a normal DataFrame.
   *
@@ -109,22 +112,6 @@ object MaintenanceSql {
   private val DropCheckRe =
     ("""(?is)^\s*ALTER\s+TABLE\s+""" + T +
       """\s+DROP\s+CONSTRAINT\s+(\w+)\s*;?\s*$""").r
-  // metadata-only schema evolution: ADD COLUMNS appends forced-nullable
-  // fields to the declared schema; ALTER COLUMN TYPE performs the safe
-  // widenings (int->long, float->double, decimal precision growth) —
-  // zero data moves for either, at any table size
-  private val AddColumnsRe = // one paren nesting: DECIMAL(10,2) etc.
-    ("""(?is)^\s*ALTER\s+TABLE\s+""" + T +
-      """\s+ADD\s+COLUMNS?\s*\(\s*((?:[^()]|\([^()]*\))+?)\s*\)\s*;?\s*$""").r
-  private val AlterColTypeRe =
-    ("""(?is)^\s*ALTER\s+TABLE\s+""" + T +
-      """\s+ALTER\s+COLUMN\s+(`?\w+`?)\s+TYPE\s+([\w(),.\s]+?)\s*;?\s*$""").r
-  private val DropColumnRe =
-    ("""(?is)^\s*ALTER\s+TABLE\s+""" + T +
-      """\s+DROP\s+COLUMN\s+(`?\w+`?)\s*;?\s*$""").r
-  private val RenameColumnRe =
-    ("""(?is)^\s*ALTER\s+TABLE\s+""" + T +
-      """\s+RENAME\s+COLUMN\s+(`?\w+`?)\s+TO\s+(`?\w+`?)\s*;?\s*$""").r
   // declared partition transforms: directory-level file skipping and
   // O(entries) whole-partition retention expiry
   private val SetPartitionRe =
@@ -157,54 +144,6 @@ object MaintenanceSql {
   private val ExpirePartitionsRe =
     ("""(?is)^\s*ALTER\s+TABLE\s+""" + T +
       """\s+EXPIRE\s+PARTITIONS\s+OLDER\s+THAN\s+'([^']+)'\s*;?\s*$""").r
-  // column DEFAULTs: SET DEFAULT governs future writes (metadata-only);
-  // DROP DEFAULT reverts to NULL-fill; ADD COLUMNS parses per-column
-  // DEFAULT clauses itself (Spark's colTypeList has no DEFAULT seat)
-  private val SetDefaultRe =
-    ("""(?is)^\s*ALTER\s+TABLE\s+""" + T +
-      """\s+ALTER\s+COLUMN\s+(`?\w+`?)\s+SET\s+DEFAULT\s+(.+?)\s*;?\s*$""").r
-  private val DropDefaultRe =
-    ("""(?is)^\s*ALTER\s+TABLE\s+""" + T +
-      """\s+ALTER\s+COLUMN\s+(`?\w+`?)\s+DROP\s+DEFAULT\s*;?\s*$""").r
-  // QUOTED PATHS ONLY: Spark has its own DSv2 `DELETE FROM <ident>` —
-  // an identifier target must keep delegating to it, so only the form
-  // vanilla SQL cannot express (a filesystem path) is intercepted
-  private val DeleteKeysRe =
-    ("""(?is)^\s*DELETE\s+FROM\s+('[^']+')""" +
-      """\s+WHERE\s+(\w+)\s+IN\s*\(\s*(\d+(?:\s*,\s*\d+)*)\s*\)\s*;?\s*$""").r
-  // general predicate form (matched AFTER the IN-int-list fast path,
-  // which stats-prunes its probe by key list): the retention / erasure
-  // shape — `WHERE o_orderdate < DATE '1994-01-01'`, string keys, any
-  // boolean expression the session parser accepts
-  private val DeleteWhereRe =
-    ("""(?is)^\s*DELETE\s+FROM\s+('[^']+')\s+WHERE\s+(.+?)\s*;?\s*$""").r
-  // bare DELETE (no WHERE): every row — SQL-legal, served as the
-  // predicate form with TRUE (the schema survives; TRUNCATE-like but
-  // versioned). Quoted paths only, like the other DELETE forms.
-  private val DeleteAllRe =
-    ("""(?is)^\s*DELETE\s+FROM\s+('[^']+')\s*;?\s*$""").r
-  // MERGE, key-based upsert form (the protocol's merge). The regex
-  // accepts any target, but only QUOTED PATHS are served here: catalog
-  // identifiers delegate to Spark, whose row-level DML the catalog
-  // serves (SupportsRowLevelOperations — see parse below). The source
-  // is a view/table name or a parenthesized subquery; the only
-  // supported clause pair is the canonical upsert (UPDATE SET * /
-  // INSERT *), which may be omitted entirely.
-  // UPDATE is served for quoted paths likewise; its SET list splits
-  // paren-aware at run time so expressions may call functions
-  // WHERE is optional (SQL UPDATE without one touches every row): the
-  // split happens at the FIRST ` WHERE ` after SET — a WHERE inside a
-  // SET-side string literal mis-splits into fragments that fail
-  // expression parsing LOUDLY (never a silent wrong update)
-  private val UpdateRe =
-    ("""(?is)^\s*UPDATE\s+""" + T +
-      """\s+SET\s+(.+?)(?:\s+WHERE\s+(.+?))?\s*;?\s*$""").r
-  private val MergeRe =
-    ("""(?is)^\s*MERGE\s+INTO\s+""" + T +
-      """\s+USING\s+(\((?:[^()]|\([^()]*\))*\)|[\w.`]+)""" +
-      """\s+ON\s*\(\s*([^)]+?)\s*\)""" +
-      """(\s+WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*""" +
-      """\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*)?\s*;?\s*$""").r
   // zero-copy table fork: both names quoted paths or owned identifiers
   private val CloneRe =
     ("""(?is)^\s*CREATE\s+TABLE\s+""" + T + """\s+SHALLOW\s+CLONE\s+""" + T +
@@ -234,17 +173,17 @@ object MaintenanceSql {
     * Ownership rule: quoted paths are always ours (vanilla SQL cannot
     * express them); an IDENTIFIER target is ours only when its leading
     * part names a catalog with `spark.sql.catalog.<name>.root`
-    * CONFIGURED — `OPTIMIZE delta_cat.t` or foreign constraint DDL on
-    * another format's catalog must keep delegating to whoever owns it,
-    * not fail against our root lookup (the delegate-verbatim contract).
+    * CONFIGURED in `spark` — `OPTIMIZE delta_cat.t` or foreign
+    * constraint DDL on another format's catalog must keep delegating to
+    * whoever owns it, not fail against our root lookup (the
+    * delegate-verbatim contract).
     */
-  def parse(sqlText: String): Option[LogicalPlan] = {
+  def parse(spark: SparkSession, sqlText: String): Option[LogicalPlan] = {
     def ours(target: String): Boolean =
       target.startsWith("'") ||
-        org.apache.spark.sql.SparkSession.getActiveSession.exists(
-          _.conf.getOption("spark.sql.catalog." +
-            target.split('.').head.stripPrefix("`").stripSuffix("`") +
-            ".root").isDefined)
+        spark.conf.getOption("spark.sql.catalog." +
+          target.split('.').head.stripPrefix("`").stripSuffix("`") +
+          ".root").isDefined
     sqlText match {
       case OptimizeSmallRe(target, underMb) if ours(target) =>
         Some(OptimizeSnapshotSmall(SnapTarget(target),
@@ -271,8 +210,6 @@ object MaintenanceSql {
         Some(AddSnapshotConstraint(SnapTarget(target), name, check.trim))
       case DropCheckRe(target, name) if ours(target) =>
         Some(DropSnapshotConstraint(SnapTarget(target), name))
-      case AddColumnsRe(target, cols) if ours(target) =>
-        Some(AddSnapshotColumns(SnapTarget(target), cols.trim))
       case SetPartitionRe(target, body) if ours(target) &&
           splitPartItems(body).forall(i =>
             PartBucketRe.findFirstIn(i).isDefined ||
@@ -290,44 +227,6 @@ object MaintenanceSql {
         Some(SetSnapshotPartition(SnapTarget(target), transforms))
       case ExpirePartitionsRe(target, cutoff) if ours(target) =>
         Some(ExpireSnapshotPartitions(SnapTarget(target), cutoff))
-      case SetDefaultRe(target, col, dflt) if ours(target) =>
-        Some(SetSnapshotColumnDefault(SnapTarget(target),
-          col.stripPrefix("`").stripSuffix("`"), dflt.trim))
-      case DropDefaultRe(target, col) if ours(target) =>
-        Some(DropSnapshotColumnDefault(SnapTarget(target),
-          col.stripPrefix("`").stripSuffix("`")))
-      case AlterColTypeRe(target, col, typ) if ours(target) =>
-        Some(WidenSnapshotColumn(SnapTarget(target),
-          col.stripPrefix("`").stripSuffix("`"), typ.trim))
-      case DropColumnRe(target, col) if ours(target) =>
-        Some(DropSnapshotColumn(SnapTarget(target),
-          col.stripPrefix("`").stripSuffix("`")))
-      case RenameColumnRe(target, from, to) if ours(target) =>
-        Some(RenameSnapshotColumn(SnapTarget(target),
-          from.stripPrefix("`").stripSuffix("`"),
-          to.stripPrefix("`").stripSuffix("`")))
-      case DeleteKeysRe(target, keyCol, keys) => // quoted paths only
-        Some(DeleteSnapshotKeys(SnapTarget(target), keyCol,
-          keys.split(',').map(_.trim.toLong).toSeq))
-      case DeleteWhereRe(target, predicate) => // quoted paths only
-        Some(DeleteSnapshotWhere(SnapTarget(target), predicate.trim))
-      case DeleteAllRe(target) => // quoted paths only: every row
-        Some(DeleteSnapshotWhere(SnapTarget(target), "true"))
-      // UPDATE/MERGE on QUOTED PATHS stay the engine's verbs (a path
-      // has no catalog seat for Spark to resolve); catalog IDENTIFIERS
-      // delegate to Spark's own row-level machinery — the catalog
-      // implements delta-based SupportsRowLevelOperations (sources/
-      // SnapshotRowLevel.scala), so stock `UPDATE snap.t` / `MERGE
-      // INTO snap.t` (including rich clause forms this verb never
-      // parsed) plan as a sidecar-pruned WriteDelta that commits by
-      // deletion vector.
-      case UpdateRe(target, sets, predicate) if target.startsWith("'") =>
-        Some(UpdateSnapshotWhere(SnapTarget(target), sets.trim,
-          Option(predicate).map(_.trim).orNull)) // null = no WHERE
-      case MergeRe(target, source, keys, _) if target.startsWith("'") =>
-        Some(MergeSnapshot(SnapTarget(target), source.trim,
-          keys.split(',').map(_.trim.stripPrefix("`").stripSuffix("`"))
-            .filter(_.nonEmpty).toSeq))
       // both names must be ours: a foreign-catalog identifier on either
       // side delegates verbatim (Spark may grow its own CLONE someday)
       case CloneRe(target, source, v) if ours(target) && ours(source) =>
@@ -354,19 +253,39 @@ object MaintenanceSql {
     }
   }
 
-  /** DML must hit an EXISTING snapshot table: a typo'd or non-snapshot
-    * path would otherwise no-op as success (DELETE/UPDATE return (0, 0)
-    * on an empty head) or, worse, MERGE would quietly CREATE a brand-new
-    * table at the wrong path (commitMerge on head 0 commits v1). Reads
-    * and OPTIMIZE/VACUUM share the same protection through their own
-    * head lookups; the DML statements refuse loudly here instead.
+  // the verbs stock Spark serves on the snapshot catalog: UPDATE,
+  // DELETE, MERGE (with or without schema evolution) and the column
+  // forms of ALTER TABLE — only their quoted-path target is rewritten
+  private val PathTargetRe =
+    ("""(?is)^(\s*(?:UPDATE|DELETE\s+FROM""" +
+      """|MERGE\s+(?:WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO""" +
+      """|ALTER\s+TABLE(?=\s+'[^']+'\s+(?:ADD|ALTER|DROP|RENAME)""" +
+      """\s+COLUMNS?\b))\s+)'([^']+)'(.*)$""").r
+
+  /** `sqlText` with a quoted-path DML or column-DDL target rewritten to
+    * a path identifier of the snapshot catalog — `UPDATE '/w/t' SET ...`
+    * becomes ``UPDATE snapshot.`/w/t` SET ...``. Any other text comes
+    * back as is.
+    */
+  def pathTarget(spark: SparkSession, sqlText: String): String =
+    sqlText match {
+      case PathTargetRe(verb, path, rest) =>
+        verb + SnapshotCatalog.pathIdentifier(spark, path) + rest
+      case _ => sqlText
+    }
+
+  /** A maintenance statement must hit an EXISTING snapshot table: a
+    * typo'd or non-snapshot path would otherwise no-op as success or,
+    * worse, quietly create a table at the wrong path. Reads and
+    * OPTIMIZE/VACUUM share the same protection through their own head
+    * lookups; the other statements refuse loudly here instead.
     */
   private[plans] def requireTable(spark: SparkSession, path: String,
       stmt: String): Unit =
     require(Snapshots.currentVersion(spark, path) > 0,
       s"$stmt: no snapshot table at $path (no committed version) — " +
         "check the path/identifier; creating a table is CREATE TABLE / " +
-        "CTAS / commitAppend's job, never a DML side effect")
+        "CTAS / commitAppend's job, never a maintenance side effect")
 }
 
 /** `OPTIMIZE t [TARGET n FILES] [ZORDER BY (...)]` →
@@ -569,53 +488,6 @@ final case class DropSnapshotConstraint(target: MaintenanceSql.SnapTarget,
       name), name))
 }
 
-/** `ALTER TABLE t ADD COLUMNS (c1 TYPE [, c2 TYPE ...])` →
-  * Snapshots.commitAddColumns: metadata-only schema evolution — the new
-  * manifest re-references the same files under an extended declared
-  * schema, landed rows serve the new (forced-nullable) columns as NULL,
-  * zero data moves at any table size. The column list parses with
-  * Spark's own DDL parser, so any SQL type spelling works.
-  */
-final case class AddSnapshotColumns(target: MaintenanceSql.SnapTarget,
-    colsDdl: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("added_columns", StringType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val path = target.resolve(spark)
-    MaintenanceSql.requireTable(spark, path, "ALTER TABLE ADD COLUMNS")
-    // per-column `DEFAULT <expr>` clauses (Spark's schema-DDL parser has
-    // no DEFAULT seat): split top-level commas, peel the DEFAULT tail of
-    // each entry, and hand the expressions to the commit — which folds
-    // them into EXISTS_DEFAULT so already-landed rows serve the default
-    // straight from the parquet reader, zero data movement
-    val entries = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var depth = 0; val sb = new StringBuilder
-      colsDdl.foreach {
-        case '(' => depth += 1; sb += '('
-        case ')' => depth -= 1; sb += ')'
-        case ',' if depth == 0 => out += sb.toString; sb.clear()
-        case c => sb += c
-      }
-      out += sb.toString
-      out.toSeq.map(_.trim).filter(_.nonEmpty)
-    }
-    val DefaultTail = """(?is)^(.*?)\s+DEFAULT\s+(.+)$""".r
-    val (ddls, defaults) = entries.map {
-      case DefaultTail(colDdl, dflt) =>
-        val name = colDdl.trim.split("\\s+").head
-          .stripPrefix("`").stripSuffix("`")
-        (colDdl.trim, Some(name -> dflt.trim))
-      case plain => (plain, None)
-    }.unzip
-    val fields = StructType.fromDDL(ddls.mkString(", ")).fields.toSeq
-    val v = graft.warehouse.Snapshots.commitAddColumns(spark, path, fields,
-      defaults = defaults.flatten.toMap)
-    Seq(Row(v, fields.map(_.name).mkString(",")))
-  }
-}
-
 /** `ALTER TABLE t SET PARTITION (date(col))` — or a COMPOSITE list,
   * `SET PARTITION (month(d), source)` (bare column = identity), or
   * hash clustering, `SET PARTITION (bucket(8, k))` →
@@ -657,256 +529,6 @@ final case class ExpireSnapshotPartitions(
     MaintenanceSql.requireTable(spark, path, "EXPIRE PARTITIONS")
     val (v, n) = graft.warehouse.Snapshots.commitExpirePartitions(spark,
       path, cutoff)
-    Seq(Row(v, n))
-  }
-}
-
-/** `ALTER TABLE t ALTER COLUMN c SET DEFAULT <expr>` →
-  * Snapshots.commitSetColumnDefault: metadata-only — future writes
-  * missing the column materialize the expression; landed rows are not
-  * rewritten (only `ADD COLUMNS ... DEFAULT` back-fills, via the folded
-  * EXISTS_DEFAULT the parquet reader serves).
-  */
-final case class SetSnapshotColumnDefault(
-    target: MaintenanceSql.SnapTarget, column: String,
-    defaultSql: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("column", StringType, nullable = false)(),
-    AttributeReference("default", StringType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val path = target.resolve(spark)
-    MaintenanceSql.requireTable(spark, path, "ALTER COLUMN SET DEFAULT")
-    Seq(Row(graft.warehouse.Snapshots.commitSetColumnDefault(spark, path,
-      column, defaultSql), column, defaultSql))
-  }
-}
-
-/** `ALTER TABLE t ALTER COLUMN c DROP DEFAULT` →
-  * Snapshots.commitDropColumnDefault (metadata-only; future writes
-  * missing the column land NULL again).
-  */
-final case class DropSnapshotColumnDefault(
-    target: MaintenanceSql.SnapTarget,
-    column: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("column", StringType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val path = target.resolve(spark)
-    MaintenanceSql.requireTable(spark, path, "ALTER COLUMN DROP DEFAULT")
-    Seq(Row(graft.warehouse.Snapshots.commitDropColumnDefault(spark, path,
-      column), column))
-  }
-}
-
-/** `ALTER TABLE t ALTER COLUMN c TYPE <type>` →
-  * Snapshots.commitWidenColumn: the explicit type-migration statement —
-  * metadata-only widening (int→long, float→double, decimal precision
-  * growth); old narrower files upcast at read, appends in the wide type
-  * are legal from the next commit, and a non-widening change refuses
-  * loudly (a 100 TB migration must never silently rewrite).
-  */
-final case class WidenSnapshotColumn(target: MaintenanceSql.SnapTarget,
-    column: String, typeDdl: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("column", StringType, nullable = false)(),
-    AttributeReference("new_type", StringType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val path = target.resolve(spark)
-    MaintenanceSql.requireTable(spark, path, "ALTER TABLE ALTER COLUMN")
-    val to = spark.sessionState.sqlParser.parseDataType(typeDdl)
-    val v = graft.warehouse.Snapshots.commitWidenColumn(spark, path,
-      column, to)
-    Seq(Row(v, column, to.simpleString))
-  }
-}
-
-/** `ALTER TABLE t DROP COLUMN c` → Snapshots.commitDropColumn:
-  * metadata-only — the new manifest re-references the same files under
-  * the declared schema minus the column (zero data moves at any size);
-  * the NAME enters the carried `#dropped:` ledger and stays refused for
-  * re-adding until a full-rewrite OPTIMIZE physically purges the old
-  * values (name-based parquet resolution would otherwise resurrect
-  * them). Refuses the last column, the partition column, and any
-  * CHECK-mentioned column.
-  */
-final case class DropSnapshotColumn(target: MaintenanceSql.SnapTarget,
-    column: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("dropped_column", StringType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val path = target.resolve(spark)
-    MaintenanceSql.requireTable(spark, path, "ALTER TABLE DROP COLUMN")
-    Seq(Row(graft.warehouse.Snapshots.commitDropColumn(spark, path, column),
-      column))
-  }
-}
-
-/** `ALTER TABLE t RENAME COLUMN a TO b` → Snapshots.commitRenameColumn:
-  * metadata-only column mapping — landed files keep the PHYSICAL name,
-  * the new logical name serves every read/write from this version on
-  * (a carried `#colmap:` header), time travel serves each version's own
-  * names, zero data moves at any size. The OLD name enters the
-  * `#dropped:` ledger (its physical data is live under the new name) and
-  * stays refused until a full-rewrite OPTIMIZE normalizes physical
-  * names; renaming onto a dropped name, or renaming the partition
-  * column or a CHECK-mentioned column, refuses loudly.
-  */
-final case class RenameSnapshotColumn(target: MaintenanceSql.SnapTarget,
-    from: String, to: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("from_column", StringType, nullable = false)(),
-    AttributeReference("to_column", StringType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val path = target.resolve(spark)
-    MaintenanceSql.requireTable(spark, path, "ALTER TABLE RENAME COLUMN")
-    Seq(Row(graft.warehouse.Snapshots.commitRenameColumn(spark, path,
-      from, to), from, to))
-  }
-}
-
-/** `DELETE FROM '<path>' WHERE k IN (...)` → Snapshots.commitDelete:
-  * row-level by deletion vectors — the doomed rows die by vector and
-  * every file carries by name (a file past the dead-fraction bound is
-  * re-written instead). Quoted-path targets only (identifier targets keep
-  * delegating to Spark's own DSv2 DELETE). Returns (version, rows
-  * deleted); a miss is a no-op at the unchanged head.
-  */
-final case class DeleteSnapshotKeys(target: MaintenanceSql.SnapTarget,
-    keyCol: String, keys: Seq[Long]) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("deleted_rows", LongType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val path = target.resolve(spark)
-    MaintenanceSql.requireTable(spark, path, "DELETE FROM")
-    val (v, n) = Snapshots.commitDelete(spark, path, keys, keyCol)
-    Seq(Row(v, n))
-  }
-}
-
-/** `DELETE FROM '<path>' WHERE <predicate>` → Snapshots.commitDeleteWhere:
-  * predicate-driven row-level delete by deletion vectors — the
-  * retention/erasure shape that cannot enumerate keys on the driver at
-  * 100 TB. The predicate is
-  * parsed by the SESSION's expression parser at run time (full Spark SQL
-  * expression surface: dates, LIKE, string keys, AND/OR), pushes into
-  * the probe's parquet scan, and rows where it evaluates NULL are kept
-  * (SQL DELETE semantics). Quoted-path targets only.
-  */
-final case class DeleteSnapshotWhere(target: MaintenanceSql.SnapTarget,
-    predicate: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("deleted_rows", LongType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val path = target.resolve(spark)
-    MaintenanceSql.requireTable(spark, path, "DELETE FROM")
-    val (v, n) = Snapshots.commitDeleteWhere(spark, path,
-      org.apache.spark.sql.functions.expr(predicate))
-    Seq(Row(v, n))
-  }
-}
-
-/** `UPDATE <target> SET c = e [, ...] WHERE <pred>` →
-  * Snapshots.commitUpdateWhere: predicate-driven row-level update — the
-  * matching rows die by deletion vector and only their new versions
-  * stage (they take the SET expressions under the column's declared
-  * type, NULL predicates leave rows untouched, CHECK constraints bind
-  * the updated rows). SET assignments and the predicate resolve through
-  * the session's expression parser at run time; the SET list splits
-  * paren- and quote-aware so expressions may call functions. Targets are
-  * quoted paths only: an UPDATE on a catalog identifier is Spark's own,
-  * served as row-level copy-on-write (sources/SnapshotRowLevel.scala).
-  */
-final case class UpdateSnapshotWhere(target: MaintenanceSql.SnapTarget,
-    sets: String, predicate: String) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("updated_rows", LongType, nullable = false)())
-
-  /** Split `a = f(x, y), b = 'x,y'` into assignments at top-level
-    * commas — parens AND single-quoted string literals are opaque (a
-    * comma inside either never splits). Inside a literal a backslash
-    * escapes the NEXT character (Spark's default string-literal
-    * escaping), so `'a\'b,c'` stays one literal — the escaped quote
-    * never toggles the string state; `''` doubling keeps working because
-    * its two toggles cancel with no comma possible between them.
-    */
-  private def splitAssignments(s: String): Seq[(String, String)] = {
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var inStr = false
-    var esc = false
-    val cur = new StringBuilder
-    s.foreach {
-      case ch if esc => esc = false; cur += ch
-      case '\\' if inStr => esc = true; cur += '\\'
-      case '\'' => inStr = !inStr; cur += '\''
-      case '(' if !inStr => depth += 1; cur += '('
-      case ')' if !inStr => depth -= 1; cur += ')'
-      case ',' if depth == 0 && !inStr => parts += cur.toString; cur.clear()
-      case ch => cur += ch
-    }
-    parts += cur.toString
-    parts.toSeq.map { a =>
-      val cut = a.indexOf('=')
-      require(cut > 0, s"malformed SET assignment: $a")
-      (a.take(cut).trim.stripPrefix("`").stripSuffix("`"),
-        a.drop(cut + 1).trim)
-    }
-  }
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.expr
-    val path = target.resolve(spark)
-    MaintenanceSql.requireTable(spark, path, "UPDATE")
-    val assignments = splitAssignments(sets)
-      .map { case (c, e) => c -> expr(e) }
-    // no WHERE clause → every row (SQL semantics)
-    val pred = Option(predicate).map(_.trim).filter(_.nonEmpty)
-      .map(expr).getOrElse(org.apache.spark.sql.functions.lit(true))
-    val (v, n) = Snapshots.commitUpdateWhere(spark, path, pred, assignments)
-    Seq(Row(v, n))
-  }
-}
-
-/** `MERGE INTO <target> USING <src> ON (keys) [WHEN MATCHED THEN UPDATE
-  * SET * WHEN NOT MATCHED THEN INSERT *]` → Snapshots.commitMerge: the
-  * protocol's key-based upsert as real SQL — matched keys update
-  * wholesale, unmatched insert, and the matched target rows die by
-  * deletion vector while every file carries by name. The source is a
-  * view/table name or a parenthesized subquery resolved by the session
-  * at run time; the clause pair is the canonical upsert and may be
-  * omitted (same semantics). Targets are quoted paths only — a MERGE on a catalog
-  * identifier is Spark's own, served by deletion vectors too
-  * (sources/SnapshotRowLevel.scala) — and a target with no committed
-  * version refuses (MERGE never creates).
-  */
-final case class MergeSnapshot(target: MaintenanceSql.SnapTarget,
-    source: String, keys: Seq[String]) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("version", LongType, nullable = false)(),
-    AttributeReference("merged_rows", LongType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    require(keys.nonEmpty, "MERGE needs at least one ON key column")
-    val path = target.resolve(spark)
-    MaintenanceSql.requireTable(spark, path, "MERGE INTO")
-    // ONE materialization serves both the merged_rows metric and the
-    // merge itself: counting the raw plan would execute the source
-    // subquery once and commitMerge a second time — wasted IO, and a
-    // non-deterministic source (a sampled subquery) would merge rows its
-    // reported count never saw
-    val src =
-      (if (source.startsWith("(")) spark.sql(
-        source.stripPrefix("(").stripSuffix(")"))
-      else spark.table(source)).localCheckpoint(true)
-    val n = src.count()
-    val v = Snapshots.commitMerge(spark, src, path, keys)
     Seq(Row(v, n))
   }
 }
@@ -1029,13 +651,16 @@ final case class CreateStatsIndex(target: MaintenanceSql.SnapTarget,
   }
 }
 
-/** The session parser with the maintenance statements spliced in;
-  * every other string delegates verbatim (zero behavior drift for normal
-  * SQL — spec-pinned in SnapshotSqlSpec).
+/** The session parser with the maintenance statements spliced in and
+  * quoted-path DML targets rewritten to path identifiers; every other
+  * string delegates verbatim (zero behavior drift for normal SQL —
+  * spec-pinned in SnapshotSqlSpec).
   */
-class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
+class GraftSqlParser(spark: SparkSession, delegate: ParserInterface)
+  extends ParserInterface {
   override def parsePlan(sqlText: String): LogicalPlan =
-    MaintenanceSql.parse(sqlText).getOrElse(delegate.parsePlan(sqlText))
+    MaintenanceSql.parse(spark, sqlText).getOrElse(
+      delegate.parsePlan(MaintenanceSql.pathTarget(spark, sqlText)))
   override def parseQuery(sqlText: String): LogicalPlan =
     delegate.parseQuery(sqlText)
   override def parseExpression(sqlText: String): Expression =

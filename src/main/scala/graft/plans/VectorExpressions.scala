@@ -170,7 +170,7 @@ object VectorFunctions {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectParser((_, delegate) => new GraftSqlParser(delegate))
+    e.injectParser((spark, delegate) => new GraftSqlParser(spark, delegate))
     SnapshotTvf.functions.foreach(e.injectTableFunction)
     e.injectOptimizerRule(_ => RewriteVectorHof)
     e.injectOptimizerRule(s => RewriteToMaterialized(s))

@@ -522,14 +522,15 @@ object SnapshotQ {
            |FROM $cat.t VERSION AS OF 2""".stripMargin)
     })
 
-  /** Predicate + string-key DELETE (Snapshots.commitDeleteWhere and the
-    * widened commitDelete key type): a retention job deletes by DATE
-    * PREDICATE through the SQL face (`DELETE FROM '<path>' WHERE
-    * o_orderdate < DATE ...` — no driver-side key enumeration, the shape
-    * a 100 TB table needs), then an erasure job deletes by STRING key
-    * list. Both are file-granular copy-on-write commits; the emitted
-    * rows are the final head, fully DuckDB-oracled from orders alone —
-    * any over- or under-delete in either path lands in the diff.
+  /** Predicate + string-key DELETE (stock SQL DELETE on a quoted path
+    * and the widened commitDelete key type): a retention job deletes by
+    * DATE PREDICATE through SQL (`DELETE FROM '<path>' WHERE o_orderdate
+    * < DATE ...` — Spark's own row-level plan over the path identifier,
+    * no driver-side key enumeration, the shape a 100 TB table needs),
+    * then an erasure job deletes by STRING key list. Both kill their
+    * rows by deletion vector; the emitted rows are the final head, fully
+    * DuckDB-oracled from orders alone — any over- or under-delete in
+    * either path lands in the diff.
     */
   val snapPredicateDelete = QueryDef(
     "snap_predicate_delete",
@@ -548,10 +549,11 @@ object SnapshotQ {
         .createTempDirectory("graft_snap_pdel").toString + "/t"
       Snapshots.commitAppend(spark, orders, table)
       // retention delete by date predicate, through pure SQL
-      val r = spark.sql(
-        s"DELETE FROM '$table' WHERE o_orderdate < DATE '1997-01-01'").head
-      require(r.getLong(0) == 2L && r.getLong(1) > 0,
-        s"expected a non-empty predicate delete at v2, got $r")
+      // a delete that matches nothing commits nothing, so v2 is proof
+      spark.sql(
+        s"DELETE FROM '$table' WHERE o_orderdate < DATE '1997-01-01'")
+      require(Snapshots.currentVersion(spark, table) == 2L,
+        "expected a non-empty predicate delete at v2")
       // erasure delete by string keys (the widened Seq[Any] key surface)
       val (v, _) = Snapshots.commitDelete(spark, table, Seq("F"),
         "o_orderstatus")
@@ -561,11 +563,11 @@ object SnapshotQ {
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
     })
 
-  /** SQL UPDATE (plans/MaintenanceSql.UpdateSnapshotWhere): a
-    * predicate-driven copy-on-write update through pure SQL — the
-    * bumped slice (o_orderkey % 10 = 7) takes the SET expression, every
-    * other row re-lands or carries untouched, and the head is
-    * DuckDB-oracled from orders alone.
+  /** SQL UPDATE on a quoted path: Spark's own row-level plan over the
+    * snapshot catalog's path identifier — the bumped slice (o_orderkey %
+    * 10 = 7) dies by deletion vector and only its new versions stage,
+    * every other row carries untouched, and the head is DuckDB-oracled
+    * from orders alone.
     */
   val snapSqlUpdate = QueryDef(
     "snap_sql_update",
@@ -582,23 +584,24 @@ object SnapshotQ {
       val table = java.nio.file.Files
         .createTempDirectory("graft_snap_sqlu").toString + "/t"
       Snapshots.commitAppend(spark, orders, table)
-      val r = spark.sql(s"UPDATE '$table' " +
+      spark.sql(s"UPDATE '$table' " +
         "SET o_totalprice = o_totalprice * 1.1 " +
-        "WHERE o_orderkey % 10 = 7").head
-      require(r.getLong(0) == 2L && r.getLong(1) > 0,
-        s"expected a non-empty update at v2, got $r")
+        "WHERE o_orderkey % 10 = 7")
+      require(Snapshots.currentVersion(spark, table) == 2L,
+        "expected a non-empty update at v2")
       Snapshots.read(spark, table)
         .withColumn("o_totalprice",
           round(col("o_totalprice").cast("double"), 4))
         .select("o_orderkey", "o_custkey", "o_totalprice")
     })
 
-  /** SQL MERGE (plans/MaintenanceSql.MergeSnapshot): the protocol's
-    * keyed upsert driven entirely from a MERGE INTO statement — matched
-    * keys (o_orderkey % 10 = 7) take the source's bumped price, unmatched
-    * source keys (shifted copies of the % 10 = 3 slice) insert, untouched
-    * rows carry through the file-granular copy-on-write engine. The
-    * emitted rows are the final head, DuckDB-oracled from orders alone.
+  /** SQL MERGE on a quoted path: the keyed upsert driven entirely from
+    * a stock MERGE INTO statement over the snapshot catalog's path
+    * identifier — matched keys (o_orderkey % 10 = 7) take the source's
+    * bumped price, unmatched source keys (shifted copies of the % 10 = 3
+    * slice) insert, matched rows die by deletion vector and untouched
+    * rows carry. The emitted rows are the final head, DuckDB-oracled
+    * from orders alone.
     */
   val snapSqlMerge = QueryDef(
     "snap_sql_merge",
@@ -627,10 +630,11 @@ object SnapshotQ {
           .withColumn("o_orderkey", col("o_orderkey") + 100000000L)
           .withColumn("o_totalprice", col("o_totalprice").cast("double")))
         .createOrReplaceTempView(view)
-      val r = spark.sql(s"MERGE INTO '$table' USING $view ON (o_orderkey) " +
+      spark.sql(s"MERGE INTO '$table' t USING $view s " +
+        "ON t.o_orderkey = s.o_orderkey " +
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
-        .head
-      require(r.getLong(0) == 2L, s"merge must commit v2, got $r")
+      require(Snapshots.currentVersion(spark, table) == 2L,
+        "merge must commit v2")
       Snapshots.read(spark, table)
         .withColumn("o_totalprice",
           round(col("o_totalprice").cast("double"), 4))
@@ -702,10 +706,10 @@ object SnapshotQ {
                    |FROM $cat.t""".stripMargin)
     })
 
-  /** SQL SCHEMA EVOLUTION as metadata-only commits (plans/MaintenanceSql
-    * AddSnapshotColumns / WidenSnapshotColumn over
-    * Snapshots.commitAddColumns / commitWidenColumn): a populated table
-    * gains two columns via `ALTER TABLE ... ADD COLUMNS` (v2 — zero data
+  /** SQL SCHEMA EVOLUTION as metadata-only commits (stock `ALTER TABLE`
+    * through SnapshotCatalog.alterTable onto Snapshots.commitAddColumns /
+    * commitWidenColumn): a populated table gains two columns via one
+    * `ALTER TABLE ... ADD COLUMNS` (v2 — one commit, zero data
     * moves, landed rows read the new columns as NULL), widens its INT
     * key to BIGINT via `ALTER TABLE ... ALTER COLUMN ... TYPE` (v3 —
     * old int32 files upcast at read), then an `INSERT INTO` lands rows
@@ -1132,8 +1136,9 @@ object SnapshotQ {
         .createTempDirectory("graft_snap_dropcol").toString + "/t"
       Snapshots.commitAppend(spark,
         orders.filter(col("o_orderkey") % 2 === 0), table)
-      val r = spark.sql(s"ALTER TABLE '$table' DROP COLUMN o_totalprice").head
-      require(r.getLong(0) == 2L, s"expected a v2 metadata drop, got $r")
+      spark.sql(s"ALTER TABLE '$table' DROP COLUMN o_totalprice")
+      require(Snapshots.currentVersion(spark, table) == 2L,
+        "expected a v2 metadata drop")
       // the narrowed schema keeps ingesting; the dropped values are
       // physically purged by the full rewrite, unlocking the name
       Snapshots.commitAppend(spark,
@@ -1372,19 +1377,19 @@ object SnapshotQ {
       val t = root + "/t"
       Snapshots.commitAppend(spark,
         orders.filter(col("o_orderkey") % 2 === 0), t) // v1
-      val r = spark.sql(
-        s"ALTER TABLE '$t' RENAME COLUMN o_totalprice TO price").head
-      require(r.getLong(0) == 2L, s"expected a v2 metadata rename, got $r")
+      spark.sql(s"ALTER TABLE '$t' RENAME COLUMN o_totalprice TO price")
+      require(Snapshots.currentVersion(spark, t) == 2L,
+        "expected a v2 metadata rename")
       require(Snapshots.filesAt(spark, t, 1L) ==
         Snapshots.filesAt(spark, t, 2L),
         "RENAME COLUMN must be metadata-only: zero data files moved")
       Snapshots.commitAppend(spark, // v3: ingest under the NEW name
         orders.filter(col("o_orderkey") % 2 === 1)
           .withColumnRenamed("o_totalprice", "price"), t)
-      val ru = spark.sql(s"UPDATE '$t' SET price = price * 1.1 " +
-        "WHERE o_orderkey % 10 = 7").head // v4: DML speaks the new name
-      require(ru.getLong(0) == 4L && ru.getLong(1) > 0,
-        s"expected a non-empty v4 update via the renamed column, got $ru")
+      spark.sql(s"UPDATE '$t' SET price = price * 1.1 " +
+        "WHERE o_orderkey % 10 = 7") // v4: DML speaks the new name
+      require(Snapshots.currentVersion(spark, t) == 4L,
+        "expected a non-empty v4 update via the renamed column")
       val cat = s"gren_$u"
       spark.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.SnapshotCatalog].getName)
@@ -1434,9 +1439,10 @@ object SnapshotQ {
       val t = root + "/t"
       Snapshots.commitAppend(spark,
         orders.filter(col("o_orderkey") % 2 === 0), t) // v1: no defaults
-      val r = spark.sql(s"ALTER TABLE '$t' ADD COLUMNS " +
-        "(status STRING DEFAULT 'open', bonus DOUBLE DEFAULT 0.5)").head
-      require(r.getLong(0) == 2L, s"expected a v2 metadata add, got $r")
+      spark.sql(s"ALTER TABLE '$t' ADD COLUMNS " +
+        "(status STRING DEFAULT 'open', bonus DOUBLE DEFAULT 0.5)")
+      require(Snapshots.currentVersion(spark, t) == 2L,
+        "expected one v2 metadata add")
       require(Snapshots.filesAt(spark, t, 1L) ==
         Snapshots.filesAt(spark, t, 2L),
         "ADD COLUMNS ... DEFAULT must move zero data files")

@@ -35,7 +35,12 @@ import graft.warehouse.Snapshots
   *   spark.sql("SELECT * FROM snap.events TIMESTAMP AS OF '...'")
   * }}}
   *
-  * Each table identifier maps to `root/<name>`; a load resolves the
+  * Each table identifier maps to `root/<name>`, and a path identifier
+  * (`` snap.`/warehouse/events` ``, a single part naming an absolute path
+  * or URI, Delta's `delta.`/path`` form) maps to that path, so a
+  * catalog with no `root` serves paths only — the parser's quoted-path
+  * statements resolve through one such catalog, `snapshot`
+  * ([[SnapshotCatalog.PathCatalog]]). A load resolves the
   * manifest ONCE into an explicit file list + the version's DECLARED
   * schema and hands both to Spark's own parquet reader, so every scan is
   * snapshot-isolated (concurrent commits never change a resolved plan's
@@ -54,14 +59,15 @@ import graft.warehouse.Snapshots
   * Scala API (a bare parquet write under `data/` would corrupt every
   * invariant; that path stays impossible).
   * `CREATE TABLE` commits v1 (schema-only when empty — CTAS works),
-  * `DROP TABLE` removes the table tree, and `UPDATE`, `MERGE INTO` and
-  * `DELETE FROM` resolve through Spark's own delta-based row-level
-  * rewrite into one deletion-vector commit (sources/SnapshotRowLevel
-  * .scala). Time-travel reads
+  * `DROP TABLE` removes the table tree, and `UPDATE`, `MERGE INTO`
+  * (with `WITH SCHEMA EVOLUTION` too) and `DELETE FROM` resolve through
+  * Spark's own delta-based row-level rewrite into one deletion-vector
+  * commit (sources/SnapshotRowLevel.scala). Time-travel reads
   * (`VERSION/TIMESTAMP AS OF`) remain read-only — history is immutable.
   * `ALTER TABLE` column changes (rename, add, drop, widen, defaults)
   * commit through [[alterTable]]; every other ALTER, and RENAME TABLE,
-  * refuses (constraints have their own SQL face).
+  * refuses (constraints, partitions and indexes have their own SQL face,
+  * plans/MaintenanceSql.scala).
   */
 class SnapshotCatalog extends TableCatalog with FunctionCatalog {
 
@@ -72,17 +78,26 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
       options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
     root = options.get("root")
-    require(root != null,
-      s"spark.sql.catalog.$name.root must point at the snapshot warehouse dir")
   }
 
   override def name(): String = catalogName
 
   private def spark = SparkSession.active
+  /** A path identifier (a single part naming an absolute path or URI,
+    * `` snap.`/warehouse/t` ``) is that path; any other name maps under
+    * `root`, which only such names need.
+    */
   private def tablePath(ident: Identifier): String =
-    (ident.namespace() :+ ident.name()).foldLeft(new Path(root)) {
-      (p, part) => new Path(p, part)
-    }.toString
+    if (ident.namespace().isEmpty &&
+        SnapshotCatalog.AbsolutePath.matches(ident.name())) ident.name()
+    else {
+      require(root != null, s"${ident.name()} is not an absolute path " +
+        s"or URI, and catalog $catalogName has no root to resolve it " +
+        s"under (spark.sql.catalog.$catalogName.root)")
+      (ident.namespace() :+ ident.name()).foldLeft(new Path(root)) {
+        (p, part) => new Path(p, part)
+      }.toString
+    }
 
   private def readOnly(op: String): Nothing =
     throw new UnsupportedOperationException(
@@ -191,8 +206,10 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
         override def schema(): StructType = tableSchema
         override def capabilities(): util.Set[TableCapability] =
           Set(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
-            TableCapability.TRUNCATE,
-            TableCapability.STREAMING_WRITE).asJava
+            TableCapability.TRUNCATE, TableCapability.STREAMING_WRITE,
+            // `MERGE WITH SCHEMA EVOLUTION`: Spark adds the source's new
+            // columns through alterTable before the merge
+            TableCapability.AUTOMATIC_SCHEMA_EVOLUTION).asJava
         override def newScanBuilder(
             options: CaseInsensitiveStringMap): ScanBuilder =
           pruningScanBuilder(options)
@@ -287,6 +304,7 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
   override def tableExists(ident: Identifier): Boolean = exists(ident)
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
+    if (root == null) return Array.empty
     val base = namespace.foldLeft(new Path(root))((p, n) => new Path(p, n))
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) Array.empty
@@ -351,16 +369,17 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
   override def capabilities(): java.util.Set[TableCatalogCapability] =
     Set(TableCatalogCapability.SUPPORT_COLUMN_DEFAULT_VALUE).asJava
 
-  /** Stock Spark `ALTER TABLE snap.t ...` mapped onto the commit
-    * protocol's metadata-only evolution commits — a Spark user types the
-    * STANDARD syntax and gets the same atomic manifest claims as the
-    * engine's own SQL verbs (plans/MaintenanceSql.scala): RENAME COLUMN
-    * → column mapping, ADD COLUMN(S) (+DEFAULT) → declared-schema
+  /** Stock Spark `ALTER TABLE snap.t ...` (or a quoted path) mapped onto
+    * the commit protocol's metadata-only evolution commits — a Spark user
+    * types the STANDARD syntax and gets atomic manifest claims: RENAME
+    * COLUMN → column mapping, ADD COLUMN(S) (+DEFAULT) → declared-schema
     * append, DROP COLUMN → dropped-name ledger, ALTER COLUMN TYPE →
     * safe-upcast widening, SET/DROP DEFAULT → field-metadata commit.
-    * Each change is one commit (multi-change statements apply in
-    * order); nested fields and everything else (positions, comments,
-    * properties) refuse loudly rather than silently no-op.
+    * Consecutive ADD COLUMN changes (one `ADD COLUMNS (a, b)`, or the new
+    * columns of a schema-evolving MERGE) land as ONE commit; every other
+    * change is one commit, in statement order. Nested fields and
+    * everything else (positions, comments, properties) refuse loudly
+    * rather than silently no-op.
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val t = tablePath(ident)
@@ -371,41 +390,47 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
         s"ALTER TABLE on nested field ${fieldNames.mkString(".")}")
       fieldNames(0)
     }
-    changes.foreach {
-      case r: TableChange.RenameColumn =>
-        Snapshots.commitRenameColumn(spark, t, one(r.fieldNames()),
-          r.newName())
-      case a: TableChange.AddColumn =>
-        val name = one(a.fieldNames())
-        val field = org.apache.spark.sql.types
-          .StructField(name, a.dataType(), nullable = true)
-        val defaults = Option(a.defaultValue())
-          .map(dv => name -> dv.getSql).toMap
-        Snapshots.commitAddColumns(spark, t, Seq(field),
-          defaults = defaults)
-        ()
-      case d: TableChange.DeleteColumn =>
-        Snapshots.commitDropColumn(spark, t, one(d.fieldNames()))
-      case u: TableChange.UpdateColumnType =>
-        Snapshots.commitWidenColumn(spark, t, one(u.fieldNames()),
-          u.newDataType())
-      case u: TableChange.UpdateColumnDefaultValue =>
-        val col = one(u.fieldNames())
-        Option(u.newCurrentDefault()).map(_.getSql)
-          .orElse(Option(u.newDefaultValue()).filter(_.nonEmpty)) match {
-          case Some(sql) =>
-            Snapshots.commitSetColumnDefault(spark, t, col, sql)
-          case None => Snapshots.commitDropColumnDefault(spark, t, col)
-        }
-        ()
-      case n: TableChange.UpdateColumnNullability =>
-        // declared schemas are nullable throughout (parquet name-based
-        // resolution serves missing columns as NULLs) — relaxing to
-        // nullable is a no-op; tightening is a constraint's job
-        if (!n.nullable()) readOnly(
-          "ALTER COLUMN SET NOT NULL (declare a CHECK constraint)")
-      case other => readOnly(s"ALTER TABLE change $other")
+    val adds = scala.collection.mutable.ArrayBuffer.empty[TableChange.AddColumn]
+    def commitAdds(): Unit = if (adds.nonEmpty) {
+      val named = adds.toSeq.map(a => one(a.fieldNames()) -> a)
+      Snapshots.commitAddColumns(spark, t,
+        named.map { case (n, a) => org.apache.spark.sql.types
+          .StructField(n, a.dataType(), nullable = true) },
+        defaults = named.flatMap { case (n, a) =>
+          Option(a.defaultValue()).map(n -> _.getSql) }.toMap)
+      adds.clear()
     }
+    changes.foreach {
+      case a: TableChange.AddColumn => adds += a
+      case change =>
+        commitAdds()
+        change match {
+          case r: TableChange.RenameColumn =>
+            Snapshots.commitRenameColumn(spark, t, one(r.fieldNames()),
+              r.newName())
+          case d: TableChange.DeleteColumn =>
+            Snapshots.commitDropColumn(spark, t, one(d.fieldNames()))
+          case u: TableChange.UpdateColumnType =>
+            Snapshots.commitWidenColumn(spark, t, one(u.fieldNames()),
+              u.newDataType())
+          case u: TableChange.UpdateColumnDefaultValue =>
+            val col = one(u.fieldNames())
+            Option(u.newCurrentDefault()).map(_.getSql)
+              .orElse(Option(u.newDefaultValue()).filter(_.nonEmpty)) match {
+              case Some(sql) =>
+                Snapshots.commitSetColumnDefault(spark, t, col, sql)
+              case None => Snapshots.commitDropColumnDefault(spark, t, col)
+            }
+          case n: TableChange.UpdateColumnNullability =>
+            // declared schemas are nullable throughout (parquet name-based
+            // resolution serves missing columns as NULLs) — relaxing to
+            // nullable is a no-op; tightening is a constraint's job
+            if (!n.nullable()) readOnly(
+              "ALTER COLUMN SET NOT NULL (declare a CHECK constraint)")
+          case other => readOnly(s"ALTER TABLE change $other")
+        }
+    }
+    commitAdds()
     loadTable(ident)
   }
   /** `DROP TABLE snap.t` — removes the whole table tree (manifests,
@@ -446,6 +471,27 @@ class SnapshotCatalog extends TableCatalog with FunctionCatalog {
 }
 
 object SnapshotCatalog {
+
+  /** The catalog name quoted-path statements resolve under: the SQL
+    * parser rewrites `UPDATE '/w/t' ...` to ``UPDATE snapshot.`/w/t` ...``
+    * and registers this catalog (with no root) on first use.
+    */
+  val PathCatalog = "snapshot"
+
+  /** `path` as a path identifier of the [[PathCatalog]] catalog
+    * (``snapshot.`/w/t` ``), for SQL text or `Dataset.mergeInto`;
+    * registers that catalog in `spark` on first use.
+    */
+  private[graft] def pathIdentifier(spark: SparkSession,
+      path: String): String = {
+    val key = s"spark.sql.catalog.$PathCatalog"
+    if (spark.conf.getOption(key).isEmpty)
+      spark.conf.set(key, classOf[SnapshotCatalog].getName)
+    s"$PathCatalog.`${path.replace("`", "``")}`"
+  }
+
+  /** An absolute path or URI: what a path identifier names. */
+  private[sources] val AbsolutePath = """(?:[A-Za-z][A-Za-z0-9+.\-]*:)?/.*""".r
 
   /** The `bucket(N, col)` V2 function: murmur3 (seed 42 — Spark's own
     * `hash()`) of the column's internal value, pmod N — EXACTLY the

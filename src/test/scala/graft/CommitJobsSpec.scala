@@ -188,6 +188,31 @@ class CommitJobsSpec extends AnyFunSuite {
     t
   }
 
+  test("quoted-path UPDATE and DELETE run one job, a MERGE of local rows at most three") {
+    val t = table()
+    val files = Snapshots.filesAt(spark, t, 6L)
+    // each statement is Spark's WriteDelta over the path identifier: the
+    // scan finds the rows and the same job stages their new versions; the
+    // commit kills them by vector on the driver. The MERGE's join adds
+    // the source side's jobs.
+    val (_, nu) = jobsOf(spark.sql(s"UPDATE '$t' SET v = 'hot' WHERE id = 25"))
+    val (_, nd) = jobsOf(spark.sql(s"DELETE FROM '$t' WHERE id = 25"))
+    Seq((3L, "u3"), (200L, "n200")).toDF("id", "v")
+      .createOrReplaceTempView("gjobs_merge_src")
+    val (_, nm) = jobsOf(spark.sql(s"MERGE INTO '$t' t USING gjobs_merge_src s " +
+      "ON t.id = s.id WHEN MATCHED THEN UPDATE SET * " +
+      "WHEN NOT MATCHED THEN INSERT *"))
+    assert(nu <= 1, s"quoted-path UPDATE ran $nu jobs; want <= 1")
+    assert(nd <= 1, s"quoted-path DELETE ran $nd jobs; want <= 1")
+    assert(nm <= 3, s"quoted-path MERGE of local rows ran $nm jobs; want <= 3")
+    assert(Snapshots.currentVersion(spark, t) == 9L)
+    assert(Snapshots.filesAt(spark, t, 9L).take(6) == files)
+    assert(Snapshots.deadRowsAt(spark, t, 9L).keySet == Set(files(0), files(2)))
+    val r = rows(t)
+    assert(r.size == 60 && !r.contains(25L) && r(3L) == "u3" &&
+      r(200L) == "n200" && r(24L) == "v24")
+  }
+
   test("a three-conjunct pruneFilesByFilters on a stats-manifested table runs at most two jobs") {
     import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual,
       StringStartsWith}

@@ -47,9 +47,9 @@ class SnapshotCatalogSpec extends AnyFunSuite {
 
     // INSERT routes through the commit protocol (full write-face spec
     // below); what still refuses is anything that would BYPASS it
-    // (RENAME COLUMN is now a real statement via the ours() parser gate
-    // — see the column-mapping test below; property DDL has no protocol
-    // seat and must keep refusing)
+    // (RENAME COLUMN commits through alterTable — see the
+    // column-mapping test below; property DDL has no protocol seat and
+    // must keep refusing)
     intercept[Exception] {
       spark.sql("ALTER TABLE gsnap.orders_t SET TBLPROPERTIES ('k'='v')") }
     intercept[Exception] { spark.sql("SELECT * FROM gsnap.no_such").collect() }
@@ -346,9 +346,8 @@ class SnapshotCatalogSpec extends AnyFunSuite {
     val t = root + "/t"
     Snapshots.commitAppend(spark, spark.range(0, 1000).toDF("id")
       .withColumn("v", col("id").cast("string")), t)
-    val r = spark.sql(s"ALTER TABLE '$t' RENAME COLUMN v TO label").head
-    assert(r.getLong(0) == 2L && r.getString(1) == "v" &&
-      r.getString(2) == "label")
+    spark.sql(s"ALTER TABLE '$t' RENAME COLUMN v TO label")
+    assert(Snapshots.currentVersion(spark, t) == 2L)
     // the catalog serves the LOGICAL name with the original values — a
     // naive declared-schema scan would read the renamed column all-NULL
     assert(spark.sql("SELECT label FROM gren.t WHERE id = 7")
@@ -361,9 +360,9 @@ class SnapshotCatalogSpec extends AnyFunSuite {
       .head.getLong(0) == 42L)
     assert(spark.sql("SELECT v FROM gren.t VERSION AS OF 1 WHERE id = 7")
       .head.getString(0) == "7")
-    // the identifier spelling goes through the same ours() parser gate
-    val r2 = spark.sql("ALTER TABLE gren.t RENAME COLUMN label TO tag").head
-    assert(r2.getLong(0) == 3L)
+    // the identifier spelling commits through the same alterTable
+    spark.sql("ALTER TABLE gren.t RENAME COLUMN label TO tag")
+    assert(Snapshots.currentVersion(spark, t) == 3L)
     // SQL INSERT ingests under the new name; reads stay non-NULL
     spark.sql("INSERT INTO gren.t SELECT 5000 AS id, 'x' AS tag")
     assert(spark.sql("SELECT tag FROM gren.t WHERE id = 5000")
